@@ -5,7 +5,10 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.StructType
 
 /** Incremental materialized partial aggregates (SURVEY.md §4: the one
   * optimization Catalyst does not subsume; reference: fingerprinted
@@ -20,6 +23,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rest; consolidation is the partial→final merge-sum the reference runs
   * in pandas (:1051-1064) and Spark runs as a native re-aggregation.
   *
+  * One build is one write job, whatever the number of stale keys: the
+  * caller computes every stale key in a single frame tagged with
+  * `KeyColumn`, and the store writes it once, partitioned by key, into
+  * `_stage/`. Each staged key directory is then promoted (renamed) to
+  * its `part_<key>` partial, and only then is the manifest saved — stage
+  * → promote → manifest. A crash at any point leaves the manifest
+  * naming the old fingerprints, so the next build treats the same keys
+  * as stale, clears `_stage/` and rebuilds them; `_stage/` is never read
+  * as a partial. All partials are read back with one explicit-schema
+  * Parquet scan (no per-partial schema-inference job).
+  *
   * Scale notes: partials are Parquet (splittable, schema-carrying); the
   * manifest is a single small JSON; reuse means NOT scanning unchanged
   * input partitions at all — at 100 TB that is the difference between a
@@ -27,8 +41,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class IncrementalStore(spark: SparkSession, cacheDir: String,
                        buildSignature: String) {
+  import IncrementalStore.KeyColumn
 
   private val manifestPath = Paths.get(cacheDir, "_cache_manifest.json")
+  private val stagePath = new HPath(cacheDir, "_stage")
+  private val fs = stagePath.getFileSystem(spark.sessionState.newHadoopConf())
 
   case class Stats(reused: Seq[String], rebuilt: Seq[String])
 
@@ -51,29 +68,59 @@ class IncrementalStore(spark: SparkSession, cacheDir: String,
   private def partitionPath(key: String) = s"$cacheDir/part_$key"
 
   /** Build-or-reuse: for each (key, inputFingerprint), reuse the cached
-    * partial when `fingerprint + buildSignature` matches the manifest,
-    * else run `compute(key)` and persist it. Returns the union of all
-    * partials plus reuse stats. */
-  def build(partitions: Seq[(String, String)],
-            compute: String => DataFrame): (DataFrame, Stats) = {
+    * partial when `fingerprint + buildSignature` matches the manifest.
+    * The stale keys go to ONE `compute(staleKeys)` call, which returns a
+    * frame of `partialSchema` columns plus a string `KeyColumn`; a stale
+    * key without rows gets an empty partial. Returns the union of all
+    * partials (without the key column) plus reuse stats. */
+  def build(partitions: Seq[(String, String)], partialSchema: StructType,
+            compute: Seq[String] => DataFrame): (DataFrame, Stats) = {
     require(partitions.nonEmpty, "incremental build needs at least one partition")
+    require(partitions.map(_._1).distinct.length == partitions.length,
+      "incremental build keys must be distinct")
     val manifest = loadManifest()
+    // a stage left by a crashed build holds nothing the manifest vouches for
+    fs.delete(stagePath, true)
     val (reused, rebuilt) = partitions.partition { case (key, fp) =>
       manifest.get(key).contains(fp + "|" + buildSignature) &&
         new File(partitionPath(key)).exists()
     }
-    rebuilt.foreach { case (key, _) =>
-      compute(key).write.mode("overwrite").parquet(partitionPath(key))
+    if (rebuilt.nonEmpty) {
+      val fresh = compute(rebuilt.map(_._1))
+      val got = fresh.schema.filterNot(_.name == KeyColumn).map(f => f.name -> f.dataType)
+      require(fresh.columns.contains(KeyColumn) &&
+        got == partialSchema.map(f => f.name -> f.dataType),
+        s"compute must return $KeyColumn plus ${partialSchema.simpleString}, " +
+          s"got ${fresh.schema.simpleString}")
+      fresh.write.mode("overwrite").partitionBy(KeyColumn).parquet(stagePath.toString)
+      rebuilt.foreach { case (key, _) =>
+        val staged = new HPath(stagePath,
+          s"$KeyColumn=${ExternalCatalogUtils.escapePathName(key)}")
+        val target = new HPath(partitionPath(key))
+        fs.delete(target, true)
+        if (fs.exists(staged)) require(fs.rename(staged, target), s"could not promote $staged")
+        else require(fs.mkdirs(target), s"could not create $target") // no rows: an empty partial
+      }
+      fs.delete(stagePath, true)
     }
     saveManifest(manifest ++ partitions.map { case (k, fp) =>
       k -> (fp + "|" + buildSignature)
     })
-    val frames = partitions.map { case (key, _) =>
-      spark.read.parquet(partitionPath(key))
-    }
-    val union = frames.reduce(_ unionByName _)
+    val union = spark.read.schema(partialSchema).parquet(
+      partitions.map { case (key, _) => IncrementalStore.literalGlob(partitionPath(key)) }: _*)
     (union, Stats(reused.map(_._1), rebuilt.map(_._1)))
   }
+}
+
+object IncrementalStore {
+  /** The string column naming each computed row's partition key. */
+  val KeyColumn = "partition_key"
+
+  /** `path` as a Hadoop glob that matches only itself. Spark globs every
+    * read path and a key may hold glob characters (`{}[]*?`), so each is
+    * backslash-escaped. */
+  def literalGlob(path: String): String =
+    path.flatMap(c => if ("{}[]*?\\".indexOf(c) >= 0) s"\\$c" else c.toString)
 }
 
 /** Input fingerprints (reference: zip name, member names, sizes, CRCs —

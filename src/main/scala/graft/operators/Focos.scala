@@ -61,31 +61,40 @@ object Focos {
   def fromZips(spark: SparkSession, glob: String): DataFrame =
     normalizedSubset(ZipCsv.readZips(spark, glob, Roles, RequiredRoles))
 
+  /** Full pipeline from a list of focos ZIP archive paths (one scan). */
+  def fromZips(spark: SparkSession, paths: Seq[String]): DataFrame =
+    normalizedSubset(ZipCsv.readZips(spark, paths, Roles, RequiredRoles))
+
   /** The 8 per-set aggregates as one GROUPING SETS pass over the
     * normalized subset, with the reference's per-set null-key dropping
     * (dropna per set, bdqueimadas_incremental.py:403-471): a row whose
     * state is null contributes to the sets that do not group by state,
-    * and is absent from those that do. */
-  def groupingSetCounts(subset: DataFrame): DataFrame = {
+    * and is absent from those that do. Columns in `by` (e.g. an archive
+    * key) prefix the inner GROUP BY, every grouping set and the ordering, so one pass
+    * yields the 8 aggregates of each `by` group side by side; with no
+    * `by` columns the query is the plain 8-set pass. */
+  def groupingSetCounts(subset: DataFrame, by: Seq[String] = Nil): DataFrame = {
     val spark = subset.sparkSession
     val v = "focos_" + java.util.UUID.randomUUID.toString.replace("-", "")
     subset.createOrReplaceTempView(v)
+    val pre = by.map(c => s"`$c`, ").mkString
+    val inner = (1 to by.length + 4).mkString(", ")
     // finest-granularity partials feed the ×8 Expand (see
     // Aggregates.groupingSetCounts for the scale rationale)
     val out = spark.sql(s"""
-      SELECT period_month, year, state, biome, SUM(cnt) AS value,
+      SELECT ${pre}period_month, year, state, biome, SUM(cnt) AS value,
              CAST(GROUPING(period_month) AS INT) AS g_period,
              CAST(GROUPING(state) AS INT) AS g_state,
              CAST(GROUPING(biome) AS INT) AS g_biome
-      FROM (SELECT period_month, year, state, biome, COUNT(*) AS cnt
-            FROM $v GROUP BY 1, 2, 3, 4)
-      GROUP BY GROUPING SETS (
+      FROM (SELECT ${pre}period_month, year, state, biome, COUNT(*) AS cnt
+            FROM $v GROUP BY $inner)
+      GROUP BY ${pre}GROUPING SETS (
         (period_month, year), (period_month, year, biome), (year),
         (year, biome), (year, state), (year, state, biome),
         (period_month, year, state), (period_month, year, state, biome))
       HAVING (GROUPING(state) = 1 OR state IS NOT NULL)
          AND (GROUPING(biome) = 1 OR biome IS NOT NULL)
-      ORDER BY g_period, g_state, g_biome, year,
+      ORDER BY ${pre}g_period, g_state, g_biome, year,
                coalesce(period_month, ''), coalesce(state, ''), coalesce(biome, '')
     """)
     spark.catalog.dropTempView(v)

@@ -9,7 +9,8 @@ import graft.profile.{JArr, JNum, JNull, JObj, JStr, JVal}
   * current-year monthly series vs previous year vs the 5-closed-year
   * monthly average, emitted as a JSON spec. The ONLY collect happens
   * here, over ≤3 twelve-point series — everything upstream is
-  * distributed aggregation.
+  * distributed aggregation. Over a local month series (as
+  * `FocosReport.build` returns) the collect runs no Spark job.
   *
   * Calendar gating follows the reference: only closed months of the
   * current year are plotted (`monthly_chart.py:100-113`), and the

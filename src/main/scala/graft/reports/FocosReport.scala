@@ -1,8 +1,10 @@
 package graft.reports
 
 import java.io.File
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.cache.{Fingerprints, IncrementalStore}
 import graft.operators.Focos
 
@@ -16,6 +18,13 @@ import graft.operators.Focos
   * central directory), so an unchanged year is NEVER rescanned — only
   * the mutable current-year archive recomputes on a typical daily build
   * (reference cache loop bdqueimadas_incremental.py:62-120).
+  *
+  * A build runs ONE scan → normalize → grouping-sets → write job over
+  * every stale archive together, the archive name as an extra grouping
+  * key, so a cold build of N archives costs the jobs of one (the store
+  * stages that write, promotes each archive's partial, then saves the
+  * manifest). The month series is collected once, in `build`; `analysis`
+  * and `ChartSpec.fromMonthly` read that local copy and run no job.
   */
 object FocosReport {
 
@@ -25,6 +34,15 @@ object FocosReport {
   def buildSignature: String = Fingerprints.sha256Hex(
     "v1|" + Focos.Roles.map { case (r, cs) => r + "=" + cs.mkString(",") }.mkString(";"))
 
+  /** Columns of one archive's partial: `Focos.groupingSetCounts`. */
+  val PartialSchema: StructType = StructType(Seq(
+    StructField("period_month", StringType), StructField("year", IntegerType),
+    StructField("state", StringType), StructField("biome", StringType),
+    StructField("value", LongType), StructField("g_period", IntegerType),
+    StructField("g_state", IntegerType), StructField("g_biome", IntegerType)))
+
+  /** `consolidated` is lazy; `monthly` (m "yyyy-MM", cnt), sorted by
+    * month, is a local frame collected once by `build`. */
   case class Result(consolidated: DataFrame, monthly: DataFrame,
                     reusedYears: Seq[String], rebuiltYears: Seq[String])
 
@@ -42,10 +60,13 @@ object FocosReport {
 
     val store = new IncrementalStore(spark, cacheDir, buildSignature)
     val byName = zips.map(f => f.getName -> f.getAbsolutePath).toMap
-    val (partials, stats) = store.build(partitions, { key =>
-      // one archive → normalized subset → the 8-way grouping-set counts
-      Focos.groupingSetCounts(Focos.fromZips(spark, byName(key)))
-        .drop("source_file")
+    val (partials, stats) = store.build(partitions, PartialSchema, { keys =>
+      // the stale archives → one normalized subset keyed by archive file
+      // name → the 8-way grouping-set counts of every archive at once
+      val subset = Focos.fromZips(spark, keys.map(byName))
+        .withColumn(IncrementalStore.KeyColumn,
+          regexp_extract(col("source_file"), "[^/]*$", 0))
+      Focos.groupingSetCounts(subset, by = Seq(IncrementalStore.KeyColumn))
     })
 
     // A4 partial→final merge-sum: identical keys across years re-sum
@@ -54,20 +75,21 @@ object FocosReport {
                "g_period", "g_state", "g_biome")
       .agg(sum("value").as("value"))
 
-    // the (period) series feeding the month-window metric layer
-    val monthly = consolidated
+    // the (period) series feeding the month-window metric layer: month
+    // granular (≤ a few hundred rows), collected here once
+    val series = consolidated
       .where(col("g_period") === 0 && col("g_state") === 1 && col("g_biome") === 1)
       .select(col("period_month").as("m"), col("value").as("cnt"))
-      .orderBy("m")
+    val monthly = spark.createDataFrame(
+      series.collect().sortBy(_.getString(0)).toSeq.asJava, series.schema)
 
     Result(consolidated, monthly, stats.reused, stats.rebuilt)
   }
 
   /** Steps 6–7 of the reference lifecycle: metric scalars from the
     * consolidated month series → deterministic per-locale analysis
-    * (the no-LLM fallback, bdqueimadas_overview.py:1078-1180). The
-    * collect here is terminal and month-granular (≤ a few hundred rows
-    * regardless of corpus size — same sanctioned pattern as ChartSpec);
+    * (the no-LLM fallback, bdqueimadas_overview.py:1078-1180). It reads
+    * the local month series `build` collected, so it runs no Spark job;
     * every row-level aggregation already happened distributed. */
   def analysis(r: Result): Map[String, Map[String, String]] = {
     val series = r.monthly.collect()

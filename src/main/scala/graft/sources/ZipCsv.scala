@@ -211,6 +211,13 @@ object ZipCsv {
                required: Set[String] = Set.empty): DataFrame =
     graft.sources.v2.ZipCsvDataSource.read(spark, glob, roles, required)
 
+  /** `readZips` over a list of archive paths, each taken literally (no
+    * glob expansion): one scan, one InputPartition per archive. */
+  def readZips(spark: SparkSession, paths: Seq[String],
+               roles: Seq[(String, Seq[String])],
+               required: Set[String]): DataFrame =
+    graft.sources.v2.ZipCsvDataSource.read(spark, paths, roles, required)
+
   /** The original `binaryFiles` ZIP scan — kept (package-private) as the
     * independent comparison baseline for ZipCsvV2Spec; production paths
     * all go through `readZips` → the V2 datasource. */

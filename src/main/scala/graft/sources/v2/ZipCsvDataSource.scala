@@ -2,6 +2,8 @@ package graft.sources.v2
 
 import java.util
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -20,6 +22,9 @@ import graft.sources.ZipCsv
   * with:
   *
   *   - `path`      glob of zip archives
+  *   - `paths`     JSON array of archive paths, taken literally (never
+  *                 glob-expanded, so names holding `,{}[]*?` are safe);
+  *                 `load(p1, p2, ...)` sets it in this form
   *   - `roles`     `role=cand1|cand2;role2=cand`: ordered header
   *                 candidates per canonical column (§1.3 resolution)
   *   - `required`  comma-separated roles that hard-error when a file's
@@ -56,12 +61,50 @@ object ZipCsvDataSource {
   def read(spark: SparkSession, glob: String,
            roles: Seq[(String, Seq[String])],
            required: Set[String]): DataFrame =
+    reader(spark, roles, required).option("path", glob).load()
+
+  /** The same scan over a list of archive paths, each taken literally:
+    * one InputPartition per archive, in one scan. */
+  def read(spark: SparkSession, paths: Seq[String],
+           roles: Seq[(String, Seq[String])],
+           required: Set[String]): DataFrame =
+    reader(spark, roles, required)
+      .option("paths", new ObjectMapper().writeValueAsString(paths.toArray))
+      .load()
+
+  private def reader(spark: SparkSession, roles: Seq[(String, Seq[String])],
+                     required: Set[String]) =
     spark.read.format(Name)
-      .option("path", glob)
       .option("roles", roles.map { case (r, cands) =>
         s"$r=${cands.mkString("|")}" }.mkString(";"))
       .option("required", required.toSeq.sorted.mkString(","))
-      .load()
+
+  /** The literal `paths` list, when the scan was given one. */
+  private def pathsOf(options: CaseInsensitiveStringMap): Option[Seq[String]] =
+    Option(options.get("paths"))
+      .map(new ObjectMapper().readValue(_, classOf[Array[String]]).toSeq)
+
+  /** The archives a scan reads, as qualified path strings: the `paths`
+    * list as given (each must exist), else the `path` glob's matches. */
+  private[v2] def archives(options: CaseInsensitiveStringMap,
+                           conf: Configuration): Seq[String] = {
+    val statuses = pathsOf(options) match {
+      case Some(paths) => paths.map { s =>
+        val p = new Path(s)
+        p.getFileSystem(conf).getFileStatus(p)
+      }
+      case None =>
+        val p = new Path(location(options))
+        Option(p.getFileSystem(conf).globStatus(p)).map(_.toSeq).getOrElse(Nil)
+    }
+    statuses.filter(_.isFile).map(_.getPath.toString)
+  }
+
+  /** The scan's location for plan strings: the glob or the path list. */
+  private[v2] def location(options: CaseInsensitiveStringMap): String =
+    pathsOf(options).map(_.mkString(", "))
+      .orElse(Option(options.get("path")))
+      .getOrElse(throw new IllegalArgumentException("zipcsv: missing 'path' option"))
 
   def rolesOf(options: CaseInsensitiveStringMap): Seq[(String, Seq[String])] = {
     val spec = Option(options.get("roles")).getOrElse(
@@ -88,7 +131,7 @@ private class ZipCsvTable(options: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
   private val roles = ZipCsvDataSource.rolesOf(options)
 
-  override def name(): String = s"zipcsv(${options.get("path")})"
+  override def name(): String = s"zipcsv(${ZipCsvDataSource.location(options)})"
   override def schema(): StructType = ZipCsvDataSource.schemaFor(roles)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
@@ -108,8 +151,7 @@ private class ZipCsvScanBuilder(options: CaseInsensitiveStringMap)
       requiredSchema.fieldNames.contains(f.name)))
 
   override def build(): Scan = new ZipCsvScan(
-    Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("zipcsv: missing 'path' option")),
+    options,
     ZipCsvDataSource.rolesOf(options),
     ZipCsvDataSource.requiredOf(options),
     pruned,
@@ -121,21 +163,19 @@ private class ZipCsvScanBuilder(options: CaseInsensitiveStringMap)
 
 private case class ZipFilePartition(path: String) extends InputPartition
 
-private class ZipCsvScan(glob: String, roles: Seq[(String, Seq[String])],
+private class ZipCsvScan(options: CaseInsensitiveStringMap,
+                         roles: Seq[(String, Seq[String])],
                          required: Set[String], pruned: StructType,
                          conf: SerializableConfiguration)
     extends Scan with Batch {
 
   override def readSchema(): StructType = pruned
   override def toBatch: Batch = this
-  override def description(): String = s"ZipCsvScan($glob)"
+  override def description(): String = s"ZipCsvScan(${ZipCsvDataSource.location(options)})"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val p = new Path(glob)
-    val fs = p.getFileSystem(conf.value)
-    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    matched.filter(_.isFile).map(s => ZipFilePartition(s.getPath.toString): InputPartition)
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    ZipCsvDataSource.archives(options, conf.value)
+      .map(ZipFilePartition(_): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ZipCsvReaderFactory(roles, required, pruned, conf)

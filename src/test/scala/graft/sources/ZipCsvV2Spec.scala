@@ -65,4 +65,46 @@ class ZipCsvV2Spec extends SparkSpec {
     }
     assert(e.getMessage != null)
   }
+
+  private def filesOf(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.executedPlan.collectLeaves().collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.toBatch.planInputPartitions().length
+    }.sum
+
+  test("a multi-path scan equals the union of single-path scans, one partition per archive") {
+    val paths = Seq("a.zip", "b.zip").map(n => new File(dir, n).getAbsolutePath)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("source_file", "dt", "state", "biome").collect().map(_.toSeq).toSeq
+        .sortBy(_.mkString("|"))
+    val multi = ZipCsv.readZips(spark, paths, roles, Set("dt"))
+    val singles = paths.map(p => ZipCsv.readZips(spark, Seq(p), roles, Set("dt")))
+    assert(rows(multi) == rows(singles.reduce(_ unionByName _)))
+    assert(rows(multi) == rows(v2))
+    assert(filesOf(multi) == 2 && singles.map(filesOf) == Seq(1, 1))
+  }
+
+  test("archive names holding a space, a comma and a brace scan and map back") {
+    val odd = Files.createTempDirectory("zipv2odd").toFile
+    val names = Seq("x y.zip", "p,q.zip", "r{s}.zip")
+    names.zipWithIndex.foreach { case (n, i) =>
+      val z = new ZipOutputStream(new FileOutputStream(new File(odd, n)))
+      z.putNextEntry(new ZipEntry("m.csv"))
+      z.write(s"data_pas;uf\n2024-01-0${i + 1} 00:00:00;S$i\n".getBytes("UTF-8"))
+      z.closeEntry(); z.close()
+    }
+    val df = ZipCsv.readZips(spark, names.map(n => new File(odd, n).getAbsolutePath),
+      roles, Set("dt"))
+    val byName = df.select(regexp_extract(col("source_file"), "[^/]*$", 0), col("state"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
+    assert(byName == names.zipWithIndex.map { case (n, i) => n -> s"S$i" }.sorted)
+    assert(filesOf(df) == 3)
+  }
+
+  test("a listed archive that does not exist is an error, not an empty scan") {
+    intercept[java.io.FileNotFoundException] {
+      ZipCsv.readZips(spark, Seq(new File(dir, "missing.zip").getAbsolutePath),
+        roles, Set("dt")).collect()
+    }
+  }
 }
