@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -7,20 +6,7 @@ object Bench {
     // Spark tolerates e.g. a leading zero), but the JSON lines must
     // emit a canonical int or the driver's by-key parse breaks
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // csv column pruning skips token-count validation for unread
-      // fields — readCsvs requires it OFF session-wide for malformed-row
-      // parity (see readCsvs contract); set it here like nanosAsLong so
-      // the invariant holds regardless of call order.
-      .config("spark.sql.csv.parser.columnPruning.enabled", "false")
-      // SQL surface: strip_accents / dot_product as SQL functions (q78)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JVM/classloading paths shared by every query (vectorized
     // parquet reader, shuffle, window, broadcast machinery) so measured

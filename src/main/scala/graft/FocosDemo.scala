@@ -2,7 +2,6 @@ package graft
 
 import java.io.{File, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.sql.SparkSession
 import graft.operators.Focos
 
 /** Usage example + smoke driver for the scan layer: builds two focos-style
@@ -10,13 +9,7 @@ import graft.operators.Focos
   * scan → normalize → grouping-sets pipeline, prints the aggregates. */
 object FocosDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // readCsvs requires csv column pruning OFF for malformed-row parity
-      .config("spark.sql.csv.parser.columnPruning.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = java.nio.file.Files.createTempDirectory("focos_demo").toFile
@@ -39,7 +32,9 @@ object FocosDemo {
     val subset = Focos.fromZips(spark, dir.getAbsolutePath + "/*.zip")
     println(s"[demo] normalized rows: ${subset.count()}")
     subset.show(10, truncate = false)
-    Focos.groupingSetCounts(subset).show(50, truncate = false)
+    Focos.groupingSetCounts(subset)
+      .orderBy("g_period", "g_state", "g_biome", "year", "period_month", "state", "biome")
+      .show(50, truncate = false)
     spark.stop()
   }
 }

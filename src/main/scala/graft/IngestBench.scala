@@ -2,7 +2,6 @@ package graft
 
 import java.io.{File, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.sql.SparkSession
 
 /** Volume measurement for the ingest path (SURVEY §2.1 S1–S3): writes
   * `nZips` synthetic focos-style archives (each one CSV member of
@@ -51,15 +50,8 @@ object IngestBench {
     val totalBytes = workDir.listFiles().filter(_.getName.endsWith(".zip")).map(_.length).sum
     println(f"""{"op":"gen","zips":$nZips,"rows":${nZips.toLong * rowsPerZip},"bytes":$totalBytes,"sec":$genSec%.2f}""")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // readCsvs requires csv column pruning OFF for malformed-row parity
-      .config("spark.sql.csv.parser.columnPruning.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val glob = workDir.getAbsolutePath + "/*.zip"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Scale-validation harness for the dedup/ANN family: runs each family
   * operator over a (generated) SF dir, timing it and logging the
@@ -14,22 +13,12 @@ import org.apache.spark.sql.SparkSession
 object ScaleReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt
+    val spark = graft.core.Session.builder(cpus)
       // plan STRINGS are re-rendered per job for the SQL-start event;
       // deep-union campaign plans made that render the bottleneck
       // (round 10) — cap it, display-only, never affects results
       .config("spark.sql.maxPlanStringLength", "100000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // csv column pruning skips token-count validation for unread
-      // fields — readCsvs requires it OFF session-wide for malformed-row
-      // parity (see readCsvs contract); set it here like nanosAsLong so
-      // the invariant holds regardless of call order.
-      .config("spark.sql.csv.parser.columnPruning.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -79,7 +68,7 @@ object ScaleReport {
     // VECTOR count: 128-float payloads are ~30× a doc-key row, so a
     // nDocs-only sizing would hand a 20 M-vector corpus 32 partitions
     // of ~320 MB build-map each
-    val shufflePartitions = math.max(cpus.toInt,
+    val shufflePartitions = math.max(cpus,
       math.max(nDocs / 4000, nVecs / 16000).toInt)
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     println(s"""{"op":"conf","shuffle_partitions":$shufflePartitions}""")
@@ -87,10 +76,10 @@ object ScaleReport {
     // MinHash-LSH family: candidate volume vs verified volume
     if (section("minhash")) {
       val mhCand = timed("minhash_candidates") {
-        Dedup.minhashCandidatePairs(docs).count()
+        Dedup.minhashCandidatePairs(docs).use(_.count())
       }
       val mhVerified = timed("minhash_pairs_full") {
-        Dedup.minhashPairs(docs, 0.5).count()
+        Dedup.minhashPairs(docs, 0.5).use(_.count())
       }
       println(s"""{"op":"minhash_ratio","candidates":$mhCand,"verified":$mhVerified}""")
     }
@@ -101,24 +90,25 @@ object ScaleReport {
     // ~20-bit keys) vs B=4 (210 tables, ~24-bit keys).
     if (section("simhash")) {
       val shCand3 = timed("simhash_candidates_b3") {
-        Dedup.simhashCandidatePairs(docs, Long.MaxValue, 6, blockChoose = 3).count()
+        Dedup.simhashCandidatePairs(docs, Long.MaxValue, 6, blockChoose = 3).use(_.count())
       }
       val shCand4 = timed("simhash_candidates_b4") {
-        Dedup.simhashCandidatePairs(docs, Long.MaxValue, 6, blockChoose = 4).count()
+        Dedup.simhashCandidatePairs(docs, Long.MaxValue, 6, blockChoose = 4).use(_.count())
       }
       val shVerified = timed("simhash_pairs_full_b4") {
-        Dedup.simhashPairs(docs, Long.MaxValue, 6, blockChoose = 4).count()
+        Dedup.simhashPairs(docs, Long.MaxValue, 6, blockChoose = 4).use(_.count())
       }
       println(s"""{"op":"simhash_ratio","candidates_b3":$shCand3,"candidates_b4":$shCand4,"verified":$shVerified}""")
     }
 
     if (section("cc")) {
       timed("near_dup_components_full") {
-        val edges = Dedup.minhashPairs(docs, 0.5).select("a", "b")
-        Dedup.nearDupComponents(docs, edges, Long.MaxValue).count()
+        Dedup.minhashPairs(docs, 0.5)
+          .flatMap(p => Dedup.nearDupComponents(docs, p.select("a", "b"), Long.MaxValue))
+          .use(_.count())
       }
       timed("dedup_corpus_end_to_end") {
-        Dedup.dedupCorpus(docs, 0.5).count()
+        Dedup.dedupCorpus(docs, 0.5).use(_.count())
       }
     }
 
@@ -171,10 +161,8 @@ object ScaleReport {
       for (nProbe <- Seq(2, 8)) {
         var knnRows: Array[(Long, Long)] = Array.empty
         timed(s"knn_join_full_nprobe$nProbe") {
-          val knn = Similarity.knnJoin(emb, 10, nProbe = nProbe)
-          knnRows = knn.select("qid", "vid").collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          knn.unpersist(blocking = false)
+          knnRows = Similarity.knnJoin(emb, 10, nProbe = nProbe).materialize
+            .use(_.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))))
           knnRows.length.toLong
         }
         val got = knnRows.filter(p => qids(p._1)).groupBy(_._1)
@@ -190,10 +178,8 @@ object ScaleReport {
       for (nProbe <- Seq(2, 8)) {
         var knnRows: Array[(Long, Long)] = Array.empty
         timed(s"knn_join_sq8_nprobe$nProbe") {
-          val knn = Similarity.knnJoinSq8(emb, 10, nProbe = nProbe)
-          knnRows = knn.select("qid", "vid").collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          knn.unpersist(blocking = false)
+          knnRows = Similarity.knnJoinSq8(emb, 10, nProbe = nProbe).materialize
+            .use(_.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))))
           knnRows.length.toLong
         }
         val got = knnRows.filter(p => qids(p._1)).groupBy(_._1)
@@ -211,10 +197,8 @@ object ScaleReport {
       for (nProbe <- Seq(2, 8)) {
         var knnRows: Array[(Long, Long)] = Array.empty
         timed(s"knn_join_pq_nprobe$nProbe") {
-          val knn = Similarity.knnJoinPq(emb, 10, nProbe = nProbe)
-          knnRows = knn.select("qid", "vid").collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          knn.unpersist(blocking = false)
+          knnRows = Similarity.knnJoinPq(emb, 10, nProbe = nProbe).materialize
+            .use(_.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))))
           knnRows.length.toLong
         }
         val got = knnRows.filter(p => qids(p._1)).groupBy(_._1)
@@ -229,10 +213,8 @@ object ScaleReport {
       for (nProbe <- Seq(2, 8)) {
         var knnRows: Array[(Long, Long)] = Array.empty
         timed(s"knn_join_bin_nprobe$nProbe") {
-          val knn = Similarity.knnJoinBin(emb, 10, nProbe = nProbe)
-          knnRows = knn.select("qid", "vid").collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          knn.unpersist(blocking = false)
+          knnRows = Similarity.knnJoinBin(emb, 10, nProbe = nProbe).materialize
+            .use(_.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))))
           knnRows.length.toLong
         }
         val got = knnRows.filter(p => qids(p._1)).groupBy(_._1)
@@ -291,7 +273,7 @@ object ScaleReport {
     // flood containment-1.0 noise on low-diversity corpora).
     timed("winnow_pairs_full")(
       TextAnalysis.winnowPairs(docs, Long.MaxValue, 8, 4, 0.8,
-        maxDocFreq = 100, minIndexSize = 5).count())
+        maxDocFreq = 100, minIndexSize = 5).use(_.count()))
     // text→vector bridge: feature-hash the WHOLE corpus (one pivot-agg
     // shuffle — the claim is linear scan + one shuffle, keyed by
     // doc_id), then serve 5 brute-force queries off the hashed vectors
@@ -326,7 +308,7 @@ object ScaleReport {
     timed("mixture_sample")(TrainingData.mixtureSample(docs,
       (0 until 20).map(i => s"src$i" -> (if (i % 2 == 0) 0.75 else 0.25)).toMap).count())
     timed("gopher_quality")(TrainingData.gopherQuality(docs, minWords = 30).count())
-    timed("dup_ngram_fraction")(TrainingData.dupNgramFraction(docs, 3, 0.6).count())
+    timed("dup_ngram_fraction")(TrainingData.dupNgramFraction(docs, 3, 0.6).use(_.count()))
     timed("chunk_split")(TrainingData.chunkSplit(docs, 40).count())
     timed("tfidf_topk")(
       TextAnalysis.tfidfTopK(docs, Seq("join", "hash", "scan"), 20).count())
@@ -525,22 +507,22 @@ object ScaleReport {
     // gram volume, the analog of the minhash candidate:verified ratio
     if (section("exactsubstr")) {
       val spans = timed("exact_substr_spans") {
-        Dedup.exactSubstrSpans(docs, 5).count()
+        Dedup.exactSubstrSpans(docs, 5).use(_.count())
       }
       println(s"""{"op":"exact_substr","spans":$spans,"docs":$nDocs}""")
       // the cut half (q102): same gram frame plus coverage explode +
       // per-doc reassembly; log the corpus-level token retention so the
       // dup-density cost driver is visible next to the seconds
-      timed("exact_substr_cut") { Dedup.exactSubstrCut(docs, 5).count() }
-      val kept = Dedup.exactSubstrCut(docs, 5)
-        .agg(org.apache.spark.sql.functions.sum(col("n_tok")).as("t"),
-          org.apache.spark.sql.functions.sum(col("n_cut")).as("c")).head()
+      timed("exact_substr_cut") { Dedup.exactSubstrCut(docs, 5).use(_.count()) }
+      val kept = Dedup.exactSubstrCut(docs, 5).use(
+        _.agg(org.apache.spark.sql.functions.sum(col("n_tok")).as("t"),
+          org.apache.spark.sql.functions.sum(col("n_cut")).as("c")).head())
       release()
       println(s"""{"op":"exact_substr_cut_tokens","total":${kept.getLong(0)},"cut":${kept.getLong(1)}}""")
       // boilerplate purge (q105): heavy-hitter table + targeted cut —
       // coverage bounded by topN gram occurrences, not corpus dup rate
       timed("heavy_hitters") { Dedup.heavyHitterGrams(docs, 5, 50).count() }
-      timed("boilerplate_cut") { Dedup.boilerplateCut(docs, 5, 50).count() }
+      timed("boilerplate_cut") { Dedup.boilerplateCut(docs, 5, 50).use(_.count()) }
     }
 
     // Count-Min heavy hitters (q125/q130): the bounded-memory form vs
@@ -601,14 +583,14 @@ object ScaleReport {
       val target = docs.where(col("lang") === "en")
       var exactIds = Set.empty[Long]
       timed("dsir_exact") {
-        exactIds = TrainingData.dsirSelect(docs, target, n).select("doc_id")
-          .collect().map(_.getLong(0)).toSet
+        exactIds = TrainingData.dsirSelect(docs, target, n)
+          .use(_.select("doc_id").collect().map(_.getLong(0)).toSet)
         exactIds.size.toLong
       }
       var hashedIds = Set.empty[Long]
       timed("dsir_hashed_64k") {
         hashedIds = TrainingData.dsirSelect(docs, target, n, 1 << 16)
-          .select("doc_id").collect().map(_.getLong(0)).toSet
+          .use(_.select("doc_id").collect().map(_.getLong(0)).toSet)
         hashedIds.size.toLong
       }
       val overlap = if (exactIds.isEmpty) 1.0
@@ -622,7 +604,7 @@ object ScaleReport {
     if (section("lm")) {
       timed("lm_quality_score") {
         TrainingData.lmQualityScore(docs,
-          docs.where(col("doc_id") < nDocs / 2)).count()
+          docs.where(col("doc_id") < nDocs / 2)).use(_.count())
       }
     }
 
@@ -637,7 +619,7 @@ object ScaleReport {
         TrainingData.decontaminate(corp, ev, 3, 2).count()
       }
       val bloom = timed("decontaminate_bloom") {
-        TrainingData.decontaminateBloom(corp, ev, 3, 2, fpp = 0.01).count()
+        TrainingData.decontaminateBloom(corp, ev, 3, 2, fpp = 0.01).use(_.count())
       }
       println(s"""{"op":"bloom_parity","broadcast_rows":$exact,"bloom_rows":$bloom}""")
     }
@@ -923,9 +905,9 @@ object ScaleReport {
       println(s"""{"op":"edit_join_candidates","prefix":$candPfx,"seg":$candSeg,"possible":$possible}""")
       var verified = 0L
       timed("edit_join_prefix") {
-        verified = Dedup.editDistancePairs(heads, 4).count(); verified
+        verified = Dedup.editDistancePairs(heads, 4).use(_.count()); verified
       }
-      timed("edit_join_seg")(Dedup.editDistancePairsSeg(heads, 4).count())
+      timed("edit_join_seg")(Dedup.editDistancePairsSeg(heads, 4).use(_.count()))
       println(s"""{"op":"edit_join_ratio","verified":$verified,"cand_per_verified_prefix":${if (verified > 0) candPfx / verified else -1},"cand_per_verified_seg":${if (verified > 0) candSeg / verified else -1}}""")
     }
 
@@ -1047,7 +1029,7 @@ object ScaleReport {
       if (nDocs <= 100000L)
         timed("fuzzy_rescan_once")(
           Dedup.editDistancePairsSeg(
-            keys.selectExpr("doc_id AS id", "key AS s"), d).count())
+            keys.selectExpr("doc_id AS id", "key AS s"), d).use(_.count()))
       else
         println(s"""{"op":"fuzzy_rescan_once","skipped":"quadratic beyond 100k docs (entropy law projects ~81x candidates per 10x)"}""")
     }
@@ -1269,11 +1251,12 @@ object ScaleReport {
       }
       val batch = keys.where(col("doc_id") >= half)
       val t0 = System.nanoTime()
-      val (kept, rel, stats) =
-        IngestFuzzy.gateBatchStats(batch, dir, "key", 10000)
-      val nKept = kept.count()
-      kept.write.mode("append").parquet(out)
-      rel()
+      val (nKept, stats) =
+        IngestFuzzy.gateBatchStats(batch, dir, "key", 10000).use { case (kept, st) =>
+          val n = kept.count()
+          kept.write.mode("append").parquet(out)
+          (n, st)
+        }
       val tot = (System.nanoTime() - t0) / 1e9
       stats.zipWithIndex.foreach { case ((nk, sec), i) =>
         println(f"""{"op":"fuzzysplit_slice$i","keys":$nk,"sec":$sec%.2f}""")
@@ -1290,9 +1273,9 @@ object ScaleReport {
         col("doc_id") < half + yard)
       for ((label, mk) <- Seq("split" -> 10000, "unsplit" -> Int.MaxValue)) {
         val t1 = System.nanoTime()
-        val (k2, rel2, st) = IngestFuzzy.gateBatchStats(yBatch, dir, "key", mk)
-        val n2 = k2.count()
-        rel2(); release()
+        val (n2, st) = IngestFuzzy.gateBatchStats(yBatch, dir, "key", mk)
+          .use { case (k2, st) => (k2.count(), st) }
+        release()
         println(f"""{"op":"fuzzysplit_yardstick_$label","keys":$yard,"slices":${st.size},"kept":$n2,"sec":${(System.nanoTime() - t1) / 1e9}%.2f}""")
       }
     }
@@ -1367,11 +1350,11 @@ object ScaleReport {
         val snm = Linkage.snmPairs(heads, w, 4).select("id_a", "id_b")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val nSnm = snm.count()
-        val exact = Dedup.editDistancePairsSeg(
-            heads.selectExpr("id", "skey AS s"), 4).select("id_a", "id_b")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nExact = exact.count()
-        val hit = snm.join(exact, Seq("id_a", "id_b"), "left_semi").count()
+        val (nExact, hit) = Dedup.editDistancePairsSeg(
+            heads.selectExpr("id", "skey AS s"), 4).map(_.select("id_a", "id_b"))
+          .materialize.use { exact =>
+            (exact.count(), snm.join(exact, Seq("id_a", "id_b"), "left_semi").count())
+          }
         release()
         println(s"""{"op":"snm_recall","cand_bound":${nDocs * w},"snm_verified":$nSnm,"exact_verified":$nExact,"recall_ppm":${if (nExact > 0) hit * 1000000L / nExact else 1000000L}}""")
       } else
@@ -1414,12 +1397,11 @@ object ScaleReport {
       val nLinks = links.count()
       println(f"""{"op":"linkcc_links","links":$nLinks,"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
       t0 = System.nanoTime()
-      val clusters = Linkage.entityClusters(recs, recs, links)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nAssigned = clusters.count()
-      println(f"""{"op":"linkcc_cc","rows":$nAssigned,"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      val good = clusters.groupBy("entity").count()
-        .where(col("count") === 3).count()
+      val good = Linkage.entityClusters(recs, recs, links).materialize.use { clusters =>
+        val nAssigned = clusters.count()
+        println(f"""{"op":"linkcc_cc","rows":$nAssigned,"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
+        clusters.groupBy("entity").count().where(col("count") === 3).count()
+      }
       println(s"""{"op":"linkcc_recovered","clusters_of_3":$good,"planted":$nDocs}""")
       release()
     }

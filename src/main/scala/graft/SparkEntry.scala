@@ -24,6 +24,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Aggregates.groupingSetCounts(lineitem(spark, "/root/testdata/sf0.001"))
 
+  /** The query catalogue: name → (session, testdata dir) → result.
+    *
+    * Cache contract: an entry may return a frame that still reads
+    * persisted intermediates — it takes a `Scoped` operator's `.value`
+    * (lazy) or `.materialize.value` (persisted result) without
+    * releasing the scope. Every caller that runs the catalogue (Bench,
+    * Verify, TimeQ, the benchmark's query workload) clears the
+    * session's cache after each query, and that is what releases them.
+    * Code outside the catalogue releases its scopes itself (`use`). */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.4 aggregations
     "q01_pricing_summary" -> ((s, d) => Aggregates.pricingSummary(lineitem(s, d))),
@@ -92,7 +101,7 @@ object SparkEntry {
     // §2.3 joins
     "q15_yoy_outer" -> ((s, d) => Joins.yoyOuter(orders(s, d), 2000)),
     "q16_inner_merge_series" -> ((s, d) => Joins.innerMergeSeries(lineitem(s, d), orders(s, d))),
-    "q17_anti_overlay" -> ((s, d) => Joins.antiOverlay(lineitem(s, d), orders(s, d))),
+    "q17_anti_overlay" -> ((s, d) => Joins.antiOverlay(lineitem(s, d), orders(s, d)).value),
     "q18_incremental_merge" -> ((s, d) => Joins.incrementalMerge(events(s, d), 5000L)),
     "q19_dim_broadcast" -> ((s, d) =>
       Joins.dimBroadcast(customer(s, d), nation(s, d), region(s, d))),
@@ -127,10 +136,10 @@ object SparkEntry {
     // soft dedup (SoftDedup): every doc kept, duplicated text
     // downweighted to 1/n — one window shuffle over the content hash
     "q121_soft_dedup" -> ((s, d) => Dedup.softDedupWeights(documents(s, d))),
-    "q36_minhash_pairs" -> ((s, d) => Dedup.minhashPairs(documents(s, d), 0.5)),
+    "q36_minhash_pairs" -> ((s, d) => Dedup.minhashPairs(documents(s, d), 0.5).value),
     "q37_simhash" -> ((s, d) => Dedup.simhash(documents(s, d), 200L)),
-    "q65_simhash_pairs" -> ((s, d) => Dedup.simhashPairs(documents(s, d), 2000L, 6)),
-    "q38_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairs(documents(s, d), 300L, 0.2)),
+    "q65_simhash_pairs" -> ((s, d) => Dedup.simhashPairs(documents(s, d), 2000L, 6).value),
+    "q38_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairs(documents(s, d), 300L, 0.2).value),
     // §2.8 scalar functions / text analysis
     "q27_string_normalize" -> ((s, d) => TextAnalysis.stringNormalize(documents(s, d))),
     "q28_regex_extract" -> ((s, d) => TextAnalysis.regexExtractBuckets(documents(s, d))),
@@ -145,7 +154,7 @@ object SparkEntry {
     "q55_winnow_fp" -> ((s, d) =>
       TextAnalysis.winnowFingerprints(documents(s, d), 200L, 8, 4)),
     "q73_winnow_pairs" -> ((s, d) =>
-      TextAnalysis.winnowPairs(documents(s, d), 500L, 8, 4, 0.8)),
+      TextAnalysis.winnowPairs(documents(s, d), 500L, 8, 4, 0.8).value),
     "q47_topical_filter" -> ((s, d) =>
       TextAnalysis.topicalFilter(documents(s, d), Seq("spark", "stream", "window"))),
     "q48_distinct_preview" -> ((s, d) =>
@@ -245,7 +254,7 @@ object SparkEntry {
       val specs = (0L until 40L).map(i => (i, i, 0)) ++
         (0L until 40L by 4L).map(i => (i + 1000L, i, 40))
       Multimodal.imageNearDupPairs(
-        Multimodal.patternImages(s, specs, 36, 32), maxHamming = 2)
+        Multimodal.patternImages(s, specs, 36, 32), maxHamming = 2).value
     }),
     // the VIDEO face: per-frame dHash over the REAL AVI demux (DIB
     // rows decoded bottom-up), clips near-duplicate iff EVERY aligned
@@ -269,7 +278,7 @@ object SparkEntry {
       val specs = (0L until 40L).map(i => (i, i, 500)) ++
         (0L until 40L by 4L).map(i => (i + 1000L, i, 250))
       Multimodal.audioNearDupPairs(
-        Multimodal.patternAudio(s, specs, 1600), maxHamming = 2)
+        Multimodal.patternAudio(s, specs, 1600), maxHamming = 2).value
     }),
     // the closure: every image labeled by its near-dup cluster's
     // smallest media_id — the q72 recursive-reach oracle over the q187
@@ -278,7 +287,7 @@ object SparkEntry {
       val specs = (0L until 40L).map(i => (i, i, 0)) ++
         (0L until 40L by 4L).map(i => (i + 1000L, i, 40))
       Multimodal.imageDupComponents(
-        Multimodal.patternImages(s, specs, 36, 32), maxHamming = 2)
+        Multimodal.patternImages(s, specs, 36, 32), maxHamming = 2).value
     }),
     // the streaming FINGERPRINT gate (IngestFingerprints), driver-gated
     // end-to-end with a REAL store lifecycle inside the query (the q183
@@ -302,10 +311,10 @@ object SparkEntry {
       } :+ ((200L, 101L, 25)) // in-batch twin of kept 101 → drop
       val batch = Multimodal.patternImages(s, batchSpecs, 36, 32)
         .toDF().selectExpr("media_id AS doc_id", "content AS image")
-      val (kept, _, rel) = graft.streaming.IngestFingerprints.gateBatch(
-        batch, dir, graft.streaming.IngestFingerprints.imageFps(batch))
-      kept.select("doc_id").write.mode("overwrite").parquet(s"$dir/result")
-      rel()
+      graft.streaming.IngestFingerprints.gateBatch(
+        batch, dir, graft.streaming.IngestFingerprints.imageFps(batch)).use { case (kept, _) =>
+        kept.select("doc_id").write.mode("overwrite").parquet(s"$dir/result")
+      }
       s.read.parquet(s"$dir/result").orderBy("doc_id")
     }),
     // the SERVING face of the fingerprint store, end-to-end (round
@@ -358,10 +367,10 @@ object SparkEntry {
         (103L, clip(Seq(50L, 50L, 50L), 0)), // novel → keep
         (104L, clip(Seq(50L, 50L, 50L), 25)) // in-batch twin of 103 → drop
       ).toDF("doc_id", "video")
-      val (kept, _, rel) = graft.streaming.IngestFingerprints.gateBatch(
-        batch, dir, graft.streaming.IngestFingerprints.videoFps(batch))
-      kept.select("doc_id").write.mode("overwrite").parquet(s"$dir/result")
-      rel()
+      graft.streaming.IngestFingerprints.gateBatch(
+        batch, dir, graft.streaming.IngestFingerprints.videoFps(batch)).use { case (kept, _) =>
+        kept.select("doc_id").write.mode("overwrite").parquet(s"$dir/result")
+      }
       s.read.parquet(s"$dir/result").orderBy("doc_id")
     }),
     // the AUDIO face of the q193 gate — same single-part machinery,
@@ -387,10 +396,10 @@ object SparkEntry {
       } :+ ((200L, 21L, 125)) // in-batch volume twin of kept 101 → drop
       val batch = Multimodal.patternAudio(s, batchSpecs, 1600)
         .toDF().selectExpr("media_id AS doc_id", "content AS audio")
-      val (kept, _, rel) = graft.streaming.IngestFingerprints.gateBatch(
-        batch, dir, graft.streaming.IngestFingerprints.audioFps(batch))
-      kept.select("doc_id").write.mode("overwrite").parquet(s"$dir/result")
-      rel()
+      graft.streaming.IngestFingerprints.gateBatch(
+        batch, dir, graft.streaming.IngestFingerprints.audioFps(batch)).use { case (kept, _) =>
+        kept.select("doc_id").write.mode("overwrite").parquet(s"$dir/result")
+      }
       s.read.parquet(s"$dir/result").orderBy("doc_id")
     }),
     // geometry-independence of the fuzzy store, driver-gated: build at
@@ -407,12 +416,12 @@ object SparkEntry {
       graft.streaming.IngestFuzzy.appendKeys(s, s"$dir/store",
         heads.where("id >= 150 AND id < 250"))
       graft.streaming.IngestFuzzy.fuzzyRebalance(s, s"$dir/store", 61)
-      val (kept, rel) = graft.streaming.IngestFuzzy.gateBatch(
+      graft.streaming.IngestFuzzy.gateBatch(
         heads.where("id >= 250 AND id < 2000")
-          .selectExpr("id AS doc_id", "s AS key"), s"$dir/store")
-      kept.select("doc_id", "key")
-        .write.mode("overwrite").parquet(s"$dir/result")
-      rel()
+          .selectExpr("id AS doc_id", "s AS key"), s"$dir/store").use { kept =>
+        kept.select("doc_id", "key")
+          .write.mode("overwrite").parquet(s"$dir/result")
+      }
       s.read.parquet(s"$dir/result").orderBy("doc_id")
     }),
     // the bucket prune's PAYING regime, driver-gated: a 5-key POINT
@@ -429,12 +438,12 @@ object SparkEntry {
       graft.streaming.IngestFuzzy.fuzzySave(s, heads.where("id < 250"),
         s"$dir/store", maxDist = 3, nBuckets = 8)
       graft.streaming.IngestFuzzy.fuzzyRebalance(s, s"$dir/store", 251)
-      val (kept, rel) = graft.streaming.IngestFuzzy.gateBatch(
+      graft.streaming.IngestFuzzy.gateBatch(
         heads.where("id >= 250 AND id < 255")
-          .selectExpr("id AS doc_id", "s AS key"), s"$dir/store")
-      kept.select("doc_id", "key")
-        .write.mode("overwrite").parquet(s"$dir/result")
-      rel()
+          .selectExpr("id AS doc_id", "s AS key"), s"$dir/store").use { kept =>
+        kept.select("doc_id", "key")
+          .write.mode("overwrite").parquet(s"$dir/result")
+      }
       s.read.parquet(s"$dir/result").orderBy("doc_id")
     }),
     // the lexical point-search twin: ONE term against a 251-bucket
@@ -583,8 +592,8 @@ object SparkEntry {
       // At corpus scale the edge input is minhashPairs; the exact pair
       // generator here keeps the query oracle-checkable end-to-end.
       val docs = documents(s, d)
-      val edges = Dedup.ngramJaccardPairs(docs, 500L, 0.5).select("a", "b")
-      Dedup.nearDupComponents(docs, edges, 500L)
+      val edges = Dedup.ngramJaccardPairs(docs, 500L, 0.5).value.select("a", "b")
+      Dedup.nearDupComponents(docs, edges, 500L).value
     }),
     // similarity search
     "q39_cosine_topk" -> ((s, d) => Similarity.cosineTopK(embeddings(s, d), 5, 10)),
@@ -642,12 +651,10 @@ object SparkEntry {
     // space (rows-only — seeded KMeans; SimilaritySpec pins cap/
     // determinism/output size)
     "q106_diversity_sample" -> ((s, d) => {
-      val (res, release) = Similarity.diversitySampleScoped(embeddings(s, d), 8, 40)
-      val out = res.cache(); out.count(); release()
-      out
+      Similarity.diversitySample(embeddings(s, d), 8, 40).materialize.value
     }),
     "q61_lsh_near_dup" -> ((s, d) => Similarity.lshNearDupPairs(embeddings(s, d), 0.35)),
-    "q46_cosine_near_dup" -> ((s, d) => Similarity.cosineNearDupPairs(embeddings(s, d), 300L, 0.4)),
+    "q46_cosine_near_dup" -> ((s, d) => Similarity.cosineNearDupPairs(embeddings(s, d), 300L, 0.4).value),
     // round-3 oracle coverage: P4/P5/P13 + the SQL extension surface
     "q75_coerce_datetime" -> ((s, d) => {
       // P4 (bdqueimadas_incremental.py:727-756): mixed-format datetime
@@ -780,7 +787,7 @@ object SparkEntry {
     // threshold 0.6 ≈ the corpus median shared fraction at sf0.01 —
     // both verdicts appear at every driver SF
     "q89_dup_ngrams" -> ((s, d) =>
-      TrainingData.dupNgramFraction(documents(s, d), 3, 0.6)),
+      TrainingData.dupNgramFraction(documents(s, d), 3, 0.6).value),
     // maxLen=40 against 10-99-word docs: 1-3 chunks per doc, so both
     // the split and the tail-length arithmetic get exercised
     "q90_chunk_split" -> ((s, d) =>
@@ -826,7 +833,7 @@ object SparkEntry {
     // q72's closure with quality-aware canonical selection: keep the
     // LONGEST member of each near-dup component, not the min id
     "q93_dedup_keep_best" -> ((s, d) =>
-      Dedup.dedupKeepBest(documents(s, d), 500L, 0.5)),
+      Dedup.dedupKeepBest(documents(s, d), 500L, 0.5).value),
     // the streaming curation pass, exercised as a batch oracle query:
     // mixture admission + split + redaction in one stateless projection
     // (same contact synthesis as q82, same weights as q87); the orderBy
@@ -848,7 +855,7 @@ object SparkEntry {
     // equivalent; DedupCorpusSpec pins the drop-set against the q93
     // exact-edge closure on the same slice
     "q95_dedup_corpus" -> ((s, d) =>
-      Dedup.dedupCorpus(documents(s, d), 0.5)
+      Dedup.dedupCorpus(documents(s, d), 0.5).value
         .select("doc_id").orderBy("doc_id")),
     // incremental dedup against the corpus SKETCH (signature store):
     // batch = doc_id ≥ 250 deduped against the signatures of the first
@@ -862,7 +869,7 @@ object SparkEntry {
       // tokenize as ONE AQE-coalesced task (round-14 stage profile)
       val store = Dedup.minhashSignatures(all.where(col("doc_id") < 250),
         pinned = true)
-      Dedup.dedupIncremental(all.where(col("doc_id") >= 250), store, 0.5)
+      Dedup.dedupIncremental(all.where(col("doc_id") >= 250), store, 0.5).value
         .select("doc_id").orderBy("doc_id")
     }),
     // Bloom-regime decontamination: the Catalyst runtime-filter pair
@@ -876,7 +883,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       val docs = documents(s, d)
       TrainingData.decontaminateBloom(docs.where(col("doc_id") >= 40),
-        docs.where(col("doc_id") < 40), 3, 1, fpp = 0.05)
+        docs.where(col("doc_id") < 40), 3, 1, fpp = 0.05).value
     }),
     // Lee et al. 2021 EXACTSUBSTR: maximal per-doc token spans covered
     // by 5-gram runs appearing verbatim in ≥2 documents — the span-CUT
@@ -884,12 +891,12 @@ object SparkEntry {
     // suffix-array construction reduces to df≥2 gram starts + a
     // gaps-and-islands interval merge, both oracle-expressible.
     "q99_exact_substr" -> ((s, d) =>
-      Dedup.exactSubstrSpans(documents(s, d), 5)),
+      Dedup.exactSubstrSpans(documents(s, d), 5).value),
     // the consumer-facing half of EXACTSUBSTR: the corpus with q99's
     // spans cut out and kept tokens reassembled — every doc emits one
     // row, so the output IS the post-cut training corpus
     "q102_exact_substr_cut" -> ((s, d) =>
-      Dedup.exactSubstrCut(documents(s, d), 5)),
+      Dedup.exactSubstrCut(documents(s, d), 5).value),
     // CCNet-style LM quality scoring: bigram model trained on docs
     // < 250, all docs scored by mean bigram probability in FIXED-POINT
     // ppm (integer div) so the perplexity proxy hash-checks exactly;
@@ -897,7 +904,7 @@ object SparkEntry {
     "q100_lm_quality" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       val docs = documents(s, d)
-      TrainingData.lmQualityScore(docs, docs.where(col("doc_id") < 250))
+      TrainingData.lmQualityScore(docs, docs.where(col("doc_id") < 250)).value
     }),
     // scorer evaluation: ROC-AUC (exact Mann-Whitney rank-sum, ties at
     // average rank) + R-precision of q100's LM score against q88's
@@ -907,13 +914,10 @@ object SparkEntry {
     "q124_score_auc" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       val docs = documents(s, d)
-      val (scored, relS) =
-        TrainingData.lmQualityScoreScoped(docs, docs.where(col("doc_id") < 250))
       val labels = TrainingData.gopherQuality(docs, minWords = 30)
         .select(col("doc_id"), col("keep").cast("long").as("label"))
-      val (res, relJ) = TrainingData.scoreAucScoped(scored, labels)
-      val out = res.cache(); out.count(); relS(); relJ()
-      out
+      TrainingData.lmQualityScore(docs, docs.where(col("doc_id") < 250))
+        .flatMap(TrainingData.scoreAuc(_, labels)).materialize.value
     }),
     // q124's calibration companion: decile bins of the LM score vs the
     // Gopher verdict — monotone pos_rate means the score ranks quality
@@ -921,13 +925,10 @@ object SparkEntry {
     "q126_score_calibration" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       val docs = documents(s, d)
-      val (scored, relS) =
-        TrainingData.lmQualityScoreScoped(docs, docs.where(col("doc_id") < 250))
       val labels = TrainingData.gopherQuality(docs, minWords = 30)
         .select(col("doc_id"), col("keep").cast("long").as("label"))
-      val (res, relC) = TrainingData.scoreCalibrationScoped(scored, labels, 10)
-      val out = res.cache(); out.count(); relS(); relC()
-      out
+      TrainingData.lmQualityScore(docs, docs.where(col("doc_id") < 250))
+        .flatMap(TrainingData.scoreCalibration(_, labels, 10)).materialize.value
     }),
     // Cohen's kappa between the two rule-based gates (Gopher word
     // rules vs bigram repetition) — chance-corrected agreement, the
@@ -960,25 +961,25 @@ object SparkEntry {
     // (N·nProbe·clusterRows pair volume, never N²). Rows-only: KMeans
     // lists; recall vs brute force pinned by SimilaritySpec
     "q134_knn_join" -> ((s, d) =>
-      Similarity.knnJoin(embeddings(s, d), 5)),
+      Similarity.knnJoin(embeddings(s, d), 5).materialize.value),
     // q134's exhaustive dial: scanFrac = 1.0 probes every IVF list,
     // which IS the brute-force join — so the SAME knnJoin code path
     // (probe selection, candidate equi-join, per-qid window) runs
     // end-to-end and hash-checks against a DuckDB all-pairs top-k
     "q138_knn_exhaustive" -> ((s, d) =>
-      Similarity.knnJoin(embeddings(s, d), 5, scanFrac = Some(1.0))),
+      Similarity.knnJoin(embeddings(s, d), 5, scanFrac = Some(1.0)).materialize.value),
     // q134 over the SQ8-quantized index: int8 assigned lists (~7× less
     // long-lived memory), ADC candidate scoring, float refine re-rank.
     // Rows-only (int8 ADC ranks the pool); recall parity vs the float
     // path pinned by SimilaritySpec
     "q140_knn_join_sq8" -> ((s, d) =>
-      Similarity.knnJoinSq8(embeddings(s, d), 5)),
+      Similarity.knnJoinSq8(embeddings(s, d), 5).materialize.value),
     // the deepest corpus-side quantization rung: PQ-coded lists scored
     // via PqDecode reconstructions + exact float refine (rows-only —
     // seeded KMeans/codebooks; SimilaritySpec pins refined recall and
     // determinism; m=8 divides the testdata's 32-dim embeddings)
     "q152_knn_join_pq" -> ((s, d) =>
-      Similarity.knnJoinPq(embeddings(s, d), 5, m = 8)),
+      Similarity.knnJoinPq(embeddings(s, d), 5, m = 8).materialize.value),
     // q152's exhaustive dial: scanFrac = 1.0 probes every list AND the
     // refine pool covers the corpus (k·refine ≥ N), so the exact-float
     // re-rank ranks ALL candidates — the result IS the brute-force
@@ -992,14 +993,14 @@ object SparkEntry {
       // job storm measured ~0.8 s of pure scheduling here (q138 vs q156)
       Similarity.knnJoinPq(e, 5, m = 8,
         refine = (e.count() / 5L + 1L).toInt, scanFrac = Some(1.0),
-        sampleFit = true)
+        sampleFit = true).materialize.value
     }),
     // the OPQ rung of the corpus-side ladder (FAISS OPQ,IVF,PQ as a
     // join): rotation-decorrelated subspaces before the codebook fit.
     // Rows-only (seeded alternation + KMeans); recall floor and
     // determinism pinned by SimilaritySpec
     "q154_knn_join_opq" -> ((s, d) =>
-      Similarity.knnJoinOpq(embeddings(s, d), 5, m = 8)),
+      Similarity.knnJoinOpq(embeddings(s, d), 5, m = 8).materialize.value),
     // the OPQ rung's exhaustive dial: rotation preserves dots/norms,
     // so scanFrac = 1.0 + a corpus-covering refine pool is again the
     // exact brute ranking — hash-green through rotation + codebooks
@@ -1009,7 +1010,7 @@ object SparkEntry {
       // sampleFit: fit-invariant at the exhaustive dial (see q153)
       Similarity.knnJoinOpq(e, 5, m = 8,
         refine = (e.count() / 5L + 1L).toInt, scanFrac = Some(1.0),
-        sampleFit = true)
+        sampleFit = true).materialize.value
     }),
     // q138's brute-force contract through the SAMPLE-FIT coarse
     // quantizer (round-8): centroids train on a bounded driver slice
@@ -1019,7 +1020,7 @@ object SparkEntry {
     // spec pins is proven in the gate too (hash-green, same oracle)
     "q156_knn_exhaustive_samplefit" -> ((s, d) =>
       Similarity.knnJoin(embeddings(s, d), 5, scanFrac = Some(1.0),
-        sampleFit = true)),
+        sampleFit = true).materialize.value),
     // the 1-bit rung (FAISS IndexBinaryFlat): sign codes, exact
     // integer Hamming ranking — HASH-GREEN, because the oracle can
     // recompute Hamming as the count of per-dim sign disagreements
@@ -1038,7 +1039,7 @@ object SparkEntry {
     // Hamming candidate pool, float refine. Rows-only (seeded lists);
     // BinSpec pins refined recall and determinism
     "q159_knn_join_bin" -> ((s, d) =>
-      Similarity.knnJoinBin(embeddings(s, d), 5)),
+      Similarity.knnJoinBin(embeddings(s, d), 5).materialize.value),
     // q159 at the exhaustive dial (every list + corpus-covering pool):
     // the float refine ranks all candidates — the brute ranking through
     // build → sign-encode → Hamming → refine (hash-green; the corpus-
@@ -1048,7 +1049,7 @@ object SparkEntry {
       // sampleFit: fit-invariant at the exhaustive dial (see q153)
       Similarity.knnJoinBin(e, 5,
         refine = (e.count() / 5L + 1L).toInt, scanFrac = Some(1.0),
-        sampleFit = true)
+        sampleFit = true).materialize.value
     }),
     // fuzzy-key similarity join: ALL head-32 pairs within Levenshtein
     // distance 4, blocked by the rarest-first q-gram prefix filter —
@@ -1058,7 +1059,7 @@ object SparkEntry {
       Dedup.editDistancePairs(
         documents(s, d).where("doc_id < 2000")
           .selectExpr("doc_id AS id", "substring(text, 1, 32) AS s"),
-        4)),
+        4).value),
     // fastText-shaped linear token classifier, fixed-point: per-token
     // smoothed class-conditional difference weights (hash-green — the
     // q100 integer-ppm discipline; the MLlib qualityClassifier's
@@ -1081,7 +1082,7 @@ object SparkEntry {
         .select(col("doc_id"), col("keep"))
       val clf = TrainingData.tokenClassifier(docs,
           rule.where(col("doc_id") < 250).selectExpr("doc_id", "keep AS label"))
-        .select(col("doc_id"), col("pred").as("keep"))
+        .value.select(col("doc_id"), col("pred").as("keep"))
       TrainingData.filterKappa(rule, clf)
     }),
     // train-and-score: every doc scored by the fixed-point token
@@ -1090,7 +1091,7 @@ object SparkEntry {
     "q164_nb_score" -> ((s, d) => {
       val docs = documents(s, d)
       TrainingData.tokenClassifier(docs,
-        docs.selectExpr("doc_id", "lang = 'en' AS label").where("doc_id < 250"))
+        docs.selectExpr("doc_id", "lang = 'en' AS label").where("doc_id < 250")).value
     }),
     // fuzzy-key dedup closure: edit-distance edges → connected
     // components → keep-min representative (the q72 pattern over
@@ -1101,8 +1102,8 @@ object SparkEntry {
       val docs = documents(s, d).where("doc_id < 2000")
       val edges = Dedup.editDistancePairsSeg(
         docs.selectExpr("doc_id AS id", "substring(text, 1, 32) AS s"), 4)
-        .selectExpr("id_a AS a", "id_b AS b")
-      Dedup.nearDupComponents(docs, edges, 2000L)
+        .value.selectExpr("id_a AS a", "id_b AS b")
+      Dedup.nearDupComponents(docs, edges, 2000L).value
     }),
     // asymmetric (batch × store) edit-distance probe — the primitive
     // behind the streaming fuzzy-key gate (IngestFuzzy): every pair of
@@ -1113,7 +1114,7 @@ object SparkEntry {
       val heads = documents(s, d)
         .selectExpr("doc_id AS id", "substring(text, 1, 32) AS s")
       Dedup.edStorePairs(heads.where("id >= 250 AND id < 2000"),
-        heads.where("id < 250"), 4)
+        heads.where("id < 250"), 4).value
     }),
     // the fuzzy-key ingest GATE itself, batch form: batch keys kept
     // after dropping any within d=3 of a store key or of a smaller-id
@@ -1124,7 +1125,7 @@ object SparkEntry {
       val heads = documents(s, d)
         .selectExpr("doc_id AS id", "substring(text, 1, 24) AS s")
       Dedup.fuzzyKeyGate(heads.where("id >= 250 AND id < 2000"),
-        heads.where("id < 250"), 3).selectExpr("id AS doc_id", "s AS key")
+        heads.where("id < 250"), 3).value.selectExpr("id AS doc_id", "s AS key")
     }),
     // deterministic seeded epoch shuffle: the dataloader-ordering step
     // (reproducible permutation as (shard, pos) coordinates, seed =
@@ -1180,7 +1181,7 @@ object SparkEntry {
     "q178_lang_classifier" -> ((s, d) => {
       val docs = documents(s, d)
       TrainingData.multiClassifier(docs,
-        docs.selectExpr("doc_id", "lang AS cls").where("doc_id < 250"))
+        docs.selectExpr("doc_id", "lang AS cls").where("doc_id < 250")).value
     }),
     // survivorship merge over the resolved matches: one golden record
     // per entity, per-field precedence as explicit CASE projections
@@ -1212,7 +1213,7 @@ object SparkEntry {
     // the override path
     "q181_linkage_em_score" -> ((s, d) => {
       val (a, b) = linkageFeeds(s, d)
-      Linkage.emPosteriors(a, b, linkageRules, 500000L)
+      Linkage.emPosteriors(a, b, linkageRules, 500000L).value
     }),
     // the MULTI-feed closure: connected components over the scored
     // match graph (threshold 680 admits the source+length band, so
@@ -1224,7 +1225,7 @@ object SparkEntry {
       Linkage.entityClusters(a, b,
         Linkage.linkScores(a, b, linkageRules,
           Map("head" -> (200, -300), "source" -> (430, -300),
-              "n_chars" -> (550, -400)), 680))
+              "n_chars" -> (550, -400)), 680)).value
     }),
     // the skewed-block mitigation under the hash gate: q172's
     // u-estimator computed over AUTO-salted blocking — per-block pair
@@ -1333,22 +1334,20 @@ object SparkEntry {
       import org.apache.spark.sql.functions.col
       val docs = documents(s, d)
       Dedup.crossNearDups(docs.where(col("doc_id") >= 40),
-        docs.where(col("doc_id") < 40), 0.5)
+        docs.where(col("doc_id") < 40), 0.5).materialize.value
     }),
     // one-call end-to-end curation (the q95 counterpart for the
     // curation family): gopher gate -> exact dedup -> split -> pack;
     // hash-green because every stage composes its own green oracle
     "q115_curate_corpus" -> ((s, d) =>
-      TrainingData.curateCorpus(documents(s, d), 500)),
+      TrainingData.curateCorpus(documents(s, d), 500).value),
     // q115 with the q95 MinHash near-dup stage composed between exact
     // dedup and the split (the real-pipeline order). Rows-only: the
     // LSH band stage has no DuckDB equivalent; TrainingDataSpec pins
     // the keep-set against hand-composing gopher -> exact -> q95
     "q118_curate_neardup" -> ((s, d) => {
-      val (res, release) =
-        TrainingData.curateCorpusScoped(documents(s, d), 500, nearDup = true)
-      val out = res.cache(); out.count(); release()
-      out
+      TrainingData.curateCorpus(documents(s, d), 500, nearDup = true)
+        .materialize.value
     }),
     // snapshot diff between two corpus versions by content hash:
     // docs 0-9 removed, 400+ added, every 50th changed (mutated text)
@@ -1462,7 +1461,7 @@ object SparkEntry {
     "q103_dsir_select" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       val docs = documents(s, d)
-      TrainingData.dsirSelect(docs, docs.where(col("lang") === "en"), 100)
+      TrainingData.dsirSelect(docs, docs.where(col("lang") === "en"), 100).value
     }),
     // corpus-wide boilerplate table: exact top-25 5-grams by total
     // occurrences (ties lexical) with distinct-doc counts — one hash
@@ -1548,14 +1547,12 @@ object SparkEntry {
     // the purge half of q104: every occurrence of the top-25 grams cut
     // from every doc, q102's reassembly contract (one row per doc)
     "q105_boilerplate_cut" -> ((s, d) =>
-      Dedup.boilerplateCut(documents(s, d), 5, 25)),
+      Dedup.boilerplateCut(documents(s, d), 5, 25).value),
     // per-doc memorization-risk triage (Carlini 2022): of each doc's
     // 5-gram positions, how many start a sequence repeating >=2 times
     // corpus-wide, the worst repeat count, and the risky fraction
     "q117_memorization_risk" -> ((s, d) => {
-      val (res, release) = Dedup.memorizationRiskScoped(documents(s, d), 5, 2)
-      val out = res.cache(); out.count(); release()
-      out
+      Dedup.memorizationRisk(documents(s, d), 5, 2).materialize.value
     }),
     // P2 oracle-expressible slice (bdqueimadas_incremental.py:795-824):
     // drifted per-file headers (case/separator/alias variants keyed off

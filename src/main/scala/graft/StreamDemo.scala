@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.Freshness
 import graft.streaming.Freshness.SourceObservation
@@ -13,11 +12,7 @@ import graft.streaming.Freshness.SourceObservation
   * checkpoint recovery surfaces). */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,23 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // session config mirrors Bench's (same cpu env var, same derived
     // shuffle partitions, same extensions) so regression-chasing runs
     // are apples-to-apples with the driver's bench artifact
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // csv column pruning skips token-count validation for unread
-      // fields — readCsvs requires it OFF session-wide for malformed-row
-      // parity (see readCsvs contract); set it here like nanosAsLong so
-      // the invariant holds regardless of call order.
-      .config("spark.sql.csv.parser.columnPruning.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt
+    val spark = graft.core.Session.builder(cpus)
       .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("WSCG", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -112,22 +101,23 @@ object TimeQ {
           stage("gopher+exact")(exactCanon.count())
           // dedupCorpus is partly EAGER (minhash persists + GraphX CC
           // run during construction), so time the call itself too
-          val nd = stage("neardup_construct")(Dedup.dedupCorpus(exactCanon, 0.5))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          stage("neardup_materialize")(nd.count())
-          val withSplit = nd.join(
-            TrainingData.hashSplit(nd.select("doc_id", "text")), Seq("doc_id"))
-          val packed = TrainingData
-            .tokenPack(withSplit.where(col("split") === "train"), 500)
-            .select(col("doc_id"), col("shard"))
-          val res = withSplit.select(col("doc_id"), col("split"),
-              size(split(lower(trim(col("text"))), " ")).as("n_tok"))
-            .join(packed, Seq("doc_id"), "left")
-            .select("doc_id", "split", "n_tok", "shard").orderBy("doc_id")
-          stage("tail_fresh_plan")(res.count())
-          val n = stage("tail_recount")(res.count())
+          val n = stage("neardup_construct")(Dedup.dedupCorpus(exactCanon, 0.5)).use { dd =>
+            val nd = dd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            stage("neardup_materialize")(nd.count())
+            val withSplit = nd.join(
+              TrainingData.hashSplit(nd.select("doc_id", "text")), Seq("doc_id"))
+            val packed = TrainingData
+              .tokenPack(withSplit.where(col("split") === "train"), 500)
+              .select(col("doc_id"), col("shard"))
+            val res = withSplit.select(col("doc_id"), col("split"),
+                size(split(lower(trim(col("text"))), " ")).as("n_tok"))
+              .join(packed, Seq("doc_id"), "left")
+              .select("doc_id", "split", "n_tok", "shard").orderBy("doc_id")
+            stage("tail_fresh_plan")(res.count())
+            try stage("tail_recount")(res.count())
+            finally nd.unpersist(blocking = false)
+          }
           exactCanon.unpersist(blocking = false)
-          nd.unpersist(blocking = false)
           n
         case "q161stages" =>
           // candidate generation vs verify attribution for the
@@ -144,14 +134,12 @@ object TimeQ {
           stage("base")(base.count())
           val cand = graft.operators.Dedup.edPrefixCandidates(base, 4, 3)
           stage("cand_count")(cand.count())
-          // scoped + released: the non-scoped form leaks its internal
-          // edBase persist, and CacheManager then substitutes an
-          // InMemoryTableScan into reps 2-3's "full" plan — the stage
-          // timing would stop measuring the plan it attributes
-          val (fullDf, rel) =
-            graft.operators.Dedup.editDistancePairsScoped(strs, 4)
-          val n = stage("full")(fullDf.count())
-          rel()
+          // released after the count: a leaked edBase persist would let
+          // CacheManager substitute an InMemoryTableScan into reps 2-3's
+          // "full" plan — the stage timing would stop measuring the plan
+          // it attributes
+          val n = graft.operators.Dedup.editDistancePairs(strs, 4)
+            .use(fullDf => stage("full")(fullDf.count()))
           base.unpersist(blocking = false)
           n
         case _ => SparkEntry.queries(name)(spark, sfDir).count()

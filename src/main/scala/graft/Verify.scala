@@ -1,28 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long (Tables.events
-      // reconstructs a second-truncated timestamp).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // csv column pruning skips token-count validation for unread
-      // fields — readCsvs requires it OFF session-wide for malformed-row
-      // parity (see readCsvs contract); set it here like nanosAsLong so
-      // the invariant holds regardless of call order.
-      .config("spark.sql.csv.parser.columnPruning.enabled", "false")
-      // SQL surface: strip_accents / dot_product as SQL functions (q78)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_VERIFY_ONLY=q124_...,q126_... dumps a subset

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scoped
 
 /** Deduplication operators: the reference's first-wins / key-merge dedup
   * (SURVEY.md §2.7) plus the training-data-pipeline near-dup family
@@ -127,8 +128,10 @@ object Dedup {
     * the shingle string (codegen'd, no array set ops, no nested-loop
     * pair join) — pairs with an empty intersection have jaccard 0 and
     * fall out naturally (threshold > 0). Integer counts → one double
-    * division → engine-exact. */
-  def ngramJaccardPairs(docs: DataFrame, maxId: Long, threshold: Double): DataFrame = {
+    * division → engine-exact. The scope releases the persisted
+    * per-doc sizes and per-pair intersections the result reads. */
+  def ngramJaccardPairs(docs: DataFrame, maxId: Long,
+                        threshold: Double): Scoped[DataFrame] = {
     require(threshold > 0, "zero-intersection pairs are never emitted")
     val rows = docs.where(col("doc_id") < maxId && size(tokens(col("text"))) >= 3)
       .select(col("doc_id"), explode(shingles(tokens(col("text")))).as("s"))
@@ -147,14 +150,17 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sizes.count(); inter.count()
     rows.unpersist(blocking = false)
-    inter
+    Scoped(inter
       .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
       .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= threshold)
       .select("a", "b", "inter", "jaccard")
-      .orderBy("a", "b")
+      .orderBy("a", "b")) {
+      sizes.unpersist(blocking = false)
+      inter.unpersist(blocking = false)
+    }
   }
 
   // 22 bands × 3 rows = 66 permutations. The LSH s-curve for (b, r) is
@@ -201,21 +207,19 @@ object Dedup {
     * Persist discipline: the signature table (docs × 66 longs — the one
     * corpus-sized intermediate) is persisted only long enough to
     * materialize the candidate pairs (persist + count), then released
-    * immediately. Candidates stay persisted executor-side for their two
-    * consumers; if an evicted partition must recompute through the
-    * released signatures the result is still correct, just slower.
+    * immediately. Candidates stay persisted executor-side for their
+    * consumers until the returned scope releases them; if an evicted
+    * partition must recompute through the released signatures the
+    * result is still correct, just slower.
     * (NOT `localCheckpoint(eager)`: in Spark 4.1 that materializes by
     * shipping partition blocks through task results, so any candidate
     * set past spark.driver.maxResultSize kills the job — measured at
     * sf10, where an 84-table banding's 12M pairs passed 1 GB and wider
     * bandings did not.) */
-  def minhashCandidatePairs(docs: DataFrame): DataFrame = {
+  def minhashCandidatePairs(docs: DataFrame): Scoped[DataFrame] = {
     val (plan, sigs) = minhashCandidatePlan(docs)
-    val candidates = plan
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candidates.count() // eager: materialize before releasing signatures
-    sigs.unpersist(blocking = false)
-    candidates
+    // eager: materialize before releasing signatures
+    Scoped(plan)(sigs.unpersist(blocking = false)).materialize
   }
 
   /** The unpersisted candidate-pair plan plus the persisted signature
@@ -289,42 +293,42 @@ object Dedup {
     * candidates → exact Jaccard verify on candidate docs only. No
     * cross join at any scale; candidates track the true-pair count
     * (SCALE.md: 1.1×/2.1×/11× of verified at 5 k/50 k/500 k docs). */
-  def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
+  def minhashPairs(docs: DataFrame, threshold: Double): Scoped[DataFrame] = {
     require(threshold > 0, "zero-intersection pairs are never emitted")
     // candidate pairs are consumed three times (id extraction + the two
     // verify joins); minhashCandidatePairs returns them persisted, so
     // the signature pipeline ran exactly once and its persist is
     // already released
-    val candidates = minhashCandidatePairs(docs)
-
-    // Verify on FLAT SHINGLE ROWS, not arrays: per-pair
-    // array_intersect over collected shingle arrays is CodegenFallback
-    // (interpreted per element, and the intersect would run twice per
-    // pair) — measured 2.5× slower than this equi-join form at 500 k
-    // docs, where verify dominates the whole pipeline. Shingle rows of
-    // ONLY the candidate docs (the id-join keeps the re-shingle off the
-    // full corpus), then |∩| = count of (pair, shingle) matches and
-    // sizes come from one group-by — every operator whole-stage
-    // codegen'd. Hashed shingles are the same features the signatures
-    // used; integer counts → one double division, engine-exact.
-    val candIds = candidates
-      .select(explode(array(col("a"), col("b"))).as("doc_id")).distinct()
-    val rows = hashedShingleRows(docs.join(candIds, Seq("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = rows.groupBy("doc_id").agg(count(lit(1)).cast("int").as("n"))
-    val inter = candidates
-      .join(rows.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(rows.select(col("doc_id").as("bid"), col("s").as("s2")),
-        col("b") === col("bid") && col("s") === col("s2"))
-      .groupBy("a", "b").agg(count(lit(1)).cast("int").as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
-      .select(col("a"), col("b"),
-        (col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-      .orderBy("a", "b")
+    minhashCandidatePairs(docs).flatMap { candidates =>
+      // Verify on FLAT SHINGLE ROWS, not arrays: per-pair
+      // array_intersect over collected shingle arrays is CodegenFallback
+      // (interpreted per element, and the intersect would run twice per
+      // pair) — measured 2.5× slower than this equi-join form at 500 k
+      // docs, where verify dominates the whole pipeline. Shingle rows of
+      // ONLY the candidate docs (the id-join keeps the re-shingle off the
+      // full corpus), then |∩| = count of (pair, shingle) matches and
+      // sizes come from one group-by — every operator whole-stage
+      // codegen'd. Hashed shingles are the same features the signatures
+      // used; integer counts → one double division, engine-exact.
+      val candIds = candidates
+        .select(explode(array(col("a"), col("b"))).as("doc_id")).distinct()
+      val rows = hashedShingleRows(docs.join(candIds, Seq("doc_id")))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sizes = rows.groupBy("doc_id").agg(count(lit(1)).cast("int").as("n"))
+      val inter = candidates
+        .join(rows.select(col("doc_id").as("a"), col("s")), Seq("a"))
+        .join(rows.select(col("doc_id").as("bid"), col("s").as("s2")),
+          col("b") === col("bid") && col("s") === col("s2"))
+        .groupBy("a", "b").agg(count(lit(1)).cast("int").as("inter"))
+      Scoped(inter
+        .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
+        .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
+        .select(col("a"), col("b"),
+          (col("inter").cast("double") /
+            (col("na") + col("nb") - col("inter"))).as("jaccard"))
+        .where(col("jaccard") >= threshold)
+        .orderBy("a", "b"))(rows.unpersist(blocking = false))
+    }
   }
 
   /** SimHash near-duplicate candidate pairs via block-combination
@@ -361,13 +365,10 @@ object Dedup {
     * correlate and 20-bit buckets over-fill — measured 31× candidate:
     * verified overhead at 5 k docs; see ScaleReport). */
   def simhashCandidatePairs(docs: DataFrame, maxId: Long, maxHamming: Int,
-                            blockChoose: Int = 3): DataFrame = {
+                            blockChoose: Int = 3): Scoped[DataFrame] = {
     val (plan, sims) = simhashCandidatePlan(docs, maxId, maxHamming, blockChoose)
-    val candidates = plan
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candidates.count() // eager: materialize before releasing fingerprints
-    sims.unpersist(blocking = false)
-    candidates
+    // eager: materialize before releasing fingerprints
+    Scoped(plan)(sims.unpersist(blocking = false)).materialize
   }
 
   /** Unpersisted candidate plan + persisted fingerprint frame, split out
@@ -412,10 +413,9 @@ object Dedup {
   }
 
   def simhashPairs(docs: DataFrame, maxId: Long, maxHamming: Int,
-                   blockChoose: Int = 3): DataFrame =
+                   blockChoose: Int = 3): Scoped[DataFrame] =
     simhashCandidatePairs(docs, maxId, maxHamming, blockChoose)
-      .where(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
+      .map(_.where(col("hamming") <= maxHamming).orderBy("a", "b"))
 
   /** Banded Hamming self-join over ARBITRARY caller-computed `bits`-bit
     * fingerprints (id: long, h: long) — the simhash block machinery
@@ -426,9 +426,10 @@ object Dedup {
     * blockChoose-subset of agreeing blocks lands it in a band bucket.
     * shuffle_hash on the band join (the explode-blinded-broadcast
     * rule); fingerprints persist only through candidate
-    * materialization. Output (a, b, hamming ≤ maxHamming), ordered. */
+    * materialization; the scope releases the persisted pairs. Output
+    * (a, b, hamming ≤ maxHamming), ordered. */
   def hammingPairs(hashes: DataFrame, bits: Int, maxHamming: Int,
-                   blockChoose: Int = 3): DataFrame = {
+                   blockChoose: Int = 3): Scoped[DataFrame] = {
     val sigs = hashes.select(col("id").cast("long").as("id"), col("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = hammingBandRows(sigs, bits, maxHamming, blockChoose)
@@ -439,10 +440,9 @@ object Dedup {
         bit_count(col("x.h").bitwiseXOR(col("y.h"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candidates.count() // eager: materialize before releasing fingerprints
-    sigs.unpersist(blocking = false)
-    candidates.orderBy("a", "b")
+    // eager: materialize before releasing fingerprints
+    Scoped(candidates)(sigs.unpersist(blocking = false)).materialize
+      .map(_.orderBy("a", "b"))
   }
 
   /** Band rows (id, h, [carry...], band, bkey) for the pigeonhole
@@ -490,8 +490,10 @@ object Dedup {
     * GraphX connectedComponents is the scale path: Pregel min-label
     * propagation, O(cluster diameter) supersteps — near-dup clusters
     * are shallow, and the edge set (verified pairs) is tiny next to the
-    * corpus. Docs with no near-dup edge stay their own component. */
-  def nearDupComponents(docs: DataFrame, edges: DataFrame, maxId: Long): DataFrame = {
+    * corpus. Docs with no near-dup edge stay their own component. The
+    * scope releases the graphs GraphX leaves cached. */
+  def nearDupComponents(docs: DataFrame, edges: DataFrame,
+                        maxId: Long): Scoped[DataFrame] = {
     val spark = docs.sparkSession
     import spark.implicits._
     // persist the edge RDD: `isEmpty` and the graph build are two
@@ -506,31 +508,41 @@ object Dedup {
     val comp =
       if (raw.isEmpty()) {
         raw.unpersist(blocking = false)
-        Seq.empty[(Long, Long)].toDF("doc_id", "component")
+        Scoped.pure(Seq.empty[(Long, Long)].toDF("doc_id", "component"))
       } else {
-        val v = org.apache.spark.graphx.Graph.fromEdgeTuples(raw, 1)
-          .connectedComponents().vertices
+        val components = connectedComponents(raw)
         raw.unpersist(blocking = false)
-        v.map { case (id, c) => (id: Long, c: Long) }
-          .toDF("doc_id", "component")
+        components.map(_.toDF("doc_id", "component"))
       }
-    docs.where(col("doc_id") < maxId).select("doc_id")
-      .join(comp, Seq("doc_id"), "left")
+    comp.map(c => docs.where(col("doc_id") < maxId).select("doc_id")
+      .join(c, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("component"))
-      .orderBy("doc_id")
+      .orderBy("doc_id"))
+  }
+
+  /** GraphX connected components of an edge list: (vertex, min vertex
+    * id of its component) rows. The scope releases the input and result
+    * graphs GraphX leaves cached. */
+  private[graft] def connectedComponents(
+      edges: org.apache.spark.rdd.RDD[(Long, Long)]): Scoped[org.apache.spark.rdd.RDD[(Long, Long)]] = {
+    val g = org.apache.spark.graphx.Graph.fromEdgeTuples(edges, 1)
+    val cc = g.connectedComponents()
+    Scoped(cc.vertices.map { case (id, c) => (id: Long, c: Long) }) {
+      cc.unpersist(blocking = false)
+      g.unpersist(blocking = false)
+    }
   }
 
   /** End-to-end corpus dedup — the one-call 100 TB path: MinHash-LSH
     * candidate pairs (banded, no cross join) → exact-Jaccard verify →
     * connected-components closure → keep the minimum doc_id of every
     * near-dup cluster. Returns the surviving rows of `docs`. */
-  def dedupCorpus(docs: DataFrame, threshold: Double): DataFrame = {
-    val edges = minhashPairs(docs, threshold).select("a", "b")
-    val comps = nearDupComponents(docs, edges, Long.MaxValue)
-    docs.join(comps.where(col("doc_id") === col("component")).select("doc_id"),
-      Seq("doc_id"))
-  }
+  def dedupCorpus(docs: DataFrame, threshold: Double): Scoped[DataFrame] =
+    minhashPairs(docs, threshold)
+      .flatMap(pairs => nearDupComponents(docs, pairs.select("a", "b"), Long.MaxValue))
+      .map(comps => docs.join(
+        comps.where(col("doc_id") === col("component")).select("doc_id"), Seq("doc_id")))
 
   /** Persist the corpus MinHash sketch to parquet — the signature-store
     * half of INCREMENTAL dedup (`dedupIncremental`): a 100 TB pipeline
@@ -564,17 +576,18 @@ object Dedup {
     * candidates are distinct pairs (tiny next to either side); the
     * 66-slot comparison is a projection over candidate rows. The batch
     * sketch is persisted only until the drop set materializes (the
-    * minhashCandidatePairs discipline). Contract: doc_ids are globally
-    * unique across store and batch. */
+    * minhashCandidatePairs discipline); the scope releases the persisted
+    * drop set. Contract: doc_ids are globally unique across store and
+    * batch. */
   def dedupIncremental(newDocs: DataFrame, storeSigs: DataFrame,
-                       threshold: Double): DataFrame = {
+                       threshold: Double): Scoped[DataFrame] = {
     val newSigs = minhashSignatures(newDocs, pinned = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     newSigs.count()
     val drops = sketchDrops(newSigs, storeSigs, threshold)
     drops.count() // materialize, then release the batch sketch
     newSigs.unpersist(blocking = false)
-    newDocs.join(drops, Seq("doc_id"), "left_anti")
+    Scoped(newDocs.join(drops, Seq("doc_id"), "left_anti"))(drops.unpersist(blocking = false))
   }
 
   /** The drop set of `dedupIncremental` computed directly on signature
@@ -625,23 +638,14 @@ object Dedup {
     * `shuffle_hash` equi-join that only moves matching (band, bkey)
     * keys, distinct candidates, then the 66-slot agreement as a
     * per-candidate projection. No cross join at any scale; candidate
-    * volume tracks the true cross-dup count like `minhashPairs`'. */
-  def crossNearDups(a: DataFrame, b: DataFrame, threshold: Double): DataFrame = {
-    val (res, release) = crossNearDupsScoped(a, b, threshold)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
-  }
-
-  /** `crossNearDups` with the signature frames' lifetime scoped to the
-    * caller: each corpus's 66-minhash aggregation feeds BOTH the band
-    * candidate join and the slot-agreement join, so the signatures are
-    * persisted (the round-1 shared-subplan rule — Spark re-executes an
-    * unpersisted subplan per consumer) and the release hook drops them
-    * once the result is materialized. */
-  def crossNearDupsScoped(a: DataFrame, b: DataFrame,
-                          threshold: Double): (DataFrame, () => Unit) = {
+    * volume tracks the true cross-dup count like `minhashPairs`'.
+    *
+    * Each corpus's 66-minhash aggregation feeds BOTH the band candidate
+    * join and the slot-agreement join, so the signatures are persisted
+    * (the round-1 shared-subplan rule — Spark re-executes an
+    * unpersisted subplan per consumer); the scope releases them. */
+  def crossNearDups(a: DataFrame, b: DataFrame,
+                    threshold: Double): Scoped[DataFrame] = {
     val sa = minhashSignatures(a, pinned = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sb = minhashSignatures(b, pinned = true)
@@ -660,7 +664,7 @@ object Dedup {
         expr(s"(agree * 1000000) div $NumPerms").as("est_ppm"))
       .where(col("est_ppm") >= math.round(threshold * 1000000))
       .orderBy("a_id", "b_id")
-    (res, () => { sa.unpersist(blocking = false); sb.unpersist(blocking = false) })
+    Scoped(res) { sa.unpersist(blocking = false); sb.unpersist(blocking = false) }
   }
 
   /** Dedup with QUALITY-AWARE canonical selection: near-dup components
@@ -677,18 +681,19 @@ object Dedup {
     * as an equality — no second join, no argmax subquery. Components
     * are near-dup clusters (tiny — bounded by the verified pair graph),
     * so the window partitions stay small at any corpus size. */
-  def dedupKeepBest(docs: DataFrame, maxId: Long, threshold: Double): DataFrame = {
-    val edges = ngramJaccardPairs(docs, maxId, threshold).select("a", "b")
-    val comp = nearDupComponents(docs, edges, maxId)
+  def dedupKeepBest(docs: DataFrame, maxId: Long,
+                    threshold: Double): Scoped[DataFrame] = {
     val quality = docs.where(col("doc_id") < maxId)
       .select(col("doc_id"), size(split(lower(trim(col("text"))), " ")).as("n_tok"))
     val w = Window.partitionBy("component")
       .orderBy(col("n_tok").desc, col("doc_id").asc)
-    comp.join(quality, Seq("doc_id"))
-      .withColumn("canonical", first(col("doc_id")).over(w))
-      .select(col("doc_id"), col("component"), col("n_tok"), col("canonical"),
-        (col("doc_id") === col("canonical")).as("keep"))
-      .orderBy("doc_id")
+    ngramJaccardPairs(docs, maxId, threshold)
+      .flatMap(pairs => nearDupComponents(docs, pairs.select("a", "b"), maxId))
+      .map(_.join(quality, Seq("doc_id"))
+        .withColumn("canonical", first(col("doc_id")).over(w))
+        .select(col("doc_id"), col("component"), col("n_tok"), col("canonical"),
+          (col("doc_id") === col("canonical")).as("keep"))
+        .orderBy("doc_id"))
   }
 
   /** 60-bit SimHash per document over distinct 3-gram SHINGLE features
@@ -751,9 +756,30 @@ object Dedup {
     * with the agg, AQE splits skewed boilerplate grams) → per-doc
     * windows run over MATCHING positions only (the duplicated subset,
     * tiny next to the corpus). Nothing materializes per-doc arrays and
-    * no stage sees the corpus in one partition. */
-  def exactSubstrSpans(docs: DataFrame, k: Int = 5): DataFrame =
-    exactSubstrSpansScoped(docs, k)._1
+    * no stage sees the corpus in one partition. The scope releases the
+    * persisted gram frame (consumed by the df agg and the join-back). */
+  def exactSubstrSpans(docs: DataFrame, k: Int = 5): Scoped[DataFrame] = {
+    val grams = gramRows(tokenRows(docs), k)
+    val hits = coveredStarts(grams)
+    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
+    // gaps-and-islands over fixed-length intervals: a start opens a new
+    // span iff it lies past the running max end + 1 (adjacent coverage
+    // merges); island id = running count of opens
+    val prevEnd = max(col("pos") + lit(k - 1))
+      .over(wDoc.rowsBetween(Window.unboundedPreceding, -1))
+    val res = hits
+      .withColumn("opens",
+        when(col("pos") > coalesce(prevEnd, lit(-1)) + 1, 1).otherwise(0))
+      .withColumn("island", sum(col("opens")).over(
+        wDoc.rowsBetween(Window.unboundedPreceding, 0)))
+      .groupBy(col("doc_id"), col("island"))
+      .agg(min(col("pos")).as("span_start"),
+        (max(col("pos")) + lit(k) - min(col("pos"))).as("span_len"),
+        count(lit(1)).cast("int").as("n_grams"))
+      .select("doc_id", "span_start", "span_len", "n_grams")
+      .orderBy("doc_id", "span_start")
+    Scoped(res)(grams.unpersist(blocking = false))
+  }
 
   /** Token rows (doc_id, pos, w), 0-based. */
   private def tokenRows(docs: DataFrame): DataFrame =
@@ -792,32 +818,6 @@ object Dedup {
     grams.join(dupGrams.hint("shuffle_hash"), Seq("sh")).select("doc_id", "pos")
   }
 
-  /** `exactSubstrSpans` plus the release hook for its persisted gram
-    * frame (consumed by the df agg and the join-back — the
-    * `dupNgramFractionScoped` discipline). */
-  def exactSubstrSpansScoped(docs: DataFrame, k: Int = 5): (DataFrame, () => Unit) = {
-    val grams = gramRows(tokenRows(docs), k)
-    val hits = coveredStarts(grams)
-    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
-    // gaps-and-islands over fixed-length intervals: a start opens a new
-    // span iff it lies past the running max end + 1 (adjacent coverage
-    // merges); island id = running count of opens
-    val prevEnd = max(col("pos") + lit(k - 1))
-      .over(wDoc.rowsBetween(Window.unboundedPreceding, -1))
-    val res = hits
-      .withColumn("opens",
-        when(col("pos") > coalesce(prevEnd, lit(-1)) + 1, 1).otherwise(0))
-      .withColumn("island", sum(col("opens")).over(
-        wDoc.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("doc_id"), col("island"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(k) - min(col("pos"))).as("span_len"),
-        count(lit(1)).cast("int").as("n_grams"))
-      .select("doc_id", "span_start", "span_len", "n_grams")
-      .orderBy("doc_id", "span_start")
-    (res, () => grams.unpersist(blocking = false))
-  }
-
   /** The consumer-facing half of EXACTSUBSTR: the corpus with every
     * duplicated span CUT OUT — kept tokens reassembled in position
     * order, plus the (n_tok, n_cut) accounting. Every input doc emits
@@ -832,14 +832,11 @@ object Dedup {
     * (pos, w) structs — per-doc arrays are bounded by document length,
     * the urlKeyMerge cold-path contract; the corpus never concentrates
     * in one partition because the group key is doc_id). */
-  def exactSubstrCut(docs: DataFrame, k: Int = 5): DataFrame =
-    exactSubstrCutScoped(docs, k)._1
-
-  def exactSubstrCutScoped(docs: DataFrame, k: Int = 5): (DataFrame, () => Unit) = {
+  def exactSubstrCut(docs: DataFrame, k: Int = 5): Scoped[DataFrame] = {
     val tok = tokenRows(docs)
     val grams = gramRows(tok, k)
-    val res = cutDocs(tok, coverage(coveredStarts(grams), k))
-    (res, () => grams.unpersist(blocking = false))
+    Scoped(cutDocs(tok, coverage(coveredStarts(grams), k)))(
+      grams.unpersist(blocking = false))
   }
 
   /** Positions covered by the union of [pos, pos+k−1] over gram
@@ -1132,11 +1129,8 @@ object Dedup {
     *
     * The heavy-hitter list is topN rows → broadcast to the join-back;
     * coverage/reassembly reuse the EXACTSUBSTR cut machinery. */
-  def boilerplateCut(docs: DataFrame, k: Int = 5, topN: Int = 50): DataFrame =
-    boilerplateCutScoped(docs, k, topN)._1
-
-  def boilerplateCutScoped(docs: DataFrame, k: Int = 5,
-                           topN: Int = 50): (DataFrame, () => Unit) = {
+  def boilerplateCut(docs: DataFrame, k: Int = 5,
+                     topN: Int = 50): Scoped[DataFrame] = {
     val tok = tokenRows(docs)
     val grams = gramRows(tok, k)
     val hh = grams.groupBy("sh").agg(count(lit(1)).as("n_occ"))
@@ -1144,8 +1138,7 @@ object Dedup {
       .limit(topN)
       .select("sh")
     val starts = grams.join(broadcast(hh), Seq("sh")).select("doc_id", "pos")
-    val res = cutDocs(tok, coverage(starts, k))
-    (res, () => grams.unpersist(blocking = false))
+    Scoped(cutDocs(tok, coverage(starts, k)))(grams.unpersist(blocking = false))
   }
 
   /** Per-document memorization-risk audit (Carlini et al., "Quantifying
@@ -1162,11 +1155,7 @@ object Dedup {
     * join shuffles both sides on the gram key — linear, never
     * quadratic — and the final per-doc agg is one hash agg. */
   def memorizationRisk(docs: DataFrame, k: Int = 5,
-                       minFreq: Int = 2): DataFrame =
-    memorizationRiskScoped(docs, k, minFreq)._1
-
-  def memorizationRiskScoped(docs: DataFrame, k: Int = 5,
-                             minFreq: Int = 2): (DataFrame, () => Unit) = {
+                       minFreq: Int = 2): Scoped[DataFrame] = {
     val grams = gramRows(tokenRows(docs), k) // persisted: freq agg + join-back
     val freq = grams.groupBy("sh").agg(count(lit(1)).as("n_occ"))
     val perDoc = grams.join(freq, Seq("sh"))
@@ -1183,7 +1172,7 @@ object Dedup {
           .otherwise(col("n_risky").cast("double") / col("n_grams"))
           .as("risk_frac"))
       .orderBy("doc_id")
-    (res, () => grams.unpersist(blocking = false))
+    Scoped(res)(grams.unpersist(blocking = false))
   }
 
   /** Edit-distance similarity join: ALL pairs of strings within
@@ -1217,11 +1206,8 @@ object Dedup {
     *
     * Input contract: (id: long, s: string); null strings drop. Output
     * (id_a < id_b, dist), deterministic order. */
-  def editDistancePairs(strs: DataFrame, maxDist: Int, q: Int = 3): DataFrame =
-    editDistancePairsScoped(strs, maxDist, q)._1
-
-  def editDistancePairsScoped(strs: DataFrame, maxDist: Int,
-                              q: Int = 3): (DataFrame, () => Unit) = {
+  def editDistancePairs(strs: DataFrame, maxDist: Int,
+                        q: Int = 3): Scoped[DataFrame] = {
     require(maxDist >= 0, "maxDist must be >= 0")
     require(q >= 2, "q-gram length must be >= 2")
     val base = edBase(strs)
@@ -1229,7 +1215,7 @@ object Dedup {
     val res = edVerify(base,
       edPrefixCandidates(base, maxDist, q)
         .unionByName(edShortBandPairs(base, shortCut, maxDist)), maxDist)
-    (res, () => base.unpersist(blocking = false))
+    Scoped(res)(base.unpersist(blocking = false))
   }
 
   /** Long-involved candidate pairs of the prefix-filter family —
@@ -1290,11 +1276,7 @@ object Dedup {
     * back to the length-band join; a long↔below-band pair is
     * impossible (Δlen alone exceeds d). */
   def editDistancePairsSeg(strs: DataFrame, maxDist: Int,
-                           minSeg: Int = 3): DataFrame =
-    editDistancePairsSegScoped(strs, maxDist, minSeg)._1
-
-  def editDistancePairsSegScoped(strs: DataFrame, maxDist: Int,
-                                 minSeg: Int = 3): (DataFrame, () => Unit) = {
+                           minSeg: Int = 3): Scoped[DataFrame] = {
     require(maxDist >= 0, "maxDist must be >= 0")
     require(minSeg >= 1, "minSeg must be >= 1")
     val base = edBase(strs)
@@ -1302,7 +1284,7 @@ object Dedup {
       edSegCandidates(base, maxDist, minSeg)
         .unionByName(edShortBandPairs(base, minSeg * (maxDist + 1), maxDist)),
       maxDist)
-    (res, () => base.unpersist(blocking = false))
+    Scoped(res)(base.unpersist(blocking = false))
   }
 
   /** Segment-blocked (PassJoin) candidate pairs — see
@@ -1450,11 +1432,15 @@ object Dedup {
     * keys.
     *
     * Input contract: (id: long, s: string) on both sides; null keys
-    * drop. Output (store_id, batch_id, dist), deterministic order. */
+    * drop. Output (store_id, batch_id, dist), deterministic order. The
+    * scope releases both persisted key frames. */
   def edStorePairs(batch: DataFrame, store: DataFrame, maxDist: Int,
-                   minSeg: Int = 3): DataFrame =
-    edStorePairsIndexed(edBase(batch), edBase(store), maxDist, minSeg,
-      alreadySegged = None)
+                   minSeg: Int = 3): Scoped[DataFrame] = {
+    val (bb, sb) = (edBase(batch), edBase(store))
+    Scoped(edStorePairsIndexed(bb, sb, maxDist, minSeg, alreadySegged = None)) {
+      bb.unpersist(blocking = false); sb.unpersist(blocking = false)
+    }
+  }
 
   /** `edStorePairs` with the store's segment rows supplied by the
     * caller (the persisted `segs/` side of a fuzzy-key store) instead
@@ -1571,15 +1557,18 @@ object Dedup {
     * analog. Null keys drop from the key frame here (the streaming
     * gate keeps their DOCS — a null key matches nothing).
     *
-    * Output: kept (id, s), deterministic order. The streaming runtime
-    * over a persisted segment store is `streaming.IngestFuzzy`. */
+    * Output: kept (id, s), deterministic order; the scope releases both
+    * persisted key frames. The streaming runtime over a persisted
+    * segment store is `streaming.IngestFuzzy`. */
   def fuzzyKeyGate(batch: DataFrame, store: DataFrame, maxDist: Int,
-                   minSeg: Int = 3): DataFrame = {
+                   minSeg: Int = 3): Scoped[DataFrame] = {
     require(maxDist >= 0, "maxDist must be >= 0")
     require(minSeg >= 1, "minSeg must be >= 1")
     val bb = edBase(batch)
     val sb = edBase(store)
-    fuzzyKeyKept(bb, sb, maxDist, minSeg, storeSegs = None).orderBy("id")
+    Scoped(fuzzyKeyKept(bb, sb, maxDist, minSeg, storeSegs = None).orderBy("id")) {
+      bb.unpersist(blocking = false); sb.unpersist(blocking = false)
+    }
   }
 
   /** `fuzzyKeyGate` over pre-built bases, with the store's segment

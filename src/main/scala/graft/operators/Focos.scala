@@ -70,9 +70,12 @@ object Focos {
     * (dropna per set, bdqueimadas_incremental.py:403-471): a row whose
     * state is null contributes to the sets that do not group by state,
     * and is absent from those that do. Columns in `by` (e.g. an archive
-    * key) prefix the inner GROUP BY, every grouping set and the ordering, so one pass
+    * key) prefix the inner GROUP BY and every grouping set, so one pass
     * yields the 8 aggregates of each `by` group side by side; with no
-    * `by` columns the query is the plain 8-set pass. */
+    * `by` columns the query is the plain 8-set pass. Rows come back
+    * unordered: a global sort would cost every consumer (the
+    * incremental store's partial write) a range-sampling job and a
+    * sort stage, and none reads the rows in order. */
   def groupingSetCounts(subset: DataFrame, by: Seq[String] = Nil): DataFrame = {
     val spark = subset.sparkSession
     val v = "focos_" + java.util.UUID.randomUUID.toString.replace("-", "")
@@ -94,8 +97,6 @@ object Focos {
         (period_month, year, state), (period_month, year, state, biome))
       HAVING (GROUPING(state) = 1 OR state IS NOT NULL)
          AND (GROUPING(biome) = 1 OR biome IS NOT NULL)
-      ORDER BY ${pre}g_period, g_state, g_biome, year,
-               coalesce(period_month, ''), coalesce(state, ''), coalesce(biome, '')
     """)
     spark.catalog.dropTempView(v)
     out

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.core.Cols._
+import graft.core.Scoped
 
 /** Join operators (SURVEY.md §2.3).
   *
@@ -47,8 +48,9 @@ object Joins {
 
   /** Anti-join + union period overlay (J6, bdqueimadas_overview.py:1368-1429):
     * authoritative patch rows replace base rows for their months. The max
-    * month is joined in via a broadcast scalar frame — no driver collect. */
-  def antiOverlay(lineitem: DataFrame, orders: DataFrame): DataFrame = {
+    * month is joined in via a broadcast scalar frame — no driver collect.
+    * The scope releases the persisted patch frame. */
+  def antiOverlay(lineitem: DataFrame, orders: DataFrame): Scoped[DataFrame] = {
     val base = lineitem.groupBy(period(col("l_shipdate")).as("m"))
       .agg(count(lit(1)).as("cnt")).withColumn("src", lit("base"))
     // max month via a window over the aggregated series (single subtree,
@@ -62,9 +64,9 @@ object Joins {
       .where(col("m") === col("max_m"))
       .select(col("m"), col("cnt")).withColumn("src", lit("patch"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.join(patch, Seq("m"), "left_anti")
+    Scoped(base.join(patch, Seq("m"), "left_anti")
       .unionByName(patch)
-      .orderBy("m")
+      .orderBy("m"))(patch.unpersist(blocking = false))
   }
 
   /** Incremental manifest merge (J7, cli.py:324-362): retain existing items

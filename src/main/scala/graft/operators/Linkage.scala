@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scoped
 
 /** Probabilistic record linkage — Fellegi & Sunter 1969 (JASA 64),
   * the classical framework every entity-resolution pipeline still
@@ -305,27 +306,23 @@ object Linkage {
     * caller-supplied weights (clerical weights stay available through
     * `linkScores` as the override path). The posterior table is
     * 2^#fields rows, broadcast onto one pass over the pairs. Output
-    * (id_a, id_b, post_ppm ≥ threshold), deterministic order. */
-  def emPosteriors(a: DataFrame, b: DataFrame, rules: Seq[FieldRule],
-                   thresholdPpm: Long, iters: Int = 15,
-                   salt: Int = 1): DataFrame =
-    emPosteriorsScoped(a, b, rules, thresholdPpm, iters, salt)._1
-
-  /** `emPosteriors` with an explicit release hook for the returned
-    * persisted frame (the `multiClassifierScoped` contract). The
-    * blocked-pair join is the expensive stage and feeds BOTH the fit's
-    * histogram and the posterior join — it is persisted once (the
+    * (id_a, id_b, post_ppm ≥ threshold), deterministic order.
+    *
+    * The blocked-pair join is the expensive stage and feeds BOTH the
+    * fit's histogram and the posterior join — it is persisted once (the
     * round-1 shared-subplan rule: Spark re-executes shared subplans),
     * the result is materialized from that cache, and the agreements
     * cache is released before returning, so the join runs exactly once
-    * however many actions the caller issues. */
-  def emPosteriorsScoped(a: DataFrame, b: DataFrame, rules: Seq[FieldRule],
-                         thresholdPpm: Long, iters: Int = 15,
-                         salt: Int = 1): (DataFrame, () => Unit) = {
+    * however many actions the caller issues. The scope owns the
+    * materialized result. */
+  def emPosteriors(a: DataFrame, b: DataFrame, rules: Seq[FieldRule],
+                   thresholdPpm: Long, iters: Int = 15,
+                   salt: Int = 1): Scoped[DataFrame] = {
     val fields = rules.map(_.field)
     val ag = fieldAgreements(a, b, rules, salt)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // the map releases the agreements if the fit throws
+    Scoped(ag)(ag.unpersist(blocking = false)).map { ag =>
       val prm = emFitParams(ag, fields, iters) // fills the ag cache
       val spark = a.sparkSession
       val schema = org.apache.spark.sql.types.StructType(
@@ -336,14 +333,11 @@ object Linkage {
       val pat = spark.createDataFrame(
         spark.sparkContext.parallelize(prm.patterns.map { case (g, _, w) =>
           org.apache.spark.sql.Row.fromSeq(g :+ w) }, 1), schema)
-      val res = ag.join(broadcast(pat), fields.map(f => s"agree_$f"))
+      ag.join(broadcast(pat), fields.map(f => s"agree_$f"))
         .where(col("post_ppm") >= thresholdPpm)
         .select(col("id_a"), col("id_b"), col("post_ppm"))
         .orderBy("id_a", "id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      res.count()
-      (res, () => res.unpersist(blocking = false))
-    } finally ag.unpersist(blocking = false)
+    }.materialize
   }
 
   /** Integer log-likelihood-ratio weights from fitted parameters —
@@ -478,9 +472,10 @@ object Linkage {
     * CC on VERIFIED links only — the q72 discipline: the closure runs
     * on the thresholded match set, never on blocking candidates.
     * Input: both record frames (ids) + `linkScores` output; output
-    * (id, entity), deterministic order. */
+    * (id, entity), deterministic order. The scope releases the graphs
+    * GraphX leaves cached. */
   def entityClusters(a: DataFrame, b: DataFrame,
-                     links: DataFrame): DataFrame = {
+                     links: DataFrame): Scoped[DataFrame] = {
     val spark = a.sparkSession
     import spark.implicits._
     val ids = a.select(col("id").cast("long").as("id"))
@@ -489,14 +484,11 @@ object Linkage {
     val raw = links.select(col("id_a").cast("long"), col("id_b").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     val comp =
-      if (raw.isEmpty()) Seq.empty[(Long, Long)].toDF("id", "entity")
-      else org.apache.spark.graphx.Graph.fromEdgeTuples(raw, 1)
-        .connectedComponents().vertices
-        .map { case (id, c) => (id: Long, c: Long) }
-        .toDF("id", "entity")
-    ids.join(comp, Seq("id"), "left")
+      if (raw.isEmpty()) Scoped.pure(Seq.empty[(Long, Long)].toDF("id", "entity"))
+      else Dedup.connectedComponents(raw).map(_.toDF("id", "entity"))
+    comp.map(c => ids.join(c, Seq("id"), "left")
       .select(col("id"), coalesce(col("entity"), col("id")).as("entity"))
-      .orderBy("id")
+      .orderBy("id"))
   }
 
   sealed trait MergeRule { def field: String }

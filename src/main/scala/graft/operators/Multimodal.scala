@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.core.Scoped
 
 /** Media row: opaque binary payload + typed metadata. */
 case class MediaMeta(width: Int, height: Int, durationMs: Long, codec: String)
@@ -177,7 +178,7 @@ object Multimodal {
     * within the radius agrees on some blockChoose-subset), never an
     * all-pairs compare. Output (a, b, hamming), deterministic order. */
   def imageNearDupPairs(ds: Dataset[MediaRow], maxHamming: Int,
-                        blockChoose: Int = 3): DataFrame =
+                        blockChoose: Int = 3): Scoped[DataFrame] =
     Dedup.hammingPairs(
       imageDHashes(ds).select(col("media_id").as("id"), col("dhash").as("h")),
       64, maxHamming, blockChoose)
@@ -185,13 +186,12 @@ object Multimodal {
   /** The closure: every image labeled by its near-dup cluster's
     * smallest media_id (GraphX CC over verified pairs — the q72
     * discipline, components over the THRESHOLDED set only). */
-  def imageDupComponents(ds: Dataset[MediaRow], maxHamming: Int): DataFrame = {
+  def imageDupComponents(ds: Dataset[MediaRow], maxHamming: Int): Scoped[DataFrame] = {
     import ds.sparkSession.implicits._
-    Dedup.nearDupComponents(
-      ds.map(_.media_id).toDF("doc_id"),
-      imageNearDupPairs(ds, maxHamming).select("a", "b"),
-      Long.MaxValue)
-      .withColumnRenamed("doc_id", "media_id")
+    imageNearDupPairs(ds, maxHamming)
+      .flatMap(pairs => Dedup.nearDupComponents(
+        ds.map(_.media_id).toDF("doc_id"), pairs.select("a", "b"), Long.MaxValue))
+      .map(_.withColumnRenamed("doc_id", "media_id"))
   }
 
   /** Deterministic patterned PNG for the dHash oracle: every channel
@@ -390,7 +390,7 @@ object Multimodal {
     * image channel (`Dedup.hammingPairs`, exact recall at the radius),
     * over the energy-envelope fingerprints. */
   def audioNearDupPairs(ds: Dataset[MediaRow], maxHamming: Int,
-                        blockChoose: Int = 3): DataFrame =
+                        blockChoose: Int = 3): Scoped[DataFrame] =
     Dedup.hammingPairs(
       audioAHashes(ds).select(col("media_id").as("id"), col("ahash").as("h")),
       64, maxHamming, blockChoose)
@@ -596,39 +596,42 @@ object Multimodal {
                         blockChoose: Int = 3): DataFrame = {
     val fh = videoDHashes(ds)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fh.count()
-    val k = 4096L
-    // Frame identity is packed as media_id*k + frame_idx and recovered
-    // with pmod/div; a clip with >= k frames or a negative media_id
-    // would silently alias into other clips (pmod is non-negative while
-    // div truncates toward zero), so both fail loudly instead.
-    val bounds = fh.agg(max(col("frame_idx")).as("mf"),
-      min(col("media_id")).as("mi")).collect()
-    if (bounds.nonEmpty && !bounds(0).isNullAt(0)) {
-      val (mf, mi) = (bounds(0).getInt(0), bounds(0).getLong(1))
-      require(mf < k, s"videoNearDupPairs: clip with ${mf + 1} frames " +
-        s"exceeds the $k-frame packing limit; raise k or split clips")
-      require(mi >= 0L, s"videoNearDupPairs: negative media_id $mi " +
-        "breaks pmod/div clip recovery; remap ids to be non-negative")
+    // released on every exit, the packing checks' throws included
+    val (out, schema) = Scoped(fh)(fh.unpersist(blocking = false)).use { fh =>
+      fh.count()
+      val k = 4096L
+      // Frame identity is packed as media_id*k + frame_idx and recovered
+      // with pmod/div; a clip with >= k frames or a negative media_id
+      // would silently alias into other clips (pmod is non-negative while
+      // div truncates toward zero), so both fail loudly instead.
+      val bounds = fh.agg(max(col("frame_idx")).as("mf"),
+        min(col("media_id")).as("mi")).collect()
+      if (bounds.nonEmpty && !bounds(0).isNullAt(0)) {
+        val (mf, mi) = (bounds(0).getInt(0), bounds(0).getLong(1))
+        require(mf < k, s"videoNearDupPairs: clip with ${mf + 1} frames " +
+          s"exceeds the $k-frame packing limit; raise k or split clips")
+        require(mi >= 0L, s"videoNearDupPairs: negative media_id $mi " +
+          "breaks pmod/div clip recovery; remap ids to be non-negative")
+      }
+      val nf = fh.groupBy("media_id").agg(count(lit(1)).as("nf"))
+      val enc = fh.select((col("media_id") * k + col("frame_idx")).as("id"),
+        col("dhash").as("h"))
+      // clip pairs: bounded by the near-dup set
+      Dedup.hammingPairs(enc, 64, maxHamming, blockChoose).use { pairs =>
+        val fp = pairs.where(pmod(col("a"), lit(k)) === pmod(col("b"), lit(k)))
+        val res = fp.select(expr(s"a div $k").as("va"), expr(s"b div $k").as("vb"))
+          .groupBy("va", "vb").agg(count(lit(1)).as("m"))
+          .join(nf.select(col("media_id").as("va"), col("nf").as("na")), Seq("va"))
+          .join(nf.select(col("media_id").as("vb"), col("nf").as("nb")), Seq("vb"))
+          .where(col("m") === col("na") && col("na") === col("nb"))
+          .select(col("va").as("a"), col("vb").as("b"),
+            col("na").cast("int").as("n_frames"))
+          .orderBy("a", "b")
+        (res.collect(), res.schema)
+      }
     }
-    val nf = fh.groupBy("media_id").agg(count(lit(1)).as("nf"))
-    val enc = fh.select((col("media_id") * k + col("frame_idx")).as("id"),
-      col("dhash").as("h"))
-    val fp = Dedup.hammingPairs(enc, 64, maxHamming, blockChoose)
-      .where(pmod(col("a"), lit(k)) === pmod(col("b"), lit(k)))
-    val res = fp.select(expr(s"a div $k").as("va"), expr(s"b div $k").as("vb"))
-      .groupBy("va", "vb").agg(count(lit(1)).as("m"))
-      .join(nf.select(col("media_id").as("va"), col("nf").as("na")), Seq("va"))
-      .join(nf.select(col("media_id").as("vb"), col("nf").as("nb")), Seq("vb"))
-      .where(col("m") === col("na") && col("na") === col("nb"))
-      .select(col("va").as("a"), col("vb").as("b"),
-        col("na").cast("int").as("n_frames"))
-      .orderBy("a", "b")
-    val out = res.collect() // clip pairs: bounded by the near-dup set
-    fh.unpersist(blocking = false)
     val spark = ds.sparkSession
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1),
-      res.schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1), schema)
   }
 
   /** Patterned DIB frame for the video-dHash oracle: every channel

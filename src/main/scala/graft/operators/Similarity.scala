@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scoped
 
 /** Similarity search over an embedding column (`Array[Float]`, 64-dim).
   *
@@ -362,11 +363,8 @@ object Similarity {
     * global sort. Rows-only at the driver gate (seeded KMeans has no
     * DuckDB analog); `SimilaritySpec` pins determinism, the
     * per-cluster cap, and exact expected output size. */
-  def diversitySample(emb: DataFrame, nClusters: Int, perCluster: Int): DataFrame =
-    diversitySampleScoped(emb, nClusters, perCluster)._1
-
-  def diversitySampleScoped(emb: DataFrame, nClusters: Int,
-                            perCluster: Int): (DataFrame, () => Unit) = {
+  def diversitySample(emb: DataFrame, nClusters: Int,
+                      perCluster: Int): Scoped[DataFrame] = {
     val idx = ivfBuild(emb, nClusters)
     val res = idx.assigned
       .withColumn("rk", row_number().over(
@@ -374,7 +372,7 @@ object Similarity {
       .where(col("rk") <= perCluster)
       .select(col("vid").as("vec_id"), col("list_id"), col("rk"))
       .orderBy("vec_id")
-    (res, () => idx.release())
+    Scoped(res)(idx.release())
   }
 
   /** Persist a trained IVF index as two parquet tables (`centroids/`,
@@ -755,35 +753,6 @@ object Similarity {
     } finally index.release()
   }
 
-  /** Corpus-wide k-nearest-neighbor JOIN: every vector's top-`k`
-    * neighbors (self excluded) — the RAG pair-mining / hard-negative /
-    * duplicate-triage primitive, and the generalization of `ivfSearch`
-    * to a corpus-sized query side. IVF-blocked: probe selection is the
-    * `NearestLists` codegen expression (centroid matrix in registers —
-    * no N×nList joined intermediate; see its scaladoc for the
-    * round-7 superlinearity it removed), candidates one equi-join on
-    * list_id, so the pair volume is N·nProbe·targetClusterRows — never
-    * N² — and the list count scales with the corpus (`autoK`) exactly
-    * like SemDeDup's. The default fit keeps the FAISS
-    * flat-coarse-quantizer cost profile (N×nList distance evals);
-    * `sampleFit = true` bounds the fit to a driver sample and leaves
-    * only the codegen assignment pass — the extreme-N build path. At
-    * extreme N pass `targetClusterRows ∝ √N`: measured at sf100 (2 M
-    * vectors, SCALE.md round 8), √N sizing is 8× cheaper to build, no
-    * slower to search, and 10–26× better on fixed-nProbe recall than
-    * the fixed-256 target — recall tracks the scan fraction
-    * nProbe/nList, and corpus-proportional nList drives it to ~0.1 %.
-    * Result is N·k rows and STAYS DISTRIBUTED (nothing collects);
-    * callers release the index via the scoped pair once the result is
-    * consumed or materialized. Approximate by construction (probed
-    * lists only): on clustered embeddings — the regime real encoders
-    * produce — recall@5 ≥ 0.9 (`SimilaritySpec` planted-cluster pin);
-    * on uniform-random vectors it degrades toward the scan fraction
-    * (0.39 measured at 2/8 lists on the random driver testdata, the
-    * q61 caveat), where no list structure exists to exploit. nProbe is
-    * the recall/cost dial: at 20 k semi-structured vectors (78 lists),
-    * nProbe 2 = 0.41 recall@10 in 10.5 s, nProbe 8 = 0.88 in 27.7 s
-    * (SCALE.md round 6) — size it to the corpus's cluster structure. */
   /** The corpus-side candidate fan-out join every kNN-join rung runs
     * (probes ⋈ inverted lists on list_id), parallelism-pinned. Two
     * ways that join loses its width, both measured: (1) the list
@@ -823,20 +792,37 @@ object Similarity {
     }
   }
 
-  def knnJoin(emb: DataFrame, k: Int, nProbe: Int = 2,
-              targetClusterRows: Long = 256,
-              scanFrac: Option[Double] = None,
-              sampleFit: Boolean = false): DataFrame = {
-    val (res, release) =
-      knnJoinScoped(emb, k, nProbe, targetClusterRows, scanFrac = scanFrac,
-        sampleFit = sampleFit)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
-  }
-
-  /** `scanFrac` is the recall-stable dial from the SCALE.md round-6
+  /** Corpus-wide k-nearest-neighbor JOIN: every vector's top-`k`
+    * neighbors (self excluded) — the RAG pair-mining / hard-negative /
+    * duplicate-triage primitive, and the generalization of `ivfSearch`
+    * to a corpus-sized query side. IVF-blocked: probe selection is the
+    * `NearestLists` codegen expression (centroid matrix in registers —
+    * no N×nList joined intermediate; see its scaladoc for the
+    * round-7 superlinearity it removed), candidates one equi-join on
+    * list_id, so the pair volume is N·nProbe·targetClusterRows — never
+    * N² — and the list count scales with the corpus (`autoK`) exactly
+    * like SemDeDup's. The default fit keeps the FAISS
+    * flat-coarse-quantizer cost profile (N×nList distance evals);
+    * `sampleFit = true` bounds the fit to a driver sample and leaves
+    * only the codegen assignment pass — the extreme-N build path. At
+    * extreme N pass `targetClusterRows ∝ √N`: measured at sf100 (2 M
+    * vectors, SCALE.md round 8), √N sizing is 8× cheaper to build, no
+    * slower to search, and 10–26× better on fixed-nProbe recall than
+    * the fixed-256 target — recall tracks the scan fraction
+    * nProbe/nList, and corpus-proportional nList drives it to ~0.1 %.
+    * Result is N·k rows and STAYS DISTRIBUTED (nothing collects);
+    * the returned scope releases the index once the result is consumed
+    * or materialized. Approximate by construction (probed
+    * lists only): on clustered embeddings — the regime real encoders
+    * produce — recall@5 ≥ 0.9 (`SimilaritySpec` planted-cluster pin);
+    * on uniform-random vectors it degrades toward the scan fraction
+    * (0.39 measured at 2/8 lists on the random driver testdata, the
+    * q61 caveat), where no list structure exists to exploit. nProbe is
+    * the recall/cost dial: at 20 k semi-structured vectors (78 lists),
+    * nProbe 2 = 0.41 recall@10 in 10.5 s, nProbe 8 = 0.88 in 27.7 s
+    * (SCALE.md round 6) — size it to the corpus's cluster structure.
+    *
+    * `scanFrac` is the recall-stable dial from the SCALE.md round-6
     * law: when set, nProbe = ⌈nList·scanFrac⌉ so the scanned share of
     * the corpus (and with it recall on weakly-clustered data) stays
     * constant as the list count grows with N — cost then scales
@@ -844,14 +830,14 @@ object Similarity {
     * list, which IS the exact brute-force join (pinned equal in
     * `SimilaritySpec`). Unset, the fixed `nProbe` gives cost-stable
     * scaling and recall rides the corpus's cluster structure. */
-  def knnJoinScoped(emb: DataFrame, k: Int, nProbe: Int = 2,
-                    targetClusterRows: Long = 256,
-                    knownCount: Option[Long] = None,
-                    scanFrac: Option[Double] = None,
-                    sampleFit: Boolean = false): (DataFrame, () => Unit) = {
+  def knnJoin(emb: DataFrame, k: Int, nProbe: Int = 2,
+              targetClusterRows: Long = 256,
+              knownCount: Option[Long] = None,
+              scanFrac: Option[Double] = None,
+              sampleFit: Boolean = false): Scoped[DataFrame] = {
     val nList = autoK(emb, targetClusterRows, knownCount)
     val index = ivfBuild(emb, nList, sampleFit)
-    (knnJoinIndexed(emb, index, k, nProbe, scanFrac), () => index.release())
+    Scoped(knnJoinIndexed(emb, index, k, nProbe, scanFrac))(index.release())
   }
 
   /** `knnJoin` against a caller-owned float index — the build-once /
@@ -907,24 +893,11 @@ object Similarity {
   def knnJoinSq8(emb: DataFrame, k: Int, nProbe: Int = 2,
                  targetClusterRows: Long = 256, refine: Int = 4,
                  scanFrac: Option[Double] = None,
-                 sampleFit: Boolean = false): DataFrame = {
-    val (res, release) =
-      knnJoinSq8Scoped(emb, k, nProbe, targetClusterRows, refine, scanFrac,
-        sampleFit)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
-  }
-
-  def knnJoinSq8Scoped(emb: DataFrame, k: Int, nProbe: Int = 2,
-                       targetClusterRows: Long = 256, refine: Int = 4,
-                       scanFrac: Option[Double] = None,
-                       sampleFit: Boolean = false): (DataFrame, () => Unit) = {
+                 sampleFit: Boolean = false): Scoped[DataFrame] = {
     val nList = autoK(emb, targetClusterRows, None)
     val index = ivfBuildSq8(emb, nList, sampleFit)
-    (knnJoinSq8Indexed(emb, index, k, nProbe, refine, scanFrac),
-      () => index.release())
+    Scoped(knnJoinSq8Indexed(emb, index, k, nProbe, refine, scanFrac))(
+      index.release())
   }
 
   /** `knnJoinSq8` against a caller-owned SQ8 index — the build-once /
@@ -944,7 +917,7 @@ object Similarity {
       .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
       .withColumn("qq", Sq8.encode(col("qe")))
       .withColumn("qn8", sqrt(Sq8.dot(col("qq"), col("qq"))))
-    // same exhaustive-dial shortcut as knnJoinScoped: all lists probed
+    // same exhaustive-dial shortcut as knnJoin: all lists probed
     // ⇒ no per-qid probe-ranking window needed
     val probes =
       if (probes0 >= nList)
@@ -953,7 +926,7 @@ object Similarity {
             col("list_id"))
       else probeTopLists(q, Seq("qid", "qe", "qn", "qq", "qn8"),
         index.centroids, probes0)
-    // same corpus-side fan-out shape as knnJoinScoped: int8 lists dip
+    // same corpus-side fan-out shape as knnJoin: int8 lists dip
     // under the broadcast threshold below ~110 k vectors — keep the
     // ADC work at shuffle parallelism
     val pool = candJoin(probes, index.assigned, nList)
@@ -1029,24 +1002,11 @@ object Similarity {
   def knnJoinBin(emb: DataFrame, k: Int, nProbe: Int = 2,
                  targetClusterRows: Long = 256, refine: Int = 4,
                  scanFrac: Option[Double] = None,
-                 sampleFit: Boolean = false): DataFrame = {
-    val (res, release) =
-      knnJoinBinScoped(emb, k, nProbe, targetClusterRows, refine, scanFrac,
-        sampleFit)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
-  }
-
-  def knnJoinBinScoped(emb: DataFrame, k: Int, nProbe: Int = 2,
-                       targetClusterRows: Long = 256, refine: Int = 4,
-                       scanFrac: Option[Double] = None,
-                       sampleFit: Boolean = false): (DataFrame, () => Unit) = {
+                 sampleFit: Boolean = false): Scoped[DataFrame] = {
     val nList = autoK(emb, targetClusterRows, None)
     val index = ivfBuildBin(emb, nList, sampleFit)
-    (knnJoinBinIndexed(emb, index, k, nProbe, refine, scanFrac),
-      () => index.release())
+    Scoped(knnJoinBinIndexed(emb, index, k, nProbe, refine, scanFrac))(
+      index.release())
   }
 
   def knnJoinBinIndexed(emb: DataFrame, index: IvfIndex, k: Int,
@@ -1108,39 +1068,23 @@ object Similarity {
   def knnJoinPq(emb: DataFrame, k: Int, nProbe: Int = 2,
                 targetClusterRows: Long = 256, m: Int = 16,
                 refine: Int = 4, scanFrac: Option[Double] = None,
-                sampleFit: Boolean = false): DataFrame = {
-    val (res, release) =
-      knnJoinPqScoped(emb, k, nProbe, targetClusterRows, m, refine, scanFrac,
-        sampleFit)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
-  }
-
-  def knnJoinPqScoped(emb: DataFrame, k: Int, nProbe: Int = 2,
-                      targetClusterRows: Long = 256, m: Int = 16,
-                      refine: Int = 4,
-                      scanFrac: Option[Double] = None,
-                      sampleFit: Boolean = false): (DataFrame, () => Unit) = {
+                sampleFit: Boolean = false): Scoped[DataFrame] = {
     val nList = autoK(emb, targetClusterRows, None)
     val index = ivfPqBuild(emb, nList, m, 256, sampleFit)
-    val (res, releasePacked) =
-      knnJoinPqIndexed(emb, index, k, nProbe, refine, scanFrac)
     // the packed lists are materialized eagerly inside Indexed, so the
     // build's array<int> store can drop immediately (the memory story)
-    index.release()
-    (res, releasePacked)
+    try knnJoinPqIndexed(emb, index, k, nProbe, refine, scanFrac)
+    finally index.release()
   }
 
   /** `knnJoinPq` against a caller-owned IVF,PQ index — the build-once
     * / join-repeatedly form (`ivfPqBuild` or an `ivfPqLoad`ed store;
-    * the caller releases the index). The returned hook releases only
+    * the caller releases the index). The returned scope releases only
     * the internally-`PqPack`ed list frame. Join-after-reload equals
     * join-after-build (`SimilaritySpec`). */
   def knnJoinPqIndexed(emb: DataFrame, index: IvfPqIndex, k: Int,
                        nProbe: Int = 2, refine: Int = 4,
-                       scanFrac: Option[Double] = None): (DataFrame, () => Unit) = {
+                       scanFrac: Option[Double] = None): Scoped[DataFrame] = {
     import graft.functions.Pq
     val spark = emb.sparkSession
     import spark.implicits._
@@ -1197,7 +1141,7 @@ object Similarity {
       .where(col("rnk") <= k)
       .select("qid", "rnk", "vid")
       .orderBy("qid", "rnk")
-    (res, () => packed.unpersist(blocking = false))
+    Scoped(res)(packed.unpersist(blocking = false))
   }
 
   /** `knnJoinPq` behind an OPQ rotation — the FAISS `OPQ{m},IVF,PQ{m}`
@@ -1217,29 +1161,13 @@ object Similarity {
                  targetClusterRows: Long = 256, m: Int = 16,
                  refine: Int = 4, iters: Int = 8,
                  scanFrac: Option[Double] = None,
-                 sampleFit: Boolean = false): DataFrame = {
-    val (res, release) =
-      knnJoinOpqScoped(emb, k, nProbe, targetClusterRows, m, refine, iters,
-        scanFrac, sampleFit)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
-  }
-
-  def knnJoinOpqScoped(emb: DataFrame, k: Int, nProbe: Int = 2,
-                       targetClusterRows: Long = 256, m: Int = 16,
-                       refine: Int = 4, iters: Int = 8,
-                       scanFrac: Option[Double] = None,
-                       sampleFit: Boolean = false): (DataFrame, () => Unit) = {
+                 sampleFit: Boolean = false): Scoped[DataFrame] = {
     val nList = autoK(emb, targetClusterRows, None)
     val index = ivfOpqBuild(emb, nList, m, 256, iters, sampleFit)
-    val (res, releasePacked) =
-      knnJoinOpqIndexed(emb, index, k, nProbe, refine, scanFrac)
     // like the PQ rung: the Indexed form packs eagerly, so the build's
     // array<int> codes can drop now (the memory story)
-    index.release()
-    (res, releasePacked)
+    try knnJoinOpqIndexed(emb, index, k, nProbe, refine, scanFrac)
+    finally index.release()
   }
 
   /** A built OPQ,IVF,PQ composite — the caller-owned form behind
@@ -1277,12 +1205,12 @@ object Similarity {
     * probes, `shuffle_hash`-pinned candidate join, float refine —
     * runs unchanged in rotated space; rotation is orthonormal, so the
     * refine cosines are the same quantities as the un-rotated path.
-    * The returned hook releases the internally-packed list frame;
+    * The returned scope releases the internally-packed list frame;
     * the caller releases the index (`ivfOpqBuild` or `ivfOpqLoad`).
     * Join-after-reload equals join-after-build (`OpqSpec`). */
   def knnJoinOpqIndexed(emb: DataFrame, index: IvfOpqIndex, k: Int,
                         nProbe: Int = 2, refine: Int = 4,
-                        scanFrac: Option[Double] = None): (DataFrame, () => Unit) = {
+                        scanFrac: Option[Double] = None): Scoped[DataFrame] = {
     val rotated = emb
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .select(col("vec_id"),
@@ -2805,19 +2733,22 @@ object Similarity {
       .orderBy("vec_id")
 
   /** Embedding-cosine near-duplicate pairs over a bounded id range
-    * (correctness slice; the scale path is `lshNearDupPairs`). */
-  def cosineNearDupPairs(emb: DataFrame, maxId: Long, threshold: Double): DataFrame = {
+    * (correctness slice; the scale path is `lshNearDupPairs`). The
+    * scope releases the persisted normalized vectors both join sides
+    * read. */
+  def cosineNearDupPairs(emb: DataFrame, maxId: Long,
+                         threshold: Double): Scoped[DataFrame] = {
     val base = emb.where(col("vec_id") < maxId)
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = base.select(col("vec_id").as("a"), col("e").as("ea"), col("nrm").as("na"))
     val b = base.select(col("vec_id").as("b"), col("e").as("eb"), col("nrm").as("nb"))
-    a.join(b, col("a") < col("b"))
+    Scoped(a.join(b, col("a") < col("b"))
       .select(col("a"), col("b"),
         (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"))
       .where(col("cos") >= threshold)
       .select("a", "b")
-      .orderBy("a", "b")
+      .orderBy("a", "b"))(base.unpersist(blocking = false))
   }
 }

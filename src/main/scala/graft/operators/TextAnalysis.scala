@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Cols._
+import graft.core.Scoped
 
 /** Text-analysis operators for the training-data pipeline plus the
   * reference's scalar-function surface (SURVEY.md §2.8): normalization,
@@ -162,10 +163,11 @@ object TextAnalysis {
     * containment 1.0 — on a low-diversity corpus that floods noise
     * pairs (374 k at 50 k synthetic docs, measured). Docs with fewer
     * than `minIndexSize` surviving fingerprints are not comparable and
-    * drop out (MOSS likewise requires an absolute match floor). */
+    * drop out (MOSS likewise requires an absolute match floor). The
+    * scope releases the persisted fingerprint rows. */
   def winnowPairs(docs: DataFrame, maxId: Long, k: Int, w: Int,
                   minFrac: Double, maxDocFreq: Int = Int.MaxValue,
-                  minIndexSize: Int = 1): DataFrame = {
+                  minIndexSize: Int = 1): Scoped[DataFrame] = {
     val all = winnowFingerprintRows(docs, maxId, k, w)
       // consumed by the doc-frequency pass + two join sides + sizes —
       // persist so the window pipeline runs once
@@ -178,7 +180,7 @@ object TextAnalysis {
         Seq("fp"), "left_anti")
     val sizes = fps.groupBy("doc_id").agg(count(lit(1)).as("n"))
       .where(col("n") >= minIndexSize)
-    fps.select(col("doc_id").as("a"), col("fp"))
+    Scoped(fps.select(col("doc_id").as("a"), col("fp"))
       .join(fps.select(col("doc_id").as("b"), col("fp")), Seq("fp"))
       .where(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("shared_fp"))
@@ -188,7 +190,7 @@ object TextAnalysis {
         col("shared_fp").cast("double") / least(col("na"), col("nb")))
       .where(col("containment") >= minFrac)
       .select("a", "b", "shared_fp", "containment")
-      .orderBy("a", "b")
+      .orderBy("a", "b"))(all.unpersist(blocking = false))
   }
 
   private val EnWords = Seq("the", "of", "and")

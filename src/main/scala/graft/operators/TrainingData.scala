@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scoped
 
 /** Training-data curation operators — the corpus-preparation layer a
   * large-scale LLM data pipeline runs after ingestion/dedup: dataset
@@ -442,13 +443,12 @@ object TrainingData {
     * no matter how many shingles the eval set holds, and the confirm
     * join shuffles only bloom survivors against the eval shingles.
     * Both sides hash with the same `xxhash64(sh)` the builtin emits, so
-    * build and probe agree by construction. Returns the result plus a
-    * release hook for the persisted eval shingle frame (read by the
-    * sketch build and the lazy confirm join — the
-    * `dupNgramFractionScoped` discipline). */
-  def decontaminateBloomScoped(corpus: DataFrame, eval: DataFrame,
-                               n: Int = 3, minOverlap: Int = 1,
-                               fpp: Double = 0.01): (DataFrame, () => Unit) = {
+    * build and probe agree by construction. The scope releases the
+    * persisted eval shingle frame (read by the sketch build and the
+    * lazy confirm join). */
+  def decontaminateBloom(corpus: DataFrame, eval: DataFrame,
+                         n: Int = 3, minOverlap: Int = 1,
+                         fpp: Double = 0.01): Scoped[DataFrame] = {
     import org.apache.spark.sql.GraftColumnBridge.{column => asCol, expression => asExpr}
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -474,12 +474,8 @@ object TrainingData {
       .agg(countDistinct(col("sh")).as("n_overlap"))
       .where(col("n_overlap") >= minOverlap)
       .orderBy("doc_id")
-    (res, () => evalSh.unpersist(blocking = false))
+    Scoped(res)(evalSh.unpersist(blocking = false))
   }
-
-  def decontaminateBloom(corpus: DataFrame, eval: DataFrame, n: Int = 3,
-                         minOverlap: Int = 1, fpp: Double = 0.01): DataFrame =
-    decontaminateBloomScoped(corpus, eval, n, minOverlap, fpp)._1
 
   /** Gopher document-quality rules (Rae et al. 2021, "Scaling Language
     * Models" §A1.1): per-document word-level metrics and the composite
@@ -571,23 +567,19 @@ object TrainingData {
     * per-doc arrays. The doc-frequency frame is corpus-vocabulary
     * sized; at 100 TB both sides of the shingle join shuffle on the
     * same key, so AQE plans a co-partitioned sort-merge with no
-    * replication. */
-  def dupNgramFraction(docs: DataFrame, n: Int = 3, threshold: Double = 0.6): DataFrame =
-    dupNgramFractionScoped(docs, n, threshold)._1
-
-  /** `dupNgramFraction` plus the release hook for its persisted
-    * (doc, shingle)-count frame. The result frame is corpus-sized, so
-    * it can't be driver-localized the way `tfidfTopK`'s bounded top-k
-    * can; long-lived callers should consume the frame, then call
-    * `release()` — the frame stays CORRECT afterwards (the plan
-    * re-derives the shingle counts; only the cache entry is dropped).
-    * The join-back shape (doc-frequency agg + equi-join, not a count
-    * window over `sh`) is deliberate: a boilerplate shingle present in
+    * replication.
+    *
+    * The scope releases the persisted (doc, shingle)-count frame. The
+    * result frame is corpus-sized, so it can't be driver-localized the
+    * way `tfidfTopK`'s bounded top-k can; the frame stays CORRECT after
+    * release (the plan re-derives the shingle counts; only the cache
+    * entry is dropped). The join-back shape (doc-frequency agg +
+    * equi-join, not a count window over `sh`) is deliberate: a boilerplate shingle present in
     * most docs would put the whole corpus in one window partition,
     * while the join form pre-reduces with map-side combine and lets
     * AQE split the skewed probe side. */
-  def dupNgramFractionScoped(docs: DataFrame, n: Int = 3,
-                             threshold: Double = 0.6): (DataFrame, () => Unit) = {
+  def dupNgramFraction(docs: DataFrame, n: Int = 3,
+                       threshold: Double = 0.6): Scoped[DataFrame] = {
     // consumed twice (doc-frequency agg + the join-back): persist and
     // materialize so the shingle explode/window pipeline runs ONCE —
     // Spark re-executes shared subplans otherwise (the minhash
@@ -606,7 +598,7 @@ object TrainingData {
         (col("n_shared") / col("n_shingles")).as("shared_frac"))
       .withColumn("keep", col("shared_frac") < threshold)
       .orderBy("doc_id")
-    (res, () => perDocSh.unpersist(blocking = false))
+    Scoped(res)(perDocSh.unpersist(blocking = false))
   }
 
   /** N-gram language-model quality scoring (Wenzek et al. 2020, CCNet
@@ -632,13 +624,9 @@ object TrainingData {
     * co-partitioned on the bigram key; V and the unigram context
     * counts ride along as one broadcast row + a model-sized frame.
     * Scoring the training corpus itself re-derives the doc-bigram
-    * frame once per side — callers fusing both (the driver query)
-    * get the shared-subplan persist via the Scoped form. */
-  def lmQualityScore(docs: DataFrame, train: DataFrame): DataFrame =
-    lmQualityScoreScoped(docs, train)._1
-
-  def lmQualityScoreScoped(docs: DataFrame,
-                           train: DataFrame): (DataFrame, () => Unit) = {
+    * frame once per side; the training side is persisted (the shared
+    * subplan of model, contexts and vocab) and the scope releases it. */
+  def lmQualityScore(docs: DataFrame, train: DataFrame): Scoped[DataFrame] = {
     def docBigrams(df: DataFrame): DataFrame = {
       // the lead-window needs a doc_id exchange anyway — take it on the
       // RAW docs (fewer bytes than the exploded token rows, §2.3
@@ -673,7 +661,7 @@ object TrainingData {
       .select(col("doc_id"), col("n_bigrams"),
         (col("sum_ppm") / (col("n_bigrams") * lit(1000000L))).as("score"))
       .orderBy("doc_id")
-    (res, () => trainB.unpersist(blocking = false))
+    Scoped(res)(trainB.unpersist(blocking = false))
   }
 
   /** One-call end-to-end curation — the curation counterpart of
@@ -691,28 +679,12 @@ object TrainingData {
     * exact dedup and the split — the order real pipelines use: the
     * cheap hash agg halves the corpus before signatures are computed.
     * `TrainingDataSpec` pins the nearDup keep-set against composing
-    * `Dedup.dedupCorpus` by hand. */
+    * `Dedup.dedupCorpus` by hand. The exact-only path persists nothing;
+    * with `nearDup` the scope releases every persist of the near-dup
+    * stage. */
   def curateCorpus(docs: DataFrame, budget: Long,
                    minWords: Long = 30, nearDup: Boolean = false,
-                   nearDupThreshold: Double = 0.5): DataFrame = {
-    val (res, release) =
-      curateCorpusScoped(docs, budget, minWords, nearDup, nearDupThreshold)
-    if (!nearDup) res // nothing persisted on the exact-only path
-    else {
-      // non-scoped + nearDup: materialize, then release the internal
-      // persists (canon + exactCanon) so they never outlive the call —
-      // the round-6 leaked-cache hazard; the result frame itself stays
-      // persisted and caller-owned (the crossNearDups precedent)
-      val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      release()
-      out
-    }
-  }
-
-  def curateCorpusScoped(docs: DataFrame, budget: Long,
-                         minWords: Long = 30, nearDup: Boolean = false,
-                         nearDupThreshold: Double = 0.5): (DataFrame, () => Unit) = {
+                   nearDupThreshold: Double = 0.5): Scoped[DataFrame] = {
     val kept = gopherQuality(docs, minWords = minWords)
       .where(col("keep")).select("doc_id")
     val survivors = docs.join(kept, Seq("doc_id"))
@@ -727,37 +699,33 @@ object TrainingData {
     // q118). Persist the exact-dedup corpus while the near-dup stage
     // reads it; the exact-only path stays unpersisted (one cheap
     // consumer chain).
-    val exactCanon =
-      if (!nearDup) exactCanon0
-      else exactCanon0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def persisted(df: DataFrame): Scoped[DataFrame] = {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Scoped(p)(p.unpersist(blocking = false))
+    }
     // `canon` has two consumers (the split-key projection and the
     // join-back) and `withSplit` two more (pack + final manifest): an
     // unpersisted near-dup stage would re-run the whole LSH→verify→CC
     // pipeline up to 4×. Persist the deduped corpus when that stage is
     // on — real pipelines materialize the post-dedup corpus anyway;
     // the exact-only path's canon is one cheap hash agg, not worth a
-    // cache write. Caller releases via the returned hook.
+    // cache write. The returned scope releases the deduped corpus, the
+    // near-dup stage's own persists, then the exact-dedup corpus.
     val canon =
-      if (!nearDup) exactCanon
-      else graft.operators.Dedup.dedupCorpus(exactCanon, nearDupThreshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val release: () => Unit =
-      if (!nearDup) () => ()
-      else () => {
-        canon.unpersist(blocking = false)
-        exactCanon.unpersist(blocking = false); ()
-      }
-    val withSplit = canon.join(hashSplit(canon.select("doc_id", "text")),
-      Seq("doc_id"))
-    val packed = tokenPack(withSplit.where(col("split") === "train"), budget)
-      .select(col("doc_id"), col("shard"))
-    val res = withSplit
-      .select(col("doc_id"), col("split"), size(toks(col("text"))).as("n_tok"))
-      .join(packed, Seq("doc_id"), "left")
-      .select("doc_id", "split", "n_tok", "shard")
-      .orderBy("doc_id")
-    (res, release)
+      if (!nearDup) Scoped.pure(exactCanon0)
+      else persisted(exactCanon0).flatMap(exactCanon =>
+        graft.operators.Dedup.dedupCorpus(exactCanon, nearDupThreshold).flatMap(persisted))
+    canon.map { canon =>
+      val withSplit = canon.join(hashSplit(canon.select("doc_id", "text")),
+        Seq("doc_id"))
+      val packed = tokenPack(withSplit.where(col("split") === "train"), budget)
+        .select(col("doc_id"), col("shard"))
+      withSplit
+        .select(col("doc_id"), col("split"), size(toks(col("text"))).as("n_tok"))
+        .join(packed, Seq("doc_id"), "left")
+        .select("doc_id", "split", "n_tok", "shard")
+        .orderBy("doc_id")
+    }
   }
 
   /** Snapshot diff between two corpus versions by content hash — the
@@ -970,11 +938,7 @@ object TrainingData {
     * join (map-side combine); the model is vocabulary-sized and
     * BROADCAST; one final per-doc hash agg. The scored corpus is never
     * shuffled on anything but doc_id. */
-  def tokenClassifier(docs: DataFrame, labels: DataFrame): DataFrame =
-    tokenClassifierScoped(docs, labels)._1
-
-  def tokenClassifierScoped(docs: DataFrame,
-                            labels: DataFrame): (DataFrame, () => Unit) = {
+  def tokenClassifier(docs: DataFrame, labels: DataFrame): Scoped[DataFrame] = {
     val tc = docs
       .select(col("doc_id"), explode(toks(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
@@ -1000,7 +964,7 @@ object TrainingData {
       .select(col("doc_id"), col("n_tok"), col("score"),
         (col("score") > 0L).as("pred"))
       .orderBy("doc_id")
-    (res, () => tc.unpersist(blocking = false))
+    Scoped(res)(tc.unpersist(blocking = false))
   }
 
   /** MULTICLASS token classifier — the CENTROID (Rocchio) form: one
@@ -1038,15 +1002,7 @@ object TrainingData {
     * are web-scale); the argmax window is keyed by doc_id,
     * corpus-parallel. `labels`: (doc_id, cls: string). Output:
     * (doc_id, pred, n_seen, score), deterministic order. */
-  def multiClassifier(docs: DataFrame, labels: DataFrame): DataFrame =
-    multiClassifierScoped(docs, labels)._1
-
-  /** `multiClassifier` with an explicit release hook for the returned
-    * persisted frame — the `tokenClassifierScoped` contract, so specs
-    * and composed callers don't leak a cache entry into other suites'
-    * plan audits (the round-6 CacheManager hazard). */
-  def multiClassifierScoped(docs: DataFrame,
-                            labels: DataFrame): (DataFrame, () => Unit) = {
+  def multiClassifier(docs: DataFrame, labels: DataFrame): Scoped[DataFrame] = {
     val tc = docs
       .select(col("doc_id"), explode(toks(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
@@ -1091,11 +1047,11 @@ object TrainingData {
         coalesce(col("n_seen"), lit(0L)).as("n_seen"),
         coalesce(col("score"), lit(0L)).as("score"))
       .orderBy("doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count()
-    tc.unpersist(blocking = false)
-    counts.unpersist(blocking = false)
-    (res, () => res.unpersist(blocking = false))
+    // the result is materialized here, so the scope owns only it
+    Scoped(res) {
+      tc.unpersist(blocking = false)
+      counts.unpersist(blocking = false)
+    }.materialize
   }
 
   /** Per-doc quality features for `qualityClassifier`: two-level agg
@@ -1147,11 +1103,7 @@ object TrainingData {
     * vocabulary-sized (tiny next to the corpus) — broadcast candidates
     * at real scale; nothing materializes per-doc vectors. */
   def dsirSelect(docs: DataFrame, target: DataFrame, n: Int,
-                 hashBuckets: Int = 0): DataFrame =
-    dsirSelectScoped(docs, target, n, hashBuckets)._1
-
-  def dsirSelectScoped(docs: DataFrame, target: DataFrame, n: Int,
-                       hashBuckets: Int = 0): (DataFrame, () => Unit) = {
+                 hashBuckets: Int = 0): Scoped[DataFrame] = {
     def feats(df: DataFrame): DataFrame = {
       // raw-docs doc_id exchange at pinned width (see docBigrams)
       val tok = graft.core.Layout.pinWidth(
@@ -1194,7 +1146,7 @@ object TrainingData {
         sum(col("c") * (col("pt") - col("pr"))).as("weight"))
       .orderBy(col("weight").desc, col("doc_id"))
       .limit(n)
-    (res, () => rawF.unpersist(blocking = false))
+    Scoped(res)(rawF.unpersist(blocking = false))
   }
 
   /** Threshold-free evaluation of a per-document quality score against
@@ -1220,12 +1172,54 @@ object TrainingData {
     *
     * `scored`: (doc_id, score); `labels`: (doc_id, label ∈ {0,1}).
     * Output: one row (n_pos, n_neg, auc, prec_at_pos). */
-  def scoreAuc(scored: DataFrame, labels: DataFrame): DataFrame = {
-    val (res, release) = scoreAucScoped(scored, labels)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
+  def scoreAuc(scored: DataFrame, labels: DataFrame): Scoped[DataFrame] = {
+    val j = scored.select(col("doc_id"), col("score"))
+      .join(labels.select(col("doc_id"),
+        col("label").cast("long").as("label")), Seq("doc_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    j.count()
+    // distinct-score cumulative frame: positives/negatives per score
+    // group, negatives strictly below (asc), rows strictly above
+    // (desc). Both windows run over the aggregated frame — group
+    // count, not corpus count — and feed AUC and R-precision alike.
+    val wLess = Window.orderBy("score")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wMore = Window.orderBy(col("score").desc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val cum = j.groupBy("score")
+      .agg(sum(col("label")).as("np"),
+        (count(lit(1)) - sum(col("label"))).as("nn"))
+      .withColumn("neg_below", coalesce(sum(col("nn")).over(wLess), lit(0L)))
+      .withColumn("above",
+        coalesce(sum(col("np") + col("nn")).over(wMore), lit(0L)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tot = cum.agg(sum(col("np")).as("n_pos"), sum(col("nn")).as("n_neg"),
+      sum(col("np") * (lit(2L) * col("neg_below") + col("nn"))).as("s2"))
+    // R-precision hits = positives of score groups wholly inside the
+    // top-P prefix + labels of the first (n_pos − above) doc_id-ordered
+    // rows of the single straddling group (resolved with a window
+    // PARTITIONED by that score — never a global per-row sort)
+    val full = cum.crossJoin(broadcast(tot))
+      .where(col("above") + col("np") + col("nn") <= col("n_pos"))
+      .select(col("n_pos"), col("n_neg"), col("s2"), col("np").as("h"))
+    val bnd = cum.crossJoin(broadcast(tot))
+      .where(col("above") < col("n_pos") &&
+        col("above") + col("np") + col("nn") > col("n_pos"))
+      .select(col("score"), (col("n_pos") - col("above")).as("take"),
+        col("n_pos"), col("n_neg"), col("s2"))
+    val bhits = j.join(broadcast(bnd), Seq("score"))
+      .withColumn("rw", row_number().over(
+        Window.partitionBy("score").orderBy("doc_id")).cast("long"))
+      .where(col("rw") <= col("take"))
+      .select(col("n_pos"), col("n_neg"), col("s2"), col("label").as("h"))
+    val res = full.unionByName(bhits)
+      .groupBy(col("n_pos"), col("n_neg"), col("s2"))
+      .agg(sum(col("h")).as("hits"))
+      .select(col("n_pos"), col("n_neg"),
+        (col("s2").cast("double") /
+          (lit(2.0) * col("n_pos") * col("n_neg"))).as("auc"),
+        (col("hits").cast("double") / col("n_pos")).as("prec_at_pos"))
+    Scoped(res) { cum.unpersist(blocking = false); j.unpersist(blocking = false) }
   }
 
   /** Calibration companion to `scoreAuc`: bucket the scored corpus
@@ -1248,16 +1242,7 @@ object TrainingData {
     * of that rank. Same result bit-for-bit, no single-partition
     * corpus sort (pinned by `PlanAuditSpec` alongside `scoreAuc`). */
   def scoreCalibration(scored: DataFrame, labels: DataFrame,
-                       bins: Int = 10): DataFrame = {
-    val (res, release) = scoreCalibrationScoped(scored, labels, bins)
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
-  }
-
-  def scoreCalibrationScoped(scored: DataFrame, labels: DataFrame,
-                             bins: Int = 10): (DataFrame, () => Unit) = {
+                       bins: Int = 10): Scoped[DataFrame] = {
     val j = scored.select(col("doc_id"), col("score"))
       .join(labels.select(col("doc_id"),
         col("label").cast("long").as("label")), Seq("doc_id"))
@@ -1293,7 +1278,7 @@ object TrainingData {
         (col("n_pos").cast("double") / col("n")).as("pos_rate"),
         col("score_lo"), col("score_hi"))
       .orderBy("bin")
-    (res, () => j.unpersist(blocking = false))
+    Scoped(res)(j.unpersist(blocking = false))
   }
 
   /** Cohen's kappa agreement between two binary keep/drop filters —
@@ -1352,58 +1337,5 @@ object TrainingData {
         (col("required_tokens").cast("double") / col("n_tokens")).as("epochs"),
         (col("required_tokens") > col("n_tokens")).as("oversubscribed"))
       .orderBy("source")
-  }
-
-  def scoreAucScoped(scored: DataFrame,
-                     labels: DataFrame): (DataFrame, () => Unit) = {
-    val j = scored.select(col("doc_id"), col("score"))
-      .join(labels.select(col("doc_id"),
-        col("label").cast("long").as("label")), Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    j.count()
-    // distinct-score cumulative frame: positives/negatives per score
-    // group, negatives strictly below (asc), rows strictly above
-    // (desc). Both windows run over the aggregated frame — group
-    // count, not corpus count — and feed AUC and R-precision alike.
-    val wLess = Window.orderBy("score")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wMore = Window.orderBy(col("score").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = j.groupBy("score")
-      .agg(sum(col("label")).as("np"),
-        (count(lit(1)) - sum(col("label"))).as("nn"))
-      .withColumn("neg_below", coalesce(sum(col("nn")).over(wLess), lit(0L)))
-      .withColumn("above",
-        coalesce(sum(col("np") + col("nn")).over(wMore), lit(0L)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tot = cum.agg(sum(col("np")).as("n_pos"), sum(col("nn")).as("n_neg"),
-      sum(col("np") * (lit(2L) * col("neg_below") + col("nn"))).as("s2"))
-    // R-precision hits = positives of score groups wholly inside the
-    // top-P prefix + labels of the first (n_pos − above) doc_id-ordered
-    // rows of the single straddling group (resolved with a window
-    // PARTITIONED by that score — never a global per-row sort)
-    val full = cum.crossJoin(broadcast(tot))
-      .where(col("above") + col("np") + col("nn") <= col("n_pos"))
-      .select(col("n_pos"), col("n_neg"), col("s2"), col("np").as("h"))
-    val bnd = cum.crossJoin(broadcast(tot))
-      .where(col("above") < col("n_pos") &&
-        col("above") + col("np") + col("nn") > col("n_pos"))
-      .select(col("score"), (col("n_pos") - col("above")).as("take"),
-        col("n_pos"), col("n_neg"), col("s2"))
-    val bhits = j.join(broadcast(bnd), Seq("score"))
-      .withColumn("rw", row_number().over(
-        Window.partitionBy("score").orderBy("doc_id")).cast("long"))
-      .where(col("rw") <= col("take"))
-      .select(col("n_pos"), col("n_neg"), col("s2"), col("label").as("h"))
-    val res = full.unionByName(bhits)
-      .groupBy(col("n_pos"), col("n_neg"), col("s2"))
-      .agg(sum(col("h")).as("hits"))
-      .select(col("n_pos"), col("n_neg"),
-        (col("s2").cast("double") /
-          (lit(2.0) * col("n_pos") * col("n_neg"))).as("auc"),
-        (col("hits").cast("double") / col("n_pos")).as("prec_at_pos"))
-    (res, () => {
-      cum.unpersist(blocking = false); j.unpersist(blocking = false)
-    })
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Scoped
 import graft.operators.Dedup
 
 /** Continuous near-duplicate dedup of an unbounded document feed — the
@@ -45,25 +46,24 @@ object IngestDedup {
     * number of surviving rows. Factored out of the foreachBatch
     * closure so batch specs can drive it without a streaming query. */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
-                   threshold: Double): Long = {
-    val (kept, keptSigs, release) = gateBatch(batch, storePath, threshold)
-    val nKept = kept.count()
-    kept.write.mode("append").parquet(outPath)
-    keptSigs.write.mode("append").parquet(storePath)
-    release()
-    nKept
-  }
+                   threshold: Double): Long =
+    gateBatch(batch, storePath, threshold).use { case (kept, keptSigs) =>
+      val nKept = kept.count()
+      kept.write.mode("append").parquet(outPath)
+      keptSigs.write.mode("append").parquet(storePath)
+      nKept
+    }
 
   /** The gate half of `processBatch`: compute the batch's survivors
     * against the store WITHOUT writing anything — returns the
     * persisted kept rows (ALL input columns ride along, so a composite
     * pipeline can carry embeddings through the gate), the survivors'
-    * signature rows, and a release hook. Factored out so
+    * signature rows, scoped to the batch's persists. Factored out so
     * `IngestPipeline` can fan the same kept frame out to several sinks
     * inside one micro-batch closure — the only way the sinks stay
     * mutually consistent batch-over-batch. */
   def gateBatch(batch: DataFrame, storePath: String,
-                threshold: Double): (DataFrame, DataFrame, () => Unit) = {
+                threshold: Double): Scoped[(DataFrame, DataFrame)] = {
     val spark = batch.sparkSession
     val sigs = Dedup.minhashSignatures(
       batch.select(col("doc_id"), col("text")), pinned = true)
@@ -78,11 +78,11 @@ object IngestDedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     kept.count()
     val keptSigs = sigs.join(drops, Seq("doc_id"), "left_anti")
-    (kept, keptSigs, () => {
+    Scoped((kept, keptSigs)) {
       sigs.unpersist(blocking = false)
       drops.unpersist(blocking = false)
       kept.unpersist(blocking = false)
-    })
+    }
   }
 
   /** Start the streaming ingest gate: `docs` is an unbounded stream of

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{bit_count, broadcast, col, count, countDi
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Scoped
 import graft.operators.{Dedup, Multimodal}
 
 /** ONE gate implementation for every 64-bit perceptual-fingerprint
@@ -126,16 +127,15 @@ object IngestFingerprints {
   /** Run one micro-batch of the gate: survivors append to `outPath`,
     * their fingerprints to the store. Returns kept rows. */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
-                   fps: DataFrame, maxBandRows: Long = 1L << 21): Long = {
-    val (kept, keptFps, release) = gateBatch(batch, storePath, fps, maxBandRows)
-    val nKept = kept.count()
-    // refreshByPath order: the out write consumes the store-reading
-    // frame first, the store grows last
-    kept.write.mode("append").parquet(outPath)
-    appendFps(batch.sparkSession, storePath, keptFps)
-    release()
-    nKept
-  }
+                   fps: DataFrame, maxBandRows: Long = 1L << 21): Long =
+    gateBatch(batch, storePath, fps, maxBandRows).use { case (kept, keptFps) =>
+      val nKept = kept.count()
+      // refreshByPath order: the out write consumes the store-reading
+      // frame first, the store grows last
+      kept.write.mode("append").parquet(outPath)
+      appendFps(batch.sparkSession, storePath, keptFps)
+      nKept
+    }
 
   /** Append already-gated fingerprints (id, p, h) to the store — each
     * id's parts complete in the frame. Public so a composed pipeline
@@ -262,8 +262,9 @@ object IngestFingerprints {
       .where(col("m") === col("np"))
       .select("id", "oid").distinct()
 
-  /** The gate half: (kept rows with ALL input columns, survivors'
-    * fingerprint rows (id, p, h), release hook). Nothing is written.
+  /** The gate half: kept rows with ALL input columns and survivors'
+    * fingerprint rows (id, p, h), scoped to the gate's persists.
+    * Nothing is written.
     * `fps` is the caller-computed fingerprint frame for THIS batch
     * ((id, p, h), ids = doc_id values, parts complete per id).
     *
@@ -281,8 +282,7 @@ object IngestFingerprints {
     * bit-identical at any `maxBandRows` (IngestFingerprintsSpec
     * parity pin) and every broadcast stays bounded. */
   def gateBatch(batch: DataFrame, storePath: String, fps: DataFrame,
-                maxBandRows: Long = 1L << 21)
-      : (DataFrame, DataFrame, () => Unit) = {
+                maxBandRows: Long = 1L << 21): Scoped[(DataFrame, DataFrame)] = {
     require(maxBandRows >= 1, "maxBandRows must be >= 1")
     val spark = batch.sparkSession
     val (d, bc) = meta(spark, storePath)
@@ -343,11 +343,11 @@ object IngestFingerprints {
     kept.count()
     val keptFps = bh.join(drops.select(col("doc_id").as("id")),
       Seq("id"), "left_anti").select("id", "p", "h")
-    (kept, keptFps, () => {
+    Scoped((kept, keptFps)) {
       bh.unpersist(blocking = false)
       drops.unpersist(blocking = false)
       kept.unpersist(blocking = false)
-    })
+    }
   }
 
   /** Batch ids dropped by the STORE probe — the corpus-scale join.

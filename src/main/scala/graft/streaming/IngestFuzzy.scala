@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{col, expr, length, lit, pmod, when, xxhas
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Scoped
 import graft.operators.Dedup
 
 /** Continuous FUZZY-KEY dedup of an unbounded feed — the streaming
@@ -147,19 +148,18 @@ object IngestFuzzy {
     * Batches above `maxKeys` rows are auto-split (see `gateBatch`). */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
                    keyCol: String = "key", maxKeys: Int = 10000,
-                   scratch: Option[String] = None): Long = {
-    val (kept, release) = gateBatch(batch, storePath, keyCol, maxKeys, scratch)
-    val nKept = kept.count()
-    // round-7 refreshByPath rule: every consumer of a frame that READS
-    // the store runs before anything appends to the store — out first,
-    // then keys/ + segs/
-    kept.write.mode("append").parquet(outPath)
-    appendKeys(batch.sparkSession, storePath,
-      kept.where(col(keyCol).isNotNull)
-        .select(col("doc_id").cast("long").as("id"), col(keyCol).as("s")))
-    release()
-    nKept
-  }
+                   scratch: Option[String] = None): Long =
+    gateBatch(batch, storePath, keyCol, maxKeys, scratch).use { kept =>
+      val nKept = kept.count()
+      // round-7 refreshByPath rule: every consumer of a frame that READS
+      // the store runs before anything appends to the store — out first,
+      // then keys/ + segs/
+      kept.write.mode("append").parquet(outPath)
+      appendKeys(batch.sparkSession, storePath,
+        kept.where(col(keyCol).isNotNull)
+          .select(col("doc_id").cast("long").as("id"), col(keyCol).as("s")))
+      nKept
+    }
 
   /** Append already-gated keys (id, s) to the store: one keys/ row and
     * d+1 string-carrying segs/ rows per key, cut and bucketed with the
@@ -184,8 +184,8 @@ object IngestFuzzy {
   }
 
   /** The gate half of `processBatch`: the batch's surviving rows (ALL
-    * input columns ride along) without writing anything, plus a
-    * release hook. Null-key rows match nothing and always survive.
+    * input columns ride along) without writing anything, scoped to the
+    * gate's persists. Null-key rows match nothing and always survive.
     *
     * Safe-by-default against the in-batch quadratic: the within-batch
     * self-join is quadratic in BATCH size on adversarial keys (round-9
@@ -218,18 +218,15 @@ object IngestFuzzy {
   def gateBatch(batch: DataFrame, storePath: String,
                 keyCol: String = "key",
                 maxKeys: Int = 10000,
-                scratch: Option[String] = None): (DataFrame, () => Unit) = {
-    val (kept, release, _) =
-      gateBatchStats(batch, storePath, keyCol, maxKeys, scratch)
-    (kept, release)
-  }
+                scratch: Option[String] = None): Scoped[DataFrame] =
+    gateBatchStats(batch, storePath, keyCol, maxKeys, scratch).map(_._1)
 
   /** `gateBatch` plus per-slice (keys, seconds) timings — the
     * instrumented form ScaleReport's fuzzygate campaign drives. */
   private[graft] def gateBatchStats(batch: DataFrame, storePath: String,
                                     keyCol: String, maxKeys: Int,
                                     scratch: Option[String] = None)
-      : (DataFrame, () => Unit, Seq[(Long, Double)]) = {
+      : Scoped[(DataFrame, Seq[(Long, Double)])] = {
     require(maxKeys >= 1, "maxKeys must be >= 1")
     val spark = batch.sparkSession
     val (d, minSeg, metaNB) = meta(spark, storePath)
@@ -365,10 +362,10 @@ object IngestFuzzy {
     val kept =
       if (scratch.isDefined) keep.reduce(_.unionByName(_))
       else keep.map(cut).reduce(_.unionByName(_))
-    (kept, () => {
+    Scoped((kept, stats.toSeq)) {
       b.unpersist(blocking = false)
       (keep ++ hold).foreach(_.unpersist(blocking = false))
-    }, stats.toSeq)
+    }
   }
 
   /** The pruned segs/ read for one probe frame (id, s, len): collect

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Scoped
 
 /** Continuous IMAGE near-dup dedup of an unbounded feed — the THIRD
   * dedup channel's ingest gate (IngestDedup resolves content text,
@@ -35,16 +36,15 @@ object IngestImages {
   /** Run one micro-batch of the gate: survivors append to `outPath`,
     * their fingerprints to the store. Returns kept rows. */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
-                   imageCol: String = "image"): Long = {
-    val (kept, keptHashes, release) = gateBatch(batch, storePath, imageCol)
-    val nKept = kept.count()
-    // refreshByPath order: the out write consumes the store-reading
-    // frame first, the store grows last
-    kept.write.mode("append").parquet(outPath)
-    appendHashes(batch.sparkSession, storePath, keptHashes)
-    release()
-    nKept
-  }
+                   imageCol: String = "image"): Long =
+    gateBatch(batch, storePath, imageCol).use { case (kept, keptHashes) =>
+      val nKept = kept.count()
+      // refreshByPath order: the out write consumes the store-reading
+      // frame first, the store grows last
+      kept.write.mode("append").parquet(outPath)
+      appendHashes(batch.sparkSession, storePath, keptHashes)
+      nKept
+    }
 
   /** Append already-gated fingerprints (id, h) to the store — public
     * so the composed pipeline can gate, fan out its sinks, and grow
@@ -54,15 +54,14 @@ object IngestImages {
     IngestFingerprints.appendFps(spark, storePath,
       hashes.select(col("id"), lit(0).as("p"), col("h")))
 
-  /** The gate half: (kept rows with ALL input columns, survivors'
-    * fingerprint rows (id, h), release hook). Nothing is written. */
+  /** The gate half: kept rows with ALL input columns and survivors'
+    * fingerprint rows (id, h), scoped to the gate's persists. Nothing
+    * is written. */
   def gateBatch(batch: DataFrame, storePath: String,
-                imageCol: String = "image")
-      : (DataFrame, DataFrame, () => Unit) = {
-    val (kept, keptFps, release) = IngestFingerprints.gateBatch(
+                imageCol: String = "image"): Scoped[(DataFrame, DataFrame)] =
+    IngestFingerprints.gateBatch(
       batch, storePath, IngestFingerprints.imageFps(batch, imageCol))
-    (kept, keptFps.select("id", "h"), release)
-  }
+      .map { case (kept, keptFps) => (kept, keptFps.select("id", "h")) }
 
   /** Start the streaming gate: `docs` carries doc_id + `imageCol`
     * (+ anything else); pre-seed the store with `dhashSave` (possibly

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Scoped
 
 /** One end-to-end streaming curation ingest — the reference's
   * watch-loop analog (freshness/watch.py:24-34) lifted to the
@@ -123,13 +124,7 @@ object IngestPipeline {
     // every content-novel doc, including ones the key gate dropped — a
     // later clone of a fuzzy-dropped doc is still SEEN content and
     // drops.
-    val (k1, keptSigs, rel1) =
-      t("gate_sig")(IngestDedup.gateBatch(batch, sigStorePath, threshold))
-    val (k2, rel2) = fuzzyStorePath match {
-      case None => (k1, () => ())
-      case Some(fp) => t("gate_fuzzy")(
-        IngestFuzzy.gateBatch(k1, fp, fuzzyKeyCol, fuzzyMaxKeys))
-    }
+    //
     // optional THIRD gate, same series composition: perceptual image
     // near-dup on the binary payload (dHash + banded Hamming) — text
     // content, typo keys, and image payloads are independent duplicate
@@ -138,92 +133,104 @@ object IngestPipeline {
     // each store's append derives from a frame whose lineage reads at
     // most the stores not yet appended — image (reads all three) →
     // fuzzy (reads sig + fuzzy) → signatures (reads sig only).
-    val (kept, keptHashes, rel3) = imageStorePath match {
-      case None => (k2, None: Option[DataFrame], () => ())
-      case Some(ip) =>
-        val (k3, kh, r) = t("gate_image")(
-          IngestImages.gateBatch(k2, ip, imageCol))
-        (k3, Some(kh), r)
-    }
-    val release = () => { rel3(); rel2(); rel1() }
-    val nKept = t("gate_count")(kept.count())
-    if (nKept > 0) {
-      // optional online pair mining: each KEPT doc's top-k neighbors
-      // among everything ingested BEFORE this batch. Must run before
-      // the index append both for its semantics (prior corpus only —
-      // within-batch pairs are the offline knnJoin's job) and for the
-      // refreshByPath rule (the search reads indexPath; appending
-      // first would re-execute it against a store containing the
-      // batch itself).
-      neighborsPath.foreach { np => t("mine_neighbors") {
-        val nb = IngestVectors.searchBatch(
-          kept.select(col("doc_id").as("vec_id"), col("embedding")),
-          indexPath, neighborK, neighborProbe, neighborScanFrac)
-        nb.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(np)
-        nb.unpersist(blocking = false)
-      }}
-      // ORDER MATTERS: the signature-store append must come LAST.
-      // Writing to sigStorePath triggers refreshByPath, which recaches
-      // every plan reading that path — including `kept` (its anti-join
-      // reads the store through `drops`). A consumer of `kept` that
-      // runs AFTER the store grows re-evaluates against a store
-      // containing the batch's own signatures, every doc self-matches,
-      // and the consumer silently sees an EMPTY kept set (found
-      // empirically in round 7: vector appends vanished for every
-      // batch after the first).
-      t("land_out")(kept.select(col("doc_id"), col("text"))
-        .write.mode("append").parquet(outPath))
-      t("append_index")(IngestVectors.processBatch(
-        kept.select(col("doc_id").as("vec_id"), col("embedding")), indexPath))
-      t("append_telemetry")(
-        MonitorQuality.batchStats(kept.select(col("doc_id"), col("text")), batchId)
-          .coalesce(1).write.mode("append").parquet(telemetryPath))
-      // optional 5th store: per-source vocabulary sketches of the KEPT
-      // docs (requires a `source` column in the feed)
-      vocabPath.foreach { vp => t("append_vocab")(
-        IngestVocab.processBatch(
-          kept.select(col("source"), col("text")), batchId, vp))
-      }
-      // optional 6th store: lexical postings of the KEPT docs (batch
-      // token offset by 1 — lexSave's seed stats row owns batch_id 0)
-      lexPath.foreach { lp => t("append_lexical")(
-        graft.operators.Lexical.lexAppendSave(
-          kept.sparkSession, lp, kept.select(col("doc_id"), col("text")),
-          batchId + 1L))
-      }
-      // state stores LAST, after every consumer of `kept` has run, in
-      // the dependency-safe cascade: image store first (its append
-      // frame reads all three stores), fuzzy next, signatures below
-      imageStorePath.foreach { ip => t("append_image")(
-        keptHashes.foreach(kh =>
-          IngestImages.appendHashes(kept.sparkSession, ip, kh)))
-      }
-    }
-    // the fuzzy append sits outside the kept-guard once a later gate
-    // exists: the key gate can keep records the image gate then drops
-    // (kept = 0 but k2 nonempty), and their key-novelty must still be
-    // recorded — k2's lineage reads only the signature + fuzzy stores,
-    // both still un-appended here
-    fuzzyStorePath.foreach { fp =>
-      if (nKept > 0 || (imageStorePath.isDefined && !k2.isEmpty))
-        t("append_fuzzy") {
-          val keptKeys = k2.where(col(fuzzyKeyCol).isNotNull)
-            .select(col("doc_id").cast("long").as("id"),
-              col(fuzzyKeyCol).as("s"))
-          IngestFuzzy.appendKeys(k2.sparkSession, fp, keptKeys)
+    //
+    // One scope owns all three gates' persists: released image gate
+    // first, content gate last, and also when a sink or append throws.
+    val gates = t("gate_sig")(IngestDedup.gateBatch(batch, sigStorePath, threshold))
+      .flatMap { case (k1, keptSigs) =>
+        val fuzzy = fuzzyStorePath match {
+          case None => Scoped.pure(k1)
+          case Some(fp) => t("gate_fuzzy")(
+            IngestFuzzy.gateBatch(k1, fp, fuzzyKeyCol, fuzzyMaxKeys))
         }
+        fuzzy.flatMap { k2 =>
+          val image = imageStorePath match {
+            case None => Scoped.pure((k2, None: Option[DataFrame]))
+            case Some(ip) => t("gate_image")(IngestImages.gateBatch(k2, ip, imageCol))
+              .map { case (k3, kh) => (k3, Some(kh)) }
+          }
+          image.map { case (kept, keptHashes) => (keptSigs, k2, kept, keptHashes) }
+        }
+      }
+    gates.use { case (keptSigs, k2, kept, keptHashes) =>
+      val nKept = t("gate_count")(kept.count())
+      if (nKept > 0) {
+        // optional online pair mining: each KEPT doc's top-k neighbors
+        // among everything ingested BEFORE this batch. Must run before
+        // the index append both for its semantics (prior corpus only —
+        // within-batch pairs are the offline knnJoin's job) and for the
+        // refreshByPath rule (the search reads indexPath; appending
+        // first would re-execute it against a store containing the
+        // batch itself).
+        neighborsPath.foreach { np => t("mine_neighbors") {
+          val nb = IngestVectors.searchBatch(
+            kept.select(col("doc_id").as("vec_id"), col("embedding")),
+            indexPath, neighborK, neighborProbe, neighborScanFrac)
+          try nb.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+            .write.mode("append").parquet(np)
+          finally nb.unpersist(blocking = false)
+        }}
+        // ORDER MATTERS: the signature-store append must come LAST.
+        // Writing to sigStorePath triggers refreshByPath, which recaches
+        // every plan reading that path — including `kept` (its anti-join
+        // reads the store through `drops`). A consumer of `kept` that
+        // runs AFTER the store grows re-evaluates against a store
+        // containing the batch's own signatures, every doc self-matches,
+        // and the consumer silently sees an EMPTY kept set (found
+        // empirically in round 7: vector appends vanished for every
+        // batch after the first).
+        t("land_out")(kept.select(col("doc_id"), col("text"))
+          .write.mode("append").parquet(outPath))
+        t("append_index")(IngestVectors.processBatch(
+          kept.select(col("doc_id").as("vec_id"), col("embedding")), indexPath))
+        t("append_telemetry")(
+          MonitorQuality.batchStats(kept.select(col("doc_id"), col("text")), batchId)
+            .coalesce(1).write.mode("append").parquet(telemetryPath))
+        // optional 5th store: per-source vocabulary sketches of the KEPT
+        // docs (requires a `source` column in the feed)
+        vocabPath.foreach { vp => t("append_vocab")(
+          IngestVocab.processBatch(
+            kept.select(col("source"), col("text")), batchId, vp))
+        }
+        // optional 6th store: lexical postings of the KEPT docs (batch
+        // token offset by 1 — lexSave's seed stats row owns batch_id 0)
+        lexPath.foreach { lp => t("append_lexical")(
+          graft.operators.Lexical.lexAppendSave(
+            kept.sparkSession, lp, kept.select(col("doc_id"), col("text")),
+            batchId + 1L))
+        }
+        // state stores LAST, after every consumer of `kept` has run, in
+        // the dependency-safe cascade: image store first (its append
+        // frame reads all three stores), fuzzy next, signatures below
+        imageStorePath.foreach { ip => t("append_image")(
+          keptHashes.foreach(kh =>
+            IngestImages.appendHashes(kept.sparkSession, ip, kh)))
+        }
+      }
+      // the fuzzy append sits outside the kept-guard once a later gate
+      // exists: the key gate can keep records the image gate then drops
+      // (kept = 0 but k2 nonempty), and their key-novelty must still be
+      // recorded — k2's lineage reads only the signature + fuzzy stores,
+      // both still un-appended here
+      fuzzyStorePath.foreach { fp =>
+        if (nKept > 0 || (imageStorePath.isDefined && !k2.isEmpty))
+          t("append_fuzzy") {
+            val keptKeys = k2.where(col(fuzzyKeyCol).isNotNull)
+              .select(col("doc_id").cast("long").as("id"),
+                col(fuzzyKeyCol).as("s"))
+            IngestFuzzy.appendKeys(k2.sparkSession, fp, keptKeys)
+          }
+      }
+      // the signature append sits OUTSIDE the kept-guard: in the composed
+      // path the content gate can keep docs a later gate then drops
+      // (kept = 0 but keptSigs nonempty), and their novelty must still be
+      // recorded — and keptSigs' lineage never reads the other stores, so
+      // the append order stays refreshByPath-safe
+      if (nKept > 0 || ((fuzzyStorePath.isDefined || imageStorePath.isDefined)
+          && !keptSigs.isEmpty))
+        keptSigs.write.mode("append").parquet(sigStorePath)
+      nKept
     }
-    // the signature append sits OUTSIDE the kept-guard: in the composed
-    // path the content gate can keep docs a later gate then drops
-    // (kept = 0 but keptSigs nonempty), and their novelty must still be
-    // recorded — and keptSigs' lineage never reads the other stores, so
-    // the append order stays refreshByPath-safe
-    if (nKept > 0 || ((fuzzyStorePath.isDefined || imageStorePath.isDefined)
-        && !keptSigs.isEmpty))
-      keptSigs.write.mode("append").parquet(sigStorePath)
-    release()
-    nKept
   }
 
   /** Start the unified ingest: `docs` is an unbounded stream of

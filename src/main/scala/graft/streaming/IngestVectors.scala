@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, length, size}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.Scoped
 import graft.operators.Similarity
 
 /** Continuous embedding ingest into a persisted IVF index — the vector
@@ -115,10 +116,12 @@ object IngestVectors {
             "store/query dimensionality mismatch")
       }
     }
-    val (res, release): (DataFrame, () => Unit) =
+    // each loaded index is scoped before it is searched, so a search
+    // that throws (the dim check) still releases it
+    val res: Scoped[DataFrame] =
       if (has("assigned")) {
         val idx = Similarity.ivfLoad(spark, indexPath)
-        val r =
+        Scoped(idx)(idx.release()).map { idx =>
           if (idx.assigned.columns.contains("bc")) {
             requireBinDim(idx.assigned)
             Similarity.ivfSearchBin(idx, queries, k, probes(idx.nList))
@@ -126,31 +129,30 @@ object IngestVectors {
           else if (idx.assigned.columns.contains("qc"))
             Similarity.ivfSearchSq8(idx, queries, k, probes(idx.nList))
           else Similarity.ivfSearch(idx, queries, k, probes(idx.nList))
-        (r, () => idx.release())
+        }
       } else if (has("rot") && has("centroids")) {
         val idx = Similarity.ivfOpqLoad(spark, indexPath)
-        (Similarity.ivfOpqSearch(idx, queries, k, probes(idx.pq.nList)),
-          () => idx.release())
+        Scoped(idx)(idx.release())
+          .map(idx => Similarity.ivfOpqSearch(idx, queries, k, probes(idx.pq.nList)))
       } else if (has("books") && has("centroids")) {
         val idx = Similarity.ivfPqLoad(spark, indexPath)
-        (Similarity.ivfPqSearch(idx, queries, k, probes(idx.nList)),
-          () => idx.release())
+        Scoped(idx)(idx.release())
+          .map(idx => Similarity.ivfPqSearch(idx, queries, k, probes(idx.nList)))
       } else if (has("books") && has("rot")) {
         val idx = Similarity.opqLoad(spark, indexPath)
-        (Similarity.opqSearch(idx, queries, k), () => idx.release())
+        Scoped(idx)(idx.release()).map(Similarity.opqSearch(_, queries, k))
       } else if (has("books")) {
         val idx = Similarity.pqLoad(spark, indexPath)
-        (Similarity.pqSearch(idx, queries, k), () => idx.release())
+        Scoped(idx)(idx.release()).map(Similarity.pqSearch(_, queries, k))
       } else if (has("bincodes")) {
         val idx = Similarity.binLoad(spark, indexPath)
-        requireBinDim(idx.coded)
-        (Similarity.binSearch(idx, queries, k), () => idx.release())
+        Scoped(idx)(idx.release()).map { idx =>
+          requireBinDim(idx.coded)
+          Similarity.binSearch(idx, queries, k)
+        }
       } else throw new IllegalArgumentException(
         s"$indexPath is not an ivfSave/ivfPqSave/ivfOpqSave/opqSave/pqSave/binSave store")
-    val out = res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release()
-    out
+    res.materialize.value
   }
 
   /** Skew-gated offline maintenance for an `ivfSave` IVF store — the

@@ -90,30 +90,25 @@ class BinSpec extends SparkSpec {
     val d = emb(rows: _*)
     // exhaustive dial: every list probed + corpus-covering pool ⇒ the
     // float refine ranks everything — bit-equal to the float brute join
-    val full = Similarity.knnJoinBin(d, 5, refine = 41, scanFrac = Some(1.0))
-    val fullRows = full.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    full.unpersist(blocking = false)
-    val brute = Similarity.knnJoin(d, 5, targetClusterRows = 25, scanFrac = Some(1.0))
-    val bruteRows = brute.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    brute.unpersist(blocking = false)
+    val fullRows = Similarity.knnJoinBin(d, 5, refine = 41, scanFrac = Some(1.0))
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
+    val bruteRows = Similarity.knnJoin(d, 5, targetClusterRows = 25, scanFrac = Some(1.0))
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
     assert(fullRows == bruteRows)
     // probed mode: Hamming pool + refine holds recall on the clusters
     val gold = bruteRows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
-    val got = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
-    val byQ = got.collect().map(r => (r.getLong(0), r.getLong(2)))
+    val byQ = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
+      .use(_.collect().map(r => (r.getLong(0), r.getLong(2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    got.unpersist(blocking = false)
     val recall = gold.map { case (q, g) =>
       byQ.getOrElse(q, Set.empty[Long]).intersect(g).size.toDouble / g.size
     }.sum / gold.size
     assert(recall >= 0.85, s"binary refined recall@5 $recall < 0.85")
     // deterministic run-to-run
-    val again = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
-    val a2 = again.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    again.unpersist(blocking = false)
-    val g1 = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
-    val a1 = g1.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    g1.unpersist(blocking = false)
+    val a2 = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
+    val a1 = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
     assert(a1 == a2)
   }
 

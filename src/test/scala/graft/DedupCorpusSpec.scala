@@ -29,12 +29,12 @@ class DedupCorpusSpec extends SparkSpec {
   test("dedupCorpus drop-set agrees >= 0.95 with the exact-edge min-id closure") {
     val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
     val kept = Dedup.dedupCorpus(docs, 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+      .use(_.select("doc_id").collect()).map(_.getLong(0)).toSet
     val dropApprox = all.diff(kept)
-    val exactEdges = Dedup.ngramJaccardPairs(docs, 500L, 0.5).select("a", "b")
-    val dropExact = Dedup.nearDupComponents(docs, exactEdges, 500L)
-      .where(col("doc_id") =!= col("component"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val dropExact = Dedup.ngramJaccardPairs(docs, 500L, 0.5)
+      .flatMap(exactEdges => Dedup.nearDupComponents(docs, exactEdges.select("a", "b"), 500L))
+      .use(_.where(col("doc_id") =!= col("component"))
+        .select("doc_id").collect()).map(_.getLong(0)).toSet
     assert(dropExact.nonEmpty, "slice must contain near-dup components")
     val agree = dropApprox.intersect(dropExact).size.toDouble /
       dropApprox.union(dropExact).size
@@ -46,17 +46,17 @@ class DedupCorpusSpec extends SparkSpec {
   test("dedupCorpus dup-cluster membership agrees >= 0.95 with q93's") {
     val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
     val kept = Dedup.dedupCorpus(docs, 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+      .use(_.select("doc_id").collect()).map(_.getLong(0)).toSet
     // a doc is "in a dup cluster" iff its cluster dropped someone: the
     // drops plus each drop's surviving canonical
     val q93 = Dedup.dedupKeepBest(docs, 500L, 0.5)
-      .select("doc_id", "component", "keep").collect()
+      .use(_.select("doc_id", "component", "keep").collect())
     val q93DupComponents = q93.filter(r => !r.getBoolean(2)).map(_.getLong(1)).toSet
     val q93Members = q93.filter(r => q93DupComponents(r.getLong(1))).map(_.getLong(0)).toSet
     val approxDrops = all.diff(kept)
     val approxMembers = {
       val edges = Dedup.minhashPairs(docs, 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .use(_.collect()).map(r => (r.getLong(0), r.getLong(1)))
       approxDrops ++ edges.flatMap(e => Seq(e._1, e._2)).toSet.filter(v =>
         approxDrops.contains(v) || edges.exists(e =>
           (e._1 == v && approxDrops.contains(e._2)) || (e._2 == v && approxDrops.contains(e._1))))
@@ -70,9 +70,9 @@ class DedupCorpusSpec extends SparkSpec {
 
   test("dedupCorpus keeps every singleton and exactly one doc per dup cluster") {
     val kept = Dedup.dedupCorpus(docs, 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+      .use(_.select("doc_id").collect()).map(_.getLong(0)).toSet
     val edges = Dedup.ngramJaccardPairs(docs, 500L, 0.5)
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .use(_.select("a", "b").collect()).map(r => (r.getLong(0), r.getLong(1)))
     val inAnyPair = edges.flatMap(e => Seq(e._1, e._2)).toSet
     val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
     // singletons (no exact near-dup edge) must all survive

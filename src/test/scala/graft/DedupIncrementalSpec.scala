@@ -29,7 +29,7 @@ class DedupIncrementalSpec extends SparkSpec {
       // exact copy of batch doc 11 → within-batch keep-first drops the larger id
       12L -> "a totally unrelated document discussing minhash signatures and band keys here")
     val kept = Dedup.dedupIncremental(batch, store, 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+      .use(_.select("doc_id").collect()).map(_.getLong(0)).toSet
     assert(kept == Set(11L))
   }
 
@@ -50,14 +50,14 @@ class DedupIncrementalSpec extends SparkSpec {
       20L -> "first wave document with some entirely fresh words flowing through the pipeline")
     // batch1 survives against the initial store; append its signatures
     assert(Dedup.dedupIncremental(batch1, Dedup.signatureLoad(spark, dir), 0.5)
-      .count() == 1L)
+      .use(_.count()) == 1L)
     Dedup.signatureSave(batch1, dir, mode = "append")
     // a later batch duplicating batch1 must now drop against the store
     val batch2 = docs(
       30L -> "first wave document with some entirely fresh words flowing through the pipeline",
       31L -> "yet another novel document that matches nothing stored so far anywhere")
     val kept = Dedup.dedupIncremental(batch2, Dedup.signatureLoad(spark, dir), 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+      .use(_.select("doc_id").collect()).map(_.getLong(0)).toSet
     assert(kept == Set(31L))
   }
 
@@ -67,13 +67,13 @@ class DedupIncrementalSpec extends SparkSpec {
     val store = Dedup.minhashSignatures(all.where(col("doc_id") < cut))
     val batch = all.where(col("doc_id") >= cut)
     val kept = Dedup.dedupIncremental(batch, store, 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+      .use(_.select("doc_id").collect()).map(_.getLong(0)).toSet
     val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
     val gotDrops = batchIds.diff(kept)
     // exact ground truth: a batch doc drops iff the EXACT pair set pairs
     // it (a < b always, and every store id < every batch id)
     val wantDrops = Dedup.minhashPairs(all, 0.5)
-      .select("b").collect().map(_.getLong(0)).toSet.intersect(batchIds)
+      .use(_.select("b").collect()).map(_.getLong(0)).toSet.intersect(batchIds)
     assert(wantDrops.nonEmpty, "testdata must contain cross-cut near-dups")
     val agree = gotDrops.intersect(wantDrops).size.toDouble /
       gotDrops.union(wantDrops).size

@@ -14,11 +14,11 @@ class DedupRecallSpec extends SparkSpec {
 
   test("minhashPairs recall >= 0.9 against exact jaccard-0.5 pairs, no false positives") {
     val exact = Dedup.ngramJaccardPairs(docs, Long.MaxValue, 0.5)
-      .select("a", "b").collect()
+      .use(_.select("a", "b").collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "testdata must contain near-dup pairs")
     val got = Dedup.minhashPairs(docs, 0.5)
-      .select("a", "b").collect()
+      .use(_.select("a", "b").collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = got.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.9, s"recall $recall < 0.9 (${got.size} found, ${exact.size} exact)")
@@ -41,13 +41,13 @@ class DedupRecallSpec extends SparkSpec {
     }).toSet
     assert(exact.nonEmpty, "testdata must contain simhash near-dups")
     val got = Dedup.simhashPairs(docs, Long.MaxValue, maxHamming)
-      .select("a", "b").collect()
+      .use(_.select("a", "b").collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == exact,
       s"missed: ${exact.diff(got).take(5)}; spurious: ${got.diff(exact).take(5)}")
     // both key widths are recall-1.0 by the same pigeonhole argument
     val gotB4 = Dedup.simhashPairs(docs, Long.MaxValue, maxHamming, blockChoose = 4)
-      .select("a", "b").collect()
+      .use(_.select("a", "b").collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(gotB4 == exact)
   }
@@ -58,13 +58,13 @@ class DedupRecallSpec extends SparkSpec {
     // not the corpus squared. Bounds chosen ~3x above the measured
     // values on this corpus so genuine regressions (e.g. correlated
     // fingerprints, broken band keys) fail loudly.
-    val mhCand = Dedup.minhashCandidatePairs(docs).count()
-    val mhVerified = Dedup.minhashPairs(docs, 0.5).count()
+    val mhCand = Dedup.minhashCandidatePairs(docs).use(_.count())
+    val mhVerified = Dedup.minhashPairs(docs, 0.5).use(_.count())
     assert(mhVerified > 0)
     assert(mhCand <= math.max(50L, 10L * mhVerified),
       s"minhash candidates $mhCand vs verified $mhVerified")
-    val shCand = Dedup.simhashCandidatePairs(docs, Long.MaxValue, 6).count()
-    val shVerified = Dedup.simhashPairs(docs, Long.MaxValue, 6).count()
+    val shCand = Dedup.simhashCandidatePairs(docs, Long.MaxValue, 6).use(_.count())
+    val shVerified = Dedup.simhashPairs(docs, Long.MaxValue, 6).use(_.count())
     assert(shVerified > 0)
     assert(shCand <= math.max(100L, 30L * shVerified),
       s"simhash candidates $shCand vs verified $shVerified")

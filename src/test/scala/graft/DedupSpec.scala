@@ -15,7 +15,7 @@ class DedupSpec extends SparkSpec {
       1L -> base,                       // near-dup of 2, SHORTER
       2L -> (base + " iota kappa"),     // longest in the component -> canonical
       3L -> "totally different words here that overlap with nothing at all")
-    val out = Dedup.dedupKeepBest(d, 500L, 0.5).collect()
+    val out = Dedup.dedupKeepBest(d, 500L, 0.5).use(_.collect())
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(3), r.getBoolean(4)))).toMap
     // component id stays min-label (1); canonical is the LONGEST member (2)
     assert(out(1L) == ((1L, 2L, false)))
@@ -75,7 +75,7 @@ class DedupSpec extends SparkSpec {
   test("ngramJaccardPairs: identical docs have jaccard 1.0") {
     val t = "a b c d e f g h i j"
     val out = Dedup.ngramJaccardPairs(docs((1L, t), (2L, t), (3L, "x y z q w e r t y u")),
-      100L, 0.5).collect()
+      100L, 0.5).use(_.collect())
     assert(out.length == 1)
     assert(out.head.getLong(0) == 1L && out.head.getLong(1) == 2L)
     assert(out.head.getDouble(3) == 1.0)
@@ -84,7 +84,7 @@ class DedupSpec extends SparkSpec {
   test("minhashPairs: finds identical docs, skips dissimilar") {
     val t = "the quick brown fox jumps over the lazy dog again and again"
     val other = "completely different words compose this second document body text"
-    val out = Dedup.minhashPairs(docs((1L, t), (2L, t), (3L, other)), 0.5).collect()
+    val out = Dedup.minhashPairs(docs((1L, t), (2L, t), (3L, other)), 0.5).use(_.collect())
     assert(out.map(r => (r.getLong(1), r.getLong(0))).toSet == Set((1L, 2L)) ||
            out.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
     assert(out.head.getDouble(2) == 1.0)
@@ -104,7 +104,7 @@ class DedupSpec extends SparkSpec {
     val d = docs((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (5L, "e"), (6L, "f"))
     // chain 1-2-3 (no direct 1-3 edge), pair 5-6, singleton 4
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
-    val out = Dedup.nearDupComponents(d, edges, 100L).collect()
+    val out = Dedup.nearDupComponents(d, edges, 100L).use(_.collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
   }
@@ -113,7 +113,7 @@ class DedupSpec extends SparkSpec {
     val t1 = "the quick brown fox jumps over the lazy dog again and again"
     val t2 = "completely different words compose this second document body text"
     val out = Dedup.dedupCorpus(
-      docs((5L, t1), (2L, t1), (9L, t1), (3L, t2)), 0.5).collect()
+      docs((5L, t1), (2L, t1), (9L, t1), (3L, t2)), 0.5).use(_.collect())
       .map(_.getLong(0)).sorted
     assert(out.toSeq == Seq(2L, 3L)) // min id of the dup cluster + the distinct doc
   }
@@ -122,7 +122,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val d = docs((1L, "a"), (2L, "b"))
     val edges = Seq.empty[(Long, Long)].toDF("a", "b")
-    val out = Dedup.nearDupComponents(d, edges, 100L).collect()
+    val out = Dedup.nearDupComponents(d, edges, 100L).use(_.collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 2L))
   }
@@ -131,7 +131,7 @@ class DedupSpec extends SparkSpec {
     val t = "alpha beta gamma delta epsilon zeta eta theta"
     val out = Dedup.simhashPairs(docs(
       (1L, t), (2L, t), (3L, "totally different words all over here now")), 100L, 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(out.toSeq == Seq((1L, 2L, 0)))
   }
 
@@ -143,7 +143,7 @@ class DedupSpec extends SparkSpec {
       1L -> (shared + " unique tail words here"),
       2L -> ("prefix words go first " + shared),
       3L -> "nothing here repeats anywhere else in the corpus at all today")
-    val out = Dedup.exactSubstrSpans(d, 5).collect()
+    val out = Dedup.exactSubstrSpans(d, 5).use(_.collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
     // 8-token run = 4 overlapping 5-gram starts, merged into ONE span:
     // doc 1 at tokens [0,8), doc 2 at [4,12); doc 3 emits nothing
@@ -156,7 +156,7 @@ class DedupSpec extends SparkSpec {
     val d = docs(
       1L -> (runA + " filler middle words " + runB), // two disjoint 5-gram hits
       2L -> (runA + " some different interior then " + runB))
-    val out = Dedup.exactSubstrSpans(d, 5).collect()
+    val out = Dedup.exactSubstrSpans(d, 5).use(_.collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
     // doc 1: runA at [0,5), runB at [8,13); doc 2: runA at [0,5), runB at [9,14)
     assert(out.toSeq == Seq((1L, 0, 5), (1L, 8, 5), (2L, 0, 5), (2L, 9, 5)))
@@ -165,7 +165,7 @@ class DedupSpec extends SparkSpec {
   test("exactSubstrSpans: whole-doc exact dup covers the full document") {
     val t = "repeat me fully across both documents with many tokens inside"
     val n = t.split(" ").length
-    val out = Dedup.exactSubstrSpans(docs(1L -> t, 2L -> t), 5).collect()
+    val out = Dedup.exactSubstrSpans(docs(1L -> t, 2L -> t), 5).use(_.collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
     assert(out.toSeq == Seq((1L, 0, n), (2L, 0, n)))
   }
@@ -176,7 +176,7 @@ class DedupSpec extends SparkSpec {
       1L -> (shared + " unique tail words here"),
       2L -> ("prefix words go first " + shared),
       3L -> "nothing here repeats anywhere else in the corpus at all today")
-    val out = Dedup.exactSubstrCut(d, 5).collect()
+    val out = Dedup.exactSubstrCut(d, 5).use(_.collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSeq
     assert(out == Seq(
       (1L, 12, 8, "unique tail words here"),
@@ -186,7 +186,7 @@ class DedupSpec extends SparkSpec {
 
   test("exactSubstrCut: fully-duplicated doc cuts to empty text") {
     val t = "repeat me fully across both documents with many tokens inside"
-    val out = Dedup.exactSubstrCut(docs(1L -> t, 2L -> t), 5).collect()
+    val out = Dedup.exactSubstrCut(docs(1L -> t, 2L -> t), 5).use(_.collect())
       .map(r => (r.getLong(0), r.getInt(2), r.getString(3))).toSeq
     assert(out == Seq((1L, 10, ""), (2L, 10, "")))
   }
@@ -276,11 +276,11 @@ class DedupSpec extends SparkSpec {
     val b = docs(
       10L -> (base + " extra"),     // near-dup of a's doc 1
       11L -> (61 to 90).map(i => s"v$i").mkString(" "))
-    val out = Dedup.crossNearDups(a, b, 0.5).collect()
+    val out = Dedup.crossNearDups(a, b, 0.5).use(_.collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.map(t => (t._1, t._2)).toSeq == Seq((1L, 10L)))
     assert(out.head._3 >= 500000L && out.head._3 <= 1000000L)
-    val again = Dedup.crossNearDups(a, b, 0.5).collect()
+    val again = Dedup.crossNearDups(a, b, 0.5).use(_.collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(again.toSeq == out.toSeq)
   }
@@ -290,7 +290,7 @@ class DedupSpec extends SparkSpec {
       1L -> "a b c d e x1 y1 z1 w1 v1",
       2L -> "a b c d e x2 y2 z2 w2 v2",
       3L -> "a b c d e x3 y3 z3 w3 v3")
-    val out = Dedup.boilerplateCut(d, 5, 1).collect()
+    val out = Dedup.boilerplateCut(d, 5, 1).use(_.collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSeq
     assert(out == Seq(
       (1L, 10, 5, "x1 y1 z1 w1 v1"),
@@ -304,7 +304,7 @@ class DedupSpec extends SparkSpec {
       2L -> "a b c d e x2 y2 z2 w2 v2",
       3L -> "a b c d e x3 y3 z3 w3 v3",
       4L -> "too short")                // < k tokens: zero grams by contract
-    val out = Dedup.memorizationRisk(d, 5, 2).collect()
+    val out = Dedup.memorizationRisk(d, 5, 2).use(_.collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).toSeq
     assert(out == Seq(

@@ -21,11 +21,11 @@ class EditJoinSpec extends SparkSpec {
 
   private def fuzzy(strs: org.apache.spark.sql.DataFrame, d: Int, q: Int = 3) =
     Dedup.editDistancePairs(strs, d, q)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
 
   private def seg(strs: org.apache.spark.sql.DataFrame, d: Int, minSeg: Int = 3) =
     Dedup.editDistancePairsSeg(strs, d, minSeg)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
 
   test("planted typos: equals brute-force pairwise levenshtein") {
     val strs = Seq(
@@ -97,7 +97,7 @@ class EditJoinSpec extends SparkSpec {
   private def probe(batch: org.apache.spark.sql.DataFrame,
                     store: org.apache.spark.sql.DataFrame, d: Int) =
     Dedup.edStorePairs(batch, store, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
 
   test("store probe: equals brute cross levenshtein in both length directions") {
     // batch keys both SHORTER and LONGER than their store partners — the
@@ -140,7 +140,7 @@ class EditJoinSpec extends SparkSpec {
     ).toDF("id", "s")
     val d = 2
     val kept = Dedup.fuzzyKeyGate(batch, store, d)
-      .collect().map(_.getLong(0)).toSeq
+      .use(_.collect()).map(_.getLong(0)).toSeq
     // brute NOT-EXISTS semantics (the q170 oracle's shape)
     val bAll = batch.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val sAll = store.collect().map(r => (r.getLong(0), r.getString(1)))

@@ -53,9 +53,8 @@ class GeometryCutoverSpec extends SparkSpec {
     val (store, out) = (tmp("geo_fz_store"), tmp("geo_fz_out"))
     IngestFuzzy.fuzzySave(spark, fzSeed, store, maxDist = 2, minSeg = 3,
       nBuckets = 4)
-    val (k0, r0) = IngestFuzzy.gateBatch(fzProbe, store)
-    val expect = k0.select("doc_id").collect().map(_.getLong(0)).toSet
-    r0()
+    val expect = IngestFuzzy.gateBatch(fzProbe, store)
+      .use(_.select("doc_id").collect().map(_.getLong(0)).toSet)
     assert(expect == Set(101L))
     // rebalance to a co-prime geometry, then CRASH before the trailing
     // meta write: restore the old meta row (the round-12 silent-miss
@@ -63,16 +62,16 @@ class GeometryCutoverSpec extends SparkSpec {
     IngestFuzzy.fuzzyRebalance(spark, store, 7)
     Seq((2, 3, 4)).toDF("max_dist", "min_seg", "n_buckets")
       .write.mode("overwrite").parquet(s"$store/meta")
-    val (k1, r1) = IngestFuzzy.gateBatch(fzProbe, store)
-    assert(k1.select("doc_id").collect().map(_.getLong(0)).toSet == expect)
-    r1()
+    IngestFuzzy.gateBatch(fzProbe, store).use { k1 =>
+      assert(k1.select("doc_id").collect().map(_.getLong(0)).toSet == expect)
+    }
     // appends in the crash state cut to the DIR geometry: a later
     // probe must re-find the just-appended key
     IngestFuzzy.processBatch(fzProbe, store, out)
     val dup = Seq(200L -> "completely novel key allpha").toDF("doc_id", "key")
-    val (k2, r2) = IngestFuzzy.gateBatch(dup, store)
-    assert(k2.count() == 0L)
-    r2()
+    IngestFuzzy.gateBatch(dup, store).use { k2 =>
+      assert(k2.count() == 0L)
+    }
     // every segs partition carries the NEW geometry's bucket values
     val sbs = spark.read.parquet(s"$store/segs").select("sb").distinct()
       .collect().map(_.getInt(0)).toSet
@@ -81,9 +80,9 @@ class GeometryCutoverSpec extends SparkSpec {
     IngestFuzzy.compactStore(spark, store)
     assert(graft.core.Stores.readGeometry(spark, s"$store/segs")
       .contains(7))
-    val (k3, r3) = IngestFuzzy.gateBatch(dup, store)
-    assert(k3.count() == 0L)
-    r3()
+    IngestFuzzy.gateBatch(dup, store).use { k3 =>
+      assert(k3.count() == 0L)
+    }
   }
 
   test("fuzzy: crash between the swap renames — the next probe heals segs.old back") {
@@ -93,9 +92,9 @@ class GeometryCutoverSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$store/segs"),
       new org.apache.hadoop.fs.Path(s"$store/segs.old")))
-    val (k, r) = IngestFuzzy.gateBatch(fzProbe, store)
-    assert(k.select("doc_id").collect().map(_.getLong(0)).toSet == Set(101L))
-    r()
+    IngestFuzzy.gateBatch(fzProbe, store).use { k =>
+      assert(k.select("doc_id").collect().map(_.getLong(0)).toSet == Set(101L))
+    }
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$store/segs")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$store/segs.old")))
   }

@@ -88,11 +88,16 @@ class IngestDedupSpec extends SparkSpec {
     // sequential batch fold: accumulate kept signatures by hand
     var sigs = Dedup.minhashSignatures(all.limit(0))
     var kept = Set.empty[Long]
-    for (b <- batches) {
-      val surv = Dedup.dedupIncremental(b, sigs, 0.5)
+    // every batch's drop set stays cached until the fold is done: later
+    // batches' store frames read the earlier survivors
+    val scopes = batches.map { b =>
+      val scope = Dedup.dedupIncremental(b, sigs, 0.5)
+      val surv = scope.value
       kept ++= surv.select("doc_id").collect().map(_.getLong(0))
       sigs = sigs.unionByName(Dedup.minhashSignatures(surv))
+      scope
     }
+    scopes.foreach(_.release())
     assert(streamed == kept)
     assert(streamed.nonEmpty)
     info(s"kept ${streamed.size} of ${all.count()} across ${batches.size} batches")

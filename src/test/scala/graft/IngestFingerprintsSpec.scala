@@ -122,13 +122,12 @@ class IngestFingerprintsSpec extends SparkSpec {
       (15L, Seq(5L), 10))         // twin of 13 → drop
     val fps = IngestFingerprints.videoFps(batch)
     def run(maxBandRows: Long): (Set[Long], Set[(Long, Int, Long)]) = {
-      val (k, f, rel) =
-        IngestFingerprints.gateBatch(batch, store, fps, maxBandRows)
-      val kept = k.select("doc_id").collect().map(_.getLong(0)).toSet
-      val fpRows = f.collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      rel()
-      (kept, fpRows)
+      IngestFingerprints.gateBatch(batch, store, fps, maxBandRows).use { case (k, f) =>
+        val kept = k.select("doc_id").collect().map(_.getLong(0)).toSet
+        val fpRows = f.collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+        (kept, fpRows)
+      }
     }
     val (kept1, fps1) = run(1L << 21) // single slice (the default)
     // maxBandRows = 1 → every id folds as its own slice (ids are

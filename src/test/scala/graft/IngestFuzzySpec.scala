@@ -211,7 +211,7 @@ class IngestFuzzySpec extends SparkSpec {
       1L -> "abcdefgh12",   // lev 2 from store → drop
       2L -> "abcdefgh1234") // lev 2 from key 1, lev 4 from store → drop
     assert(Dedup.fuzzyKeyGate(batch.toDF("id", "s"),
-      Seq(100L -> "abcdefgh").toDF("id", "s"), 2).count() == 0L)
+      Seq(100L -> "abcdefgh").toDF("id", "s"), 2).use(_.count()) == 0L)
     assert(IngestFuzzy.processBatch(batch, store, out, maxKeys = 1) == 0L)
     assert(spark.read.parquet(s"$store/keys").count() == 1L)
   }
@@ -255,9 +255,8 @@ class IngestFuzzySpec extends SparkSpec {
     }
     val batch = all.where($"doc_id" >= 200 && $"doc_id" < 300)
     def keptAt(store: String): Set[Long] = {
-      val (kept, rel) = IngestFuzzy.gateBatch(batch, store)
-      val ids = kept.select("doc_id").collect().map(_.getLong(0)).toSet
-      rel(); ids
+      IngestFuzzy.gateBatch(batch, store)
+        .use(_.select("doc_id").collect().map(_.getLong(0)).toSet)
     }
     val store = freshStore(4)
     val before = keptAt(store)
@@ -297,11 +296,11 @@ class IngestFuzzySpec extends SparkSpec {
     val got = pruned.count()
     assert(got < full, s"pruned read ($got) did not prune (store $full)")
     // and the pruned probe still finds the planted 1-edit duplicate
-    val (kept, rel) = IngestFuzzy.gateBatch(
+    IngestFuzzy.gateBatch(
       Seq((9999L, "stored key number 7 with tail 259x"))
-        .toDF("doc_id", "key"), store)
-    assert(kept.count() == 0L)
-    rel()
+        .toDF("doc_id", "key"), store).use { kept =>
+      assert(kept.count() == 0L)
+    }
   }
 
   test("compactStore restores 1 row/key after a duplicated store append") {

@@ -534,6 +534,35 @@ class IngestPipelineSpec extends SparkSpec {
     assert(unsplit._1.nonEmpty)
   }
 
+  test("a failing sink append propagates and releases every gate persist") {
+    import graft.streaming.IngestFuzzy
+    val rows = (0L until 40L).map { i =>
+      (i, s"document $i about topic ${i % 7} with words w$i x${i * 3}",
+        Seq(i.toFloat, (i % 5).toFloat, 1f, (i % 3).toFloat))
+    }
+    val emb = rows.map(r => (r._1, r._3)).toDF("vec_id", "embedding")
+    val batch = rows.toDF("doc_id", "text", "embedding")
+      .withColumn("key", substring($"text", 1, 12))
+      .where($"doc_id" >= 20)
+    val indexPath = tmp("pipefail_index")
+    val seedIdx = Similarity.ivfBuild(emb.where($"vec_id" < 20), 2)
+    Similarity.ivfSave(seedIdx, indexPath)
+    seedIdx.release()
+    val fz = tmp("pipefail_fz")
+    IngestFuzzy.fuzzySave(spark,
+      Seq.empty[(Long, String)].toDF("id", "s"), fz, maxDist = 1)
+    // the kept-docs sink is a regular file: its parquet append throws
+    // after both gates have persisted their frames
+    val notADir = java.io.File.createTempFile("pipefail_out", ".file")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    intercept[Exception] {
+      IngestPipeline.processBatch(batch, 0L, tmp("pipefail_sigs"), notADir.getPath,
+        indexPath, tmp("pipefail_tele"), 0.5, fuzzyStorePath = Some(fz))
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(before)
+    assert(left.isEmpty, s"persisted RDDs left behind by the failed batch: $left")
+  }
+
   test("fuzzy-key gate composes in series: equals the standalone two-gate fold") {
     import graft.streaming.IngestFuzzy
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -592,19 +621,20 @@ class IngestPipelineSpec extends SparkSpec {
     var foldKept = Set.empty[Long]
     var foldSigIds = Set.empty[Long]
     batches.foreach { b =>
-      val (k1, sigs1, rel1) = IngestDedup.gateBatch(b, sigs2, 0.5)
-      val (k2, rel2) = IngestFuzzy.gateBatch(k1, fz2, "key")
-      foldKept ++= k2.select("doc_id").collect().map(_.getLong(0))
-      // the composed contract: fuzzy keys grow by the doubly-gated set,
-      // signatures by the CONTENT-gate survivors (fuzzy-dropped docs'
-      // content is still seen — and the frame's lineage never reads the
-      // fuzzy store, the two-store refreshByPath discipline)
-      foldSigIds ++= sigs1.select("doc_id").collect().map(_.getLong(0))
-      IngestFuzzy.appendKeys(spark, fz2,
-        k2.where($"key".isNotNull)
-          .select($"doc_id".cast("long").as("id"), $"key".as("s")))
-      sigs1.write.mode("append").parquet(sigs2)
-      rel2(); rel1()
+      IngestDedup.gateBatch(b, sigs2, 0.5)
+        .flatMap { case (k1, sigs1) => IngestFuzzy.gateBatch(k1, fz2, "key").map((_, sigs1)) }
+        .use { case (k2, sigs1) =>
+          foldKept ++= k2.select("doc_id").collect().map(_.getLong(0))
+          // the composed contract: fuzzy keys grow by the doubly-gated set,
+          // signatures by the CONTENT-gate survivors (fuzzy-dropped docs'
+          // content is still seen — and the frame's lineage never reads the
+          // fuzzy store, the two-store refreshByPath discipline)
+          foldSigIds ++= sigs1.select("doc_id").collect().map(_.getLong(0))
+          IngestFuzzy.appendKeys(spark, fz2,
+            k2.where($"key".isNotNull)
+              .select($"doc_id".cast("long").as("id"), $"key".as("s")))
+          sigs1.write.mode("append").parquet(sigs2)
+        }
     }
     assert(keptIds == foldKept)
 
@@ -689,16 +719,18 @@ class IngestPipelineSpec extends SparkSpec {
       Seq.empty[(Long, Long)].toDF("id", "h"), im2, maxHamming = 2)
     var foldKept = Set.empty[Long]
     batches.foreach { b =>
-      val (k1, sigs1, rel1) = IngestDedup.gateBatch(b, sigs2, 0.5)
-      val (k2, rel2) = IngestFuzzy.gateBatch(k1, fz2, "key")
-      val (k3, kh, rel3) = IngestImages.gateBatch(k2, im2)
-      foldKept ++= k3.select("doc_id").collect().map(_.getLong(0))
-      IngestImages.appendHashes(spark, im2, kh)
-      IngestFuzzy.appendKeys(spark, fz2,
-        k2.where($"key".isNotNull)
-          .select($"doc_id".cast("long").as("id"), $"key".as("s")))
-      sigs1.write.mode("append").parquet(sigs2)
-      rel3(); rel2(); rel1()
+      IngestDedup.gateBatch(b, sigs2, 0.5).use { case (k1, sigs1) =>
+        IngestFuzzy.gateBatch(k1, fz2, "key").use { k2 =>
+          IngestImages.gateBatch(k2, im2).use { case (k3, kh) =>
+            foldKept ++= k3.select("doc_id").collect().map(_.getLong(0))
+            IngestImages.appendHashes(spark, im2, kh)
+            IngestFuzzy.appendKeys(spark, fz2,
+              k2.where($"key".isNotNull)
+                .select($"doc_id".cast("long").as("id"), $"key".as("s")))
+            sigs1.write.mode("append").parquet(sigs2)
+          }
+        }
+      }
     }
     assert(keptIds == foldKept)
 

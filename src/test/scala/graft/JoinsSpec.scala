@@ -27,7 +27,7 @@ class JoinsSpec extends SparkSpec {
       .toDF("d", "l_quantity")
       .selectExpr("CAST(d AS TIMESTAMP) AS l_shipdate", "l_quantity")
     val o = orders(("2024-02-10", 1.0, "P"), ("2024-02-11", 1.0, "P"))
-    val out = Joins.antiOverlay(li, o).collect()
+    val out = Joins.antiOverlay(li, o).use(_.collect())
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
     assert(out.toSet == Set(("2024-01", 1L, "base"), ("2024-02", 2L, "patch")))
   }

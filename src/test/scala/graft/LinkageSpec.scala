@@ -210,7 +210,7 @@ class LinkageSpec extends SparkSpec {
     // edit join's pairs at the same d
     val exact = Dedup.editDistancePairsSeg(
         docs.selectExpr("id", "skey AS s"), d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     val snmSet = got.map(p => (p._1, p._2)).toSet
     assert(snmSet.subsetOf(exact))
     info(f"SNM recall vs exact edit join: ${snmSet.size}/${exact.size} " +
@@ -299,10 +299,8 @@ class LinkageSpec extends SparkSpec {
     Linkage.emWeights(prm).values.foreach { case (wA, wD) =>
       assert(wA > 0 && wD < 0) }
     // posterior scoring at the Bayes point recovers the planted matches
-    val (postDf, release) = Linkage.emPosteriorsScoped(a, b, emRules, 500000L)
-    val hits =
-      try postDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally release()
+    val hits = Linkage.emPosteriors(a, b, emRules, 500000L)
+      .use(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val matched = ents.map(e => (e, 1000L + e)).toSet
     val recall = (hits & matched).size.toDouble / matched.size
     val precision = if (hits.isEmpty) 0.0 else (hits & matched).size.toDouble / hits.size
@@ -420,13 +418,13 @@ class LinkageSpec extends SparkSpec {
     val links = Seq((1L, 101L, 5), (2L, 101L, 5), (2L, 102L, 5), (3L, 102L, 5))
       .toDF("id_a", "id_b", "score")
     val got = Linkage.entityClusters(a, b, links)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(Seq(1L, 2L, 3L, 101L, 102L).forall(got(_) == 1L))
     assert(got(10L) == 10L && got(110L) == 110L)
     assert(got.size == 7)
     // empty link set: every record is its own entity
     val none = Linkage.entityClusters(a, b, links.limit(0))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1)))
     assert(none.forall(p => p._1 == p._2) && none.length == 7)
   }
 

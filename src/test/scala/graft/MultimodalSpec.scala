@@ -223,7 +223,7 @@ class MultimodalSpec extends SparkSpec {
       (0L until 30L by 3L).map(i => (i + 1000L, i, 40))
     val ds = Multimodal.patternImages(spark, specs, 36, 32)
     val pairs = Multimodal.imageNearDupPairs(ds, maxHamming = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val planted = (0L until 30L by 3L).map(i => (i, i + 1000L)).toSet
     val got = pairs.map(p => (p._1, p._2)).toSet
     assert(planted.subsetOf(got), s"missing ${planted -- got}")
@@ -231,7 +231,7 @@ class MultimodalSpec extends SparkSpec {
       assert(hm <= 2, s"($a,$b) hamming $hm leaked past the verify") }
     // closure: every variant labels back to its base id
     val comp = Multimodal.imageDupComponents(ds, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toMap
     (0L until 30L by 3L).foreach(i => assert(comp(i + 1000L) == comp(i)))
     assert(comp.size == specs.size)
   }
@@ -269,7 +269,7 @@ class MultimodalSpec extends SparkSpec {
       (0L until 20L by 2L).map(i => (i + 1000L, i, 250))
     val pairs = Multimodal.audioNearDupPairs(
         Multimodal.patternAudio(spark, specs, 1600), maxHamming = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (0L until 20L by 2L).map(i => (i, i + 1000L)).toSet
     assert(planted.subsetOf(pairs), s"missing ${planted -- pairs}")
   }
@@ -355,7 +355,7 @@ class MultimodalSpec extends SparkSpec {
     (0 to 3).foreach { k =>
       assert(java.lang.Long.bitCount(hashes(0L) ^ hashes(k.toLong)) == k) }
     val got = Multimodal.imageNearDupPairs(ds, maxHamming = 2)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
+      .use(_.collect()).map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     val want = (for {
       a <- 0L to 3L; b <- 0L to 3L if a < b
       hm = java.lang.Long.bitCount(hashes(a) ^ hashes(b)) if hm <= 2
@@ -408,7 +408,7 @@ class MultimodalSpec extends SparkSpec {
     val ds = clips.map { case (id, wav) =>
       MediaRow(id, "audio", wav, MediaMeta(0, 0, 100L, "wav")) }.toDS()
     val got = Multimodal.audioNearDupPairs(ds, maxHamming = 2)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
+      .use(_.collect()).map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(got == wantD.filter(_._2 <= 2),
       s"got=$got want=${wantD.filter(_._2 <= 2)}")
   }
@@ -469,7 +469,7 @@ class MultimodalSpec extends SparkSpec {
       (0 until 64).map(i => (i + 1L, base ^ (1L << i))) ++
       Seq((100L, base ^ 7L))
     val got = graft.operators.Dedup.hammingPairs(rows.toDF("id", "h"), 64, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val byPair = got.map(p => ((p._1, p._2), p._3)).toMap
     // brute-force reference over the 66-row set
     val want = (for {

@@ -140,11 +140,10 @@ class PlanAuditSpec extends SparkSpec {
     // may still broadcast from exact runtime sizes).
     import graft.operators.Dedup
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    for ((name, build) <- Seq[(String, () => (org.apache.spark.sql.DataFrame, () => Unit))](
-        "exactSubstrCut" -> (() => Dedup.exactSubstrCutScoped(docs, 5)),
-        "boilerplateCut" -> (() => Dedup.boilerplateCutScoped(docs, 5, 25)))) {
-      val (df, release) = build()
-      try {
+    for ((name, build) <- Seq[(String, () => graft.core.Scoped[org.apache.spark.sql.DataFrame])](
+        "exactSubstrCut" -> (() => Dedup.exactSubstrCut(docs, 5)),
+        "boilerplateCut" -> (() => Dedup.boilerplateCut(docs, 5, 25)))) {
+      build().use { df =>
         // boilerplateCut's one INTENDED broadcast is the topN-row
         // heavy-hitter list (inner join); everything density-scaled —
         // the dup-gram join-back and the coverage left join — must
@@ -156,7 +155,7 @@ class PlanAuditSpec extends SparkSpec {
         }
         assert(broadcasts.isEmpty,
           s"$name statically broadcasts a density-scaled join side")
-      } finally release()
+      }
     }
   }
 
@@ -248,9 +247,8 @@ class PlanAuditSpec extends SparkSpec {
       (col("n_chars") % 7).cast("double").as("score"))
     val labels = docs.select(col("doc_id"),
       (col("doc_id") % 2).cast("long").as("label"))
-    val (auc, relA) = TrainingData.scoreAucScoped(scored, labels)
-    val (cal, relC) = TrainingData.scoreCalibrationScoped(scored, labels, 10)
-    try
+    TrainingData.scoreAuc(scored, labels).use { auc =>
+    TrainingData.scoreCalibration(scored, labels, 10).use { cal =>
       for ((name, df) <- Seq("scoreAuc" -> auc, "scoreCalibration" -> cal)) {
         val ws = df.queryExecution.sparkPlan.collectWithSubqueries {
           case w: WindowExec => w
@@ -265,7 +263,7 @@ class PlanAuditSpec extends SparkSpec {
         assert(ws.exists(_.partitionSpec.nonEmpty),
           s"$name lost its score-partitioned per-row window")
       }
-    finally { relA(); relC() }
+    }}
   }
 
   test("q134 kNN join: probe is a pure projection; candidates are a list_id equi-join, never cartesian") {
@@ -280,8 +278,7 @@ class PlanAuditSpec extends SparkSpec {
     import graft.operators.Similarity
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val (res, release) = Similarity.knnJoinScoped(emb, 5)
-    try {
+    Similarity.knnJoin(emb, 5).use { res =>
       val p = res.queryExecution.sparkPlan
       assert(p.collectWithSubqueries {
         case c: CartesianProductExec => c
@@ -301,7 +298,7 @@ class PlanAuditSpec extends SparkSpec {
       // scan partitioning (measured 2.5× on the PQ rung)
       assert(!equi.exists(_.isInstanceOf[BroadcastHashJoinExec]),
         "corpus-side candidate join statically broadcasts the list frame")
-    } finally release()
+    }
   }
 
   test("q152 PQ kNN join: codes decode in the scan pipeline, no float corpus before refine") {
@@ -316,8 +313,7 @@ class PlanAuditSpec extends SparkSpec {
     import graft.operators.Similarity
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val (res, release) = Similarity.knnJoinPqScoped(emb, 5, m = 8)
-    try {
+    Similarity.knnJoinPq(emb, 5, m = 8).use { res =>
       val p = res.queryExecution.sparkPlan
       assert(p.collectWithSubqueries {
         case c: CartesianProductExec => c
@@ -342,7 +338,7 @@ class PlanAuditSpec extends SparkSpec {
         "packed candidate join statically broadcasts — post-join work loses shuffle parallelism")
       assert(p.toString.contains("pq_decode"),
         "candidate scoring no longer decodes codes inline (pq_decode missing)")
-    } finally release()
+    }
   }
 
   test("q140/q154 SQ8 and OPQ kNN joins: candidate join never statically broadcasts, no cartesian") {
@@ -356,9 +352,9 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val shapes = Seq(
-      "q140_sq8" -> Similarity.knnJoinSq8Scoped(emb, 5),
-      "q154_opq" -> Similarity.knnJoinOpqScoped(emb, 5, m = 8))
-    for ((name, (res, release)) <- shapes) try {
+      "q140_sq8" -> Similarity.knnJoinSq8(emb, 5),
+      "q154_opq" -> Similarity.knnJoinOpq(emb, 5, m = 8))
+    for ((name, scoped) <- shapes) scoped.use { res =>
       val p = res.queryExecution.sparkPlan
       assert(p.collectWithSubqueries {
         case c: CartesianProductExec => c
@@ -373,7 +369,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(listJoins.nonEmpty, s"$name lost its list_id equi-join")
       assert(!listJoins.exists(_.isInstanceOf[BroadcastHashJoinExec]),
         s"$name candidate join statically broadcasts — post-join ADC loses shuffle parallelism")
-    } finally release()
+    }
   }
 
   test("q146 theta overlap: no join keyed by the gram column anywhere in the plan") {
@@ -406,16 +402,15 @@ class PlanAuditSpec extends SparkSpec {
     import graft.operators.Dedup
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val (pairs, release) = Dedup.crossNearDupsScoped(
-      docs.where(col("doc_id") >= 40), docs.where(col("doc_id") < 40), 0.5)
-    try {
+    Dedup.crossNearDups(
+      docs.where(col("doc_id") >= 40), docs.where(col("doc_id") < 40), 0.5).use { pairs =>
       val bandBroadcasts = pairs.queryExecution.sparkPlan.collectWithSubqueries {
         case b: BroadcastHashJoinExec
           if b.leftKeys.exists(_.references.exists(_.name == "band")) => b
       }
       assert(bandBroadcasts.isEmpty,
         "cross-corpus band join statically broadcasts a band-row side")
-    } finally release()
+    }
   }
 
   test("hashEmbed: one scan, one doc_id-keyed aggregation shuffle, no join, no window") {

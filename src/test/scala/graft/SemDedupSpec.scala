@@ -15,7 +15,7 @@ class SemDedupSpec extends SparkSpec {
 
   test("semDedupPairs: precision 1.0, recall >= 0.8 vs exact all-pairs") {
     val exact = Similarity.cosineNearDupPairs(emb, Long.MaxValue, 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "testdata must contain cosine near-dup pairs")
     val got = Similarity.semDedupPairs(emb, 8, 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -37,7 +37,7 @@ class SemDedupSpec extends SparkSpec {
 
   test("semDedupPairsPQ: product-key blocking keeps precision 1.0, recall >= 0.8") {
     val exact = Similarity.cosineNearDupPairs(emb, Long.MaxValue, 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     // sizing per the N/targetClusterRows guidance: 500 vectors → ~8
     // effective cells → kPerHalf 3 (blocking finer than the guidance
     // sheds boundary pairs — kPerHalf=8 here measured recall 0.65)
@@ -70,10 +70,9 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("semDedupPairs leaves no new persisted RDDs behind") {
-    // the session is shared across suites — assert no NEW cache entries
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // SparkSpec tracks the suite's persists; none may outlive the call
     Similarity.semDedupPairs(emb, 8, 0.4).count()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    val leaked = newPersists.keySet
     assert(leaked.isEmpty, s"semDedupPairs leaked persisted RDDs: $leaked")
   }
 }

@@ -110,8 +110,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("diversitySample: per-cluster cap, deterministic, exact output size") {
     val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val (res, release) = Similarity.diversitySampleScoped(all, 4, 30)
-    try {
+    Similarity.diversitySample(all, 4, 30).use { res =>
       val rows = res.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
       // cap respected in every cluster
       val perCluster = rows.groupBy(_._2).view.mapValues(_.length).toMap
@@ -127,11 +126,11 @@ class SimilaritySpec extends SparkSpec {
       val expected = sizes.values.map(n => math.min(n, 30L)).sum
       assert(rows.length.toLong == expected)
       // deterministic: seeded kmeans + hash rank -> identical re-run
-      val (res2, releaseB) = Similarity.diversitySampleScoped(all, 4, 30)
-      try assert(res2.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
-        == rows.toSeq)
-      finally releaseB()
-    } finally release()
+      Similarity.diversitySample(all, 4, 30).use { res2 =>
+        assert(res2.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+          == rows.toSeq)
+      }
+    }
   }
 
   test("ivfAppend: twins land in their duplicate's list; disk append survives reload") {
@@ -189,7 +188,7 @@ class SimilaritySpec extends SparkSpec {
     val b = Seq(0.99f, 0.01f, 0.0f, 0.0f)
     val c = Seq(0.0f, 1.0f, 0.0f, 0.0f)
     val out = Similarity.cosineNearDupPairs(emb((1L, a), (2L, b), (3L, c)), 100L, 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSet == Set((1L, 2L)))
   }
 
@@ -217,9 +216,8 @@ class SimilaritySpec extends SparkSpec {
         .map { case (v, ve) => (v, cos(qe, ve)) }
         .sortBy { case (v, c) => (-c, v) }.take(5).map(_._1).toSet
     }.toMap
-    val got = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25)
-    val out = got.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    got.unpersist(blocking = false)
+    val out = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     out.foreach { case (q, _, v) => assert(q != v, s"self match $q") }
     val byQ = out.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
     assert(byQ.size == vecs.length)          // every vector got neighbors
@@ -227,18 +225,16 @@ class SimilaritySpec extends SparkSpec {
       gold(q).intersect(byQ(q)).size.toDouble / gold(q).size
     }.sum / vecs.length
     assert(recall >= 0.9, s"mean recall@5 $recall < 0.9")
-    val again = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25)
-    val out2 = again.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    again.unpersist(blocking = false)
+    val out2 = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(out2.toSeq == out.toSeq)
     // scanFrac = 1.0 probes every list: the exact brute-force join.
     // Driver gold mirrors the engine's float ops (s/(√na·√nb)) so the
     // comparison is bit-for-bit, not tolerance-based.
-    val full = Similarity.knnJoin(d, 5, targetClusterRows = 25,
+    val fullRows = Similarity.knnJoin(d, 5, targetClusterRows = 25,
       scanFrac = Some(1.0))
-    val fullRows = full.collect()
+      .use(_.collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    full.unpersist(blocking = false)
     val goldRows = vecs.flatMap { case (q, qe) =>
       vecs.filter(_._1 != q)
         .map { case (v, ve) => (v, cos(qe, ve)) }
@@ -262,14 +258,12 @@ class SimilaritySpec extends SparkSpec {
     // exhaustive dial: candidate pool is the whole corpus per query,
     // float refine then reproduces the brute-force float ranking
     // whenever the true top-5 sits inside the ADC top-20 pool
-    val full = Similarity.knnJoin(d, 5, targetClusterRows = 25,
+    val fullRows = Similarity.knnJoin(d, 5, targetClusterRows = 25,
       scanFrac = Some(1.0))
-    val fullRows = full.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    full.unpersist(blocking = false)
-    val sq8 = Similarity.knnJoinSq8(d, 5, targetClusterRows = 25,
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val sq8Rows = Similarity.knnJoinSq8(d, 5, targetClusterRows = 25,
       refine = 4, scanFrac = Some(1.0))
-    val sq8Rows = sq8.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    sq8.unpersist(blocking = false)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     sq8Rows.foreach { case (q, _, v) => assert(q != v, s"self match $q") }
     val fullByQ = fullRows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
     val sq8ByQ = sq8Rows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
@@ -279,12 +273,10 @@ class SimilaritySpec extends SparkSpec {
     }.sum / fullByQ.size
     assert(recall >= 0.95, s"SQ8 refined recall@5 $recall < 0.95 vs float path")
     // probed mode stays deterministic
-    val p1 = Similarity.knnJoinSq8(d, 5, nProbe = 2, targetClusterRows = 25)
-    val r1 = p1.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    p1.unpersist(blocking = false)
-    val p2 = Similarity.knnJoinSq8(d, 5, nProbe = 2, targetClusterRows = 25)
-    val r2 = p2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    p2.unpersist(blocking = false)
+    val r1 = Similarity.knnJoinSq8(d, 5, nProbe = 2, targetClusterRows = 25)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val r2 = Similarity.knnJoinSq8(d, 5, nProbe = 2, targetClusterRows = 25)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(r1.toSeq == r2.toSeq)
   }
 
@@ -301,15 +293,13 @@ class SimilaritySpec extends SparkSpec {
       (i, c.toSeq.map(x => (x + 0.05 * rng.nextGaussian()).toFloat))
     }
     val d = emb(rows: _*)
-    val full = Similarity.knnJoin(d, 5, targetClusterRows = 25,
+    val fullByQ = Similarity.knnJoin(d, 5, targetClusterRows = 25,
       scanFrac = Some(1.0))
-    val fullByQ = full.collect().map(r => (r.getLong(0), r.getLong(2)))
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    full.unpersist(blocking = false)
-    val pq = Similarity.knnJoinPq(d, 5, targetClusterRows = 25, m = 4,
+    val pqRows = Similarity.knnJoinPq(d, 5, targetClusterRows = 25, m = 4,
       refine = 8, scanFrac = Some(1.0))
-    val pqRows = pq.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    pq.unpersist(blocking = false)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     pqRows.foreach { case (q, _, v) => assert(q != v, s"self match $q") }
     val pqByQ = pqRows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
     assert(pqByQ.size == rows.length)
@@ -319,12 +309,10 @@ class SimilaritySpec extends SparkSpec {
     info(s"PQ refined recall@5 = $recall")
     assert(recall >= 0.85, s"PQ refined recall@5 $recall < 0.85 vs float path")
     // probed mode deterministic
-    val p1 = Similarity.knnJoinPq(d, 5, nProbe = 2, targetClusterRows = 25, m = 4)
-    val r1 = p1.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    p1.unpersist(blocking = false)
-    val p2 = Similarity.knnJoinPq(d, 5, nProbe = 2, targetClusterRows = 25, m = 4)
-    val r2 = p2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    p2.unpersist(blocking = false)
+    val r1 = Similarity.knnJoinPq(d, 5, nProbe = 2, targetClusterRows = 25, m = 4)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val r2 = Similarity.knnJoinPq(d, 5, nProbe = 2, targetClusterRows = 25, m = 4)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(r1.toSeq == r2.toSeq)
   }
 
@@ -340,15 +328,13 @@ class SimilaritySpec extends SparkSpec {
       (i, c.toSeq.map(x => (x + 0.05 * rng.nextGaussian()).toFloat))
     }
     val d = emb(rows: _*)
-    val full = Similarity.knnJoin(d, 5, targetClusterRows = 25,
+    val fullByQ = Similarity.knnJoin(d, 5, targetClusterRows = 25,
       scanFrac = Some(1.0))
-    val fullByQ = full.collect().map(r => (r.getLong(0), r.getLong(2)))
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    full.unpersist(blocking = false)
-    val opq = Similarity.knnJoinOpq(d, 5, targetClusterRows = 25, m = 4,
+    val opqRows = Similarity.knnJoinOpq(d, 5, targetClusterRows = 25, m = 4,
       refine = 8, iters = 4, scanFrac = Some(1.0))
-    val opqRows = opq.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    opq.unpersist(blocking = false)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     opqRows.foreach { case (q, _, v) => assert(q != v, s"self match $q") }
     val byQ = opqRows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
     assert(byQ.size == rows.length)
@@ -357,14 +343,12 @@ class SimilaritySpec extends SparkSpec {
     }.sum / fullByQ.size
     info(s"OPQ refined recall@5 = $recall")
     assert(recall >= 0.85, s"OPQ refined recall@5 $recall < 0.85 vs float path")
-    val p1 = Similarity.knnJoinOpq(d, 5, nProbe = 2, targetClusterRows = 25,
+    val r1 = Similarity.knnJoinOpq(d, 5, nProbe = 2, targetClusterRows = 25,
       m = 4, iters = 4)
-    val r1 = p1.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    p1.unpersist(blocking = false)
-    val p2 = Similarity.knnJoinOpq(d, 5, nProbe = 2, targetClusterRows = 25,
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val r2 = Similarity.knnJoinOpq(d, 5, nProbe = 2, targetClusterRows = 25,
       m = 4, iters = 4)
-    val r2 = p2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    p2.unpersist(blocking = false)
+      .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(r1.toSeq == r2.toSeq)
   }
 
@@ -407,15 +391,13 @@ class SimilaritySpec extends SparkSpec {
     val pDir = java.nio.file.Files.createTempDirectory("knn_ivfpq").toString
     val pqBuilt = Similarity.ivfPqBuild(d, nList = 4, m = 4)
     try {
-      val (res, rel) = Similarity.knnJoinPqIndexed(d, pqBuilt, 5, nProbe = 2)
-      val before = res.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-      rel()
+      val before = Similarity.knnJoinPqIndexed(d, pqBuilt, 5, nProbe = 2)
+        .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       Similarity.ivfPqSave(pqBuilt, pDir)
       val loaded = Similarity.ivfPqLoad(spark, pDir)
       try {
-        val (res2, rel2) = Similarity.knnJoinPqIndexed(d, loaded, 5, nProbe = 2)
-        val after = res2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-        rel2()
+        val after = Similarity.knnJoinPqIndexed(d, loaded, 5, nProbe = 2)
+          .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
         assert(after == before)
       } finally loaded.release()
     } finally pqBuilt.release()
@@ -423,9 +405,8 @@ class SimilaritySpec extends SparkSpec {
     val oDir = java.nio.file.Files.createTempDirectory("knn_ivfopq").toString
     val opqBuilt = Similarity.ivfOpqBuild(d, nList = 4, m = 4, iters = 4)
     try {
-      val (res, rel) = Similarity.knnJoinOpqIndexed(d, opqBuilt, 5, nProbe = 2)
-      val before = res.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-      rel()
+      val before = Similarity.knnJoinOpqIndexed(d, opqBuilt, 5, nProbe = 2)
+        .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       // the one-call scoped form must agree with its own build when the
       // dials match (targetClusterRows sized so autoK lands on nList=4
       // is corpus-dependent, so pin indexed-vs-indexed reload instead)
@@ -434,9 +415,8 @@ class SimilaritySpec extends SparkSpec {
       try {
         assert(loaded.dim == opqBuilt.dim &&
           loaded.rot.toSeq == opqBuilt.rot.toSeq)
-        val (res2, rel2) = Similarity.knnJoinOpqIndexed(d, loaded, 5, nProbe = 2)
-        val after = res2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-        rel2()
+        val after = Similarity.knnJoinOpqIndexed(d, loaded, 5, nProbe = 2)
+          .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
         assert(after == before)
         // ivfOpqSearch is reload-stable too (same rotation, lists, LUTs)
         val qs = d.where(org.apache.spark.sql.functions.col("vec_id") < 5)

@@ -4,23 +4,39 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (same configs as Verify). */
+/** Shared local SparkSession for all suites (the engine's session
+  * settings, `graft.core.Session`), plus the persist-leak check: every
+  * RDD a suite persists must be released by the time the suite ends.
+  * A suite that leaves one behind fails in `afterAll`, naming the RDDs
+  * (the leaked entries are dropped first, so later suites start clean). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // csv column pruning skips token-count validation for unread
-      // fields — readCsvs requires it OFF session-wide for malformed-row
-      // parity (see readCsvs contract); set it here like nanosAsLong so
-      // the invariant holds regardless of call order.
-      .config("spark.sql.csv.parser.columnPruning.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    graft.core.Session.builder(4).appName("graft-test").getOrCreate()
+
+  private var persistedAtStart: Set[Int] = Set.empty
+
+  /** Persisted RDDs created since the suite started and still held:
+    * id → name. */
+  def newPersists: Map[Int, String] =
+    spark.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if !persistedAtStart(id) => id -> String.valueOf(rdd.name)
+    }.toMap
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    persistedAtStart = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
 
   override def afterAll(): Unit = {
-    // keep the session alive across suites (getOrCreate shares it)
+    // the session stays alive across suites (getOrCreate shares it)
+    val leaked = newPersists
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (leaked.contains(id)) rdd.unpersist(blocking = false)
+    }
+    super.afterAll()
+    if (leaked.nonEmpty)
+      fail(s"${getClass.getSimpleName} left ${leaked.size} persisted RDD(s) behind: " +
+        leaked.toSeq.sortBy(_._1).map { case (id, n) =>
+          s"#$id ${n.replaceAll("\\s+", " ").take(160)}" }.mkString("; "))
   }
 }

@@ -63,7 +63,7 @@ class TextAnalysisSpec extends SparkSpec {
     val t = "the quick brown fox jumps over the lazy dog repeatedly"
     val out = TextAnalysis.winnowPairs(
       docs((1L, t, "en"), (2L, t, "en"), (3L, "completely different content here okay", "en")),
-      100L, 8, 4, 0.8).collect()
+      100L, 8, 4, 0.8).use(_.collect())
     assert(out.length == 1)
     assert(out.head.getLong(0) == 1L && out.head.getLong(1) == 2L)
     assert(out.head.getDouble(3) == 1.0) // identical text → full containment
@@ -79,12 +79,12 @@ class TextAnalysisSpec extends SparkSpec {
     // uncapped: the boilerplate fingerprints put MANY unrelated docs over
     // the containment bar (they share most of their winnowed set)
     val uncapped = TextAnalysis.winnowPairs(docs(rows: _*), 100L, 8, 4, 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(uncapped.size > 1)
     // capped at df <= 2: boilerplate (present in all 12) drops out of the
     // index, only the genuine duplicate pair survives
     val capped = TextAnalysis.winnowPairs(docs(rows: _*), 100L, 8, 4, 0.8, maxDocFreq = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((1L, 2L)), s"got $capped")
   }
 

@@ -34,13 +34,14 @@ class TokenClassifierSpec extends SparkSpec {
     val docs = (0L until 80L).map(doc).toDF("doc_id", "text")
     val labels = docs.where($"doc_id" < 40)
       .select($"doc_id", ($"doc_id" % 2 === 0).as("label"))
-    val scored = TrainingData.tokenClassifier(docs, labels)
-    val preds = scored.collect().map(r => (r.getLong(0), r.getBoolean(3))).toMap
-    assert((0L until 80L).forall(i => preds(i) == (i % 2 == 0)))
-    // n_tok and all-integer score present
-    val row = scored.where($"doc_id" === 41L).head()
-    assert(row.getLong(1) == 12L)
-    assert(row.getLong(2) < 0L)
+    TrainingData.tokenClassifier(docs, labels).use { scored =>
+      val preds = scored.collect().map(r => (r.getLong(0), r.getBoolean(3))).toMap
+      assert((0L until 80L).forall(i => preds(i) == (i % 2 == 0)))
+      // n_tok and all-integer score present
+      val row = scored.where($"doc_id" === 41L).head()
+      assert(row.getLong(1) == 12L)
+      assert(row.getLong(2) < 0L)
+    }
   }
 
   test("unseen tokens back off through the smoothed formula") {
@@ -48,7 +49,7 @@ class TokenClassifierSpec extends SparkSpec {
     val labels = Seq((1L, true), (2L, false)).toDF("doc_id", "label")
     // np = nn = 2, v = 2 → w_unseen = (1e6 div 4) - (1e6 div 4) = 0
     val r3 = TrainingData.tokenClassifier(docs, labels)
-      .where($"doc_id" === 3L).head()
+      .use(_.where($"doc_id" === 3L).head())
     assert(r3.getLong(2) == 0L && !r3.getBoolean(3))
   }
 
@@ -57,7 +58,7 @@ class TokenClassifierSpec extends SparkSpec {
     val labels = docs.selectExpr("doc_id", "lang = 'en' AS label")
       .where("doc_id < 50")
     def run() = TrainingData.tokenClassifier(docs, labels)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
+      .use(_.collect()).map(r => (r.getLong(0), r.getLong(2))).toSeq
     assert(run() == run())
   }
 
@@ -73,10 +74,8 @@ class TokenClassifierSpec extends SparkSpec {
       (12L, "x"),      // a: 666666 vs b: 500000 → a
       (13L, "qq oov only")).toDF("doc_id", "text") // zero seen → fallback 'a'
     val labels = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "cls")
-    val (res, release) = TrainingData.multiClassifierScoped(docs, labels)
-    val got = res
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    release()
+    val got = TrainingData.multiClassifier(docs, labels)
+      .use(_.collect()).map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got == Seq(
       (1L, "a", 3L, 1666665L),
       (2L, "b", 2L, 1000000L),
@@ -102,9 +101,8 @@ class TokenClassifierSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val labels = Seq((1L, "de"), (2L, "de"), (3L, "fr"), (4L, "fr"),
       (5L, "en"), (6L, "en")).toDF("doc_id", "cls")
-    val (mres, mrelease) = TrainingData.multiClassifierScoped(docs, labels)
-    val preds = mres.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    mrelease()
+    val preds = TrainingData.multiClassifier(docs, labels)
+      .use(_.collect()).map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(preds(100L) == "de" && preds(101L) == "fr" && preds(102L) == "en")
     assert(preds(103L) == "de")
     // and the training docs recover their own labels
@@ -127,12 +125,8 @@ class TokenClassifierSpec extends SparkSpec {
   test("multiclass on documents: deterministic, full coverage") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val labels = docs.selectExpr("doc_id", "lang AS cls").where("doc_id < 250")
-    def run() = {
-      val (res, release) = TrainingData.multiClassifierScoped(docs, labels)
-      val out = res.collect().map(_.toSeq).toSeq
-      release()
-      out
-    }
+    def run() = TrainingData.multiClassifier(docs, labels)
+      .use(_.collect()).map(_.toSeq).toSeq
     val a = run()
     assert(a.size.toLong == docs.count()) // the fallback covers every doc
     assert(a == run())

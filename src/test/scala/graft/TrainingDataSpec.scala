@@ -134,7 +134,7 @@ class TrainingDataSpec extends SparkSpec {
       1L -> "alpha beta gamma delta",  // shingles: abc, bcd — abc shared with doc 2
       2L -> "alpha beta gamma epsilon", // abg... shares 'alpha beta gamma' with 1
       3L -> "zeta eta theta iota")      // nothing shared
-    val out = TrainingData.dupNgramFraction(d, 3, 0.6).collect()
+    val out = TrainingData.dupNgramFraction(d, 3, 0.6).use(_.collect())
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(4)))).toMap
     // each doc has 2 trigrams; docs 1/2 share exactly 'alpha beta gamma'
     assert(out(1L) == ((2L, 1L, true)))
@@ -142,7 +142,7 @@ class TrainingDataSpec extends SparkSpec {
     assert(out(3L) == ((2L, 0L, true)))
     // a doc that IS boilerplate: all shingles shared -> keep=false
     val rep = docs(1L -> "one two three four", 2L -> "one two three four")
-    val o2 = TrainingData.dupNgramFraction(rep, 3, 0.6).collect()
+    val o2 = TrainingData.dupNgramFraction(rep, 3, 0.6).use(_.collect())
       .map(r => r.getLong(0) -> ((r.getDouble(3), r.getBoolean(4)))).toMap
     assert(o2(1L) == ((1.0, false)) && o2(2L) == ((1.0, false)))
   }
@@ -193,9 +193,8 @@ class TrainingDataSpec extends SparkSpec {
       (10L, "the cat sat on the mat"),          // every bigram seen in train
       (11L, "purple quantum zebras juggle flaming accordions")) // none seen
       .toDF("doc_id", "text")
-    val (res, release) = TrainingData.lmQualityScoreScoped(score, train)
-    val out = res.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    release()
+    val out = TrainingData.lmQualityScore(score, train)
+      .use(_.collect()).map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out.keySet == Set(10L, 11L))
     assert(out(10L) > out(11L), s"train-like must outscore novel: $out")
     assert(out.values.forall(s => s >= 0.0 && s <= 1.0))
@@ -208,7 +207,7 @@ class TrainingDataSpec extends SparkSpec {
     // c(b,a)=1; contexts c1(a)=2, c1(b)=1; vocab V = |{a, b}| = 2
     val train = Seq((1L, "a b a b")).toDF("doc_id", "text")
     val score = Seq((10L, "a b")).toDF("doc_id", "text")
-    val out = TrainingData.lmQualityScore(score, train).collect()
+    val out = TrainingData.lmQualityScore(score, train).use(_.collect())
     // ppm(a->b) = (2+1)*1e6 div (2+2) = 750000; score = 750000/1e6
     assert(out.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ==
       Seq((10L, 1L, 0.75)))
@@ -221,13 +220,13 @@ class TrainingDataSpec extends SparkSpec {
       3L -> "xx yy xx yy xx yy",
       4L -> "xx zz xx zz xx zz")
     val target = d.where(org.apache.spark.sql.functions.col("doc_id") === 1L)
-    val out = TrainingData.dsirSelect(d, target, 2).collect()
+    val out = TrainingData.dsirSelect(d, target, 2).use(_.collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     // top-2 are the aa/bb-vocabulary docs, ordered weight desc
     assert(out.map(_._1) == Seq(1L, 2L))
     assert(out.head._3 > 0, "target doc must score positive")
     // off-target docs carry strictly smaller weights
-    val all = TrainingData.dsirSelect(d, target, 4).collect()
+    val all = TrainingData.dsirSelect(d, target, 4).use(_.collect())
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(all(3L) < all(2L) && all(4L) < all(2L))
   }
@@ -237,7 +236,7 @@ class TrainingDataSpec extends SparkSpec {
     val all = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val target = all.where(col("lang") === "en")
     def ids(hashBuckets: Int) =
-      TrainingData.dsirSelect(all, target, 100, hashBuckets).collect()
+      TrainingData.dsirSelect(all, target, 100, hashBuckets).use(_.collect())
         .map(_.getLong(0)).toSet
     val exact = ids(0)
     val hashed = ids(1 << 14)
@@ -255,7 +254,7 @@ class TrainingDataSpec extends SparkSpec {
       2L -> goodText,                 // exact dup of 1 -> dropped
       3L -> "too short",              // fails gopher n_words >= 30
       4L -> (goodText + " extra"))    // distinct content, survives
-    val out = TrainingData.curateCorpus(d, budget = 10).collect()
+    val out = TrainingData.curateCorpus(d, budget = 10).use(_.collect())
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2),
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSeq
     val ids = out.map(_._1)
@@ -278,7 +277,7 @@ class TrainingDataSpec extends SparkSpec {
         Seq("the", "zebra", "and", "mango", s"tok$i")(i % 5))
         .mkString(" "))                // distinct shingles, stopword-bearing -> survives
     val out = TrainingData.curateCorpus(d, budget = 10, nearDup = true)
-      .collect().map(_.getLong(0)).toSeq
+      .use(_.collect()).map(_.getLong(0)).toSeq
     // hand-compose the stages the one-call path claims to run
     val kept = TrainingData.gopherQuality(d, minWords = 30)
       .where(col("keep")).select("doc_id")
@@ -286,7 +285,7 @@ class TrainingDataSpec extends SparkSpec {
       .groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
     val expected = Dedup.dedupCorpus(d.join(exact, Seq("doc_id")), 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      .use(_.select("doc_id").collect()).map(_.getLong(0)).sorted.toSeq
     assert(out == expected, s"one-call $out vs composed $expected")
     assert(out == Seq(1L, 5L), s"survivors: $out") // 4 dropped ONLY by the near-dup stage
   }
@@ -383,7 +382,7 @@ class TrainingDataSpec extends SparkSpec {
       .toDF("doc_id", "score")
     val labels = Seq((1L, 1L), (2L, 1L), (3L, 0L), (4L, 0L))
       .toDF("doc_id", "label")
-    val r = TrainingData.scoreAuc(scored, labels).collect()
+    val r = TrainingData.scoreAuc(scored, labels).use(_.collect())
     assert(r.length == 1)
     assert(r(0).getLong(0) == 2L && r(0).getLong(1) == 2L)
     assert(r(0).getDouble(2) == 0.875, s"auc ${r(0).getDouble(2)}")
@@ -391,7 +390,7 @@ class TrainingDataSpec extends SparkSpec {
     // reversed scorer: AUC complements to 1 - 0.875
     import org.apache.spark.sql.functions.col
     val rev = scored.select(col("doc_id"), (-col("score")).as("score"))
-    val r2 = TrainingData.scoreAuc(rev, labels).collect()
+    val r2 = TrainingData.scoreAuc(rev, labels).use(_.collect())
     assert(r2(0).getDouble(2) == 0.125, s"rev auc ${r2(0).getDouble(2)}")
   }
 
@@ -448,7 +447,7 @@ class TrainingDataSpec extends SparkSpec {
       (4L, 2.0), (5L, 3.0), (6L, 4.0)).toDF("doc_id", "score")
     val labels = Seq((1L, 0L), (2L, 0L), (3L, 1L),
       (4L, 0L), (5L, 1L), (6L, 1L)).toDF("doc_id", "label")
-    val r = TrainingData.scoreCalibration(scored, labels, 3).collect()
+    val r = TrainingData.scoreCalibration(scored, labels, 3).use(_.collect())
       .map(x => (x.getInt(0), x.getLong(1), x.getLong(2), x.getDouble(3),
         x.getDouble(4), x.getDouble(5)))
     assert(r.toSeq == Seq(
@@ -466,7 +465,7 @@ class TrainingDataSpec extends SparkSpec {
     val scored = rows.toDF("doc_id", "score")
     val labels = rows.map { case (i, _) => (i, i % 3 / 2) }.toDF("doc_id", "label")
     for (bins <- Seq(3, 4, 10, 40)) {
-      val got = TrainingData.scoreCalibration(scored, labels, bins).collect()
+      val got = TrainingData.scoreCalibration(scored, labels, bins).use(_.collect())
         .map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
       val want = scored.join(labels, Seq("doc_id"))
         .withColumn("bin",
@@ -489,7 +488,7 @@ class TrainingDataSpec extends SparkSpec {
     val scored = rows.toDF("doc_id", "score")
     val labels = rows.map { case (i, _) => (i, if (i >= 9) 1L else 0L) }
       .toDF("doc_id", "label")
-    val r = TrainingData.scoreAuc(scored, labels).collect()(0)
+    val r = TrainingData.scoreAuc(scored, labels).use(_.collect())(0)
     val j = scored.join(labels, Seq("doc_id"))
     val nPos = 4L
     val wantHits = j.withColumn("rn", row_number().over(
@@ -558,10 +557,9 @@ class TrainingDataSpec extends SparkSpec {
     // loose sketch (fpp 0.5): many false positives reach the confirm
     // join — output must still be EXACT; tight sketch likewise
     for (fpp <- Seq(0.5, 0.01)) {
-      val (bloom, release) =
-        TrainingData.decontaminateBloomScoped(corpus, eval, 3, 1, fpp)
-      assert(bloom.collect().map(_.toSeq).toSeq == exact, s"fpp=$fpp")
-      release()
+      TrainingData.decontaminateBloom(corpus, eval, 3, 1, fpp).use { bloom =>
+        assert(bloom.collect().map(_.toSeq).toSeq == exact, s"fpp=$fpp")
+      }
     }
   }
 
