@@ -17,6 +17,9 @@ import org.apache.spark.storage.StorageLevel
   *   - `materialize` (on a `Scoped[DataFrame]`) persists the value,
   *     counts it and releases the inner scope; the returned scope owns
   *     only the materialized result.
+  *   - `localize` (on a `Scoped[DataFrame]` whose value is bounded)
+  *     collects the value, releases the scope and returns the rows as
+  *     a one-partition local frame.
   *
   * Release is idempotent: a second call does nothing. A caller that
   * takes `.value` and never releases hands the cache entries to
@@ -67,6 +70,17 @@ object Scoped {
       catch { case e: Throwable => out.unpersist(blocking = false); throw e }
       finally s.release()
       Scoped(out)(out.unpersist(blocking = false))
+    }
+
+    /** Collect the frame, release the scope — also when the collect
+      * throws — and return the rows as a one-partition local frame
+      * with the same schema. For results bounded by construction (top-k
+      * lists, per-source tables): the caller owns nothing afterwards. */
+    def localize: DataFrame = {
+      val df = s.value
+      val rows = try df.collect().toIndexedSeq finally s.release()
+      val spark = df.sparkSession
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), df.schema)
     }
   }
 }

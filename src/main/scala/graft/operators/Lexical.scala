@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Scoped
 
 /** Persisted inverted index — the LEXICAL serving store, completing
   * the store family next to the vector side (`ivfSave`/`pqSave`/...):
@@ -176,7 +177,7 @@ object Lexical {
     val slice = lexSlice(spark, path, terms)
       .dropDuplicates("w", "doc_id") // at-least-once replays collapse
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scoped(slice)(slice.unpersist(blocking = false)).map { slice =>
       // no eager count: the df subquery populates the cache and the
       // candidate agg reads it — one fewer job on the serving path
       val corpus = spark.read.parquet(s"$path/stats")
@@ -204,7 +205,7 @@ object Lexical {
           s" * 1000000) div ((2L*df$i + 1L) * (10L*ta*tf$i + 3L*ta + 9L*dl*nd))" +
           " AS BIGINT)")
       }.reduce(_ + _)
-      val res = cand.join(dl, Seq("doc_id"))
+      cand.join(dl, Seq("doc_id"))
         .crossJoin(broadcast(corpus))
         .crossJoin(broadcast(dfs))
         .withColumn("score_ppm", scorePpm)
@@ -213,9 +214,7 @@ object Lexical {
         .limit(k)
         .select(col("doc_id"), col("score_ppm"))
       // bounded at k: localize, then release (the bm25TopK pattern)
-      val rows = res.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally slice.unpersist(blocking = false)
+    }.localize
   }
 
   /** Re-bucket the postings to `nBuckets` — the corpus-scaled geometry

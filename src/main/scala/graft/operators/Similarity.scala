@@ -24,28 +24,43 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** `(id, e, n)`: the vector promoted to double plus its L2 norm — the
+    * float side of every exact cosine (queries, candidates, refine). */
+  private def vecFrame(df: DataFrame, id: String, e: String, n: String): DataFrame =
+    df.select(col("vec_id").as(id), asDouble(col("embedding")).as(e))
+      .withColumn(n, sqrt(dot(col(e), col(e))))
+
+  /** Cosine of two double-array columns from their precomputed norms. */
+  private def cosine(a: String, na: String, b: String, nb: String): Column =
+    dot(col(a), col(b)) / (col(na) * col(nb))
+
+  /** Each query's best `n` rows by `by`, ties to the lower vid — the
+    * candidate-pool form of `rankTop`; the rank lands in `rnk`. */
+  private def rankPool(scored: DataFrame, n: Int, by: Column): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy("qid").orderBy(by, col("vid").asc)))
+      .where(col("rnk") <= n)
+
+  /** The ranking tail every search ends in: each query's top `k` by
+    * `by` (ties to the lower vid, so ranks are deterministic) as
+    * `(qid, rnk, vid, keep…)`, ordered by (qid, rnk). */
+  private def rankTop(scored: DataFrame, k: Int,
+                      by: Column = col("score").desc,
+                      keep: Seq[String] = Nil): DataFrame =
+    rankPool(scored, k, by)
+      .select(("qid" +: "rnk" +: "vid" +: keep).map(col): _*)
+      .orderBy("qid", "rnk")
+
   /** Brute-force cosine top-k: queries = vec_id < nQueries, candidates =
     * the rest. Emits (qid, rank, vid) — ranks are stable under a
     * deterministic (score desc, vid asc) order. One broadcast of the tiny
     * query set against a full scan of candidates: linear, no shuffle
     * until the per-query top-k. */
   def cosineTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val withNorm = emb.select(
-      col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-    val q = withNorm.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qn"))
-    val c = withNorm.where(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("vid"), col("e").as("ce"), col("nrm").as("cn"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-    scored
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+    val q = vecFrame(emb.where(col("vec_id") < nQueries), "qid", "qe", "qn")
+    val c = vecFrame(emb.where(col("vec_id") >= nQueries), "vid", "ce", "cn")
+    rankTop(c.crossJoin(broadcast(q))
+      .select(col("qid"), col("vid"), cosine("qe", "qn", "ce", "cn").as("score")), k)
   }
 
   /** Sign-LSH bucket key: sign bits of the first `nBits` dimensions
@@ -83,15 +98,8 @@ object Similarity {
       .select(col("vec_id").as("vid"), col("e").as("ce"), col("nrm").as("cn"), col("bucket"))
     // a candidate lives in exactly one bucket and probe buckets are
     // distinct, so each (qid, vid) pair scores at most once — no dedup
-    val scored = c.join(q, Seq("bucket"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-    scored
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+    rankTop(c.join(q, Seq("bucket"))
+      .select(col("qid"), col("vid"), cosine("qe", "qn", "ce", "cn").as("score")), k)
   }
 
   /** A trained IVF index: broadcast-sized centroid frame + the corpus
@@ -206,25 +214,45 @@ object Similarity {
     cents
   }
 
-  /** Frozen-centroid Euclidean assignment in codegen: argmin‖x−c‖² =
+  /** Nearest-list assignment as a codegen register scan: argmin‖x−c‖² =
     * argmax(x·c − ‖c‖²/2), so appending a constant-1 component to x
     * and a −‖c‖²/2 bias to each centroid turns Euclidean argmin into
     * exactly the max-dot/lowest-id-tie scan `NearestLists` implements.
     * No N×nList joined intermediate, no window — the same per-row
-    * register scan as probe selection, and the SAME tie order as
-    * `assignToLists` (dist asc, list_id asc), so a later
-    * `ivfAppendSave` re-lands a replayed vector in the identical
-    * list. */
-  private def assignNearestCodegen(base: DataFrame,
-                                   cents: Array[Array[Double]]): DataFrame = {
-    val dim = if (cents.isEmpty) 0 else cents(0).length
-    val aug = cents.flatMap(c => c :+ (-0.5 * c.map(v => v * v).sum))
-    val ids = cents.indices.toArray
-    base.select(col("vec_id").as("vid"), col("e").as("ce"),
-      col("nrm").as("cn"),
-      explode(graft.functions.NearestLists(
-        concat(col("e"), array(lit(1.0d))), aug, ids, dim + 1, 1)).as("list_id"))
+    * register scan as probe selection, one tie order (dist asc,
+    * list_id asc) for the build, the IVF appends and the IVF,PQ
+    * appends, so an append re-lands a replayed vector in the identical
+    * list. Centroids are nList rows of driver metadata by contract. */
+  private def nearestList(e: Column, cents: Array[(Int, Array[Double])]): Column = {
+    val dim = if (cents.isEmpty) 0 else cents(0)._2.length
+    val aug = cents.flatMap { case (_, c) => c :+ (-0.5 * c.map(v => v * v).sum) }
+    explode(graft.functions.NearestLists(
+      concat(e, array(lit(1.0d))), aug, cents.map(_._1), dim + 1, 1))
   }
+
+  /** A centroid frame `(list_id, centroid)` as driver rows, list order. */
+  private def centroidRows(centroids: DataFrame): Array[(Int, Array[Double])] =
+    centroids.select(col("list_id").cast("int").as("list_id"), col("centroid"))
+      .collect().sortBy(_.getInt(0))
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+
+  /** The IVF coarse layer shared by the float and PQ builds: fit the
+    * centroids on `base` (`vec_id`, `e`) and tag every row with its
+    * `list_id`. See `ivfBuild` for the two fits. */
+  private def coarseLists(base: DataFrame, nList: Int, sampleFit: Boolean)
+      : (Array[(Int, Array[Double])], DataFrame) =
+    if (sampleFit) {
+      val cents = coarseFitSample(base, nList).zipWithIndex.map(_.swap)
+      (cents, base.withColumn("list_id", nearestList(col("e"), cents)))
+    } else {
+      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.functions.array_to_vector
+      val vecs = base.withColumn("features", array_to_vector(col("e")))
+      val model = new KMeans().setK(nList).setSeed(42L).setMaxIter(5)
+        .setFeaturesCol("features").setPredictionCol("list_id").fit(vecs)
+      (model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) },
+        model.transform(vecs))
+    }
 
   /** Train the IVF coarse quantizer on `corpus` and assign every
     * corpus vector to its nearest list.
@@ -235,7 +263,7 @@ object Similarity {
     * sf1→sf10 campaign. `sampleFit = true`: `coarseFitSample` fits the
     * centroids on a bounded driver slice and the one unavoidable
     * N×nList pass left is the ASSIGNMENT, which runs as a codegen
-    * register scan (`assignNearestCodegen`) with no joined
+    * register scan (`nearestList`) with no joined
     * intermediate. The exhaustive dial (scanFrac = 1.0 / nProbe =
     * nList) is invariant to the choice BY CONSTRUCTION — every list is
     * scanned either way, so results are bit-equal; probed recall
@@ -244,35 +272,125 @@ object Similarity {
     * access pattern (list-id shuffle happens once, at first search). */
   def ivfBuild(corpus: DataFrame, nList: Int = 8,
                sampleFit: Boolean = false): IvfIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
     val spark = corpus.sparkSession
     import spark.implicits._
+    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
+    val (cents, listed) = coarseLists(base, nList, sampleFit)
+    val assigned = listed
+      .select(col("vec_id").as("vid"), col("e").as("ce"), col("nrm").as("cn"),
+        col("list_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    IvfIndex(cents.map { case (i, c) => (i, c.toSeq) }.toSeq.toDF("list_id", "centroid"),
+      assigned, nList)
+  }
 
-    if (sampleFit) {
-      val cents = coarseFitSample(base, nList)
-      val centDf = cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toSeq.toDF("list_id", "centroid")
-      val assigned = assignNearestCodegen(base, cents)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      IvfIndex(centDf, assigned, nList)
-    } else {
-      val vecs = base.withColumn("features", array_to_vector(col("e")))
-      val model = new KMeans().setK(nList).setSeed(42L).setMaxIter(5)
-        .setFeaturesCol("features").setPredictionCol("list_id")
-        .fit(vecs)
-      val centDf = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (i, c.toArray.toSeq)
-      }.toSeq.toDF("list_id", "centroid")
-      val assigned = model.transform(vecs)
-        .select(col("vec_id").as("vid"), col("e").as("ce"),
-          col("nrm").as("cn"), col("list_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      IvfIndex(centDf, assigned, nList)
+  /** How an IVF index stores its list rows — float `ce`, SQ8 `qc` or
+    * 1-bit sign `bc` — decided in ONE place (`ListCodec.of`) from the
+    * list frame's columns. A codec knows its list columns, how to
+    * encode `(vid, e, list_id)` rows into them, the query columns it
+    * scores with (added to `(qid, qe, qn)`) and its candidate score:
+    * cosine, descending; Hamming, ascending, for sign codes. */
+  private[graft] sealed abstract class ListCodec(val payload: Seq[String],
+                                                 val qCols: Seq[String]) {
+    def encode(rows: DataFrame, e: String): DataFrame
+    def query(q: DataFrame): DataFrame = q
+    def score: Column
+    def by: Column = col("score").desc
+  }
+
+  private[graft] object ListCodec {
+    case object Float extends ListCodec(Seq("vid", "ce", "cn"), Seq("qe", "qn")) {
+      def encode(rows: DataFrame, e: String): DataFrame =
+        rows.withColumn("cn", sqrt(dot(col(e), col(e))))
+          .select(col("vid"), col(e).as("ce"), col("cn"), col("list_id"))
+      def score: Column = cosine("qe", "qn", "ce", "cn")
     }
+
+    /** int8 codes (`Sq8Encode`): the approximate dot over codes, with
+      * the code norms `cn`/`qn8`. */
+    case object Sq8 extends ListCodec(Seq("vid", "qc", "cn"), Seq("qq", "qn8")) {
+      import graft.functions.{Sq8 => S}
+      def encode(rows: DataFrame, e: String): DataFrame =
+        rows.select(col("vid"), S.encode(col(e)).as("qc"), col("list_id"))
+          .withColumn("cn", sqrt(S.dot(col("qc"), col("qc"))))
+          .select("vid", "qc", "cn", "list_id")
+      override def query(q: DataFrame): DataFrame =
+        q.withColumn("qq", S.encode(col("qe")))
+          .withColumn("qn8", sqrt(S.dot(col("qq"), col("qq"))))
+      def score: Column = S.dot(col("qq"), col("qc")) / (col("qn8") * col("cn"))
+    }
+
+    /** d/8-byte sign codes ranked by integer Hamming distance — no
+      * norm column, and not reconstructible. */
+    case object Bin extends ListCodec(Seq("vid", "bc"), Seq("qb")) {
+      import graft.functions.{Bin => B}
+      def encode(rows: DataFrame, e: String): DataFrame =
+        rows.select(col("vid"), B.encode(col(e)).as("bc"), col("list_id"))
+      override def query(q: DataFrame): DataFrame = q.withColumn("qb", B.encode(col("qe")))
+      def score: Column = B.hamming(col("qb"), col("bc"))
+      override def by: Column = col("score").asc
+    }
+
+    def of(columns: Seq[String]): ListCodec =
+      if (columns.contains("bc")) Bin else if (columns.contains("qc")) Sq8 else Float
+
+    def of(index: IvfIndex): ListCodec = of(index.assigned.columns.toSeq)
+  }
+
+  /** Every saved-store layout, told apart by its directory shape in ONE
+    * place (`StoreLayout.at`): `assigned/` = IVF (float, SQ8 or 1-bit
+    * lists — the `Ivf` case carries the list frame it read, so its
+    * codec costs no second scan); `rot/` + `centroids/` = OPQ,IVF,PQ;
+    * `books/` + `centroids/` = IVF,PQ; `books/` + `rot/` = flat OPQ;
+    * `books/` alone = flat PQ; `bincodes/` = flat 1-bit. */
+  private[graft] sealed trait StoreLayout
+
+  private[graft] object StoreLayout {
+    final case class Ivf(codec: ListCodec, lists: DataFrame) extends StoreLayout
+    case object OpqIvfPq extends StoreLayout
+    case object IvfPq extends StoreLayout
+    case object FlatOpq extends StoreLayout
+    case object FlatPq extends StoreLayout
+    case object FlatBin extends StoreLayout
+
+    /** The layout saved at `path`; None when no save wrote it. Hadoop
+      * FS, not java.io: stores live on the cluster filesystem
+      * (HDFS/object store) in production. */
+    def at(spark: org.apache.spark.sql.SparkSession,
+           path: String): Option[StoreLayout] = {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val has = (d: String) => fs.exists(new org.apache.hadoop.fs.Path(root, d))
+      if (has("assigned")) {
+        val lists = spark.read.parquet(s"$path/assigned")
+        Some(Ivf(ListCodec.of(lists.columns.toSeq), lists))
+      }
+      else if (has("rot") && has("centroids")) Some(OpqIvfPq)
+      else if (has("books") && has("centroids")) Some(IvfPq)
+      else if (has("books") && has("rot")) Some(FlatOpq)
+      else if (has("books")) Some(FlatPq)
+      else if (has("bincodes")) Some(FlatBin)
+      else None
+    }
+  }
+
+  /** The IVF layout at `path`; any other directory is rejected. */
+  private def ivfLayout(spark: org.apache.spark.sql.SparkSession,
+                        path: String): StoreLayout.Ivf =
+    StoreLayout.at(spark, path) match {
+      case Some(ivf: StoreLayout.Ivf) => ivf
+      case _ => throw new IllegalArgumentException(
+        s"$path is not an ivfSave store (expected an assigned/ directory)")
+    }
+
+  /** The one probe-count rule: with `scanFrac` (in (0, 1], checked
+    * when the rule is made) a search probes ⌈nList·scanFrac⌉ lists, at
+    * least one, of whatever nList the index has; without it, the fixed
+    * `nProbe`. */
+  private[graft] def probeRule(nProbe: Int, scanFrac: Option[Double]): Int => Int = {
+    scanFrac.foreach(f => require(f > 0.0 && f <= 1.0, "scanFrac must be in (0, 1]"))
+    nList => scanFrac.fold(nProbe)(f => math.max(1, math.ceil(nList * f).toInt))
   }
 
   /** Hybrid-retrieval fusion (Cormack et al. 2009 reciprocal rank
@@ -289,28 +407,27 @@ object Similarity {
     * q107 shapes (broadcast query side; single-agg pivot); the fusion
     * itself aggregates ≤ nQueries·4k candidate rows — negligible. */
   def rrfFusion(emb: DataFrame, docs: DataFrame, terms: Seq[String],
-                nQueries: Int, k: Int): DataFrame = {
-    val dense = cosineTopK(emb, nQueries, 2 * k)
-      .select(col("qid"), col("vid"),
-        expr("1000000L div (60L + rnk)").as("pts"))
-    val lex = TextAnalysis.bm25TopK(
-        docs.where(col("doc_id") >= nQueries), terms, 2 * k)
+                nQueries: Int, k: Int): DataFrame =
+    rrfFuse(cosineTopK(emb, nQueries, 2 * k),
+      TextAnalysis.bm25TopK(docs.where(col("doc_id") >= nQueries), terms, 2 * k), k)
+
+  /** The fusion step of both RRF forms: a dense ranking
+    * `(qid, rnk, vid)` and a query-independent lexical ranking
+    * `(doc_id, score_ppm)` to each query's top `k` by summed points. */
+  private def rrfFuse(dense: DataFrame, lexical: DataFrame, k: Int): DataFrame = {
+    val d = dense.select(col("qid"), col("vid"),
+      expr("1000000L div (60L + rnk)").as("pts"))
+    val lex = lexical
       .withColumn("lrnk", row_number().over(
         Window.orderBy(col("score_ppm").desc, col("doc_id").asc)))
       .select(col("doc_id").as("vid"),
         expr("1000000L div (60L + lrnk)").as("pts"))
     // the lexical list is query-independent: every query receives the
     // same contributions (bounded 2k-row crossJoin)
-    val qids = dense.select("qid").distinct()
-    val fused = dense.unionByName(qids.crossJoin(lex))
+    val qids = d.select("qid").distinct()
+    rankTop(d.unionByName(qids.crossJoin(lex))
       .groupBy("qid", "vid")
-      .agg(sum(col("pts")).as("rrf_ppm"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("rrf_ppm").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vid"), col("rrf_ppm"))
-      .orderBy("qid", "rnk")
-    fused
+      .agg(sum(col("pts")).as("rrf_ppm")), k, col("rrf_ppm").desc, Seq("rrf_ppm"))
   }
 
   /** Hybrid retrieval over the PERSISTED stores — `rrfFusion`'s
@@ -327,27 +444,10 @@ object Similarity {
                       vecPath: String, lexPath: String, queries: DataFrame,
                       terms: Seq[String], k: Int): DataFrame = {
     val idx = ivfLoad(spark, vecPath)
-    try {
-      val dense = ivfSearch(idx, queries, 2 * k, idx.nList)
-        .select(col("qid"), col("vid"),
-          expr("1000000L div (60L + rnk)").as("pts"))
-      val lex = Lexical.lexSearch(spark, lexPath, terms, 2 * k)
-        .withColumn("lrnk", row_number().over(
-          Window.orderBy(col("score_ppm").desc, col("doc_id").asc)))
-        .select(col("doc_id").as("vid"),
-          expr("1000000L div (60L + lrnk)").as("pts"))
-      val qids = dense.select("qid").distinct()
-      val fused = dense.unionByName(qids.crossJoin(lex))
-        .groupBy("qid", "vid")
-        .agg(sum(col("pts")).as("rrf_ppm"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("qid").orderBy(col("rrf_ppm").desc, col("vid").asc)))
-        .where(col("rnk") <= k)
-        .select(col("qid"), col("rnk"), col("vid"), col("rrf_ppm"))
-        .orderBy("qid", "rnk")
-      val rows = fused.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), fused.schema)
-    } finally idx.release()
+    Scoped(idx)(idx.release()).map { idx =>
+      rrfFuse(ivfSearch(idx, queries, 2 * k, idx.nList),
+        Lexical.lexSearch(spark, lexPath, terms, 2 * k), k)
+    }.localize
   }
 
   /** Cluster-balanced diversity sampling — the embedding-space analog
@@ -399,23 +499,22 @@ object Similarity {
     * one small centroid read plus a lazy scan over the assigned lists
     * (persisted, like `ivfBuild`'s, because a search probes it twice
     * per query batch at most once-materialized). Search-after-reload
-    * equals search-after-build (`SimilaritySpec` pins it). */
-  def ivfLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+    * equals search-after-build (`SimilaritySpec` pins it). Float, SQ8
+    * and 1-bit lists all round-trip through the same save/load. */
+  def ivfLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
+    ivfOpen(spark, path, ivfLayout(spark, path))
+
+  /** `ivfLoad` over an already-detected IVF layout (its list frame is
+    * read once, by the detection). */
+  private[graft] def ivfOpen(spark: org.apache.spark.sql.SparkSession, path: String,
+                             ivf: StoreLayout.Ivf): IvfIndex = {
     val cents = spark.read.parquet(s"$path/centroids")
     val nList = cents.count().toInt
-    val raw = spark.read.parquet(s"$path/assigned")
-    // float lists carry `ce` (array<double>), SQ8 lists `qc` (binary),
-    // 1-bit lists `bc` (binary, no norm column — Hamming needs none) —
-    // all round-trip through the same save/load
-    val cols =
-      if (raw.columns.contains("bc")) Seq(col("vid"), col("bc"))
-      else if (raw.columns.contains("qc")) Seq(col("vid"), col("qc"), col("cn"))
-      else Seq(col("vid"), col("ce"), col("cn"))
-    val assigned = raw
+    val assigned = ivf.lists
       // partitionBy moved list_id to the end and widened it; restore the
       // build-time column order and type so the index forms are
       // interchangeable frame-for-frame
-      .select(cols :+ col("list_id").cast("int").as("list_id"): _*)
+      .select(ivf.codec.payload.map(col) :+ col("list_id").cast("int").as("list_id"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     IvfIndex(cents, assigned, nList)
   }
@@ -427,12 +526,12 @@ object Similarity {
     * centroids, refitting only on drift. Assignment uses the
     * quantizer's own metric (squared Euclidean — argmin of
     * |c|² − 2·v·c with |v|² constant), so appended vectors land in the
-    * same list `ivfBuild` would have chosen; works for float and SQ8
-    * indexes alike (codes re-encoded per batch). Centroids broadcast;
+    * same list `ivfBuild` would have chosen; works for every list
+    * codec (codes re-encoded per batch). Centroids broadcast;
     * the only data motion is the new batch. */
   def ivfAppend(index: IvfIndex, newVecs: DataFrame): IvfIndex = {
     val merged = index.assigned.unionByName(assignToLists(
-        index.centroids, newVecs, sq8 = index.assigned.columns.contains("qc")))
+        centroidRows(index.centroids), newVecs, ListCodec.of(index)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     merged.count()
     index.release()
@@ -446,15 +545,18 @@ object Similarity {
     * of the store size — the `IngestDedup.processBatch` contract for
     * vectors. */
   def ivfAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newVecs: DataFrame): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val fields = spark.read.parquet(s"$path/assigned").schema.fieldNames
-    assignToLists(cents, newVecs, sq8 = fields.contains("qc"),
-        bin = fields.contains("bc"))
+                    newVecs: DataFrame): Unit =
+    ivfAppendAs(spark, path, newVecs, ivfLayout(spark, path).codec)
+
+  /** `ivfAppendSave` with the store's list codec already known. */
+  private[graft] def ivfAppendAs(spark: org.apache.spark.sql.SparkSession,
+                                 path: String, newVecs: DataFrame,
+                                 codec: ListCodec): Unit =
+    assignToLists(centroidRows(spark.read.parquet(s"$path/centroids")),
+        newVecs, codec)
       // one file per touched list, not per task (pinned width)
       .transform(graft.core.Stores.writeLayout(_, col("list_id")))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/assigned")
-  }
 
   /** Offline compaction of an `ivfSave`d list store: drop the
     * duplicate vid rows an at-least-once replay appends (frozen
@@ -479,26 +581,21 @@ object Similarity {
     * compaction. */
   def codesCompact(spark: org.apache.spark.sql.SparkSession,
                    path: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val has = (d: String) => fs.exists(new org.apache.hadoop.fs.Path(root, d))
-    // same directory-shape dispatch as IngestVectors.processBatch —
+    import graft.core.Stores.rewriteDeduped
     // reject unrecognized layouts explicitly instead of surfacing a
     // raw path-not-found mid-rewrite on a typo or an IVF store
-    if (has("bincodes"))
-      graft.core.Stores.rewriteDeduped(spark, s"$path/bincodes", Seq("vid"))
-    else if (has("assigned"))
-      throw new IllegalArgumentException(
+    StoreLayout.at(spark, path) match {
+      case Some(StoreLayout.FlatBin) =>
+        rewriteDeduped(spark, s"$path/bincodes", Seq("vid"))
+      case Some(_: StoreLayout.Ivf) => throw new IllegalArgumentException(
         s"$path holds an IVF 'assigned/' list store — use ivfCompact")
-    else if (!has("codes"))
-      throw new IllegalArgumentException(
+      case Some(StoreLayout.IvfPq | StoreLayout.OpqIvfPq) =>
+        rewriteDeduped(spark, s"$path/codes", Seq("vid"), Seq("list_id"))
+      case Some(_) => rewriteDeduped(spark, s"$path/codes", Seq("vid"))
+      case None => throw new IllegalArgumentException(
         s"$path is not a pqSave/opqSave/ivfPqSave/ivfOpqSave/binSave code store " +
           "(expected a codes/ or bincodes/ directory)")
-    else if (has("centroids") && has("books"))
-      graft.core.Stores.rewriteDeduped(spark, s"$path/codes",
-        Seq("vid"), Seq("list_id"))
-    else
-      graft.core.Stores.rewriteDeduped(spark, s"$path/codes", Seq("vid"))
+    }
   }
 
   /** Per-list occupancy of an IVF index, INCLUDING empty lists — a
@@ -542,9 +639,10 @@ object Similarity {
   private def reconstructAssigned(assigned: DataFrame): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    require(!assigned.columns.contains("bc"),
+    val codec = ListCodec.of(assigned.columns.toSeq)
+    require(codec != ListCodec.Bin,
       "binary (sign-code) lists are not reconstructible — rebuild from the source corpus (the PQ-tier rule)")
-    if (assigned.columns.contains("qc"))
+    if (codec == ListCodec.Sq8)
       assigned.select(col("vid"), col("qc")).as[(Long, Array[Byte])]
         .map { case (vid, qc) =>
           var bits = 0L
@@ -599,7 +697,7 @@ object Similarity {
     val k = if (nList > 0) nList else index.nList
     val corpus = ivfReconstruct(index)
     val rebuilt =
-      if (index.assigned.columns.contains("qc")) ivfBuildSq8(corpus, k, sampleFit)
+      if (ListCodec.of(index) == ListCodec.Sq8) ivfBuildSq8(corpus, k, sampleFit)
       else ivfBuild(corpus, k, sampleFit)
     rebuilt.assigned.count() // materialize before releasing the source
     index.release()
@@ -628,66 +726,33 @@ object Similarity {
 
   /** New-batch list assignment shared by the append paths: nearest
     * centroid by the quantizer metric (Euclidean argmin), then rows in
-    * the index's list-frame layout (float `ce` or SQ8 `qc`).
+    * the index's list-frame layout (`codec`).
     *
     * The argmin runs as the same codegen register scan the build and
-    * probe paths use (`NearestLists` through the augmented-dot trick —
-    * argmin‖x−c‖² = argmax(x·c − ‖c‖²/2) with ties to the lower list
-    * id): the old broadcast crossJoin + per-vid ranking window
-    * MATERIALIZED batch×nList rows, which turns into a
-    * batch×(store/target) term once maintenance scales nList with the
-    * store — measured as the dominant growth in the round-8 sf10
-    * supervised pair-mining campaign (appends at nList 488 cost more
-    * than the mining they feed). Centroids are nList rows of driver
-    * metadata by contract. */
-  private def assignToLists(centroids: DataFrame, newVecs: DataFrame,
-                            sq8: Boolean, bin: Boolean = false): DataFrame = {
-    val rows = centroids
-      .select(col("list_id").cast("int").as("list_id"), col("centroid"))
-      .collect().sortBy(_.getInt(0))
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    val dim = if (rows.isEmpty) 0 else rows(0)._2.length
-    val aug = rows.flatMap { case (_, c) => c :+ (-0.5 * c.map(v => v * v).sum) }
-    val ids = rows.map(_._1)
-    val assigned = newVecs
+    * probe paths use (`nearestList`): the old broadcast crossJoin +
+    * per-vid ranking window MATERIALIZED batch×nList rows, which turns
+    * into a batch×(store/target) term once maintenance scales nList
+    * with the store — measured as the dominant growth in the round-8
+    * sf10 supervised pair-mining campaign (appends at nList 488 cost
+    * more than the mining they feed). */
+  private def assignToLists(cents: Array[(Int, Array[Double])], newVecs: DataFrame,
+                            codec: ListCodec): DataFrame =
+    codec.encode(newVecs
       .select(col("vec_id").as("vid"), asDouble(col("embedding")).as("e"))
-      .withColumn("list_id", explode(graft.functions.NearestLists(
-        concat(col("e"), array(lit(1.0d))), aug, ids, dim + 1, 1)))
-    if (bin)
-      assigned.select(col("vid"),
-        graft.functions.Bin.encode(col("e")).as("bc"), col("list_id"))
-    else if (sq8) {
-      import graft.functions.Sq8
-      assigned.select(col("vid"), Sq8.encode(col("e")).as("qc"), col("list_id"))
-        .withColumn("cn", sqrt(Sq8.dot(col("qc"), col("qc"))))
-        .select("vid", "qc", "cn", "list_id")
-    } else
-      assigned.withColumn("cn", sqrt(dot(col("e"), col("e"))))
-        .select(col("vid"), col("e").as("ce"), col("cn"), col("list_id"))
-  }
+      .withColumn("list_id", nearestList(col("e"), cents)), "e")
 
-  /** Probe-list selection WITHOUT the N×nList ranking window: one
-    * bounded centroid collect (nList rows) rides into codegen via
-    * `NearestLists` (`addReferenceObj` — constant generated code
-    * regardless of nList), and each query row computes its own top
-    * lists in registers. Bit-equal to the old crossJoin+row_number
-    * form (same fold order, same list-id tiebreak — see the
-    * expression's scaladoc); removes the N²/targetClusterRows
-    * intermediate that made corpus-side probing superlinear in the
-    * round-7 campaign. `q` must carry a `qe` column; `keep` names the
-    * columns to carry through. */
+  /** Probe-list selection WITHOUT the N×nList ranking window: the
+    * bounded centroid rows (nList) ride into codegen via `NearestLists`
+    * (`addReferenceObj` — constant generated code regardless of nList),
+    * and each query row computes its own top lists in registers.
+    * Bit-equal to the old crossJoin+row_number form (same fold order,
+    * same list-id tiebreak — see the expression's scaladoc); removes
+    * the N²/targetClusterRows intermediate that made corpus-side
+    * probing superlinear in the round-7 campaign. `q` must carry a
+    * `qe` column; `keep` names the columns to carry through. */
   private def probeTopLists(q: DataFrame, keep: Seq[String],
-                            centroids: DataFrame, nProbe: Int): DataFrame = {
-    val rows = centroids
-      .select(col("list_id").cast("int").as("list_id"), col("centroid"))
-      .collect().sortBy(_.getInt(0))
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    probeTopListsArr(q, keep, rows, nProbe)
-  }
-
-  private def probeTopListsArr(q: DataFrame, keep: Seq[String],
-                               cents: Array[(Int, Array[Double])],
-                               nProbe: Int): DataFrame = {
+                            cents: Array[(Int, Array[Double])],
+                            nProbe: Int): DataFrame = {
     val ids = cents.map(_._1)
     val flat = cents.flatMap(_._2)
     val dim = if (ids.isEmpty) 0 else flat.length / ids.length
@@ -695,13 +760,26 @@ object Similarity {
         col("qe"), flat, ids, dim, nProbe)).as("list_id"): _*)
   }
 
+  /** The probe-search every IVF list codec shares: each query probes
+    * its `nProbe` nearest lists, joins them on list_id — a plain join,
+    * the query side is the small one — and keeps its top `k` by the
+    * codec's score. */
+  private[graft] def probeSearch(index: IvfIndex, codec: ListCodec,
+                                 queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
+    val q = codec.query(vecFrame(queries, "qid", "qe", "qn"))
+    val probes = probeTopLists(q, "qid" +: codec.qCols,
+      centroidRows(index.centroids), nProbe)
+    rankTop(probes.join(index.assigned, Seq("list_id"))
+      .select(col("qid"), col("vid"), codec.score.as("score")), k, codec.by)
+  }
+
   /** Search a trained index: each query probes only the `nProbe` lists
     * whose centroids score highest (the centroid matrix rides into
     * codegen — nList rows), candidates shuffle on list id, no cross
     * join against the corpus.
     *
-    * `scanFrac` is the recall-STABLE dial (same semantics as
-    * `knnJoin`): when set, nProbe = max(1, ⌈nList·scanFrac⌉), so the
+    * `scanFrac` is the recall-STABLE dial (the one `probeRule`, shared
+    * with `knnJoin`): when set, nProbe = max(1, ⌈nList·scanFrac⌉), so the
     * scanned share of the corpus — which recall tracks on weakly-
     * clustered data (SCALE.md round 6) — survives corpus-proportional
     * nList growth. A raw nProbe silently decays as maintenance scales
@@ -711,47 +789,34 @@ object Similarity {
     * 12). Prefer scanFrac for anything long-lived; scanFrac = 1.0 is
     * the exhaustive dial, bit-equal to brute force. */
   def ivfSearch(index: IvfIndex, queries: DataFrame, k: Int, nProbe: Int = 2,
-                scanFrac: Option[Double] = None): DataFrame = {
-    val probeN = scanFrac.map { f =>
-      require(f > 0.0 && f <= 1.0, "scanFrac must be in (0, 1]")
-      math.max(1, math.ceil(index.nList * f).toInt)
-    }.getOrElse(nProbe)
-    val q = queries.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-    val probes = probeTopLists(q, Seq("qid", "qe", "qn"),
-      index.centroids, probeN)
+                scanFrac: Option[Double] = None): DataFrame =
+    probeSearch(index, ListCodec.Float, queries, k,
+      probeRule(nProbe, scanFrac)(index.nList))
 
-    probes.join(index.assigned, Seq("list_id"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+  /** The self-query form every one-shot top-k shares (the q56/q142/
+    * q157 shape): vectors below `nQueries` query an index built on the
+    * rest, `search(index, corpus, queries)`. The result is bounded at
+    * nQueries × k rows by construction (the query slice is the tiny
+    * side, `cosineTopK`'s broadcast contract), so it is localized and
+    * the per-call index released deterministically instead of leaking
+    * until cache eviction. Long-lived or large-query callers should
+    * hold a built index and search it repeatedly instead of paying the
+    * fit (and the localize) per call. */
+  private def selfQuery[I](emb: DataFrame, nQueries: Int)(build: DataFrame => I)(
+      release: I => Unit)(search: (I, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val corpus = emb.where(col("vec_id") >= nQueries)
+    val index = build(corpus)
+    Scoped(index)(release(index))
+      .map(search(_, corpus, emb.where(col("vec_id") < nQueries))).localize
   }
 
   /** One-shot IVF top-k (the q56 driver query): build on the candidate
-    * corpus, search the query slice, release. The result is materialized
-    * BEFORE the index is released — it is bounded at nQueries × k rows
-    * by construction (the query slice is the tiny side, same contract as
-    * `cosineTopK`'s broadcast), so localizing it is cheap and lets the
-    * per-call persisted inverted lists be freed deterministically
-    * instead of leaking until cache eviction. Long-lived or large-query
-    * callers should hold an `ivfBuild` index and `ivfSearch` it
-    * repeatedly instead of paying the fit (and the materialize) per
-    * call. */
+    * corpus, search the query slice, release (`selfQuery`). */
   def ivfTopK(emb: DataFrame, nQueries: Int, k: Int,
               nList: Int = 8, nProbe: Int = 2,
-              sampleFit: Boolean = false): DataFrame = {
-    val index = ivfBuild(emb.where(col("vec_id") >= nQueries), nList, sampleFit)
-    try {
-      val res = ivfSearch(index, emb.where(col("vec_id") < nQueries), k, nProbe)
-      val rows = res.collect().toIndexedSeq
-      val spark = emb.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally index.release()
-  }
+              sampleFit: Boolean = false): DataFrame =
+    selfQuery(emb, nQueries)(ivfBuild(_, nList, sampleFit))(_.release())(
+      (index, _, qs) => ivfSearch(index, qs, k, nProbe))
 
   /** The corpus-side candidate fan-out join every kNN-join rung runs
     * (probes ⋈ inverted lists on list_id), parallelism-pinned. Two
@@ -835,9 +900,8 @@ object Similarity {
               knownCount: Option[Long] = None,
               scanFrac: Option[Double] = None,
               sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val nList = autoK(emb, targetClusterRows, knownCount)
-    val index = ivfBuild(emb, nList, sampleFit)
-    Scoped(knnJoinIndexed(emb, index, k, nProbe, scanFrac))(index.release())
+    val index = ivfBuild(emb, autoK(emb, targetClusterRows, knownCount), sampleFit)
+    Scoped(index)(index.release()).map(knnJoinIndexed(emb, _, k, nProbe, scanFrac))
   }
 
   /** `knnJoin` against a caller-owned float index — the build-once /
@@ -846,35 +910,59 @@ object Similarity {
     * Join-after-reload equals join-after-build (`SimilaritySpec`). */
   def knnJoinIndexed(emb: DataFrame, index: IvfIndex, k: Int,
                      nProbe: Int = 2,
-                     scanFrac: Option[Double] = None): DataFrame = {
-    val nList = index.nList
-    val probes0 = scanFrac
-      .map(f => math.max(1, math.ceil(nList * f).toInt)).getOrElse(nProbe)
-    val q = emb.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-    // probes0 >= nList means every list is probed regardless of rank —
-    // skip the N×nList per-qid ranking window (the exhaustive dial's
-    // only overhead; same candidate set, bit-identical result)
-    val probes =
-      if (probes0 >= nList)
-        q.crossJoin(broadcast(index.centroids.select("list_id")))
-          .select(col("qid"), col("qe"), col("qn"), col("list_id"))
-      else probeTopLists(q, Seq("qid", "qe", "qn"), index.centroids, probes0)
-    // corpus-side fan-out join (N·nProbe·clusterRows output): keep it
-    // shuffled so the post-join dot work runs at shuffle-partition
-    // parallelism even when the list frame dips under the broadcast
-    // threshold (below ~19 k vectors for float lists — measured 2.5×
-    // on the packed-PQ rung, same shape)
-    val res = candJoin(probes, index.assigned, nList)
-      .where(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
-    res
+                     scanFrac: Option[Double] = None): DataFrame =
+    knnJoinLists(emb, index, ListCodec.Float, k, nProbe, scanFrac, None)
+
+  /** Probe lists for a corpus-sized query side. At nProbe ≥ nList every
+    * list is probed regardless of rank, so the exhaustive dial skips
+    * the per-row probe scan: a broadcast cross join with the list ids
+    * (the dial's only overhead gone; same candidate set, bit-identical
+    * result). */
+  private def probeAll(q: DataFrame, keep: Seq[String], nList: Int, nProbe: Int,
+                       listIds: => DataFrame,
+                       cents: => Array[(Int, Array[Double])]): DataFrame =
+    if (nProbe >= nList)
+      q.crossJoin(broadcast(listIds)).select((keep :+ "list_id").map(col): _*)
+    else probeTopLists(q, keep, cents, nProbe)
+
+  /** The kNN-join driver behind every `knnJoin*Indexed`: `probes` ⋈
+    * `lists` through the salted `shuffle_hash` `candJoin` (the
+    * corpus-side fan-out, N·nProbe·clusterRows rows — kept at shuffle
+    * parallelism even when the list frame dips under the broadcast
+    * threshold: below ~19 k vectors for float lists, ~110 k for int8,
+    * earlier still for sign codes; measured 2.5× on the packed-PQ
+    * rung), self pairs dropped, then either each query's top `k` by
+    * `score` (float lists: already exact) or a k·`refine` pool
+    * re-ranked by exact float cosine from `emb` — the q101
+    * `RefineFlat` contract lifted to the corpus-sized query side. The
+    * refine joins the pool (N·k·refine rows) back to the corpus on vid:
+    * pool-sized, never corpus×corpus. `probes` carries qid, qe, qn
+    * and whatever `score` reads. */
+  private def knnDriver(emb: DataFrame, probes: DataFrame, lists: DataFrame,
+                        nList: Int, score: Column, by: Column, k: Int,
+                        refine: Option[Int]): DataFrame = {
+    val cand = candJoin(probes, lists, nList).where(col("qid") =!= col("vid"))
+    refine match {
+      case None =>
+        rankTop(cand.select(col("qid"), col("vid"), score.as("score")), k, by)
+      case Some(r) =>
+        val pool = rankPool(cand.select(col("qid"), col("qe"), col("qn"),
+          col("vid"), score.as("score")), k * r, by)
+        rankTop(pool.join(vecFrame(emb, "vid", "ce", "cnf"), Seq("vid"))
+          .select(col("qid"), col("vid"), cosine("qe", "qn", "ce", "cnf").as("score")), k)
+    }
+  }
+
+  /** `knnDriver` over an `IvfIndex`'s lists in `codec`: the probe
+    * count resolves first, so a bad `scanFrac` fails before any work. */
+  private def knnJoinLists(emb: DataFrame, index: IvfIndex, codec: ListCodec,
+                           k: Int, nProbe: Int, scanFrac: Option[Double],
+                           refine: Option[Int]): DataFrame = {
+    val n = probeRule(nProbe, scanFrac)(index.nList)
+    val q = codec.query(vecFrame(emb, "qid", "qe", "qn"))
+    val probes = probeAll(q, (Seq("qid", "qe", "qn") ++ codec.qCols).distinct,
+      index.nList, n, index.centroids.select("list_id"), centroidRows(index.centroids))
+    knnDriver(emb, probes, index.assigned, index.nList, codec.score, codec.by, k, refine)
   }
 
   /** `knnJoin` over an SQ8-QUANTIZED index — the memory-wall form: at
@@ -882,22 +970,19 @@ object Similarity {
     * are what stops the hot set fitting in executor memory; here the
     * long-lived lists hold int8 codes (72 B, ~7×), candidates are
     * scored with the approximate int8 dot (ADC), and only the top
-    * k·`refine` pool per query is re-ranked with exact float cosine —
-    * the q101 `RefineFlat` contract lifted to the corpus-sized query
-    * side. Probe selection stays on float centroids (tiny, broadcast),
-    * so the recall dials (`nProbe`, `scanFrac`) behave exactly like
-    * `knnJoin`'s; the refine pool absorbs ADC rank noise near ties
-    * (recall parity vs the float path pinned by `SimilaritySpec`).
-    * The float re-rank joins the pool (N·k·refine rows) back to the
-    * corpus on vid — pool-sized, never corpus×corpus. */
+    * k·`refine` pool per query is re-ranked with exact float cosine
+    * (`knnDriver`). Probe selection stays on float centroids (tiny,
+    * broadcast), so the recall dials (`nProbe`, `scanFrac`) behave
+    * exactly like `knnJoin`'s; the refine pool absorbs ADC rank noise
+    * near ties (recall parity vs the float path pinned by
+    * `SimilaritySpec`). */
   def knnJoinSq8(emb: DataFrame, k: Int, nProbe: Int = 2,
                  targetClusterRows: Long = 256, refine: Int = 4,
                  scanFrac: Option[Double] = None,
                  sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val nList = autoK(emb, targetClusterRows, None)
-    val index = ivfBuildSq8(emb, nList, sampleFit)
-    Scoped(knnJoinSq8Indexed(emb, index, k, nProbe, refine, scanFrac))(
-      index.release())
+    val index = ivfBuildSq8(emb, autoK(emb, targetClusterRows, None), sampleFit)
+    Scoped(index)(index.release())
+      .map(knnJoinSq8Indexed(emb, _, k, nProbe, refine, scanFrac))
   }
 
   /** `knnJoinSq8` against a caller-owned SQ8 index — the build-once /
@@ -907,47 +992,9 @@ object Similarity {
   def knnJoinSq8Indexed(emb: DataFrame, index: IvfIndex, k: Int,
                         nProbe: Int = 2, refine: Int = 4,
                         scanFrac: Option[Double] = None): DataFrame = {
-    import graft.functions.Sq8
-    require(index.assigned.columns.contains("qc"),
+    require(ListCodec.of(index) == ListCodec.Sq8,
       "knnJoinSq8Indexed needs an SQ8 list store (qc column) — use knnJoinIndexed for float lists")
-    val nList = index.nList
-    val probes0 = scanFrac
-      .map(f => math.max(1, math.ceil(nList * f).toInt)).getOrElse(nProbe)
-    val q = emb.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-      .withColumn("qq", Sq8.encode(col("qe")))
-      .withColumn("qn8", sqrt(Sq8.dot(col("qq"), col("qq"))))
-    // same exhaustive-dial shortcut as knnJoin: all lists probed
-    // ⇒ no per-qid probe-ranking window needed
-    val probes =
-      if (probes0 >= nList)
-        q.crossJoin(broadcast(index.centroids.select("list_id")))
-          .select(col("qid"), col("qe"), col("qn"), col("qq"), col("qn8"),
-            col("list_id"))
-      else probeTopLists(q, Seq("qid", "qe", "qn", "qq", "qn8"),
-        index.centroids, probes0)
-    // same corpus-side fan-out shape as knnJoin: int8 lists dip
-    // under the broadcast threshold below ~110 k vectors — keep the
-    // ADC work at shuffle parallelism
-    val pool = candJoin(probes, index.assigned, nList)
-      .where(col("qid") =!= col("vid"))
-      .select(col("qid"), col("qe"), col("qn"), col("vid"),
-        (Sq8.dot(col("qq"), col("qc")) / (col("qn8") * col("cn"))).as("adc"))
-      .withColumn("r8", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc").desc, col("vid").asc)))
-      .where(col("r8") <= k * refine)
-    val cvec = emb.select(col("vec_id").as("vid"),
-        asDouble(col("embedding")).as("ce"))
-      .withColumn("cnf", sqrt(dot(col("ce"), col("ce"))))
-    val res = pool.join(cvec, Seq("vid"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cnf"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
-    res
+    knnJoinLists(emb, index, ListCodec.Sq8, k, nProbe, scanFrac, Some(refine))
   }
 
   /** IVF with 1-BIT lists — the binary rung lifted to the corpus
@@ -961,13 +1008,17 @@ object Similarity {
     * round-trip the (vid, bc, list_id) layout; `ivfAppendSave`
     * encodes appends against the frozen centroids. */
   def ivfBuildBin(corpus: DataFrame, nList: Int = 8,
-                  sampleFit: Boolean = false): IvfIndex = {
+                  sampleFit: Boolean = false): IvfIndex =
+    ivfBuildAs(corpus, nList, sampleFit, ListCodec.Bin)
+
+  /** Build float lists, re-encode them with `codec`, materialize the
+    * codes, then drop the float lists. */
+  private def ivfBuildAs(corpus: DataFrame, nList: Int, sampleFit: Boolean,
+                         codec: ListCodec): IvfIndex = {
     val fl = ivfBuild(corpus, nList, sampleFit)
-    val assigned = fl.assigned
-      .select(col("vid"), graft.functions.Bin.encode(col("ce")).as("bc"),
-        col("list_id"))
+    val assigned = codec.encode(fl.assigned, "ce")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // materialize codes, then drop the float lists
+    assigned.count()
     fl.release()
     IvfIndex(fl.centroids, assigned, fl.nList)
   }
@@ -977,19 +1028,9 @@ object Similarity {
     * asc, vid asc — the q157 integer ordering, list-scoped). */
   def ivfSearchBin(index: IvfIndex, queries: DataFrame, k: Int,
                    nProbe: Int = 2): DataFrame = {
-    require(index.assigned.columns.contains("bc"),
+    require(ListCodec.of(index) == ListCodec.Bin,
       "ivfSearchBin needs a binary list store (bc column)")
-    val q = queries.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qb", graft.functions.Bin.encode(col("qe")))
-    val probes = probeTopLists(q, Seq("qid", "qb"), index.centroids, nProbe)
-    probes.join(index.assigned, Seq("list_id"))
-      .select(col("qid"), col("vid"),
-        graft.functions.Bin.hamming(col("qb"), col("bc")).as("ham"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("ham").asc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+    probeSearch(index, ListCodec.Bin, queries, k, nProbe)
   }
 
   /** Corpus-wide kNN join over 1-bit lists + float refine — the
@@ -1003,49 +1044,17 @@ object Similarity {
                  targetClusterRows: Long = 256, refine: Int = 4,
                  scanFrac: Option[Double] = None,
                  sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val nList = autoK(emb, targetClusterRows, None)
-    val index = ivfBuildBin(emb, nList, sampleFit)
-    Scoped(knnJoinBinIndexed(emb, index, k, nProbe, refine, scanFrac))(
-      index.release())
+    val index = ivfBuildBin(emb, autoK(emb, targetClusterRows, None), sampleFit)
+    Scoped(index)(index.release())
+      .map(knnJoinBinIndexed(emb, _, k, nProbe, refine, scanFrac))
   }
 
   def knnJoinBinIndexed(emb: DataFrame, index: IvfIndex, k: Int,
                         nProbe: Int = 2, refine: Int = 4,
                         scanFrac: Option[Double] = None): DataFrame = {
-    require(index.assigned.columns.contains("bc"),
+    require(ListCodec.of(index) == ListCodec.Bin,
       "knnJoinBinIndexed needs a binary list store (bc column) — use knnJoinIndexed for float lists")
-    val nList = index.nList
-    val probes0 = scanFrac
-      .map(f => math.max(1, math.ceil(nList * f).toInt)).getOrElse(nProbe)
-    val q = emb.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-      .withColumn("qb", graft.functions.Bin.encode(col("qe")))
-    val probes =
-      if (probes0 >= nList)
-        q.crossJoin(broadcast(index.centroids.select("list_id")))
-          .select(col("qid"), col("qe"), col("qn"), col("qb"), col("list_id"))
-      else probeTopLists(q, Seq("qid", "qe", "qn", "qb"),
-        index.centroids, probes0)
-    // binary lists dip under the broadcast threshold earlier than any
-    // other rung (d/8 B/vector) — the shuffle_hash pin matters most here
-    val pool = candJoin(probes, index.assigned, nList)
-      .where(col("qid") =!= col("vid"))
-      .select(col("qid"), col("qe"), col("qn"), col("vid"),
-        graft.functions.Bin.hamming(col("qb"), col("bc")).as("ham"))
-      .withColumn("rh", row_number().over(
-        Window.partitionBy("qid").orderBy(col("ham").asc, col("vid").asc)))
-      .where(col("rh") <= k * refine)
-    val cvec = emb.select(col("vec_id").as("vid"),
-        asDouble(col("embedding")).as("ce"))
-      .withColumn("cnf", sqrt(dot(col("ce"), col("ce"))))
-    pool.join(cvec, Seq("vid"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cnf"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+    knnJoinLists(emb, index, ListCodec.Bin, k, nProbe, scanFrac, Some(refine))
   }
 
   /** `knnJoin` over a PQ-CODED store — the deepest rung of the
@@ -1088,9 +1097,7 @@ object Similarity {
     import graft.functions.Pq
     val spark = emb.sparkSession
     import spark.implicits._
-    val nList = index.nList
-    val probes0 = scanFrac
-      .map(f => math.max(1, math.ceil(nList * f).toInt)).getOrElse(nProbe)
+    val n = probeRule(nProbe, scanFrac)(index.nList)
     val flat = index.books.flatMap(_.flatMap(_.toSeq))
     val ks = index.books.map(_.length)
     require(ks.forall(_ <= 256), s"kSub > 256 cannot pack to bytes")
@@ -1101,47 +1108,25 @@ object Similarity {
     val packed = index.coded
       .select(col("vid"), col("list_id"), Pq.pack(col("codes")).as("pc"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    packed.count()
-    val q = emb.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-    val probes =
-      if (probes0 >= nList)
-        q.crossJoin(broadcast(
-          index.centroids.map(_._1).toSeq.toDF("list_id")))
-          .select(col("qid"), col("qe"), col("qn"), col("list_id"))
-      else probeTopListsArr(q, Seq("qid", "qe", "qn"),
-        index.centroids, probes0)
-    // candidates decode in the scan pipeline: the store stays bytes.
-    // The packed frame is TINY (m B/vector) so the static planner
-    // wants to broadcast it — but this join fans out to
-    // N·nProbe·clusterRows rows whose decode+dot work then inherits
-    // the probe side's SCAN partitioning (a handful of parquet
-    // splits) instead of the shuffle width: measured 90 s → 207 s at
-    // 200 k × nProbe 8. Same trap as the band joins (round-3 rule):
-    // pin shuffle_hash so the heavy post-join projection runs at
-    // shuffle-partition parallelism.
-    val cand = packed
-      .withColumn("cd", Pq.decodeBytes(col("pc"), flat, ks, index.sub))
-      .withColumn("cnd", sqrt(dot(col("cd"), col("cd"))))
-    val pool = candJoin(probes, cand, nList)
-      .where(col("qid") =!= col("vid"))
-      .select(col("qid"), col("qe"), col("qn"), col("vid"),
-        (dot(col("qe"), col("cd")) / (col("qn") * col("cnd"))).as("adc"))
-      .withColumn("r8", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc").desc, col("vid").asc)))
-      .where(col("r8") <= k * refine)
-    val cvec = emb.select(col("vec_id").as("vid"),
-        asDouble(col("embedding")).as("ce"))
-      .withColumn("cnf", sqrt(dot(col("ce"), col("ce"))))
-    val res = pool.join(cvec, Seq("vid"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cnf"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
-    Scoped(res)(packed.unpersist(blocking = false))
+    Scoped(packed)(packed.unpersist(blocking = false)).map { packed =>
+      packed.count()
+      val q = vecFrame(emb, "qid", "qe", "qn")
+      val probes = probeAll(q, q.columns.toSeq, index.nList, n,
+        index.centroids.map(_._1).toSeq.toDF("list_id"), index.centroids)
+      // candidates decode in the scan pipeline: the store stays bytes.
+      // The packed frame is TINY (m B/vector) so the static planner
+      // wants to broadcast it — but this join fans out to
+      // N·nProbe·clusterRows rows whose decode+dot work then inherits
+      // the probe side's SCAN partitioning (a handful of parquet
+      // splits) instead of the shuffle width: measured 90 s → 207 s at
+      // 200 k × nProbe 8. Same trap as the band joins (round-3 rule):
+      // `knnDriver`'s `candJoin` pins shuffle_hash.
+      val cand = packed
+        .withColumn("cd", Pq.decodeBytes(col("pc"), flat, ks, index.sub))
+        .withColumn("cnd", sqrt(dot(col("cd"), col("cd"))))
+      knnDriver(emb, probes, cand, index.nList, cosine("qe", "qn", "cd", "cnd"),
+        col("score").desc, k, Some(refine))
+    }
   }
 
   /** `knnJoinPq` behind an OPQ rotation — the FAISS `OPQ{m},IVF,PQ{m}`
@@ -1210,25 +1195,29 @@ object Similarity {
     * Join-after-reload equals join-after-build (`OpqSpec`). */
   def knnJoinOpqIndexed(emb: DataFrame, index: IvfOpqIndex, k: Int,
                         nProbe: Int = 2, refine: Int = 4,
-                        scanFrac: Option[Double] = None): Scoped[DataFrame] = {
-    val rotated = emb
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .select(col("vec_id"),
-        graft.functions.MatVecF(col("e"), index.rot, index.dim).as("embedding"))
-    knnJoinPqIndexed(rotated, index.pq, k, nProbe, refine, scanFrac)
-  }
+                        scanFrac: Option[Double] = None): Scoped[DataFrame] =
+    knnJoinPqIndexed(rotate(emb, index.rot, index.dim), index.pq, k, nProbe,
+      refine, scanFrac)
+
+  /** `(vec_id, embedding)` rotated by the row-major dim×dim `rot` — one
+    * codegen `MatVec` per row. */
+  private def rotate(vecs: DataFrame, rot: Array[Double], dim: Int): DataFrame =
+    vecs.select(col("vec_id"),
+      graft.functions.MatVecF(asDouble(col("embedding")), rot, dim).as("embedding"))
 
   /** Persist: `ivfPqSave` layout plus the `rot/` table (`opqSave`'s
-    * convention — dim rows, metadata-sized). The store carries
-    * centroids + books + codes + rot, which is how the ingest
-    * dispatch recognizes the tier. */
+    * convention). The store carries centroids + books + codes + rot,
+    * which is how `StoreLayout` recognizes the tier. */
   def ivfOpqSave(index: IvfOpqIndex, path: String): Unit = {
-    val spark = index.pq.coded.sparkSession
-    import spark.implicits._
     ivfPqSave(index.pq, path)
-    val d = index.dim
-    (0 until d).map(i =>
-        (i, index.rot.slice(i * d, (i + 1) * d).toSeq)).toDF("i", "row")
+    saveRot(index.pq.coded.sparkSession, index.rot, index.dim, path)
+  }
+
+  /** The pretransform as a `rot/` table: dim rows, metadata-sized. */
+  private def saveRot(spark: org.apache.spark.sql.SparkSession,
+                      rot: Array[Double], d: Int, path: String): Unit = {
+    import spark.implicits._
+    (0 until d).map(i => (i, rot.slice(i * d, (i + 1) * d).toSeq)).toDF("i", "row")
       .repartition(1).write.mode("overwrite").parquet(s"$path/rot")
   }
 
@@ -1246,25 +1235,16 @@ object Similarity {
   def ivfOpqAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
                        newVecs: DataFrame): Unit = {
     val rot = opqLoadRot(spark, path)
-    val dim = math.sqrt(rot.length.toDouble).toInt
-    val rotated = newVecs
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .select(col("vec_id"),
-        graft.functions.MatVecF(col("e"), rot, dim).as("embedding"))
-    ivfPqAppendSave(spark, path, rotated)
+    ivfPqAppendSave(spark, path,
+      rotate(newVecs, rot, math.sqrt(rot.length.toDouble).toInt))
   }
 
   /** Probe + ADC over an OPQ,IVF,PQ index: queries ride the rotation,
     * then `ivfPqSearch` unchanged (rotated-space centroids and LUTs
     * score the original cosine — A orthonormal). */
   def ivfOpqSearch(index: IvfOpqIndex, queries: DataFrame, k: Int,
-                   nProbe: Int = 2): DataFrame = {
-    val rotated = queries
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .select(col("vec_id"),
-        graft.functions.MatVecF(col("e"), index.rot, index.dim).as("embedding"))
-    ivfPqSearch(index.pq, rotated, k, nProbe)
-  }
+                   nProbe: Int = 2): DataFrame =
+    ivfPqSearch(index.pq, rotate(queries, index.rot, index.dim), k, nProbe)
 
   /** Scalar-quantized (int8) brute-force cosine top-k — `cosineTopK`
     * over `Sq8Encode` codes (functions/Sq8Expressions.scala): 72 B per
@@ -1285,14 +1265,9 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("qc").as("qq"), col("nrm").as("qn"))
     val c = base.where(col("vec_id") >= nQueries)
       .select(col("vec_id").as("vid"), col("qc").as("cc"), col("nrm").as("cn"))
-    c.crossJoin(broadcast(q))
+    rankTop(c.crossJoin(broadcast(q))
       .select(col("qid"), col("vid"),
-        (Sq8.dot(col("qq"), col("cc")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+        (Sq8.dot(col("qq"), col("cc")) / (col("qn") * col("cn"))).as("score")), k)
   }
 
   /** The 1-bit rung of the quantization ladder — FAISS
@@ -1326,56 +1301,32 @@ object Similarity {
   def binSearch(index: BinIndex, queries: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("qid"),
       graft.functions.Bin.encode(asDouble(col("embedding"))).as("qb"))
-    index.coded.crossJoin(broadcast(q))
+    rankTop(index.coded.crossJoin(broadcast(q))
       .select(col("qid"), col("vid"),
-        graft.functions.Bin.hamming(col("qb"), col("bc")).as("ham"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("ham").asc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+        graft.functions.Bin.hamming(col("qb"), col("bc")).as("score")),
+      k, col("score").asc)
   }
 
   /** `Binary,RefineFlat`: Hamming retrieves `k × refine` candidates,
-    * the float store re-scores only those — same repair economics as
-    * `ivfSearchSq8Refine`. At `refine` covering the corpus the float
-    * re-rank orders EVERY candidate, so the result is the exact brute
-    * ranking through the binary plumbing (q158's hash-green dial). */
+    * the float store re-scores only those (`exactRerank`) — same repair
+    * economics as `ivfSearchSq8Refine`. At `refine` covering the corpus
+    * the float re-rank orders EVERY candidate, so the result is the
+    * exact brute ranking through the binary plumbing (q158's
+    * hash-green dial). */
   def binSearchRefine(index: BinIndex, emb: DataFrame, queries: DataFrame,
-                      k: Int, refine: Int = 4): DataFrame = {
-    val cand = binSearch(index, queries, k * refine).select("qid", "vid")
-    val flo = emb.select(col("vec_id").as("vid"), asDouble(col("embedding")).as("ve"))
-      .withColumn("vn", sqrt(dot(col("ve"), col("ve"))))
-    val q = queries.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-    cand.join(flo, Seq("vid"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ve")) / (col("qn") * col("vn"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
-  }
+                      k: Int, refine: Int = 4): DataFrame =
+    exactRerank(binSearch(index, queries, k * refine).select("qid", "vid"),
+      emb, queries, k)
 
-  /** Self-contained query form (the q157/q158 shape): vectors below
-    * `nQueries` query the rest. `refine = 0` returns the raw Hamming
-    * ranking; `refine > 0` float-re-ranks the top pool. */
+  /** Self-contained query form (the q157/q158 shape, `selfQuery`):
+    * vectors below `nQueries` query the rest. `refine = 0` returns the
+    * raw Hamming ranking; `refine > 0` float-re-ranks the top pool. */
   def binTopK(emb: DataFrame, nQueries: Int, k: Int,
-              refine: Int = 0): DataFrame = {
-    val index = binBuild(emb.where(col("vec_id") >= nQueries))
-    try {
-      val qs = emb.where(col("vec_id") < nQueries)
-      val res =
-        if (refine > 0)
-          binSearchRefine(index, emb.where(col("vec_id") >= nQueries), qs, k, refine)
-        else binSearch(index, qs, k)
-      val rows = res.collect().toIndexedSeq
-      val spark = emb.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally index.release()
-  }
+              refine: Int = 0): DataFrame =
+    selfQuery(emb, nQueries)(binBuild)(_.release()) { (index, corpus, qs) =>
+      if (refine > 0) binSearchRefine(index, corpus, qs, k, refine)
+      else binSearch(index, qs, k)
+    }
 
   /** Persist / reload / frozen append for the binary store —
     * `bincodes/` is the layout key the ingest dispatch recognizes.
@@ -1403,88 +1354,42 @@ object Similarity {
     * this index unchanged (binary parquet column), so the on-disk
     * footprint drops by the same ~7× as memory. */
   def ivfBuildSq8(corpus: DataFrame, nList: Int = 8,
-                  sampleFit: Boolean = false): IvfIndex = {
-    import graft.functions.Sq8
-    val fl = ivfBuild(corpus, nList, sampleFit)
-    val assigned = fl.assigned
-      .select(col("vid"), Sq8.encode(col("ce")).as("qc"), col("list_id"))
-      .withColumn("cn", sqrt(Sq8.dot(col("qc"), col("qc"))))
-      .select("vid", "qc", "cn", "list_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // materialize codes, then drop the float lists
-    fl.release()
-    IvfIndex(fl.centroids, assigned, fl.nList)
-  }
+                  sampleFit: Boolean = false): IvfIndex =
+    ivfBuildAs(corpus, nList, sampleFit, ListCodec.Sq8)
 
   /** Search an `ivfBuildSq8` index: probe selection runs on float
     * centroids (broadcast, tiny), candidate scoring on int8 codes. */
   def ivfSearchSq8(index: IvfIndex, queries: DataFrame, k: Int,
-                   nProbe: Int = 2): DataFrame = {
-    import graft.functions.Sq8
-    val q = queries.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qq", Sq8.encode(col("qe")))
-      .withColumn("qn", sqrt(Sq8.dot(col("qq"), col("qq"))))
-    val probes = probeTopLists(q, Seq("qid", "qq", "qn"),
-      index.centroids, nProbe)
-    probes.join(index.assigned, Seq("list_id"))
-      .select(col("qid"), col("vid"),
-        (Sq8.dot(col("qq"), col("qc")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
-  }
+                   nProbe: Int = 2): DataFrame =
+    probeSearch(index, ListCodec.Sq8, queries, k, nProbe)
 
   /** Two-stage refine search over an `ivfBuildSq8` index — the FAISS
     * `IVF,SQ8` + `RefineFlat` composite: stage 1 scans the int8 lists
     * for `k × refine` candidates per query (the cheap, 7×-smaller-IO
-    * pass), stage 2 re-scores ONLY those candidates against the float
-    * store `emb` with the exact codegen dot product and keeps the true
-    * top k. The refine join touches k·refine rows per query —
-    * negligible next to the list scan — so quantization rank error is
-    * repaired at ~zero marginal cost (`Sq8Spec` pins parity with the
-    * all-float IVF search). */
+    * pass), stage 2 (`exactRerank`) re-scores ONLY those candidates
+    * against the float store `emb` with the exact codegen dot product
+    * and keeps the true top k. The refine join touches k·refine rows
+    * per query — negligible next to the list scan — so quantization
+    * rank error is repaired at ~zero marginal cost (`Sq8Spec` pins
+    * parity with the all-float IVF search). */
   def ivfSearchSq8Refine(index: IvfIndex, emb: DataFrame, queries: DataFrame,
-                         k: Int, nProbe: Int = 2, refine: Int = 4): DataFrame = {
-    val cand = ivfSearchSq8(index, queries, k * refine, nProbe)
-      .select("qid", "vid")
-    val flo = emb.select(col("vec_id").as("vid"), asDouble(col("embedding")).as("ve"))
-      .withColumn("vn", sqrt(dot(col("ve"), col("ve"))))
-    val q = queries.select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-    cand.join(flo, Seq("vid"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ve")) / (col("qn") * col("vn"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
-  }
+                         k: Int, nProbe: Int = 2, refine: Int = 4): DataFrame =
+    exactRerank(ivfSearchSq8(index, queries, k * refine, nProbe)
+      .select("qid", "vid"), emb, queries, k)
 
   /** One-shot `IVF,SQ8 + RefineFlat` top-k (the q142 driver query):
     * build the quantized index on the candidate corpus, search the
-    * query slice with a float re-rank pool, release (bounded result,
-    * the `ivfTopK` localization contract). At `nProbe = nList` and
-    * `refine ≥ ⌈n/k⌉` the ADC pool is the whole corpus and the float
-    * re-rank IS the exact brute-force ranking — the exhaustive dial
-    * that lets the quantized store hash-check against the q39 oracle
-    * end-to-end (encode → store → probe → ADC → refine). */
+    * query slice with a float re-rank pool, release (`selfQuery`). At
+    * `nProbe = nList` and `refine ≥ ⌈n/k⌉` the ADC pool is the whole
+    * corpus and the float re-rank IS the exact brute-force ranking —
+    * the exhaustive dial that lets the quantized store hash-check
+    * against the q39 oracle end-to-end (encode → store → probe → ADC →
+    * refine). */
   def sq8RefineTopK(emb: DataFrame, nQueries: Int, k: Int,
                     nList: Int = 8, nProbe: Int = 2,
-                    refine: Int = 4, sampleFit: Boolean = false): DataFrame = {
-    val corpus = emb.where(col("vec_id") >= nQueries)
-    val index = ivfBuildSq8(corpus, nList, sampleFit)
-    try {
-      val res = ivfSearchSq8Refine(index, corpus,
-        emb.where(col("vec_id") < nQueries), k, nProbe, refine)
-      val rows = res.collect().toIndexedSeq
-      val spark = emb.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally index.release()
-  }
+                    refine: Int = 4, sampleFit: Boolean = false): DataFrame =
+    selfQuery(emb, nQueries)(ivfBuildSq8(_, nList, sampleFit))(_.release())(
+      ivfSearchSq8Refine(_, _, _, k, nProbe, refine))
 
   /** Product-quantization top-k — the FAISS `PQ{m}` flat index with
     * asymmetric distance computation (ADC), completing the quantizer
@@ -1521,28 +1426,12 @@ object Similarity {
     * the scan is ~64× less IO than the float baseline. Queries ride a
     * single broadcast with their LUTs inlined. Recall is pinned
     * honestly in `PqSpec`; `refine` re-ranks k·refine ADC candidates
-    * against the float store exactly like `ivfSearchSq8Refine`. */
+    * against the float store exactly like `ivfSearchSq8Refine`. Fit,
+    * encode and search are `pqBuild` + `pqSearch` behind `selfQuery`. */
   def pqTopK(emb: DataFrame, nQueries: Int, k: Int,
-             m: Int = 16, kSub: Int = 256): DataFrame = {
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val dim = base.select(size(col("e"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val cand = base.where(col("vec_id") >= nQueries)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cand.count()
-    try {
-      val books = pqFitBooks(cand, m, kSub, sub)
-      val coded = pqEncodeFrame(cand, books, sub)
-      val res = pqAdcSearch(coded,
-        base.where(col("vec_id") < nQueries), books, sub, k)
-      // materialize the bounded nQueries·k result, then release the
-      // persisted corpus (the ivfTopK release pattern — no leaked cache)
-      val rows = res.collect().toIndexedSeq
-      val spark = emb.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally cand.unpersist(blocking = false)
-  }
+             m: Int = 16, kSub: Int = 256): DataFrame =
+    selfQuery(emb, nQueries)(pqBuild(_, m, kSub))(_.release())(
+      (index, _, qs) => pqSearch(index, qs, k))
 
   /** Codebook training: seeded Lloyd k-means per subspace over a
     * BOUNDED, deterministically-sampled slice of the L2-normalized
@@ -1669,41 +1558,42 @@ object Similarity {
   /** ADC search over an encoded frame. The LUTs are computed on the
     * driver from the collected query rows — queries are the bounded
     * tiny side by contract (same discipline as broadcast in
-    * `cosineTopK`): lut[off_j + c] = (q_j · centroid_{j,c}) / |q|, so
-    * the per-candidate score Σ_j lut[off_j + codes_j] estimates the
-    * cosine directly. */
+    * `cosineTopK`). */
   private[graft] def pqAdcSearch(coded: DataFrame, queries: DataFrame,
                                  books: Array[Array[Array[Double]]],
                                  sub: Int, k: Int): DataFrame = {
-    val m = books.length
-    val offs = books.map(_.length).scanLeft(0)(_ + _)
     val spark = coded.sparkSession
-    val qLuts: Seq[(Long, Seq[Double])] = queries
-      .select(col("vec_id"), col("e")).orderBy("vec_id").collect().toSeq
-      .map { r =>
-        val qe = r.getSeq[Double](1).toArray
-        val n0 = math.sqrt(qe.map(x => x * x).sum)
-        val nrm = if (n0 > 0) n0 else 1.0
-        val lut = for (j <- 0 until m; c <- books(j).indices) yield {
-          var s = 0.0
-          var t = 0
-          while (t < sub) { s += qe(j * sub + t) * books(j)(c)(t); t += 1 }
-          s / nrm
-        }
-        (r.getLong(0), lut)
-      }
     import spark.implicits._
-    val q = qLuts.toDF("qid", "lut")
-    val adc = (0 until m).map(j =>
+    val q = queries.select(col("vec_id"), col("e")).orderBy("vec_id").collect().toSeq
+      .map(r => (r.getLong(0), pqLut(r.getSeq[Double](1).toArray, books, sub)))
+      .toDF("qid", "lut")
+    rankTop(coded.crossJoin(broadcast(q))
+      .select(col("qid"), col("vid"), adcScore(books).as("score")), k)
+  }
+
+  /** One query's ADC lookup table: lut[off_j + c] =
+    * (q_j · centroid_{j,c}) / |q|, so a candidate's Σ_j lut[off_j +
+    * code_j] (`adcScore`) estimates the cosine directly. */
+  private def pqLut(qe: Array[Double], books: Array[Array[Array[Double]]],
+                    sub: Int): Seq[Double] = {
+    val n0 = math.sqrt(qe.map(x => x * x).sum)
+    val nrm = if (n0 > 0) n0 else 1.0
+    for (j <- books.indices; c <- books(j).indices) yield {
+      var s = 0.0
+      var t = 0
+      while (t < sub) { s += qe(j * sub + t) * books(j)(c)(t); t += 1 }
+      s / nrm
+    }
+  }
+
+  /** Σ_j lut[off_j + codes_j]: m array lookups + adds per candidate.
+    * Codebook sizes come from the fitted books, so offsets are
+    * cumulative, not a fixed stride. */
+  private def adcScore(books: Array[Array[Array[Double]]]): Column = {
+    val offs = books.map(_.length).scanLeft(0)(_ + _)
+    books.indices.map(j =>
       element_at(col("lut"),
         element_at(col("codes"), j + 1) + lit(offs(j)) + 1)).reduce(_ + _)
-    coded.crossJoin(broadcast(q))
-      .select(col("qid"), col("vid"), adc.as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
   }
 
   /** A built PQ index: the driver-held codebooks plus the distributed
@@ -1736,15 +1626,21 @@ object Similarity {
     * ANN tier (ivfSave / signatureSave / pqSave). The books table is
     * m·kSub rows — metadata-sized; the codes table is the index. */
   def pqSave(index: PqIndex, path: String): Unit = {
-    val spark = index.coded.sparkSession
+    saveBooks(index.coded.sparkSession, index.books, path)
+    index.coded.write.mode("overwrite").parquet(s"$path/codes")
+  }
+
+  /** Codebooks as a `books/` table: one row per (subspace j, code c)
+    * centroid, m·kSub rows — metadata-sized. */
+  private def saveBooks(spark: org.apache.spark.sql.SparkSession,
+                        books: Array[Array[Array[Double]]], path: String): Unit = {
     import spark.implicits._
     val rows = for {
-      (book, j) <- index.books.zipWithIndex
+      (book, j) <- books.zipWithIndex
       (cent, c) <- book.zipWithIndex
     } yield (j, c, cent.toSeq)
     rows.toSeq.toDF("j", "c", "cent")
       .repartition(1).write.mode("overwrite").parquet(s"$path/books")
-    index.coded.write.mode("overwrite").parquet(s"$path/codes")
   }
 
   /** Rebuild a `PqIndex` from `pqSave` output: the books read is one
@@ -2038,19 +1934,12 @@ object Similarity {
       corpus, queries, k)
 
   /** One-call OPQ top-k on an `(vec_id, embedding)` frame — the OPQ
-    * counterpart of `pqTopK` (queries = ids below `nQueries`). */
+    * counterpart of `pqTopK` (queries = ids below `nQueries`,
+    * `selfQuery`). */
   def opqTopK(emb: DataFrame, nQueries: Int, k: Int, m: Int = 16,
-              kSub: Int = 256, iters: Int = 8): DataFrame = {
-    val index = opqBuild(emb.where(col("vec_id") >= nQueries), m, kSub, iters)
-    try {
-      val res = opqSearch(index, emb.where(col("vec_id") < nQueries), k)
-      // materialize the bounded nQueries·k result, then release the
-      // persisted codes frame (the pqTopK release pattern — no leak)
-      val rows = res.collect().toIndexedSeq
-      val spark = emb.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally index.release()
-  }
+              kSub: Int = 256, iters: Int = 8): DataFrame =
+    selfQuery(emb, nQueries)(opqBuild(_, m, kSub, iters))(_.release())(
+      (index, _, qs) => opqSearch(index, qs, k))
 
   def opqTopKRefine(emb: DataFrame, nQueries: Int, k: Int, m: Int = 16,
                     kSub: Int = 256, refine: Int = 8,
@@ -2061,13 +1950,8 @@ object Similarity {
   /** Persist: `pqSave` layout plus a `rot/` table (dim rows — the
     * pretransform matrix is metadata-sized). */
   def opqSave(index: OpqIndex, path: String): Unit = {
-    val spark = index.pq.coded.sparkSession
-    import spark.implicits._
     pqSave(index.pq, path)
-    val d = index.dim
-    (0 until d).map(i =>
-        (i, index.rot.slice(i * d, (i + 1) * d).toSeq)).toDF("i", "row")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/rot")
+    saveRot(index.pq.coded.sparkSession, index.rot, index.dim, path)
   }
 
   def opqLoad(spark: org.apache.spark.sql.SparkSession, path: String): OpqIndex =
@@ -2170,8 +2054,6 @@ object Similarity {
     * driver sample either way. */
   def ivfPqBuild(corpus: DataFrame, nList: Int = 8, m: Int = 16,
                  kSub: Int = 256, sampleFit: Boolean = false): IvfPqIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val dim = base.select(size(col("e"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
@@ -2179,22 +2061,7 @@ object Similarity {
     val books = pqFitBooks(base, m, kSub, sub)
     val flat = books.flatMap(_.flatMap(_.toSeq))
     val ks = books.map(_.length)
-    val (cents, listed) =
-      if (sampleFit) {
-        val cs = coarseFitSample(base, nList)
-        val aug = cs.flatMap(c => c :+ (-0.5 * c.map(v => v * v).sum))
-        (cs.zipWithIndex.map { case (c, i) => (i, c) },
-          base.select(col("vec_id"), col("e"),
-            explode(graft.functions.NearestLists(
-              concat(col("e"), array(lit(1.0d))), aug,
-              cs.indices.toArray, dim + 1, 1)).as("list_id")))
-      } else {
-        val withF = base.withColumn("features", array_to_vector(col("e")))
-        val coarse = new KMeans().setK(nList).setSeed(42L).setMaxIter(5)
-          .setFeaturesCol("features").setPredictionCol("list_id").fit(withF)
-        (coarse.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) },
-          coarse.transform(withF))
-      }
+    val (cents, listed) = coarseLists(base, nList, sampleFit)
     val coded = listed
       .select(col("vec_id").as("vid"),
         graft.functions.Pq.encode(col("e"), flat, ks, sub).as("codes"),
@@ -2212,60 +2079,35 @@ object Similarity {
     * codes is ever read. */
   def ivfPqSearch(index: IvfPqIndex, queries: DataFrame, k: Int,
                   nProbe: Int = 2): DataFrame = {
-    val m = index.books.length
-    val offs = index.books.map(_.length).scanLeft(0)(_ + _)
     val spark = index.coded.sparkSession
     import spark.implicits._
-    val probeRows: Seq[(Long, Int, Seq[Double])] = queries
+    val probes = queries
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .orderBy("vec_id").collect().toSeq
       .flatMap { r =>
         val qe = r.getSeq[Double](1).toArray
-        val n0 = math.sqrt(qe.map(x => x * x).sum)
-        val nrm = if (n0 > 0) n0 else 1.0
-        val lut: Seq[Double] = for (j <- 0 until m; c <- index.books(j).indices) yield {
-          var s = 0.0
-          var t = 0
-          while (t < index.sub) { s += qe(j * index.sub + t) * index.books(j)(c)(t); t += 1 }
-          s / nrm
-        }
+        val lut = pqLut(qe, index.books, index.sub)
         // nearest lists by max query·centroid (ties to lower list id)
-        val lists = index.centroids
+        index.centroids
           .map { case (lid, cent) =>
             var s = 0.0
             var t = 0
             while (t < cent.length) { s += qe(t) * cent(t); t += 1 }
             (-s, lid)
           }
-          .sorted.take(nProbe).map(_._2)
-        lists.map(lid => (r.getLong(0), lid, lut))
+          .sorted.take(nProbe).map { case (_, lid) => (r.getLong(0), lid, lut) }
       }
-    val probes = probeRows.toDF("qid", "list_id", "lut")
-    val adc = (0 until m).map(j =>
-      element_at(col("lut"),
-        element_at(col("codes"), j + 1) + lit(offs(j)) + 1)).reduce(_ + _)
-    index.coded.join(broadcast(probes), Seq("list_id"))
-      .select(col("qid"), col("vid"), adc.as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
+      .toDF("qid", "list_id", "lut")
+    rankTop(index.coded.join(broadcast(probes), Seq("list_id"))
+      .select(col("qid"), col("vid"), adcScore(index.books).as("score")), k)
   }
 
-  /** One-shot IVF,PQ top-k (the driver-query form, `ivfTopK`'s
-    * contract): build on the candidate corpus, search the query
-    * slice, release. */
+  /** One-shot IVF,PQ top-k (the driver-query form, `selfQuery`): build
+    * on the candidate corpus, search the query slice, release. */
   def ivfPqTopK(emb: DataFrame, nQueries: Int, k: Int, nList: Int = 8,
-                nProbe: Int = 2, m: Int = 16, kSub: Int = 256): DataFrame = {
-    val index = ivfPqBuild(emb.where(col("vec_id") >= nQueries), nList, m, kSub)
-    try {
-      val res = ivfPqSearch(index, emb.where(col("vec_id") < nQueries), k, nProbe)
-      val rows = res.collect().toIndexedSeq
-      val spark = emb.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally index.release()
-  }
+                nProbe: Int = 2, m: Int = 16, kSub: Int = 256): DataFrame =
+    selfQuery(emb, nQueries)(ivfPqBuild(_, nList, m, kSub))(_.release())(
+      (index, _, qs) => ivfPqSearch(index, qs, k, nProbe))
 
   /** Persist an IVF,PQ index (`centroids/`, `books/`, `codes/`
     * partitioned by `list_id` for probe-time partition pruning) —
@@ -2276,12 +2118,7 @@ object Similarity {
     index.centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
       .toDF("list_id", "centroid")
       .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val bookRows = for {
-      (book, j) <- index.books.zipWithIndex
-      (cent, c) <- book.zipWithIndex
-    } yield (j, c, cent.toSeq)
-    bookRows.toSeq.toDF("j", "c", "cent")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/books")
+    saveBooks(spark, index.books, path)
     // whole lists per task before the partitioned write (the ivfSave
     // small-files rule: partitions×nList slivers otherwise)
     graft.core.Stores.writeLayout(index.coded, col("list_id"))
@@ -2293,20 +2130,9 @@ object Similarity {
     * codebooks) WITHOUT touching the codes store — what append needs:
     * both reads are bounded (nList + m·kSub rows). */
   private def ivfPqMeta(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Array[(Int, Array[Double])], Array[Array[Array[Double]]]) = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("list_id", "centroid").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val bookRows = spark.read.parquet(s"$path/books")
-      .select("j", "c", "cent").collect()
-    val m = bookRows.map(_.getInt(0)).max + 1
-    val books = Array.tabulate(m) { j =>
-      bookRows.filter(_.getInt(0) == j).sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2).toArray)
-    }
-    (cents, books)
-  }
+      : (Array[(Int, Array[Double])], Array[Array[Array[Double]]]) =
+    (centroidRows(spark.read.parquet(s"$path/centroids")),
+      pqLoadBooks(spark, path)._1)
 
   def ivfPqLoad(spark: org.apache.spark.sql.SparkSession,
                 path: String): IvfPqIndex = {
@@ -2329,20 +2155,15 @@ object Similarity {
     val sub = books(0)(0).length
     val flat = books.flatMap(_.flatMap(_.toSeq))
     val ks = books.map(_.length)
-    // Euclidean argmin via NearestLists (augmented-dot trick) — the
+    // Euclidean argmin via `nearestList` (augmented-dot trick) — the
     // former per-centroid struct/array_sort expression tree inlined
     // O(nList) typedLit subtrees, the exact fresh-plan Catalyst cost
     // cliff the round-6 q65 rule warns about, and maintenance scales
     // nList with the store
-    val sorted = cents.sortBy(_._1)
-    val dim = sorted(0)._2.length
-    val aug = sorted.flatMap { case (_, c) => c :+ (-0.5 * c.map(v => v * v).sum) }
-    val ids = sorted.map(_._1)
     newVecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .select(col("vec_id").as("vid"),
         graft.functions.Pq.encode(col("e"), flat, ks, sub).as("codes"),
-        explode(graft.functions.NearestLists(
-          concat(col("e"), array(lit(1.0d))), aug, ids, dim + 1, 1)).as("list_id"))
+        nearestList(col("e"), cents).as("list_id"))
       // one file per touched list (pinned width)
       .transform(graft.core.Stores.writeLayout(_, col("list_id")))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
@@ -2441,23 +2262,10 @@ object Similarity {
     * bounded (qid, vid) candidate frame — k·refine rows per query, one
     * equi-join to the float store, one broadcast of the query side. */
   private def exactRerank(cand: DataFrame, corpus: DataFrame,
-                          queries: DataFrame, k: Int): DataFrame = {
-    val flo = corpus.select(col("vec_id").as("vid"),
-        asDouble(col("embedding")).as("ve"))
-      .withColumn("vn", sqrt(dot(col("ve"), col("ve"))))
-    val q = queries
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-    cand.join(flo, Seq("vid"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("vid"),
-        (dot(col("qe"), col("ve")) / (col("qn") * col("vn"))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid").asc)))
-      .where(col("rnk") <= k)
-      .select("qid", "rnk", "vid")
-      .orderBy("qid", "rnk")
-  }
+                          queries: DataFrame, k: Int): DataFrame =
+    rankTop(cand.join(vecFrame(corpus, "vid", "ve", "vn"), Seq("vid"))
+      .join(broadcast(vecFrame(queries, "qid", "qe", "qn")), Seq("qid"))
+      .select(col("qid"), col("vid"), cosine("qe", "qn", "ve", "vn").as("score")), k)
 
   /** LSH-bucketed embedding near-duplicate pairs — the scale path for
     * `cosineNearDupPairs`: pairs form only within sign-LSH buckets

@@ -253,7 +253,7 @@ object TextAnalysis {
           count(when(col("w") === t, true)).as(s"tf${i + 1}")
         }: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scoped(tf)(tf.unpersist(blocking = false)).map { tf =>
       tf.count()
       val dfRow = tf.agg(
         count(lit(1)).as("n_docs"),
@@ -261,20 +261,16 @@ object TextAnalysis {
       val score = terms.indices.map(i =>
         col(s"tf$i") * (col("n_docs") / greatest(col(s"df$i"), lit(1L))))
         .reduce(_ + _)
-      val res = tf.crossJoin(broadcast(dfRow))
+      tf.crossJoin(broadcast(dfRow))
         .withColumn("score", score)
         .where(col("score") > 0)
         .orderBy(col("score").desc, col("doc_id").asc)
         .limit(k)
         .select(col("doc_id"), col("score"))
       // the result is bounded at k rows by construction — localize it so
-      // the per-call persist can be released deterministically in
-      // `finally` (the ivfTopK pattern) instead of leaking until the
-      // caller clears the cache
-      val rows = res.collect().toIndexedSeq
-      val spark = docs.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally tf.unpersist(blocking = false)
+      // the per-call persist is released deterministically instead of
+      // leaking until the caller clears the cache
+    }.localize
   }
 
   /** BM25 lexical retrieval (Robertson–Spärck Jones, k1 = 1.2,
@@ -303,7 +299,7 @@ object TextAnalysis {
           count(when(col("w") === t, true)).as(s"tf$i")
         }: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scoped(tf)(tf.unpersist(blocking = false)).map { tf =>
       tf.count()
       val constCols = Seq(count(lit(1)).as("nd"), sum(col("dl")).as("ta")) ++
         terms.indices.map(i => count(when(col(s"tf$i") > 0, true)).as(s"df$i"))
@@ -313,18 +309,14 @@ object TextAnalysis {
           s" * 1000000) div ((2L*df$i + 1L) * (10L*ta*tf$i + 3L*ta + 9L*dl*nd))" +
           " AS BIGINT)")
       }.reduce(_ + _)
-      val res = tf.crossJoin(broadcast(consts))
+      tf.crossJoin(broadcast(consts))
         .withColumn("score_ppm", scorePpm)
         .where(col("score_ppm") > 0)
         .orderBy(col("score_ppm").desc, col("doc_id").asc)
         .limit(k)
         .select(col("doc_id"), col("score_ppm"))
-      // bounded at k rows: localize, then release the persist (the
-      // tfidfTopK/ivfTopK deterministic-release pattern)
-      val rows = res.collect().toIndexedSeq
-      val spark = docs.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally tf.unpersist(blocking = false)
+      // bounded at k rows: localize, then release the persist
+    }.localize
   }
 
   /** Zipf rank–frequency profile — the corpus-health report a curation
@@ -339,11 +331,11 @@ object TextAnalysis {
     val counts = docs.select(explode(toks(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scoped(counts)(counts.unpersist(blocking = false)).map { counts =>
       counts.count()
       val total = counts.agg(sum(col("c")).as("total"))
       val top = counts.orderBy(col("c").desc, col("w")).limit(topN)
-      val res = top.crossJoin(broadcast(total))
+      top.crossJoin(broadcast(total))
         .withColumn("rank", row_number().over(
           Window.orderBy(col("c").desc, col("w"))))
         .withColumn("cum", sum(col("c")).over(
@@ -354,10 +346,7 @@ object TextAnalysis {
           expr("(cum * 1000000L) div total").as("cum_ppm"))
         .orderBy("rank")
       // bounded at topN rows: localize, release the persist
-      val rows = res.collect().toIndexedSeq
-      val spark = docs.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
-    } finally counts.unpersist(blocking = false)
+    }.localize
   }
 
   /** Token-distribution drift between two corpus snapshots — the

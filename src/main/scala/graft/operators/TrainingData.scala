@@ -813,11 +813,8 @@ object TrainingData {
       .select(col("src_a"), col("src_b"), col("grams_a"), col("shared"),
         expr("(shared * 1000000L) div grams_a").as("containment_ppm"))
       .orderBy("src_a", "src_b")
-    // bounded at |sources|² rows: localize and release (ivfTopK pattern)
-    val rows = res.collect().toIndexedSeq
-    sg.unpersist(blocking = false)
-    val spark = docs.sparkSession
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), res.schema)
+    // bounded at |sources|² rows: localize and release
+    Scoped(res)(sg.unpersist(blocking = false)).localize
   }
 
   /** Sketch twin of `sourceOverlap` (q111 ↔ q146, completing the

@@ -163,12 +163,11 @@ object IngestPipeline {
         // first would re-execute it against a store containing the
         // batch itself).
         neighborsPath.foreach { np => t("mine_neighbors") {
-          val nb = IngestVectors.searchBatch(
-            kept.select(col("doc_id").as("vec_id"), col("embedding")),
-            indexPath, neighborK, neighborProbe, neighborScanFrac)
-          try nb.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-            .write.mode("append").parquet(np)
-          finally nb.unpersist(blocking = false)
+          IngestVectors.searchBatch(
+              kept.select(col("doc_id").as("vec_id"), col("embedding")),
+              indexPath, neighborK, neighborProbe, neighborScanFrac)
+            .use(_.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+              .write.mode("append").parquet(np))
         }}
         // ORDER MATTERS: the signature-store append must come LAST.
         // Writing to sigStorePath triggers refreshByPath, which recaches

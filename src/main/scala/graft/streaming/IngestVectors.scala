@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Scoped
 import graft.operators.Similarity
+import graft.operators.Similarity.{ListCodec, StoreLayout}
+import graft.operators.Similarity.StoreLayout._
 
 /** Continuous embedding ingest into a persisted IVF index — the vector
   * half of `IngestDedup`: an unbounded feed of (vec_id, embedding) rows
@@ -35,38 +37,32 @@ object IngestVectors {
 
   /** Run one micro-batch: append the batch to whichever saved index
     * layout lives at `indexPath` — detected from the store's own
-    * directory shape, so one ingest loop serves every tier:
-    * `assigned/` = IVF (float, SQ8, or 1-bit — `ivfAppendSave`
-    * re-encodes from the store schema); `rot/` + `centroids/` = OPQ,IVF,PQ (batch
-    * rides the frozen rotation, then the frozen lists/books);
-    * `books/` + `centroids/` = IVF,PQ; `books/` + `rot/` = flat OPQ;
-    * `books/` alone = flat PQ; `bincodes/` = the 1-bit sign store
-    * (`binSave`, Hamming-ranked search face). Returns the batch row
-    * count. Factored out of the foreachBatch closure so batch specs
-    * can drive it without a streaming query. */
+    * directory shape (`Similarity.StoreLayout`), so one ingest loop
+    * serves every tier: IVF float, SQ8 or 1-bit lists (re-encoded in
+    * the store's own list codec), OPQ,IVF,PQ (batch rides the frozen
+    * rotation, then the frozen lists/books), IVF,PQ, flat OPQ, flat
+    * PQ and the 1-bit sign store (`binSave`, Hamming-ranked search
+    * face). Returns the batch row count. Factored out of the
+    * foreachBatch closure so batch specs can drive it without a
+    * streaming query. */
   def processBatch(batch: DataFrame, indexPath: String): Long = {
     val spark = batch.sparkSession
     val n = batch.count()
-    if (n > 0) {
-      // Hadoop FS, not java.io: index stores live on the cluster
-      // filesystem (HDFS/object store) in production
-      val root = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val has = (d: String) => fs.exists(new org.apache.hadoop.fs.Path(root, d))
-      if (has("assigned")) Similarity.ivfAppendSave(spark, indexPath, batch)
-      else if (has("rot") && has("centroids"))
-        Similarity.ivfOpqAppendSave(spark, indexPath, batch)
-      else if (has("books") && has("centroids"))
-        Similarity.ivfPqAppendSave(spark, indexPath, batch)
-      else if (has("books") && has("rot"))
-        Similarity.opqAppendSave(spark, indexPath, batch)
-      else if (has("books")) Similarity.pqAppendSave(spark, indexPath, batch)
-      else if (has("bincodes")) Similarity.binAppendSave(spark, indexPath, batch)
-      else throw new IllegalArgumentException(
-        s"$indexPath is not an ivfSave/ivfPqSave/ivfOpqSave/opqSave/pqSave/binSave store")
+    if (n > 0) layoutAt(spark, indexPath) match {
+      case Ivf(codec, _) => Similarity.ivfAppendAs(spark, indexPath, batch, codec)
+      case OpqIvfPq => Similarity.ivfOpqAppendSave(spark, indexPath, batch)
+      case IvfPq => Similarity.ivfPqAppendSave(spark, indexPath, batch)
+      case FlatOpq => Similarity.opqAppendSave(spark, indexPath, batch)
+      case FlatPq => Similarity.pqAppendSave(spark, indexPath, batch)
+      case FlatBin => Similarity.binAppendSave(spark, indexPath, batch)
     }
     n
   }
+
+  private def layoutAt(spark: org.apache.spark.sql.SparkSession,
+                       indexPath: String): StoreLayout =
+    StoreLayout.at(spark, indexPath).getOrElse(throw new IllegalArgumentException(
+      s"$indexPath is not an ivfSave/ivfPqSave/ivfOpqSave/opqSave/pqSave/binSave store"))
 
   /** Search a batch of query vectors against whatever saved layout
     * lives at `indexPath` — the read face of the ingest loop and the
@@ -74,30 +70,27 @@ object IngestVectors {
     * mine its top-k neighbors among EVERYTHING INGESTED SO FAR in
     * O(batch · nProbe · clusterRows) (IVF tiers) or O(batch · m·kSub +
     * batch · codes) ADC (flat PQ/OPQ), never touching kept text and
-    * never rescanning the corpus. Same directory-shape dispatch as
+    * never rescanning the corpus. Same layout detection as
     * `processBatch`; `nProbe` applies to the IVF layouts. Returns
-    * (qid, rnk, vid), materialized so the loaded store is released
-    * before returning — callers sink it and unpersist.
+    * (qid, rnk, vid) materialized: the loaded store is released before
+    * returning and the scope owns only the result.
     *
     * `scanFrac` is the recall-stable dial for LONG-LIVED callers (the
     * ingest loop's pair mining): a fixed `nProbe` silently shrinks the
     * scanned share of the corpus when a maintenance rebuild grows
     * nList with the store (the SCALE.md round-6 law, 0.88 → 0.29
-    * recall across an 8× growth). When set, the effective probe count
-    * is ⌈nList·scanFrac⌉ AGAINST THE STORE'S OWN CURRENT nList — read
+    * recall across an 8× growth). When set — in (0, 1], the one
+    * `Similarity.probeRule` — the effective probe count is
+    * ⌈nList·scanFrac⌉ AGAINST THE STORE'S OWN CURRENT nList — read
     * from the loaded generation, so recall tracks the same corpus
     * fraction across generation swaps with no caller-side re-tuning.
     * Ignored by the flat PQ/OPQ layouts (they ADC-scan every code;
     * there is no list dial to hold). */
   def searchBatch(queries: DataFrame, indexPath: String, k: Int,
                   nProbe: Int = 2,
-                  scanFrac: Option[Double] = None): DataFrame = {
+                  scanFrac: Option[Double] = None): Scoped[DataFrame] = {
     val spark = queries.sparkSession
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val has = (d: String) => fs.exists(new org.apache.hadoop.fs.Path(root, d))
-    def probes(nList: Int): Int = scanFrac
-      .map(f => math.max(1, math.ceil(nList * f).toInt)).getOrElse(nProbe)
+    val probes = Similarity.probeRule(nProbe, scanFrac)
     // BinHamming min-clamps mismatched code lengths (the DotProduct
     // discipline), so a query dim that differs from the store's code
     // width would yield a truncated-but-plausible ranking with no
@@ -118,41 +111,35 @@ object IngestVectors {
     }
     // each loaded index is scoped before it is searched, so a search
     // that throws (the dim check) still releases it
-    val res: Scoped[DataFrame] =
-      if (has("assigned")) {
-        val idx = Similarity.ivfLoad(spark, indexPath)
+    val res: Scoped[DataFrame] = layoutAt(spark, indexPath) match {
+      case ivf: Ivf =>
+        val idx = Similarity.ivfOpen(spark, indexPath, ivf)
         Scoped(idx)(idx.release()).map { idx =>
-          if (idx.assigned.columns.contains("bc")) {
-            requireBinDim(idx.assigned)
-            Similarity.ivfSearchBin(idx, queries, k, probes(idx.nList))
-          }
-          else if (idx.assigned.columns.contains("qc"))
-            Similarity.ivfSearchSq8(idx, queries, k, probes(idx.nList))
-          else Similarity.ivfSearch(idx, queries, k, probes(idx.nList))
+          if (ivf.codec == ListCodec.Bin) requireBinDim(idx.assigned)
+          Similarity.probeSearch(idx, ivf.codec, queries, k, probes(idx.nList))
         }
-      } else if (has("rot") && has("centroids")) {
+      case OpqIvfPq =>
         val idx = Similarity.ivfOpqLoad(spark, indexPath)
         Scoped(idx)(idx.release())
           .map(idx => Similarity.ivfOpqSearch(idx, queries, k, probes(idx.pq.nList)))
-      } else if (has("books") && has("centroids")) {
+      case IvfPq =>
         val idx = Similarity.ivfPqLoad(spark, indexPath)
         Scoped(idx)(idx.release())
           .map(idx => Similarity.ivfPqSearch(idx, queries, k, probes(idx.nList)))
-      } else if (has("books") && has("rot")) {
+      case FlatOpq =>
         val idx = Similarity.opqLoad(spark, indexPath)
         Scoped(idx)(idx.release()).map(Similarity.opqSearch(_, queries, k))
-      } else if (has("books")) {
+      case FlatPq =>
         val idx = Similarity.pqLoad(spark, indexPath)
         Scoped(idx)(idx.release()).map(Similarity.pqSearch(_, queries, k))
-      } else if (has("bincodes")) {
+      case FlatBin =>
         val idx = Similarity.binLoad(spark, indexPath)
         Scoped(idx)(idx.release()).map { idx =>
           requireBinDim(idx.coded)
           Similarity.binSearch(idx, queries, k)
         }
-      } else throw new IllegalArgumentException(
-        s"$indexPath is not an ivfSave/ivfPqSave/ivfOpqSave/opqSave/pqSave/binSave store")
-    res.materialize.value
+    }
+    res.materialize
   }
 
   /** Skew-gated offline maintenance for an `ivfSave` IVF store — the

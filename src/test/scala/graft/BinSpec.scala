@@ -138,10 +138,8 @@ class BinSpec extends SparkSpec {
     val twins = all.where($"vec_id" >= 20 && $"vec_id" < 25)
       .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
     assert(IngestVectors.processBatch(twins, dir) == 5)
-    val hits = IngestVectors.searchBatch(all.where($"vec_id" === 22), dir, 2,
-      nProbe = 4)
-    val got = hits.collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
-    hits.unpersist(blocking = false)
+    val got = IngestVectors.searchBatch(all.where($"vec_id" === 22), dir, 2,
+      nProbe = 4).use(_.collect().map(r => (r.getInt(1), r.getLong(2))).toSeq)
     assert(got.head == ((1, 22L)) && got.map(_._2).contains(10022L),
       s"twin not found through the binary IVF tier: $got")
   }
@@ -171,9 +169,8 @@ class BinSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/bincodes").count() == base + 5)
     // the appended exact twin is Hamming-0: it appears in its
     // original's top-2 (twin vs original tie broken by vid asc)
-    val hits = IngestVectors.searchBatch(all.where($"vec_id" === 22), dir, 2)
-    val got = hits.collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
-    hits.unpersist(blocking = false)
+    val got = IngestVectors.searchBatch(all.where($"vec_id" === 22), dir, 2)
+      .use(_.collect().map(r => (r.getInt(1), r.getLong(2))).toSeq)
     assert(got.head == ((1, 22L)) && got.map(_._2).contains(10022L),
       s"twin not found through the binary tier: $got")
   }

@@ -158,10 +158,8 @@ class IngestPipelineSpec extends SparkSpec {
       .select($"doc_id".as("vec_id"), $"embedding")
 
     // batch 1 mining == offline search against the untouched seed store
-    val off0 = IngestVectors.searchBatch(kept1Vecs, pathC, 3)
-    val exp0 = off0.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    off0.unpersist(blocking = false)
+    val exp0 = IngestVectors.searchBatch(kept1Vecs, pathC, 3)
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
     assert(mined0 == exp0)
 
     // batch 2 mining == offline search against seed + kept batch 1
@@ -172,10 +170,8 @@ class IngestPipelineSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet -- kept1
     val kept2Vecs = feed.where($"doc_id".isin(kept2.toSeq: _*))
       .select($"doc_id".as("vec_id"), $"embedding")
-    val off1 = IngestVectors.searchBatch(kept2Vecs, pathB, 3)
-    val exp1 = off1.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    off1.unpersist(blocking = false)
+    val exp1 = IngestVectors.searchBatch(kept2Vecs, pathB, 3)
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
     assert(mined1 == exp1)
     // and batch 2 may (and on this data does) surface batch-1 docs
     assert(mined1.exists(t => t._3 >= 300L && t._3 < 350L))
@@ -229,14 +225,10 @@ class IngestPipelineSpec extends SparkSpec {
     // offline expectation against the PRE-append new generation: the
     // fraction must resolve to the new nList (4), i.e. equal explicit
     // nProbe = 4 — not the pre-swap generation's 2
-    val offF = IngestVectors.searchBatch(kept2Vecs, g1, 3, scanFrac = Some(1.0))
-    val expF = offF.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    offF.unpersist(blocking = false)
-    val offP = IngestVectors.searchBatch(kept2Vecs, g1, 3, nProbe = 4)
-    val expP = offP.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    offP.unpersist(blocking = false)
+    val expF = IngestVectors.searchBatch(kept2Vecs, g1, 3, scanFrac = Some(1.0))
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
+    val expP = IngestVectors.searchBatch(kept2Vecs, g1, 3, nProbe = 4)
+      .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
     assert(expF == expP, "scanFrac did not resolve against the new generation's nList")
 
     IngestPipeline.processBatch(b2, 1L, sigsA, outA, g1, teleA, 0.5,

@@ -96,11 +96,11 @@ class IngestVectorsSpec extends SparkSpec {
     val iopqBase = spark.read.parquet(s"$iopqDir/codes").count()
     assert(IngestVectors.processBatch(batch, iopqDir) == 5)
     assert(spark.read.parquet(s"$iopqDir/codes").count() == iopqBase + 5)
-    val iopqHits = IngestVectors.searchBatch(
-      all.where($"vec_id" === 22), iopqDir, 1, nProbe = 4)
-    assert(iopqHits.collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
-      == Seq((22L, 10022L)), "twin not nearest through the OPQ,IVF,PQ tier")
-    iopqHits.unpersist(blocking = false)
+    IngestVectors.searchBatch(
+      all.where($"vec_id" === 22), iopqDir, 1, nProbe = 4).use { iopqHits =>
+      assert(iopqHits.collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
+        == Seq((22L, 10022L)), "twin not nearest through the OPQ,IVF,PQ tier")
+    }
 
     val ivfpqDir = tmp("ingv_ivfpq")
     val ipqIdx = Similarity.ivfPqBuild(all.where($"vec_id" >= 25 && $"vec_id" < 400), 4)
@@ -182,10 +182,9 @@ class IngestVectorsSpec extends SparkSpec {
     assert(vids(dst) == vids(src))
     assert(Similarity.ivfReplayGap(spark, src, dst) == 0) // idempotent
     // the replayed twin is searchable in the new generation
-    val hits = IngestVectors.searchBatch(
-      all.where($"vec_id" === 205), dst, 3, 4)
-    assert(hits.collect().map(_.getLong(2)).contains(20205L))
-    hits.unpersist()
+    IngestVectors.searchBatch(all.where($"vec_id" === 205), dst, 3, 4).use { hits =>
+      assert(hits.collect().map(_.getLong(2)).contains(20205L))
+    }
   }
 
   test("ivfReplayGap on an SQ8 store: reconstruction round-trips, codes land bit-identical") {
@@ -263,10 +262,8 @@ class IngestVectorsSpec extends SparkSpec {
     reb.release()
 
     def run(path: String, nProbe: Int = 2, frac: Option[Double] = None) = {
-      val r = IngestVectors.searchBatch(qs, path, 5, nProbe, frac)
-      val out = r.collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSeq
-      r.unpersist(blocking = false)
-      out
+      IngestVectors.searchBatch(qs, path, 5, nProbe, frac)
+        .use(_.collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSeq)
     }
     // scanFrac resolves to ⌈nList·f⌉ against the loaded store: half the
     // lists on both generations == the explicitly-probed equivalent
@@ -337,13 +334,76 @@ class IngestVectorsSpec extends SparkSpec {
     val good = all.where($"vec_id" === 0).select($"vec_id", $"embedding")
     val bad = Seq((0L, Seq.fill(32)(0.5f))).toDF("vec_id", "embedding")
     for (dir <- Seq(flat, ivf)) {
-      val ok = IngestVectors.searchBatch(good, dir, 3)
-      assert(ok.count() == 3)
-      ok.unpersist(blocking = false)
+      IngestVectors.searchBatch(good, dir, 3).use(ok => assert(ok.count() == 3))
       val e = intercept[IllegalArgumentException] {
         IngestVectors.searchBatch(bad, dir, 3)
       }
       assert(e.getMessage.contains("dimensionality mismatch"))
+    }
+  }
+
+  test("every saved layout: a twin batch appends, searchBatch finds it, compaction accepts the store") {
+    val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val corpus = all.where($"vec_id" >= 25 && $"vec_id" < 400)
+    val nCorpus = corpus.count()
+    val twins = all.where($"vec_id" >= 20 && $"vec_id" < 25)
+      .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
+    def saved[I](build: => I)(save: (I, String) => Unit)(release: I => Unit)(dir: String): Unit = {
+      val idx = build
+      try save(idx, dir) finally release(idx)
+    }
+    val ivfCompact = (d: String) => Similarity.ivfCompact(spark, d)
+    val codesCompact = (d: String) => Similarity.codesCompact(spark, d)
+    val layouts: Seq[(String, String => Unit, String => Long)] = Seq(
+      ("IVF float", saved(Similarity.ivfBuild(corpus, 4))(Similarity.ivfSave)(_.release()),
+        ivfCompact),
+      ("IVF SQ8", saved(Similarity.ivfBuildSq8(corpus, 4))(Similarity.ivfSave)(_.release()),
+        ivfCompact),
+      ("IVF 1-bit", saved(Similarity.ivfBuildBin(corpus, 4))(Similarity.ivfSave)(_.release()),
+        ivfCompact),
+      ("IVF,PQ", saved(Similarity.ivfPqBuild(corpus, 4))(Similarity.ivfPqSave)(_.release()),
+        codesCompact),
+      ("OPQ,IVF,PQ", saved(Similarity.ivfOpqBuild(corpus, 4))(Similarity.ivfOpqSave)(_.release()),
+        codesCompact),
+      ("flat PQ", saved(Similarity.pqBuild(corpus))(Similarity.pqSave)(_.release()),
+        codesCompact),
+      ("flat OPQ", saved(Similarity.opqBuild(corpus))(Similarity.opqSave)(_.release()),
+        codesCompact),
+      ("flat 1-bit", saved(Similarity.binBuild(corpus))(Similarity.binSave)(_.release()),
+        codesCompact))
+    for ((name, save, compact) <- layouts) {
+      val dir = tmp("ingv_layout")
+      save(dir)
+      assert(IngestVectors.processBatch(twins, dir) == 5, name)
+      // every list probed (nProbe = nList = 4): the re-keyed twin of the
+      // query is its nearest neighbour on every tier
+      val nearest = IngestVectors.searchBatch(all.where($"vec_id" === 22), dir, 1, nProbe = 4)
+        .use(_.collect().map(r => (r.getLong(0), r.getLong(2))).toSeq)
+      assert(nearest == Seq((22L, 10022L)), s"$name: twin not nearest: $nearest")
+      assert(compact(dir) == nCorpus + 5, name)
+    }
+
+    val junk = tmp("ingv_layout_junk")
+    val dispatch = "is not an ivfSave/ivfPqSave/ivfOpqSave/opqSave/pqSave/binSave store"
+    assert(intercept[IllegalArgumentException](IngestVectors.processBatch(twins, junk))
+      .getMessage.contains(dispatch))
+    assert(intercept[IllegalArgumentException](IngestVectors.searchBatch(twins, junk, 1))
+      .getMessage.contains(dispatch))
+    assert(intercept[IllegalArgumentException](Similarity.codesCompact(spark, junk))
+      .getMessage.contains("is not a pqSave/opqSave/ivfPqSave/ivfOpqSave/binSave code store"))
+  }
+
+  test("scanFrac outside (0, 1] is rejected by knnJoin and searchBatch") {
+    val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val corpus = all.where($"vec_id" < 100)
+    val dir = tmp("ingv_frac_bad")
+    val idx = Similarity.ivfBuild(corpus, 4)
+    try Similarity.ivfSave(idx, dir) finally idx.release()
+    intercept[IllegalArgumentException] {
+      Similarity.knnJoin(corpus, 3, scanFrac = Some(0.0))
+    }
+    intercept[IllegalArgumentException] {
+      IngestVectors.searchBatch(all.where($"vec_id" < 3), dir, 3, scanFrac = Some(1.5))
     }
   }
 }

@@ -63,4 +63,27 @@ class ScopedSpec extends SparkSpec {
     assert(!cachedAtRelease.exists(sc.getPersistentRDDs.contains),
       "result persist not released by use")
   }
+
+  test("localize returns the same rows in one local partition, releasing after the collect and on a throw") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val sc = spark.sparkContext
+    // the accumulator counts rows the frame's plan evaluated: at release
+    // time the collect must already have run
+    val evaluated = sc.longAccumulator("localize-rows")
+    val times3 = udf { (x: Long) => evaluated.add(1); x * 3 }
+    val frame = spark.range(10).toDF("id").select(times3(col("id")).as("v"))
+    var seenAtRelease = -1L
+    val local = Scoped(frame) { seenAtRelease = evaluated.value }.localize
+    assert(seenAtRelease == 10L, "released before the collect")
+    assert(local.rdd.getNumPartitions == 1)
+    assert(local.schema == frame.schema)
+    assert(local.collect().map(_.getLong(0)).toSeq == (0L until 10L).map(_ * 3))
+
+    var released = false
+    val boom = udf { (x: Long) => if (x == 2L) throw new IllegalStateException("boom"); x }
+    intercept[Exception] {
+      Scoped(spark.range(3).toDF("id").select(boom(col("id")))) { released = true }.localize
+    }
+    assert(released, "a failed collect must still release")
+  }
 }

@@ -4,7 +4,13 @@ engine itself is pure Scala/Spark). Runs DuckDB over the same parquet
 tables for every oracleSql entry and compares against the parquet the
 Verify main dumped: column names, dtypes-agnostic values, row content.
 
+With --against, compares instead every query output of <outdir> with the
+same query's output in another Verify dump (rows-only queries included),
+under the same canonical order and exact cell compare, and prints
+"same"/"differs" per query and a total.
+
 Usage: python3 tools/check.py <sfdir> <outdir> [query ...]
+       python3 tools/check.py <sfdir> <outdir> --against <other_outdir> [query ...]
 """
 import json
 import sys
@@ -31,9 +37,60 @@ def norm_cell(v):
     return v
 
 
+def mismatch(got: pd.DataFrame, want: pd.DataFrame, other: str):
+    """None when the canonical frames are equal cell for cell, else the
+    first difference."""
+    if list(got.columns) != list(want.columns):
+        return f"columns {list(got.columns)} vs {list(want.columns)}"
+    if len(got) != len(want):
+        return f"rows {len(got)} vs {len(want)}"
+    for c in got.columns:
+        a, b = got[c].tolist(), want[c].tolist()
+        for i, (x, y) in enumerate(zip(a, b)):
+            xn, yn = pd.isna(x), pd.isna(y)
+            if xn and yn:
+                continue
+            if xn != yn or norm_cell(x) != norm_cell(y):
+                return f"col {c} row {i}: spark={x!r} {other}={y!r}"
+    return None
+
+
+def against(outdir: str, other: str, only: set) -> int:
+    """Compare every query output of two Verify dumps; exit status 1 when
+    any query differs or exists on one side only."""
+    con = duckdb.connect()
+
+    def read(d: Path):
+        return canon(con.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf())
+
+    names = sorted({p.name for d in (outdir, other) for p in Path(d).iterdir()
+                    if p.is_dir() and (not only or p.name in only)})
+    n_same = n_diff = 0
+    for name in names:
+        a, b = Path(outdir) / name, Path(other) / name
+        try:
+            bad = mismatch(read(a), read(b), "other")
+        except Exception as e:
+            bad = str(e).splitlines()[0]
+        if bad:
+            print(f"differs {name}: {bad}")
+            n_diff += 1
+        else:
+            print(f"same    {name}")
+            n_same += 1
+    print(f"== {n_same} same, {n_diff} differ")
+    return 1 if n_diff else 0
+
+
 def main():
-    sfdir, outdir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    args = sys.argv[1:]
+    if "--against" in args:
+        i = args.index("--against")
+        other = args[i + 1]
+        del args[i:i + 2]
+        sys.exit(against(args[1], other, set(args[2:])))
+    sfdir, outdir = args[0], args[1]
+    only = set(args[2:])
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
@@ -55,27 +112,9 @@ def main():
             print(f"FAIL {name}: {e}")
             n_bad += 1
             continue
-        if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} vs {list(want.columns)}")
-            n_bad += 1
-            continue
-        if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} vs {len(want)}")
-            n_bad += 1
-            continue
-        mism = []
-        for c in got.columns:
-            a, b = got[c].tolist(), want[c].tolist()
-            for i, (x, y) in enumerate(zip(a, b)):
-                xn, yn = pd.isna(x), pd.isna(y)
-                if xn and yn:
-                    continue
-                if xn != yn or norm_cell(x) != norm_cell(y):
-                    mism.append((c, i, x, y))
-                    break
-        if mism:
-            c, i, x, y = mism[0]
-            print(f"FAIL {name}: col {c} row {i}: spark={x!r} oracle={y!r}")
+        bad = mismatch(got, want, "oracle")
+        if bad:
+            print(f"FAIL {name}: {bad}")
             n_bad += 1
         else:
             print(f"ok   {name} ({len(got)} rows)")
