@@ -55,22 +55,32 @@ object Bench {
     val selected =
       if (only.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.filter { case (k, _) => only(k) }.toSeq
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A query that throws in any pass would time only its way to the
+    // throw (~0.01 s, or instantly on a SparkContext an earlier OOM
+    // killed): it is left out of every timing and listed under "failed",
+    // its first exception class on stderr.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          if (failed.add(name))
+            System.err.println(s"[bench] $name failed: ${e.getClass.getName}")
+      }
       val sec = (System.nanoTime() - t0) / 1e9
       releasePersisted()
       sec
     }
     // pass 0 = untimed warmup of every query, then `reps` full timed
     // passes; report each query's min across passes
-    selected.foreach { case (_, fn) => once(fn) }
+    selected.foreach { case (name, fn) => once(name, fn) }
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
     for (_ <- 1 to reps; (name, fn) <- selected) {
-      val t = once(fn)
+      val t = once(name, fn)
       if (!best.contains(name) || t < best(name)) best(name) = t
     }
-    val results = best
+    val results = best.filter { case (k, _) => !failed(k) }
+    val failedJson = failed.map(k => "\"" + k + "\"").mkString("[", ",", "]")
     if (spark.sparkContext.getPersistentRDDs.nonEmpty)
       System.err.println(s"[bench] WARNING: ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs leaked past cleanup")
     // Millisecond precision keeps the one-line JSON compact: the driver
@@ -89,7 +99,7 @@ object Bench {
     // ran with — emit it so "honored but overhead-bound at sf0.1" is
     // distinguishable from "ignored".
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"reps":$reps,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"reps":$reps,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     println(fullLine)
     // The driver tail-captures ~2 KB of stdout; the full 115-query map
     // overflows it and truncates the line head, so the parse fails
@@ -103,7 +113,7 @@ object Bench {
     val worst = results.toSeq.sortBy { case (k, v) => (-v, k) }.take(10)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"cpus":$cpus,"reps":$reps,"worst":$worst,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"cpus":$cpus,"reps":$reps,"worst":$worst,"failed":$failedJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1589,10 +1589,8 @@ object SparkEntry {
     * record has exactly one planted cross-feed match. */
   // store geometry for the q185/q186 toy stores (2 k members): results
   // are geometry-independent by construction, so this only sets the
-  // per-append file count. Overridable for TimeQ attribution runs
-  // (SCALE.md round-13 linkgeo note); the driver never sets the env.
-  private def linkNB: Int =
-    sys.env.get("SPARK_GRAFT_LINK_NB").map(_.toInt).getOrElse(4)
+  // per-append file count
+  private val linkNB = 4
 
   private def linkageFeeds(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = documents(s, d).where("doc_id < 1000")

@@ -202,7 +202,8 @@ object Dedup {
 
   /** LSH candidate pairs — the band-key self-join ONLY, before Jaccard
     * verification. Exposed separately so scale runs can measure the LSH
-    * efficiency ratio (candidates vs verified pairs; graft.ScaleReport).
+    * efficiency ratio (candidates vs verified pairs; SCALE.md "Corpus
+    * dedup family").
     *
     * Persist discipline: the signature table (docs × 66 longs — the one
     * corpus-sized intermediate) is persisted only long enough to
@@ -350,7 +351,8 @@ object Dedup {
     * expansion, the classic simhash-dedup trade. */
   /** Banded simhash candidate pairs with their hamming distance, BEFORE
     * the `hamming ≤ maxHamming` verification filter — exposed so scale
-    * runs can measure the banding's candidate volume (graft.ScaleReport).
+    * runs can measure the banding's candidate volume (SCALE.md "Corpus
+    * dedup family").
     * Same persist discipline as minhashCandidatePairs: the fingerprint
     * table persists only until candidates materialize.
     *
@@ -363,7 +365,8 @@ object Dedup {
     * tables of ~24-bit keys. Wider keys matter when fingerprints
     * CLUSTER (same-domain corpora share vocabulary, so bit votes
     * correlate and 20-bit buckets over-fill — measured 31× candidate:
-    * verified overhead at 5 k docs; see ScaleReport). */
+    * verified overhead at 5 k docs; see SCALE.md "Corpus dedup
+    * family"). */
   def simhashCandidatePairs(docs: DataFrame, maxId: Long, maxHamming: Int,
                             blockChoose: Int = 3): Scoped[DataFrame] = {
     val (plan, sims) = simhashCandidatePlan(docs, maxId, maxHamming, blockChoose)
@@ -706,8 +709,9 @@ object Dedup {
     * UNRELATED docs land within small hamming distance of each other —
     * at 50 k synthetic docs the hamming ≤ 6 pair set (and with it the
     * banded candidate volume) grew quadratically, 99 M candidates for
-    * one 50 k corpus (ScaleReport, round 3). Distinct 3-gram shingles
-    * decorrelate the features (the shingle space is |vocab|³), which
+    * one 50 k corpus (SCALE.md "Corpus dedup family", round 3).
+    * Distinct 3-gram shingles decorrelate the features (the shingle
+    * space is |vocab|³), which
     * collapses both the noise-pair set and the candidate volume while
     * keeping genuinely overlapping docs (who share most shingles) at
     * tiny hamming distance. */
@@ -1219,8 +1223,9 @@ object Dedup {
   }
 
   /** Long-involved candidate pairs of the prefix-filter family —
-    * exposed within the package so ScaleReport can measure blocking
-    * selectivity (candidates vs verified) directly. */
+    * exposed within the package so blocking selectivity (candidates
+    * vs verified) can be measured directly (SCALE.md "Round 9: the
+    * edit-distance join's entropy law"). */
   private[graft] def edPrefixCandidates(base: DataFrame, maxDist: Int,
                                         q: Int): DataFrame = {
     val shortCut = q * (maxDist + 1)

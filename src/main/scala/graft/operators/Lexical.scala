@@ -162,8 +162,8 @@ object Lexical {
 
   /** Rows living in the bucket partitions a probe for `terms` must
     * read (BEFORE the term filter) — the per-probe IO volume the
-    * geometry dial controls; ScaleReport's lex campaign reports it
-    * around a rebalance. */
+    * geometry dial controls; SCALE.md "Round 10: postings geometry
+    * follows the corpus" records it around a rebalance. */
   private[graft] def lexProbeRows(spark: SparkSession, path: String,
                                   terms: Seq[String]): Long = {
     val buckets = lexBuckets(spark, path, terms)

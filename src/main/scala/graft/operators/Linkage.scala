@@ -39,7 +39,8 @@ import graft.core.Scoped
   * the N² wall; a skewed block needs `fieldAgreements(salt = n)`:
   * AQE's skew split keys on input-partition BYTES and cannot see a
   * hot block's pair-EXPLOSION — its input is kilobytes, its join
-  * output quadratic — measured in ScaleReport's linkskew campaign,
+  * output quadratic — measured in SCALE.md "Round 10: AQE cannot see
+  * pair-explosion skew",
   * where the planted 10 % block never triggered a split), and every
   * agreement/score is a per-pair projection that rides the join's
   * whole-stage codegen. Output volume is the blocked-pair count, so
@@ -82,7 +83,8 @@ object Linkage {
     * fraction of records. AQE is NOT a substitute here: its skew
     * split fires on input-partition bytes, and a hot block's input is
     * tiny while its pair output is quadratic, so no split ever comes
-    * (measured — ScaleReport linkskew, planted 10 % block).
+    * (measured — SCALE.md "Round 10: AQE cannot see pair-explosion
+    * skew", planted 10 % block).
     *
     * `salt = 0` is AUTO: per-block pair counts pick which blocks get
     * salted and by how much (`fieldAgreementsAuto`) — cold blocks stay

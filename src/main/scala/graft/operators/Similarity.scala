@@ -2318,7 +2318,8 @@ object Similarity {
     * scan. Finer clustering loses boundary PAIRS (0.60 pair-level vs
     * the coarse run) but barely any DROPPED DOCS — drop-set agreement
     * measured 0.980, because a duplicate doc is caught via any
-    * surviving pair (ScaleReport logs both). Target a few hundred
+    * surviving pair (SCALE.md "Round 4: curation family + SemDeDup
+    * cluster sizing" records both). Target a few hundred
     * rows/cluster at corpus scale, never thousands.
     *
     * The per-call index is released in `finally`: the returned frame
@@ -2356,8 +2357,9 @@ object Similarity {
   }
 
   /** Corpus-adaptive cluster count; `knownCount` lets callers that
-    * already hold the corpus size (ScaleReport, repeated-call drivers)
-    * skip the sizing `count()` scan. */
+    * already hold the corpus size (repeated-call drivers; the sizing
+    * campaign in SCALE.md "Round 4: curation family + SemDeDup cluster
+    * sizing") skip the sizing `count()` scan. */
   private def autoK(emb: DataFrame, targetClusterRows: Long,
                     knownCount: Option[Long]): Int =
     math.max(8L, knownCount.getOrElse(emb.count()) / targetClusterRows).toInt

@@ -222,7 +222,8 @@ object IngestFuzzy {
     gateBatchStats(batch, storePath, keyCol, maxKeys, scratch).map(_._1)
 
   /** `gateBatch` plus per-slice (keys, seconds) timings — the
-    * instrumented form ScaleReport's fuzzygate campaign drives. */
+    * instrumented form behind the per-slice rows of SCALE.md "Round 10:
+    * the auto-split fuzzy gate". */
   private[graft] def gateBatchStats(batch: DataFrame, storePath: String,
                                     keyCol: String, maxKeys: Int,
                                     scratch: Option[String] = None)

@@ -1,12 +1,15 @@
 #!/bin/bash
 # Run a ScaleReport campaign on the compiled classes directly (bypasses
 # sbt's forked-JVM overhead; same flags Spark's launcher sets on JDK 17).
-# Usage: SCALE_SECTIONS=<sections> tools/campaign.sh <sfDir> [outFile]
-# Extra env dials (SPARK_GRAFT_*) pass straight through.
+# Build first with `sbt compile`. JSON rows go to stdout, Spark's log to
+# stderr.
+# Usage: tools/campaign.sh <sfDir> [section ...]   (pipeline fuzzyseed fpseed)
+# SPARK_GRAFT_CPUS and SPARK_GRAFT_PIPE_SPAN pass straight through.
 set -euo pipefail
 SFDIR="$1"
-OUT="${2:-/dev/stdout}"
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+shift
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:${SPARK_HOME:?SPARK_HOME must point at a Spark 4 install}/jars/*"
 OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
@@ -22,5 +25,5 @@ OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  java -Xmx48g -cp "$CP" $OPENS graft.ScaleReport "$SFDIR" \
-  2>/tmp/campaign_$$.err | grep '"op"' > "$OUT"
+  java -Xmx48g -cp "$CP" $OPENS graft.ScaleReport "$SFDIR" "$@" \
+  | grep '"op"'
