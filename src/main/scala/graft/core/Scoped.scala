@@ -17,6 +17,8 @@ import org.apache.spark.storage.StorageLevel
   *   - `materialize` (on a `Scoped[DataFrame]`) persists the value,
   *     counts it and releases the inner scope; the returned scope owns
   *     only the materialized result.
+  *   - `Scoped.cached` persists a frame without running an action: the
+  *     first job that reads it fills the cache.
   *   - `localize` (on a `Scoped[DataFrame]` whose value is bounded)
   *     collects the value, releases the scope and returns the rows as
   *     a one-partition local frame.
@@ -59,6 +61,16 @@ object Scoped {
 
   /** `value` with nothing to release. */
   def pure[A](value: A): Scoped[A] = new Scoped(value, () => ())
+
+  /** `df` persisted at MEMORY_AND_DISK, released by unpersisting it. No
+    * action runs here. A frame that is already cached comes back as is:
+    * its owner releases it. */
+  def cached(df: DataFrame): Scoped[DataFrame] =
+    if (df.storageLevel != StorageLevel.NONE) pure(df)
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      Scoped(p)(p.unpersist(blocking = false))
+    }
 
   implicit final class FrameOps(private val s: Scoped[DataFrame]) extends AnyVal {
     /** Persist the frame at MEMORY_AND_DISK, count it, then release the

@@ -602,7 +602,14 @@ object Dedup {
     * here) and materializes the result before releasing it; the frame
     * returned is persisted and owned by the caller. */
   def sketchDrops(newSigs: DataFrame, storeSigs: DataFrame,
-                  threshold: Double): DataFrame = {
+                  threshold: Double): DataFrame =
+    sketchDropIds(newSigs, storeSigs, threshold)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** `sketchDrops` unpersisted, for a caller that collects the ids
+    * (the streaming gate). */
+  private[graft] def sketchDropIds(newSigs: DataFrame, storeSigs: DataFrame,
+                                   threshold: Double): DataFrame = {
     val store = storeSigs.select(newSigs.columns.map(col).toIndexedSeq: _*)
     val nb = bandRows(newSigs)
     val candVsStore = nb.as("x").join(bandRows(store).as("y"),
@@ -624,7 +631,6 @@ object Dedup {
       .join(side("a"), Seq("a")).join(side("b"), Seq("b"))
       .where(agree.cast("double") / lit(NumPerms.toDouble) >= threshold)
       .select(col("b").as("doc_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Doc-level CROSS-corpus near-duplicate pairs: which documents of
@@ -1219,6 +1225,7 @@ object Dedup {
     val res = edVerify(base,
       edPrefixCandidates(base, maxDist, q)
         .unionByName(edShortBandPairs(base, shortCut, maxDist)), maxDist)
+      .orderBy("id_a", "id_b")
     Scoped(res)(base.unpersist(blocking = false))
   }
 
@@ -1288,7 +1295,7 @@ object Dedup {
     val res = edVerify(base,
       edSegCandidates(base, maxDist, minSeg)
         .unionByName(edShortBandPairs(base, minSeg * (maxDist + 1), maxDist)),
-      maxDist)
+      maxDist).orderBy("id_a", "id_b")
     Scoped(res)(base.unpersist(blocking = false))
   }
 
@@ -1393,7 +1400,8 @@ object Dedup {
   /** Dedupe candidates and verify with the THRESHOLDED levenshtein
     * (banded O(d·len) DP with early exit — the verify cost per
     * candidate is ~(2d+1)·len char ops, not len²). Returns -1 above
-    * the threshold, so the kept distances are exact. */
+    * the threshold, so the kept distances are exact. Unordered: the
+    * public pair functions sort their own output. */
   private def edVerify(base: DataFrame, cand: DataFrame,
                        maxDist: Int): DataFrame =
     // width-pinned distinct: the dedup agg and the fused base-join +
@@ -1405,7 +1413,6 @@ object Dedup {
       .withColumn("dist", levenshtein(col("s_a"), col("s_b"), maxDist))
       .where(col("dist") >= 0)
       .select(col("id_a"), col("id_b"), col("dist"))
-      .orderBy("id_a", "id_b")
 
   /** Asymmetric (batch × store) edit-distance join: every pair of a
     * `batch` key and a `store` key within Levenshtein distance
@@ -1529,13 +1536,13 @@ object Dedup {
       .select(col("tid").as("store_id"), col("pid").as("batch_id"), col("dist"))
   }
 
-  /** `fuzzyKeyKept` over the pruned, string-carrying store probe —
-    * same two drop rules, with the store side supplied as
-    * `edStorePairsPruned` frames. Package-visible for the streaming
-    * gate. */
-  private[graft] def fuzzyKeyKeptPruned(batchBase: DataFrame,
-                                        segs: DataFrame, shorts: DataFrame,
-                                        maxDist: Int, minSeg: Int)
+  /** The ids `fuzzyKeyKept` drops, over the pruned, string-carrying
+    * store probe — same two drop rules, with the store side supplied as
+    * `edStorePairsPruned` frames. One `id` column, distinct.
+    * Package-visible for the streaming gate. */
+  private[graft] def fuzzyKeyDropsPruned(batchBase: DataFrame,
+                                         segs: DataFrame, shorts: DataFrame,
+                                         maxDist: Int, minSeg: Int)
       : DataFrame = {
     val storeDrops =
       edStorePairsPruned(batchBase, segs, shorts, maxDist, minSeg)
@@ -1546,9 +1553,7 @@ object Dedup {
           .unionByName(edShortBandPairs(batchBase, minSeg * (maxDist + 1), maxDist)),
         maxDist)
         .select(col("id_b").as("id"))
-    batchBase
-      .join(storeDrops.unionByName(inBatchDrops).distinct(), Seq("id"), "left_anti")
-      .select(col("id"), col("s"))
+    storeDrops.unionByName(inBatchDrops).distinct()
   }
 
   /** The fuzzy-key ingest GATE, batch form: which batch keys survive

@@ -496,31 +496,73 @@ object TrainingData {
                     minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                     maxSymbolRatio: Double = 0.1, minAlphaFrac: Double = 0.8,
                     minStopWords: Long = 2): DataFrame = {
-    val stop = Seq("the", "a", "and", "of", "to", "in", "is", "that", "with", "for")
-    docs.select(col("doc_id"), explode(toks(col("text"))).as("w"))
+    val stats = docs.select(col("doc_id"), explode(toks(col("text"))).as("w"))
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_words"),
         sum(length(col("w"))).as("sum_len"),
         count(when(col("w").rlike("[a-z]"), true)).as("n_alpha"),
-        count(when(col("w").isInCollection(stop), true)).as("n_stop"),
+        count(when(col("w").isInCollection(GopherStop), true)).as("n_stop"),
         // '#' chars and non-overlapping '...' runs, counted by length
         // delta under replace — both engines share these semantics
-        sum(length(col("w")) - length(translate(col("w"), "#", ""))).as("hash_chars"),
-        sum(length(col("w")) - length(regexp_replace(col("w"), "\\.\\.\\.", ""))).as("ell_chars"))
-      .select(col("doc_id"), col("n_words"),
+        sum(hashChars(col("w"))).as("hash_chars"),
+        sum(ellChars(col("w"))).as("ell_chars"))
+    gopherVerdict(stats, 1, minWords, maxWords, minMeanLen,
+      maxMeanLen, maxSymbolRatio, minAlphaFrac, minStopWords)
+      .orderBy("doc_id")
+  }
+
+  /** `gopherQuality`'s columns for each ROW of `docs`, from the row's
+    * own token array with higher-order functions: no explode, no
+    * shuffle. `carry` columns lead the output. Equal to the grouped
+    * form for a frame whose doc_ids are unique; a null-text row gets
+    * null metrics and a null verdict (the grouped form has no row for
+    * it). */
+  private[graft] def gopherRows(docs: DataFrame, carry: Seq[Column],
+                                minWords: Long = 50, maxWords: Long = 100000,
+                                minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
+                                maxSymbolRatio: Double = 0.1,
+                                minAlphaFrac: Double = 0.8,
+                                minStopWords: Long = 2): DataFrame = {
+    val w = toks(col("text"))
+    def n(a: Column) = when(a.isNotNull, size(a).cast("long"))
+    def total(f: Column => Column) = aggregate(w, lit(0L), (acc, x) => acc + f(x))
+    val stats = docs.select(carry ++ Seq(
+      n(w).as("n_words"),
+      total(length).as("sum_len"),
+      n(filter(w, _.rlike("[a-z]"))).as("n_alpha"),
+      n(filter(w, _.isInCollection(GopherStop))).as("n_stop"),
+      total(hashChars).as("hash_chars"),
+      total(ellChars).as("ell_chars")): _*)
+    gopherVerdict(stats, carry.length, minWords,
+      maxWords, minMeanLen, maxMeanLen, maxSymbolRatio, minAlphaFrac, minStopWords)
+  }
+
+  private val GopherStop =
+    Seq("the", "a", "and", "of", "to", "in", "is", "that", "with", "for")
+  private def hashChars(w: Column): Column = length(w) - length(translate(w, "#", ""))
+  private def ellChars(w: Column): Column =
+    length(w) - length(regexp_replace(w, "\\.\\.\\.", ""))
+
+  // per-doc word counts (n_words, sum_len, n_alpha, n_stop, hash_chars,
+  // ell_chars; exact longs) after `nCarry` leading columns → those
+  // columns, the ratio columns and the keep verdict
+  private def gopherVerdict(stats: DataFrame, nCarry: Int,
+                            minWords: Long, maxWords: Long,
+                            minMeanLen: Double, maxMeanLen: Double,
+                            maxSymbolRatio: Double, minAlphaFrac: Double,
+                            minStopWords: Long): DataFrame =
+    stats.select(stats.columns.take(nCarry).map(col).toIndexedSeq ++ Seq(col("n_words"),
         (col("sum_len") / col("n_words")).as("mean_word_len"),
         ((col("hash_chars") + expr("ell_chars div 3")) / col("n_words")).as("symbol_ratio"),
         (col("n_alpha") / col("n_words")).as("alpha_frac"),
-        col("n_stop"))
+        col("n_stop")): _*)
       .withColumn("keep",
         col("n_words").between(minWords, maxWords) &&
           col("mean_word_len").between(minMeanLen, maxMeanLen) &&
           col("symbol_ratio") <= maxSymbolRatio &&
           col("alpha_frac") >= minAlphaFrac &&
           col("n_stop") >= minStopWords)
-      .orderBy("doc_id")
-  }
 
   /** Context-window chunking: split each document into `maxLen`-token
     * windows every `stride` tokens — the step between token-budget

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.Scoped
 import graft.operators.Dedup
@@ -47,42 +46,45 @@ object IngestDedup {
     * closure so batch specs can drive it without a streaming query. */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
                    threshold: Double): Long =
-    gateBatch(batch, storePath, threshold).use { case (kept, keptSigs) =>
-      val nKept = kept.count()
-      kept.write.mode("append").parquet(outPath)
-      keptSigs.write.mode("append").parquet(storePath)
-      nKept
+    Scoped.cached(batch).use { b =>
+      gateBatch(b, storePath, threshold).use { case (kept, keptSigs) =>
+        val nKept = kept.count()
+        kept.write.mode("append").parquet(outPath)
+        keptSigs.write.mode("append").parquet(storePath)
+        nKept
+      }
     }
 
   /** The gate half of `processBatch`: compute the batch's survivors
-    * against the store WITHOUT writing anything — returns the
-    * persisted kept rows (ALL input columns ride along, so a composite
-    * pipeline can carry embeddings through the gate), the survivors'
-    * signature rows, scoped to the batch's persists. Factored out so
-    * `IngestPipeline` can fan the same kept frame out to several sinks
-    * inside one micro-batch closure — the only way the sinks stay
-    * mutually consistent batch-over-batch. */
+    * against the store WITHOUT writing anything — returns the kept rows
+    * (ALL input columns ride along, so a composite pipeline can carry
+    * embeddings through the gate) and the survivors' signature rows,
+    * scoped to the persisted batch sketch. Both are filtered by the
+    * gate's driver-side drop-id set, so neither reads the store: a
+    * store append cannot change them. `batch` is read again by every
+    * consumer of the kept frame; pass a persisted one. */
   def gateBatch(batch: DataFrame, storePath: String,
-                threshold: Double): Scoped[(DataFrame, DataFrame)] = {
-    val spark = batch.sparkSession
-    val sigs = Dedup.minhashSignatures(
-      batch.select(col("doc_id"), col("text")), pinned = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    val store =
-      if (storeExists(spark, storePath)) Dedup.signatureLoad(spark, storePath)
-      else sigs.limit(0)
-    val drops = Dedup.sketchDrops(sigs, store, threshold)
-    drops.count()
-    val kept = batch.join(drops, Seq("doc_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    kept.count()
-    val keptSigs = sigs.join(drops, Seq("doc_id"), "left_anti")
-    Scoped((kept, keptSigs)) {
-      sigs.unpersist(blocking = false)
-      drops.unpersist(blocking = false)
-      kept.unpersist(blocking = false)
+                threshold: Double): Scoped[(DataFrame, DataFrame)] =
+    decide(batch, storePath, threshold).map { case (drops, sigs) =>
+      (without(batch, drops), without(sigs, drops))
     }
+
+  /** The gate's decision: the batch doc_ids to drop, collected in one
+    * action, and the persisted batch sketch (doc_id + 66 MinHash
+    * slots) the scope releases. */
+  private[streaming] def decide(batch: DataFrame, storePath: String,
+                                threshold: Double): Scoped[(Set[Long], DataFrame)] = {
+    val spark = batch.sparkSession
+    Scoped.cached(Dedup.minhashSignatures(
+        batch.select(col("doc_id"), col("text")), pinned = true))
+      .map { sigs =>
+        val store =
+          if (storeExists(spark, storePath)) Dedup.signatureLoad(spark, storePath)
+          else sigs.limit(0)
+        val drops = Dedup.sketchDropIds(sigs, store, threshold)
+          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).toSet
+        (drops, sigs)
+      }
   }
 
   /** Start the streaming ingest gate: `docs` is an unbounded stream of

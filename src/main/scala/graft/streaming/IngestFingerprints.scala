@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_count, broadcast, col, count, countDistinct, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.Scoped
 import graft.operators.{Dedup, Multimodal}
@@ -128,27 +127,27 @@ object IngestFingerprints {
     * their fingerprints to the store. Returns kept rows. */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
                    fps: DataFrame, maxBandRows: Long = 1L << 21): Long =
-    gateBatch(batch, storePath, fps, maxBandRows).use { case (kept, keptFps) =>
-      val nKept = kept.count()
-      // refreshByPath order: the out write consumes the store-reading
-      // frame first, the store grows last
-      kept.write.mode("append").parquet(outPath)
-      appendFps(batch.sparkSession, storePath, keptFps)
-      nKept
+    Scoped.cached(batch).use { b =>
+      gateBatch(b, storePath, fps, maxBandRows).use { case (kept, keptFps) =>
+        val nKept = kept.count()
+        // out first, the store last: a crash between them duplicates
+        // the batch on replay, never loses it
+        kept.write.mode("append").parquet(outPath)
+        appendFps(batch.sparkSession, storePath, keptFps)
+        nKept
+      }
     }
 
   /** Append already-gated fingerprints (id, p, h) to the store — each
     * id's parts complete in the frame. Public so a composed pipeline
-    * can gate, fan out its sinks, and grow this store in the
-    * refreshByPath-safe slot. If the optional bands/ serving index
+    * can gate, fan out its sinks, and grow this store after them. If the optional bands/ serving index
     * exists (`bandsSave`), the batch's band rows append there too —
     * O(batch × C(d+bc, bc)) rows — so point probes never serve stale
     * results; replay duplicates collapse in `fpProbe`'s distinct. */
   def appendFps(spark: SparkSession, storePath: String,
                 fps: DataFrame): Unit = {
     val (d, bc) = meta(spark, storePath)
-    val np = withNp(fps).persist(StorageLevel.MEMORY_AND_DISK)
-    np.count()
+    val np = withNp(fps)
     np.write.mode("append").parquet(s"$storePath/hashes")
     if (exists(spark, s"$storePath/bands")) {
       val nB = graft.core.Stores.readGeometry(spark, s"$storePath/bands")
@@ -161,7 +160,6 @@ object IngestFingerprints {
         .transform(graft.core.Stores.writeLayout(_, nB, col("bb")))
         .write.mode("append").partitionBy("bb").parquet(s"$storePath/bands")
     }
-    np.unpersist(blocking = false)
   }
 
   // bands/ partition column: the band-key bucket a point probe prunes
@@ -263,8 +261,11 @@ object IngestFingerprints {
       .select("id", "oid").distinct()
 
   /** The gate half: kept rows with ALL input columns and survivors'
-    * fingerprint rows (id, p, h), scoped to the gate's persists.
-    * Nothing is written.
+    * fingerprint rows (id, p, h), scoped to the persisted fingerprint
+    * frame. Nothing is written. Both are filtered by the gate's
+    * driver-side drop-id set, so neither reads the store; `batch` is
+    * read again by every consumer of the kept frame, so pass a
+    * persisted one.
     * `fps` is the caller-computed fingerprint frame for THIS batch
     * ((id, p, h), ids = doc_id values, parts complete per id).
     *
@@ -282,71 +283,70 @@ object IngestFingerprints {
     * bit-identical at any `maxBandRows` (IngestFingerprintsSpec
     * parity pin) and every broadcast stays bounded. */
   def gateBatch(batch: DataFrame, storePath: String, fps: DataFrame,
-                maxBandRows: Long = 1L << 21): Scoped[(DataFrame, DataFrame)] = {
+                maxBandRows: Long = 1L << 21): Scoped[(DataFrame, DataFrame)] =
+    decide(storePath, fps, maxBandRows).map { case (drops, bh) =>
+      (without(batch, drops), without(bh, drops, "id").select("id", "p", "h"))
+    }
+
+  /** The gate's decision: the ids to drop, collected in one action over
+    * every slice, and the persisted (id, p, h, np) fingerprint frame the
+    * scope releases. */
+  private[streaming] def decide(storePath: String, fps: DataFrame,
+                                maxBandRows: Long = 1L << 21)
+      : Scoped[(Set[Long], DataFrame)] = {
     require(maxBandRows >= 1, "maxBandRows must be >= 1")
-    val spark = batch.sparkSession
+    val spark = fps.sparkSession
     val (d, bc) = meta(spark, storePath)
     // C(d+bc, bc): band rows per fingerprint row
     val bandFactor = (0 until (d + bc)).combinations(bc).size.toLong
-    val bh = withNp(fps).persist(StorageLevel.MEMORY_AND_DISK)
-    val nParts = bh.count()
-    val store =
-      if (exists(spark, s"$storePath/hashes"))
-        spark.read.parquet(s"$storePath/hashes")
-      else bh.limit(0)
-    // id-ordered part-bounded slices (one slice in the common case)
-    val sliceFrames: Seq[DataFrame] =
-      if (nParts * bandFactor <= maxBandRows) Seq(bh)
-      else {
-        val maxParts = (maxBandRows / bandFactor) max 1L
-        // per-id part counts are batch-bounded — greedy driver-side
-        // packing into contiguous id ranges
-        val idParts = bh.select("id", "np").distinct()
-          .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1)))
-        val startIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var acc = 0L
-        for ((id, np) <- idParts) {
-          if (startIds.isEmpty || acc + np > maxParts) {
-            startIds += id; acc = 0L
+    Scoped.cached(withNp(fps)).map { bh =>
+      val store =
+        if (exists(spark, s"$storePath/hashes"))
+          spark.read.parquet(s"$storePath/hashes")
+        else bh.limit(0)
+      // per-id part counts, batch-bounded: their total sizes the probe,
+      // and an oversized batch packs them greedily into contiguous id
+      // ranges (one slice in the common case)
+      val idParts = bh.select("id", "np").distinct().collect()
+        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
+      val sliceFrames: Seq[DataFrame] =
+        if (idParts.map(_._2.toLong).sum * bandFactor <= maxBandRows) Seq(bh)
+        else {
+          val maxParts = (maxBandRows / bandFactor) max 1L
+          val startIds = scala.collection.mutable.ArrayBuffer.empty[Long]
+          var acc = 0L
+          for ((id, np) <- idParts) {
+            if (startIds.isEmpty || acc + np > maxParts) {
+              startIds += id; acc = 0L
+            }
+            acc += np
           }
-          acc += np
+          val bounds = startIds.toSeq :+ Long.MaxValue
+          bounds.sliding(2).map { case Seq(lo, hi) =>
+            bh.where(col("id") >= lit(lo) &&
+              (if (hi == Long.MaxValue) lit(true) else col("id") < lit(hi)))
+          }.toSeq
         }
-        val bounds = startIds.toSeq :+ Long.MaxValue
-        bounds.sliding(2).map { case Seq(lo, hi) =>
-          bh.where(col("id") >= lit(lo) &&
-            (if (hi == Long.MaxValue) lit(true) else col("id") < lit(hi)))
-        }.toSeq
+      // fold: slice i probes store + all earlier slices' rows (smaller
+      // ids by construction), then its own smaller-id rows in-slice —
+      // the union of the two is the unsplit gate's predicate exactly
+      var prior: DataFrame = null
+      val dropFrames = sliceFrames.map { bhI =>
+        val storeSide = if (prior == null) store else store.unionByName(prior)
+        val dropsStore = storeProbe(bhI, storeSide, d, bc)
+        // vs smaller-id batch rows: the conservative first-wins cascade
+        // (a dropped smaller-id record still drops its neighbors — the
+        // IngestFuzzy batch rule, which is what makes slice folds exact)
+        val bandB = Dedup.hammingBandRows(bhI, 64, d, bc,
+          carry = Seq("p", "np"), hint = false)
+        val dropsBatch = dropIds(bandB.as("x")
+          .join(bandB.as("y"), alignOn && col("y.id") < col("x.id"), "inner"), d)
+        prior = if (prior == null) bhI else prior.unionByName(bhI)
+        dropsStore.unionByName(dropsBatch)
       }
-    // fold: slice i probes store + all earlier slices' rows (smaller
-    // ids by construction), then its own smaller-id rows in-slice —
-    // the union of the two is the unsplit gate's predicate exactly
-    var prior: DataFrame = null
-    val dropFrames = sliceFrames.map { bhI =>
-      val storeSide = if (prior == null) store else store.unionByName(prior)
-      val dropsStore = storeProbe(bhI, storeSide, d, bc)
-      // vs smaller-id batch rows: the conservative first-wins cascade
-      // (a dropped smaller-id record still drops its neighbors — the
-      // IngestFuzzy batch rule, which is what makes slice folds exact)
-      val bandB = Dedup.hammingBandRows(bhI, 64, d, bc,
-        carry = Seq("p", "np"), hint = false)
-      val dropsBatch = dropIds(bandB.as("x")
-        .join(bandB.as("y"), alignOn && col("y.id") < col("x.id"), "inner"), d)
-      prior = if (prior == null) bhI else prior.unionByName(bhI)
-      dropsStore.unionByName(dropsBatch)
-    }
-    val drops = dropFrames.reduce(_.unionByName(_)).distinct()
-      .withColumnRenamed("id", "doc_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    drops.count()
-    val kept = batch.join(drops, Seq("doc_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    kept.count()
-    val keptFps = bh.join(drops.select(col("doc_id").as("id")),
-      Seq("id"), "left_anti").select("id", "p", "h")
-    Scoped((kept, keptFps)) {
-      bh.unpersist(blocking = false)
-      drops.unpersist(blocking = false)
-      kept.unpersist(blocking = false)
+      val drops = dropFrames.reduce(_.unionByName(_)).distinct()
+        .collect().map(_.getLong(0)).toSet
+      (drops, bh)
     }
   }
 

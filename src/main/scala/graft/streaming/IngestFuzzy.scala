@@ -149,11 +149,11 @@ object IngestFuzzy {
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
                    keyCol: String = "key", maxKeys: Int = 10000,
                    scratch: Option[String] = None): Long =
-    gateBatch(batch, storePath, keyCol, maxKeys, scratch).use { kept =>
+    Scoped.cached(batch).use { b =>
+      val kept = without(b, drops(b, storePath, keyCol, maxKeys, scratch))
       val nKept = kept.count()
-      // round-7 refreshByPath rule: every consumer of a frame that READS
-      // the store runs before anything appends to the store — out first,
-      // then keys/ + segs/
+      // out first, the store last: a crash between them duplicates
+      // the batch on replay, never loses it
       kept.write.mode("append").parquet(outPath)
       appendKeys(batch.sparkSession, storePath,
         kept.where(col(keyCol).isNotNull)
@@ -165,208 +165,133 @@ object IngestFuzzy {
     * d+1 string-carrying segs/ rows per key, cut and bucketed with the
     * store's recorded layout. Public so a composite pipeline
     * (IngestPipeline) can gate with `gateBatch`, fan the kept frame to
-    * its sinks, and grow the store LAST — the refreshByPath ordering
-    * every state store follows. */
+    * its sinks, and grow the store after them. `keys` is read twice
+    * (keys/, then segs/): pass a frame over a persisted batch. */
   def appendKeys(spark: SparkSession, storePath: String,
                  keys: DataFrame): Unit = {
     val (d, minSeg, metaNB) = meta(spark, storePath)
     val nB = segGeom(spark, storePath, metaNB)
-    val k = keys.persist(StorageLevel.MEMORY_AND_DISK)
-    k.count()
-    writeKeys(k, s"$storePath/keys", d, minSeg, "append")
-    writeSegs(k.withColumn("len", length(col("s"))),
+    writeKeys(keys, s"$storePath/keys", d, minSeg, "append")
+    writeSegs(keys.withColumn("len", length(col("s"))),
       s"$storePath/segs", d, minSeg, nB, "append")
     // a first append creates segs/ — stamp the geometry it was cut
     // with so later resolution never depends on meta staying in step
     if (graft.core.Stores.readGeometry(spark, s"$storePath/segs").isEmpty)
       graft.core.Stores.stampGeometry(spark, s"$storePath/segs", nB)
-    k.unpersist(blocking = false)
   }
 
   /** The gate half of `processBatch`: the batch's surviving rows (ALL
-    * input columns ride along) without writing anything, scoped to the
-    * gate's persists. Null-key rows match nothing and always survive.
+    * input columns ride along) without writing anything. Null-key rows
+    * match nothing and always survive. The kept frame is `batch`
+    * filtered by the gate's driver-side drop-id set, so it never reads
+    * the store and the scope holds nothing; `batch` is read again by
+    * every consumer, so pass a persisted one.
     *
     * Safe-by-default against the in-batch quadratic: the within-batch
     * self-join is quadratic in BATCH size on adversarial keys (round-9
     * measured ~8 min per 100 k-key batch at sf10, store-independent),
-    * so batches above `maxKeys` rows are split into id-ordered slices
-    * of ≤ `maxKeys` and folded serially — each slice probes the store
-    * PLUS every earlier slice's keys (ALL of them, not just survivors:
-    * the first-wins rule is a conservative cascade, a dropped
-    * smaller-id key still drops its neighbors), which is exactly the
-    * unsplit gate's decision for every key, so the output is
-    * bit-identical at any `maxKeys` (pinned in IngestFuzzySpec). Slice
-    * assignment uses driver-side quantile boundaries (never a bare
-    * batch-wide window). Nothing is appended during the fold, so the
-    * store read stays stable (the refreshByPath rule).
+    * so batches above `maxKeys` keyed rows are split into id-ordered
+    * slices of ≤ `maxKeys` and folded serially — each slice probes the
+    * store PLUS every earlier slice's keys (ALL of them, not just
+    * survivors: the first-wins rule is a conservative cascade, a
+    * dropped smaller-id key still drops its neighbors), which is
+    * exactly the unsplit gate's decision for every key, so the output
+    * is bit-identical at any `maxKeys` (pinned in IngestFuzzySpec).
+    * Slice bounds are every `maxKeys`-th of the batch's sorted keyed
+    * ids, collected once (bounded by batch rows). Nothing is appended
+    * during the fold, so the store read stays stable.
     *
     * `scratch`: shuffle files accumulate for the LIFETIME of a batch
     * closure — they release with the frames, not per join — so one
     * corpus-fraction fold spills O(slices × slice-shuffle) local disk
     * (round 11 measured 71 GB / 360 k keys at sf100 before filling the
     * disk). Passing a scratch directory turns each slice's carry
-    * frames into DISK-BACKED lineage cuts: survivors and slice
-    * segments land in scratch parquet and are re-read, so nothing
-    * references the slice's shuffles once it folds (the in-memory
-    * LogicalRDD cut can never free them — its RDD graph holds the
-    * shuffle dependencies) and ContextCleaner reclaims them mid-fold;
-    * peak spill is then O(slice), not O(batch). Output is
-    * bit-identical (IngestFuzzySpec pin). Costs one parquet
-    * round-trip per slice — for bulk backfills, not steady
-    * micro-batches. The caller owns the scratch dir's lifecycle. */
+    * frames (its segments and short keys, which every later slice
+    * probes) into DISK-BACKED lineage cuts: they land in scratch
+    * parquet and are re-read, so nothing references the slice's
+    * shuffles once it folds (the in-memory LogicalRDD cut can never
+    * free them — its RDD graph holds the shuffle dependencies) and
+    * ContextCleaner reclaims them mid-fold; peak spill is then
+    * O(slice), not O(batch). Output is bit-identical (IngestFuzzySpec
+    * pin). Costs one parquet round-trip per slice — for bulk
+    * backfills, not steady micro-batches. The caller owns the scratch
+    * dir's lifecycle. */
   def gateBatch(batch: DataFrame, storePath: String,
                 keyCol: String = "key",
                 maxKeys: Int = 10000,
                 scratch: Option[String] = None): Scoped[DataFrame] =
-    gateBatchStats(batch, storePath, keyCol, maxKeys, scratch).map(_._1)
+    Scoped.pure(without(batch, drops(batch, storePath, keyCol, maxKeys, scratch)))
 
-  /** `gateBatch` plus per-slice (keys, seconds) timings — the
-    * instrumented form behind the per-slice rows of SCALE.md "Round 10:
-    * the auto-split fuzzy gate". */
-  private[graft] def gateBatchStats(batch: DataFrame, storePath: String,
-                                    keyCol: String, maxKeys: Int,
-                                    scratch: Option[String] = None)
-      : Scoped[(DataFrame, Seq[(Long, Double)])] = {
+  /** The gate's decision: the doc_ids `gateBatch` drops, one collect
+    * per slice. Every frame the fold persists is released before it
+    * returns. */
+  private[streaming] def drops(batch: DataFrame, storePath: String,
+                               keyCol: String, maxKeys: Int,
+                               scratch: Option[String]): Set[Long] = {
     require(maxKeys >= 1, "maxKeys must be >= 1")
     val spark = batch.sparkSession
     val (d, minSeg, metaNB) = meta(spark, storePath)
     val nB = segGeom(spark, storePath, metaNB)
-    val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = b.count()
-    val emptyBase = b.where(col(keyCol).isNotNull)
+    val base = batch.where(col(keyCol).isNotNull)
       .select(col("doc_id").cast("long").as("id"), col(keyCol).as("s"))
-      .withColumn("len", length(col("s"))).limit(0)
-    val haveKeys = exists(spark, s"$storePath/keys")
+      .withColumn("len", length(col("s")))
     // the short-key slice: ONLY the sh=1 partition is ever read — the
     // band fallback's store side is bounded-length by layout
     val storeShorts =
-      if (haveKeys)
+      if (exists(spark, s"$storePath/keys"))
         spark.read.parquet(s"$storePath/keys").where(col("sh") === 1)
           .select(col("id"), col("s"), length(col("s")).as("len"))
-      else emptyBase
-    def prunedSegs(sliceBase: DataFrame): DataFrame =
-      prunedStoreSegs(spark, storePath, sliceBase, d, minSeg, nB)
-    // id-ordered slice assignment from DRIVER-SIDE quantile boundaries
-    // — computed once, then pure literals in a projection over the
-    // persisted batch, so every slice job sees the identical
-    // assignment BY CONSTRUCTION. A rank-based assignment is NOT safe
-    // here: the fold reads it from many separate jobs, and
-    // globalRank's two references to its range-partitioned frame can
-    // materialize as two concurrent AQE stages that each sample their
-    // own boundaries — ranks and offsets then disagree, some ranks
-    // overflow the slice range, and keys silently land in NO slice
-    // (found as a flaky split-vs-unsplit parity break at 10 k+ keys;
-    // single-query users like snmPairs reuse the one exchange and are
-    // safe). Quantile error only skews slice SIZES a fraction of a
-    // percent — slices stay id-ordered and disjoint-covering exactly,
-    // which is all parity needs. Empty slices (duplicate boundaries)
-    // fold through harmlessly.
-    val nSlices = (((n max 1L) + maxKeys - 1) / maxKeys).toInt
-    val sliced =
-      if (nSlices <= 1) b.withColumn("__slice", lit(0))
-      else {
-        val probs = (1 until nSlices).map(_.toDouble / nSlices).toArray
-        val bounds = b.select(col("doc_id").cast("double").as("d"))
-          .stat.approxQuantile("d", probs, 0.001)
-        val sliceCol = bounds.foldLeft(lit(0)) { (acc, bv) =>
-          acc + when(col("doc_id").cast("double") > lit(bv), 1).otherwise(0)
-        }
-        b.withColumn("__slice", sliceCol.cast("int"))
-      }
-    // every persisted slice frame gets its LINEAGE CUT (a LogicalRDD
-    // leaf over the materialized cache): without it, slice i's plan
-    // embeds every prior slice's full tree several times over
-    // (fuzzyKeyKept references its store side repeatedly), and the
-    // resulting near-exponential plan STRING froze the sf10 campaign's
-    // driver inside TreeNode.generateTreeString — rendered once per
-    // job for the SQL-start event — before a single task was slow.
-    // The cut frame still reads the cache; an evicted block recomputes
-    // through the RDD lineage, so nothing ships through task results
-    // (the round-3 localCheckpoint trap).
-    def cut(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    val keep = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      else base.limit(0)
+    // slice i holds the keyed ids in [starts(i), starts(i + 1))
+    val ids = base.select("id").collect().map(_.getLong(0)).sorted
+    val starts = ids.indices.by(maxKeys).map(ids(_))
+    def slice(i: Int): DataFrame =
+      if (starts.length == 1) base
+      else base.where(col("id") >= lit(starts(i)) &&
+        (if (i + 1 < starts.length) col("id") < lit(starts(i + 1)) else lit(true)))
+    // every carry frame (a slice's segments and short keys, probed by
+    // all later slices) gets its LINEAGE CUT: without it, slice i's
+    // plan embeds every prior slice's tree, and the plan STRING Spark
+    // renders once per job for the SQL-start event froze the sf10
+    // campaign's driver inside TreeNode.generateTreeString before a
+    // single task was slow. In memory the cut is a LogicalRDD leaf
+    // over the persisted frame (an evicted block recomputes through
+    // the RDD lineage, so nothing ships through task results — the
+    // round-3 localCheckpoint trap); with `scratch` it is a parquet
+    // round-trip (explicit schema on the re-read — an empty slice
+    // commits no part file).
     val hold = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    var extraShorts: DataFrame = null
-    var extraSegs: DataFrame = null
-    for (i <- 0 until nSlices) {
-      val t0 = System.nanoTime
-      val slice = sliced.where(col("__slice") === i).drop("__slice")
-      val sliceBase0 = slice.where(col(keyCol).isNotNull)
-        .select(col("doc_id").cast("long").as("id"), col(keyCol).as("s"))
-        .withColumn("len", length(col("s")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nk = sliceBase0.count()
-      val sliceBase = cut(sliceBase0)
+    def cut(df: DataFrame, name: String): DataFrame = scratch match {
+      case None =>
+        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+        hold += p
+        spark.createDataFrame(p.rdd, p.schema)
+      case Some(dir) =>
+        df.write.mode("overwrite").parquet(s"$dir/$name")
+        spark.read.schema(df.schema).parquet(s"$dir/$name")
+    }
+    var carrySegs: DataFrame = null
+    var carryShorts: DataFrame = null
+    try starts.indices.foldLeft(Set.empty[Long]) { (acc, i) =>
+      val sl = slice(i)
+      val segs = prunedStoreSegs(spark, storePath, sl, d, minSeg, nB)
       val (sg, sh) =
-        if (extraSegs == null) (prunedSegs(sliceBase), storeShorts)
-        else (prunedSegs(sliceBase).unionByName(extraSegs),
-              storeShorts.unionByName(extraShorts))
-      val keptIds = Dedup.fuzzyKeyKeptPruned(sliceBase, sg, sh, d, minSeg)
-        .select(col("id").as("doc_id"))
-      val kept0 = slice.join(keptIds, Seq("doc_id"), "left_semi")
-        .unionByName(slice.where(col(keyCol).isNull))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      kept0.count()
-      scratch match {
-        case None =>
-          keep += kept0
-          hold += sliceBase0
-          if (i < nSlices - 1) { // the last slice's keys probe nothing
-            val segsI0 = Dedup.edIndexSegs(sliceBase, d, minSeg, carryS = true)
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            segsI0.count()
-            val segsI = cut(segsI0)
-            hold += segsI0
-            val shortsI = sliceBase
-              .where(col("len") < minSeg * (d + 1) + d)
-              .select("id", "s", "len")
-            extraShorts =
-              if (extraShorts == null) shortsI
-              else extraShorts.unionByName(shortsI)
-            extraSegs =
-              if (extraSegs == null) segsI else extraSegs.unionByName(segsI)
-          }
-        case Some(dir) =>
-          // disk-backed lineage cut: every frame that outlives this
-          // slice is a scratch-parquet READ, so the slice's shuffle
-          // files lose their last reference here and ContextCleaner
-          // reclaims them mid-fold (explicit schema on the re-reads —
-          // an empty slice commits no part file)
-          kept0.write.mode("overwrite").parquet(s"$dir/kept_$i")
-          keep += spark.read.schema(kept0.schema).parquet(s"$dir/kept_$i")
-          if (i < nSlices - 1) {
-            val segsI0 = Dedup.edIndexSegs(sliceBase, d, minSeg, carryS = true)
-            segsI0.write.mode("overwrite").parquet(s"$dir/segs_$i")
-            val segsI = spark.read.schema(segsI0.schema)
-              .parquet(s"$dir/segs_$i")
-            val shortsI0 = sliceBase
-              .where(col("len") < minSeg * (d + 1) + d)
-              .select("id", "s", "len")
-            shortsI0.write.mode("overwrite").parquet(s"$dir/shorts_$i")
-            val shortsI = spark.read.schema(shortsI0.schema)
-              .parquet(s"$dir/shorts_$i")
-            extraShorts =
-              if (extraShorts == null) shortsI
-              else extraShorts.unionByName(shortsI)
-            extraSegs =
-              if (extraSegs == null) segsI else extraSegs.unionByName(segsI)
-          }
-          kept0.unpersist(blocking = false)
-          sliceBase0.unpersist(blocking = false)
-          System.gc() // prompt ContextCleaner — default periodic GC is 30 min
+        if (carrySegs == null) (segs, storeShorts)
+        else (segs.unionByName(carrySegs), storeShorts.unionByName(carryShorts))
+      val dropped = Dedup.fuzzyKeyDropsPruned(sl, sg, sh, d, minSeg)
+        .collect().map(_.getLong(0))
+      if (i < starts.length - 1) { // the last slice's keys probe nothing
+        val segsI = cut(Dedup.edIndexSegs(sl, d, minSeg, carryS = true), s"segs_$i")
+        val shortsI = cut(sl.where(col("len") < minSeg * (d + 1) + d)
+          .select("id", "s", "len"), s"shorts_$i")
+        carrySegs = if (carrySegs == null) segsI else carrySegs.unionByName(segsI)
+        carryShorts =
+          if (carryShorts == null) shortsI else carryShorts.unionByName(shortsI)
       }
-      stats += ((nk, (System.nanoTime - t0) / 1e9))
-    }
-    val kept =
-      if (scratch.isDefined) keep.reduce(_.unionByName(_))
-      else keep.map(cut).reduce(_.unionByName(_))
-    Scoped((kept, stats.toSeq)) {
-      b.unpersist(blocking = false)
-      (keep ++ hold).foreach(_.unpersist(blocking = false))
-    }
+      // prompt ContextCleaner — default periodic GC is 30 min
+      if (scratch.isDefined) System.gc()
+      acc ++ dropped
+    } finally hold.foreach(_.unpersist(blocking = false))
   }
 
   /** The pruned segs/ read for one probe frame (id, s, len): collect

@@ -37,26 +37,29 @@ object IngestImages {
     * their fingerprints to the store. Returns kept rows. */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
                    imageCol: String = "image"): Long =
-    gateBatch(batch, storePath, imageCol).use { case (kept, keptHashes) =>
-      val nKept = kept.count()
-      // refreshByPath order: the out write consumes the store-reading
-      // frame first, the store grows last
-      kept.write.mode("append").parquet(outPath)
-      appendHashes(batch.sparkSession, storePath, keptHashes)
-      nKept
+    Scoped.cached(batch).use { b =>
+      gateBatch(b, storePath, imageCol).use { case (kept, keptHashes) =>
+        val nKept = kept.count()
+        // out first, the store last: a crash between them duplicates
+        // the batch on replay, never loses it
+        kept.write.mode("append").parquet(outPath)
+        appendHashes(batch.sparkSession, storePath, keptHashes)
+        nKept
+      }
     }
 
   /** Append already-gated fingerprints (id, h) to the store — public
-    * so the composed pipeline can gate, fan out its sinks, and grow
-    * this store in the refreshByPath-safe slot. */
+    * so a composed pipeline can gate, fan out its sinks, and grow
+    * this store after them. */
   def appendHashes(spark: SparkSession, storePath: String,
                    hashes: DataFrame): Unit =
     IngestFingerprints.appendFps(spark, storePath,
       hashes.select(col("id"), lit(0).as("p"), col("h")))
 
   /** The gate half: kept rows with ALL input columns and survivors'
-    * fingerprint rows (id, h), scoped to the gate's persists. Nothing
-    * is written. */
+    * fingerprint rows (id, h), scoped to the gate's persisted
+    * fingerprint frame. Nothing is written; pass a persisted `batch`
+    * (`IngestFingerprints.gateBatch`). */
   def gateBatch(batch: DataFrame, storePath: String,
                 imageCol: String = "image"): Scoped[(DataFrame, DataFrame)] =
     IngestFingerprints.gateBatch(

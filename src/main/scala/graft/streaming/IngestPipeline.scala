@@ -47,10 +47,11 @@ import graft.core.Scoped
   *      (`IngestVectors.searchBatch`), so mining recall does not
   *      silently decay as the store grows.
   *
-  * Because every sink is fed from the same persisted kept frame inside
-  * one batch closure, the stores stay MUTUALLY CONSISTENT
-  * batch-over-batch: kept parquet rows == appended index vectors ==
-  * telemetry n_docs, batch by batch (pinned by `IngestPipelineSpec`,
+  * The batch is persisted once; each gate decides by one driver-side
+  * drop-id set, and every sink reads the same persisted batch filtered
+  * by those sets inside one batch closure, so the stores stay MUTUALLY
+  * CONSISTENT batch-over-batch: kept parquet rows == appended index
+  * vectors == telemetry n_docs, batch by batch (pinned by `IngestPipelineSpec`,
   * including equality with running the three ingest loops separately).
   *
   * Scale stance is inherited from the parts: all state lives in
@@ -102,133 +103,85 @@ object IngestPipeline {
         mp(name) = mp.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
         r
     }
-    // optional SECOND gate, composed in series: near-dup on content,
-    // then typo-distance on the key column (a record can be novel prose
-    // with a misspelled key, or a retyped key over duplicate prose —
-    // independent duplicate channels, so both gates must pass). The
-    // fuzzy store (seeded by IngestFuzzy.fuzzySave) is read here and,
-    // like every state store, appended after the sinks.
-    //
-    // TWO state stores sharpen the refreshByPath rule: the doubly-gated
-    // frame reads BOTH stores, so whichever store appends first poisons
-    // a later append derived from it (found empirically: filtering the
-    // signatures by the fuzzy-kept set made the fuzzy append's recache
-    // re-gate the batch against its own keys — EMPTY signature append,
-    // every batch, no error anywhere). The composed path therefore
-    // appends the CONTENT-gate survivors' signatures (lineage: batch
-    // sketch + signature store only — immune to the fuzzy append), and
-    // that is also the correct crash contract: a replay after the fuzzy
-    // append but before the signature append re-derives k1 unchanged
-    // and back-fills exactly the missing signatures, while k2 = ∅ keeps
-    // the sinks duplicate-free. Semantics: the signature store records
-    // every content-novel doc, including ones the key gate dropped — a
-    // later clone of a fuzzy-dropped doc is still SEEN content and
-    // drops.
-    //
-    // optional THIRD gate, same series composition: perceptual image
-    // near-dup on the binary payload (dHash + banded Hamming) — text
-    // content, typo keys, and image payloads are independent duplicate
-    // channels, so a record must pass all the gates the caller armed.
-    // The three-store append cascade below follows the two-store rule:
-    // each store's append derives from a frame whose lineage reads at
-    // most the stores not yet appended — image (reads all three) →
-    // fuzzy (reads sig + fuzzy) → signatures (reads sig only).
-    //
-    // One scope owns all three gates' persists: released image gate
-    // first, content gate last, and also when a sink or append throws.
-    val gates = t("gate_sig")(IngestDedup.gateBatch(batch, sigStorePath, threshold))
-      .flatMap { case (k1, keptSigs) =>
-        val fuzzy = fuzzyStorePath match {
-          case None => Scoped.pure(k1)
-          case Some(fp) => t("gate_fuzzy")(
-            IngestFuzzy.gateBatch(k1, fp, fuzzyKeyCol, fuzzyMaxKeys))
+    Scoped.cached(batch).use { b =>
+      // the batch's ids, collected once: every gate drops a subset of
+      // them, so the kept count is driver arithmetic
+      val ids = t("gate_count")(
+        b.select(col("doc_id").cast("long")).collect().map(_.getLong(0)))
+      // the gates in series: content near-dup, then (optional) typo
+      // distance on the key column, then (optional) perceptual image
+      // near-dup — independent duplicate channels, so a record must pass
+      // every armed gate. Each collects its drop ids; every frame below
+      // is the persisted batch, or a gate's own persisted sketch or
+      // fingerprint frame, filtered by those sets.
+      t("gate_sig")(IngestDedup.decide(b, sigStorePath, threshold)).use { case (d1, sigs) =>
+        val d2 = fuzzyStorePath.fold(Set.empty[Long]) { fp =>
+          t("gate_fuzzy")(IngestFuzzy.drops(without(b, d1), fp, fuzzyKeyCol,
+            fuzzyMaxKeys, scratch = None))
         }
-        fuzzy.flatMap { k2 =>
-          val image = imageStorePath match {
-            case None => Scoped.pure((k2, None: Option[DataFrame]))
-            case Some(ip) => t("gate_image")(IngestImages.gateBatch(k2, ip, imageCol))
-              .map { case (k3, kh) => (k3, Some(kh)) }
+        val k2 = without(b, d1 ++ d2)
+        val image = imageStorePath match {
+          case None => Scoped.pure((Set.empty[Long], None: Option[DataFrame]))
+          case Some(ip) => t("gate_image")(IngestFingerprints.decide(ip,
+              IngestFingerprints.imageFps(k2, imageCol)))
+            .map { case (d3, fps) => (d3, Some(fps)) }
+        }
+        image.use { case (d3, imageFps) =>
+          val dropped = d1 ++ d2 ++ d3
+          val kept = without(b, dropped)
+          val nKept = ids.count(id => !dropped(id))
+          if (nKept > 0) {
+            // optional online pair mining: each KEPT doc's top-k
+            // neighbors among everything ingested BEFORE this batch —
+            // so it runs before the index append
+            neighborsPath.foreach { np => t("mine_neighbors") {
+              IngestVectors.searchBatch(
+                  kept.select(col("doc_id").as("vec_id"), col("embedding")),
+                  indexPath, neighborK, neighborProbe, neighborScanFrac)
+                .use(_.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+                  .write.mode("append").parquet(np))
+            }}
+            t("land_out")(kept.select(col("doc_id"), col("text"))
+              .write.mode("append").parquet(outPath))
+            t("append_index")(IngestVectors.append(
+              kept.select(col("doc_id").as("vec_id"), col("embedding")), indexPath))
+            t("append_telemetry")(
+              MonitorQuality.batchStats(kept.select(col("doc_id"), col("text")), batchId)
+                .coalesce(1).write.mode("append").parquet(telemetryPath))
+            // optional 5th store: per-source vocabulary sketches of the
+            // KEPT docs (requires a `source` column in the feed)
+            vocabPath.foreach { vp => t("append_vocab")(
+              IngestVocab.append(kept.select(col("source"), col("text")), batchId, vp))
+            }
+            // optional 6th store: lexical postings of the KEPT docs (batch
+            // token offset by 1 — lexSave's seed stats row owns batch_id 0)
+            lexPath.foreach { lp => t("append_lexical")(
+              graft.operators.Lexical.lexAppendSave(
+                b.sparkSession, lp, kept.select(col("doc_id"), col("text")),
+                batchId + 1L))
+            }
+            // state stores after every sink, image → fuzzy → signatures:
+            // a crash between two appends replays into duplicates, never
+            // loss (the crash contract)
+            for (ip <- imageStorePath; fps <- imageFps) t("append_image")(
+              IngestFingerprints.appendFps(b.sparkSession, ip,
+                without(fps, d3, "id").select("id", "p", "h")))
           }
-          image.map { case (kept, keptHashes) => (keptSigs, k2, kept, keptHashes) }
-        }
-      }
-    gates.use { case (keptSigs, k2, kept, keptHashes) =>
-      val nKept = t("gate_count")(kept.count())
-      if (nKept > 0) {
-        // optional online pair mining: each KEPT doc's top-k neighbors
-        // among everything ingested BEFORE this batch. Must run before
-        // the index append both for its semantics (prior corpus only —
-        // within-batch pairs are the offline knnJoin's job) and for the
-        // refreshByPath rule (the search reads indexPath; appending
-        // first would re-execute it against a store containing the
-        // batch itself).
-        neighborsPath.foreach { np => t("mine_neighbors") {
-          IngestVectors.searchBatch(
-              kept.select(col("doc_id").as("vec_id"), col("embedding")),
-              indexPath, neighborK, neighborProbe, neighborScanFrac)
-            .use(_.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-              .write.mode("append").parquet(np))
-        }}
-        // ORDER MATTERS: the signature-store append must come LAST.
-        // Writing to sigStorePath triggers refreshByPath, which recaches
-        // every plan reading that path — including `kept` (its anti-join
-        // reads the store through `drops`). A consumer of `kept` that
-        // runs AFTER the store grows re-evaluates against a store
-        // containing the batch's own signatures, every doc self-matches,
-        // and the consumer silently sees an EMPTY kept set (found
-        // empirically in round 7: vector appends vanished for every
-        // batch after the first).
-        t("land_out")(kept.select(col("doc_id"), col("text"))
-          .write.mode("append").parquet(outPath))
-        t("append_index")(IngestVectors.processBatch(
-          kept.select(col("doc_id").as("vec_id"), col("embedding")), indexPath))
-        t("append_telemetry")(
-          MonitorQuality.batchStats(kept.select(col("doc_id"), col("text")), batchId)
-            .coalesce(1).write.mode("append").parquet(telemetryPath))
-        // optional 5th store: per-source vocabulary sketches of the KEPT
-        // docs (requires a `source` column in the feed)
-        vocabPath.foreach { vp => t("append_vocab")(
-          IngestVocab.processBatch(
-            kept.select(col("source"), col("text")), batchId, vp))
-        }
-        // optional 6th store: lexical postings of the KEPT docs (batch
-        // token offset by 1 — lexSave's seed stats row owns batch_id 0)
-        lexPath.foreach { lp => t("append_lexical")(
-          graft.operators.Lexical.lexAppendSave(
-            kept.sparkSession, lp, kept.select(col("doc_id"), col("text")),
-            batchId + 1L))
-        }
-        // state stores LAST, after every consumer of `kept` has run, in
-        // the dependency-safe cascade: image store first (its append
-        // frame reads all three stores), fuzzy next, signatures below
-        imageStorePath.foreach { ip => t("append_image")(
-          keptHashes.foreach(kh =>
-            IngestImages.appendHashes(kept.sparkSession, ip, kh)))
-        }
-      }
-      // the fuzzy append sits outside the kept-guard once a later gate
-      // exists: the key gate can keep records the image gate then drops
-      // (kept = 0 but k2 nonempty), and their key-novelty must still be
-      // recorded — k2's lineage reads only the signature + fuzzy stores,
-      // both still un-appended here
-      fuzzyStorePath.foreach { fp =>
-        if (nKept > 0 || (imageStorePath.isDefined && !k2.isEmpty))
-          t("append_fuzzy") {
-            val keptKeys = k2.where(col(fuzzyKeyCol).isNotNull)
-              .select(col("doc_id").cast("long").as("id"),
-                col(fuzzyKeyCol).as("s"))
-            IngestFuzzy.appendKeys(k2.sparkSession, fp, keptKeys)
+          // the fuzzy and signature stores record their own gate's
+          // survivors, also those a later gate drops (kept = 0)
+          fuzzyStorePath.foreach { fp =>
+            if (nKept > 0 || (imageStorePath.isDefined && ids.exists(id => !d1(id) && !d2(id))))
+              t("append_fuzzy")(IngestFuzzy.appendKeys(b.sparkSession, fp,
+                k2.where(col(fuzzyKeyCol).isNotNull)
+                  .select(col("doc_id").cast("long").as("id"), col(fuzzyKeyCol).as("s"))))
           }
+          val keptSigs = without(sigs, d1)
+          if (nKept > 0 || ((fuzzyStorePath.isDefined || imageStorePath.isDefined)
+              && ids.exists(id => !d1(id)) && !keptSigs.isEmpty))
+            keptSigs.write.mode("append").parquet(sigStorePath)
+          nKept
+        }
       }
-      // the signature append sits OUTSIDE the kept-guard: in the composed
-      // path the content gate can keep docs a later gate then drops
-      // (kept = 0 but keptSigs nonempty), and their novelty must still be
-      // recorded — and keptSigs' lineage never reads the other stores, so
-      // the append order stays refreshByPath-safe
-      if (nKept > 0 || ((fuzzyStorePath.isDefined || imageStorePath.isDefined)
-          && !keptSigs.isEmpty))
-        keptSigs.write.mode("append").parquet(sigStorePath)
-      nKept
     }
   }
 

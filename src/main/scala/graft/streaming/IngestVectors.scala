@@ -46,9 +46,16 @@ object IngestVectors {
     * foreachBatch closure so batch specs can drive it without a
     * streaming query. */
   def processBatch(batch: DataFrame, indexPath: String): Long = {
-    val spark = batch.sparkSession
     val n = batch.count()
-    if (n > 0) layoutAt(spark, indexPath) match {
+    if (n > 0) append(batch, indexPath)
+    n
+  }
+
+  /** `processBatch` for a batch the caller knows is non-empty: the
+    * append alone, no count. */
+  private[streaming] def append(batch: DataFrame, indexPath: String): Unit = {
+    val spark = batch.sparkSession
+    layoutAt(spark, indexPath) match {
       case Ivf(codec, _) => Similarity.ivfAppendAs(spark, indexPath, batch, codec)
       case OpqIvfPq => Similarity.ivfOpqAppendSave(spark, indexPath, batch)
       case IvfPq => Similarity.ivfPqAppendSave(spark, indexPath, batch)
@@ -56,7 +63,6 @@ object IngestVectors {
       case FlatPq => Similarity.pqAppendSave(spark, indexPath, batch)
       case FlatBin => Similarity.binAppendSave(spark, indexPath, batch)
     }
-    n
   }
 
   private def layoutAt(spark: org.apache.spark.sql.SparkSession,

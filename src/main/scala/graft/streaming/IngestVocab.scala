@@ -51,10 +51,16 @@ object IngestVocab {
   def processBatch(batch: DataFrame, batchId: Long, storePath: String,
                    lgConfigK: Int = 12): Long = {
     val n = batch.count()
-    if (n > 0) batchSketches(batch, batchId, lgConfigK).coalesce(1)
-      .write.mode("append").parquet(storePath)
+    if (n > 0) append(batch, batchId, storePath, lgConfigK)
     n
   }
+
+  /** `processBatch` for a batch the caller knows is non-empty: the
+    * append alone, no count. */
+  private[streaming] def append(batch: DataFrame, batchId: Long, storePath: String,
+                                lgConfigK: Int = 12): Unit =
+    batchSketches(batch, batchId, lgConfigK).coalesce(1)
+      .write.mode("append").parquet(storePath)
 
   /** The running audit: per source, the number of batches seen, total
     * token occurrences, and the HLL estimate of the all-time distinct

@@ -27,16 +27,17 @@ import graft.operators.TrainingData
   */
 object MonitorQuality {
 
-  /** Compute one telemetry row for a batch. Exposed for specs. */
+  /** Compute one telemetry row for a batch, in one aggregate over
+    * `TrainingData.gopherRows` (the Gopher verdict per row, no
+    * explode). n_docs counts the rows with text: the docs
+    * `gopherQuality` scores, given the unique doc_ids every ingest batch
+    * carries. Exposed for specs. */
   def batchStats(batch: DataFrame, batchId: Long): DataFrame = {
     val toks = size(split(lower(trim(col("text"))), " ")).cast("long")
-    val keep = TrainingData.gopherQuality(batch, minWords = 30)
-      .agg(count(lit(1)).as("n_docs"),
+    TrainingData.gopherRows(batch, Seq(toks.as("n_tok")), minWords = 30)
+      .agg(count(col("keep")).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
+        min(col("n_tok")).as("min_tok"), max(col("n_tok")).as("max_tok"),
         sum(col("keep").cast("long")).as("n_keep"))
-    batch.select(toks.as("n_tok"))
-      .agg(sum(col("n_tok")).as("n_tokens"), min(col("n_tok")).as("min_tok"),
-        max(col("n_tok")).as("max_tok"))
-      .crossJoin(keep)
       .select(lit(batchId).as("batch_id"), col("n_docs"), col("n_tokens"),
         col("min_tok"), col("max_tok"), col("n_keep"),
         expr("(n_keep * 1000000) div n_docs").as("keep_ppm"))

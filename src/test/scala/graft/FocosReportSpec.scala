@@ -1,10 +1,7 @@
 package graft
 
 import java.io.{File, FileOutputStream}
-import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cache.IncrementalStore
@@ -119,27 +116,6 @@ class FocosReportSpec extends SparkSpec {
     val r2 = FocosReport.build(spark, zipDir.getAbsolutePath, cacheDir)
     assert(r2.rebuiltYears.isEmpty && r2.reusedYears == names)
     assert(rowsOf(r2.consolidated) == rowsOf(want))
-  }
-
-  /** Jobs `body` submits, counted by job group through a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "focos-jobs-" + java.util.UUID.randomUUID
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, group)
-    try body
-    finally {
-      sc.clearJobGroup()
-      GraftTestBus.drain(sc)
-      sc.removeSparkListener(l)
-    }
-    n.get
   }
 
   test("cold build jobs do not grow with the stale archives; analysis and chart run none") {

@@ -745,4 +745,81 @@ class IngestPipelineSpec extends SparkSpec {
     idx.release()
     assert(vids == (0L until 300L).toSet ++ keptIds)
   }
+
+  // feed rows carrying every column the armed gates and sinks read, and
+  // stores seeded from docs 0-299 (each store exists before the batch)
+  private def armed(name: String) = {
+    import graft.operators.Multimodal
+    import graft.streaming.{IngestFingerprints, IngestFuzzy, IngestImages}
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "source", "text")
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val mkImg = udf((id: Long) => Multimodal.pngPatternBytes(id, 0, 36, 32))
+    val base = docs.join(emb, docs("doc_id") === emb("vec_id"))
+      .select($"doc_id", $"source", $"text", $"embedding",
+        substring($"text", 1, 40).as("key"), mkImg($"doc_id").as("image"))
+    val seed = base.where($"doc_id" < 300)
+    val (sigs, fz, im) = (tmp(s"${name}_sigs"), tmp(s"${name}_fz"), tmp(s"${name}_im"))
+    Dedup.signatureSave(seed.select("doc_id", "text"), sigs)
+    IngestFuzzy.fuzzySave(spark, seed.select($"doc_id".as("id"), $"key".as("s")),
+      fz, maxDist = 1)
+    IngestImages.dhashSave(spark,
+      IngestFingerprints.imageFps(seed).select("id", "h"), im, maxHamming = 2)
+    (base, sigs, fz, im)
+  }
+
+  test("gated frames read no state store: appending the batch's own signatures, keys and hashes keeps kept") {
+    import graft.streaming.{IngestFuzzy, IngestImages}
+    val (base, sigs, fz, im) = armed("immune")
+    val batch = base.where($"doc_id" >= 300 && $"doc_id" < 340)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    IngestDedup.gateBatch(batch, sigs, 0.5).use { case (k1, sigs1) =>
+      IngestFuzzy.gateBatch(k1, fz, "key").use { k2 =>
+        IngestImages.gateBatch(k2, im).use { case (kept, hashes) =>
+          val (ids1, ids2, keptIds) = (ids(k1), ids(k2), ids(kept))
+          assert(keptIds.nonEmpty)
+          // signatures first, the order the crash contract rules out: a
+          // kept frame that read the signature store would now re-run
+          // against its own signatures and come back empty
+          sigs1.write.mode("append").parquet(sigs)
+          IngestFuzzy.appendKeys(spark, fz,
+            k2.select($"doc_id".cast("long").as("id"), $"key".as("s")))
+          IngestImages.appendHashes(spark, im, hashes)
+          assert(ids(kept) == keptIds)
+          assert(ids(k2) == ids2 && ids(k1) == ids1)
+        }
+      }
+    }
+    // the batch did land in the stores: gated again, none of it is kept
+    IngestDedup.gateBatch(batch, sigs, 0.5).use { case (k1, _) =>
+      IngestFuzzy.gateBatch(k1, fz, "key").use(k2 => assert(ids(k2).isEmpty))
+    }
+  }
+
+  test("one composed batch with every store armed stays within its job budget") {
+    import graft.operators.Lexical
+    val (base, sigs, fz, im) = armed("budget")
+    val seed = base.where($"doc_id" < 300)
+    val (out, tele, idx, lex, vocab, nbrs) = (tmp("budget_out"), tmp("budget_tele"),
+      tmp("budget_idx"), tmp("budget_lex"), tmp("budget_vocab"), tmp("budget_nbrs"))
+    val seedIdx = Similarity.ivfBuild(seed.select($"doc_id".as("vec_id"), $"embedding"), 8)
+    Similarity.ivfSave(seedIdx, idx)
+    seedIdx.release()
+    Lexical.lexSave(spark, seed.select("doc_id", "text"), lex)
+    // 40 new docs plus a clone of doc 301 that the content gate drops
+    val batch = base.where($"doc_id" >= 300 && $"doc_id" < 340)
+      .unionByName(base.where($"doc_id" === 301L).withColumn("doc_id", lit(9301L)))
+    var kept = 0L
+    val jobs = jobsOf {
+      kept = IngestPipeline.processBatch(batch, 0L, sigs, out, idx, tele, 0.5,
+        vocabPath = Some(vocab), neighborsPath = Some(nbrs), lexPath = Some(lex),
+        fuzzyStorePath = Some(fz), imageStorePath = Some(im))
+    }
+    assert(kept > 0 && kept <= 40)
+    // the count measured when every gate decided by one collected
+    // drop-id set; a persist + count put back into any gate exceeds it
+    assert(jobs <= 90, s"one armed batch ran $jobs Spark jobs")
+  }
 }

@@ -1,14 +1,18 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (the engine's session
-  * settings, `graft.core.Session`), plus the persist-leak check: every
-  * RDD a suite persists must be released by the time the suite ends.
-  * A suite that leaves one behind fails in `afterAll`, naming the RDDs
-  * (the leaked entries are dropped first, so later suites start clean). */
+  * settings, `graft.core.Session`), a job counter, and the persist-leak
+  * check: every RDD a suite persists must be released by the time the
+  * suite ends. A suite that leaves one behind fails in `afterAll`,
+  * naming the RDDs (the leaked entries are dropped first, so later
+  * suites start clean). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession =
     graft.core.Session.builder(4).appName("graft-test").getOrCreate()
@@ -21,6 +25,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.getPersistentRDDs.collect {
       case (id, rdd) if !persistedAtStart(id) => id -> String.valueOf(rdd.name)
     }.toMap
+
+  /** Jobs `body` submits, counted by job group through a listener. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "spec-jobs-" + java.util.UUID.randomUUID
+    val n = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      GraftTestBus.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
 
   override def beforeAll(): Unit = {
     super.beforeAll()
