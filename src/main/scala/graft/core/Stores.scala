@@ -79,10 +79,23 @@ object Stores {
     df.repartition(
       math.max(1, math.min(Layout.sessionWidth(df), maxParts)), cols: _*)
 
-  // (dir → (listing stamp, schema, rows)) — see memoRows
-  private val rowMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType,
-             Array[org.apache.spark.sql.Row])]()
+  /** The most directories `memoRows` holds at once: past it the least
+    * recently read entry is dropped (and re-read on its next use). */
+  private[graft] val MemoDirs = 64
+
+  // (dir → (listing stamp, schema, rows)) in access order — see
+  // memoRows; every access holds the map's lock
+  private val rowMemo = new java.util.LinkedHashMap[
+      String, (String, org.apache.spark.sql.types.StructType,
+               Array[org.apache.spark.sql.Row])](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, (String,
+        org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]): Boolean =
+      size() > MemoDirs
+  }
+
+  /** Whether `memoRows` holds `dir` right now. */
+  private[graft] def memoHolds(dir: String): Boolean =
+    rowMemo.synchronized(rowMemo.containsKey(dir))
 
   private def listingStamp(spark: SparkSession, dir: String): String = {
     val p = new Path(dir)
@@ -100,19 +113,20 @@ object Stores {
     * then cost three filesystem calls instead of 2-3 Spark jobs each
     * (the round-14 job profile: meta bookkeeping was ~a third of the
     * per-batch actions in every store gate). Statistics-sized dirs
-    * only — the rows live on the driver for the JVM's lifetime. */
+    * only — the rows stay on the driver until `MemoDirs` more recently
+    * read dirs push them out. */
   def memoRows(spark: SparkSession, dir: String)
       : (org.apache.spark.sql.types.StructType,
          Array[org.apache.spark.sql.Row]) = {
     val stamp = listingStamp(spark, dir)
-    val hit = rowMemo.get(dir)
+    val hit = rowMemo.synchronized(rowMemo.get(dir))
     // clone on every return: the memo'd array must never alias a
     // caller's copy (an in-place sort would silently corrupt every
     // later read of the cached entry)
     if (hit != null && hit._1 == stamp) return (hit._2, hit._3.clone())
     val df = spark.read.parquet(dir)
     val rows = df.collect()
-    rowMemo.put(dir, (stamp, df.schema, rows))
+    rowMemo.synchronized(rowMemo.put(dir, (stamp, df.schema, rows)))
     (df.schema, rows.clone())
   }
 

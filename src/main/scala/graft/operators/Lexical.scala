@@ -104,7 +104,7 @@ object Lexical {
   }
 
   /** Append a batch of NEW documents — O(batch), independent of the
-    * store size (the `ivfAppendSave` contract for text). `batchId`
+    * store size (the `Similarity.appendSave` contract for text). `batchId`
     * keys the stats row so an at-least-once replay of the same batch
     * collapses exactly; streaming passes the micro-batch id. */
   def lexAppendSave(spark: SparkSession, path: String, batch: DataFrame,

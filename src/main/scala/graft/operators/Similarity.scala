@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.core.Scoped
 
 /** Similarity search over an embedding column (`Array[Float]`, 64-dim).
@@ -108,8 +109,10 @@ object Similarity {
     * repeatedly with `ivfSearch` — the FAISS usage pattern that
     * amortizes the KMeans fit, which otherwise dominates every call
     * (q56's per-call fit is ~5× the search cost at bench scale).
-    * Release with `release()` when done. */
-  final case class IvfIndex(centroids: DataFrame, assigned: DataFrame, nList: Int) {
+    * Release with `release()` when done. The centroids are `(list_id,
+    * centroid)` driver rows — nList rows of metadata. */
+  final case class IvfIndex(centroids: Array[(Int, Array[Double])], assigned: DataFrame,
+                            nList: Int) {
     def release(): Unit = assigned.unpersist(blocking = false)
   }
 
@@ -230,12 +233,6 @@ object Similarity {
       concat(e, array(lit(1.0d))), aug, cents.map(_._1), dim + 1, 1))
   }
 
-  /** A centroid frame `(list_id, centroid)` as driver rows, list order. */
-  private def centroidRows(centroids: DataFrame): Array[(Int, Array[Double])] =
-    centroids.select(col("list_id").cast("int").as("list_id"), col("centroid"))
-      .collect().sortBy(_.getInt(0))
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-
   /** The IVF coarse layer shared by the float and PQ builds: fit the
     * centroids on `base` (`vec_id`, `e`) and tag every row with its
     * `list_id`. See `ivfBuild` for the two fits. */
@@ -272,18 +269,18 @@ object Similarity {
     * access pattern (list-id shuffle happens once, at first search). */
   def ivfBuild(corpus: DataFrame, nList: Int = 8,
                sampleFit: Boolean = false): IvfIndex = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-    val (cents, listed) = coarseLists(base, nList, sampleFit)
-    val assigned = listed
+    val (cents, listed) = coarseLists(vecE(corpus)
+      .withColumn("nrm", sqrt(dot(col("e"), col("e")))), nList, sampleFit)
+    IvfIndex(cents, listed
       .select(col("vec_id").as("vid"), col("e").as("ce"), col("nrm").as("cn"),
         col("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    IvfIndex(cents.map { case (i, c) => (i, c.toSeq) }.toSeq.toDF("list_id", "centroid"),
-      assigned, nList)
+      .persist(MEMORY_AND_DISK), nList)
   }
+
+  /** `(vec_id, e)`: the vector promoted to double — every build,
+    * append and ADC query starts here. */
+  private def vecE(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
 
   /** How an IVF index stores its list rows — float `ce`, SQ8 `qc` or
     * 1-bit sign `bc` — decided in ONE place (`ListCodec.of`) from the
@@ -338,27 +335,183 @@ object Similarity {
     def of(index: IvfIndex): ListCodec = of(index.assigned.columns.toSeq)
   }
 
+  /** The metadata tables a saved store keeps beside its data rows:
+    * `centroids/` (list_id, centroid), `books/` (j, c, cent — one row
+    * per subspace-j, code-c centroid, m·kSub rows) and `rot/` (i, row
+    * — the row-major dim×dim OPQ rotation). Each table has one writer
+    * (driver rows to one parquet file) and one reader, which goes
+    * through `Stores.memoRows`: re-reading an unchanged table costs a
+    * directory listing, not a Spark job. */
+  private def writeMeta(rows: DataFrame, dir: String): Unit =
+    rows.coalesce(1).write.mode("overwrite").parquet(dir)
+
+  private def saveCentroids(spark: SparkSession, cents: Array[(Int, Array[Double])],
+                            path: String): Unit = {
+    import spark.implicits._
+    writeMeta(cents.map { case (i, c) => (i, c.toSeq) }.toSeq.toDF("list_id", "centroid"),
+      s"$path/centroids")
+  }
+
+  /** The coarse centroids as driver rows, list order. */
+  private def loadCentroids(spark: SparkSession, path: String): Array[(Int, Array[Double])] =
+    graft.core.Stores.memoRows(spark, s"$path/centroids")._2
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+
+  private def saveBooks(spark: SparkSession, books: Array[Array[Array[Double]]],
+                        path: String): Unit = {
+    import spark.implicits._
+    val rows = for {
+      (book, j) <- books.zipWithIndex
+      (cent, c) <- book.zipWithIndex
+    } yield (j, c, cent.toSeq)
+    writeMeta(rows.toSeq.toDF("j", "c", "cent"), s"$path/books")
+  }
+
+  /** The codebooks and their subspace width. */
+  private def loadBooks(spark: SparkSession,
+                        path: String): (Array[Array[Array[Double]]], Int) = {
+    val rows = graft.core.Stores.memoRows(spark, s"$path/books")._2
+    val books = Array.tabulate(rows.map(_.getInt(0)).max + 1) { j =>
+      rows.filter(_.getInt(0) == j).sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)
+    }
+    (books, books(0)(0).length)
+  }
+
+  private def saveRot(spark: SparkSession, rot: Array[Double], d: Int, path: String): Unit = {
+    import spark.implicits._
+    writeMeta((0 until d).map(i => (i, rot.slice(i * d, (i + 1) * d).toSeq)).toDF("i", "row"),
+      s"$path/rot")
+  }
+
+  private def loadRot(spark: SparkSession, path: String): Array[Double] =
+    graft.core.Stores.memoRows(spark, s"$path/rot")._2
+      .sortBy(_.getInt(0)).flatMap(_.getSeq[Double](1))
+
+  /** Write a store's data rows (`assigned/`, `codes/`, `bincodes/`).
+    * Rows with a `list_id` are partitioned by it, whole lists clustered
+    * into tasks first: without that every scan partition writes a
+    * sliver into every list directory — up to partitions×nList files,
+    * and with maintenance scaling nList to the store, save and append
+    * cost turned superlinear (the 336 s rebalance of the round-8 sf10
+    * campaign was mostly this). One balanced shuffle → one file per
+    * touched list; a reloaded search's probe join then prunes to the
+    * probed lists' files at the scan. */
+  private def writeRows(rows: DataFrame, dir: String, mode: String): Unit =
+    if (rows.columns.contains("list_id"))
+      graft.core.Stores.writeLayout(rows, col("list_id")).write.mode(mode)
+        .partitionBy("list_id").parquet(dir)
+    else rows.write.mode(mode).parquet(dir)
+
   /** Every saved-store layout, told apart by its directory shape in ONE
-    * place (`StoreLayout.at`): `assigned/` = IVF (float, SQ8 or 1-bit
-    * lists — the `Ivf` case carries the list frame it read, so its
-    * codec costs no second scan); `rot/` + `centroids/` = OPQ,IVF,PQ;
-    * `books/` + `centroids/` = IVF,PQ; `books/` + `rot/` = flat OPQ;
-    * `books/` alone = flat PQ; `bincodes/` = flat 1-bit. */
-  private[graft] sealed trait StoreLayout
+    * place (`StoreLayout.at`), and the one store module: each case owns
+    * its directory set and can `append` a batch under the store's
+    * frozen quantizer, `open` it as a scoped search and `compact` its
+    * data rows. `assigned/` = IVF (float, SQ8 or 1-bit lists — the `Ivf`
+    * case carries the list frame it read, so its codec costs no second
+    * scan); `books/` = the PQ family (`rot/` adds the OPQ rotation,
+    * `centroids/` the IVF coarse layer); `bincodes/` = flat 1-bit. */
+  private[graft] sealed abstract class StoreLayout(data: String, listed: Boolean) {
+    /** Append `(vec_id, embedding)` rows: assigned and encoded against
+      * the saved (frozen) quantizer — metadata reads only, no data scan,
+      * O(batch) whatever the store size. */
+    def append(spark: SparkSession, path: String, vecs: DataFrame): Unit
+
+    /** The store loaded as a search `(queries, k, probe rule) → (qid,
+      * rnk, vid)`; the scope releases what loading persisted. */
+    def open(spark: SparkSession, path: String): Scoped[StoreLayout.Search]
+
+    /** Offline compaction: drop the duplicate vid rows an at-least-once
+      * replay appends. A replayed batch re-lands bit-identically under
+      * the frozen quantizer (same list, same codes), so any survivor is
+      * the row; searches already tolerate the duplicates, this reclaims
+      * the space. Keeps the `list_id` partitioning; staged swap, run
+      * offline (`core.Stores.rewriteDeduped`). Returns rows after. */
+    def compact(spark: SparkSession, path: String): Long =
+      graft.core.Stores.rewriteDeduped(spark, s"$path/$data", Seq("vid"),
+        if (listed) Seq("list_id") else Nil)
+  }
 
   private[graft] object StoreLayout {
-    final case class Ivf(codec: ListCodec, lists: DataFrame) extends StoreLayout
-    case object OpqIvfPq extends StoreLayout
-    case object IvfPq extends StoreLayout
-    case object FlatOpq extends StoreLayout
-    case object FlatPq extends StoreLayout
-    case object FlatBin extends StoreLayout
+    type Search = (DataFrame, Int, Int => Int) => DataFrame
+
+    final case class Ivf(codec: ListCodec, lists: DataFrame)
+        extends StoreLayout("assigned", listed = true) {
+      /** One memoized centroid read plus a lazy scan over the assigned
+        * lists (persisted, like `ivfBuild`'s: a search probes it). */
+      def load(spark: SparkSession, path: String): IvfIndex = {
+        val cents = loadCentroids(spark, path)
+        // partitionBy moved list_id to the end and widened it; restore the
+        // build-time column order and type so the index forms are
+        // interchangeable frame-for-frame
+        IvfIndex(cents, lists
+          .select(codec.payload.map(col) :+ col("list_id").cast("int").as("list_id"): _*)
+          .persist(MEMORY_AND_DISK), cents.length)
+      }
+
+      def append(spark: SparkSession, path: String, vecs: DataFrame): Unit =
+        writeRows(assignToLists(loadCentroids(spark, path), vecs, codec),
+          s"$path/assigned", "append")
+
+      def open(spark: SparkSession, path: String): Scoped[Search] = {
+        val idx = load(spark, path)
+        Scoped(idx)(idx.release()).map[Search](idx => (q, k, probes) => {
+          if (codec == ListCodec.Bin) requireBinDim(idx.assigned, q, path)
+          probeSearch(idx, codec, q, k, probes(idx.nList))
+        })
+      }
+    }
+
+    final case class Pq(rotated: Boolean, listed: Boolean)
+        extends StoreLayout("codes", listed) {
+      /** Books, rotation and centroids: metadata reads only. */
+      def tables(spark: SparkSession, path: String) =
+        (loadBooks(spark, path), if (rotated) Some(loadRot(spark, path)) else None,
+          if (listed) Some(loadCentroids(spark, path)) else None)
+
+      /** The metadata plus a lazy, persisted scan of the codes. */
+      def load(spark: SparkSession, path: String): PqIndex = {
+        val ((books, sub), rot, cents) = tables(spark, path)
+        val coded = spark.read.parquet(s"$path/codes")
+          .select(Seq(col("vid"), col("codes")) ++
+            cents.map(_ => col("list_id").cast("int").as("list_id")): _*)
+          .persist(MEMORY_AND_DISK)
+        PqIndex(books, sub, coded, rot, cents)
+      }
+
+      // the batch rides the frozen rotation, then lands in its nearest
+      // frozen list (`nearestList`, the build's own metric and tie order)
+      // encoded with the frozen books
+      def append(spark: SparkSession, path: String, vecs: DataFrame): Unit = {
+        val ((books, sub), rot, cents) = tables(spark, path)
+        writeRows(vecE(inSpace(vecs, rot)).select(Seq(col("vec_id").as("vid"),
+            pqEncode(books, sub)) ++ cents.map(nearestList(col("e"), _).as("list_id")): _*),
+          s"$path/codes", "append")
+      }
+
+      def open(spark: SparkSession, path: String): Scoped[Search] = {
+        val idx = load(spark, path)
+        Scoped(idx)(idx.release()).map[Search](idx =>
+          (q, k, probes) => pqSearch(idx, q, k, probes(idx.nList)))
+      }
+    }
+
+    case object FlatBin extends StoreLayout("bincodes", listed = false) {
+      def append(spark: SparkSession, path: String, vecs: DataFrame): Unit =
+        writeRows(binCodes(vecs), s"$path/bincodes", "append")
+
+      def open(spark: SparkSession, path: String): Scoped[Search] = {
+        val idx = binLoad(spark, path)
+        Scoped(idx)(idx.release()).map[Search](idx => (q, k, _) => {
+          requireBinDim(idx.coded, q, path)
+          binSearch(idx, q, k)
+        })
+      }
+    }
 
     /** The layout saved at `path`; None when no save wrote it. Hadoop
       * FS, not java.io: stores live on the cluster filesystem
       * (HDFS/object store) in production. */
-    def at(spark: org.apache.spark.sql.SparkSession,
-           path: String): Option[StoreLayout] = {
+    def at(spark: SparkSession, path: String): Option[StoreLayout] = {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val has = (d: String) => fs.exists(new org.apache.hadoop.fs.Path(root, d))
@@ -366,24 +519,59 @@ object Similarity {
         val lists = spark.read.parquet(s"$path/assigned")
         Some(Ivf(ListCodec.of(lists.columns.toSeq), lists))
       }
-      else if (has("rot") && has("centroids")) Some(OpqIvfPq)
-      else if (has("books") && has("centroids")) Some(IvfPq)
-      else if (has("books") && has("rot")) Some(FlatOpq)
-      else if (has("books")) Some(FlatPq)
+      else if (has("rot") && has("centroids")) Some(Pq(rotated = true, listed = true))
+      else if (has("books") && has("centroids")) Some(Pq(rotated = false, listed = true))
+      else if (has("books") && has("rot")) Some(Pq(rotated = true, listed = false))
+      else if (has("books")) Some(Pq(rotated = false, listed = false))
       else if (has("bincodes")) Some(FlatBin)
       else None
     }
-  }
 
-  /** The IVF layout at `path`; any other directory is rejected. */
-  private def ivfLayout(spark: org.apache.spark.sql.SparkSession,
-                        path: String): StoreLayout.Ivf =
-    StoreLayout.at(spark, path) match {
-      case Some(ivf: StoreLayout.Ivf) => ivf
+    /** The layout at `path`; a directory no save wrote is rejected. */
+    def of(spark: SparkSession, path: String): StoreLayout =
+      at(spark, path).getOrElse(throw new IllegalArgumentException(
+        s"$path is not an ivfSave/ivfPqSave/ivfOpqSave/opqSave/pqSave/binSave store"))
+
+    def ivf(spark: SparkSession, path: String): Ivf = at(spark, path) match {
+      case Some(ivf: Ivf) => ivf
       case _ => throw new IllegalArgumentException(
         s"$path is not an ivfSave store (expected an assigned/ directory)")
     }
 
+    def pq(spark: SparkSession, path: String): Pq = at(spark, path) match {
+      case Some(pq: Pq) => pq
+      case _ => throw new IllegalArgumentException(
+        s"$path is not a pqSave store (expected a books/ directory)")
+    }
+
+    /** A code store: any layout but the IVF lists `ivfCompact` owns. */
+    def codes(spark: SparkSession, path: String): StoreLayout = at(spark, path) match {
+      case Some(_: Ivf) => throw new IllegalArgumentException(
+        s"$path holds an IVF 'assigned/' list store — use ivfCompact")
+      case Some(layout) => layout
+      case None => throw new IllegalArgumentException(
+        s"$path is not a pqSave/opqSave/ivfPqSave/ivfOpqSave/binSave code store " +
+          "(expected a codes/ or bincodes/ directory)")
+    }
+  }
+
+  /** BinHamming min-clamps mismatched code lengths (the DotProduct
+    * discipline), so a query dim that differs from the store's code
+    * width would yield a truncated-but-plausible ranking with no error
+    * anywhere — a misconfiguration on any serving path, so fail loudly
+    * before searching. One limit-1 scan per side; skipped when either
+    * side is empty. */
+  private def requireBinDim(codes: DataFrame, queries: DataFrame, path: String): Unit = {
+    val storeLen = codes.select(length(col("bc"))).limit(1).collect()
+    val qDim = queries.select(size(col("embedding"))).limit(1).collect()
+    if (storeLen.nonEmpty && qDim.nonEmpty) {
+      val (sl, qd) = (storeLen(0).getInt(0), qDim(0).getInt(0))
+      require((qd + 7) / 8 == sl,
+        s"query embedding dim $qd encodes to ${(qd + 7) / 8}-byte sign " +
+          s"codes but the store at $path holds $sl-byte codes — " +
+          "store/query dimensionality mismatch")
+    }
+  }
   /** The one probe-count rule: with `scanFrac` (in (0, 1], checked
     * when the rule is made) a search probes ⌈nList·scanFrac⌉ lists, at
     * least one, of whatever nList the index has; without it, the fixed
@@ -440,7 +628,7 @@ object Similarity {
     * must not move a single rank: q167 hash-matches q108's oracle.
     * Result is bounded at queries×k rows — localized so both loaded
     * stores release deterministically. */
-  def rrfFusionStores(spark: org.apache.spark.sql.SparkSession,
+  def rrfFusionStores(spark: SparkSession,
                       vecPath: String, lexPath: String, queries: DataFrame,
                       terms: Seq[String], k: Int): DataFrame = {
     val idx = ivfLoad(spark, vecPath)
@@ -475,49 +663,21 @@ object Similarity {
     Scoped(res)(idx.release())
   }
 
-  /** Persist a trained IVF index as two parquet tables (`centroids/`,
-    * `assigned/`) so later sessions can search without re-running the
-    * KMeans fit — the FAISS write_index/read_index lifecycle. The
-    * assigned lists are written partitioned by `list_id`: a reloaded
-    * search's probe join then prunes to the probed lists' files at the
-    * scan (partition pruning), which is what makes the on-disk index an
-    * INDEX rather than a copy of the corpus. */
+  /** Persist a trained IVF index: `centroids/` plus the `assigned/`
+    * lists partitioned by `list_id` (`writeRows`), so later sessions
+    * search without re-running the KMeans fit — the FAISS
+    * write_index/read_index lifecycle, and an INDEX on disk rather than
+    * a copy of the corpus. Float, SQ8 and 1-bit lists all round-trip. */
   def ivfSave(index: IvfIndex, path: String): Unit = {
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    // cluster whole lists into tasks before the partitioned write:
-    // without it every scan partition writes a sliver into every list
-    // directory — up to partitions×nList files — and with maintenance
-    // scaling nList to the store, save + first-list cost turned
-    // superlinear (the 336 s rebalance measured in the round-8 sf10
-    // campaign was mostly this). One balanced shuffle → nList files.
-    graft.core.Stores.writeLayout(index.assigned, col("list_id"))
-      .write.mode("overwrite")
-      .partitionBy("list_id").parquet(s"$path/assigned")
+    saveCentroids(index.assigned.sparkSession, index.centroids, path)
+    writeRows(index.assigned, s"$path/assigned", "overwrite")
   }
 
-  /** Rebuild an index from `ivfSave` output: no fit, no assignment —
-    * one small centroid read plus a lazy scan over the assigned lists
-    * (persisted, like `ivfBuild`'s, because a search probes it twice
-    * per query batch at most once-materialized). Search-after-reload
-    * equals search-after-build (`SimilaritySpec` pins it). Float, SQ8
-    * and 1-bit lists all round-trip through the same save/load. */
-  def ivfLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
-    ivfOpen(spark, path, ivfLayout(spark, path))
-
-  /** `ivfLoad` over an already-detected IVF layout (its list frame is
-    * read once, by the detection). */
-  private[graft] def ivfOpen(spark: org.apache.spark.sql.SparkSession, path: String,
-                             ivf: StoreLayout.Ivf): IvfIndex = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val nList = cents.count().toInt
-    val assigned = ivf.lists
-      // partitionBy moved list_id to the end and widened it; restore the
-      // build-time column order and type so the index forms are
-      // interchangeable frame-for-frame
-      .select(ivf.codec.payload.map(col) :+ col("list_id").cast("int").as("list_id"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    IvfIndex(cents, assigned, nList)
-  }
+  /** Rebuild an index from `ivfSave` output: no fit, no assignment
+    * (`StoreLayout.Ivf.load`). Search-after-reload equals
+    * search-after-build (`SimilaritySpec` pins it). */
+  def ivfLoad(spark: SparkSession, path: String): IvfIndex =
+    StoreLayout.ivf(spark, path).load(spark, path)
 
   /** Assign NEW vectors to an existing index's lists without refitting
     * the quantizer — the FAISS `index.add()` analog and the vector half
@@ -531,112 +691,80 @@ object Similarity {
     * the only data motion is the new batch. */
   def ivfAppend(index: IvfIndex, newVecs: DataFrame): IvfIndex = {
     val merged = index.assigned.unionByName(assignToLists(
-        centroidRows(index.centroids), newVecs, ListCodec.of(index)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        index.centroids, newVecs, ListCodec.of(index)))
+      .persist(MEMORY_AND_DISK)
     merged.count()
     index.release()
     IvfIndex(index.centroids, merged, index.nList)
   }
 
-  /** Append new vectors to an `ivfSave`d index ON DISK: assign against
-    * the saved centroids (read, broadcast — no list scan at all) and
-    * append the new rows to the partitioned list store. A subsequent
-    * `ivfLoad` sees the union; per-batch cost is O(batch), independent
-    * of the store size — the `IngestDedup.processBatch` contract for
-    * vectors. */
-  def ivfAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newVecs: DataFrame): Unit =
-    ivfAppendAs(spark, path, newVecs, ivfLayout(spark, path).codec)
+  /** Append new vectors to whatever store is saved at `path`, ON DISK,
+    * under its frozen quantizer (`StoreLayout.append`): IVF lists
+    * re-encoded in the store's own codec, PQ codes through the saved
+    * rotation, lists and books, sign codes as they are. A later load
+    * sees the union; per-batch cost is O(batch), independent of the
+    * store size — the `IngestDedup.processBatch` contract for vectors. */
+  def appendSave(spark: SparkSession, path: String, newVecs: DataFrame): Unit =
+    StoreLayout.of(spark, path).append(spark, path, newVecs)
 
-  /** `ivfAppendSave` with the store's list codec already known. */
-  private[graft] def ivfAppendAs(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, newVecs: DataFrame,
-                                 codec: ListCodec): Unit =
-    assignToLists(centroidRows(spark.read.parquet(s"$path/centroids")),
-        newVecs, codec)
-      // one file per touched list, not per task (pinned width)
-      .transform(graft.core.Stores.writeLayout(_, col("list_id")))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/assigned")
+  /** Offline compaction of an `ivfSave`d list store
+    * (`StoreLayout.compact`). */
+  def ivfCompact(spark: SparkSession, path: String): Long =
+    StoreLayout.ivf(spark, path).compact(spark, path)
 
-  /** Offline compaction of an `ivfSave`d list store: drop the
-    * duplicate vid rows an at-least-once replay appends (frozen
-    * centroids ⇒ a replayed vector re-lands bit-identically in the
-    * same list, so any survivor is the row). Searches already tolerate
-    * the duplicates — this reclaims the space and keeps list scans
-    * proportional to the true corpus. Returns rows after compaction;
-    * run offline (the `core.Stores.rewriteDeduped` swap contract). */
-  def ivfCompact(spark: org.apache.spark.sql.SparkSession,
-                 path: String): Long =
-    graft.core.Stores.rewriteDeduped(spark, s"$path/assigned",
-      Seq("vid"), Seq("list_id"))
+  /** The same compaction for the code stores the at-least-once ingest
+    * can duplicate: flat PQ/OPQ `codes/`, IVF,PQ and OPQ,IVF,PQ
+    * `codes/` (list_id-partitioned) and the binary `bincodes/`. IVF
+    * list stores and unrecognized directories are rejected by name
+    * instead of surfacing a raw path-not-found mid-rewrite. */
+  def codesCompact(spark: SparkSession, path: String): Long =
+    StoreLayout.codes(spark, path).compact(spark, path)
 
-  /** Offline compaction for the CODE stores the at-least-once ingest
-    * can duplicate (`ivfCompact` covers the `assigned/` layouts):
-    * flat PQ/OPQ `codes/`, IVF,PQ and OPQ,IVF,PQ `codes/`
-    * (list_id-partitioned), and the binary `bincodes/`. A replayed
-    * batch re-encodes bit-identically under the frozen
-    * books/rotation/sign patterns, so any survivor is the row —
-    * same staged-swap semantics as the rest of the compaction
-    * family (`core.Stores.rewriteDeduped`). Returns rows after
-    * compaction. */
-  def codesCompact(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Long = {
-    import graft.core.Stores.rewriteDeduped
-    // reject unrecognized layouts explicitly instead of surfacing a
-    // raw path-not-found mid-rewrite on a typo or an IVF store
-    StoreLayout.at(spark, path) match {
-      case Some(StoreLayout.FlatBin) =>
-        rewriteDeduped(spark, s"$path/bincodes", Seq("vid"))
-      case Some(_: StoreLayout.Ivf) => throw new IllegalArgumentException(
-        s"$path holds an IVF 'assigned/' list store — use ivfCompact")
-      case Some(StoreLayout.IvfPq | StoreLayout.OpqIvfPq) =>
-        rewriteDeduped(spark, s"$path/codes", Seq("vid"), Seq("list_id"))
-      case Some(_) => rewriteDeduped(spark, s"$path/codes", Seq("vid"))
-      case None => throw new IllegalArgumentException(
-        s"$path is not a pqSave/opqSave/ivfPqSave/ivfOpqSave/binSave code store " +
-          "(expected a codes/ or bincodes/ directory)")
-    }
-  }
-
-  /** Per-list occupancy of an IVF index, INCLUDING empty lists — a
-    * drift-skewed index typically pairs one swollen list with several
-    * starved ones, and the starved ones vanish from a bare groupBy.
-    * One hash aggregation over the lists + a left join from the
-    * broadcast-sized centroid table. */
-  def ivfListStats(index: IvfIndex): DataFrame = {
-    val counts = index.assigned.groupBy("list_id")
+  /** Per-list occupancy of `lists` (any frame with a `list_id`) over
+    * the list ids `ids`, INCLUDING empty lists — a drift-skewed index
+    * typically pairs one swollen list with several starved ones, and
+    * the starved ones vanish from a bare groupBy. One hash aggregation
+    * (on a saved store the partition column IS the group key, so the
+    * scan never materializes payloads) + a left join from the ids. */
+  private def listStats(lists: DataFrame, ids: Seq[Int]): DataFrame = {
+    val spark = lists.sparkSession
+    import spark.implicits._
+    val counts = lists.groupBy(col("list_id").cast("int").as("list_id"))
       .agg(count(lit(1)).as("n_vecs"))
-    index.centroids.select("list_id").join(counts, Seq("list_id"), "left")
+    ids.toDF("list_id").join(counts, Seq("list_id"), "left")
       .select(col("list_id"), coalesce(col("n_vecs"), lit(0L)).as("n_vecs"))
       .orderBy("list_id")
   }
 
-  /** Occupancy skew: max list size over mean list size (1.0 = perfectly
-    * balanced, nList = everything in one list). Probe cost per query
-    * tracks the probed lists' sizes, so skew S means worst-case probes
-    * scan ~S× what the balanced N·scanFrac cost model assumes — the
-    * operational signal to retrain. One nList-row aggregation. */
-  def ivfSkew(index: IvfIndex): Double = {
-    val r = ivfListStats(index)
-      .agg(max(col("n_vecs")).as("mx"), sum(col("n_vecs")).as("tot")).head()
-    if (r.isNullAt(1) || r.getLong(1) == 0L) 1.0
-    else r.getLong(0).toDouble / (r.getLong(1).toDouble / index.nList)
+  /** (skew, total rows) of a `listStats` frame over `nList` lists —
+    * one nList-row aggregation. Skew is max list size over mean list
+    * size (1.0 = perfectly balanced, nList = everything in one list). */
+  private def occupancy(stats: DataFrame, nList: Int): (Double, Long) = {
+    val r = stats.agg(max(col("n_vecs")), sum(col("n_vecs"))).head()
+    val total = if (r.isNullAt(1)) 0L else r.getLong(1)
+    (if (total == 0L) 1.0 else r.getLong(0).toDouble / (total.toDouble / nList), total)
   }
 
-  /** Reconstruct `(vec_id, embedding)` from an index's stored truth:
-    * float lists return their vectors verbatim; SQ8 lists dequantize
-    * `scale·code` (the codes ARE the store — FAISS likewise retrains a
-    * quantized index on reconstructions). SQ8 round-trips exactly:
-    * the max-magnitude code is ±127 by construction, so re-encoding a
-    * reconstruction regenerates the identical scale and codes
-    * (`IvfRebalanceSpec` pins it bit-for-bit). */
-  def ivfReconstruct(index: IvfIndex): DataFrame =
-    reconstructAssigned(index.assigned)
+  /** Per-list occupancy of an IVF index, empty lists included. */
+  def ivfListStats(index: IvfIndex): DataFrame =
+    listStats(index.assigned, index.centroids.map(_._1).toSeq)
 
-  /** Frame-level body of `ivfReconstruct` — also reconstructs gap rows
-    * read straight off a saved store (`ivfReplayGap`), where no
-    * persisted `IvfIndex` exists. */
-  private def reconstructAssigned(assigned: DataFrame): DataFrame = {
+  /** Occupancy skew of an IVF index. Probe cost per query tracks the
+    * probed lists' sizes, so skew S means worst-case probes scan ~S×
+    * what the balanced N·scanFrac cost model assumes — the operational
+    * signal to retrain. */
+  def ivfSkew(index: IvfIndex): Double = occupancy(ivfListStats(index), index.nList)._1
+
+  /** Reconstruct `(vec_id, embedding)` from an index's stored truth
+    * (its `assigned` lists, or gap rows read straight off a saved
+    * store by `ivfReplayGap`): float lists return their vectors
+    * verbatim; SQ8 lists dequantize `scale·code` (the codes ARE the
+    * store — FAISS likewise retrains a quantized index on
+    * reconstructions). SQ8 round-trips exactly: the max-magnitude code
+    * is ±127 by construction, so re-encoding a reconstruction
+    * regenerates the identical scale and codes (`IvfRebalanceSpec`
+    * pins it bit-for-bit). */
+  private def reconstruct(assigned: DataFrame): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val codec = ListCodec.of(assigned.columns.toSeq)
@@ -661,21 +789,21 @@ object Similarity {
     * rebuild's `ivfLoad` snapshot) is reconstructed from the old
     * store's own truth (float rows verbatim; SQ8 dequantized — exact
     * round-trip, `IvfRebalanceSpec`) and appended to the new
-    * generation via `ivfAppendSave`. Idempotent (anti-join by vid;
+    * generation via `appendSave`. Idempotent (anti-join by vid;
     * replay duplicates collapse first), so the supervisor can call it
     * again at reader-swap time to close the post-rebuild tail. Cost:
     * one vid anti-join over the old lists + O(gap) assignment —
     * never a quantizer refit. Returns the number of replayed
     * vectors. */
-  def ivfReplayGap(spark: org.apache.spark.sql.SparkSession,
+  def ivfReplayGap(spark: SparkSession,
                    srcPath: String, dstPath: String): Long = {
     val src = spark.read.parquet(s"$srcPath/assigned")
     val dstVids = spark.read.parquet(s"$dstPath/assigned").select("vid")
-    val gap = reconstructAssigned(
+    val gap = reconstruct(
         src.join(dstVids, Seq("vid"), "left_anti").dropDuplicates("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val n = gap.count()
-    if (n > 0) ivfAppendSave(spark, dstPath, gap)
+    if (n > 0) appendSave(spark, dstPath, gap)
     gap.unpersist(blocking = false)
     n
   }
@@ -687,7 +815,7 @@ object Similarity {
     * threshold, this refits the coarse quantizer on the index's
     * CURRENT contents and reassigns every vector (same cost as the
     * original build: one bounded KMeans fit + one corpus shuffle).
-    * Works for float and SQ8 indexes alike via `ivfReconstruct`.
+    * Works for float and SQ8 indexes alike via `reconstruct`.
     * Correctness is unchanged by construction — the exhaustive dial
     * (`scanFrac = 1.0` / nProbe = nList) scans every list either way —
     * rebalancing restores the even occupancy the fixed-nProbe cost and
@@ -695,7 +823,7 @@ object Similarity {
   def ivfRebalance(index: IvfIndex, nList: Int = 0,
                    sampleFit: Boolean = false): IvfIndex = {
     val k = if (nList > 0) nList else index.nList
-    val corpus = ivfReconstruct(index)
+    val corpus = reconstruct(index.assigned)
     val rebuilt =
       if (ListCodec.of(index) == ListCodec.Sq8) ivfBuildSq8(corpus, k, sampleFit)
       else ivfBuild(corpus, k, sampleFit)
@@ -714,7 +842,7 @@ object Similarity {
     * write the rebalanced generation to `dstPath` (a NEW path — the
     * offline-compaction swap convention; readers move atomically by
     * switching paths, never observing a half-written store). */
-  def ivfRebalanceSave(spark: org.apache.spark.sql.SparkSession,
+  def ivfRebalanceSave(spark: SparkSession,
                        srcPath: String, dstPath: String,
                        sampleFit: Boolean = false): Unit = {
     require(srcPath != dstPath,
@@ -764,11 +892,10 @@ object Similarity {
     * its `nProbe` nearest lists, joins them on list_id — a plain join,
     * the query side is the small one — and keeps its top `k` by the
     * codec's score. */
-  private[graft] def probeSearch(index: IvfIndex, codec: ListCodec,
-                                 queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
+  private def probeSearch(index: IvfIndex, codec: ListCodec,
+                          queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val q = codec.query(vecFrame(queries, "qid", "qe", "qn"))
-    val probes = probeTopLists(q, "qid" +: codec.qCols,
-      centroidRows(index.centroids), nProbe)
+    val probes = probeTopLists(q, "qid" +: codec.qCols, index.centroids, nProbe)
     rankTop(probes.join(index.assigned, Seq("list_id"))
       .select(col("qid"), col("vid"), codec.score.as("score")), k, codec.by)
   }
@@ -776,7 +903,10 @@ object Similarity {
   /** Search a trained index: each query probes only the `nProbe` lists
     * whose centroids score highest (the centroid matrix rides into
     * codegen — nList rows), candidates shuffle on list id, no cross
-    * join against the corpus.
+    * join against the corpus. Candidates score in the index's own list
+    * codec: float cosine, the int8 dot of SQ8 lists, or the Hamming
+    * distance of 1-bit lists (ascending; distance then vid is the q157
+    * integer ordering, list-scoped).
     *
     * `scanFrac` is the recall-STABLE dial (the one `probeRule`, shared
     * with `knnJoin`): when set, nProbe = max(1, ⌈nList·scanFrac⌉), so the
@@ -790,7 +920,7 @@ object Similarity {
     * the exhaustive dial, bit-equal to brute force. */
   def ivfSearch(index: IvfIndex, queries: DataFrame, k: Int, nProbe: Int = 2,
                 scanFrac: Option[Double] = None): DataFrame =
-    probeSearch(index, ListCodec.Float, queries, k,
+    probeSearch(index, ListCodec.of(index), queries, k,
       probeRule(nProbe, scanFrac)(index.nList))
 
   /** The self-query form every one-shot top-k shares (the q56/q142/
@@ -918,12 +1048,14 @@ object Similarity {
     * the per-row probe scan: a broadcast cross join with the list ids
     * (the dial's only overhead gone; same candidate set, bit-identical
     * result). */
-  private def probeAll(q: DataFrame, keep: Seq[String], nList: Int, nProbe: Int,
-                       listIds: => DataFrame,
-                       cents: => Array[(Int, Array[Double])]): DataFrame =
-    if (nProbe >= nList)
-      q.crossJoin(broadcast(listIds)).select((keep :+ "list_id").map(col): _*)
-    else probeTopLists(q, keep, cents, nProbe)
+  private def probeAll(q: DataFrame, keep: Seq[String], nProbe: Int,
+                       cents: Array[(Int, Array[Double])]): DataFrame =
+    if (nProbe >= cents.length) {
+      val spark = q.sparkSession
+      import spark.implicits._
+      q.crossJoin(broadcast(cents.map(_._1).toSeq.toDF("list_id")))
+        .select((keep :+ "list_id").map(col): _*)
+    } else probeTopLists(q, keep, cents, nProbe)
 
   /** The kNN-join driver behind every `knnJoin*Indexed`: `probes` ⋈
     * `lists` through the salted `shuffle_hash` `candJoin` (the
@@ -960,8 +1092,8 @@ object Similarity {
                            refine: Option[Int]): DataFrame = {
     val n = probeRule(nProbe, scanFrac)(index.nList)
     val q = codec.query(vecFrame(emb, "qid", "qe", "qn"))
-    val probes = probeAll(q, (Seq("qid", "qe", "qn") ++ codec.qCols).distinct,
-      index.nList, n, index.centroids.select("list_id"), centroidRows(index.centroids))
+    val probes = probeAll(q, (Seq("qid", "qe", "qn") ++ codec.qCols).distinct, n,
+      index.centroids)
     knnDriver(emb, probes, index.assigned, index.nList, codec.score, codec.by, k, refine)
   }
 
@@ -1003,10 +1135,10 @@ object Similarity {
     * dims — the `knn_list_bytes` ladder's bottom row), candidates
     * ranked by integer Hamming, and the top pool repaired in float.
     * Sign codes are NOT reconstructible (unlike SQ8), so
-    * `ivfRebalance`/`ivfReconstruct` reject these stores — rebuild
-    * from the source corpus like the PQ tiers. `ivfSave`/`ivfLoad`
-    * round-trip the (vid, bc, list_id) layout; `ivfAppendSave`
-    * encodes appends against the frozen centroids. */
+    * `ivfRebalance` rejects these stores — rebuild from the source
+    * corpus like the PQ tiers. `ivfSave`/`ivfLoad` round-trip the
+    * (vid, bc, list_id) layout; `appendSave` encodes appends against
+    * the frozen centroids; `ivfSearch` ranks by Hamming. */
   def ivfBuildBin(corpus: DataFrame, nList: Int = 8,
                   sampleFit: Boolean = false): IvfIndex =
     ivfBuildAs(corpus, nList, sampleFit, ListCodec.Bin)
@@ -1017,20 +1149,10 @@ object Similarity {
                          codec: ListCodec): IvfIndex = {
     val fl = ivfBuild(corpus, nList, sampleFit)
     val assigned = codec.encode(fl.assigned, "ce")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     assigned.count()
     fl.release()
     IvfIndex(fl.centroids, assigned, fl.nList)
-  }
-
-  /** Probe + Hamming scan over an `ivfBuildBin` index: probe selection
-    * on float centroids, candidate ranking by `BinHamming` (distance
-    * asc, vid asc — the q157 integer ordering, list-scoped). */
-  def ivfSearchBin(index: IvfIndex, queries: DataFrame, k: Int,
-                   nProbe: Int = 2): DataFrame = {
-    require(ListCodec.of(index) == ListCodec.Bin,
-      "ivfSearchBin needs a binary list store (bc column)")
-    probeSearch(index, ListCodec.Bin, queries, k, nProbe)
   }
 
   /** Corpus-wide kNN join over 1-bit lists + float refine — the
@@ -1078,25 +1200,30 @@ object Similarity {
                 targetClusterRows: Long = 256, m: Int = 16,
                 refine: Int = 4, scanFrac: Option[Double] = None,
                 sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val nList = autoK(emb, targetClusterRows, None)
-    val index = ivfPqBuild(emb, nList, m, 256, sampleFit)
+    val index = pqBuild(emb, m, 256, autoK(emb, targetClusterRows, None),
+      sampleFit = sampleFit)
     // the packed lists are materialized eagerly inside Indexed, so the
     // build's array<int> store can drop immediately (the memory story)
     try knnJoinPqIndexed(emb, index, k, nProbe, refine, scanFrac)
     finally index.release()
   }
 
-  /** `knnJoinPq` against a caller-owned IVF,PQ index — the build-once
-    * / join-repeatedly form (`ivfPqBuild` or an `ivfPqLoad`ed store;
-    * the caller releases the index). The returned scope releases only
-    * the internally-`PqPack`ed list frame. Join-after-reload equals
-    * join-after-build (`SimilaritySpec`). */
-  def knnJoinPqIndexed(emb: DataFrame, index: IvfPqIndex, k: Int,
+  /** `knnJoinPq` against a caller-owned IVF,PQ or OPQ,IVF,PQ index —
+    * the build-once / join-repeatedly form (`pqBuild` with `nList > 0`
+    * or a `pqLoad`ed store; the caller releases the index). Behind a
+    * rotation the probe side rides it first (one codegen `MatVec` per
+    * row) and everything else runs unchanged in rotated space; the
+    * rotation is orthonormal, so the refine cosines are the same
+    * quantities as the un-rotated path. The returned scope releases
+    * only the internally-`PqPack`ed list frame. Join-after-reload
+    * equals join-after-build (`SimilaritySpec`). */
+  def knnJoinPqIndexed(emb: DataFrame, index: PqIndex, k: Int,
                        nProbe: Int = 2, refine: Int = 4,
                        scanFrac: Option[Double] = None): Scoped[DataFrame] = {
     import graft.functions.Pq
-    val spark = emb.sparkSession
-    import spark.implicits._
+    val cents = index.centroids.getOrElse(throw new IllegalArgumentException(
+      "knnJoinPqIndexed needs an IVF coarse layer (pqBuild with nList > 0)"))
+    val rotated = inSpace(emb, index.rot)
     val n = probeRule(nProbe, scanFrac)(index.nList)
     val flat = index.books.flatMap(_.flatMap(_.toSeq))
     val ks = index.books.map(_.length)
@@ -1107,12 +1234,11 @@ object Similarity {
     // (4 B/code in UnsafeRow) right after this returns
     val packed = index.coded
       .select(col("vid"), col("list_id"), Pq.pack(col("codes")).as("pc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     Scoped(packed)(packed.unpersist(blocking = false)).map { packed =>
       packed.count()
-      val q = vecFrame(emb, "qid", "qe", "qn")
-      val probes = probeAll(q, q.columns.toSeq, index.nList, n,
-        index.centroids.map(_._1).toSeq.toDF("list_id"), index.centroids)
+      val q = vecFrame(rotated, "qid", "qe", "qn")
+      val probes = probeAll(q, q.columns.toSeq, n, cents)
       // candidates decode in the scan pipeline: the store stays bytes.
       // The packed frame is TINY (m B/vector) so the static planner
       // wants to broadcast it — but this join fans out to
@@ -1124,7 +1250,7 @@ object Similarity {
       val cand = packed
         .withColumn("cd", Pq.decodeBytes(col("pc"), flat, ks, index.sub))
         .withColumn("cnd", sqrt(dot(col("cd"), col("cd"))))
-      knnDriver(emb, probes, cand, index.nList, cosine("qe", "qn", "cd", "cnd"),
+      knnDriver(rotated, probes, cand, index.nList, cosine("qe", "qn", "cd", "cnd"),
         col("score").desc, k, Some(refine))
     }
   }
@@ -1147,104 +1273,20 @@ object Similarity {
                  refine: Int = 4, iters: Int = 8,
                  scanFrac: Option[Double] = None,
                  sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val nList = autoK(emb, targetClusterRows, None)
-    val index = ivfOpqBuild(emb, nList, m, 256, iters, sampleFit)
+    val index = pqBuild(emb, m, 256, autoK(emb, targetClusterRows, None),
+      opq = true, iters = iters, sampleFit = sampleFit)
     // like the PQ rung: the Indexed form packs eagerly, so the build's
     // array<int> codes can drop now (the memory story)
-    try knnJoinOpqIndexed(emb, index, k, nProbe, refine, scanFrac)
+    try knnJoinPqIndexed(emb, index, k, nProbe, refine, scanFrac)
     finally index.release()
   }
 
-  /** A built OPQ,IVF,PQ composite — the caller-owned form behind
-    * `knnJoinOpqIndexed`/`ivfOpqSearch`: the orthonormal pretransform
-    * (row-major dim×dim, driver-held metadata) plus the `IvfPqIndex`
-    * fit on the ROTATED corpus, so centroids, codebooks and codes all
-    * live in rotated space and every query/batch rides the same
-    * `MatVec` before touching them. */
-  final case class IvfOpqIndex(rot: Array[Double], dim: Int, pq: IvfPqIndex) {
-    def release(): Unit = pq.release()
-  }
-
-  /** Fit rotation + coarse lists + codebooks once (the FAISS
-    * `OPQ{m},IVF{nList},PQ{m}` factory string): the `opqFitLocal`
-    * alternation on a bounded driver sample yields the rotation, then
-    * `ivfPqBuild` refits coarse centroids AND codebooks on the rotated
-    * corpus (the alternation's books are only its fitting scaffold). */
-  def ivfOpqBuild(corpus: DataFrame, nList: Int = 8, m: Int = 16,
-                  kSub: Int = 256, iters: Int = 8,
-                  sampleFit: Boolean = false): IvfOpqIndex = {
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val dim = base.select(size(col("e"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val (rot, _) = opqFitLocal(pqSamplePoints(base), m, kSub, dim / m, iters)
-    val rotated = base.select(col("vec_id"),
-      graft.functions.MatVecF(col("e"), rot, dim).as("embedding"))
-    IvfOpqIndex(rot, dim, ivfPqBuild(rotated, nList, m, kSub, sampleFit))
-  }
-
-  /** `knnJoinOpq` against a caller-owned index — completing the
-    * build-once / join-repeatedly quartet (float `knnJoinIndexed`,
-    * SQ8, PQ, now OPQ). The probe side rides the index's frozen
-    * rotation (one codegen `MatVec` per row), then the whole
-    * `knnJoinPqIndexed` machinery — packed-byte lists, `NearestLists`
-    * probes, `shuffle_hash`-pinned candidate join, float refine —
-    * runs unchanged in rotated space; rotation is orthonormal, so the
-    * refine cosines are the same quantities as the un-rotated path.
-    * The returned scope releases the internally-packed list frame;
-    * the caller releases the index (`ivfOpqBuild` or `ivfOpqLoad`).
-    * Join-after-reload equals join-after-build (`OpqSpec`). */
-  def knnJoinOpqIndexed(emb: DataFrame, index: IvfOpqIndex, k: Int,
-                        nProbe: Int = 2, refine: Int = 4,
-                        scanFrac: Option[Double] = None): Scoped[DataFrame] =
-    knnJoinPqIndexed(rotate(emb, index.rot, index.dim), index.pq, k, nProbe,
-      refine, scanFrac)
-
-  /** `(vec_id, embedding)` rotated by the row-major dim×dim `rot` — one
-    * codegen `MatVec` per row. */
-  private def rotate(vecs: DataFrame, rot: Array[Double], dim: Int): DataFrame =
-    vecs.select(col("vec_id"),
-      graft.functions.MatVecF(asDouble(col("embedding")), rot, dim).as("embedding"))
-
-  /** Persist: `ivfPqSave` layout plus the `rot/` table (`opqSave`'s
-    * convention). The store carries centroids + books + codes + rot,
-    * which is how `StoreLayout` recognizes the tier. */
-  def ivfOpqSave(index: IvfOpqIndex, path: String): Unit = {
-    ivfPqSave(index.pq, path)
-    saveRot(index.pq.coded.sparkSession, index.rot, index.dim, path)
-  }
-
-  /** The pretransform as a `rot/` table: dim rows, metadata-sized. */
-  private def saveRot(spark: org.apache.spark.sql.SparkSession,
-                      rot: Array[Double], d: Int, path: String): Unit = {
-    import spark.implicits._
-    (0 until d).map(i => (i, rot.slice(i * d, (i + 1) * d).toSeq)).toDF("i", "row")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/rot")
-  }
-
-  def ivfOpqLoad(spark: org.apache.spark.sql.SparkSession,
-                 path: String): IvfOpqIndex = {
-    val rot = opqLoadRot(spark, path)
-    val dim = math.sqrt(rot.length.toDouble).toInt
-    IvfOpqIndex(rot, dim, ivfPqLoad(spark, path))
-  }
-
-  /** FROZEN-transform append: rotate the batch under the saved
-    * rotation, then `ivfPqAppendSave` assigns against the saved
-    * (rotated-space) centroids and encodes with the saved books —
-    * O(batch), nothing refit. */
-  def ivfOpqAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
-                       newVecs: DataFrame): Unit = {
-    val rot = opqLoadRot(spark, path)
-    ivfPqAppendSave(spark, path,
-      rotate(newVecs, rot, math.sqrt(rot.length.toDouble).toInt))
-  }
-
-  /** Probe + ADC over an OPQ,IVF,PQ index: queries ride the rotation,
-    * then `ivfPqSearch` unchanged (rotated-space centroids and LUTs
-    * score the original cosine — A orthonormal). */
-  def ivfOpqSearch(index: IvfOpqIndex, queries: DataFrame, k: Int,
-                   nProbe: Int = 2): DataFrame =
-    ivfPqSearch(index.pq, rotate(queries, index.rot, index.dim), k, nProbe)
+  /** `(vec_id, embedding)` in an index's space: rotated by its
+    * row-major dim×dim OPQ rotation (one codegen `MatVec` per row), as
+    * is without one. */
+  private def inSpace(vecs: DataFrame, rot: Option[Array[Double]]): DataFrame =
+    rot.fold(vecs)(r => vecs.select(col("vec_id"), graft.functions.MatVecF(
+      asDouble(col("embedding")), r, math.sqrt(r.length.toDouble).toInt).as("embedding")))
 
   /** Scalar-quantized (int8) brute-force cosine top-k — `cosineTopK`
     * over `Sq8Encode` codes (functions/Sq8Expressions.scala): 72 B per
@@ -1286,12 +1328,15 @@ object Similarity {
   }
 
   def binBuild(corpus: DataFrame): BinIndex = {
-    val coded = corpus.select(col("vec_id").as("vid"),
-        graft.functions.Bin.encode(asDouble(col("embedding"))).as("bc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val coded = binCodes(corpus).persist(MEMORY_AND_DISK)
     coded.count()
     BinIndex(coded)
   }
+
+  /** `(vec_id, embedding)` → `(vid, bc)` sign codes. */
+  private def binCodes(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id").as("vid"),
+      graft.functions.Bin.encode(asDouble(col("embedding"))).as("bc"))
 
   /** Hamming top-k over a built/loaded binary index: (qid, rnk, vid),
     * rank by distance asc then vid — the integer ordering the DuckDB
@@ -1307,61 +1352,43 @@ object Similarity {
       k, col("score").asc)
   }
 
-  /** `Binary,RefineFlat`: Hamming retrieves `k × refine` candidates,
-    * the float store re-scores only those (`exactRerank`) — same repair
-    * economics as `ivfSearchSq8Refine`. At `refine` covering the corpus
-    * the float re-rank orders EVERY candidate, so the result is the
-    * exact brute ranking through the binary plumbing (q158's
-    * hash-green dial). */
-  def binSearchRefine(index: BinIndex, emb: DataFrame, queries: DataFrame,
-                      k: Int, refine: Int = 4): DataFrame =
-    exactRerank(binSearch(index, queries, k * refine).select("qid", "vid"),
-      emb, queries, k)
-
   /** Self-contained query form (the q157/q158 shape, `selfQuery`):
     * vectors below `nQueries` query the rest. `refine = 0` returns the
-    * raw Hamming ranking; `refine > 0` float-re-ranks the top pool. */
+    * raw Hamming ranking; `refine > 0` is `Binary,RefineFlat`: Hamming
+    * retrieves `k × refine` candidates and the float store re-scores
+    * only those (`exactRerank`). At `refine` covering the corpus the
+    * float re-rank orders EVERY candidate, so the result is the exact
+    * brute ranking through the binary plumbing (q158's hash-green
+    * dial). */
   def binTopK(emb: DataFrame, nQueries: Int, k: Int,
               refine: Int = 0): DataFrame =
     selfQuery(emb, nQueries)(binBuild)(_.release()) { (index, corpus, qs) =>
-      if (refine > 0) binSearchRefine(index, corpus, qs, k, refine)
+      if (refine > 0)
+        exactRerank(binSearch(index, qs, k * refine).select("qid", "vid"), corpus, qs, k)
       else binSearch(index, qs, k)
     }
 
-  /** Persist / reload / frozen append for the binary store —
-    * `bincodes/` is the layout key the ingest dispatch recognizes.
-    * Append is O(batch): encode and write, nothing refit (there is
-    * nothing TO refit — the code is the sign pattern itself). */
+  /** Persist / reload for the binary store — `bincodes/` is the layout
+    * key `StoreLayout` recognizes; its append encodes and writes,
+    * nothing refit (there is nothing TO refit — the code is the sign
+    * pattern itself). */
   def binSave(index: BinIndex, path: String): Unit =
-    index.coded.write.mode("overwrite").parquet(s"$path/bincodes")
+    writeRows(index.coded, s"$path/bincodes", "overwrite")
 
-  def binLoad(spark: org.apache.spark.sql.SparkSession, path: String): BinIndex = {
-    val coded = spark.read.parquet(s"$path/bincodes")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    BinIndex(coded)
-  }
-
-  def binAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newVecs: DataFrame): Unit =
-    newVecs.select(col("vec_id").as("vid"),
-        graft.functions.Bin.encode(asDouble(col("embedding"))).as("bc"))
-      .write.mode("append").parquet(s"$path/bincodes")
+  def binLoad(spark: SparkSession, path: String): BinIndex =
+    BinIndex(spark.read.parquet(s"$path/bincodes").persist(MEMORY_AND_DISK))
 
   /** IVF with scalar-quantized inverted lists — the FAISS `IVF,SQ8`
     * composite: the coarse quantizer trains on floats (centroid math
     * stays exact), but the ASSIGNED LISTS — the big, long-lived side
     * of the index — hold int8 codes. `ivfSave`/`ivfLoad` round-trip
     * this index unchanged (binary parquet column), so the on-disk
-    * footprint drops by the same ~7× as memory. */
+    * footprint drops by the same ~7× as memory. `ivfSearch` runs probe
+    * selection on the float centroids (broadcast, tiny) and candidate
+    * scoring on the int8 codes. */
   def ivfBuildSq8(corpus: DataFrame, nList: Int = 8,
                   sampleFit: Boolean = false): IvfIndex =
     ivfBuildAs(corpus, nList, sampleFit, ListCodec.Sq8)
-
-  /** Search an `ivfBuildSq8` index: probe selection runs on float
-    * centroids (broadcast, tiny), candidate scoring on int8 codes. */
-  def ivfSearchSq8(index: IvfIndex, queries: DataFrame, k: Int,
-                   nProbe: Int = 2): DataFrame =
-    probeSearch(index, ListCodec.Sq8, queries, k, nProbe)
 
   /** Two-stage refine search over an `ivfBuildSq8` index — the FAISS
     * `IVF,SQ8` + `RefineFlat` composite: stage 1 scans the int8 lists
@@ -1374,7 +1401,7 @@ object Similarity {
     * parity with the all-float IVF search). */
   def ivfSearchSq8Refine(index: IvfIndex, emb: DataFrame, queries: DataFrame,
                          k: Int, nProbe: Int = 2, refine: Int = 4): DataFrame =
-    exactRerank(ivfSearchSq8(index, queries, k * refine, nProbe)
+    exactRerank(ivfSearch(index, queries, k * refine, nProbe)
       .select("qid", "vid"), emb, queries, k)
 
   /** One-shot `IVF,SQ8 + RefineFlat` top-k (the q142 driver query):
@@ -1542,35 +1569,6 @@ object Similarity {
       Duration.Inf).toArray
   }
 
-  /** Encode `(vec_id, e)` → `(vid, codes: array<int>)` with the native
-    * `PqEncode` codegen expression — one tight generated loop per row,
-    * independent of kSub (a struct-array-sort formulation at kSub=256
-    * would exceed codegen method limits and fall back interpreted). */
-  private[graft] def pqEncodeFrame(cand: DataFrame,
-                                   books: Array[Array[Array[Double]]],
-                                   sub: Int): DataFrame = {
-    val flat = books.flatMap(_.flatMap(_.toSeq))
-    val ks = books.map(_.length)
-    cand.select(col("vec_id").as("vid"),
-      graft.functions.Pq.encode(col("e"), flat, ks, sub).as("codes"))
-  }
-
-  /** ADC search over an encoded frame. The LUTs are computed on the
-    * driver from the collected query rows — queries are the bounded
-    * tiny side by contract (same discipline as broadcast in
-    * `cosineTopK`). */
-  private[graft] def pqAdcSearch(coded: DataFrame, queries: DataFrame,
-                                 books: Array[Array[Array[Double]]],
-                                 sub: Int, k: Int): DataFrame = {
-    val spark = coded.sparkSession
-    import spark.implicits._
-    val q = queries.select(col("vec_id"), col("e")).orderBy("vec_id").collect().toSeq
-      .map(r => (r.getLong(0), pqLut(r.getSeq[Double](1).toArray, books, sub)))
-      .toDF("qid", "lut")
-    rankTop(coded.crossJoin(broadcast(q))
-      .select(col("qid"), col("vid"), adcScore(books).as("score")), k)
-  }
-
   /** One query's ADC lookup table: lut[off_j + c] =
     * (q_j · centroid_{j,c}) / |q|, so a candidate's Σ_j lut[off_j +
     * code_j] (`adcScore`) estimates the cosine directly. */
@@ -1596,93 +1594,89 @@ object Similarity {
         element_at(col("codes"), j + 1) + lit(offs(j)) + 1)).reduce(_ + _)
   }
 
-  /** A built PQ index: the driver-held codebooks plus the distributed
-    * codes frame `(vid, codes: array<int>)` — the corpus never appears
-    * in float form after the encode pass. `sub` is the subspace width
-    * (recoverable from any centroid, carried for convenience). */
-  final case class PqIndex(books: Array[Array[Array[Double]]], sub: Int,
-                           coded: DataFrame) {
+  /** A built or loaded PQ-family index — FAISS `index_factory` in one
+    * value: the driver-held codebooks plus the distributed codes frame
+    * `(vid, codes: array<int>[, list_id])` (the corpus never appears in
+    * float form after the encode pass), with two optional layers:
+    *   - `rot`, an OPQ pretransform (row-major dim×dim) every vector
+    *     and query rides before it touches the books;
+    *   - `centroids`, an IVF coarse layer (`IVF{n},PQ{m}`, Jégou 2011
+    *     §IV, FAISS's workhorse for billion-vector corpora): each
+    *     vector routes to an inverted list and a search probes
+    *     `nProbe` lists, running ADC inside them — the scan touches
+    *     nProbe/nList of the corpus at m bytes per row. Codes are
+    *     global-codebook (the FAISS `by_residual=false` inner-product
+    *     configuration — residual coding helps L2, not cosine).
+    * `sub` is the subspace width (recoverable from any centroid,
+    * carried for convenience). */
+  final case class PqIndex(books: Array[Array[Array[Double]]], sub: Int, coded: DataFrame,
+                           rot: Option[Array[Double]],
+                           centroids: Option[Array[(Int, Array[Double])]]) {
+    def dim: Int = books.length * sub
+    def nList: Int = centroids.fold(0)(_.length)
     def release(): Unit = coded.unpersist(blocking = false)
   }
 
   /** Fit + encode a corpus `(vec_id, embedding)` into a `PqIndex` —
-    * the trainable half of `pqTopK` split out for the save/load/append
-    * lifecycle (FAISS `train` + `add`). */
-  def pqBuild(vecs: DataFrame, m: Int = 16, kSub: Int = 256): PqIndex = {
-    val base = vecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+    * FAISS `train` + `add`, with the factory string spelled as
+    * arguments: `PQ{m}` by default, `opq = true` for `OPQ{m},PQ{m}`,
+    * `nList > 0` for `IVF{nList},PQ{m}`, both for OPQ,IVF,PQ. The
+    * rotation comes from the `opqFitLocal` alternation on a bounded
+    * driver sample (`iters` rounds). A flat OPQ index keeps the
+    * alternation's books; every other form fits its books on the
+    * (rotated) corpus sample — with an IVF layer the alternation's
+    * books are only its fitting scaffold. `sampleFit` picks the coarse
+    * fit exactly as in `ivfBuild` (same tradeoff and dial-invariance
+    * argument); the codebooks fit on a driver sample either way. */
+  def pqBuild(vecs: DataFrame, m: Int = 16, kSub: Int = 256, nList: Int = 0,
+              opq: Boolean = false, iters: Int = 8,
+              sampleFit: Boolean = false): PqIndex = {
+    val base = vecE(vecs)
     val dim = base.select(size(col("e"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    val books = pqFitBooks(base, m, kSub, sub)
-    val coded = pqEncodeFrame(base, books, sub)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    coded.count()
-    PqIndex(books, sub, coded)
-  }
-
-  /** Persist a PQ index as two parquet tables (`books/`: one row per
-    * (subspace, code) centroid; `codes/`: the encoded corpus) — the
-    * FAISS write_index analog, completing restartability across every
-    * ANN tier (ivfSave / signatureSave / pqSave). The books table is
-    * m·kSub rows — metadata-sized; the codes table is the index. */
-  def pqSave(index: PqIndex, path: String): Unit = {
-    saveBooks(index.coded.sparkSession, index.books, path)
-    index.coded.write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  /** Codebooks as a `books/` table: one row per (subspace j, code c)
-    * centroid, m·kSub rows — metadata-sized. */
-  private def saveBooks(spark: org.apache.spark.sql.SparkSession,
-                        books: Array[Array[Array[Double]]], path: String): Unit = {
-    import spark.implicits._
-    val rows = for {
-      (book, j) <- books.zipWithIndex
-      (cent, c) <- book.zipWithIndex
-    } yield (j, c, cent.toSeq)
-    rows.toSeq.toDF("j", "c", "cent")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/books")
-  }
-
-  /** Rebuild a `PqIndex` from `pqSave` output: the books read is one
-    * bounded collect (m·kSub rows), the codes scan stays lazy +
-    * persisted. Search-after-reload equals search-after-build
-    * (`PqSpec` pins it). */
-  def pqLoad(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex = {
-    val (books, sub) = pqLoadBooks(spark, path)
-    val coded = spark.read.parquet(s"$path/codes")
-      .select("vid", "codes")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PqIndex(books, sub, coded)
-  }
-
-  /** The books half of `pqLoad` — one bounded collect (m·kSub rows),
-    * no codes scan: what audits (`pqDriftRatio`) read. */
-  private[graft] def pqLoadBooks(spark: org.apache.spark.sql.SparkSession,
-                                 path: String): (Array[Array[Array[Double]]], Int) = {
-    val bookRows = spark.read.parquet(s"$path/books")
-      .select("j", "c", "cent").collect()
-    val m = bookRows.map(_.getInt(0)).max + 1
-    val books = Array.tabulate(m) { j =>
-      bookRows.filter(_.getInt(0) == j).sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2).toArray)
+    val fitted = if (opq) Some(opqFitLocal(pqSamplePoints(base), m, kSub, sub, iters)) else None
+    val space = vecE(inSpace(vecs, fitted.map(_._1)))
+    val books = fitted match {
+      case Some((_, opqBooks)) if nList == 0 => opqBooks
+      case _ => pqFitBooks(space, m, kSub, sub)
     }
-    (books, books(0)(0).length)
+    val (cents, listed) =
+      if (nList > 0) { val (c, l) = coarseLists(space, nList, sampleFit); (Some(c), l) }
+      else (None, space)
+    val coded = listed.select(Seq(col("vec_id").as("vid"), pqEncode(books, sub)) ++
+        cents.map(_ => col("list_id")): _*)
+      .persist(MEMORY_AND_DISK)
+    coded.count()
+    PqIndex(books, sub, coded, fitted.map(_._1), cents)
   }
 
-  /** Encode NEW vectors against a saved index's FROZEN codebooks and
-    * append them to the codes store — FAISS `index.add()` for the PQ
-    * tier, O(batch) like `ivfAppendSave`: the books read is bounded,
-    * the only data motion is the new batch through one codegen'd
-    * `PqEncode` pass. */
-  def pqAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
-                   newVecs: DataFrame): Unit = {
-    val index = pqLoad(spark, path)
-    try {
-      val base = newVecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      pqEncodeFrame(base, index.books, index.sub)
-        .write.mode("append").parquet(s"$path/codes")
-    } finally index.release()
+  /** `PqEncode` over the `e` column: one tight generated loop per row,
+    * independent of kSub (a struct-array-sort formulation at kSub=256
+    * would exceed codegen method limits and fall back interpreted). */
+  private def pqEncode(books: Array[Array[Array[Double]]], sub: Int): Column =
+    graft.functions.Pq.encode(col("e"), books.flatMap(_.flatMap(_.toSeq)),
+      books.map(_.length), sub).as("codes")
+
+  /** Persist a PQ-family index — `books/` (m·kSub rows, metadata-sized),
+    * `rot/` and `centroids/` when it has those layers, and the `codes/`
+    * table that IS the index, partitioned by `list_id` under an IVF
+    * layer for probe-time partition pruning (`writeRows`). The FAISS
+    * write_index analog; the directory set is how `StoreLayout`
+    * recognizes the tier. */
+  def pqSave(index: PqIndex, path: String): Unit = {
+    val spark = index.coded.sparkSession
+    saveBooks(spark, index.books, path)
+    index.rot.foreach(saveRot(spark, _, index.dim, path))
+    index.centroids.foreach(saveCentroids(spark, _, path))
+    writeRows(index.coded, s"$path/codes", "overwrite")
   }
+
+  /** Rebuild a `PqIndex` from `pqSave` output (`StoreLayout.Pq.load`):
+    * bounded metadata reads, the codes scan lazy + persisted.
+    * Search-after-reload equals search-after-build (`PqSpec` pins it). */
+  def pqLoad(spark: SparkSession, path: String): PqIndex =
+    StoreLayout.pq(spark, path).load(spark, path)
 
   /** Mean squared reconstruction error of `books` over an in-memory
     * normalized point set — the quantity the Lloyd fit minimizes,
@@ -1709,80 +1703,137 @@ object Similarity {
     total / pts.length
   }
 
+  /** Driver-side points rotated by a row-major `rot`; as is without one. */
+  private def rotatePts(rot: Option[Array[Double]],
+                        pts: Array[Array[Double]]): Array[Array[Double]] =
+    rot.fold(pts) { r =>
+      val dim = math.sqrt(r.length.toDouble).toInt
+      pts.map(x => Array.tabulate(dim) { i =>
+        var s = 0.0
+        var j = 0
+        while (j < dim) { s += r(i * dim + j) * x(j); j += 1 }
+        s
+      })
+    }
+
   /** Codebook distortion of an index on a vector frame: MSE of the
-    * books' reconstructions over a deterministic bounded sample
-    * (L2-normalized like the fit itself, so the number is scale-free
-    * and comparable across corpora and batches). Driver-side on
-    * ≤ sampleCap points — the audit costs what the fit costs, never
-    * anything corpus-sized. */
+    * books' reconstructions (behind the index's rotation) over a
+    * deterministic bounded sample, L2-normalized like the fit itself,
+    * so the number is scale-free and comparable across corpora and
+    * batches. Driver-side on ≤ sampleCap points — the audit costs what
+    * the fit costs, never anything corpus-sized. */
   def pqDistortion(index: PqIndex, vecs: DataFrame,
                    sampleCap: Int = 2048): Double = {
-    val base = vecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val pts = pqSamplePoints(base, sampleCap)
+    val pts = pqSamplePoints(vecE(vecs), sampleCap)
     require(pts.nonEmpty, "pqDistortion needs a non-empty vector frame")
-    pqDistortionOf(index.books, index.sub, pts)
+    pqDistortionOf(index.books, index.sub, rotatePts(index.rot, pts))
   }
 
-  /** Drift ratio of a saved PQ store against a recent batch: distortion
-    * of the FROZEN books on the batch, over the distortion freshly-fit
-    * books achieve on the same sample. ≈1 while the distribution the
-    * books were trained on still holds; grows as the feed drifts — the
-    * PQ tier's `ivfSkew`. (IVF drift shows up as list-occupancy skew;
-    * PQ drift shows up as quantization error, because the codebooks are
-    * a density model of the feed.) Bounded: one books read + one
-    * sample fit, nothing corpus-sized. */
-  def pqDriftRatio(spark: org.apache.spark.sql.SparkSession, path: String,
-                   recent: DataFrame, sampleCap: Int = 2048): Double = {
-    val (books, sub) = pqLoadBooks(spark, path)
-    val base = recent.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val pts = pqSamplePoints(base, sampleCap)
-    require(pts.nonEmpty, "pqDriftRatio needs a non-empty recent batch")
-    val frozen = pqDistortionOf(books, sub, pts)
-    val fresh = pqDistortionOf(
-      pqFitBooksLocal(pts, books.length, books.map(_.length).max, sub), sub, pts)
+  /** The one drift rule for every PQ-family store: distortion of the
+    * FROZEN books (behind the frozen rotation, if any) on a sample of
+    * a recent batch, over the distortion a fresh fit at the store's own
+    * (m, kSub) achieves on the same sample — fresh books, or the whole
+    * `opqFitLocal` alternation for a rotated store. ≈1 while the
+    * distribution the books were trained on still holds; grows as the
+    * feed drifts — the PQ tiers' `ivfSkew` (IVF drift shows up as list
+    * occupancy, PQ drift as quantization error: the codebooks are a
+    * density model of the feed). The sample must hold more points than
+    * kSub: a fresh fit takes min(kSub, points) centroids from distinct
+    * picks, so on a smaller sample it memorises every point, its
+    * distortion is 0 and no ratio means anything. Bounded: metadata
+    * reads + one sample fit, nothing corpus-sized. */
+  def pqDriftRatio(spark: SparkSession, path: String, recent: DataFrame,
+                   sampleCap: Int = 2048): Double = {
+    val ((books, sub), rot, _) = StoreLayout.pq(spark, path).tables(spark, path)
+    val (m, kSub) = (books.length, books.map(_.length).max)
+    val pts = pqSamplePoints(vecE(recent), sampleCap)
+    require(pts.length > kSub, s"drift sample of ${pts.length} points is not larger " +
+      s"than the store's kSub = $kSub: fresh books would memorise it")
+    val frozen = pqDistortionOf(books, sub, rotatePts(rot, pts))
+    val fresh = rot match {
+      case None => pqDistortionOf(pqFitBooksLocal(pts, m, kSub, sub), sub, pts)
+      case Some(_) =>
+        val (fRot, fBooks) = opqFitLocal(pts, m, kSub, sub)
+        pqDistortionOf(fBooks, sub, rotatePts(Some(fRot), pts))
+    }
     if (fresh <= 0.0) { if (frozen <= 0.0) 1.0 else Double.PositiveInfinity }
     else frozen / fresh
   }
 
-  /** Refit-on-drift for the PQ tier. Unlike IVF (`ivfRebalance`
-    * reconstructs losslessly), PQ codes are LOSSY — retraining on
-    * reconstructions would compound quantization error — so
-    * maintenance re-encodes from the caller's SOURCE corpus, the
-    * system of record every training pipeline keeps anyway. Above
-    * `maxRatio` (`pqDriftRatio` on `recent`): fit new books at the
-    * store's own (m, kSub) on the current corpus, re-encode, write the
-    * generation to `dstPath`, return true. Below: one bounded audit,
-    * nothing written. Same reader-swap contract as
-    * `IngestVectors.maintainIndex`. */
-  def pqMaintainIfDrifted(spark: org.apache.spark.sql.SparkSession,
-                          path: String, recent: DataFrame,
-                          corpus: DataFrame, maxRatio: Double,
-                          dstPath: String): Boolean = {
+  /** Refit-on-drift for every PQ-family store. PQ codes are LOSSY
+    * (unlike IVF lists, which `ivfRebalance` reconstructs exactly), so
+    * retraining on reconstructions would compound quantization error:
+    * the rebuild re-encodes from the caller's SOURCE corpus, the system
+    * of record every training pipeline keeps anyway, at the store's own
+    * (m, kSub), rotation and coarse layer. It fires when the drift rule
+    * (`pqDriftRatio` on `recent`) exceeds `maxRatio` or, for stores
+    * with an IVF layer, on either occupancy signal: skew above
+    * `maxSkew` (a drifted feed skews the lists AND degrades the books,
+    * but either alone warrants the rebuild — a within-region density
+    * shift moves distortion without touching occupancy), or growth —
+    * with `targetClusterRows` set, mean occupancy past 2× the target
+    * (the `maintainIndex` rule: frozen nList means probe cost grows
+    * with the store), the new generation then getting
+    * nList = ⌈store / targetClusterRows⌉. The cheap occupancy gates
+    * run first. On a rebuild the generation lands at `dstPath` (a new
+    * path: the reader-swap contract of `IngestVectors.maintainIndex`)
+    * and the result is true; otherwise nothing is written. */
+  def pqMaintainIfDrifted(spark: SparkSession, path: String, recent: DataFrame,
+                          corpus: DataFrame, maxRatio: Double, dstPath: String,
+                          maxSkew: Double = Double.PositiveInfinity,
+                          targetClusterRows: Long = 0L,
+                          sampleFit: Boolean = false): Boolean = {
     require(path != dstPath,
       "refit writes a new generation; src and dst must differ")
-    if (pqDriftRatio(spark, path, recent) > maxRatio) {
-      val (books, _) = pqLoadBooks(spark, path)
-      val idx = pqBuild(corpus, m = books.length,
-        kSub = books.map(_.length).max)
-      pqSave(idx, dstPath)
-      idx.release()
+    val ((books, _), rot, cents) = StoreLayout.pq(spark, path).tables(spark, path)
+    val nList = cents.fold(0)(_.length)
+    val (skew, rows) =
+      if (nList > 0) occupancy(ivfPqListStats(spark, path), nList) else (1.0, 0L)
+    val target = nList > 0 && targetClusterRows > 0L
+    val grown = target && rows.toDouble / nList > 2.0 * targetClusterRows
+    if (grown || skew > maxSkew || pqDriftRatio(spark, path, recent) > maxRatio) {
+      val k =
+        if (target) math.max(nList, math.ceil(rows.toDouble / targetClusterRows).toInt)
+        else nList
+      val idx = pqBuild(corpus, books.length, books.map(_.length).max, k,
+        opq = rot.isDefined, sampleFit = sampleFit)
+      try pqSave(idx, dstPath) finally idx.release()
       true
     } else false
   }
 
-  /** ADC top-k over a built/loaded index for an external query frame
-    * `(vec_id, embedding)` — the serving half of the lifecycle. */
-  def pqSearch(index: PqIndex, queries: DataFrame, k: Int): DataFrame =
-    pqAdcSearch(index.coded,
-      queries.select(col("vec_id"), asDouble(col("embedding")).as("e")),
-      index.books, index.sub, k)
+  /** ADC top-k over a PQ-family index for an external query frame
+    * `(vec_id, embedding)` — the serving half of the lifecycle. Queries
+    * are the bounded tiny side by contract (the `cosineTopK`
+    * discipline): they ride the index's rotation and the driver
+    * computes each one's lookup table (`pqLut`). Flat, every code
+    * scores against every query (one broadcast). With an IVF layer each
+    * query probes its `nProbe` nearest lists (`probeTopLists`: max
+    * query·centroid, ties to the lower list id) and only those lists'
+    * codes join the broadcast probes on `list_id` — nothing but probed
+    * lists' codes is ever read. A candidate's score is m LUT lookups +
+    * adds (`adcScore`). */
+  def pqSearch(index: PqIndex, queries: DataFrame, k: Int, nProbe: Int = 2): DataFrame = {
+    val spark = index.coded.sparkSession
+    import spark.implicits._
+    val q = vecE(inSpace(queries, index.rot)).orderBy("vec_id").collect().toSeq
+      .map { r =>
+        val qe = r.getSeq[Double](1)
+        (r.getLong(0), qe, pqLut(qe.toArray, index.books, index.sub))
+      }.toDF("qid", "qe", "lut")
+    val cand = index.centroids.fold(index.coded.crossJoin(broadcast(q.drop("qe"))))(cents =>
+      index.coded.join(broadcast(probeTopLists(q, Seq("qid", "lut"), cents, nProbe)),
+        Seq("list_id")))
+    rankTop(cand.select(col("qid"), col("vid"), adcScore(index.books).as("score")), k)
+  }
 
-  /** Serving-path `PQ,RefineFlat`: ADC retrieval over the index, exact
-    * float re-rank against a corpus frame — the long-lived-index
-    * counterpart of `pqTopKRefine` (which refits per call). */
+  /** `…,RefineFlat`: ADC retrieves `k × refine` candidates (`pqSearch`),
+    * the float `corpus` re-scores only those (`exactRerank`) — the
+    * `ivfSearchSq8Refine` repair economics, touching k·refine rows per
+    * query. The re-rank repairs ADC rank error, not IVF list misses. */
   def pqSearchRefine(index: PqIndex, queries: DataFrame, corpus: DataFrame,
-                     k: Int, refine: Int = 8): DataFrame =
-    exactRerank(pqSearch(index, queries, k * refine).select("qid", "vid"),
+                     k: Int, nProbe: Int = 2, refine: Int = 4): DataFrame =
+    exactRerank(pqSearch(index, queries, k * refine, nProbe).select("qid", "vid"),
       corpus, queries, k)
 
   // ---------------------------------------------------------------- OPQ
@@ -1889,57 +1940,13 @@ object Similarity {
     (a.flatten, books)
   }
 
-  /** A built OPQ index: the applied rotation (row-major dim×dim) plus
-    * the PQ index over rotated vectors. Search rotates the query with
-    * the same `MatVec` and runs plain ADC — rotation is orthonormal,
-    * so norms and cosines are preserved and the refine stage stays the
-    * UNROTATED float store (exact, transform-free). */
-  final case class OpqIndex(rot: Array[Double], pq: PqIndex) {
-    def dim: Int = pq.books.length * pq.sub
-    def release(): Unit = pq.release()
-  }
-
-  /** Fit rotation + codebooks on the driver sample, then rotate-encode
-    * the corpus in ONE codegen'd scan (`MatVec` fused under
-    * `PqEncode`) — FAISS `OPQ{m},PQ{m}` train + add. */
-  def opqBuild(vecs: DataFrame, m: Int = 16, kSub: Int = 256,
-               iters: Int = 8): OpqIndex = {
-    val base = vecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val dim = base.select(size(col("e"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val (rot, books) = opqFitLocal(pqSamplePoints(base), m, kSub, sub, iters)
-    val rotated = base.select(col("vec_id"),
-      graft.functions.MatVecF(col("e"), rot, dim).as("e"))
-    val coded = pqEncodeFrame(rotated, books, sub)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    coded.count()
-    OpqIndex(rot, PqIndex(books, sub, coded))
-  }
-
-  /** ADC top-k over an OPQ index: queries ride through the same
-    * rotation, then the plain PQ ADC path scores the rotated-space
-    * cosine (= the original cosine, A orthonormal). */
-  def opqSearch(index: OpqIndex, queries: DataFrame, k: Int): DataFrame =
-    pqAdcSearch(index.pq.coded,
-      queries.select(col("vec_id"),
-        graft.functions.MatVecF(asDouble(col("embedding")), index.rot, index.dim).as("e")),
-      index.pq.books, index.pq.sub, k)
-
-  /** `OPQ{m},PQ{m},RefineFlat`: ADC over the rotated codes, exact float
-    * re-rank against the unrotated corpus. */
-  def opqSearchRefine(index: OpqIndex, queries: DataFrame, corpus: DataFrame,
-                      k: Int, refine: Int = 8): DataFrame =
-    exactRerank(opqSearch(index, queries, k * refine).select("qid", "vid"),
-      corpus, queries, k)
-
   /** One-call OPQ top-k on an `(vec_id, embedding)` frame — the OPQ
     * counterpart of `pqTopK` (queries = ids below `nQueries`,
     * `selfQuery`). */
   def opqTopK(emb: DataFrame, nQueries: Int, k: Int, m: Int = 16,
               kSub: Int = 256, iters: Int = 8): DataFrame =
-    selfQuery(emb, nQueries)(opqBuild(_, m, kSub, iters))(_.release())(
-      (index, _, qs) => opqSearch(index, qs, k))
+    selfQuery(emb, nQueries)(pqBuild(_, m, kSub, opq = true, iters = iters))(_.release())(
+      (index, _, qs) => pqSearch(index, qs, k))
 
   def opqTopKRefine(emb: DataFrame, nQueries: Int, k: Int, m: Int = 16,
                     kSub: Int = 256, refine: Int = 8,
@@ -1947,227 +1954,12 @@ object Similarity {
     exactRerank(opqTopK(emb, nQueries, k * refine, m, kSub, iters)
       .select("qid", "vid"), emb, emb.where(col("vec_id") < nQueries), k)
 
-  /** Persist: `pqSave` layout plus a `rot/` table (dim rows — the
-    * pretransform matrix is metadata-sized). */
-  def opqSave(index: OpqIndex, path: String): Unit = {
-    pqSave(index.pq, path)
-    saveRot(index.pq.coded.sparkSession, index.rot, index.dim, path)
-  }
-
-  def opqLoad(spark: org.apache.spark.sql.SparkSession, path: String): OpqIndex =
-    OpqIndex(opqLoadRot(spark, path), pqLoad(spark, path))
-
-  /** The rotation half of `opqLoad` — one bounded collect (dim rows),
-    * no codes scan: what audits read. */
-  private[graft] def opqLoadRot(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Array[Double] =
-    spark.read.parquet(s"$path/rot").select("i", "row").collect()
-      .sortBy(_.getInt(0)).flatMap(_.getSeq[Double](1))
-
-  /** FROZEN-transform append: rotate + encode new vectors under the
-    * saved rotation/codebooks, append to `codes/` — O(batch). */
-  def opqAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newVecs: DataFrame): Unit = {
-    val index = opqLoad(spark, path)
-    try {
-      val base = newVecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      val rotated = base.select(col("vec_id"),
-        graft.functions.MatVecF(col("e"), index.rot, index.dim).as("e"))
-      pqEncodeFrame(rotated, index.pq.books, index.pq.sub)
-        .write.mode("append").parquet(s"$path/codes")
-    } finally index.release()
-  }
-
-  /** Drift ratio for an `opqSave`d store — `pqDriftRatio` with the
-    * rotation treated as part of the density model: the frozen side
-    * scores the stored rotation+codebooks on a recent-batch sample,
-    * the fresh side re-runs the full `opqFitLocal` alternation on the
-    * same sample. ≈1 in-distribution; grows as the feed leaves the
-    * distribution the pretransform was aligned to. Bounded driver
-    * work, nothing corpus-sized. */
-  def opqDriftRatio(spark: org.apache.spark.sql.SparkSession, path: String,
-                    recent: DataFrame, sampleCap: Int = 2048): Double = {
-    val (books, sub) = pqLoadBooks(spark, path)
-    val rot = opqLoadRot(spark, path)
-    val dim = books.length * sub
-    def rotate(r: Array[Double], x: Array[Double]): Array[Double] =
-      Array.tabulate(dim) { i =>
-        var s = 0.0
-        var j = 0
-        while (j < dim) { s += r(i * dim + j) * x(j); j += 1 }
-        s
-      }
-    val base = recent.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val pts = pqSamplePoints(base, sampleCap)
-    require(pts.nonEmpty, "opqDriftRatio needs a non-empty recent batch")
-    val frozen = pqDistortionOf(books, sub, pts.map(rotate(rot, _)))
-    val (fRot, fBooks) = opqFitLocal(pts, books.length,
-      books.map(_.length).max, sub)
-    val fresh = pqDistortionOf(fBooks, sub, pts.map(rotate(fRot, _)))
-    if (fresh <= 0.0) { if (frozen <= 0.0) 1.0 else Double.PositiveInfinity }
-    else frozen / fresh
-  }
-
-  /** Refit-on-drift for the OPQ tier: same source-corpus contract as
-    * `pqMaintainIfDrifted` (codes are lossy), rebuilding rotation AND
-    * codebooks at the store's own (m, kSub). */
-  def opqMaintainIfDrifted(spark: org.apache.spark.sql.SparkSession,
-                           path: String, recent: DataFrame,
-                           corpus: DataFrame, maxRatio: Double,
-                           dstPath: String): Boolean = {
-    require(path != dstPath,
-      "refit writes a new generation; src and dst must differ")
-    if (opqDriftRatio(spark, path, recent) > maxRatio) {
-      val (books, _) = pqLoadBooks(spark, path)
-      val idx = opqBuild(corpus, m = books.length,
-        kSub = books.map(_.length).max)
-      opqSave(idx, dstPath)
-      idx.release()
-      true
-    } else false
-  }
-
-  /** IVF,PQ composite — FAISS's workhorse index for billion-vector
-    * corpora (`IVF{n},PQ{m}`, Jégou 2011 §IV): a coarse KMeans
-    * quantizer routes each vector to an inverted list, and the vector
-    * is stored ONLY as its `m` PQ codes. A search probes `nProbe`
-    * lists and runs ADC inside them — the scan touches
-    * `nProbe/nList` of the corpus at `m` bytes per row, the product
-    * of both prunings (IVF's list pruning × PQ's 32× compression).
-    * Codes are global-codebook (the FAISS `by_residual=false` inner-
-    * product configuration — residual coding helps L2, not cosine).
-    *
-    * `coded` is `(vid, codes, list_id)`; persisted once, searched
-    * many times — and `ivfPqSave` writes it partitioned by `list_id`,
-    * so a reloaded search's probe join prunes to the probed lists'
-    * FILES at the scan, same as the float IVF store. */
-  final case class IvfPqIndex(centroids: Array[(Int, Array[Double])],
-                              books: Array[Array[Array[Double]]], sub: Int,
-                              coded: DataFrame, nList: Int) {
-    def release(): Unit = coded.unpersist(blocking = false)
-  }
-
-  /** `sampleFit = true` swaps the distributed coarse KMeans for the
-    * bounded driver fit (`coarseFitSample`) with codegen Euclidean
-    * assignment — same tradeoff and same dial-invariance argument as
-    * `ivfBuild(sampleFit = true)`; the codebooks already fit on a
-    * driver sample either way. */
-  def ivfPqBuild(corpus: DataFrame, nList: Int = 8, m: Int = 16,
-                 kSub: Int = 256, sampleFit: Boolean = false): IvfPqIndex = {
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val dim = base.select(size(col("e"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val books = pqFitBooks(base, m, kSub, sub)
-    val flat = books.flatMap(_.flatMap(_.toSeq))
-    val ks = books.map(_.length)
-    val (cents, listed) = coarseLists(base, nList, sampleFit)
-    val coded = listed
-      .select(col("vec_id").as("vid"),
-        graft.functions.Pq.encode(col("e"), flat, ks, sub).as("codes"),
-        col("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    coded.count()
-    IvfPqIndex(cents, books, sub, coded, cents.length)
-  }
-
-  /** Probe + ADC: per query the driver picks the `nProbe` nearest
-    * lists (centroids are nList rows — metadata) and computes the PQ
-    * LUT; the distributed side joins codes to probes on `list_id`
-    * (broadcast — the probe frame is nQueries·nProbe rows) and sums
-    * `m` LUT lookups per surviving row. Nothing but probed lists'
-    * codes is ever read. */
-  def ivfPqSearch(index: IvfPqIndex, queries: DataFrame, k: Int,
-                  nProbe: Int = 2): DataFrame = {
-    val spark = index.coded.sparkSession
-    import spark.implicits._
-    val probes = queries
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .orderBy("vec_id").collect().toSeq
-      .flatMap { r =>
-        val qe = r.getSeq[Double](1).toArray
-        val lut = pqLut(qe, index.books, index.sub)
-        // nearest lists by max query·centroid (ties to lower list id)
-        index.centroids
-          .map { case (lid, cent) =>
-            var s = 0.0
-            var t = 0
-            while (t < cent.length) { s += qe(t) * cent(t); t += 1 }
-            (-s, lid)
-          }
-          .sorted.take(nProbe).map { case (_, lid) => (r.getLong(0), lid, lut) }
-      }
-      .toDF("qid", "list_id", "lut")
-    rankTop(index.coded.join(broadcast(probes), Seq("list_id"))
-      .select(col("qid"), col("vid"), adcScore(index.books).as("score")), k)
-  }
-
   /** One-shot IVF,PQ top-k (the driver-query form, `selfQuery`): build
     * on the candidate corpus, search the query slice, release. */
   def ivfPqTopK(emb: DataFrame, nQueries: Int, k: Int, nList: Int = 8,
                 nProbe: Int = 2, m: Int = 16, kSub: Int = 256): DataFrame =
-    selfQuery(emb, nQueries)(ivfPqBuild(_, nList, m, kSub))(_.release())(
-      (index, _, qs) => ivfPqSearch(index, qs, k, nProbe))
-
-  /** Persist an IVF,PQ index (`centroids/`, `books/`, `codes/`
-    * partitioned by `list_id` for probe-time partition pruning) —
-    * completing save/load across the whole ANN ladder. */
-  def ivfPqSave(index: IvfPqIndex, path: String): Unit = {
-    val spark = index.coded.sparkSession
-    import spark.implicits._
-    index.centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    saveBooks(spark, index.books, path)
-    // whole lists per task before the partitioned write (the ivfSave
-    // small-files rule: partitions×nList slivers otherwise)
-    graft.core.Stores.writeLayout(index.coded, col("list_id"))
-      .write.mode("overwrite")
-      .partitionBy("list_id").parquet(s"$path/codes")
-  }
-
-  /** Metadata halves of a saved IVF,PQ index (coarse centroids + PQ
-    * codebooks) WITHOUT touching the codes store — what append needs:
-    * both reads are bounded (nList + m·kSub rows). */
-  private def ivfPqMeta(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Array[(Int, Array[Double])], Array[Array[Array[Double]]]) =
-    (centroidRows(spark.read.parquet(s"$path/centroids")),
-      pqLoadBooks(spark, path)._1)
-
-  def ivfPqLoad(spark: org.apache.spark.sql.SparkSession,
-                path: String): IvfPqIndex = {
-    val (cents, books) = ivfPqMeta(spark, path)
-    val coded = spark.read.parquet(s"$path/codes")
-      .select(col("vid"), col("codes"), col("list_id").cast("int").as("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sub = width of any PQ codebook centroid
-    IvfPqIndex(cents, books, books(0)(0).length, coded, cents.length)
-  }
-
-  /** Append NEW vectors to an `ivfPqSave`d store: assign against the
-    * saved coarse centroids (argmin |c|² − 2·e·c, the quantizer's own
-    * metric — |e|² is rank-constant) and encode with the saved frozen
-    * codebooks, then append to the partitioned codes store. O(batch)
-    * like `ivfAppendSave`/`pqAppendSave`; only metadata is read. */
-  def ivfPqAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
-                      newVecs: DataFrame): Unit = {
-    val (cents, books) = ivfPqMeta(spark, path)
-    val sub = books(0)(0).length
-    val flat = books.flatMap(_.flatMap(_.toSeq))
-    val ks = books.map(_.length)
-    // Euclidean argmin via `nearestList` (augmented-dot trick) — the
-    // former per-centroid struct/array_sort expression tree inlined
-    // O(nList) typedLit subtrees, the exact fresh-plan Catalyst cost
-    // cliff the round-6 q65 rule warns about, and maintenance scales
-    // nList with the store
-    newVecs.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .select(col("vec_id").as("vid"),
-        graft.functions.Pq.encode(col("e"), flat, ks, sub).as("codes"),
-        nearestList(col("e"), cents).as("list_id"))
-      // one file per touched list (pinned width)
-      .transform(graft.core.Stores.writeLayout(_, col("list_id")))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
-  }
+    selfQuery(emb, nQueries)(pqBuild(_, m, kSub, nList))(_.release())(
+      (index, _, qs) => pqSearch(index, qs, k, nProbe))
 
   /** PQ + exact re-rank: ADC retrieves `k × refine` candidates, the
     * float store re-scores only those (the `PQ8,RefineFlat` composite).
@@ -2178,86 +1970,15 @@ object Similarity {
     exactRerank(pqTopK(emb, nQueries, k * refine, m, kSub).select("qid", "vid"),
       emb, emb.where(col("vec_id") < nQueries), k)
 
-  /** List occupancy of an `ivfPqSave`d store, empty lists included —
-    * `ivfListStats` for the composite tier, read straight off the
-    * partitioned codes store (one hash agg; the partition column IS
-    * the group key, so the scan never materializes code payloads). */
-  def ivfPqListStats(spark: org.apache.spark.sql.SparkSession,
-                     path: String): DataFrame = {
-    val counts = spark.read.parquet(s"$path/codes")
-      .groupBy(col("list_id").cast("int").as("list_id"))
-      .agg(count(lit(1)).as("n_vecs"))
-    spark.read.parquet(s"$path/centroids").select("list_id")
-      .join(counts, Seq("list_id"), "left")
-      .select(col("list_id"), coalesce(col("n_vecs"), lit(0L)).as("n_vecs"))
-      .orderBy("list_id")
-  }
+  /** List occupancy of a saved IVF,PQ or OPQ,IVF,PQ store, empty lists
+    * included — `ivfListStats` read straight off the partitioned codes
+    * (the partition column IS the group key). */
+  def ivfPqListStats(spark: SparkSession, path: String): DataFrame =
+    listStats(spark.read.parquet(s"$path/codes"), loadCentroids(spark, path).map(_._1).toSeq)
 
-  /** Occupancy skew of an `ivfPqSave`d store (max/mean — `ivfSkew`'s
-    * semantics on the composite tier). */
-  def ivfPqSkew(spark: org.apache.spark.sql.SparkSession,
-                path: String): Double = {
-    val rows = ivfPqListStats(spark, path)
-      .agg(max(col("n_vecs")).as("mx"), sum(col("n_vecs")).as("tot"),
-        count(lit(1)).as("nl")).head()
-    if (rows.isNullAt(1) || rows.getLong(1) == 0L) 1.0
-    else rows.getLong(0).toDouble / (rows.getLong(1).toDouble / rows.getLong(2))
-  }
-
-  /** Refit-on-drift for the composite tier, gated on EITHER signal: a
-    * drifted feed skews the coarse lists (occupancy) AND degrades the
-    * codebooks (distortion), but either alone warrants the rebuild —
-    * e.g. a within-region density shift moves distortion without
-    * touching occupancy. Rebuilds from the SOURCE corpus at the
-    * store's own (nList, m, kSub); same lossy-codes rationale and
-    * reader-swap contract as `pqMaintainIfDrifted`. */
-  def ivfPqMaintainIfDrifted(spark: org.apache.spark.sql.SparkSession,
-                             path: String, recent: DataFrame,
-                             corpus: DataFrame, maxSkew: Double,
-                             maxRatio: Double, dstPath: String,
-                             targetClusterRows: Long = 0L,
-                             sampleFit: Boolean = false): Boolean = {
-    require(path != dstPath,
-      "refit writes a new generation; src and dst must differ")
-    val (cents, books) = ivfPqMeta(spark, path)
-    val sub = books(0)(0).length
-    // growth gate (the maintainIndex rule applied to the composite
-    // tier): frozen nList means probe cost grows with the store
-    val storeRows = spark.read.parquet(s"$path/codes").count()
-    val grown = targetClusterRows > 0L &&
-      storeRows.toDouble / cents.length > 2.0 * targetClusterRows
-    val drifted = grown || ivfPqSkew(spark, path) > maxSkew || {
-      val base = recent.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      val pts = pqSamplePoints(base, 2048)
-      require(pts.nonEmpty, "ivfPqMaintainIfDrifted needs a non-empty recent batch")
-      val frozen = pqDistortionOf(books, sub, pts)
-      val fresh = pqDistortionOf(
-        pqFitBooksLocal(pts, books.length, books.map(_.length).max, sub), sub, pts)
-      fresh > 0.0 && frozen / fresh > maxRatio
-    }
-    if (drifted) {
-      val k =
-        if (targetClusterRows > 0L)
-          math.max(cents.length,
-            math.ceil(storeRows.toDouble / targetClusterRows).toInt)
-        else cents.length
-      val idx = ivfPqBuild(corpus, nList = k, m = books.length,
-        kSub = books.map(_.length).max, sampleFit = sampleFit)
-      ivfPqSave(idx, dstPath)
-      idx.release()
-      true
-    } else false
-  }
-
-  /** IVF,PQ + exact re-rank: the `RefineFlat` stage over an `ivfPqSearch`
-    * candidate pool — the same repair economics as `pqTopKRefine`, with
-    * the float re-score touching only k·refine rows per query. */
-  def ivfPqSearchRefine(index: IvfPqIndex, queries: DataFrame,
-                        corpus: DataFrame, k: Int, nProbe: Int = 2,
-                        refine: Int = 4): DataFrame =
-    exactRerank(ivfPqSearch(index, queries, k * refine, nProbe)
-      .select("qid", "vid"), corpus, queries, k)
-
+  /** Occupancy skew of a saved IVF,PQ store (`ivfSkew`'s semantics). */
+  def ivfPqSkew(spark: SparkSession, path: String): Double =
+    occupancy(ivfPqListStats(spark, path), loadCentroids(spark, path).length)._1
   /** Shared RefineFlat second stage: exact float cosine over the
     * bounded (qid, vid) candidate frame — k·refine rows per query, one
     * equi-join to the float store, one broadcast of the query side. */
@@ -2391,8 +2112,8 @@ object Similarity {
     * nAssign per vector. See `semDedupPairs(index, ...)` for the
     * projection-not-join rationale. */
   private def flatCells(index: IvfIndex, nAssign: Int): DataFrame = {
-    val cents: Array[(Int, Seq[Double])] = index.centroids
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+    val cents: Array[(Int, Seq[Double])] =
+      index.centroids.map { case (i, c) => (i, c.toSeq) }
     val ranked = cents.map { case (i, c) =>
       val cArr = typedLit(c)
       val c2 = c.map(x => x * x).sum
@@ -2551,7 +2272,7 @@ object Similarity {
     val base = emb.where(col("vec_id") < maxId)
       .select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val a = base.select(col("vec_id").as("a"), col("e").as("ea"), col("nrm").as("na"))
     val b = base.select(col("vec_id").as("b"), col("e").as("eb"), col("nrm").as("nb"))
     Scoped(a.join(b, col("a") < col("b"))

@@ -187,8 +187,8 @@ object IngestPipeline {
 
   /** Start the unified ingest: `docs` is an unbounded stream of
     * (doc_id, text, embedding) rows; the index at `indexPath` must
-    * already exist (any `ivfSave`/`pqSave`/`opqSave`/`ivfPqSave`
-    * layout — batches ride its frozen quantizer). Default trigger is
+    * already exist (any `ivfSave`/`pqSave`/`binSave` layout —
+    * batches ride its frozen quantizer). Default trigger is
     * a continuous micro-batch loop; pass `Trigger.AvailableNow()` for
     * a one-shot backfill (availability snapshots at query start, as
     * with the standalone loops). */

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, length, size}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Scoped
 import graft.operators.Similarity
-import graft.operators.Similarity.{ListCodec, StoreLayout}
-import graft.operators.Similarity.StoreLayout._
+import graft.operators.Similarity.StoreLayout
 
 /** Continuous embedding ingest into a persisted IVF index — the vector
   * half of `IngestDedup`: an unbounded feed of (vec_id, embedding) rows
@@ -18,14 +17,13 @@ import graft.operators.Similarity.StoreLayout._
   * (freshness/storage.py:85-151), applied to an ANN index instead of a
   * kept-document set.
   *
-  * Each micro-batch is ONE `Similarity.ivfAppendSave` call: assign the
+  * Each micro-batch is ONE `Similarity.appendSave` call: assign the
   * batch against the saved (frozen) centroids — broadcast, no list
   * scan, no refit — and append the assigned rows to the partitioned
   * store. Per-batch cost is O(batch), independent of the store size;
   * the quantizer refits only when drift demands it (rebuild + `ivfSave`
-  * to a new path, the offline path). Works for float and SQ8 stores
-  * alike — `ivfAppendSave` re-encodes per batch based on the store's
-  * own schema.
+  * to a new path, the offline path). Works for every saved layout —
+  * `appendSave` re-encodes per batch in the store's own codec.
   *
   * Delivery: restart replays the in-flight micro-batch, so the store
   * is at-least-once — searches tolerate the duplicate rows (same vid,
@@ -53,22 +51,8 @@ object IngestVectors {
 
   /** `processBatch` for a batch the caller knows is non-empty: the
     * append alone, no count. */
-  private[streaming] def append(batch: DataFrame, indexPath: String): Unit = {
-    val spark = batch.sparkSession
-    layoutAt(spark, indexPath) match {
-      case Ivf(codec, _) => Similarity.ivfAppendAs(spark, indexPath, batch, codec)
-      case OpqIvfPq => Similarity.ivfOpqAppendSave(spark, indexPath, batch)
-      case IvfPq => Similarity.ivfPqAppendSave(spark, indexPath, batch)
-      case FlatOpq => Similarity.opqAppendSave(spark, indexPath, batch)
-      case FlatPq => Similarity.pqAppendSave(spark, indexPath, batch)
-      case FlatBin => Similarity.binAppendSave(spark, indexPath, batch)
-    }
-  }
-
-  private def layoutAt(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String): StoreLayout =
-    StoreLayout.at(spark, indexPath).getOrElse(throw new IllegalArgumentException(
-      s"$indexPath is not an ivfSave/ivfPqSave/ivfOpqSave/opqSave/pqSave/binSave store"))
+  private[streaming] def append(batch: DataFrame, indexPath: String): Unit =
+    Similarity.appendSave(batch.sparkSession, indexPath, batch)
 
   /** Search a batch of query vectors against whatever saved layout
     * lives at `indexPath` — the read face of the ingest loop and the
@@ -76,10 +60,12 @@ object IngestVectors {
     * mine its top-k neighbors among EVERYTHING INGESTED SO FAR in
     * O(batch · nProbe · clusterRows) (IVF tiers) or O(batch · m·kSub +
     * batch · codes) ADC (flat PQ/OPQ), never touching kept text and
-    * never rescanning the corpus. Same layout detection as
-    * `processBatch`; `nProbe` applies to the IVF layouts. Returns
-    * (qid, rnk, vid) materialized: the loaded store is released before
-    * returning and the scope owns only the result.
+    * never rescanning the corpus. The store opens through its
+    * `StoreLayout` (the same detection as `processBatch`; a sign-code
+    * store first checks the query dim against its code width);
+    * `nProbe` applies to the IVF layouts. Returns (qid, rnk, vid)
+    * materialized: the loaded store is released before returning and
+    * the scope owns only the result.
     *
     * `scanFrac` is the recall-stable dial for LONG-LIVED callers (the
     * ingest loop's pair mining): a fixed `nProbe` silently shrinks the
@@ -97,55 +83,8 @@ object IngestVectors {
                   scanFrac: Option[Double] = None): Scoped[DataFrame] = {
     val spark = queries.sparkSession
     val probes = Similarity.probeRule(nProbe, scanFrac)
-    // BinHamming min-clamps mismatched code lengths (the DotProduct
-    // discipline), so a query dim that differs from the store's code
-    // width would yield a truncated-but-plausible ranking with no
-    // error anywhere. In the ingest path that is always a
-    // misconfiguration — fail loudly before searching. One limit-1
-    // scan per side; skipped when either side is empty.
-    def requireBinDim(codes: DataFrame): Unit = {
-      val storeLen = codes.select(length(col("bc"))).limit(1).collect()
-      val qDim = queries.select(size(col("embedding"))).limit(1).collect()
-      if (storeLen.nonEmpty && qDim.nonEmpty) {
-        val sl = storeLen(0).getInt(0)
-        val qd = qDim(0).getInt(0)
-        require((qd + 7) / 8 == sl,
-          s"query embedding dim $qd encodes to ${(qd + 7) / 8}-byte sign " +
-            s"codes but the store at $indexPath holds $sl-byte codes — " +
-            "store/query dimensionality mismatch")
-      }
-    }
-    // each loaded index is scoped before it is searched, so a search
-    // that throws (the dim check) still releases it
-    val res: Scoped[DataFrame] = layoutAt(spark, indexPath) match {
-      case ivf: Ivf =>
-        val idx = Similarity.ivfOpen(spark, indexPath, ivf)
-        Scoped(idx)(idx.release()).map { idx =>
-          if (ivf.codec == ListCodec.Bin) requireBinDim(idx.assigned)
-          Similarity.probeSearch(idx, ivf.codec, queries, k, probes(idx.nList))
-        }
-      case OpqIvfPq =>
-        val idx = Similarity.ivfOpqLoad(spark, indexPath)
-        Scoped(idx)(idx.release())
-          .map(idx => Similarity.ivfOpqSearch(idx, queries, k, probes(idx.pq.nList)))
-      case IvfPq =>
-        val idx = Similarity.ivfPqLoad(spark, indexPath)
-        Scoped(idx)(idx.release())
-          .map(idx => Similarity.ivfPqSearch(idx, queries, k, probes(idx.nList)))
-      case FlatOpq =>
-        val idx = Similarity.opqLoad(spark, indexPath)
-        Scoped(idx)(idx.release()).map(Similarity.opqSearch(_, queries, k))
-      case FlatPq =>
-        val idx = Similarity.pqLoad(spark, indexPath)
-        Scoped(idx)(idx.release()).map(Similarity.pqSearch(_, queries, k))
-      case FlatBin =>
-        val idx = Similarity.binLoad(spark, indexPath)
-        Scoped(idx)(idx.release()).map { idx =>
-          requireBinDim(idx.coded)
-          Similarity.binSearch(idx, queries, k)
-        }
-    }
-    res.materialize
+    StoreLayout.of(spark, indexPath).open(spark, indexPath)
+      .map(_(queries, k, probes)).materialize
   }
 
   /** Skew-gated offline maintenance for an `ivfSave` IVF store — the
@@ -164,9 +103,11 @@ object IngestVectors {
     * append). Batches that land AFTER this returns and BEFORE the
     * reader swap are the supervisor's half of the contract: call
     * `ivfReplayGap(old, new)` once more at swap time — it is
-    * idempotent and O(gap). Below the threshold: one nList-row
-    * aggregation, nothing written, false. IVF float/SQ8 stores only
-    * (the PQ tiers refit codebooks via their own build path).
+    * idempotent and O(gap). Below the thresholds: one nList-row
+    * aggregation (plus a count of the lists it cached when a growth
+    * target is set), nothing written, false. IVF float/SQ8 stores
+    * only (the PQ family refits from its source corpus,
+    * `Similarity.pqMaintainIfDrifted`).
     *
     * `targetClusterRows` adds the GROWTH gate the append-only loop
     * needs alongside the skew gate: frozen nList means mean list
@@ -186,16 +127,10 @@ object IngestVectors {
                     dstPath: String, targetClusterRows: Long = 0L,
                     sampleFit: Boolean = false): Boolean = {
     val idx = Similarity.ivfLoad(spark, indexPath)
-    val r = Similarity.ivfListStats(idx)
-      .agg(org.apache.spark.sql.functions.max(col("n_vecs")),
-        org.apache.spark.sql.functions.sum(col("n_vecs"))).head()
-    val total = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val skew =
-      if (total == 0L) 1.0
-      else r.getLong(0).toDouble / (total.toDouble / idx.nList)
-    val meanOcc = if (idx.nList == 0) 0.0 else total.toDouble / idx.nList
-    val grown = targetClusterRows > 0L && meanOcc > 2.0 * targetClusterRows
-    if (skew > maxSkew || grown) {
+    // the growth gate's row count reads the lists the skew cached
+    lazy val total = idx.assigned.count()
+    if (Similarity.ivfSkew(idx) > maxSkew || targetClusterRows > 0L && idx.nList > 0 &&
+        total.toDouble / idx.nList > 2.0 * targetClusterRows) {
       val k =
         if (targetClusterRows > 0L)
           math.max(idx.nList,

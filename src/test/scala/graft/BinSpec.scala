@@ -118,12 +118,12 @@ class BinSpec extends SparkSpec {
     val idx = Similarity.ivfBuildBin(all.where($"vec_id" >= 20 && $"vec_id" < 400), 4)
     val qs = all.where($"vec_id" < 5)
     try {
-      val before = Similarity.ivfSearchBin(idx, qs, 5, nProbe = 4)
+      val before = Similarity.ivfSearch(idx, qs, 5, nProbe = 4)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       Similarity.ivfSave(idx, dir)
       val loaded = Similarity.ivfLoad(spark, dir)
       try {
-        val after = Similarity.ivfSearchBin(loaded, qs, 5, nProbe = 4)
+        val after = Similarity.ivfSearch(loaded, qs, 5, nProbe = 4)
           .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
         assert(after == before)
         // sign codes are not reconstructible: rebalance must refuse

@@ -91,13 +91,13 @@ class CompactionSpec extends SparkSpec {
 
     // IVF,PQ store (list_id-partitioned codes): layout survives
     val ipqDir = tmp("cmp_ipq")
-    val ii = Similarity.ivfPqBuild(all.where($"vec_id" < 400), 4)
-    try Similarity.ivfPqSave(ii, ipqDir) finally ii.release()
+    val ii = Similarity.pqBuild(all.where($"vec_id" < 400), nList = 4)
+    try Similarity.pqSave(ii, ipqDir) finally ii.release()
     IngestVectors.processBatch(batch, ipqDir)
     IngestVectors.processBatch(batch, ipqDir)
     assert(spark.read.parquet(s"$ipqDir/codes").count() == 500)
     assert(Similarity.codesCompact(spark, ipqDir) == 450)
-    val reload = Similarity.ivfPqLoad(spark, ipqDir)
+    val reload = Similarity.pqLoad(spark, ipqDir)
     try assert(reload.coded.select("vid").distinct().count() == 450)
     finally reload.release()
   }

@@ -7,7 +7,7 @@ import graft.streaming.IngestVectors
 
 /** Streaming vector ingest into a persisted IVF index: batches append
   * against frozen centroids while searches keep working from reloads,
-  * and the streamed store equals the batch `ivfAppendSave` fold. */
+  * and the streamed store equals the batch `appendSave` fold. */
 class IngestVectorsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -74,15 +74,15 @@ class IngestVectorsSpec extends SparkSpec {
     } finally pqLoaded.release()
 
     val opqDir = tmp("ingv_opq")
-    val opqIdx = Similarity.opqBuild(all.where($"vec_id" >= 25 && $"vec_id" < 400))
-    try Similarity.opqSave(opqIdx, opqDir) finally opqIdx.release()
+    val opqIdx = Similarity.pqBuild(all.where($"vec_id" >= 25 && $"vec_id" < 400), opq = true)
+    try Similarity.pqSave(opqIdx, opqDir) finally opqIdx.release()
     val opqBase = spark.read.parquet(s"$opqDir/codes").count()
     assert(IngestVectors.processBatch(batch, opqDir) == 5)
     assert(spark.read.parquet(s"$opqDir/codes").count() == opqBase + 5)
     // the appended twin rode the FROZEN rotation: ADC self-match holds
-    val opqLoaded = Similarity.opqLoad(spark, opqDir)
+    val opqLoaded = Similarity.pqLoad(spark, opqDir)
     try {
-      val self = Similarity.opqSearch(opqLoaded, all.where($"vec_id" === 22), 1)
+      val self = Similarity.pqSearch(opqLoaded, all.where($"vec_id" === 22), 1)
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
       assert(self == Seq((22L, 10022L)), s"twin not nearest: $self")
     } finally opqLoaded.release()
@@ -90,9 +90,9 @@ class IngestVectorsSpec extends SparkSpec {
     // OPQ,IVF,PQ store: rot/ + centroids/ dispatches to the rotated
     // append, and the appended twin is searchable through searchBatch
     val iopqDir = tmp("ingv_ivfopq")
-    val iopqIdx = Similarity.ivfOpqBuild(
-      all.where($"vec_id" >= 25 && $"vec_id" < 400), 4)
-    try Similarity.ivfOpqSave(iopqIdx, iopqDir) finally iopqIdx.release()
+    val iopqIdx = Similarity.pqBuild(
+      all.where($"vec_id" >= 25 && $"vec_id" < 400), nList = 4, opq = true)
+    try Similarity.pqSave(iopqIdx, iopqDir) finally iopqIdx.release()
     val iopqBase = spark.read.parquet(s"$iopqDir/codes").count()
     assert(IngestVectors.processBatch(batch, iopqDir) == 5)
     assert(spark.read.parquet(s"$iopqDir/codes").count() == iopqBase + 5)
@@ -103,14 +103,14 @@ class IngestVectorsSpec extends SparkSpec {
     }
 
     val ivfpqDir = tmp("ingv_ivfpq")
-    val ipqIdx = Similarity.ivfPqBuild(all.where($"vec_id" >= 25 && $"vec_id" < 400), 4)
-    try Similarity.ivfPqSave(ipqIdx, ivfpqDir) finally ipqIdx.release()
+    val ipqIdx = Similarity.pqBuild(all.where($"vec_id" >= 25 && $"vec_id" < 400), nList = 4)
+    try Similarity.pqSave(ipqIdx, ivfpqDir) finally ipqIdx.release()
     val ipqBase = spark.read.parquet(s"$ivfpqDir/codes").count()
     assert(IngestVectors.processBatch(batch, ivfpqDir) == 5)
     assert(spark.read.parquet(s"$ivfpqDir/codes").count() == ipqBase + 5)
-    val ipqLoaded = Similarity.ivfPqLoad(spark, ivfpqDir)
+    val ipqLoaded = Similarity.pqLoad(spark, ivfpqDir)
     try {
-      val self = Similarity.ivfPqSearch(ipqLoaded,
+      val self = Similarity.pqSearch(ipqLoaded,
         all.where($"vec_id" === 22), 1, 4)
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
       assert(self == Seq((22L, 10022L)), s"twin not nearest: $self")
@@ -361,13 +361,13 @@ class IngestVectorsSpec extends SparkSpec {
         ivfCompact),
       ("IVF 1-bit", saved(Similarity.ivfBuildBin(corpus, 4))(Similarity.ivfSave)(_.release()),
         ivfCompact),
-      ("IVF,PQ", saved(Similarity.ivfPqBuild(corpus, 4))(Similarity.ivfPqSave)(_.release()),
+      ("IVF,PQ", saved(Similarity.pqBuild(corpus, nList = 4))(Similarity.pqSave)(_.release()),
         codesCompact),
-      ("OPQ,IVF,PQ", saved(Similarity.ivfOpqBuild(corpus, 4))(Similarity.ivfOpqSave)(_.release()),
+      ("OPQ,IVF,PQ", saved(Similarity.pqBuild(corpus, nList = 4, opq = true))(Similarity.pqSave)(_.release()),
         codesCompact),
       ("flat PQ", saved(Similarity.pqBuild(corpus))(Similarity.pqSave)(_.release()),
         codesCompact),
-      ("flat OPQ", saved(Similarity.opqBuild(corpus))(Similarity.opqSave)(_.release()),
+      ("flat OPQ", saved(Similarity.pqBuild(corpus, opq = true))(Similarity.pqSave)(_.release()),
         codesCompact),
       ("flat 1-bit", saved(Similarity.binBuild(corpus))(Similarity.binSave)(_.release()),
         codesCompact))

@@ -78,14 +78,14 @@ class IvfRebalanceSpec extends SparkSpec {
     val idx = Similarity.ivfAppend(built, drifted)
     val codesBefore = idx.assigned.select("vid", "qc").collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toMap
-    val exhaustBefore = Similarity.ivfSearchSq8(idx, queries, k = 5, nProbe = 4)
+    val exhaustBefore = Similarity.ivfSearch(idx, queries, k = 5, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val reb = Similarity.ivfRebalance(idx)
     assert(reb.assigned.columns.contains("qc")) // stays quantized
     val codesAfter = reb.assigned.select("vid", "qc").collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toMap
     assert(codesAfter == codesBefore)
-    val exhaustAfter = Similarity.ivfSearchSq8(reb, queries, k = 5, nProbe = 4)
+    val exhaustAfter = Similarity.ivfSearch(reb, queries, k = 5, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(exhaustAfter == exhaustBefore)
     reb.release()

@@ -76,26 +76,26 @@ class OpqSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("opqidx").toString
     val corpus = testEmb.where(col("vec_id") >= 10 && col("vec_id") < 400)
     val queries = testEmb.where(col("vec_id") < 10)
-    val built = Similarity.opqBuild(corpus)
+    val built = Similarity.pqBuild(corpus, opq = true)
     try {
-      val before = Similarity.opqSearch(built, queries, 5).collect().toSeq
-      Similarity.opqSave(built, dir)
-      val loaded = Similarity.opqLoad(spark, dir)
+      val before = Similarity.pqSearch(built, queries, 5).collect().toSeq
+      Similarity.pqSave(built, dir)
+      val loaded = Similarity.pqLoad(spark, dir)
       try {
-        assert(java.util.Arrays.equals(loaded.rot, built.rot))
-        val after = Similarity.opqSearch(loaded, queries, 5).collect().toSeq
+        assert(java.util.Arrays.equals(loaded.rot.get, built.rot.get))
+        val after = Similarity.pqSearch(loaded, queries, 5).collect().toSeq
         assert(before == after)
         assert(before.size == 50)
       } finally loaded.release()
       // append the held-out tail; appended vectors must be findable
-      Similarity.opqAppendSave(spark, dir,
+      Similarity.appendSave(spark, dir,
         testEmb.where(col("vec_id") >= 400))
-      val grown = Similarity.opqLoad(spark, dir)
+      val grown = Similarity.pqLoad(spark, dir)
       try {
-        val n = grown.pq.coded.count()
+        val n = grown.coded.count()
         assert(n == testEmb.where(col("vec_id") >= 10).count())
         // a vector searches for itself: its own id must rank first
-        val self = Similarity.opqSearch(grown,
+        val self = Similarity.pqSearch(grown,
           testEmb.where(col("vec_id") === 450).select(
             col("vec_id"), col("embedding")), 1).collect()
         assert(self.head.getLong(2) == 450L)
@@ -122,22 +122,22 @@ class OpqSpec extends SparkSpec {
     val b = emb(tight(1000 until 1300, 22))
     val dir = java.nio.file.Files.createTempDirectory("opq_drift").toString
     val src = s"$dir/g0"; val dst = s"$dir/g1"
-    val built = Similarity.opqBuild(a, m = 4, kSub = 16, iters = 4)
-    try Similarity.opqSave(built, src) finally built.release()
+    val built = Similarity.pqBuild(a, m = 4, kSub = 16, opq = true, iters = 4)
+    try Similarity.pqSave(built, src) finally built.release()
 
-    val inDist = Similarity.opqDriftRatio(spark, src, emb(cloud(2000 until 2400, 23)))
+    val inDist = Similarity.pqDriftRatio(spark, src, emb(cloud(2000 until 2400, 23)))
     info(s"in-distribution drift ratio = $inDist")
     assert(inDist < 2.0, s"in-distribution should be ~1: $inDist")
-    val drifted = Similarity.opqDriftRatio(spark, src, b)
+    val drifted = Similarity.pqDriftRatio(spark, src, b)
     info(s"drifted ratio = $drifted")
     assert(drifted > 3.0, s"drift should dominate: $drifted")
 
-    assert(!Similarity.opqMaintainIfDrifted(spark, src, b, a.union(b),
+    assert(!Similarity.pqMaintainIfDrifted(spark, src, b, a.union(b),
       maxRatio = drifted + 1.0, dstPath = dst))
     assert(!new java.io.File(dst).exists())
-    assert(Similarity.opqMaintainIfDrifted(spark, src, b, a.union(b),
+    assert(Similarity.pqMaintainIfDrifted(spark, src, b, a.union(b),
       maxRatio = 2.0, dstPath = dst))
-    val repaired = Similarity.opqDriftRatio(spark, dst, b)
+    val repaired = Similarity.pqDriftRatio(spark, dst, b)
     info(s"repaired ratio = $repaired")
     assert(repaired < drifted / 2, s"refit should repair: $drifted -> $repaired")
   }
@@ -158,42 +158,64 @@ class OpqSpec extends SparkSpec {
     val burst = emb(region(2, 100 until 160, 33) ++ region(3, 160 until 220, 34))
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_drift").toString
     val src = s"$dir/g0"; val dst = s"$dir/g1"
-    val built = Similarity.ivfPqBuild(a, nList = 4, m = 4, kSub = 16)
-    try Similarity.ivfPqSave(built, src) finally built.release()
+    val built = Similarity.pqBuild(a, m = 4, kSub = 16, nList = 4)
+    try Similarity.pqSave(built, src) finally built.release()
     assert(Similarity.ivfPqListStats(spark, src).collect().length == 4)
     val skew0 = Similarity.ivfPqSkew(spark, src)
     info(s"built skew = $skew0")
 
     // balanced + in-distribution: no-op under both gates
-    assert(!Similarity.ivfPqMaintainIfDrifted(spark, src, a, a,
+    assert(!Similarity.pqMaintainIfDrifted(spark, src, a, a,
       maxSkew = 3.0, maxRatio = 50.0, dstPath = dst))
 
-    Similarity.ivfPqAppendSave(spark, src, burst)
+    Similarity.appendSave(spark, src, burst)
     val skewDrift = Similarity.ivfPqSkew(spark, src)
     info(s"skew after burst = $skewDrift")
     assert(skewDrift >= 1.6, s"burst should skew: $skewDrift") // measured 1.78
-    assert(Similarity.ivfPqMaintainIfDrifted(spark, src, burst, a.union(burst),
+    assert(Similarity.pqMaintainIfDrifted(spark, src, burst, a.union(burst),
       maxSkew = 1.5, maxRatio = 50.0, dstPath = dst))
     val skewAfter = Similarity.ivfPqSkew(spark, dst)
     info(s"skew after refit = $skewAfter")
     assert(skewAfter < skewDrift, s"refit should balance: $skewDrift -> $skewAfter")
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqMaintainIfDrifted(spark, src, burst, a, 1.5, 50.0, src)
+      Similarity.pqMaintainIfDrifted(spark, src, burst, a, 50.0, src, maxSkew = 1.5)
     }
 
     // growth gate (round 8): a balanced, in-distribution store whose
     // occupancy passed 2×target still refits, with nList scaled to the
     // store (280 rows → ⌈280/30⌉ = 10) through the bounded sample fit
     val more = emb(region(0, 300 until 340, 35) ++ region(1, 340 until 380, 36))
-    Similarity.ivfPqAppendSave(spark, dst, more)
+    Similarity.appendSave(spark, dst, more)
     val g2 = s"$dir/g2"
     val all2 = a.union(burst).union(more)
-    assert(!Similarity.ivfPqMaintainIfDrifted(spark, dst, more, all2,
+    assert(!Similarity.pqMaintainIfDrifted(spark, dst, more, all2,
       maxSkew = 100.0, maxRatio = 1e9, dstPath = g2))
-    assert(Similarity.ivfPqMaintainIfDrifted(spark, dst, more, all2,
+    assert(Similarity.pqMaintainIfDrifted(spark, dst, more, all2,
       maxSkew = 100.0, maxRatio = 1e9, dstPath = g2,
       targetClusterRows = 30L, sampleFit = true))
     assert(Similarity.ivfPqListStats(spark, g2).collect().length == 10)
     assert(spark.read.parquet(s"$g2/codes").count() == 280)
+  }
+
+  test("the drift rule rejects a kSub-sized sample on a rotated store too") {
+    import spark.implicits._
+    def cloud(ids: Range, seed: Int) = {
+      val rng = new scala.util.Random(seed)
+      ids.map(i => (i.toLong, Seq.fill(16)(rng.nextFloat() * 2 - 1)))
+        .toDF("vec_id", "embedding")
+        .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("opq_drift_small").toString
+    val built = Similarity.pqBuild(cloud(0 until 300, 51), m = 4, kSub = 16,
+      opq = true, iters = 4)
+    try Similarity.pqSave(built, dir) finally built.release()
+    // 16 points against kSub = 16: the fresh alternation would memorise them
+    val e = intercept[IllegalArgumentException] {
+      Similarity.pqDriftRatio(spark, dir, cloud(1000 until 1016, 52))
+    }
+    assert(e.getMessage.contains("16 points") && e.getMessage.contains("kSub = 16"),
+      e.getMessage)
+    // one point more is a real sample: a finite ratio comes back
+    assert(!Similarity.pqDriftRatio(spark, dir, cloud(1000 until 1017, 52)).isInfinite)
   }
 }

@@ -62,9 +62,9 @@ class PqSpec extends SparkSpec {
     val recall = (gold & ivfpq).size.toDouble / gold.size
     info(s"ivfpq (nList=8, nProbe=3, m=16, kSub=256) recall@10 = $recall")
     assert(recall >= 0.5, s"recall $recall") // list misses stack on ADC error
-    val index = Similarity.ivfPqBuild(testEmb.where(col("vec_id") >= 20), 8)
+    val index = Similarity.pqBuild(testEmb.where(col("vec_id") >= 20), nList = 8)
     try {
-      val re = Similarity.ivfPqSearchRefine(index,
+      val re = Similarity.pqSearchRefine(index,
         testEmb.where(col("vec_id") < 20), testEmb, 10, nProbe = 3)
       val reRecall = (gold & pairs(re)).size.toDouble / gold.size
       info(s"ivfpq+refine recall@10 = $reRecall")
@@ -79,13 +79,13 @@ class PqSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpqidx").toString
     val corpus = testEmb.where(col("vec_id") >= 10)
     val queries = testEmb.where(col("vec_id") < 10)
-    val built = Similarity.ivfPqBuild(corpus, 8)
+    val built = Similarity.pqBuild(corpus, nList = 8)
     try {
-      val before = Similarity.ivfPqSearch(built, queries, 5, 3).collect().toSeq
-      Similarity.ivfPqSave(built, dir)
-      val loaded = Similarity.ivfPqLoad(spark, dir)
+      val before = Similarity.pqSearch(built, queries, 5, 3).collect().toSeq
+      Similarity.pqSave(built, dir)
+      val loaded = Similarity.pqLoad(spark, dir)
       try {
-        val after = Similarity.ivfPqSearch(loaded, queries, 5, 3).collect().toSeq
+        val after = Similarity.pqSearch(loaded, queries, 5, 3).collect().toSeq
         assert(before == after)
         assert(before.size == 50)
       } finally loaded.release()
@@ -101,7 +101,7 @@ class PqSpec extends SparkSpec {
     val queries = testEmb.where(col("vec_id") < 10)
     val built = Similarity.pqBuild(initial)
     try Similarity.pqSave(built, dir) finally built.release()
-    Similarity.pqAppendSave(spark, dir, batch)
+    Similarity.appendSave(spark, dir, batch)
     val loaded = Similarity.pqLoad(spark, dir)
     try {
       assert(loaded.coded.count() == 490)
@@ -165,5 +165,30 @@ class PqSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.pqMaintainIfDrifted(spark, src, b, a, 2.0, src)
     }
+  }
+
+  test("pqDriftRatio rejects a recent sample no larger than kSub, and maintenance refits nothing") {
+    import spark.implicits._
+    // fresh books fit min(kSub, points) centroids from distinct picks:
+    // on a kSub-point sample they memorise it (distortion 0), so the
+    // ratio would be +inf and every store would refit on every batch
+    def cloud(ids: Range, seed: Int) = {
+      val rng = new scala.util.Random(seed)
+      ids.map(i => (i.toLong, Seq.fill(16)(rng.nextFloat() * 2 - 1)))
+        .toDF("vec_id", "embedding")
+        .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("pq_drift_small").toString
+    val src = s"$dir/g0"; val dst = s"$dir/g1"
+    val built = Similarity.pqBuild(cloud(0 until 300, 41), m = 4, kSub = 16)
+    try Similarity.pqSave(built, src) finally built.release()
+    val small = cloud(1000 until 1016, 42) // exactly kSub points
+    val e = intercept[IllegalArgumentException](Similarity.pqDriftRatio(spark, src, small))
+    assert(e.getMessage.contains("16 points") && e.getMessage.contains("kSub = 16"),
+      e.getMessage)
+    intercept[IllegalArgumentException] {
+      Similarity.pqMaintainIfDrifted(spark, src, small, cloud(0 until 300, 41), 2.0, dst)
+    }
+    assert(!new java.io.File(dst).exists())
   }
 }

@@ -68,7 +68,7 @@ class SimilaritySpec extends SparkSpec {
       assert(second == oneShot.filter(_._1 == 0L))
       // each query's exact duplicate ranks first
       assert(viaIndex.contains((0L, 1, 70L)) && viaIndex.contains((1L, 1, 80L)))
-      assert(index.centroids.count() == 4)
+      assert(index.centroids.length == 4)
       // the recall-stable dial: scanFrac resolves to ⌈nList·f⌉ probes —
       // 0.5 of 4 lists == nProbe 2 row-for-row, and scanFrac = 1.0 is
       // the exhaustive dial (equal to probing every list)
@@ -156,7 +156,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ivfSave(idx2, dir)
       val batch2 = all.where($"vec_id" >= 25 && $"vec_id" < 30)
         .select(($"vec_id" + 20000L).as("vec_id"), $"embedding")
-      Similarity.ivfAppendSave(spark, dir, batch2)
+      Similarity.appendSave(spark, dir, batch2)
       val loaded = Similarity.ivfLoad(spark, dir)
       try {
         assert(loaded.assigned.count() == idx2.assigned.count() + 5)
@@ -389,12 +389,12 @@ class SimilaritySpec extends SparkSpec {
     } finally sq8Built.release()
     // PQ store
     val pDir = java.nio.file.Files.createTempDirectory("knn_ivfpq").toString
-    val pqBuilt = Similarity.ivfPqBuild(d, nList = 4, m = 4)
+    val pqBuilt = Similarity.pqBuild(d, m = 4, nList = 4)
     try {
       val before = Similarity.knnJoinPqIndexed(d, pqBuilt, 5, nProbe = 2)
         .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-      Similarity.ivfPqSave(pqBuilt, pDir)
-      val loaded = Similarity.ivfPqLoad(spark, pDir)
+      Similarity.pqSave(pqBuilt, pDir)
+      val loaded = Similarity.pqLoad(spark, pDir)
       try {
         val after = Similarity.knnJoinPqIndexed(d, loaded, 5, nProbe = 2)
           .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
@@ -403,25 +403,25 @@ class SimilaritySpec extends SparkSpec {
     } finally pqBuilt.release()
     // OPQ store (rotation + IVF,PQ — the quartet's fourth member)
     val oDir = java.nio.file.Files.createTempDirectory("knn_ivfopq").toString
-    val opqBuilt = Similarity.ivfOpqBuild(d, nList = 4, m = 4, iters = 4)
+    val opqBuilt = Similarity.pqBuild(d, m = 4, nList = 4, opq = true, iters = 4)
     try {
-      val before = Similarity.knnJoinOpqIndexed(d, opqBuilt, 5, nProbe = 2)
+      val before = Similarity.knnJoinPqIndexed(d, opqBuilt, 5, nProbe = 2)
         .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       // the one-call scoped form must agree with its own build when the
       // dials match (targetClusterRows sized so autoK lands on nList=4
       // is corpus-dependent, so pin indexed-vs-indexed reload instead)
-      Similarity.ivfOpqSave(opqBuilt, oDir)
-      val loaded = Similarity.ivfOpqLoad(spark, oDir)
+      Similarity.pqSave(opqBuilt, oDir)
+      val loaded = Similarity.pqLoad(spark, oDir)
       try {
         assert(loaded.dim == opqBuilt.dim &&
-          loaded.rot.toSeq == opqBuilt.rot.toSeq)
-        val after = Similarity.knnJoinOpqIndexed(d, loaded, 5, nProbe = 2)
+          loaded.rot.get.toSeq == opqBuilt.rot.get.toSeq)
+        val after = Similarity.knnJoinPqIndexed(d, loaded, 5, nProbe = 2)
           .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
         assert(after == before)
-        // ivfOpqSearch is reload-stable too (same rotation, lists, LUTs)
+        // pqSearch is reload-stable too (same rotation, lists, LUTs)
         val qs = d.where(org.apache.spark.sql.functions.col("vec_id") < 5)
-        def srch(ix: Similarity.IvfOpqIndex) =
-          Similarity.ivfOpqSearch(ix, qs, 3, nProbe = 4)
+        def srch(ix: Similarity.PqIndex) =
+          Similarity.pqSearch(ix, qs, 3, nProbe = 4)
             .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
         assert(srch(loaded) == srch(opqBuilt))
       } finally loaded.release()
@@ -464,14 +464,14 @@ class SimilaritySpec extends SparkSpec {
       assert(recall(si) >= 0.9, s"sampleFit probed recall ${recall(si)} < 0.9")
 
       // append consistency: the build-time codegen assignment and
-      // ivfAppendSave's assignToLists share metric AND tie order, so a
+      // appendSave's assignToLists share metric AND tie order, so a
       // re-keyed twin lands in its original's list exactly
       val dir = java.nio.file.Files.createTempDirectory("ivf_sfit").toString
       Similarity.ivfSave(si, dir)
       val twins = d.select(
         (org.apache.spark.sql.functions.col("vec_id") + 10000L).as("vec_id"),
         org.apache.spark.sql.functions.col("embedding"))
-      Similarity.ivfAppendSave(spark, dir, twins)
+      Similarity.appendSave(spark, dir, twins)
       val lists = spark.read.parquet(s"$dir/assigned")
         .select("vid", "list_id").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -481,11 +481,11 @@ class SimilaritySpec extends SparkSpec {
 
     // IVF,PQ: codes depend only on the (sample-fit) books, so the
     // exhaustive ADC ranking is coarse-fit-invariant bit-for-bit
-    val mp = Similarity.ivfPqBuild(d, 4, m = 4)
-    val sp = Similarity.ivfPqBuild(d, 4, m = 4, sampleFit = true)
+    val mp = Similarity.pqBuild(d, m = 4, nList = 4)
+    val sp = Similarity.pqBuild(d, m = 4, nList = 4, sampleFit = true)
     try {
-      def run(ix: Similarity.IvfPqIndex) =
-        Similarity.ivfPqSearch(ix, qs, 5, nProbe = 4)
+      def run(ix: Similarity.PqIndex) =
+        Similarity.pqSearch(ix, qs, 5, nProbe = 4)
           .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       assert(run(sp) == run(mp))
     } finally { mp.release(); sp.release() }

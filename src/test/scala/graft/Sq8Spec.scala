@@ -73,7 +73,7 @@ class Sq8Spec extends SparkSpec {
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding")
     val index = Similarity.ivfBuildSq8(all.where($"vec_id" >= 1), nList = 4)
     try {
-      val hits = Similarity.ivfSearchSq8(index, all.where($"vec_id" < 1), 3, nProbe = 2)
+      val hits = Similarity.ivfSearch(index, all.where($"vec_id" < 1), 3, nProbe = 2)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       // an exact duplicate quantizes to the identical code -> cos 1.0
       assert(hits.head == ((0L, 1, 90L)))
@@ -81,7 +81,7 @@ class Sq8Spec extends SparkSpec {
       Similarity.ivfSave(index, dir)
       val loaded = Similarity.ivfLoad(spark, dir)
       try {
-        val after = Similarity.ivfSearchSq8(loaded, all.where($"vec_id" < 1), 3, nProbe = 2)
+        val after = Similarity.ivfSearch(loaded, all.where($"vec_id" < 1), 3, nProbe = 2)
           .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
         assert(after == hits)
       } finally loaded.release()
@@ -96,7 +96,7 @@ class Sq8Spec extends SparkSpec {
     try {
       val gold = Similarity.ivfSearch(fl, queries, 10, nProbe = 3).collect()
         .map(r => (r.getLong(0), r.getLong(2))).toSet
-      val quant = Similarity.ivfSearchSq8(sq, queries, 10, nProbe = 3).collect()
+      val quant = Similarity.ivfSearch(sq, queries, 10, nProbe = 3).collect()
         .map(r => (r.getLong(0), r.getLong(2))).toSet
       val agree = (gold & quant).size.toDouble / gold.size
       info(s"sq8 IVF agreement@10 = $agree")
@@ -113,7 +113,7 @@ class Sq8Spec extends SparkSpec {
     try {
       assert(idx2.assigned.columns.contains("qc"), "append must keep the code column")
       // identical vector -> identical code -> cos exactly 1.0 with its twin
-      val hits = Similarity.ivfSearchSq8(idx2, testEmb.where($"vec_id" === 20), 3, 4)
+      val hits = Similarity.ivfSearch(idx2, testEmb.where($"vec_id" === 20), 3, 4)
         .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
       assert(hits.head == ((1, 20L)) && hits.map(_._2).contains(10020L), s"$hits")
     } finally idx2.release()

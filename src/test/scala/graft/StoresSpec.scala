@@ -1,0 +1,66 @@
+package graft
+
+import org.apache.spark.sql.functions.col
+import graft.core.Stores
+
+/** `core.Stores`: the memoized tiny-directory reader (store meta and
+  * the vector-index metadata tables) and the capped keyed write
+  * layout. */
+class StoresSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+
+  test("memoRows: a rewritten directory reads fresh rows; two callers' arrays never alias") {
+    val dir = tmp("memo_fresh") + "/t"
+    Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1).write.parquet(dir)
+    val (_, a1) = Stores.memoRows(spark, dir)
+    val (_, a2) = Stores.memoRows(spark, dir)
+    assert(a1.map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+    assert(a1 ne a2, "two callers share one array")
+    // one caller's in-place edit reaches neither the memo nor the other caller
+    a1(0) = null
+    assert(a2.forall(_ != null))
+    assert(Stores.memoRows(spark, dir)._2.forall(_ != null))
+    // a rewrite lists new part files: the next read returns the new rows
+    Seq((3, "c")).toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(dir)
+    assert(Stores.memoRows(spark, dir)._2.map(_.getInt(0)).toSeq == Seq(3))
+  }
+
+  test("memoRows holds at most MemoDirs directories and drops the least recently read") {
+    // one tiny parquet file, copied into MemoDirs + 1 directories
+    val src = tmp("memo_src") + "/t"
+    Seq((7, "x")).toDF("k", "v").coalesce(1).write.parquet(src)
+    val part = new java.io.File(src).listFiles().find(_.getName.endsWith(".parquet")).get
+    val dirs = (0 to Stores.MemoDirs).map { _ =>
+      val d = new java.io.File(tmp("memo_lru"), "t")
+      assert(d.mkdirs())
+      java.nio.file.Files.copy(part.toPath, new java.io.File(d, part.getName).toPath)
+      d.getPath
+    }
+    dirs.init.foreach(Stores.memoRows(spark, _))
+    assert(dirs.init.forall(Stores.memoHolds))
+    // re-read the oldest, then read one dir more: the second goes
+    Stores.memoRows(spark, dirs.head)
+    Stores.memoRows(spark, dirs.last)
+    assert(Stores.memoHolds(dirs.head) && Stores.memoHolds(dirs.last))
+    assert(!Stores.memoHolds(dirs(1)), "the least recently read dir was kept")
+    assert(dirs.count(Stores.memoHolds) == Stores.MemoDirs)
+    // an evicted dir reads again from disk
+    assert(Stores.memoRows(spark, dirs(1))._2.map(_.getInt(0)).toSeq == Seq(7))
+  }
+
+  test("writeLayout(df, maxParts, cols): one file per key from at most maxParts non-empty partitions") {
+    val df = spark.range(0, 400).repartition(8)
+      .select((col("id") % 10).cast("int").as("k"), col("id"))
+    val laid = Stores.writeLayout(df, 3, col("k"))
+    val nonEmpty = laid.rdd.mapPartitions(it => Iterator(if (it.hasNext) 1 else 0)).sum()
+    assert(nonEmpty >= 1 && nonEmpty <= 3, s"$nonEmpty non-empty partitions")
+    val dir = tmp("laid") + "/t"
+    laid.write.partitionBy("k").parquet(dir)
+    val filesPerKey = new java.io.File(dir).listFiles().filter(_.getName.startsWith("k="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(filesPerKey.length == 10 && filesPerKey.forall(_ == 1), filesPerKey.toSeq)
+    assert(spark.read.parquet(dir).count() == 400)
+  }
+}
