@@ -1,7 +1,8 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 /** Offline maintenance for the at-least-once parquet stores the
   * streaming ingest loops grow (kept docs, IVF lists, signature
@@ -203,11 +204,12 @@ object Stores {
     val fs = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val want = buckets.distinct
-    if (want.size >= nBuckets) return spark.read.parquet(dir)
+    val reader = schemaReader(spark, dir, StructField(colName, IntegerType))
+    if (want.size >= nBuckets) return reader.parquet(dir)
     val dirs = want.map(b => s"$dir/$colName=$b")
       .filter(d => fs.exists(new Path(d)))
     if (dirs.nonEmpty)
-      spark.read.option("basePath", dir).parquet(dirs: _*)
+      reader.option("basePath", dir).parquet(dirs: _*)
     else {
       // none of the probed buckets has a dir: one flat listing of the
       // root (names only — no recursion, no footers) finds a stand-in
@@ -217,9 +219,51 @@ object Stores {
           st.getPath.getName.startsWith(s"$colName=") => st.getPath.toString
       }
       one match {
-        case Some(d) => spark.read.option("basePath", dir).parquet(d)
+        case Some(d) => reader.option("basePath", dir).parquet(d)
         case None    => spark.read.parquet(dir) // no partition dirs at all
       }
+    }
+  }
+
+  /** `spark.read.parquet(dir)` without its schema-inference job (one
+    * Spark job per read, whatever the store size): the schema comes
+    * from `footerSchema`, the inferring read is the fallback. `parts`
+    * are the partition columns, as in `footerSchema`. */
+  def readParquet(spark: SparkSession, dir: String, parts: StructField*)
+      : org.apache.spark.sql.DataFrame =
+    schemaReader(spark, dir, parts: _*).parquet(dir)
+
+  private def schemaReader(spark: SparkSession, dir: String,
+                           parts: StructField*): DataFrameReader =
+    footerSchema(spark, dir, parts: _*).fold(spark.read)(spark.read.schema(_))
+
+  /** The schema `spark.read.parquet(dir)` infers, read on the driver
+    * from ONE part file's footer (Spark writes its row schema there, and
+    * inference without schema merging reads one footer too), with the
+    * partition columns `parts` appended — they live in directory names,
+    * not in the files, so the caller names them and their type. Data
+    * files are searched one directory level per partition column. None
+    * when no Spark-written part file is found. */
+  def footerSchema(spark: SparkSession, dir: String,
+                   parts: StructField*): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def firstFile(d: Path, depth: Int): Option[Path] =
+      fs.listStatus(d).iterator.filter(st => visible(st.getPath)).flatMap { st =>
+        if (st.isFile && st.getPath.getName.endsWith(".parquet")) Iterator(st.getPath)
+        else if (st.isDirectory && depth > 0) firstFile(st.getPath, depth - 1).iterator
+        else Iterator.empty
+      }.nextOption()
+    if (!fs.exists(root)) None
+    else firstFile(root, parts.length).flatMap { file =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+      val json = try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      json.map(j => StructType(DataType.fromJson(j).asInstanceOf[StructType].fields ++ parts))
     }
   }
 

@@ -170,7 +170,7 @@ object Dedup {
   // asserts the resulting recall against the exact q38 pair set.
   private val BandRows = 3
   private val Bands = 22
-  private val NumPerms = Bands * BandRows
+  private[graft] val NumPerms = Bands * BandRows
 
   // One xxhash64 per permutation, seeded by the permutation index.
   // (Measured against Kirsch–Mitzenmacher double hashing h1 + p·h2:
@@ -278,14 +278,36 @@ object Dedup {
     * at 500 k docs; measured at sf10). Band keys hash-join fine and AQE
     * may still broadcast at runtime when the exact size is genuinely
     * small. */
-  private def bandRows(sigs: DataFrame): DataFrame = {
-    val bandKeys = (0 until Bands).map { b =>
-      val ks = (b * BandRows until (b + 1) * BandRows).map(p => col(s"h$p"))
-      xxhash64(ks: _*)
-    }
+  private def bandRows(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"),
-        posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
+        posexplode(array(bandKeyCols: _*)).as(Seq("band", "bkey")))
       .hint("shuffle_hash")
+
+  /** The 22 band keys of a signature frame, one column per band (3
+    * slots hashed together) — the keys `bandRows` explodes and the
+    * ingest gate collects per batch doc and probes its store with. */
+  private[graft] def bandKeyCols: Seq[Column] =
+    (0 until Bands).map { b =>
+      xxhash64((b * BandRows until (b + 1) * BandRows).map(p => col(s"h$p")): _*)
+    }
+
+  /** Sketch-estimated Jaccard at or above `threshold`: the share of the
+    * 66 slots that agree, as one double division. `slotA`/`slotB` name
+    * each side's slot column. Per-CANDIDATE math, never per-corpus, so
+    * the 66 checked adds are off the hot path. */
+  private[graft] def sketchNear(slotA: Int => Column, slotB: Int => Column,
+                                threshold: Double): Column =
+    (0 until NumPerms).map(p => when(slotA(p) === slotB(p), 1).otherwise(0))
+      .reduce(_ + _).cast("double") / lit(NumPerms.toDouble) >= threshold
+
+  /** `sketchNear` on two collected sketches — the same rule on the
+    * driver, for candidate pairs a gate has already collected. */
+  private[graft] def sketchNear(a: Array[Long], b: Array[Long],
+                                threshold: Double): Boolean = {
+    var agree = 0
+    var p = 0
+    while (p < NumPerms) { if (a(p) == b(p)) agree += 1; p += 1 }
+    agree.toDouble / NumPerms.toDouble >= threshold
   }
 
   /** MinHash + LSH near-duplicate pairs — the distributed dedup path.
@@ -622,14 +644,9 @@ object Dedup {
     val sigsAll = store.unionByName(newSigs)
     def side(tag: String) = sigsAll.toDF(sigsAll.columns.map(c =>
       if (c == "doc_id") tag else s"${c}_$tag").toIndexedSeq: _*)
-    // slot agreement as a sum of 0/1 whens: per-CANDIDATE math, never
-    // per-corpus, so 66 checked adds are off the hot path
-    val agree = (0 until NumPerms).map(p =>
-      when(col(s"h${p}_a") === col(s"h${p}_b"), 1).otherwise(0))
-      .reduce(_ + _)
     candVsStore.unionByName(candInBatch).distinct()
       .join(side("a"), Seq("a")).join(side("b"), Seq("b"))
-      .where(agree.cast("double") / lit(NumPerms.toDouble) >= threshold)
+      .where(sketchNear(p => col(s"h${p}_a"), p => col(s"h${p}_b"), threshold))
       .select(col("b").as("doc_id")).distinct()
   }
 
@@ -1490,70 +1507,6 @@ object Dedup {
       .where(col("dist") >= 0)
       .select(col("tid").as("store_id"), col("pid").as("batch_id"), col("dist"))
       .orderBy("store_id", "batch_id")
-  }
-
-  /** `edStorePairsIndexed` against a PRUNED, string-carrying store —
-    * the per-batch probe shape that stays flat as the store grows:
-    *
-    *  - `segs` are the store's segment rows (lt, i, seg, tid, s),
-    *    already partition-PRUNED by the caller to the probe's bucket
-    *    set (IngestFuzzy's segs/ geometry), so the only store-sized
-    *    read is a pruned columnar scan;
-    *  - the store key string `s` rides each seg row (denormalized at
-    *    append time), so the verify join-back never reads — let alone
-    *    shuffles — a store-wide keys/ frame: the old shape shuffled
-    *    ALL store keys through the verify join every batch, an
-    *    O(store) term per batch;
-    *  - `shorts` is the store's bounded-length short-key slice
-    *    (id, s, len), read from its own keys/ partition.
-    *
-    * Semantics are bit-identical to `edStorePairsIndexed` (the
-    * candidate set is the same (pid, tid) set; `s_a` is functionally
-    * determined by tid). Output (store_id, batch_id, dist), exact. */
-  private[graft] def edStorePairsPruned(batchBase: DataFrame,
-                                        segs: DataFrame, shorts: DataFrame,
-                                        maxDist: Int, minSeg: Int)
-      : DataFrame = {
-    require(maxDist >= 0 && minSeg >= 1, "maxDist >= 0, minSeg >= 1")
-    val d = maxDist
-    val shortCut = minSeg * (d + 1)
-    val segCand = edProbeSegs(batchBase, d, minSeg, twoSided = true)
-      .join(segs.hint("shuffle_hash"), Seq("lt", "i", "seg"))
-      .select(col("pid"), col("tid"), col("s").as("s_a"))
-    val bandCand = batchBase.where(col("len") < shortCut)
-      .select(col("id").as("pid"),
-        explode(expr(s"sequence(greatest(0, len - $d), len + $d)")).as("k"))
-      .join(shorts.where(col("len") < shortCut + d)
-        .select(col("id").as("tid"), col("len").as("k"), col("s").as("s_a")),
-        Seq("k"))
-      .select(col("pid"), col("tid"), col("s_a"))
-    graft.core.Layout.pinWidth(
-        segCand.unionByName(bandCand), col("pid"), col("tid")).distinct()
-      .join(batchBase.select(col("id").as("pid"), col("s").as("s_b")),
-        Seq("pid"))
-      .withColumn("dist", levenshtein(col("s_a"), col("s_b"), maxDist))
-      .where(col("dist") >= 0)
-      .select(col("tid").as("store_id"), col("pid").as("batch_id"), col("dist"))
-  }
-
-  /** The ids `fuzzyKeyKept` drops, over the pruned, string-carrying
-    * store probe — same two drop rules, with the store side supplied as
-    * `edStorePairsPruned` frames. One `id` column, distinct.
-    * Package-visible for the streaming gate. */
-  private[graft] def fuzzyKeyDropsPruned(batchBase: DataFrame,
-                                         segs: DataFrame, shorts: DataFrame,
-                                         maxDist: Int, minSeg: Int)
-      : DataFrame = {
-    val storeDrops =
-      edStorePairsPruned(batchBase, segs, shorts, maxDist, minSeg)
-        .select(col("batch_id").as("id"))
-    val inBatchDrops =
-      edVerify(batchBase,
-        edSegCandidates(batchBase, maxDist, minSeg)
-          .unionByName(edShortBandPairs(batchBase, minSeg * (maxDist + 1), maxDist)),
-        maxDist)
-        .select(col("id_b").as("id"))
-    storeDrops.unionByName(inBatchDrops).distinct()
   }
 
   /** The fuzzy-key ingest GATE, batch form: which batch keys survive

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.core.Scoped
 
 /** Similarity search over an embedding column (`Array[Float]`, 64-dim).
@@ -434,16 +435,17 @@ object Similarity {
   private[graft] object StoreLayout {
     type Search = (DataFrame, Int, Int => Int) => DataFrame
 
-    final case class Ivf(codec: ListCodec, lists: DataFrame)
+    final case class Ivf(codec: ListCodec, schema: StructType)
         extends StoreLayout("assigned", listed = true) {
       /** One memoized centroid read plus a lazy scan over the assigned
-        * lists (persisted, like `ivfBuild`'s: a search probes it). */
+        * lists (persisted, like `ivfBuild`'s: a search probes it), read
+        * with the schema `at` found, so no schema-inference job runs. */
       def load(spark: SparkSession, path: String): IvfIndex = {
         val cents = loadCentroids(spark, path)
         // partitionBy moved list_id to the end and widened it; restore the
         // build-time column order and type so the index forms are
         // interchangeable frame-for-frame
-        IvfIndex(cents, lists
+        IvfIndex(cents, spark.read.schema(schema).parquet(s"$path/assigned")
           .select(codec.payload.map(col) :+ col("list_id").cast("int").as("list_id"): _*)
           .persist(MEMORY_AND_DISK), cents.length)
       }
@@ -510,14 +512,18 @@ object Similarity {
 
     /** The layout saved at `path`; None when no save wrote it. Hadoop
       * FS, not java.io: stores live on the cluster filesystem
-      * (HDFS/object store) in production. */
+      * (HDFS/object store) in production. The IVF list codec comes from
+      * one part file's footer (`Stores.footerSchema`), so telling the
+      * layouts apart runs no Spark job. */
     def at(spark: SparkSession, path: String): Option[StoreLayout] = {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val has = (d: String) => fs.exists(new org.apache.hadoop.fs.Path(root, d))
       if (has("assigned")) {
-        val lists = spark.read.parquet(s"$path/assigned")
-        Some(Ivf(ListCodec.of(lists.columns.toSeq), lists))
+        val schema = graft.core.Stores.footerSchema(spark, s"$path/assigned",
+            StructField("list_id", IntegerType))
+          .getOrElse(spark.read.parquet(s"$path/assigned").schema)
+        Some(Ivf(ListCodec.of(schema.fieldNames.toSeq), schema))
       }
       else if (has("rot") && has("centroids")) Some(Pq(rotated = true, listed = true))
       else if (has("books") && has("centroids")) Some(Pq(rotated = false, listed = true))

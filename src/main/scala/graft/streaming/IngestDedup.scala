@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{array, broadcast, col, posexplode}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.core.Scoped
 import graft.operators.Dedup
@@ -15,21 +16,26 @@ import graft.operators.Dedup
   * everything kept so far).
   *
   * Each micro-batch:
-  *   1. sketches its documents (66 MinHash longs/doc — hashed ONCE);
-  *   2. drops any doc with a sketch-Jaccard ≥ threshold match in the
-  *      signature store or at a smaller doc_id within the batch
-  *      (`Dedup.sketchDrops`);
+  *   1. sketches its documents (66 MinHash longs/doc — hashed ONCE)
+  *      and collects the sketches with their 22 band keys;
+  *   2. drops any doc with a sketch-Jaccard ≥ threshold match at a
+  *      smaller doc_id within the batch (decided on the driver, over
+  *      docs sharing a band key) or in the signature store (one job:
+  *      the store's band rows joined to the broadcast batch band rows,
+  *      the candidates verified on the driver) — `Dedup.sketchDrops`'
+  *      rule;
   *   3. appends survivors to the output parquet;
   *   4. appends survivors' signatures to the store, so batch N+1
   *      dedups against them.
   *
   * State is the parquet signature store, NOT Spark streaming state:
   * ~0.5 KB/doc forever, never in executor memory, shared across
-  * restarts and across independent pipelines. Per-batch cost is
-  * O(batch × matching band keys) — the store side of the band join
-  * streams from parquet and only matching (band, bkey) groups move.
-  * That is the shape that holds at a 100 TB corpus: nothing ever
-  * rescans kept text, and the store grows only by kept docs.
+  * restarts and across independent pipelines. Per-batch cost is one
+  * streaming scan of the store plus O(batch × matching band keys): the
+  * store is never shuffled, only the batch's band rows are broadcast,
+  * and only store sketches that share a band key with the batch come
+  * back to the driver. Nothing ever rescans kept text, and the store
+  * grows only by kept docs.
   *
   * Delivery: restart replays the in-flight micro-batch, so both sinks
   * are at-least-once — downstream readers dedup on doc_id (globally
@@ -58,33 +64,91 @@ object IngestDedup {
   /** The gate half of `processBatch`: compute the batch's survivors
     * against the store WITHOUT writing anything — returns the kept rows
     * (ALL input columns ride along, so a composite pipeline can carry
-    * embeddings through the gate) and the survivors' signature rows,
-    * scoped to the persisted batch sketch. Both are filtered by the
-    * gate's driver-side drop-id set, so neither reads the store: a
-    * store append cannot change them. `batch` is read again by every
-    * consumer of the kept frame; pass a persisted one. */
+    * embeddings through the gate) and the survivors' signature rows, a
+    * local frame of the collected sketch, so the scope holds nothing.
+    * Both are filtered by the gate's driver-side drop-id set, so neither
+    * reads the store: a store append cannot change them. `batch` is read
+    * again by every consumer of the kept frame; pass a persisted one. */
   def gateBatch(batch: DataFrame, storePath: String,
-                threshold: Double): Scoped[(DataFrame, DataFrame)] =
-    decide(batch, storePath, threshold).map { case (drops, sigs) =>
-      (without(batch, drops), without(sigs, drops))
-    }
+                threshold: Double): Scoped[(DataFrame, DataFrame)] = {
+    val (drops, sigs) = decide(batch, storePath, threshold)
+    Scoped.pure((without(batch, drops), without(sigs, drops)))
+  }
 
-  /** The gate's decision: the batch doc_ids to drop, collected in one
-    * action, and the persisted batch sketch (doc_id + 66 MinHash
-    * slots) the scope releases. */
+  /** The gate's decision: the batch doc_ids to drop, and the batch
+    * sketch (doc_id + 66 MinHash slots) as a LOCAL frame of the
+    * collected rows, for the store append. */
   private[streaming] def decide(batch: DataFrame, storePath: String,
-                                threshold: Double): Scoped[(Set[Long], DataFrame)] = {
-    val spark = batch.sparkSession
-    Scoped.cached(Dedup.minhashSignatures(
-        batch.select(col("doc_id"), col("text")), pinned = true))
-      .map { sigs =>
-        val store =
-          if (storeExists(spark, storePath)) Dedup.signatureLoad(spark, storePath)
-          else sigs.limit(0)
-        val drops = Dedup.sketchDropIds(sigs, store, threshold)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).toSet
-        (drops, sigs)
+                                threshold: Double): (Set[Long], DataFrame) =
+    decideSketch(Dedup.minhashSignatures(
+      batch.select(col("doc_id"), col("text")), pinned = true), storePath, threshold)
+
+  /** `decide` over a sketch frame (doc_id, h0…h65). The sketch and its
+    * 22 band keys (`Dedup.bandKeyCols`, the expressions the store side
+    * hashes with) are collected in one action. The in-batch first-wins
+    * rule runs on the driver over docs sharing a band key; the store is
+    * probed in one job (`storeProbe`) and its candidates verified on the
+    * driver. Both verify with `Dedup.sketchNear`, the rule
+    * `Dedup.sketchDrops` applies in Spark. */
+  private[graft] def decideSketch(sigs: DataFrame, storePath: String,
+                                  threshold: Double): (Set[Long], DataFrame) = {
+    val spark = sigs.sparkSession
+    val n = Dedup.NumPerms
+    val rows = sigs.select((col("doc_id") +: col("doc_id").cast("long") +:
+        (0 until n).map(p => col(s"h$p"))) ++ Dedup.bandKeyCols: _*).collect()
+    val ids = rows.map(_.getLong(1))
+    val slots = rows.map(r => Array.tabulate(n)(p => r.getLong(2 + p)))
+    val nBands = Dedup.bandKeyCols.length
+    val bands = rows.map(r => Array.tabulate(nBands)(b => r.getLong(2 + n + b)))
+    // in batch: doc i drops when a smaller id sharing a band key is near
+    val byKey = scala.collection.mutable.HashMap.empty[(Int, Long), List[Int]]
+    for (i <- rows.indices; (k, b) <- bands(i).zipWithIndex)
+      byKey((b, k)) = i :: byKey.getOrElse((b, k), Nil)
+    val inBatch = rows.indices.filter { i =>
+      bands(i).zipWithIndex.iterator
+        .flatMap { case (k, b) => byKey((b, k)) }
+        .exists(j => ids(j) < ids(i) && Dedup.sketchNear(slots(j), slots(i), threshold))
+    }.map(ids).toSet
+    val vsStore =
+      if (rows.isEmpty || !storeExists(spark, storePath)) Set.empty[Long]
+      else {
+        val slot = ids.zip(slots).toMap
+        storeProbe(spark, storePath, ids.zip(bands))
+          .collect { case (b, a) if Dedup.sketchNear(a, slot(b), threshold) => b }
+          .toSet
       }
+    (inBatch ++ vsStore, spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row.fromSeq(r.get(0) +: (0 until n)
+        .map(p => r.get(2 + p)))): _*), sigs.schema))
+  }
+
+  /** The store side of the gate in one job: the signature store's band
+    * rows (each store sketch exploded to its 22 band keys in the scan
+    * stage) inner-joined to the batch's (band, bkey, doc_id) rows,
+    * broadcast explicitly from a local frame, so the store streams from
+    * parquet and nothing store-sized is shuffled. Returns one
+    * (batch doc_id, store sketch) per shared band key. */
+  private def storeProbe(spark: SparkSession, storePath: String,
+                         bands: Array[(Long, Array[Long])]): Array[(Long, Array[Long])] = {
+    val n = Dedup.NumPerms
+    val probe = spark.createDataFrame(java.util.Arrays.asList(bands.toSeq.flatMap {
+      case (id, ks) => ks.indices.map(b => Row(b, ks(b), id)) }: _*),
+      StructType(Seq(StructField("band", IntegerType), StructField("bkey", LongType),
+        StructField("b", LongType))))
+    val slotCols = (0 until n).map(p => col(s"h$p"))
+    storePlan(graft.core.Stores.readParquet(spark, storePath).select(slotCols: _*), probe)
+      .collect().map(r => (r.getLong(0), Array.tabulate(n)(p => r.getLong(1 + p))))
+  }
+
+  /** The probe's plan: `store` (h0…h65) exploded to band rows, joined
+    * to the broadcast `probe` (band, bkey, b). Package-visible for the
+    * plan-shape pin. */
+  private[graft] def storePlan(store: DataFrame, probe: DataFrame): DataFrame = {
+    val slotCols = (0 until Dedup.NumPerms).map(p => col(s"h$p"))
+    store.select(slotCols :+ posexplode(array(Dedup.bandKeyCols: _*))
+        .as(Seq("band", "bkey")): _*)
+      .join(broadcast(probe), Seq("band", "bkey"))
+      .select(col("b") +: slotCols: _*)
   }
 
   /** Start the streaming ingest gate: `docs` is an unbounded stream of

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{bit_count, broadcast, col, count, countDistinct, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.core.Scoped
 import graft.operators.{Dedup, Multimodal}
@@ -25,16 +26,17 @@ import graft.operators.{Dedup, Multimodal}
   *   meta/   (max_hamming, block_choose)  — the banding layout probes
   *                                          and appends must match
   *
-  * Scale shape (the IngestLinkage rule): the store side of the probe
-  * is the corpus and must STREAM from parquet with no shuffle at any
-  * size, so the batch-side band rows are broadcast EXPLICITLY — static
-  * size estimates on persisted batch frames can't be trusted with that
-  * decision. Broadcast volume is bounded in PARTS, not records
-  * (`gateBatch(maxBandRows)`): batches whose fps rows × C(d+bc, bc)
-  * band rows exceed the bound auto-split into id-ordered slices with
-  * bit-identical output, so even a long-clip video batch never
-  * broadcasts more than a few tens of MB. Per-batch cost is O(store
-  * scan + batch × matching band
+  * Scale shape (the IngestLinkage rule): each batch's fingerprints are
+  * collected once; the in-batch first-wins rule is decided on the
+  * driver. The store side of the probe is the corpus and must STREAM
+  * from parquet with no shuffle at any size, so the batch-side band
+  * rows are broadcast EXPLICITLY from a local frame — one job per
+  * probe, and only matched parts come back to the driver. Broadcast
+  * volume is bounded in PARTS, not records (`gateBatch(maxBandRows)`):
+  * batches whose fps rows × C(d+bc, bc) band rows exceed the bound
+  * probe the store in id-ordered slices with bit-identical output, so
+  * even a long-clip video batch never broadcasts more than a few tens
+  * of MB. Per-batch cost is O(store scan + batch × matching band
   * keys); nothing store-sized is ever shuffled or exploded into a
   * shuffle. Banding is the SimHash pigeonhole (exact recall at the
   * radius, per aligned part).
@@ -128,14 +130,14 @@ object IngestFingerprints {
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
                    fps: DataFrame, maxBandRows: Long = 1L << 21): Long =
     Scoped.cached(batch).use { b =>
-      gateBatch(b, storePath, fps, maxBandRows).use { case (kept, keptFps) =>
-        val nKept = kept.count()
-        // out first, the store last: a crash between them duplicates
-        // the batch on replay, never loses it
-        kept.write.mode("append").parquet(outPath)
-        appendFps(batch.sparkSession, storePath, keptFps)
-        nKept
-      }
+      val (drops, bh) = decide(storePath, fps, maxBandRows)
+      val kept = without(b, drops)
+      val nKept = kept.count()
+      // out first, the store last: a crash between them duplicates
+      // the batch on replay, never loses it
+      kept.write.mode("append").parquet(outPath)
+      appendRows(batch.sparkSession, storePath, without(bh, drops, "id"))
+      nKept
     }
 
   /** Append already-gated fingerprints (id, p, h) to the store — each
@@ -145,9 +147,14 @@ object IngestFingerprints {
     * O(batch × C(d+bc, bc)) rows — so point probes never serve stale
     * results; replay duplicates collapse in `fpProbe`'s distinct. */
   def appendFps(spark: SparkSession, storePath: String,
-                fps: DataFrame): Unit = {
+                fps: DataFrame): Unit =
+    appendRows(spark, storePath, withNp(fps))
+
+  /** `appendFps` of rows that already carry their part count
+    * (id, p, h, np) — the gate's own collected frame. */
+  private[streaming] def appendRows(spark: SparkSession, storePath: String,
+                                    np: DataFrame): Unit = {
     val (d, bc) = meta(spark, storePath)
-    val np = withNp(fps)
     np.write.mode("append").parquet(s"$storePath/hashes")
     if (exists(spark, s"$storePath/bands")) {
       val nB = graft.core.Stores.readGeometry(spark, s"$storePath/bands")
@@ -261,11 +268,11 @@ object IngestFingerprints {
       .select("id", "oid").distinct()
 
   /** The gate half: kept rows with ALL input columns and survivors'
-    * fingerprint rows (id, p, h), scoped to the persisted fingerprint
-    * frame. Nothing is written. Both are filtered by the gate's
-    * driver-side drop-id set, so neither reads the store; `batch` is
-    * read again by every consumer of the kept frame, so pass a
-    * persisted one.
+    * fingerprint rows (id, p, h), a local frame of the collected
+    * fingerprints, so the scope holds nothing. Nothing is written. Both
+    * are filtered by the gate's driver-side drop-id set, so neither
+    * reads the store; `batch` is read again by every consumer of the
+    * kept frame, so pass a persisted one.
     * `fps` is the caller-computed fingerprint frame for THIS batch
     * ((id, p, h), ids = doc_id values, parts complete per id).
     *
@@ -274,108 +281,132 @@ object IngestFingerprints {
     * batch of long clips (100+ frames × 20 bands) would broadcast
     * tens of millions of rows and blow the explicit-broadcast limits
     * with record-based sizing. Batches whose band-row volume exceeds
-    * `maxBandRows` are AUTO-SPLIT into id-ordered slices (ids never
-    * split — the all-parts predicate needs a record whole) and folded
-    * serially: each slice probes the store PLUS every earlier slice's
-    * fingerprint rows (ALL of them — the conservative first-wins
-    * cascade, the IngestFuzzy slice rule), which is exactly the
-    * unsplit gate's decision for every id, so the output is
-    * bit-identical at any `maxBandRows` (IngestFingerprintsSpec
-    * parity pin) and every broadcast stays bounded. */
+    * `maxBandRows` probe the store in id-ordered slices (ids never
+    * split — the all-parts predicate needs a record whole), one job
+    * each, so every broadcast stays bounded; the in-batch rule runs on
+    * the driver over the whole batch, so the output is bit-identical
+    * at any `maxBandRows` (IngestFingerprintsSpec parity pin). */
   def gateBatch(batch: DataFrame, storePath: String, fps: DataFrame,
-                maxBandRows: Long = 1L << 21): Scoped[(DataFrame, DataFrame)] =
-    decide(storePath, fps, maxBandRows).map { case (drops, bh) =>
-      (without(batch, drops), without(bh, drops, "id").select("id", "p", "h"))
-    }
+                maxBandRows: Long = 1L << 21): Scoped[(DataFrame, DataFrame)] = {
+    val (drops, bh) = decide(storePath, fps, maxBandRows)
+    Scoped.pure((without(batch, drops), without(bh, drops, "id").select("id", "p", "h")))
+  }
 
-  /** The gate's decision: the ids to drop, collected in one action over
-    * every slice, and the persisted (id, p, h, np) fingerprint frame the
-    * scope releases. */
+  /** The gate's decision: the ids to drop, and the batch's
+    * (id, p, h, np) fingerprint rows as a local frame of the collected
+    * rows. The fingerprints are collected in one action; the in-batch
+    * first-wins rule runs on the driver over records sharing an aligned
+    * band; the store is probed in one job per slice (`storeProbe`) and
+    * the all-parts rule applied on the driver to its matched parts. */
   private[streaming] def decide(storePath: String, fps: DataFrame,
-                                maxBandRows: Long = 1L << 21)
-      : Scoped[(Set[Long], DataFrame)] = {
+                                maxBandRows: Long = 1L << 21): (Set[Long], DataFrame) = {
     require(maxBandRows >= 1, "maxBandRows must be >= 1")
     val spark = fps.sparkSession
     val (d, bc) = meta(spark, storePath)
-    // C(d+bc, bc): band rows per fingerprint row
-    val bandFactor = (0 until (d + bc)).combinations(bc).size.toLong
-    Scoped.cached(withNp(fps)).map { bh =>
-      val store =
-        if (exists(spark, s"$storePath/hashes"))
-          spark.read.parquet(s"$storePath/hashes")
-        else bh.limit(0)
-      // per-id part counts, batch-bounded: their total sizes the probe,
-      // and an oversized batch packs them greedily into contiguous id
-      // ranges (one slice in the common case)
-      val idParts = bh.select("id", "np").distinct().collect()
-        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
-      val sliceFrames: Seq[DataFrame] =
-        if (idParts.map(_._2.toLong).sum * bandFactor <= maxBandRows) Seq(bh)
-        else {
-          val maxParts = (maxBandRows / bandFactor) max 1L
-          val startIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-          var acc = 0L
-          for ((id, np) <- idParts) {
-            if (startIds.isEmpty || acc + np > maxParts) {
-              startIds += id; acc = 0L
-            }
-            acc += np
-          }
-          val bounds = startIds.toSeq :+ Long.MaxValue
-          bounds.sliding(2).map { case Seq(lo, hi) =>
-            bh.where(col("id") >= lit(lo) &&
-              (if (hi == Long.MaxValue) lit(true) else col("id") < lit(hi)))
-          }.toSeq
+    val rows = fps.select(col("id").cast("long"), col("p").cast("int"),
+      col("h").cast("long")).collect()
+    val np = rows.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.length }
+    val bh = rows.map(r => Row(r.getLong(0), r.getInt(1), r.get(2), np(r.getLong(0))))
+    def local(rs: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rs: _*),
+      StructType(Seq(StructField("id", LongType), StructField("p", IntegerType),
+        StructField("h", LongType), StructField("np", IntegerType))))
+    val vsStore =
+      if (rows.isEmpty || !exists(spark, s"$storePath/hashes")) Set.empty[Long]
+      else {
+        val store = graft.core.Stores.readParquet(spark, s"$storePath/hashes")
+        val matched = slices(np, (0 until (d + bc)).combinations(bc).size.toLong,
+            maxBandRows).flatMap { ids =>
+          storeProbe(local(bh.filter(r => ids(r.getLong(0))).toSeq), store, d, bc)
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         }
-      // fold: slice i probes store + all earlier slices' rows (smaller
-      // ids by construction), then its own smaller-id rows in-slice —
-      // the union of the two is the unsplit gate's predicate exactly
-      var prior: DataFrame = null
-      val dropFrames = sliceFrames.map { bhI =>
-        val storeSide = if (prior == null) store else store.unionByName(prior)
-        val dropsStore = storeProbe(bhI, storeSide, d, bc)
-        // vs smaller-id batch rows: the conservative first-wins cascade
-        // (a dropped smaller-id record still drops its neighbors — the
-        // IngestFuzzy batch rule, which is what makes slice folds exact)
-        val bandB = Dedup.hammingBandRows(bhI, 64, d, bc,
-          carry = Seq("p", "np"), hint = false)
-        val dropsBatch = dropIds(bandB.as("x")
-          .join(bandB.as("y"), alignOn && col("y.id") < col("x.id"), "inner"), d)
-        prior = if (prior == null) bhI else prior.unionByName(bhI)
-        dropsStore.unionByName(dropsBatch)
+        // a record drops when ALL its parts matched the same store record
+        matched.groupBy(m => (m._1, m._2)).collect {
+          case ((id, _), ms) if ms.map(_._3).distinct.length == np(id) => id
+        }.toSet
       }
-      val drops = dropFrames.reduce(_.unionByName(_)).distinct()
-        .collect().map(_.getLong(0)).toSet
-      (drops, bh)
-    }
+    (inBatchDrops(rows, np, d, bc) ++ vsStore, local(bh.toSeq))
   }
 
-  /** Batch ids dropped by the STORE probe — the corpus-scale join.
-    * The batch-side band rows are broadcast EXPLICITLY so the store's
-    * band rows stream from parquet with no shuffle at any store size
-    * (the IngestLinkage rule: static estimates on persisted batch
+  /** The ids of each store-probe slice: one slice when the batch's band
+    * rows fit `maxBandRows`, else contiguous id runs packed greedily by
+    * part count. */
+  private def slices(np: Map[Long, Int], bandFactor: Long,
+                     maxBandRows: Long): Seq[Set[Long]] =
+    if (np.values.map(_.toLong).sum * bandFactor <= maxBandRows) Seq(np.keySet)
+    else {
+      val maxParts = (maxBandRows / bandFactor) max 1L
+      val out = scala.collection.mutable.ArrayBuffer(Set.empty[Long])
+      var acc = 0L
+      for ((id, n) <- np.toSeq.sortBy(_._1)) {
+        if (out.last.nonEmpty && acc + n > maxParts) {
+          out += Set.empty; acc = 0L
+        }
+        out(out.length - 1) += id
+        acc += n
+      }
+      out.toSeq
+    }
+
+  /** The in-batch first-wins rule over the collected (id, p, h) rows: a
+    * record drops when a smaller-id record has the same part count and
+    * every aligned part within `d` bits (the conservative cascade — the
+    * smaller record's own fate doesn't matter). Candidates share an
+    * aligned band: the pigeonhole blocks of `Dedup.hammingBandRows`,
+    * compared as block values, so a pair within the radius always
+    * shares one. Null hashes match nothing. */
+  private def inBatchDrops(rows: Array[Row], np: Map[Long, Int],
+                           d: Int, bc: Int): Set[Long] = {
+    import scala.collection.mutable
+    val numBlocks = d + bc
+    val widths = (0 until numBlocks).map(b =>
+      64 / numBlocks + (if (b < 64 % numBlocks) 1 else 0))
+    val starts = widths.scanLeft(0)(_ + _).init
+    def block(h: Long, b: Int) =
+      (h >> starts(b)) & (if (widths(b) == 64) -1L else (1L << widths(b)) - 1)
+    val tables = (0 until numBlocks).combinations(bc).toSeq
+    val parts = rows.filterNot(_.isNullAt(2))
+      .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(r => (r.getInt(1), r.getLong(2))) }
+    def matches(a: Long, b: Long) =
+      parts(b).filter { case (p, h) =>
+        parts(a).exists { case (q, g) => q == p && java.lang.Long.bitCount(g ^ h) <= d }
+      }.map(_._1).distinct.length == np(b)
+    val index = mutable.HashMap.empty[(Int, Int, Int, Seq[Long]), List[Long]]
+    val dropped = mutable.Set.empty[Long]
+    for (id <- parts.keys.toSeq.sorted) {
+      val keys = for ((p, h) <- parts(id).toSeq; (t, ti) <- tables.zipWithIndex)
+        yield (p, np(id), ti, t.map(block(h, _)))
+      if (keys.iterator.flatMap(index.getOrElse(_, Nil)).distinct
+          .exists(a => a < id && matches(a, id)))
+        dropped += id
+      keys.foreach(k => index(k) = id :: index.getOrElse(k, Nil))
+    }
+    dropped.toSet
+  }
+
+  /** The store probe for one slice of batch rows `bh` (id, p, h, np) in
+    * one plan: the store's band rows (derived in the scan stage)
+    * inner-joined to the batch's band rows, which are broadcast
+    * EXPLICITLY so the store streams from parquet with no shuffle at
+    * any store size (the IngestLinkage rule: static estimates on batch
     * frames can't be trusted with this decision). Aligned-part match:
     * same band bucket, same part index, same part count, xor within
-    * radius — a record drops iff ALL its np parts matched the SAME
-    * store record. Exposed private[graft] for the plan-shape pin. */
+    * radius. Output: one (id, oid, p) row per matched band — the
+    * all-parts rule runs over the collected rows. Exposed
+    * private[graft] for the plan-shape pin. */
   private[graft] def storeProbe(bh: DataFrame, store: DataFrame,
                                 d: Int, bc: Int): DataFrame = {
     val bandB = Dedup.hammingBandRows(bh, 64, d, bc,
       carry = Seq("p", "np"), hint = false)
     val bandS = Dedup.hammingBandRows(store, 64, d, bc,
       carry = Seq("p", "np"), hint = false)
-    dropIds(broadcast(bandB).as("x").join(bandS.as("y"), alignOn, "inner"), d)
+    broadcast(bandB).as("x").join(bandS.as("y"), alignOn, "inner")
+      .where(bit_count(col("x.h").bitwiseXOR(col("y.h"))) <= d)
+      .select(col("x.id").as("id"), col("y.id").as("oid"), col("x.p").as("p"))
   }
 
   private def alignOn: org.apache.spark.sql.Column =
     col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
       col("x.p") === col("y.p") && col("x.np") === col("y.np")
-
-  // matched (x, y, p) triples (distinct across bands) → x ids whose
-  // matched-part count against some single y reaches x's part count;
-  // the aggregate runs on CANDIDATES only, never anything store-sized
-  private def dropIds(joined: DataFrame, d: Int): DataFrame =
-    matchPairs(joined, d).select("id").distinct()
 
   /** Start the streaming gate: `docs` carries doc_id + the payload
     * column(s) `fpFn` reads; pre-seed the store with `fpSave` (possibly

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, length, lit, pmod, when, xxhash64}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, length, levenshtein, lit, pmod, when, xxhash64}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Scoped
 import graft.operators.Dedup
@@ -44,9 +45,9 @@ import graft.operators.Dedup
   * scan AND shuffle the whole segs/ store into the probe equi-join,
   * and shuffle ALL store keys into the verify join-back — two O(store)
   * terms per batch (measured: gate_fuzzy 90→138 s across five sf100
-  * batches as the store grew ×1.72). Now the probe collects its
-  * distinct segment-bucket set (bounded by min(probe tuples,
-  * nBuckets) — a statistics-sized driver list), prunes the segs/ read
+  * batches as the store grew ×1.72). Now the probe's segment-bucket
+  * set comes back with its collected probe rows (bounded by min(probe
+  * tuples, nBuckets) — a statistics-sized driver list), prunes the segs/ read
   * to those partitions, and the verify reads `s` off the seg row —
   * per-batch store cost is the pruned scan, and with nBuckets grown
   * ∝ store (`fuzzyMaintain`, the lexMaintain discipline) the rows
@@ -56,14 +57,14 @@ import graft.operators.Dedup
   * than the old shape, and the removed O(store) SHUFFLES stay
   * removed.
   *
-  * Each micro-batch: (1) drop keys matching the store — pruned-probe
-  * PassJoin (`Dedup.edStorePairsPruned`) + the bounded short-band
-  * join + thresholded levenshtein verify; (2) drop keys matching a
-  * smaller id within the batch (first-wins; batches above `maxKeys`
-  * auto-split into id-ordered slices, folded serially, bit-identical
-  * at any `maxKeys`); (3) append surviving DOCS to the output; (4)
-  * append survivors' keys + segment rows, cut with the recorded
-  * layout.
+  * Each micro-batch: (1) collect the keyed rows with their PassJoin
+  * probe and index segment rows in one action; (2) drop keys matching
+  * a smaller id within the batch (first-wins), decided on the driver;
+  * (3) drop keys matching the store — one job per slice of ≤ `maxKeys`
+  * keys: the pruned segs/ scan and the short-key partition joined to
+  * the broadcast probe rows, thresholded levenshtein verify in the same
+  * stage; (4) append surviving DOCS to the output; (5) append
+  * survivors' keys + segment rows, cut with the recorded layout.
   *
   * Delivery matches `IngestDedup`: both sinks are at-least-once; a
   * replayed batch re-finds its own keys at distance 0 and drops; a
@@ -147,10 +148,9 @@ object IngestFuzzy {
     * out of the foreachBatch closure so batch specs can drive it.
     * Batches above `maxKeys` rows are auto-split (see `gateBatch`). */
   def processBatch(batch: DataFrame, storePath: String, outPath: String,
-                   keyCol: String = "key", maxKeys: Int = 10000,
-                   scratch: Option[String] = None): Long =
+                   keyCol: String = "key", maxKeys: Int = 10000): Long =
     Scoped.cached(batch).use { b =>
-      val kept = without(b, drops(b, storePath, keyCol, maxKeys, scratch))
+      val kept = without(b, drops(b, storePath, keyCol, maxKeys))
       val nKept = kept.count()
       // out first, the store last: a crash between them duplicates
       // the batch on replay, never loses it
@@ -187,47 +187,45 @@ object IngestFuzzy {
     * the store and the scope holds nothing; `batch` is read again by
     * every consumer, so pass a persisted one.
     *
-    * Safe-by-default against the in-batch quadratic: the within-batch
-    * self-join is quadratic in BATCH size on adversarial keys (round-9
-    * measured ~8 min per 100 k-key batch at sf10, store-independent),
-    * so batches above `maxKeys` keyed rows are split into id-ordered
-    * slices of ≤ `maxKeys` and folded serially — each slice probes the
-    * store PLUS every earlier slice's keys (ALL of them, not just
-    * survivors: the first-wins rule is a conservative cascade, a
-    * dropped smaller-id key still drops its neighbors), which is
-    * exactly the unsplit gate's decision for every key, so the output
-    * is bit-identical at any `maxKeys` (pinned in IngestFuzzySpec).
-    * Slice bounds are every `maxKeys`-th of the batch's sorted keyed
-    * ids, collected once (bounded by batch rows). Nothing is appended
-    * during the fold, so the store read stays stable.
-    *
-    * `scratch`: shuffle files accumulate for the LIFETIME of a batch
-    * closure — they release with the frames, not per join — so one
-    * corpus-fraction fold spills O(slices × slice-shuffle) local disk
-    * (round 11 measured 71 GB / 360 k keys at sf100 before filling the
-    * disk). Passing a scratch directory turns each slice's carry
-    * frames (its segments and short keys, which every later slice
-    * probes) into DISK-BACKED lineage cuts: they land in scratch
-    * parquet and are re-read, so nothing references the slice's
-    * shuffles once it folds (the in-memory LogicalRDD cut can never
-    * free them — its RDD graph holds the shuffle dependencies) and
-    * ContextCleaner reclaims them mid-fold; peak spill is then
-    * O(slice), not O(batch). Output is bit-identical (IngestFuzzySpec
-    * pin). Costs one parquet round-trip per slice — for bulk
-    * backfills, not steady micro-batches. The caller owns the scratch
-    * dir's lifecycle. */
+    * The decision (`drops`) collects the batch's keys with their own
+    * PassJoin index segments in one action, then folds id-ordered
+    * slices of ≤ `maxKeys` keys; per slice it collects the slice's
+    * probe rows (one action) and:
+    *  - decides the in-batch first-wins rule on the driver: each key,
+    *    in id order, probes the segments and short keys of every
+    *    smaller-id key — earlier slices' too, the carry lives on the
+    *    driver (ALL of them, not just survivors: the rule is a
+    *    conservative cascade, a dropped smaller-id key still drops its
+    *    neighbors) — and candidates verify with the thresholded
+    *    Levenshtein kernel Spark's `levenshtein` calls;
+    *  - probes the store in one job: the partition-pruned segs/ scan
+    *    plus the short-key partition of keys/, inner-joined to the
+    *    slice's probe rows broadcast from a local frame, verified in
+    *    the same stage.
+    * The slices bound the broadcast and the probe rows on the driver;
+    * the decision is the unsplit gate's at any `maxKeys` (pinned in
+    * IngestFuzzySpec). Nothing is appended during the decision, so the
+    * store read stays stable. */
   def gateBatch(batch: DataFrame, storePath: String,
                 keyCol: String = "key",
-                maxKeys: Int = 10000,
-                scratch: Option[String] = None): Scoped[DataFrame] =
-    Scoped.pure(without(batch, drops(batch, storePath, keyCol, maxKeys, scratch)))
+                maxKeys: Int = 10000): Scoped[DataFrame] =
+    Scoped.pure(without(batch, drops(batch, storePath, keyCol, maxKeys)))
 
-  /** The gate's decision: the doc_ids `gateBatch` drops, one collect
-    * per slice. Every frame the fold persists is released before it
-    * returns. */
+  /** One keyed batch row as the gate collects it: the key and its own
+    * index segments (lt, i, seg) (`Dedup.edIndexSegs`). */
+  private[graft] final case class Key(id: Long, s: String, len: Int,
+                                      index: Array[(Int, Int, String)]) {
+    lazy val utf8: UTF8String = UTF8String.fromString(s)
+  }
+
+  /** A slice's two-sided PassJoin probe rows (lt, i, seg) by key id,
+    * and the segs/ buckets they hash to. */
+  private[graft] final case class Probes(rows: Map[Long, Array[(Int, Int, String)]],
+                                         buckets: Seq[Int])
+
+  /** The gate's decision: the doc_ids `gateBatch` drops. */
   private[streaming] def drops(batch: DataFrame, storePath: String,
-                               keyCol: String, maxKeys: Int,
-                               scratch: Option[String]): Set[Long] = {
+                               keyCol: String, maxKeys: Int): Set[Long] = {
     require(maxKeys >= 1, "maxKeys must be >= 1")
     val spark = batch.sparkSession
     val (d, minSeg, metaNB) = meta(spark, storePath)
@@ -235,100 +233,131 @@ object IngestFuzzy {
     val base = batch.where(col(keyCol).isNotNull)
       .select(col("doc_id").cast("long").as("id"), col(keyCol).as("s"))
       .withColumn("len", length(col("s")))
-    // the short-key slice: ONLY the sh=1 partition is ever read — the
-    // band fallback's store side is bounded-length by layout
-    val storeShorts =
-      if (exists(spark, s"$storePath/keys"))
-        spark.read.parquet(s"$storePath/keys").where(col("sh") === 1)
-          .select(col("id"), col("s"), length(col("s")).as("len"))
-      else base.limit(0)
-    // slice i holds the keyed ids in [starts(i), starts(i + 1))
-    val ids = base.select("id").collect().map(_.getLong(0)).sorted
-    val starts = ids.indices.by(maxKeys).map(ids(_))
-    def slice(i: Int): DataFrame =
-      if (starts.length == 1) base
-      else base.where(col("id") >= lit(starts(i)) &&
-        (if (i + 1 < starts.length) col("id") < lit(starts(i + 1)) else lit(true)))
-    // every carry frame (a slice's segments and short keys, probed by
-    // all later slices) gets its LINEAGE CUT: without it, slice i's
-    // plan embeds every prior slice's tree, and the plan STRING Spark
-    // renders once per job for the SQL-start event froze the sf10
-    // campaign's driver inside TreeNode.generateTreeString before a
-    // single task was slow. In memory the cut is a LogicalRDD leaf
-    // over the persisted frame (an evicted block recomputes through
-    // the RDD lineage, so nothing ships through task results — the
-    // round-3 localCheckpoint trap); with `scratch` it is a parquet
-    // round-trip (explicit schema on the re-read — an empty slice
-    // commits no part file).
-    val hold = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cut(df: DataFrame, name: String): DataFrame = scratch match {
-      case None =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        hold += p
-        spark.createDataFrame(p.rdd, p.schema)
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(s"$dir/$name")
-        spark.read.schema(df.schema).parquet(s"$dir/$name")
-    }
-    var carrySegs: DataFrame = null
-    var carryShorts: DataFrame = null
-    try starts.indices.foldLeft(Set.empty[Long]) { (acc, i) =>
-      val sl = slice(i)
-      val segs = prunedStoreSegs(spark, storePath, sl, d, minSeg, nB)
-      val (sg, sh) =
-        if (carrySegs == null) (segs, storeShorts)
-        else (segs.unionByName(carrySegs), storeShorts.unionByName(carryShorts))
-      val dropped = Dedup.fuzzyKeyDropsPruned(sl, sg, sh, d, minSeg)
+    val keys = collectKeys(base, d, minSeg)
+    val probeStore = keys.nonEmpty && exists(spark, s"$storePath/keys")
+    val carry = new Carry(d, minSeg)
+    keys.grouped(maxKeys).flatMap { slice =>
+      val probes = collectProbes(
+        if (slice.length == keys.length) base
+        else base.where(col("id").between(slice.head.id, slice.last.id)), d, minSeg, nB)
+      val inBatch = slice.filter(k => carry.drops(k, probes.rows.getOrElse(k.id, Array.empty)))
+        .map(_.id)
+      if (!probeStore) inBatch
+      else inBatch ++ storeProbe(spark, storePath, slice.toSeq, probes, d, minSeg, nB)
         .collect().map(_.getLong(0))
-      if (i < starts.length - 1) { // the last slice's keys probe nothing
-        val segsI = cut(Dedup.edIndexSegs(sl, d, minSeg, carryS = true), s"segs_$i")
-        val shortsI = cut(sl.where(col("len") < minSeg * (d + 1) + d)
-          .select("id", "s", "len"), s"shorts_$i")
-        carrySegs = if (carrySegs == null) segsI else carrySegs.unionByName(segsI)
-        carryShorts =
-          if (carryShorts == null) shortsI else carryShorts.unionByName(shortsI)
-      }
-      // prompt ContextCleaner — default periodic GC is 30 min
-      if (scratch.isDefined) System.gc()
-      acc ++ dropped
-    } finally hold.foreach(_.unpersist(blocking = false))
+    }.toSet
   }
 
-  /** The pruned segs/ read for one probe frame (id, s, len): collect
-    * the probe's distinct segment-bucket set — bounded by min(probe
-    * tuples, nBuckets), a statistics-sized driver list — and prune the
-    * scan to those partitions. A probe covering every bucket skips the
-    * filter entirely (graceful degradation to the full scan, never
-    * worse than the pre-bucketed layout). segs/ can hold zero data
-    * files even when keys/ has them (every kept key short enough to
-    * cut no segments — the empty-append case): recut from the keys,
-    * empty by construction in exactly that case. Package-visible for
-    * the partition-prune plan pin. */
-  private[graft] def prunedStoreSegs(spark: SparkSession, storePath: String,
-                                     batchBase: DataFrame, d: Int,
-                                     minSeg: Int, nB: Int): DataFrame =
-    if (!exists(spark, s"$storePath/segs")) {
-      val keys =
-        if (exists(spark, s"$storePath/keys"))
-          spark.read.parquet(s"$storePath/keys")
-            .select(col("id"), col("s"))
-            .withColumn("len", length(col("s")))
-        else batchBase.limit(0)
-      Dedup.edIndexSegs(keys, d, minSeg, carryS = true)
-    } else {
-      val buckets = Dedup.edProbeSegs(batchBase, d, minSeg, twoSided = true)
-        .select(sbCol(nB).as("sb")).distinct()
-        .collect().map(_.getInt(0))
-      // direct-path bucket read: never list the other buckets' dirs
-      // (the lexBucketRead discipline — full listing dominates small
-      // probes once maintenance scales nBuckets with the store)
-      val segs = graft.core.Stores.bucketRead(
-        spark, s"$storePath/segs", "sb", buckets.toIndexedSeq, nB)
-      (if (buckets.length < nB)
-         segs.where(col("sb").isin(buckets.map(Integer.valueOf): _*))
-       else segs)
-        .select("lt", "i", "seg", "tid", "s")
+  /** The batch keys (id, s, len) with their index segments, collected
+    * in ONE action (a union of two narrow projections of `base`),
+    * sorted by id. */
+  private[graft] def collectKeys(base: DataFrame, d: Int, minSeg: Int): Array[Key] = {
+    val rows = base.select(lit(true).as("key"), col("id"), col("len").as("lt"),
+        lit(0).as("i"), col("s").as("seg"))
+      .unionByName(Dedup.edIndexSegs(base, d, minSeg).select(lit(false).as("key"),
+        col("tid").as("id"), col("lt"), col("i"), col("seg")))
+      .collect()
+    val (keyRows, segRows) = rows.partition(_.getBoolean(0))
+    val index = segRows.groupBy(_.getLong(1)).withDefaultValue(Array.empty)
+    keyRows.map { r =>
+      Key(r.getLong(1), r.getString(4), r.getInt(2),
+        index(r.getLong(1)).map(x => (x.getInt(2), x.getInt(3), x.getString(4))))
+    }.sortBy(_.id)
+  }
+
+  /** The two-sided probe rows of `base`'s keys with the segs/ bucket of
+    * each, in one action — from the same expressions the store's segs/
+    * rows and buckets were cut with. */
+  private[graft] def collectProbes(base: DataFrame, d: Int, minSeg: Int,
+                                   nB: Int): Probes = {
+    val rows = Dedup.edProbeSegs(base, d, minSeg, twoSided = true)
+      .select(col("pid"), col("lt"), col("i"), col("seg"), sbCol(nB).as("sb"))
+      .collect()
+    Probes(rows.groupBy(_.getLong(0)).map { case (id, rs) =>
+        id -> rs.map(r => (r.getInt(1), r.getInt(2), r.getString(3))) },
+      rows.map(_.getInt(4)).distinct.toSeq)
+  }
+
+  /** The in-batch first-wins rule's driver state: the index segments
+    * and short keys of every key decided so far, across slices. A key
+    * probes them exactly as a batch probes the store — its probe rows
+    * against the index segments, a short key by length band against
+    * the short keys — so every earlier key within `d` edits is a
+    * candidate, and every candidate verifies exactly. */
+  private final class Carry(d: Int, minSeg: Int) {
+    import scala.collection.mutable
+    private val shortCut = minSeg * (d + 1)
+    private val seen = mutable.ArrayBuffer.empty[Key]
+    private val segIdx = mutable.HashMap.empty[(Int, Int, String), mutable.ArrayBuffer[Int]]
+    private val shortIdx = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
+
+    /** Whether a smaller-id key decided earlier is within `d` of `key`
+      * (keys arrive in id order); `key` joins the carry either way. */
+    def drops(key: Key, probe: Array[(Int, Int, String)]): Boolean = {
+      val cands =
+        if (key.len < shortCut)
+          (math.max(0, key.len - d) to key.len + d).iterator
+            .flatMap(l => shortIdx.getOrElse(l, Nil))
+        else probe.iterator.flatMap(r => segIdx.getOrElse(r, Nil))
+      val near = cands.distinct.exists(j => seen(j).id < key.id &&
+        seen(j).utf8.levenshteinDistance(key.utf8, d) >= 0)
+      val k = seen.length
+      seen += key
+      key.index.foreach(r => segIdx.getOrElseUpdate(r, mutable.ArrayBuffer.empty) += k)
+      if (key.len < shortCut + d)
+        shortIdx.getOrElseUpdate(key.len, mutable.ArrayBuffer.empty) += k
+      near
     }
+  }
+
+  /** The store probe for one slice of collected keys, as one plan with
+    * one output column `pid` (a batch id per verified store match):
+    *  - store side: segs/ read only in the slice's buckets (named
+    *    `bucket=N` dirs plus the partition filter; a probe covering
+    *    every bucket reads them all), plus the sh=1 partition of keys/
+    *    as length-band rows (lt = len, i = 0, seg = "") — the store's
+    *    bounded-length short slice;
+    *  - batch side: each long key's probe rows and each short key's
+    *    band rows (lt = len ± d, i = 0, seg = ""), carrying the key
+    *    string, broadcast from a local frame, so the store streams from
+    *    parquet into the join with no shuffle at any size;
+    *  - the thresholded `levenshtein` verify in the same stage.
+    * segs/ can hold zero data files even when keys/ has them (every
+    * kept key too short to cut segments): then the segments are recut
+    * from keys/, empty by construction in exactly that case.
+    * Package-visible for the plan pins. */
+  private[graft] def storeProbe(spark: SparkSession, storePath: String,
+                                keys: Seq[Key], probes: Probes, d: Int,
+                                minSeg: Int, nB: Int): DataFrame = {
+    val shortCut = minSeg * (d + 1)
+    val probe = spark.createDataFrame(java.util.Arrays.asList(keys.flatMap { k =>
+        if (k.len < shortCut)
+          (math.max(0, k.len - d) to k.len + d).map(l => Row(k.id, k.s, l, 0, ""))
+        else probes.rows.getOrElse(k.id, Array.empty[(Int, Int, String)]).toSeq
+          .map { case (lt, i, seg) => Row(k.id, k.s, lt, i, seg) }
+      }: _*), StructType(Seq(StructField("pid", LongType), StructField("s_b", StringType),
+        StructField("lt", IntegerType), StructField("i", IntegerType),
+        StructField("seg", StringType))))
+    val storeKeys = graft.core.Stores.readParquet(spark, s"$storePath/keys",
+      StructField("sh", IntegerType))
+    val shorts = storeKeys.where(col("sh") === 1 && length(col("s")) < shortCut + d)
+      .select(length(col("s")).as("lt"), lit(0).as("i"), lit("").as("seg"), col("s"))
+    val segs =
+      if (!exists(spark, s"$storePath/segs"))
+        Dedup.edIndexSegs(storeKeys.withColumn("len", length(col("s"))), d, minSeg,
+          carryS = true)
+      else {
+        val buckets = probes.buckets
+        val all = graft.core.Stores.bucketRead(spark, s"$storePath/segs", "sb",
+          buckets, nB)
+        if (buckets.length < nB) all.where(col("sb").isin(buckets.map(Integer.valueOf): _*))
+        else all
+      }
+    segs.select("lt", "i", "seg", "s").unionByName(shorts)
+      .join(broadcast(probe), Seq("lt", "i", "seg"))
+      .where(levenshtein(col("s"), col("s_b"), d) >= 0)
+      .select("pid")
+  }
 
   /** Re-bucket segs/ to `nBuckets` — the lexRebalance discipline:
     * probes are GEOMETRY-INDEPENDENT (every partition column is

@@ -47,9 +47,11 @@ import graft.core.Scoped
   *      (`IngestVectors.searchBatch`), so mining recall does not
   *      silently decay as the store grows.
   *
-  * The batch is persisted once; each gate decides by one driver-side
-  * drop-id set, and every sink reads the same persisted batch filtered
-  * by those sets inside one batch closure, so the stores stay MUTUALLY
+  * The batch is persisted once; each gate collects its batch keys
+  * once, decides its in-batch rule on the driver, probes its store in
+  * one broadcast job and returns one driver-side drop-id set, and every
+  * sink reads the same persisted batch filtered by those sets inside
+  * one batch closure, so the stores stay MUTUALLY
   * CONSISTENT batch-over-batch: kept parquet rows == appended index
   * vectors == telemetry n_docs, batch by batch (pinned by `IngestPipelineSpec`,
   * including equality with running the three ingest loops separately).
@@ -111,77 +113,71 @@ object IngestPipeline {
       // the gates in series: content near-dup, then (optional) typo
       // distance on the key column, then (optional) perceptual image
       // near-dup — independent duplicate channels, so a record must pass
-      // every armed gate. Each collects its drop ids; every frame below
-      // is the persisted batch, or a gate's own persisted sketch or
-      // fingerprint frame, filtered by those sets.
-      t("gate_sig")(IngestDedup.decide(b, sigStorePath, threshold)).use { case (d1, sigs) =>
-        val d2 = fuzzyStorePath.fold(Set.empty[Long]) { fp =>
-          t("gate_fuzzy")(IngestFuzzy.drops(without(b, d1), fp, fuzzyKeyCol,
-            fuzzyMaxKeys, scratch = None))
-        }
-        val k2 = without(b, d1 ++ d2)
-        val image = imageStorePath match {
-          case None => Scoped.pure((Set.empty[Long], None: Option[DataFrame]))
-          case Some(ip) => t("gate_image")(IngestFingerprints.decide(ip,
-              IngestFingerprints.imageFps(k2, imageCol)))
-            .map { case (d3, fps) => (d3, Some(fps)) }
-        }
-        image.use { case (d3, imageFps) =>
-          val dropped = d1 ++ d2 ++ d3
-          val kept = without(b, dropped)
-          val nKept = ids.count(id => !dropped(id))
-          if (nKept > 0) {
-            // optional online pair mining: each KEPT doc's top-k
-            // neighbors among everything ingested BEFORE this batch —
-            // so it runs before the index append
-            neighborsPath.foreach { np => t("mine_neighbors") {
-              IngestVectors.searchBatch(
-                  kept.select(col("doc_id").as("vec_id"), col("embedding")),
-                  indexPath, neighborK, neighborProbe, neighborScanFrac)
-                .use(_.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-                  .write.mode("append").parquet(np))
-            }}
-            t("land_out")(kept.select(col("doc_id"), col("text"))
-              .write.mode("append").parquet(outPath))
-            t("append_index")(IngestVectors.append(
-              kept.select(col("doc_id").as("vec_id"), col("embedding")), indexPath))
-            t("append_telemetry")(
-              MonitorQuality.batchStats(kept.select(col("doc_id"), col("text")), batchId)
-                .coalesce(1).write.mode("append").parquet(telemetryPath))
-            // optional 5th store: per-source vocabulary sketches of the
-            // KEPT docs (requires a `source` column in the feed)
-            vocabPath.foreach { vp => t("append_vocab")(
-              IngestVocab.append(kept.select(col("source"), col("text")), batchId, vp))
-            }
-            // optional 6th store: lexical postings of the KEPT docs (batch
-            // token offset by 1 — lexSave's seed stats row owns batch_id 0)
-            lexPath.foreach { lp => t("append_lexical")(
-              graft.operators.Lexical.lexAppendSave(
-                b.sparkSession, lp, kept.select(col("doc_id"), col("text")),
-                batchId + 1L))
-            }
-            // state stores after every sink, image → fuzzy → signatures:
-            // a crash between two appends replays into duplicates, never
-            // loss (the crash contract)
-            for (ip <- imageStorePath; fps <- imageFps) t("append_image")(
-              IngestFingerprints.appendFps(b.sparkSession, ip,
-                without(fps, d3, "id").select("id", "p", "h")))
-          }
-          // the fuzzy and signature stores record their own gate's
-          // survivors, also those a later gate drops (kept = 0)
-          fuzzyStorePath.foreach { fp =>
-            if (nKept > 0 || (imageStorePath.isDefined && ids.exists(id => !d1(id) && !d2(id))))
-              t("append_fuzzy")(IngestFuzzy.appendKeys(b.sparkSession, fp,
-                k2.where(col(fuzzyKeyCol).isNotNull)
-                  .select(col("doc_id").cast("long").as("id"), col(fuzzyKeyCol).as("s"))))
-          }
-          val keptSigs = without(sigs, d1)
-          if (nKept > 0 || ((fuzzyStorePath.isDefined || imageStorePath.isDefined)
-              && ids.exists(id => !d1(id)) && !keptSigs.isEmpty))
-            keptSigs.write.mode("append").parquet(sigStorePath)
-          nKept
-        }
+      // every armed gate. Each collects its batch keys once and returns
+      // its drop ids; every frame below is the persisted batch, or a
+      // gate's local sketch or fingerprint frame, filtered by those sets.
+      val (d1, sigs) = t("gate_sig")(IngestDedup.decide(b, sigStorePath, threshold))
+      val d2 = fuzzyStorePath.fold(Set.empty[Long]) { fp =>
+        t("gate_fuzzy")(IngestFuzzy.drops(without(b, d1), fp, fuzzyKeyCol, fuzzyMaxKeys))
       }
+      val k2 = without(b, d1 ++ d2)
+      val (d3, imageFps) = imageStorePath.fold((Set.empty[Long], None: Option[DataFrame])) { ip =>
+        val (d, fps) = t("gate_image")(IngestFingerprints.decide(ip,
+          IngestFingerprints.imageFps(k2, imageCol)))
+        (d, Some(fps))
+      }
+      val dropped = d1 ++ d2 ++ d3
+      val kept = without(b, dropped)
+      val nKept = ids.count(id => !dropped(id))
+      if (nKept > 0) {
+        // optional online pair mining: each KEPT doc's top-k
+        // neighbors among everything ingested BEFORE this batch —
+        // so it runs before the index append
+        neighborsPath.foreach { np => t("mine_neighbors") {
+          IngestVectors.searchBatch(
+              kept.select(col("doc_id").as("vec_id"), col("embedding")),
+              indexPath, neighborK, neighborProbe, neighborScanFrac)
+            .use(_.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+              .write.mode("append").parquet(np))
+        }}
+        t("land_out")(kept.select(col("doc_id"), col("text"))
+          .write.mode("append").parquet(outPath))
+        t("append_index")(IngestVectors.append(
+          kept.select(col("doc_id").as("vec_id"), col("embedding")), indexPath))
+        t("append_telemetry")(
+          MonitorQuality.batchStats(kept.select(col("doc_id"), col("text")), batchId)
+            .coalesce(1).write.mode("append").parquet(telemetryPath))
+        // optional 5th store: per-source vocabulary sketches of the
+        // KEPT docs (requires a `source` column in the feed)
+        vocabPath.foreach { vp => t("append_vocab")(
+          IngestVocab.append(kept.select(col("source"), col("text")), batchId, vp))
+        }
+        // optional 6th store: lexical postings of the KEPT docs (batch
+        // token offset by 1 — lexSave's seed stats row owns batch_id 0)
+        lexPath.foreach { lp => t("append_lexical")(
+          graft.operators.Lexical.lexAppendSave(
+            b.sparkSession, lp, kept.select(col("doc_id"), col("text")),
+            batchId + 1L))
+        }
+        // state stores after every sink, image → fuzzy → signatures:
+        // a crash between two appends replays into duplicates, never
+        // loss (the crash contract)
+        for (ip <- imageStorePath; fps <- imageFps) t("append_image")(
+          IngestFingerprints.appendRows(b.sparkSession, ip, without(fps, d3, "id")))
+      }
+      // the fuzzy and signature stores record their own gate's
+      // survivors, also those a later gate drops (kept = 0)
+      fuzzyStorePath.foreach { fp =>
+        if (nKept > 0 || (imageStorePath.isDefined && ids.exists(id => !d1(id) && !d2(id))))
+          t("append_fuzzy")(IngestFuzzy.appendKeys(b.sparkSession, fp,
+            k2.where(col(fuzzyKeyCol).isNotNull)
+              .select(col("doc_id").cast("long").as("id"), col(fuzzyKeyCol).as("s"))))
+      }
+      val keptSigs = without(sigs, d1)
+      if (nKept > 0 || ((fuzzyStorePath.isDefined || imageStorePath.isDefined)
+          && ids.exists(id => !d1(id)) && !keptSigs.isEmpty))
+        keptSigs.write.mode("append").parquet(sigStorePath)
+      nKept
     }
   }
 

@@ -169,19 +169,16 @@ class IngestFuzzySpec extends SparkSpec {
     info(s"kept ${streamed.size} of ${all.count()} across ${batches.size} batches")
   }
 
-  test("auto-split fold is bit-identical to the unsplit gate; scratch fold too") {
+  test("auto-split fold is bit-identical to the unsplit gate") {
     val batch = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .where($"doc_id" < 400)
       .selectExpr("doc_id", "substring(text, 1, 24) AS key")
-    def run(maxKeys: Int, scratch: Boolean = false)
-        : (Set[Long], Seq[(Long, String)], Long) = {
-      val (store, out) = (tmp(s"fz_split_s$maxKeys$scratch"),
-        tmp(s"fz_split_o$maxKeys$scratch"))
+    def run(maxKeys: Int): (Set[Long], Seq[(Long, String)], Long) = {
+      val (store, out) = (tmp(s"fz_split_s$maxKeys"), tmp(s"fz_split_o$maxKeys"))
       IngestFuzzy.fuzzySave(spark,
         Seq(1000000L -> "a pre seeded store key").toDF("id", "s"),
         store, maxDist = 3)
-      IngestFuzzy.processBatch(batch, store, out, maxKeys = maxKeys,
-        scratch = if (scratch) Some(tmp(s"fz_split_x$maxKeys")) else None)
+      IngestFuzzy.processBatch(batch, store, out, maxKeys = maxKeys)
       (spark.read.parquet(out).select("doc_id")
          .collect().map(_.getLong(0)).toSet,
        spark.read.parquet(s"$store/keys").orderBy("id")
@@ -191,10 +188,6 @@ class IngestFuzzySpec extends SparkSpec {
     val unsplit = run(1000000)
     val split = run(37) // ~11 id-ordered slices
     assert(split == unsplit)
-    // the disk-backed lineage cut (bulk-backfill spill release) changes
-    // nothing: slice-scratch fold == in-memory fold bit-for-bit
-    assert(run(37, scratch = true) == unsplit)
-    assert(run(1000000, scratch = true) == unsplit)
     assert(unsplit._1.nonEmpty && unsplit._1.size < 400)
   }
 
@@ -286,15 +279,21 @@ class IngestFuzzySpec extends SparkSpec {
       maxDist = 2, nBuckets = 128)
     val probe = Seq((9999L, "stored key number 7 with tail 259"))
       .toDF("id", "s").selectExpr("id", "s", "length(s) AS len")
-    val pruned = IngestFuzzy.prunedStoreSegs(spark, store, probe, 2, 3, 128)
-    val scans = pruned.queryExecution.executedPlan.collectWithSubqueries {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    val plan = IngestFuzzy.storeProbe(spark, store,
+      IngestFuzzy.collectKeys(probe, 2, 3).toSeq,
+      IngestFuzzy.collectProbes(probe, 2, 3, 128), 2, 3, 128).queryExecution.sparkPlan
+    val scans = plan.collectWithSubqueries {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+        if s.metadata.get("Location").exists(_.contains("segs")) => s
     }
     assert(scans.nonEmpty && scans.forall(_.partitionFilters.nonEmpty),
       "segs scan lost its partition filter")
-    val full = spark.read.parquet(s"$store/segs").count()
-    val got = pruned.count()
-    assert(got < full, s"pruned read ($got) did not prune (store $full)")
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/segs"))
+      .count(st => st.isDirectory && st.getPath.getName.startsWith("sb="))
+    val read = scans.map(_.selectedPartitions.partitionCount).sum
+    assert(read < dirs, s"pruned read ($read partitions) did not prune (store $dirs)")
     // and the pruned probe still finds the planted 1-edit duplicate
     IngestFuzzy.gateBatch(
       Seq((9999L, "stored key number 7 with tail 259x"))

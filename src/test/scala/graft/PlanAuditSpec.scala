@@ -18,6 +18,22 @@ class PlanAuditSpec extends SparkSpec {
   private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
     p.collectWithSubqueries { case s: FileSourceScanExec => s }
 
+  /** A store probe's planned shape: at least one broadcast join, no
+    * store scan on any broadcast build side, and no shuffle join. */
+  private def assertBatchBroadcast(p: SparkPlan): Unit = {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    val joins = p.collectWithSubqueries { case j: BroadcastHashJoinExec => j }
+    assert(joins.nonEmpty, "store probe lost its broadcast join")
+    joins.foreach { j =>
+      val build = if (j.buildSide == BuildLeft) j.left else j.right
+      assert(scans(build).isEmpty, "a store scan sits on the broadcast build side")
+    }
+    assert(p.collectWithSubqueries { case j: SortMergeJoinExec => j }.isEmpty &&
+      p.collectWithSubqueries { case j: ShuffledHashJoinExec => j }.isEmpty,
+      "the store probe plans a shuffle join")
+  }
+
   test("q01: scan reads only the five needed lineitem columns") {
     val ss = scans(plan("q01_pricing_summary"))
     assert(ss.nonEmpty)
@@ -185,6 +201,24 @@ class PlanAuditSpec extends SparkSpec {
       assert(bandJoins.isEmpty,
         "incremental-dedup band join statically broadcasts a band-row side")
     } finally newSigs.unpersist(blocking = false)
+  }
+
+  test("ingest content gate: the store probe broadcasts the batch band rows, the store never shuffles") {
+    // the signature store is the corpus-sized side: its band rows are
+    // derived in the scan stage and stream into the join; the batch's
+    // (band, bkey, b) rows are the explicitly broadcast build side
+    import graft.operators.Dedup
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val store = java.nio.file.Files.createTempDirectory("audit_sigs").toString
+    Dedup.signatureSave(docs.where(col("doc_id") < 250), store)
+    val probe = Seq((0, 7L, 9001L)).toDF("band", "bkey", "b")
+    val p = graft.streaming.IngestDedup.storePlan(spark.read.parquet(store)
+      .select((0 until Dedup.NumPerms).map(i => col(s"h$i")): _*), probe)
+      .queryExecution.sparkPlan
+    assert(scans(p).nonEmpty)
+    assertBatchBroadcast(p)
   }
 
   test("q125 CMS hitters: the bounded sketch side rides a broadcast join") {
@@ -510,15 +544,25 @@ class PlanAuditSpec extends SparkSpec {
     val existing = fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/segs"))
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("sb="))
       .map(_.getPath.getName.stripPrefix("sb=").toInt).toSet
-    val segs = graft.streaming.IngestFuzzy.prunedStoreSegs(spark, store,
-      probe, 3, 3, 251)
-    val ss = scans(segs.queryExecution.sparkPlan)
+    import graft.streaming.IngestFuzzy
+    val fzPlan = IngestFuzzy.storeProbe(spark, store,
+      IngestFuzzy.collectKeys(probe, 3, 3).toSeq,
+      IngestFuzzy.collectProbes(probe, 3, 3, 251), 3, 3, 251).queryExecution.sparkPlan
+    def under(sub: String) = scans(fzPlan)
+      .filter(_.metadata.get("Location").exists(_.contains(s"$store/$sub")))
+    val ss = under("segs")
     assert(ss.length == 1)
     val scanned = ss.head.selectedPartitions.partitionCount
     assert(scanned == (want & existing).size,
       s"scanned $scanned partitions; probe covers ${(want & existing).size}")
     assert(scanned < existing.size,
       "point probe failed to prune (scanned every existing bucket)")
+    // the short-key side reads only keys/'s sh=1 partition
+    val ks = under("keys")
+    assert(ks.length == 1 && ks.head.partitionFilters.nonEmpty &&
+      ks.head.selectedPartitions.partitionCount <= 1)
+    // the batch rides the broadcast build side; the store never shuffles
+    assertBatchBroadcast(fzPlan)
     // lexical: one term → one bucket partition on a 251-bucket store
     val lstore = java.nio.file.Files.createTempDirectory("audit_lexpt").toString
     graft.operators.Lexical.lexSave(spark, docs, lstore, nBuckets = 8)

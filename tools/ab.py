@@ -46,16 +46,21 @@ def export(rev, dest):
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
+STDERR_TAIL = 40  # lines of a failed run's stderr kept for its report
+
+
 def run(checkout, workload, seed, seconds):
-    """One timed perfbench run; its result object, or None when it failed."""
+    """One timed perfbench run: (its result object, None), or (None, the
+    last STDERR_TAIL lines of its stderr) when it failed."""
     proc = subprocess.run(
         [sys.executable, os.path.join(checkout, "perfbench", "run.py"), "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
-        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
     if proc.returncode != 0 or not lines:
-        return None
-    return json.loads(lines[-1])
+        tail = "\n".join(proc.stderr.splitlines()[-STDERR_TAIL:])
+        return None, f"exit code {proc.returncode}, last stderr lines:\n{tail}"
+    return json.loads(lines[-1]), None
 
 
 def quartiles(xs):
@@ -113,15 +118,18 @@ def main():
             for i in range(args.pairs):
                 seed = args.seed + i
                 order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-                got = {}
+                got, errs = {}, {}
                 for side in order:
-                    got[side] = run(sides[side], wl, seed, seconds)
+                    got[side], errs[side] = run(sides[side], wl, seed, seconds)
                     log.write(json.dumps({"workload": wl, "pair": i, "seed": seed, "side": side,
                                           "result": got[side]}) + "\n")
                     log.flush()
                 if got["parent"] is None or got["change"] is None:
                     failed_runs += 1
                     print(f"ab: {wl} pair {i} (seed {seed}): a run failed, pair dropped", flush=True)
+                    for side in order:
+                        if errs[side]:
+                            print(f"ab: {side} run, {errs[side]}", flush=True)
                     continue
                 for side in order:
                     res[side].append(got[side])
