@@ -482,6 +482,36 @@ object Dedup {
                                      blockChoose: Int,
                                      carry: Seq[String] = Nil,
                                      hint: Boolean = true): DataFrame = {
+    val (blocks, tables) = hammingLayout(bits, maxHamming, blockChoose)
+    def block(b: Int): Column =
+      shiftright(col("h"), blocks(b)._1).bitwiseAND(lit(blocks(b)._2))
+    val withBlocks = hashes.select(col("id") +: col("h") +:
+      (carry.map(col) ++
+        blocks.indices.map(b => block(b).as(s"blk$b"))): _*)
+    val rows = withBlocks.select(col("id") +: col("h") +:
+      (carry.map(col) :+
+        posexplode(array(tables.map(s =>
+          xxhash64(s.map(b => col(s"blk$b")): _*): Column): _*))
+          .as(Seq("band", "bkey"))): _*)
+    if (hint) rows.hint("shuffle_hash") else rows
+  }
+
+  /** `hammingBandRows`' bands of one fingerprint on the driver: per
+    * band, in band order, the block values its `bkey` hashes — so two
+    * fingerprints within `maxHamming` bits share some band's values
+    * exactly when their band rows share a (band, bkey). For a gate that
+    * has already collected its batch fingerprints. */
+  private[graft] def hammingBandBlocks(bits: Int, maxHamming: Int,
+                                       blockChoose: Int): Long => Seq[Seq[Long]] = {
+    val (blocks, tables) = hammingLayout(bits, maxHamming, blockChoose)
+    h => tables.map(_.map { b => (h >> blocks(b)._1) & blocks(b)._2 })
+  }
+
+  // the pigeonhole layout both band forms cut: maxHamming + blockChoose
+  // near-equal blocks as (start bit, mask), and the bands as
+  // blockChoose-subsets of block indices, in band order
+  private def hammingLayout(bits: Int, maxHamming: Int, blockChoose: Int)
+      : (IndexedSeq[(Int, Long)], Seq[IndexedSeq[Int]]) = {
     require(bits >= 1 && bits <= 64, "bits must be in [1, 64]")
     require(maxHamming >= 0 && blockChoose >= 1, "non-negative radius")
     val numBlocks = maxHamming + blockChoose
@@ -490,19 +520,8 @@ object Dedup {
     val widths = (0 until numBlocks).map(b =>
       bits / numBlocks + (if (b < bits % numBlocks) 1 else 0))
     val starts = widths.scanLeft(0)(_ + _).init
-    def block(b: Int): Column =
-      shiftright(col("h"), starts(b)).bitwiseAND(lit(
-        if (widths(b) == 64) -1L else (1L << widths(b)) - 1))
-    val tables = (0 until numBlocks).combinations(blockChoose).toSeq
-    val withBlocks = hashes.select(col("id") +: col("h") +:
-      (carry.map(col) ++
-        (0 until numBlocks).map(b => block(b).as(s"blk$b"))): _*)
-    val rows = withBlocks.select(col("id") +: col("h") +:
-      (carry.map(col) :+
-        posexplode(array(tables.map(s =>
-          xxhash64(s.map(b => col(s"blk$b")): _*): Column): _*))
-          .as(Seq("band", "bkey"))): _*)
-    if (hint) rows.hint("shuffle_hash") else rows
+    (starts.zip(widths.map(w => if (w == 64) -1L else (1L << w) - 1)),
+      (0 until numBlocks).combinations(blockChoose).toSeq)
   }
 
   /** Near-duplicate cluster closure: connected components over verified
@@ -1364,9 +1383,11 @@ object Dedup {
     * descends (`twoSided = false`); probing a STORE the partner can be
     * longer OR shorter, so lt runs over [len − d, len + d]
     * (`twoSided = true`) — the start windows clamp to the probe
-    * string, so over-long layouts vanish instead of emitting junk. */
+    * string, so over-long layouts vanish instead of emitting junk.
+    * `carryS` keeps the probe string `s` on every row. */
   private[graft] def edProbeSegs(base: DataFrame, maxDist: Int,
-                                 minSeg: Int, twoSided: Boolean): DataFrame = {
+                                 minSeg: Int, twoSided: Boolean,
+                                 carryS: Boolean = false): DataFrame = {
     val d = maxDist
     val n = d + 1
     val shortCut = minSeg * n
@@ -1383,8 +1404,9 @@ object Dedup {
       .where(expr(s"greatest(1, pi - $d) <= least(pi + $d, len - li + 1)"))
       .select(col("pid"), col("s"), col("lt"), col("i"), col("li"),
         explode(expr(s"sequence(greatest(1, pi - $d), least(pi + $d, len - li + 1))")).as("st"))
-      .select(col("pid"), col("lt"), col("i"),
-        expr("substring(s, st, li)").as("seg"))
+      .select(Seq(col("pid"), col("lt"), col("i"),
+        expr("substring(s, st, li)").as("seg")) ++
+        (if (carryS) Seq(col("s")) else Nil): _*)
   }
 
   /** Shared (id, s, len) frame for the edit-join family, persisted for

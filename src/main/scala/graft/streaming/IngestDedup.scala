@@ -20,10 +20,10 @@ import graft.operators.Dedup
   *      and collects the sketches with their 22 band keys;
   *   2. drops any doc with a sketch-Jaccard ≥ threshold match at a
   *      smaller doc_id within the batch (decided on the driver, over
-  *      docs sharing a band key) or in the signature store (one job:
-  *      the store's band rows joined to the broadcast batch band rows,
-  *      the candidates verified on the driver) — `Dedup.sketchDrops`'
-  *      rule;
+  *      docs sharing a band key) or in the signature store (one store
+  *      scan per ≤ 5 k batch docs: the store's band rows joined to the
+  *      broadcast batch band rows, each carrying its doc's sketch,
+  *      verified in the same stage) — `Dedup.sketchDrops`' rule;
   *   3. appends survivors to the output parquet;
   *   4. appends survivors' signatures to the store, so batch N+1
   *      dedups against them.
@@ -32,9 +32,9 @@ import graft.operators.Dedup
   * ~0.5 KB/doc forever, never in executor memory, shared across
   * restarts and across independent pipelines. Per-batch cost is one
   * streaming scan of the store plus O(batch × matching band keys): the
-  * store is never shuffled, only the batch's band rows are broadcast,
-  * and only store sketches that share a band key with the batch come
-  * back to the driver. Nothing ever rescans kept text, and the store
+  * store is never shuffled, only the batch's band rows (with their
+  * sketches) are broadcast, and only the batch ids of verified store matches
+  * come back to the driver. Nothing ever rescans kept text, and the store
   * grows only by kept docs.
   *
   * Delivery: restart replays the in-flight micro-batch, so both sinks
@@ -86,12 +86,13 @@ object IngestDedup {
   /** `decide` over a sketch frame (doc_id, h0…h65). The sketch and its
     * 22 band keys (`Dedup.bandKeyCols`, the expressions the store side
     * hashes with) are collected in one action. The in-batch first-wins
-    * rule runs on the driver over docs sharing a band key; the store is
-    * probed in one job (`storeProbe`) and its candidates verified on the
-    * driver. Both verify with `Dedup.sketchNear`, the rule
-    * `Dedup.sketchDrops` applies in Spark. */
+    * rule runs on the driver over docs sharing a band key, verified
+    * with the driver form of `Dedup.sketchNear`; the store is probed in
+    * one store scan per `probeDocs` batch docs (`storePlan`), verified in the
+    * same stage with its Column form — `Dedup.sketchDrops`' rule. */
   private[graft] def decideSketch(sigs: DataFrame, storePath: String,
-                                  threshold: Double): (Set[Long], DataFrame) = {
+                                  threshold: Double,
+                                  probeDocs: Int = ProbeDocs): (Set[Long], DataFrame) = {
     val spark = sigs.sparkSession
     val n = Dedup.NumPerms
     val rows = sigs.select((col("doc_id") +: col("doc_id").cast("long") +:
@@ -112,43 +113,43 @@ object IngestDedup {
     val vsStore =
       if (rows.isEmpty || !storeExists(spark, storePath)) Set.empty[Long]
       else {
-        val slot = ids.zip(slots).toMap
-        storeProbe(spark, storePath, ids.zip(bands))
-          .collect { case (b, a) if Dedup.sketchNear(a, slot(b), threshold) => b }
-          .toSet
+        val store = graft.core.Stores.readParquet(spark, storePath)
+          .select((0 until n).map(p => col(s"h$p")): _*)
+        val fields = StructField("band", IntegerType) +:
+          ("bkey" +: "b" +: (0 until n).map(p => s"bh$p")).map(StructField(_, LongType))
+        rows.indices.grouped(probeDocs).flatMap { slice =>
+          storePlan(store, local(spark, slice.flatMap(i => bands(i).indices.map(b =>
+              Row.fromSeq(b +: bands(i)(b) +: ids(i) +: slots(i).toSeq))), fields),
+            threshold).collect().map(_.getLong(0))
+        }.toSet
       }
-    (inBatch ++ vsStore, spark.createDataFrame(
-      java.util.Arrays.asList(rows.map(r => Row.fromSeq(r.get(0) +: (0 until n)
-        .map(p => r.get(2 + p)))): _*), sigs.schema))
+    (inBatch ++ vsStore, local(spark, rows.toSeq.map(r =>
+      Row.fromSeq(r.get(0) +: (0 until n).map(p => r.get(2 + p)))), sigs.schema.fields.toSeq))
   }
 
-  /** The store side of the gate in one job: the signature store's band
-    * rows (each store sketch exploded to its 22 band keys in the scan
-    * stage) inner-joined to the batch's (band, bkey, doc_id) rows,
-    * broadcast explicitly from a local frame, so the store streams from
-    * parquet and nothing store-sized is shuffled. Returns one
-    * (batch doc_id, store sketch) per shared band key. */
-  private def storeProbe(spark: SparkSession, storePath: String,
-                         bands: Array[(Long, Array[Long])]): Array[(Long, Array[Long])] = {
-    val n = Dedup.NumPerms
-    val probe = spark.createDataFrame(java.util.Arrays.asList(bands.toSeq.flatMap {
-      case (id, ks) => ks.indices.map(b => Row(b, ks(b), id)) }: _*),
-      StructType(Seq(StructField("band", IntegerType), StructField("bkey", LongType),
-        StructField("b", LongType))))
-    val slotCols = (0 until n).map(p => col(s"h$p"))
-    storePlan(graft.core.Stores.readParquet(spark, storePath).select(slotCols: _*), probe)
-      .collect().map(r => (r.getLong(0), Array.tabulate(n)(p => r.getLong(1 + p))))
-  }
+  /** Batch docs per store probe: bounds each broadcast at ~60 MB
+    * (22 band rows per doc, each carrying the doc's 66 slots). */
+  private val ProbeDocs = 5000
 
-  /** The probe's plan: `store` (h0…h65) exploded to band rows, joined
-    * to the broadcast `probe` (band, bkey, b). Package-visible for the
-    * plan-shape pin. */
-  private[graft] def storePlan(store: DataFrame, probe: DataFrame): DataFrame = {
+  private def local(spark: SparkSession, rows: Seq[Row], fields: Seq[StructField]) =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+
+  /** The store side of the gate in one scan: `store` (h0…h65) exploded to
+    * its 22 band rows in the scan stage, inner-joined to the batch's
+    * `probe` rows (band, bkey, b, bh0…bh65: each band key carrying its
+    * doc's sketch), broadcast explicitly from a local frame, and
+    * verified with `Dedup.sketchNear` in the same stage — the store
+    * streams from parquet, nothing store-sized is shuffled, and only
+    * the batch ids of verified matches come back (one per shared band
+    * key). Package-visible for the plan-shape pin. */
+  private[graft] def storePlan(store: DataFrame, probe: DataFrame,
+                               threshold: Double): DataFrame = {
     val slotCols = (0 until Dedup.NumPerms).map(p => col(s"h$p"))
     store.select(slotCols :+ posexplode(array(Dedup.bandKeyCols: _*))
         .as(Seq("band", "bkey")): _*)
       .join(broadcast(probe), Seq("band", "bkey"))
-      .select(col("b") +: slotCols: _*)
+      .where(Dedup.sketchNear(p => col(s"h$p"), p => col(s"bh$p"), threshold))
+      .select("b")
   }
 
   /** Start the streaming ingest gate: `docs` is an unbounded stream of

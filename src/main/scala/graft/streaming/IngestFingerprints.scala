@@ -30,8 +30,8 @@ import graft.operators.{Dedup, Multimodal}
   * collected once; the in-batch first-wins rule is decided on the
   * driver. The store side of the probe is the corpus and must STREAM
   * from parquet with no shuffle at any size, so the batch-side band
-  * rows are broadcast EXPLICITLY from a local frame — one job per
-  * probe, and only matched parts come back to the driver. Broadcast
+  * rows are broadcast EXPLICITLY from a local frame — one store scan
+  * per probe, and only matched parts come back to the driver. Broadcast
   * volume is bounded in PARTS, not records (`gateBatch(maxBandRows)`):
   * batches whose fps rows × C(d+bc, bc) band rows exceed the bound
   * probe the store in id-ordered slices with bit-identical output, so
@@ -282,8 +282,8 @@ object IngestFingerprints {
     * tens of millions of rows and blow the explicit-broadcast limits
     * with record-based sizing. Batches whose band-row volume exceeds
     * `maxBandRows` probe the store in id-ordered slices (ids never
-    * split — the all-parts predicate needs a record whole), one job
-    * each, so every broadcast stays bounded; the in-batch rule runs on
+    * split — the all-parts predicate needs a record whole), one store
+    * scan each, so every broadcast stays bounded; the in-batch rule runs on
     * the driver over the whole batch, so the output is bit-identical
     * at any `maxBandRows` (IngestFingerprintsSpec parity pin). */
   def gateBatch(batch: DataFrame, storePath: String, fps: DataFrame,
@@ -296,7 +296,7 @@ object IngestFingerprints {
     * (id, p, h, np) fingerprint rows as a local frame of the collected
     * rows. The fingerprints are collected in one action; the in-batch
     * first-wins rule runs on the driver over records sharing an aligned
-    * band; the store is probed in one job per slice (`storeProbe`) and
+    * band; the store is probed in one scan per slice (`storeProbe`) and
     * the all-parts rule applied on the driver to its matched parts. */
   private[streaming] def decide(storePath: String, fps: DataFrame,
                                 maxBandRows: Long = 1L << 21): (Set[Long], DataFrame) = {
@@ -351,19 +351,13 @@ object IngestFingerprints {
     * record drops when a smaller-id record has the same part count and
     * every aligned part within `d` bits (the conservative cascade — the
     * smaller record's own fate doesn't matter). Candidates share an
-    * aligned band: the pigeonhole blocks of `Dedup.hammingBandRows`,
-    * compared as block values, so a pair within the radius always
+    * aligned band's block values (`Dedup.hammingBandBlocks`, the values
+    * `hammingBandRows` hashes), so a pair within the radius always
     * shares one. Null hashes match nothing. */
   private def inBatchDrops(rows: Array[Row], np: Map[Long, Int],
                            d: Int, bc: Int): Set[Long] = {
     import scala.collection.mutable
-    val numBlocks = d + bc
-    val widths = (0 until numBlocks).map(b =>
-      64 / numBlocks + (if (b < 64 % numBlocks) 1 else 0))
-    val starts = widths.scanLeft(0)(_ + _).init
-    def block(h: Long, b: Int) =
-      (h >> starts(b)) & (if (widths(b) == 64) -1L else (1L << widths(b)) - 1)
-    val tables = (0 until numBlocks).combinations(bc).toSeq
+    val bandBlocks = Dedup.hammingBandBlocks(64, d, bc)
     val parts = rows.filterNot(_.isNullAt(2))
       .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(r => (r.getInt(1), r.getLong(2))) }
     def matches(a: Long, b: Long) =
@@ -373,8 +367,8 @@ object IngestFingerprints {
     val index = mutable.HashMap.empty[(Int, Int, Int, Seq[Long]), List[Long]]
     val dropped = mutable.Set.empty[Long]
     for (id <- parts.keys.toSeq.sorted) {
-      val keys = for ((p, h) <- parts(id).toSeq; (t, ti) <- tables.zipWithIndex)
-        yield (p, np(id), ti, t.map(block(h, _)))
+      val keys = for ((p, h) <- parts(id).toSeq; (vs, band) <- bandBlocks(h).zipWithIndex)
+        yield (p, np(id), band, vs)
       if (keys.iterator.flatMap(index.getOrElse(_, Nil)).distinct
           .exists(a => a < id && matches(a, id)))
         dropped += id

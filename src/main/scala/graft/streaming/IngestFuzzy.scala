@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, length, levenshtein, lit, pmod, when, xxhash64}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, explode, greatest, length, levenshtein, lit, pmod, sequence, when, xxhash64}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Scoped
@@ -58,12 +58,13 @@ import graft.operators.Dedup
   * removed.
   *
   * Each micro-batch: (1) collect the keyed rows with their PassJoin
-  * probe and index segment rows in one action; (2) drop keys matching
-  * a smaller id within the batch (first-wins), decided on the driver;
-  * (3) drop keys matching the store — one job per slice of ≤ `maxKeys`
-  * keys: the pruned segs/ scan and the short-key partition joined to
-  * the broadcast probe rows, thresholded levenshtein verify in the same
-  * stage; (4) append surviving DOCS to the output; (5) append
+  * index segments in one action, and each slice of ≤ `maxKeys` keys'
+  * probe rows in one more; (2) drop keys matching a smaller id within
+  * the batch (first-wins), decided on the driver; (3) drop keys
+  * matching the store — per slice, the pruned segs/ scan and the
+  * short-key partition joined to the slice's broadcast probe rows,
+  * thresholded levenshtein verify in the same stage, no shuffle;
+  * (4) append surviving DOCS to the output; (5) append
   * survivors' keys + segment rows, cut with the recorded layout.
   *
   * Delivery matches `IngestDedup`: both sinks are at-least-once; a
@@ -191,17 +192,17 @@ object IngestFuzzy {
     * PassJoin index segments in one action, then folds id-ordered
     * slices of ≤ `maxKeys` keys; per slice it collects the slice's
     * probe rows (one action) and:
-    *  - decides the in-batch first-wins rule on the driver: each key,
-    *    in id order, probes the segments and short keys of every
-    *    smaller-id key — earlier slices' too, the carry lives on the
-    *    driver (ALL of them, not just survivors: the rule is a
+    *  - decides the in-batch first-wins rule on the driver, the keys
+    *    in parallel: each key probes the segments and short keys of
+    *    every smaller-id key — earlier slices' too, the carry lives on
+    *    the driver (ALL of them, not just survivors: the rule is a
     *    conservative cascade, a dropped smaller-id key still drops its
     *    neighbors) — and candidates verify with the thresholded
     *    Levenshtein kernel Spark's `levenshtein` calls;
-    *  - probes the store in one job: the partition-pruned segs/ scan
-    *    plus the short-key partition of keys/, inner-joined to the
-    *    slice's probe rows broadcast from a local frame, verified in
-    *    the same stage.
+    *  - probes the store: the partition-pruned segs/ scan plus the
+    *    short-key partition of keys/, inner-joined to the slice's probe
+    *    rows (derived from the batch and broadcast explicitly), verified
+    *    in the same stage.
     * The slices bound the broadcast and the probe rows on the driver;
     * the decision is the unsplit gate's at any `maxKeys` (pinned in
     * IngestFuzzySpec). Nothing is appended during the decision, so the
@@ -213,9 +214,9 @@ object IngestFuzzy {
 
   /** One keyed batch row as the gate collects it: the key and its own
     * index segments (lt, i, seg) (`Dedup.edIndexSegs`). */
-  private[graft] final case class Key(id: Long, s: String, len: Int,
-                                      index: Array[(Int, Int, String)]) {
-    lazy val utf8: UTF8String = UTF8String.fromString(s)
+  private final case class Key(id: Long, s: String, len: Int,
+                               index: Array[(Int, Int, String)]) {
+    val utf8: UTF8String = UTF8String.fromString(s)
   }
 
   /** A slice's two-sided PassJoin probe rows (lt, i, seg) by key id,
@@ -237,13 +238,13 @@ object IngestFuzzy {
     val probeStore = keys.nonEmpty && exists(spark, s"$storePath/keys")
     val carry = new Carry(d, minSeg)
     keys.grouped(maxKeys).flatMap { slice =>
-      val probes = collectProbes(
+      val sliceBase =
         if (slice.length == keys.length) base
-        else base.where(col("id").between(slice.head.id, slice.last.id)), d, minSeg, nB)
-      val inBatch = slice.filter(k => carry.drops(k, probes.rows.getOrElse(k.id, Array.empty)))
-        .map(_.id)
+        else base.where(col("id").between(slice.head.id, slice.last.id))
+      val probes = collectProbes(sliceBase, d, minSeg, nB)
+      val inBatch = carry.drops(slice, probes)
       if (!probeStore) inBatch
-      else inBatch ++ storeProbe(spark, storePath, slice.toSeq, probes, d, minSeg, nB)
+      else inBatch ++ storeProbe(spark, storePath, sliceBase, probes.buckets, d, minSeg, nB)
         .collect().map(_.getLong(0))
     }.toSet
   }
@@ -251,7 +252,7 @@ object IngestFuzzy {
   /** The batch keys (id, s, len) with their index segments, collected
     * in ONE action (a union of two narrow projections of `base`),
     * sorted by id. */
-  private[graft] def collectKeys(base: DataFrame, d: Int, minSeg: Int): Array[Key] = {
+  private def collectKeys(base: DataFrame, d: Int, minSeg: Int): Array[Key] = {
     val rows = base.select(lit(true).as("key"), col("id"), col("len").as("lt"),
         lit(0).as("i"), col("s").as("seg"))
       .unionByName(Dedup.edIndexSegs(base, d, minSeg).select(lit(false).as("key"),
@@ -279,10 +280,10 @@ object IngestFuzzy {
   }
 
   /** The in-batch first-wins rule's driver state: the index segments
-    * and short keys of every key decided so far, across slices. A key
+    * and short keys of every key seen so far, across slices. A key
     * probes them exactly as a batch probes the store — its probe rows
     * against the index segments, a short key by length band against
-    * the short keys — so every earlier key within `d` edits is a
+    * the short keys — so every smaller-id key within `d` edits is a
     * candidate, and every candidate verifies exactly. */
   private final class Carry(d: Int, minSeg: Int) {
     import scala.collection.mutable
@@ -291,53 +292,65 @@ object IngestFuzzy {
     private val segIdx = mutable.HashMap.empty[(Int, Int, String), mutable.ArrayBuffer[Int]]
     private val shortIdx = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
 
-    /** Whether a smaller-id key decided earlier is within `d` of `key`
-      * (keys arrive in id order); `key` joins the carry either way. */
-    def drops(key: Key, probe: Array[(Int, Int, String)]): Boolean = {
+    /** The ids of `slice` (the next keys in id order) within `d` of a
+      * smaller-id key seen so far or in `slice`. The slice joins the
+      * carry first; each key's verdict then reads only the carry (the
+      * cascade never asks whether a neighbor survived), so the keys are
+      * decided in parallel. */
+    def drops(slice: Array[Key], probes: Probes): Array[Long] = {
+      val from = seen.length
+      for (key <- slice) {
+        val k = seen.length
+        seen += key
+        key.index.foreach(r => segIdx.getOrElseUpdate(r, mutable.ArrayBuffer.empty) += k)
+        if (key.len < shortCut + d)
+          shortIdx.getOrElseUpdate(key.len, mutable.ArrayBuffer.empty) += k
+      }
+      java.util.stream.IntStream.range(from, seen.length).parallel()
+        .filter(k => near(k, probes.rows.getOrElse(seen(k).id, Array.empty)))
+        .toArray.map(seen(_).id)
+    }
+
+    private def near(k: Int, probe: Array[(Int, Int, String)]): Boolean = {
+      val key = seen(k)
       val cands =
         if (key.len < shortCut)
           (math.max(0, key.len - d) to key.len + d).iterator
             .flatMap(l => shortIdx.getOrElse(l, Nil))
         else probe.iterator.flatMap(r => segIdx.getOrElse(r, Nil))
-      val near = cands.distinct.exists(j => seen(j).id < key.id &&
+      cands.filter(_ < k).distinct.exists(j => seen(j).id < key.id &&
         seen(j).utf8.levenshteinDistance(key.utf8, d) >= 0)
-      val k = seen.length
-      seen += key
-      key.index.foreach(r => segIdx.getOrElseUpdate(r, mutable.ArrayBuffer.empty) += k)
-      if (key.len < shortCut + d)
-        shortIdx.getOrElseUpdate(key.len, mutable.ArrayBuffer.empty) += k
-      near
     }
   }
 
-  /** The store probe for one slice of collected keys, as one plan with
-    * one output column `pid` (a batch id per verified store match):
-    *  - store side: segs/ read only in the slice's buckets (named
-    *    `bucket=N` dirs plus the partition filter; a probe covering
-    *    every bucket reads them all), plus the sh=1 partition of keys/
-    *    as length-band rows (lt = len, i = 0, seg = "") — the store's
-    *    bounded-length short slice;
+  /** The store probe for one slice `base` (id, s, len) of the batch, as
+    * one plan with one output column `pid` (a batch id per verified
+    * store match):
+    *  - store side: segs/ read only in the slice's segs/ `buckets`
+    *    (named `bucket=N` dirs plus the partition filter; a probe
+    *    covering every bucket reads them all), plus the sh=1 partition
+    *    of keys/ as length-band rows (lt = len, i = 0, seg = "") — the
+    *    store's bounded-length short slice;
     *  - batch side: each long key's probe rows and each short key's
     *    band rows (lt = len ± d, i = 0, seg = ""), carrying the key
-    *    string, broadcast from a local frame, so the store streams from
-    *    parquet into the join with no shuffle at any size;
+    *    string, derived from `base` and broadcast explicitly, so the
+    *    store streams from parquet into the join with no shuffle at any
+    *    size;
     *  - the thresholded `levenshtein` verify in the same stage.
     * segs/ can hold zero data files even when keys/ has them (every
     * kept key too short to cut segments): then the segments are recut
     * from keys/, empty by construction in exactly that case.
     * Package-visible for the plan pins. */
   private[graft] def storeProbe(spark: SparkSession, storePath: String,
-                                keys: Seq[Key], probes: Probes, d: Int,
+                                base: DataFrame, buckets: Seq[Int], d: Int,
                                 minSeg: Int, nB: Int): DataFrame = {
     val shortCut = minSeg * (d + 1)
-    val probe = spark.createDataFrame(java.util.Arrays.asList(keys.flatMap { k =>
-        if (k.len < shortCut)
-          (math.max(0, k.len - d) to k.len + d).map(l => Row(k.id, k.s, l, 0, ""))
-        else probes.rows.getOrElse(k.id, Array.empty[(Int, Int, String)]).toSeq
-          .map { case (lt, i, seg) => Row(k.id, k.s, lt, i, seg) }
-      }: _*), StructType(Seq(StructField("pid", LongType), StructField("s_b", StringType),
-        StructField("lt", IntegerType), StructField("i", IntegerType),
-        StructField("seg", StringType))))
+    val probe = Dedup.edProbeSegs(base, d, minSeg, twoSided = true, carryS = true)
+      .select(col("pid"), col("s").as("s_b"), col("lt"), col("i"), col("seg"))
+      .unionByName(base.where(col("len") < shortCut)
+        .select(col("id").as("pid"), col("s").as("s_b"),
+          explode(sequence(greatest(lit(0), col("len") - d), col("len") + d)).as("lt"),
+          lit(0).as("i"), lit("").as("seg")))
     val storeKeys = graft.core.Stores.readParquet(spark, s"$storePath/keys",
       StructField("sh", IntegerType))
     val shorts = storeKeys.where(col("sh") === 1 && length(col("s")) < shortCut + d)
@@ -347,7 +360,6 @@ object IngestFuzzy {
         Dedup.edIndexSegs(storeKeys.withColumn("len", length(col("s"))), d, minSeg,
           carryS = true)
       else {
-        val buckets = probes.buckets
         val all = graft.core.Stores.bucketRead(spark, s"$storePath/segs", "sb",
           buckets, nB)
         if (buckets.length < nB) all.where(col("sb").isin(buckets.map(Integer.valueOf): _*))

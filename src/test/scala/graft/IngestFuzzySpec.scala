@@ -279,9 +279,8 @@ class IngestFuzzySpec extends SparkSpec {
       maxDist = 2, nBuckets = 128)
     val probe = Seq((9999L, "stored key number 7 with tail 259"))
       .toDF("id", "s").selectExpr("id", "s", "length(s) AS len")
-    val plan = IngestFuzzy.storeProbe(spark, store,
-      IngestFuzzy.collectKeys(probe, 2, 3).toSeq,
-      IngestFuzzy.collectProbes(probe, 2, 3, 128), 2, 3, 128).queryExecution.sparkPlan
+    val plan = IngestFuzzy.storeProbe(spark, store, probe,
+      IngestFuzzy.collectProbes(probe, 2, 3, 128).buckets, 2, 3, 128).queryExecution.sparkPlan
     val scans = plan.collectWithSubqueries {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
         if s.metadata.get("Location").exists(_.contains("segs")) => s

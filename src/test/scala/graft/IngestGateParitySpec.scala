@@ -13,7 +13,7 @@ import graft.streaming.{IngestDedup, IngestFingerprints, IngestFuzzy}
   * Levenshtein distance of exactly d, a Hamming distance of exactly d)
   * and one step past it, inside the batch and against the store; a
   * replayed batch drops itself after its append; null keys survive; and
-  * the key and fingerprint gates decide the same at every slice size. */
+  * every gate decides the same at every slice size. */
 class IngestGateParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,8 +53,9 @@ class IngestGateParitySpec extends SparkSpec {
         try d.collect().map(_.getLong(0)).toSet finally d.unpersist()
       } finally b.unpersist()
     }
-    for (t <- Seq(0.3, 0.5, 0.5 + 1e-9, 0.8))
-      assert(IngestDedup.decideSketch(batch, store, t)._1 == operator(storeRows, t), s"threshold $t")
+    for (t <- Seq(0.3, 0.5, 0.5 + 1e-9, 0.8); probeDocs <- Seq(1, 2, 5000))
+      assert(IngestDedup.decideSketch(batch, store, t, probeDocs)._1 == operator(storeRows, t),
+        s"threshold $t, probeDocs $probeDocs")
     val (drops, sigs) = IngestDedup.decideSketch(batch, store, 0.5)
     assert(drops == Set(101L, 103L))
     assert(IngestDedup.decideSketch(batch, store, 0.5 + 1e-9)._1.isEmpty)

@@ -206,7 +206,8 @@ class PlanAuditSpec extends SparkSpec {
   test("ingest content gate: the store probe broadcasts the batch band rows, the store never shuffles") {
     // the signature store is the corpus-sized side: its band rows are
     // derived in the scan stage and stream into the join; the batch's
-    // (band, bkey, b) rows are the explicitly broadcast build side
+    // (band, bkey, b) rows, each carrying its doc's sketch, are the
+    // explicitly broadcast build side
     import graft.operators.Dedup
     import org.apache.spark.sql.functions.col
     import spark.implicits._
@@ -214,8 +215,10 @@ class PlanAuditSpec extends SparkSpec {
     val store = java.nio.file.Files.createTempDirectory("audit_sigs").toString
     Dedup.signatureSave(docs.where(col("doc_id") < 250), store)
     val probe = Seq((0, 7L, 9001L)).toDF("band", "bkey", "b")
+      .select(col("band") +: col("bkey") +: col("b") +:
+        (0 until Dedup.NumPerms).map(i => col("b").as(s"bh$i")): _*)
     val p = graft.streaming.IngestDedup.storePlan(spark.read.parquet(store)
-      .select((0 until Dedup.NumPerms).map(i => col(s"h$i")): _*), probe)
+      .select((0 until Dedup.NumPerms).map(i => col(s"h$i")): _*), probe, 0.5)
       .queryExecution.sparkPlan
     assert(scans(p).nonEmpty)
     assertBatchBroadcast(p)
@@ -545,9 +548,8 @@ class PlanAuditSpec extends SparkSpec {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("sb="))
       .map(_.getPath.getName.stripPrefix("sb=").toInt).toSet
     import graft.streaming.IngestFuzzy
-    val fzPlan = IngestFuzzy.storeProbe(spark, store,
-      IngestFuzzy.collectKeys(probe, 3, 3).toSeq,
-      IngestFuzzy.collectProbes(probe, 3, 3, 251), 3, 3, 251).queryExecution.sparkPlan
+    val fzPlan = IngestFuzzy.storeProbe(spark, store, probe,
+      IngestFuzzy.collectProbes(probe, 3, 3, 251).buckets, 3, 3, 251).queryExecution.sparkPlan
     def under(sub: String) = scans(fzPlan)
       .filter(_.metadata.get("Location").exists(_.contains(s"$store/$sub")))
     val ss = under("segs")
