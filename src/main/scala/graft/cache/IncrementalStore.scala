@@ -138,12 +138,6 @@ object Fingerprints {
     } finally z.close()
   }
 
-  /** Generic file fingerprint: (length, mtime). */
-  def fileFingerprint(path: String): String = {
-    val f = new File(path)
-    sha256Hex(s"${f.getName}:${f.length()}:${f.lastModified()}")
-  }
-
   def sha256Hex(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes(StandardCharsets.UTF_8))

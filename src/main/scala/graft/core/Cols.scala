@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Column-expression helpers shared across operators.
   *
@@ -45,7 +45,4 @@ object Cols {
   /** casefold + strip non-alphanumerics — the reference's candidate/key
     * normalizer (bdqueimadas_incremental.py:864-869). */
   def normKey(c: Column): Column = regexp_replace(lower(c), "[^a-z0-9]", "")
-
-  /** grouping() flag as a portable INT (Spark emits tinyint, DuckDB bigint). */
-  def gflag(c: Column): Column = grouping(c).cast(IntegerType)
 }

@@ -247,17 +247,7 @@ object Stores {
   def footerSchema(spark: SparkSession, dir: String,
                    parts: StructField*): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    def firstFile(d: Path, depth: Int): Option[Path] =
-      fs.listStatus(d).iterator.filter(st => visible(st.getPath)).flatMap { st =>
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) Iterator(st.getPath)
-        else if (st.isDirectory && depth > 0) firstFile(st.getPath, depth - 1).iterator
-        else Iterator.empty
-      }.nextOption()
-    if (!fs.exists(root)) None
-    else firstFile(root, parts.length).flatMap { file =>
+    firstFile(spark, dir, parts.length).flatMap { file =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
       val json = try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
@@ -265,6 +255,30 @@ object Stores {
         finally reader.close()
       json.map(j => StructType(DataType.fromJson(j).asInstanceOf[StructType].fields ++ parts))
     }
+  }
+
+  /** Whether `dir` holds committed data: a parquet part file at most
+    * `depth` directory levels down (partitioned stores keep theirs under
+    * partition dirs). Hidden entries do not count, so a dir holding only
+    * `_SUCCESS` (an empty committed write), or only a killed write's
+    * `_temporary/` leftovers, is no store yet — reading it would fail
+    * schema inference. */
+  def hasData(spark: SparkSession, dir: String, depth: Int = 1): Boolean =
+    firstFile(spark, dir, depth).isDefined
+
+  // the first visible parquet file under `dir`, `depth` levels down,
+  // listing directories lazily and stopping at the first hit
+  private def firstFile(spark: SparkSession, dir: String, depth: Int): Option[Path] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def walk(d: Path, depth: Int): Option[Path] =
+      fs.listStatus(d).iterator.filter(st => visible(st.getPath)).flatMap { st =>
+        if (st.isFile && st.getPath.getName.endsWith(".parquet")) Iterator(st.getPath)
+        else if (st.isDirectory && depth > 0) walk(st.getPath, depth - 1).iterator
+        else Iterator.empty
+      }.nextOption()
+    if (fs.exists(root)) walk(root, depth) else None
   }
 
   // staged swap with every filesystem boolean CHECKED and the old

@@ -69,10 +69,6 @@ object Coerce {
       try_to_timestamp(normalized, lit("dd/MM/yyyy HH:mm")), "America/Sao_Paulo")
   }
 
-  /** "Publicado em dd/MM/yyyy HH:mm" news label, São Paulo → UTC
-    * (datasets/noticias_agricolas/dates.py:11-27). */
-  def publishedLabelToUtc(c: Column): Column = saoPauloLabelToUtc(c)
-
   /** RFC-1123 HTTP date ("Wed, 21 Oct 2015 07:28:00 GMT") → timestamp
     * (profiling.py:165-174). Spark 3+ rejects 'EEE' parse patterns, so
     * the weekday/zone are stripped and the GMT core parsed (session UTC). */

@@ -135,17 +135,9 @@ object Normalize {
     when(uf === "", lit(null).cast("string")).otherwise(uf)
   }
 
-  /** Month labels (PT/EN) via element_at over literal arrays
-    * (bdqueimadas_overview.py:1689-1712). */
+  /** PT month abbreviations (bdqueimadas_overview.py:1689-1712). */
   private val MonthsPt = Seq("jan", "fev", "mar", "abr", "mai", "jun",
     "jul", "ago", "set", "out", "nov", "dez")
-  private val MonthsEn = Seq("Jan", "Feb", "Mar", "Apr", "May", "Jun",
-    "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-
-  def monthLabel(monthNum: Column, locale: String): Column = {
-    val arr = if (locale == "pt") MonthsPt else MonthsEn
-    element_at(typedLit(arr), monthNum.cast("int"))
-  }
 
   /** PT month abbreviation → month number (ANP `MÊS` column,
     * social/anp_producao/pipeline.py:108-165). */

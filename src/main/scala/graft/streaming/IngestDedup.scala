@@ -111,7 +111,7 @@ object IngestDedup {
         .exists(j => ids(j) < ids(i) && Dedup.sketchNear(slots(j), slots(i), threshold))
     }.map(ids).toSet
     val vsStore =
-      if (rows.isEmpty || !storeExists(spark, storePath)) Set.empty[Long]
+      if (rows.isEmpty || !graft.core.Stores.hasData(spark, storePath)) Set.empty[Long]
       else {
         val store = graft.core.Stores.readParquet(spark, storePath)
           .select((0 until n).map(p => col(s"h$p")): _*)
@@ -156,48 +156,12 @@ object IngestDedup {
     * (doc_id, text) rows; survivors land in `outPath`, their sketches
     * in `storePath`. A pre-seeded store (e.g. `Dedup.signatureSave` of
     * an existing corpus) makes the stream dedup against history it
-    * never saw. Default trigger is a continuous micro-batch loop (the
-    * unbounded-feed shape); pass `Trigger.AvailableNow()` for a
-    * one-shot backfill that drains the source and terminates — but
-    * note AvailableNow snapshots availability at query start, so rows
-    * added after `start` returns are NOT processed. */
+    * never saw. `compactKept` reclaims replay duplicates in both the
+    * output and the store offline. */
   def start(docs: DataFrame, storePath: String, outPath: String,
             threshold: Double, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docs.select(col("doc_id"), col("text")).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, storePath, outPath, threshold)
-        ()
-      }
-      .start()
-
-  /** Offline compaction of the kept-docs output and signature store:
-    * drop the duplicate doc_id rows a partial-failure replay appends
-    * (a crash between the out write and the store append makes the
-    * replayed batch re-keep the same docs — duplicates, never loss;
-    * the rows are bit-identical, so any survivor is the row).
-    * Downstream readers already dedup on doc_id by contract — this
-    * reclaims space and restores 1 row/doc. Run offline
-    * (`core.Stores.rewriteDeduped` swap contract). */
-  def compactKept(spark: org.apache.spark.sql.SparkSession,
-                  outPath: String): Long =
-    graft.core.Stores.rewriteDeduped(spark, outPath, Seq("doc_id"))
-
-  def compactSignatures(spark: org.apache.spark.sql.SparkSession,
-                        storePath: String): Long =
-    graft.core.Stores.rewriteDeduped(spark, storePath, Seq("doc_id"))
-
-  private def storeExists(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a bare directory with no committed files is "no store yet"
-    // (a killed first batch leaves _temporary behind)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.getPath.getName.endsWith(".parquet") ||
-        s.getPath.getName == "_SUCCESS")
-  }
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(docs.select(col("doc_id"), col("text")), checkpoint, trigger) { (batch, _) =>
+      processBatch(batch, storePath, outPath, threshold)
+    }
 }

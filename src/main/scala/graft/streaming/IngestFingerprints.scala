@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.core.Scoped
+import graft.core.Stores.hasData
 import graft.operators.{Dedup, Multimodal}
 
 /** ONE gate implementation for every 64-bit perceptual-fingerprint
@@ -46,7 +47,7 @@ import graft.operators.{Dedup, Multimodal}
   * decision, not a crash. Delivery matches the family: at-least-once
   * sinks, a replayed batch re-finds its own hashes at hamming 0 and
   * drops itself, crash between out write and store append duplicates
-  * rows (never loses them), `compact*` reclaims offline. */
+  * rows (never loses them), `compactKept`/`compactStore` reclaim offline. */
 object IngestFingerprints {
 
   /** Batch → (id, p, h): one dHash row per decodable image payload. */
@@ -117,7 +118,7 @@ object IngestFingerprints {
   }
 
   private def meta(spark: SparkSession, path: String): (Int, Int) = {
-    require(exists(spark, s"$path/meta"),
+    require(hasData(spark, s"$path/meta"),
       s"$path is not an fpSave store (missing meta/)")
     // listing-keyed driver memo: a repeat read of an unchanged meta
     // dir costs no Spark job (the per-batch bookkeeping rule)
@@ -156,7 +157,7 @@ object IngestFingerprints {
                                     np: DataFrame): Unit = {
     val (d, bc) = meta(spark, storePath)
     np.write.mode("append").parquet(s"$storePath/hashes")
-    if (exists(spark, s"$storePath/bands")) {
+    if (hasData(spark, s"$storePath/bands")) {
       val nB = graft.core.Stores.readGeometry(spark, s"$storePath/bands")
         .getOrElse(throw new IllegalStateException(
           s"$storePath/bands has no stamped geometry"))
@@ -237,7 +238,7 @@ object IngestFingerprints {
     val bandB = Dedup.hammingBandRows(bh, 64, d, bc,
       carry = Seq("p", "np"), hint = false)
     val bandS =
-      if (exists(spark, s"$storePath/bands")) {
+      if (hasData(spark, s"$storePath/bands")) {
         val nB = graft.core.Stores.readGeometry(spark, s"$storePath/bands")
           .getOrElse(throw new IllegalStateException(
             s"$storePath/bands has no stamped geometry"))
@@ -248,7 +249,7 @@ object IngestFingerprints {
         (if (buckets.length < nB)
            all.where(col("bb").isin(buckets.map(Integer.valueOf): _*))
          else all).drop("bb")
-      } else if (exists(spark, s"$storePath/hashes"))
+      } else if (hasData(spark, s"$storePath/hashes"))
         Dedup.hammingBandRows(spark.read.parquet(s"$storePath/hashes"),
           64, d, bc, carry = Seq("p", "np"), hint = false)
       else bandB.limit(0)
@@ -311,7 +312,7 @@ object IngestFingerprints {
       StructType(Seq(StructField("id", LongType), StructField("p", IntegerType),
         StructField("h", LongType), StructField("np", IntegerType))))
     val vsStore =
-      if (rows.isEmpty || !exists(spark, s"$storePath/hashes")) Set.empty[Long]
+      if (rows.isEmpty || !hasData(spark, s"$storePath/hashes")) Set.empty[Long]
       else {
         val store = graft.core.Stores.readParquet(spark, s"$storePath/hashes")
         val matched = slices(np, (0 until (d + bc)).combinations(bc).size.toLong,
@@ -403,42 +404,21 @@ object IngestFingerprints {
       col("x.p") === col("y.p") && col("x.np") === col("y.np")
 
   /** Start the streaming gate: `docs` carries doc_id + the payload
-    * column(s) `fpFn` reads; pre-seed the store with `fpSave` (possibly
-    * of an empty frame) to fix the banding layout. */
+    * column(s) `fpFn` reads (e.g. `imageFps(_, imageCol)` for images);
+    * pre-seed the store with `fpSave` or `IngestImages.dhashSave`
+    * (possibly of an empty frame) to fix the banding layout. */
   def start(docs: DataFrame, storePath: String, outPath: String,
             checkpoint: String, fpFn: DataFrame => DataFrame,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, storePath, outPath, fpFn(batch))
-        ()
-      }
-      .start()
-
-  def compactKept(spark: SparkSession, outPath: String): Long =
-    graft.core.Stores.rewriteDeduped(spark, outPath, Seq("doc_id"))
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(docs, checkpoint, trigger) { (batch, _) =>
+      processBatch(batch, storePath, outPath, fpFn(batch))
+    }
 
   def compactStore(spark: SparkSession, storePath: String): Long = {
-    if (exists(spark, s"$storePath/bands"))
+    if (hasData(spark, s"$storePath/bands"))
       graft.core.Stores.rewriteDeduped(spark, s"$storePath/bands",
         Seq("id", "p", "band"), partitionCols = Seq("bb"))
     graft.core.Stores.rewriteDeduped(spark, s"$storePath/hashes",
       Seq("id", "p"))
-  }
-
-  // committed DATA files, recursing one level (the round-12 rule:
-  // partitioned stores like bands/ keep them under partition dirs)
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData(q: org.apache.hadoop.fs.Path, depth: Int): Boolean =
-      fs.listStatus(q).exists { st =>
-        (st.isFile && st.getPath.getName.endsWith(".parquet")) ||
-          (st.isDirectory && depth > 0 && hasData(st.getPath, depth - 1))
-      }
-    fs.exists(p) && hasData(p, 1)
   }
 }

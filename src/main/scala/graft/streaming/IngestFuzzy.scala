@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Scoped
+import graft.core.Stores.hasData
 import graft.operators.Dedup
 
 /** Continuous FUZZY-KEY dedup of an unbounded feed — the streaming
@@ -131,7 +132,7 @@ object IngestFuzzy {
       .write.mode(mode).partitionBy("sb").parquet(path)
 
   private def meta(spark: SparkSession, path: String): (Int, Int, Int) = {
-    require(exists(spark, s"$path/meta"),
+    require(hasData(spark, s"$path/meta"),
       s"$path is not a fuzzySave store (missing meta/)")
     // listing-keyed driver memo: a repeat read of an unchanged meta
     // dir costs no Spark job (the per-batch bookkeeping rule)
@@ -235,7 +236,7 @@ object IngestFuzzy {
       .select(col("doc_id").cast("long").as("id"), col(keyCol).as("s"))
       .withColumn("len", length(col("s")))
     val keys = collectKeys(base, d, minSeg)
-    val probeStore = keys.nonEmpty && exists(spark, s"$storePath/keys")
+    val probeStore = keys.nonEmpty && hasData(spark, s"$storePath/keys")
     val carry = new Carry(d, minSeg)
     keys.grouped(maxKeys).flatMap { slice =>
       val sliceBase =
@@ -356,7 +357,7 @@ object IngestFuzzy {
     val shorts = storeKeys.where(col("sh") === 1 && length(col("s")) < shortCut + d)
       .select(length(col("s")).as("lt"), lit(0).as("i"), lit("").as("seg"), col("s"))
     val segs =
-      if (!exists(spark, s"$storePath/segs"))
+      if (!hasData(spark, s"$storePath/segs"))
         Dedup.edIndexSegs(storeKeys.withColumn("len", length(col("s"))), d, minSeg,
           carryS = true)
       else {
@@ -403,7 +404,7 @@ object IngestFuzzy {
         require(fs.delete(old, true), s"could not clear stale $old")
     }
     import spark.implicits._
-    if (!exists(spark, p.toString)) { // zero-segment store: meta only
+    if (!hasData(spark, p.toString)) { // zero-segment store: meta only
       Seq((d, minSeg, nBuckets)).toDF("max_dist", "min_seg", "n_buckets")
         .write.mode("overwrite").parquet(s"$path/meta")
       return 0L
@@ -444,7 +445,7 @@ object IngestFuzzy {
                     growFactor: Int = 4): Int = {
     val (_, _, metaNB) = meta(spark, path)
     require(targetRowsPerBucket > 0 && growFactor >= 1, "positive sizing")
-    if (!exists(spark, s"$path/segs")) return metaNB
+    if (!hasData(spark, s"$path/segs")) return metaNB
     val nB = segGeom(spark, path, metaNB)
     val rows = spark.read.parquet(s"$path/segs").count()
     if (rows / nB <= growFactor * targetRowsPerBucket) nB
@@ -461,41 +462,16 @@ object IngestFuzzy {
     * `fuzzySave` — possibly of an empty frame — to fix the layout). */
   def start(docs: DataFrame, storePath: String, outPath: String,
             checkpoint: String, keyCol: String = "key",
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, storePath, outPath, keyCol)
-        ()
-      }
-      .start()
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(docs, checkpoint, trigger) { (batch, _) =>
+      processBatch(batch, storePath, outPath, keyCol)
+    }
 
-  /** Offline compaction of the at-least-once sinks (the `IngestDedup`
-    * contract: replay duplicates are bit-identical, dedup on id). */
-  def compactKept(spark: SparkSession, outPath: String): Long =
-    graft.core.Stores.rewriteDeduped(spark, outPath, Seq("doc_id"))
-
+  /** Offline compaction of the store (the `IngestDedup` contract:
+    * replay duplicates are bit-identical, dedup on id). */
   def compactStore(spark: SparkSession, storePath: String): Long =
     graft.core.Stores.rewriteDeduped(spark, s"$storePath/keys", Seq("id"),
       partitionCols = Seq("sh")) +
       graft.core.Stores.rewriteDeduped(spark, s"$storePath/segs",
         Seq("tid", "lt", "i", "seg"), partitionCols = Seq("sb"))
-
-  // strict: committed DATA files (recursively — partitioned stores keep
-  // them under partition dirs), not just _SUCCESS: a fuzzySave of an
-  // EMPTY seed frame commits the directory with no part files (Spark
-  // writes no file for an empty non-zero-partition frame), and reading
-  // it would die on schema inference; treat it as the empty store.
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData(q: org.apache.hadoop.fs.Path, depth: Int): Boolean =
-      fs.listStatus(q).exists { st =>
-        (st.isFile && st.getPath.getName.endsWith(".parquet")) ||
-          (st.isDirectory && depth > 0 && hasData(st.getPath, depth - 1))
-      }
-    fs.exists(p) && hasData(p, 1)
-  }
 }

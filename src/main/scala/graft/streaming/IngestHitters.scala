@@ -42,19 +42,11 @@ object IngestHitters {
     n
   }
 
-  /** Start the streaming gram ingest. Default trigger is a continuous
-    * micro-batch loop; pass `Trigger.AvailableNow()` for a one-shot
-    * backfill. */
+  /** Start the streaming gram ingest. */
   def start(docs: DataFrame, storePath: String, checkpoint: String,
             k: Int = 5, depth: Int = 4, width: Int = 8192,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docs.select(col("doc_id"), col("text")).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, storePath, k, depth, width)
-        ()
-      }
-      .start()
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(docs.select(col("doc_id"), col("text")), checkpoint, trigger) { (batch, _) =>
+      processBatch(batch, storePath, k, depth, width)
+    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.Scoped
 
 /** Continuous IMAGE near-dup dedup of an unbounded feed — the THIRD
@@ -18,7 +17,10 @@ import graft.core.Scoped
   * one part per record) — banding layout, store geometry, broadcast
   * probe shape, and delivery semantics are all the shared gate's; see
   * its scaladoc. Kept as a named channel so the composed pipeline and
-  * existing callers keep the (id, h) fingerprint face.
+  * existing callers keep the (id, h) fingerprint face. The streaming
+  * loop and offline compaction are the shared gate's too:
+  * `IngestFingerprints.start(…, IngestFingerprints.imageFps(_, imageCol))`,
+  * `compactKept` and `IngestFingerprints.compactStore`.
   *
   * Input columns: doc_id (globally unique) + a binary image column
   * (`imageCol`); rows with a null or undecodable image match nothing
@@ -65,19 +67,4 @@ object IngestImages {
     IngestFingerprints.gateBatch(
       batch, storePath, IngestFingerprints.imageFps(batch, imageCol))
       .map { case (kept, keptFps) => (kept, keptFps.select("id", "h")) }
-
-  /** Start the streaming gate: `docs` carries doc_id + `imageCol`
-    * (+ anything else); pre-seed the store with `dhashSave` (possibly
-    * of an empty frame) to fix the banding layout. */
-  def start(docs: DataFrame, storePath: String, outPath: String,
-            checkpoint: String, imageCol: String = "image",
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    IngestFingerprints.start(docs, storePath, outPath, checkpoint,
-      IngestFingerprints.imageFps(_, imageCol), trigger)
-
-  def compactKept(spark: SparkSession, outPath: String): Long =
-    IngestFingerprints.compactKept(spark, outPath)
-
-  def compactStore(spark: SparkSession, storePath: String): Long =
-    IngestFingerprints.compactStore(spark, storePath)
 }

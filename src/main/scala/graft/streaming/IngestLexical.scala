@@ -22,18 +22,10 @@ import graft.operators.Lexical
 object IngestLexical {
 
   def start(docs: DataFrame, indexPath: String, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.selectExpr("doc_id", "text").writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch ids restart at the replayed batch after a crash, so the
-        // stats row key is stable across the replay
-        Lexical.lexAppendSave(spark, indexPath, batch, batchId + 1L)
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(docs.selectExpr("doc_id", "text"), checkpoint, trigger) { (batch, batchId) =>
+      // batch ids restart at the replayed batch after a crash, so the
+      // stats row key is stable across the replay
+      Lexical.lexAppendSave(docs.sparkSession, indexPath, batch, batchId + 1L)
+    }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Stores.hasData
 import graft.operators.Linkage
 import graft.operators.Linkage._
 
@@ -62,8 +63,8 @@ import graft.operators.Linkage._
   * Σ w_agree ≥ threshold exactly so self-match always clears the
   * bar), lands back in its own entity, and re-merging its fields into
   * the golden record is a no-op by the aggregates' monotonicity.
-  * Duplicated member/out rows are bit-identical and `compact*`
-  * reclaims them offline.
+  * Duplicated member/out rows are bit-identical; `compactStore` and
+  * `compactKept` reclaim them offline.
   *
   * Shapes for scale: the store probe is ONE blocked equi-join whose
   * batch side broadcasts — members/ is never shuffled and per-batch
@@ -172,7 +173,7 @@ object IngestLinkage {
   // 1-row parquet reads each time (round-14 job profile); a repeat
   // read is now three filesystem listings, no job.
   private[graft] def readCfg(spark: SparkSession, path: String): Cfg = {
-    require(exists(spark, s"$path/meta"),
+    require(hasData(spark, s"$path/meta"),
       s"$path is not a linkSave store (missing meta/)")
     val (mschema, mrows) = graft.core.Stores.memoRows(spark, s"$path/meta")
     require(mschema.fieldNames.contains("n_buckets"),
@@ -214,7 +215,7 @@ object IngestLinkage {
     val cfg = readCfg(spark, path)
     graft.core.Stores.healAside(spark, s"$path/entities")
     val all =
-      if (exists(spark, s"$path/entities"))
+      if (hasData(spark, s"$path/entities"))
         spark.read.parquet(s"$path/entities").drop("eb")
       else emptyGolden(spark, path, cfg)
     all.withColumn("__rn", row_number().over(
@@ -313,7 +314,7 @@ object IngestLinkage {
     // set — so the pruned frame is probe-complete. A batch covering
     // every bucket skips the filter (graceful full scan, never worse).
     val members =
-      if (exists(spark, s"$storePath/members")) {
+      if (hasData(spark, s"$storePath/members")) {
         val buckets = mbAgg.map(_.getInt(0))
         // direct-path bucket read (the lexBucketRead discipline):
         // never list the unprobed buckets' dirs
@@ -440,7 +441,7 @@ object IngestLinkage {
     // batch touched (batch-bounded bucket set; the semi-join below
     // still applies the exact entity filter)
     val goldenAll =
-      if (exists(spark, s"$storePath/entities")) {
+      if (hasData(spark, s"$storePath/entities")) {
         val ebuckets = assign.select(ebCol(ebN).as("eb")).distinct()
           .collect().map(_.getInt(0))
         val all = graft.core.Stores.bucketRead(
@@ -534,23 +535,14 @@ object IngestLinkage {
     * carrying doc_id + block + the model's fields. */
   def start(records: DataFrame, storePath: String, outPath: String,
             checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    records.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, storePath, outPath)
-        ()
-      }
-      .start()
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(records, checkpoint, trigger) { (batch, _) =>
+      processBatch(batch, storePath, outPath)
+    }
 
-  /** Offline compaction of the at-least-once sinks: replayed member /
-    * out rows are bit-identical (dedup on id); entities/ keeps one row
-    * per (entity, ver). */
-  def compactOut(spark: SparkSession, outPath: String): Long =
-    graft.core.Stores.rewriteDeduped(spark, outPath, Seq("doc_id"))
-
+  /** Offline compaction of the store: replayed member rows are
+    * bit-identical (dedup on id); entities/ keeps one row per
+    * (entity, ver). The output compacts with `compactKept`. */
   def compactStore(spark: SparkSession, storePath: String): Long =
     graft.core.Stores.rewriteDeduped(spark, s"$storePath/members", Seq("id"),
       partitionCols = Seq("mb")) +
@@ -565,31 +557,6 @@ object IngestLinkage {
   def compactGolden(spark: SparkSession, storePath: String): Long =
     graft.core.Stores.rewriteLatest(spark, s"$storePath/entities",
       Seq("entity"), "ver", partitionCols = Seq("eb"))
-
-  /** Growth-gated golden compaction (the ivfCompact discipline applied
-    * to entities/): `compactGolden` only when the mean version-chain
-    * depth exceeds `maxMeanVersions` — steady low-churn stores pay
-    * nothing, a hot store pays one staged rewrite amortized over the
-    * folds that grew it. Cadence law measured in SCALE.md round 12
-    * (linkgolden): `goldenLatest` read cost grows linearly with chain
-    * depth (it windows every version), so the read stays within
-    * ~`maxMeanVersions`× its compacted floor. Returns true iff it
-    * compacted. The CHECK itself costs a full entities/ scan plus a
-    * distinct-entity count — wired into a per-batch maintenance hook
-    * it reinstates an O(store) term per micro-batch, so gate its
-    * cadence by the hook's batch id (e.g. `if (id % 16 == 0)`), not
-    * per batch. */
-  def goldenMaintain(spark: SparkSession, path: String,
-                     maxMeanVersions: Double = 4.0): Boolean = {
-    require(maxMeanVersions >= 1.0, "maxMeanVersions must be >= 1")
-    graft.core.Stores.healAside(spark, s"$path/entities")
-    if (!exists(spark, s"$path/entities")) return false
-    val all = spark.read.parquet(s"$path/entities")
-    val rows = all.count()
-    val ents = all.select("entity").distinct().count()
-    if (ents == 0L || rows <= maxMeanVersions * ents) false
-    else { compactGolden(spark, path); true }
-  }
 
   /** Re-bucket members/ and entities/ to `nBuckets` — the lexRebalance
     * discipline: every partition column is recomputed on probe and
@@ -633,7 +600,7 @@ object IngestLinkage {
                    growFactor: Int = 4): Int = {
     val cfg = readCfg(spark, path)
     require(targetRowsPerBucket > 0 && growFactor >= 1, "positive sizing")
-    if (!exists(spark, s"$path/members")) return cfg.nBuckets
+    if (!hasData(spark, s"$path/members")) return cfg.nBuckets
     val nB = dirGeom(spark, s"$path/members", cfg.nBuckets)
     val rows = spark.read.parquet(s"$path/members").count()
     if (rows / nB <= growFactor * targetRowsPerBucket) nB
@@ -661,7 +628,7 @@ object IngestLinkage {
       else
         require(fs.delete(old, true), s"could not clear stale $old")
     }
-    if (!exists(spark, path)) return 0L
+    if (!hasData(spark, path)) return 0L
     val before = spark.read.parquet(path).count()
     spark.read.parquet(path).drop(bCol)
       .withColumn(bCol, newB)
@@ -677,19 +644,5 @@ object IngestLinkage {
       s"(old store preserved at $old — rename back to recover)")
     require(fs.delete(old, true), s"could not delete $old")
     n
-  }
-
-  // committed DATA files, recursively (partitioned stores keep them
-  // under partition dirs), not just _SUCCESS (the IngestFuzzy rule: an
-  // empty append commits no part file and schema inference would die)
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData(q: org.apache.hadoop.fs.Path, depth: Int): Boolean =
-      fs.listStatus(q).exists { st =>
-        (st.isFile && st.getPath.getName.endsWith(".parquet")) ||
-          (st.isDirectory && depth > 0 && hasData(st.getPath, depth - 1))
-      }
-    fs.exists(p) && hasData(p, 1)
   }
 }

@@ -68,10 +68,10 @@ import graft.core.Scoped
   * The signature-store append running LAST also PICKS A FAILURE SIDE:
   * a crash after the sinks but before the store append makes the
   * replayed batch re-keep the same docs — DUPLICATES in out/index,
-  * reclaimed offline by `IngestDedup.compactKept` /
-  * `Similarity.ivfCompact`. The reverse order (store first) would make
-  * the replay drop the batch against its own signatures and the sinks
-  * silently LOSE it. Duplicates are recoverable; loss is not.
+  * reclaimed offline by `compactKept` / `Similarity.ivfCompact`. The
+  * reverse order (store first) would make the replay drop the batch
+  * against its own signatures and the sinks silently LOSE it.
+  * Duplicates are recoverable; loss is not.
   */
 object IngestPipeline {
 
@@ -184,14 +184,17 @@ object IngestPipeline {
   /** Start the unified ingest: `docs` is an unbounded stream of
     * (doc_id, text, embedding) rows; the index at `indexPath` must
     * already exist (any `ivfSave`/`pqSave`/`binSave` layout —
-    * batches ride its frozen quantizer). Default trigger is
-    * a continuous micro-batch loop; pass `Trigger.AvailableNow()` for
-    * a one-shot backfill (availability snapshots at query start, as
-    * with the standalone loops). */
+    * batches ride its frozen quantizer). `indexPath` is read again for
+    * each batch: an `IngestVectors.IndexSupervisor` run passes
+    * `sup.currentPath` and `maintenance = _ => { sup.maintain(); () }`,
+    * so each batch appends to and mines against the current generation
+    * and the supervisor gates a rebuild before the next one (per-batch
+    * mining cost stays flat as the store grows, SCALE.md round 8; pair
+    * it with `neighborScanFrac` to hold mining RECALL across swaps). */
   def start(docs: DataFrame, sigStorePath: String, outPath: String,
-            indexPath: String, telemetryPath: String, threshold: Double,
+            indexPath: => String, telemetryPath: String, threshold: Double,
             checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime(0L),
+            trigger: Trigger = Continuous,
             vocabPath: Option[String] = None,
             neighborsPath: Option[String] = None,
             neighborK: Int = 5, neighborProbe: Int = 2,
@@ -206,66 +209,21 @@ object IngestPipeline {
       (if (vocabPath.isDefined) Seq("source") else Nil) ++
       (if (fuzzyStorePath.isDefined) Seq(fuzzyKeyCol) else Nil) ++
       (if (imageStorePath.isDefined) Seq(imageCol) else Nil)
-    docs.select(cols.map(col): _*).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(batch, id, sigStorePath, outPath, indexPath,
-          telemetryPath, threshold, vocabPath, neighborsPath,
-          neighborK, neighborProbe, neighborScanFrac, lexPath,
-          fuzzyStorePath, fuzzyKeyCol,
-          imageStorePath = imageStorePath, imageCol = imageCol)
-        // the supervisor.maintain() slot generalized to STORE GEOMETRY:
-        // growth-gated re-buckets (fuzzyMaintain / lexMaintain /
-        // linkMaintain / goldenMaintain) are offline-only operations,
-        // and this is the one point in the loop where no batch is in
-        // flight and no frame reads the stores — maintenance here
-        // serializes with ingest exactly like the index supervisor's
-        // generation swaps. Results are geometry-independent by
-        // construction (IngestPipelineSpec pins gate parity across a
-        // mid-stream rebalance).
-        maintenance(id)
-        ()
-      }
-      .start()
-  }
-
-  /** `start` with a MAINTAINED index: each micro-batch runs against
-    * the supervisor's current generation, then the supervisor gates a
-    * rebuild (growth/skew) before the next batch — maintenance
-    * serializes with appends inside the foreachBatch, which is the
-    * simplest policy that needs no replay at all; a concurrent
-    * offline `supervisor.maintain()` is also legal (the gap-replay
-    * contract covers racing appends). This is the loop that keeps
-    * per-batch mining cost flat as the store grows (SCALE.md round 8:
-    * 38–43 s across an 8× store vs 43 → 87 s frozen). Pair
-    * `neighborScanFrac` with it when mining must hold RECALL instead
-    * of cost across the generation swaps. */
-  def startSupervised(docs: DataFrame, sigStorePath: String, outPath: String,
-                      supervisor: IngestVectors.IndexSupervisor,
-                      telemetryPath: String, threshold: Double,
-                      checkpoint: String,
-                      trigger: Trigger = Trigger.ProcessingTime(0L),
-                      vocabPath: Option[String] = None,
-                      neighborsPath: Option[String] = None,
-                      neighborK: Int = 5, neighborProbe: Int = 2,
-                      neighborScanFrac: Option[Double] = None,
-                      lexPath: Option[String] = None): StreamingQuery = {
-    val cols = Seq("doc_id", "text", "embedding") ++
-      (if (vocabPath.isDefined) Seq("source") else Nil)
-    docs.select(cols.map(col): _*).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(batch, id, sigStorePath, outPath,
-          supervisor.currentPath, telemetryPath, threshold, vocabPath,
-          neighborsPath, neighborK, neighborProbe, neighborScanFrac,
-          lexPath)
-        supervisor.maintain()
-        ()
-      }
-      .start()
+    run(docs.select(cols.map(col): _*), checkpoint, trigger) { (batch, id) =>
+      processBatch(batch, id, sigStorePath, outPath, indexPath,
+        telemetryPath, threshold, vocabPath, neighborsPath,
+        neighborK, neighborProbe, neighborScanFrac, lexPath,
+        fuzzyStorePath, fuzzyKeyCol,
+        imageStorePath = imageStorePath, imageCol = imageCol)
+      // the supervisor.maintain() slot generalized to STORE GEOMETRY:
+      // growth-gated re-buckets (fuzzyMaintain / lexMaintain /
+      // linkMaintain) are offline-only operations, and this is the one
+      // point in the loop where no batch is in flight and no frame
+      // reads the stores — maintenance here serializes with ingest
+      // exactly like the index supervisor's generation swaps. Results
+      // are geometry-independent by construction (IngestPipelineSpec
+      // pins gate parity across a mid-stream rebalance).
+      maintenance(id)
+    }
   }
 }

@@ -217,18 +217,10 @@ object IngestVectors {
   }
 
   /** Start the streaming vector ingest against an existing `ivfSave`d
-    * index. Default trigger is a continuous micro-batch loop; pass
-    * `Trigger.AvailableNow()` for a one-shot backfill (same
-    * availability-snapshot caveat as `IngestDedup.start`). */
+    * index. */
   def start(vecs: DataFrame, indexPath: String, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    vecs.select(col("vec_id"), col("embedding")).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, indexPath)
-        ()
-      }
-      .start()
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(vecs.select(col("vec_id"), col("embedding")), checkpoint, trigger) { (batch, _) =>
+      processBatch(batch, indexPath)
+    }
 }

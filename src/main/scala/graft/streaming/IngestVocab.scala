@@ -90,14 +90,8 @@ object IngestVocab {
   /** Start the streaming vocabulary monitor over (source, text) rows. */
   def start(docs: DataFrame, storePath: String, checkpoint: String,
             lgConfigK: Int = 12,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docs.select(col("source"), col("text")).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(batch, id, storePath, lgConfigK)
-        ()
-      }
-      .start()
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(docs.select(col("source"), col("text")), checkpoint, trigger) { (batch, id) =>
+      processBatch(batch, id, storePath, lgConfigK)
+    }
 }

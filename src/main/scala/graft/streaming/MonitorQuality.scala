@@ -67,14 +67,8 @@ object MonitorQuality {
 
   /** Start the streaming monitor. */
   def start(docs: DataFrame, storePath: String, checkpoint: String,
-            trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docs.select(col("doc_id"), col("text")).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(batch, id, storePath)
-        ()
-      }
-      .start()
+            trigger: Trigger = Continuous): StreamingQuery =
+    run(docs.select(col("doc_id"), col("text")), checkpoint, trigger) { (batch, id) =>
+      processBatch(batch, id, storePath)
+    }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 package object streaming {
 
@@ -14,4 +15,37 @@ package object streaming {
   private[streaming] def without(df: DataFrame, ids: Set[Long],
                                  idCol: String = "doc_id"): DataFrame =
     if (ids.isEmpty) df else df.where(!col(idCol).isInCollection(ids))
+
+  /** The default trigger of every ingest loop: a continuous micro-batch
+    * loop (the unbounded-feed shape). Pass `Trigger.AvailableNow()` for
+    * a one-shot backfill that drains the source and terminates; it
+    * snapshots availability at query start, so rows added after `start`
+    * returns are not processed. */
+  private[streaming] val Continuous: Trigger = Trigger.ProcessingTime(0L)
+
+  /** The one ingest loop (the reference's watch loop,
+    * freshness/watch.py:24-34): append-mode micro-batches of `frame`,
+    * checkpointed at `checkpoint`, each handed to `batch` with its
+    * micro-batch id. A restart replays the in-flight batch under the
+    * same id, so every loop is at-least-once. */
+  private[streaming] def run(frame: DataFrame, checkpoint: String, trigger: Trigger)
+                            (batch: (DataFrame, Long) => Unit): StreamingQuery =
+    frame.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (df: DataFrame, id: Long) => batch(df, id) }
+      .start()
+
+  /** Offline compaction of a store keyed by `doc_id` (an ingest loop's
+    * kept-docs output, the content gate's signature store): drop the
+    * duplicate rows a partial-failure replay appends. A crash between
+    * the out write and the store append makes the replayed batch
+    * re-keep the same docs — duplicates, never loss — and the rows are
+    * bit-identical, so any survivor is the row. Readers already dedup
+    * on doc_id; this reclaims space and restores 1 row/doc. Run
+    * offline (`core.Stores.rewriteDeduped` swap contract). Returns the
+    * row count after compaction. */
+  def compactKept(spark: SparkSession, path: String): Long =
+    graft.core.Stores.rewriteDeduped(spark, path, Seq("doc_id"))
 }

@@ -133,7 +133,7 @@ class CompactionSpec extends SparkSpec {
     loaded.release()
   }
 
-  test("compactKept/compactSignatures: partial-failure replay dedupes to exactly-once") {
+  test("compactKept: partial-failure replay dedupes to exactly-once") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").where($"doc_id" < 60)
     val (sigs, out) = (tmp("cmp_sigs"), tmp("cmp_out"))
@@ -145,8 +145,8 @@ class CompactionSpec extends SparkSpec {
     Dedup.signatureLoad(spark, sigs).write.mode("append").parquet(sigs + "_stage")
     spark.read.parquet(sigs + "_stage").write.mode("append").parquet(sigs)
     assert(spark.read.parquet(out).count() == 2 * n1)
-    assert(IngestDedup.compactKept(spark, out) == n1)
-    assert(IngestDedup.compactSignatures(spark, sigs) == n1)
+    assert(graft.streaming.compactKept(spark, out) == n1)
+    assert(graft.streaming.compactKept(spark, sigs) == n1)
     val kept = spark.read.parquet(out)
     assert(kept.count() == n1 && kept.select("doc_id").distinct().count() == n1)
     // the compacted signature store still gates a following batch

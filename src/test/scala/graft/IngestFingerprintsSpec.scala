@@ -100,7 +100,7 @@ class IngestFingerprintsSpec extends SparkSpec {
     // aligned frame and drop
     assert(IngestFingerprints.processBatch(batch, store, out,
       IngestFingerprints.videoFps(batch)) == 0L)
-    IngestFingerprints.compactKept(spark, out)
+    graft.streaming.compactKept(spark, out)
     assert(spark.read.parquet(out).count() == 2L)
     IngestFingerprints.compactStore(spark, store)
     assert(spark.read.parquet(s"$store/hashes").count() == 4L)

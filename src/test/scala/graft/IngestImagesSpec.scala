@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import graft.operators.Multimodal
-import graft.streaming.IngestImages
+import graft.streaming.{IngestFingerprints, IngestImages}
 
 /** Streaming image near-dup gate over the persisted dHash store:
   * planted perceptual duplicates across every boundary (vs pre-seeded
@@ -82,9 +82,9 @@ class IngestImagesSpec extends SparkSpec {
     // drop; the hashless rows pass again (at-least-once duplicates,
     // reclaimed by compact)
     assert(IngestImages.processBatch(batch, store, out) == 2L)
-    IngestImages.compactKept(spark, out)
+    graft.streaming.compactKept(spark, out)
     assert(spark.read.parquet(out).count() == 4L)
-    IngestImages.compactStore(spark, store)
+    IngestFingerprints.compactStore(spark, store)
     assert(spark.read.parquet(s"$store/hashes").count() == 2L)
   }
 
@@ -95,13 +95,13 @@ class IngestImagesSpec extends SparkSpec {
     IngestImages.dhashSave(spark, Seq.empty[(Long, Long)].toDF("id", "h"),
       store, maxHamming = 2)
     val ms = MemoryStream[(Long, Long, Int)]
-    val q = IngestImages.start(
+    val q = IngestFingerprints.start(
       ms.toDF().toDF("doc_id", "seed", "bright")
         .as[(Long, Long, Int)]
         .map { case (id, s, b) =>
           (id, Multimodal.pngPatternBytes(s, b, 36, 32)) }
         .toDF("doc_id", "image"),
-      store, out, ckpt)
+      store, out, ckpt, IngestFingerprints.imageFps(_))
     ms.addData((1L, 700L, 0), (2L, 700L, 40), (3L, 701L, 0))
     q.processAllAvailable()
     ms.addData((4L, 701L, 25), (5L, 702L, 0))

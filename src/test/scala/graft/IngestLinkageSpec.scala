@@ -1,6 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import graft.operators.Linkage._
 import graft.streaming.IngestLinkage
@@ -170,7 +169,7 @@ class IngestLinkageSpec extends SparkSpec {
     assert(assignments(out) == a1)
     assert(goldenRows(store) == g1)
     // compaction reclaims the duplicated rows
-    IngestLinkage.compactOut(spark, out)
+    graft.streaming.compactKept(spark, out)
     IngestLinkage.compactStore(spark, store)
     assert(assignments(out) == a1)
     assert(goldenRows(store) == g1)
@@ -181,41 +180,6 @@ class IngestLinkageSpec extends SparkSpec {
     assert(goldenRows(store) == g1)
     assert(spark.read.parquet(s"$store/entities").count() ==
       a1.values.toSet.size)
-  }
-
-  test("goldenMaintain compacts entities/ only past maxMeanVersions") {
-    // two-record folds in id order: no fold holds two records of one
-    // entity, so every fold adds one version per entity it touches
-    val folds = feed.sortBy(_._1).grouped(2).toSeq
-    val (store, out) = freshStore()
-    val entities = java.nio.file.Paths.get(store, "entities")
-    def files(): Set[String] = {
-      val w = java.nio.file.Files.walk(entities)
-      try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-        .map(p => s"${entities.relativize(p)}:${p.toFile.length}").toSet
-      finally w.close()
-    }
-    def versions() = spark.read.parquet(entities.toString).count()
-    def nEntities() = spark.read.parquet(entities.toString)
-      .select("entity").distinct().count()
-
-    folds.take(3).foreach(b => IngestLinkage.processBatch(df(b), store, out))
-    assert(versions() > nEntities() && versions() <= 2 * nEntities())
-    val (filesBelow, goldenBelow) = (files(), goldenRows(store))
-    assert(!IngestLinkage.goldenMaintain(spark, store, 2.0))
-    assert(files() == filesBelow)
-    assert(goldenRows(store) == goldenBelow)
-
-    folds.drop(3).foreach(b => IngestLinkage.processBatch(df(b), store, out))
-    assert(versions() > 2 * nEntities())
-    val golden = goldenRows(store)
-    assert(IngestLinkage.goldenMaintain(spark, store, 2.0))
-    assert(versions() == nEntities())
-    assert(goldenRows(store) == golden)
-
-    intercept[IllegalArgumentException] {
-      IngestLinkage.goldenMaintain(spark, store, 0.5)
-    }
   }
 
   test("store probe plan: the batch broadcasts, members never shuffle") {

@@ -334,7 +334,7 @@ class IngestPipelineSpec extends SparkSpec {
     assert(nb0 == 2 && nb1 > 2) // the hook actually re-bucketed mid-stream
   }
 
-  test("startSupervised: the supervisor swaps generations inside the stream; kept == indexed across swaps") {
+  test("start with a supervised index: the supervisor swaps generations inside the stream; kept == indexed across swaps") {
     // growth-gated: seed 16 vecs in 4 lists (occupancy 4, target 4);
     // batch 1 lands 24 more (occupancy 10 > 2×target) → the supervisor
     // must rebuild to ⌈40/4⌉ = 10 lists between batches, and batch 2
@@ -357,10 +357,11 @@ class IngestPipelineSpec extends SparkSpec {
       tmp("sup_tele"), tmp("sup_ckpt"), tmp("sup_nbrs"))
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[(Long, String, Seq[Float])]
-    val q = IngestPipeline.startSupervised(
+    val q = IngestPipeline.start(
       input.toDF().toDF("doc_id", "text", "embedding"),
-      sigs, out, sup, tele, 0.5, ckpt,
-      neighborsPath = Some(nbrs), neighborK = 2, neighborScanFrac = Some(1.0))
+      sigs, out, indexPath = sup.currentPath, tele, 0.5, ckpt,
+      neighborsPath = Some(nbrs), neighborK = 2, neighborScanFrac = Some(1.0),
+      maintenance = _ => { sup.maintain(); () })
     input.addData(rows(100 until 124): _*)
     q.processAllAvailable()
     val genAfterB1 = sup.generation

@@ -3,13 +3,35 @@ package graft
 import org.apache.spark.sql.functions.col
 import graft.core.Stores
 
-/** `core.Stores`: the memoized tiny-directory reader (store meta and
-  * the vector-index metadata tables) and the capped keyed write
-  * layout. */
+/** `core.Stores`: the store-presence rule, the memoized tiny-directory
+  * reader (store meta and the vector-index metadata tables) and the
+  * capped keyed write layout. */
 class StoresSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+
+  test("hasData: a committed part file, top-level or one partition dir down, and nothing else") {
+    val root = tmp("has_data")
+    def touch(rel: String): Unit = {
+      val f = java.nio.file.Paths.get(root, rel)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.createFile(f)
+    }
+    assert(!Stores.hasData(spark, s"$root/missing"))
+    // an empty committed write: no sketch rows, nothing to read
+    touch("success/_SUCCESS")
+    assert(!Stores.hasData(spark, s"$root/success"))
+    // a killed first write leaves only its task attempt's output
+    touch("killed/_temporary/0/_temporary/attempt_0/part-00000.parquet")
+    assert(!Stores.hasData(spark, s"$root/killed"))
+    touch("parted/_SUCCESS")
+    touch("parted/b=3/part-0.parquet")
+    assert(Stores.hasData(spark, s"$root/parted"))
+    assert(!Stores.hasData(spark, s"$root/parted", depth = 0))
+    Seq((1, "a")).toDF("k", "v").write.parquet(s"$root/flat")
+    assert(Stores.hasData(spark, s"$root/flat"))
+  }
 
   test("memoRows: a rewritten directory reads fresh rows; two callers' arrays never alias") {
     val dir = tmp("memo_fresh") + "/t"
