@@ -257,14 +257,13 @@ object Stores {
     }
   }
 
-  /** Whether `dir` holds committed data: a parquet part file at most
-    * `depth` directory levels down (partitioned stores keep theirs under
-    * partition dirs). Hidden entries do not count, so a dir holding only
-    * `_SUCCESS` (an empty committed write), or only a killed write's
-    * `_temporary/` leftovers, is no store yet — reading it would fail
-    * schema inference. */
-  def hasData(spark: SparkSession, dir: String, depth: Int = 1): Boolean =
-    firstFile(spark, dir, depth).isDefined
+  /** Whether `dir` holds committed data: a parquet part file at top
+    * level or one partition dir down. Hidden entries do not count, so a
+    * dir holding only `_SUCCESS` (an empty committed write), or only a
+    * killed write's `_temporary/` leftovers, is no store yet — reading
+    * it would fail schema inference. */
+  def hasData(spark: SparkSession, dir: String): Boolean =
+    firstFile(spark, dir, 1).isDefined
 
   // the first visible parquet file under `dir`, `depth` levels down,
   // listing directories lazily and stopping at the first hit

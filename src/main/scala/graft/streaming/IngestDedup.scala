@@ -157,7 +157,9 @@ object IngestDedup {
     * in `storePath`. A pre-seeded store (e.g. `Dedup.signatureSave` of
     * an existing corpus) makes the stream dedup against history it
     * never saw. `compactKept` reclaims replay duplicates in both the
-    * output and the store offline. */
+    * output and the store offline.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, storePath: String, outPath: String,
             threshold: Double, checkpoint: String,
             trigger: Trigger = Continuous): StreamingQuery =

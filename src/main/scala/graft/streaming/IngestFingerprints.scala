@@ -406,7 +406,9 @@ object IngestFingerprints {
   /** Start the streaming gate: `docs` carries doc_id + the payload
     * column(s) `fpFn` reads (e.g. `imageFps(_, imageCol)` for images);
     * pre-seed the store with `fpSave` or `IngestImages.dhashSave`
-    * (possibly of an empty frame) to fix the banding layout. */
+    * (possibly of an empty frame) to fix the banding layout.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, storePath: String, outPath: String,
             checkpoint: String, fpFn: DataFrame => DataFrame,
             trigger: Trigger = Continuous): StreamingQuery =

@@ -459,7 +459,9 @@ object IngestFuzzy {
   /** Start the streaming gate: `docs` is an unbounded stream carrying
     * doc_id + `keyCol` (+ anything else); survivors land in `outPath`,
     * their keys/segments in the store at `storePath` (pre-seed with
-    * `fuzzySave` — possibly of an empty frame — to fix the layout). */
+    * `fuzzySave` — possibly of an empty frame — to fix the layout).
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, storePath: String, outPath: String,
             checkpoint: String, keyCol: String = "key",
             trigger: Trigger = Continuous): StreamingQuery =

@@ -42,7 +42,9 @@ object IngestHitters {
     n
   }
 
-  /** Start the streaming gram ingest. */
+  /** Start the streaming gram ingest.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, storePath: String, checkpoint: String,
             k: Int = 5, depth: Int = 4, width: Int = 8192,
             trigger: Trigger = Continuous): StreamingQuery =

@@ -21,6 +21,10 @@ import graft.operators.Lexical
   * delivery contract as the vector stores. */
 object IngestLexical {
 
+  /** Start the streaming postings ingest into the `lexSave`d store at
+    * `indexPath`.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, indexPath: String, checkpoint: String,
             trigger: Trigger = Continuous): StreamingQuery =
     run(docs.selectExpr("doc_id", "text"), checkpoint, trigger) { (batch, batchId) =>

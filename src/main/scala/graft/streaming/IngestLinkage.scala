@@ -532,7 +532,9 @@ object IngestLinkage {
   }
 
   /** Start the streaming loop: `records` is an unbounded stream
-    * carrying doc_id + block + the model's fields. */
+    * carrying doc_id + block + the model's fields.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(records: DataFrame, storePath: String, outPath: String,
             checkpoint: String,
             trigger: Trigger = Continuous): StreamingQuery =
@@ -553,7 +555,11 @@ object IngestLinkage {
     * version (the only row `goldenLatest` ever reads) — an entity
     * touched by thousands of batches otherwise keeps every
     * intermediate merge. History is dropped by design; run
-    * `compactStore` instead to keep it. */
+    * `compactStore` instead to keep it. Gate it on mean version-chain
+    * depth (entities/ rows per distinct entity) above ~4: `goldenLatest`
+    * read cost grows linearly with that depth (SCALE.md round 12). The
+    * depth check scans all of entities/ plus a distinct count, so run it
+    * at a batch-id cadence (e.g. every 16th batch), never per batch. */
   def compactGolden(spark: SparkSession, storePath: String): Long =
     graft.core.Stores.rewriteLatest(spark, s"$storePath/entities",
       Seq("entity"), "ver", partitionCols = Seq("eb"))

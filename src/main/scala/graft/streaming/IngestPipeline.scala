@@ -190,7 +190,9 @@ object IngestPipeline {
     * so each batch appends to and mines against the current generation
     * and the supervisor gates a rebuild before the next one (per-batch
     * mining cost stays flat as the store grows, SCALE.md round 8; pair
-    * it with `neighborScanFrac` to hold mining RECALL across swaps). */
+    * it with `neighborScanFrac` to hold mining RECALL across swaps).
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, sigStorePath: String, outPath: String,
             indexPath: => String, telemetryPath: String, threshold: Double,
             checkpoint: String,

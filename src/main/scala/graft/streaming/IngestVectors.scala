@@ -217,7 +217,9 @@ object IngestVectors {
   }
 
   /** Start the streaming vector ingest against an existing `ivfSave`d
-    * index. */
+    * index.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(vecs: DataFrame, indexPath: String, checkpoint: String,
             trigger: Trigger = Continuous): StreamingQuery =
     run(vecs.select(col("vec_id"), col("embedding")), checkpoint, trigger) { (batch, _) =>

@@ -87,7 +87,9 @@ object IngestVocab {
           .as("vocab_est"))
       .orderBy("source")
 
-  /** Start the streaming vocabulary monitor over (source, text) rows. */
+  /** Start the streaming vocabulary monitor over (source, text) rows.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, storePath: String, checkpoint: String,
             lgConfigK: Int = 12,
             trigger: Trigger = Continuous): StreamingQuery =

@@ -65,7 +65,9 @@ object MonitorQuality {
       .orderBy("batch_id")
   }
 
-  /** Start the streaming monitor. */
+  /** Start the streaming monitor.
+    * `trigger` defaults to a continuous loop; `Trigger.AvailableNow()`
+    * drains the source and stops (see the package doc). */
   def start(docs: DataFrame, storePath: String, checkpoint: String,
             trigger: Trigger = Continuous): StreamingQuery =
     run(docs.select(col("doc_id"), col("text")), checkpoint, trigger) { (batch, id) =>

@@ -4,6 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+/** The streaming ingest modules. Every `start` runs one append-mode,
+  * checkpointed micro-batch loop. Its `trigger` defaults to a
+  * continuous loop (the unbounded-feed shape); pass
+  * `Trigger.AvailableNow()` for a one-shot backfill that drains the
+  * source and terminates. AvailableNow snapshots availability at query
+  * start, so rows added after `start` returns are not processed. */
 package object streaming {
 
   /** `df` without the rows whose `idCol` is in `ids`. Every ingest gate
@@ -17,10 +23,7 @@ package object streaming {
     if (ids.isEmpty) df else df.where(!col(idCol).isInCollection(ids))
 
   /** The default trigger of every ingest loop: a continuous micro-batch
-    * loop (the unbounded-feed shape). Pass `Trigger.AvailableNow()` for
-    * a one-shot backfill that drains the source and terminates; it
-    * snapshots availability at query start, so rows added after `start`
-    * returns are not processed. */
+    * loop (see the package doc for the backfill trigger). */
   private[streaming] val Continuous: Trigger = Trigger.ProcessingTime(0L)
 
   /** The one ingest loop (the reference's watch loop,

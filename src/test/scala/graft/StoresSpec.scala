@@ -28,7 +28,9 @@ class StoresSpec extends SparkSpec {
     touch("parted/_SUCCESS")
     touch("parted/b=3/part-0.parquet")
     assert(Stores.hasData(spark, s"$root/parted"))
-    assert(!Stores.hasData(spark, s"$root/parted", depth = 0))
+    // the walk stops one partition level down
+    touch("deep/a=1/b=2/part-0.parquet")
+    assert(!Stores.hasData(spark, s"$root/deep"))
     Seq((1, "a")).toDF("k", "v").write.parquet(s"$root/flat")
     assert(Stores.hasData(spark, s"$root/flat"))
   }
