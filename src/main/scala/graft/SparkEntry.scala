@@ -405,8 +405,8 @@ object SparkEntry {
     // geometry-independence of the fuzzy store, driver-gated: build at
     // one bucket geometry, append, REBALANCE to a co-prime geometry,
     // then gate a batch — the result must equal q170's pure batch-form
-    // NOT-EXISTS oracle exactly (the rebalance is invisible, the q183
-    // lexRebalance discipline)
+    // NOT-EXISTS oracle exactly (the rebalance is invisible, as in q183:
+    // both re-bucket through Stores.rebucket)
     "q195_fuzzy_rebalance" -> ((s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("q195_fz").toString
       val heads = documents(s, d)

@@ -10,14 +10,16 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * to the originals (deterministic gates, frozen quantizers), so
   * compaction is "keep one row per key" — any survivor is THE row.
   *
-  * The rewrite is staged: write the deduped store to `<path>.compact`,
-  * verify its row count, then delete-and-rename. A reader never sees a
-  * half-written store; a crash between delete and rename leaves the
-  * complete `<path>.compact` on disk for recovery (the same documented
-  * crash window as the CMS store's generation prune — on an object
-  * store, swap via its own atomic rename/copy primitive). Run it
-  * offline, not concurrently with ingest: an append landing mid-swap
-  * would be dropped with the old generation.
+  * Every rewrite of a store in place — compaction and the bucketed
+  * stores' re-bucket — runs one staged swap (`stagedSwap`): write the
+  * new store beside the old one, verify its row count, rename the old
+  * store aside, promote, delete the aside copy. A reader never sees a
+  * half-written store, and no crash point leaves the path without a
+  * complete copy (`rebucket` walks the crash windows). This module is
+  * also the one home of the bucketed stores' geometry lifecycle: the
+  * `_GEOMETRY` marker, its lookup, the re-bucket and the growth rule.
+  * Run rewrites offline, not concurrently with ingest: an append
+  * landing mid-swap would be dropped with the old generation.
   */
 object Stores {
 
@@ -169,12 +171,12 @@ object Stores {
   /** Heal the rename-aside crash window on the READ path: a leftover
     * `<path>.old` with `<path>` missing means a staged swap crashed
     * between its two renames — the `.old` IS the store; rename it back
-    * before probing. (The rebalancers heal this themselves on rerun;
-    * healing here too means an append or probe landing before the
-    * rerun sees the complete old store instead of an empty dir — and,
-    * for appends, never creates a fresh dir that a later heal would
-    * have to lose.) A stale `.old` alongside a live `<path>` is left
-    * for the next rebalance to clear — probes stay read-mostly. */
+    * before probing. (Every staged swap heals it first on rerun;
+    * healing on the read path too means an append or probe landing
+    * before the rerun sees the complete old store instead of an empty
+    * dir — and, for appends, never creates a fresh dir that a later
+    * heal would have to lose.) A stale `.old` alongside a live `<path>` is left
+    * for the next staged swap to clear — probes stay read-mostly. */
   def healAside(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
     val old = new Path(path + ".old")
@@ -182,6 +184,24 @@ object Stores {
     if (fs.exists(old) && !fs.exists(p))
       require(fs.rename(old, p), s"self-heal rename $old -> $p failed")
   }
+
+  /** The bucket count in force for the bucketed store `dir`: heal the
+    * rename-aside crash window (`healAside`), then the `_GEOMETRY`
+    * marker inside the data dir, else `bootstrap` (meta/'s n_buckets —
+    * the geometry of a dir with no marker yet). Probe and append bucket
+    * ids MUST come from here: the marker is atomic with the data. */
+  private[graft] def geometry(spark: SparkSession, dir: String,
+                              bootstrap: => Int): Int = {
+    healAside(spark, dir)
+    readGeometry(spark, dir).getOrElse(bootstrap)
+  }
+
+  /** Stamp `nBuckets` into `dir` unless it carries a marker already: a
+    * first append creates the dir, so it records the geometry it was
+    * cut with and later lookups never depend on meta/ staying in step. */
+  private[graft] def stampIfAbsent(spark: SparkSession, dir: String,
+                                   nBuckets: Int): Unit =
+    if (readGeometry(spark, dir).isEmpty) stampGeometry(spark, dir, nBuckets)
 
   /** Read ONLY the named partition directories of a `colName=`-
     * partitioned store (`basePath` keeps the partition column in the
@@ -280,48 +300,129 @@ object Stores {
     if (fs.exists(root)) walk(root, depth) else None
   }
 
-  // staged swap with every filesystem boolean CHECKED and the old
-  // store renamed ASIDE before the promote (the lexRebalance
-  // hardening): no crash window — or silent rename failure — leaves
-  // the path without a complete readable copy somewhere (<path>,
-  // <path>.old, or <path>.compact)
+  /** Re-bucket the bucketed store `dir` to `nBuckets`: recompute its
+    * partition column `bCol` as `bucket`, the one rewrite behind
+    * `lexRebalance`, `fuzzyRebalance` and `linkRebalance`. An absent or
+    * empty `dir` is a no-op returning 0. Otherwise the full store lands
+    * at `<dir>.rebal` (one file per bucket, full-width `writeLayout`)
+    * WITH the new geometry stamped inside, its row count must equal the
+    * old store's (a row lost in the rewrite aborts before anything is
+    * touched), and the staged swap promotes it. Returns the row count.
+    *
+    * Crash windows, each leaving the store readable and consistent:
+    *  - before the aside rename: the old store is untouched; `.rebal`
+    *    is garbage the next run overwrites;
+    *  - between the aside rename and the promote: `dir` is absent and
+    *    `<dir>.old` holds the full old copy — the next probe or append
+    *    heals it back (`geometry`), as does a rerun;
+    *  - after the promote, before the caller's meta/ write: harmless —
+    *    the new geometry rides INSIDE the promoted dir (`_GEOMETRY`) and
+    *    lookups resolve marker-first; meta/ only refreshes the
+    *    bootstrap copy.
+    * The promote rename is thus the ATOMIC geometry+data cutover: no
+    * crash point leaves data partitioned by one geometry while probes
+    * prune it by another (the round-12 silent-miss window, closed;
+    * crash-injection pinned in GeometryCutoverSpec). A store with two
+    * bucketed dirs (linkage) re-buckets each on its own, so a crash
+    * between them leaves both individually consistent. */
+  private[graft] def rebucket(spark: SparkSession, dir: String, bCol: String,
+                              bucket: org.apache.spark.sql.Column,
+                              nBuckets: Int): Long = {
+    healAside(spark, dir)
+    if (!hasData(spark, dir)) return 0L
+    val before = spark.read.parquet(dir).count()
+    stagedSwap(spark, dir, ".rebal") { tmp =>
+      spark.read.parquet(dir).drop(bCol).withColumn(bCol, bucket)
+        .transform(writeLayout(_, org.apache.spark.sql.functions.col(bCol)))
+        .write.mode("overwrite").partitionBy(bCol).parquet(tmp)
+      stampGeometry(spark, tmp, nBuckets)
+      val n = spark.read.parquet(tmp).count()
+      require(n == before,
+        s"rebucketed store lost rows ($before -> $n); aborting with the " +
+          s"store untouched — $tmp left for inspection")
+      n
+    }
+  }
+
+  /** Growth-gated geometry maintenance of the bucketed store `dir`
+    * (`lexMaintain`, `fuzzyMaintain`, `linkMaintain`): `nBuckets` is the
+    * geometry in force; a store with no data keeps it. Otherwise count
+    * the rows and, past the `grownBuckets` threshold, `rebalance` to
+    * the grown count — steady appends pay nothing, a store grown 100×
+    * pays one staged rewrite. Returns the geometry in force after the
+    * call. The CHECK itself is a full count of `dir` (an O(store) scan
+    * plus the all-buckets listing): wired into a per-batch maintenance
+    * hook it reinstates the O(store) term the probe pruning removed, so
+    * gate its cadence by the hook's batch id (e.g. `if (id % 16 == 0)`). */
+  private[graft] def maintain(spark: SparkSession, dir: String, nBuckets: Int,
+                              targetRowsPerBucket: Long, growFactor: Int)
+                             (rebalance: Int => Long): Int = {
+    require(targetRowsPerBucket > 0 && growFactor >= 1, "positive sizing")
+    if (!hasData(spark, dir)) return nBuckets
+    grownBuckets(spark.read.parquet(dir).count(), nBuckets,
+        targetRowsPerBucket, growFactor) match {
+      case Some(want) => rebalance(want); want
+      case None       => nBuckets
+    }
+  }
+
+  /** The growth rule: once the mean bucket of `rows` over `nBuckets`
+    * exceeds `growFactor` × `targetRowsPerBucket`, ceil(rows / target)
+    * buckets; None below or at the threshold. A bucket count past
+    * `Int.MaxValue` fails loudly instead of wrapping. */
+  private[graft] def grownBuckets(rows: Long, nBuckets: Int,
+                                  targetRowsPerBucket: Long,
+                                  growFactor: Int): Option[Int] =
+    if (rows / nBuckets <= growFactor * targetRowsPerBucket) None
+    else {
+      val want = (rows - 1) / targetRowsPerBucket + 1 // rows > 0 here
+      require(want <= Int.MaxValue,
+        s"ceil($rows / $targetRowsPerBucket) = $want buckets overflows " +
+          "Int — raise targetRowsPerBucket")
+      Some(want.toInt)
+    }
+
+  // compaction: `f` over the store, the existing layout and marker kept
   private def rewriteWith(spark: SparkSession, path: String,
                           f: org.apache.spark.sql.DataFrame =>
                             org.apache.spark.sql.DataFrame,
-                          partitionCols: Seq[String]): Long = {
+                          partitionCols: Seq[String]): Long =
+    stagedSwap(spark, path, ".compact") { tmp =>
+      val df0 = f(spark.read.parquet(path))
+      // one balanced shuffle → one file per partition key, never
+      // tasks × cardinality slivers (the round-8 partitionBy rule)
+      val df =
+        if (partitionCols.nonEmpty)
+          writeLayout(df0, partitionCols.map(
+            org.apache.spark.sql.functions.col): _*)
+        else df0
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp)
+      // a compaction keeps the rows' bucket values, so the stamped
+      // geometry must ride into the staged copy — losing the marker
+      // would silently revert probes to meta's bootstrap after the swap
+      readGeometry(spark, path).foreach(stampGeometry(spark, tmp, _))
+      spark.read.parquet(tmp).count()
+    }
+
+  // The one staged swap behind every in-place store rewrite: heal a
+  // crashed `<path>.old` back (`healAside`) or clear a stale one, run
+  // `stage` into `<path><suffix>` (it returns the staged copy's
+  // verified row count), then rename the old store ASIDE, promote and
+  // delete the aside copy — every filesystem boolean checked, so no
+  // crash or silent rename failure leaves the path without a complete
+  // readable copy (<path>, <path>.old or the staged dir).
+  private def stagedSwap(spark: SparkSession, path: String, suffix: String)
+                        (stage: String => Long): Long = {
     val p = new Path(path)
-    val tmp = new Path(path + ".compact")
+    val tmp = new Path(path + suffix)
     val old = new Path(path + ".old")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(old)) {
-      // A leftover .old is only stale if the promote completed (path
-      // exists). After a crash between rename(p->old) and rename(tmp->p)
-      // the .old IS the store — heal by renaming it back instead of
-      // destroying the sole complete copy.
-      if (!fs.exists(p))
-        require(fs.rename(old, p), s"self-heal rename $old -> $p failed")
-      else
-        require(fs.delete(old, true), s"could not clear stale $old")
-    }
-    val df0 = f(spark.read.parquet(path))
-    // one balanced shuffle → one file per partition key, never
-    // tasks × cardinality slivers (the round-8 partitionBy rule;
-    // matters once stores carry bucket-partition columns)
-    val df =
-      if (partitionCols.nonEmpty)
-        writeLayout(df0, partitionCols.map(
-          org.apache.spark.sql.functions.col): _*)
-      else df0
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    // a compaction keeps the rows' existing bucket column values, so
-    // the store's stamped geometry must ride into the staged copy —
-    // losing the marker would silently revert probes to meta's
-    // bootstrap value after the swap
-    readGeometry(spark, path).foreach(g =>
-      stampGeometry(spark, tmp.toString, g))
-    val n = spark.read.parquet(tmp.toString).count()
+    healAside(spark, path)
+    // a .old beside a live path is stale: its promote completed
+    if (fs.exists(old)) require(fs.delete(old, true), s"could not clear stale $old")
+    val n = stage(tmp.toString)
     require(fs.rename(p, old), s"rename $p -> $old failed")
     require(fs.rename(tmp, p), s"rename $tmp -> $p failed " +
       s"(old store preserved at $old — rename back to recover)")

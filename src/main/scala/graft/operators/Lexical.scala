@@ -57,12 +57,15 @@ object Lexical {
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
+  private def bucketCol(nBuckets: Int) =
+    pmod(xxhash64(col("w")), lit(nBuckets)).cast("int")
+
   /** Postings + docstats + one stats row for a batch of documents. */
   private def derive(docs: DataFrame, nBuckets: Int, batchId: Long)
       : (DataFrame, DataFrame, DataFrame) = {
     val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("w"))
     val postings = tok.groupBy("w", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("w")), lit(nBuckets)).cast("int"))
+      .withColumn("bucket", bucketCol(nBuckets))
     val docstats = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val spark = docs.sparkSession
     import spark.implicits._
@@ -88,19 +91,13 @@ object Lexical {
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  // the geometry in force for postings/: the marker stamped inside the
-  // data dir when present (atomic with the data — a crashed rebalance
-  // can never leave data and geometry disagreeing), meta's n_buckets
-  // as the bootstrap. Heals the rename-aside crash window first so a
-  // probe landing between a crashed swap and its rerun reads the
-  // complete old store.
+  // the geometry in force for postings/ (`Stores.geometry`), meta's
+  // n_buckets as the bootstrap
   private def postGeom(spark: SparkSession, path: String): Int = {
     require(hadoopExists(spark, s"$path/meta"),
       s"$path is not a lexSave store (missing meta/)")
-    graft.core.Stores.healAside(spark, s"$path/postings")
-    graft.core.Stores.readGeometry(spark, s"$path/postings")
-      .getOrElse(
-        graft.core.Stores.memoRows(spark, s"$path/meta")._2.head.getInt(0))
+    graft.core.Stores.geometry(spark, s"$path/postings",
+      graft.core.Stores.memoRows(spark, s"$path/meta")._2.head.getInt(0))
   }
 
   /** Append a batch of NEW documents — O(batch), independent of the
@@ -115,8 +112,7 @@ object Lexical {
       // append path: partition count capped by the known geometry
       .transform(graft.core.Stores.writeLayout(_, nBuckets, col("bucket")))
       .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
-    if (graft.core.Stores.readGeometry(spark, s"$path/postings").isEmpty)
-      graft.core.Stores.stampGeometry(spark, s"$path/postings", nBuckets)
+    graft.core.Stores.stampIfAbsent(spark, s"$path/postings", nBuckets)
     docstats.write.mode("append").parquet(s"$path/docstats")
     stats.write.mode("append").parquet(s"$path/stats")
   }
@@ -227,104 +223,39 @@ object Lexical {
     * corpus holds the per-probe read flat.
     *
     * Searches are GEOMETRY-INDEPENDENT by construction — the probe
-    * recomputes bucket = pmod(xxhash64(w), n_buckets) from meta/ on
-    * every call and the score never sees the bucket column — so
-    * results are bit-equal across a rebalance (LexicalSpec pin;
-    * q165/q166 semantics unchanged), and appends after it cut to the
-    * new geometry via the same meta read.
+    * recomputes bucket = pmod(xxhash64(w), n_buckets) from the
+    * geometry in force on every call and the score never sees the
+    * bucket column — so results are bit-equal across a rebalance
+    * (LexicalSpec pin; q165/q166 semantics unchanged), and appends
+    * after it cut to the new geometry via the same lookup.
     *
-    * Staged like `Stores.rewriteDeduped`: the full new postings land
-    * at `postings.rebal`, COUNT-VERIFIED against the source (a row
-    * lost in the rewrite aborts before anything is touched), then the
-    * swap runs rename-aside — postings → postings.old, .rebal →
-    * postings, delete .old — with every rename/delete boolean checked,
-    * so no crash or silent filesystem failure ever leaves the store
-    * without a readable postings copy. Run offline, never concurrently
-    * with ingest. Crash windows: before the first rename — the old
-    * store is untouched and `.rebal` is garbage to collect; between
-    * the two renames — postings/ is absent but postings.old holds the
-    * full old copy (probes heal it back via `postGeom`, as does a
-    * rerun); between the promote and the meta write — harmless: the
-    * new geometry rides INSIDE the promoted postings/ (`_GEOMETRY`,
-    * stamped into the staged dir before the swap), probes resolve
-    * marker-first, and the trailing meta write only refreshes the
-    * bootstrap copy. The promote rename is the ATOMIC geometry+data
-    * cutover (the round-12 silent-miss window, closed —
-    * crash-injection pinned in GeometryCutoverSpec). Returns the
-    * postings row count. */
+    * Staged, count-verified and crash-safe: `Stores.rebucket` (its
+    * scaladoc walks the crash windows); the trailing meta write only
+    * refreshes the bootstrap copy. Run offline, never concurrently with
+    * ingest. Returns the postings row count (0 for a store with no
+    * postings). */
   def lexRebalance(spark: SparkSession, path: String, nBuckets: Int): Long = {
     require(hadoopExists(spark, s"$path/meta"),
       s"$path is not a lexSave store (missing meta/)")
     require(nBuckets > 0, "nBuckets must be positive")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/postings.rebal")
-    val old = new org.apache.hadoop.fs.Path(s"$path/postings.old")
-    // A leftover .old is stale only when postings/ exists (the prior
-    // run completed or never promoted). After a crash between the two
-    // renames, .old IS the store — heal by renaming it back rather
-    // than deleting the sole complete copy (the Stores.rewriteWith
-    // rule).
-    if (fs.exists(old)) {
-      if (!fs.exists(p))
-        require(fs.rename(old, p), s"self-heal rename $old -> $p failed")
-      else
-        require(fs.delete(old, true), s"could not clear stale $old")
-    }
-    val before = spark.read.parquet(p.toString).count()
-    spark.read.parquet(p.toString)
-      .withColumn("bucket",
-        pmod(xxhash64(col("w")), lit(nBuckets)).cast("int"))
-      // one file per bucket, not per task (pinned width — see writeLayout)
-      .transform(graft.core.Stores.writeLayout(_, col("bucket")))
-      .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-    // geometry rides INSIDE the staged dir: the promote rename below
-    // swaps data and geometry in one atomic step
-    graft.core.Stores.stampGeometry(spark, tmp.toString, nBuckets)
-    val n = spark.read.parquet(tmp.toString).count()
-    require(n == before,
-      s"rebalanced postings lost rows ($before -> $n); aborting with " +
-        s"the store untouched — $tmp left for inspection")
-    require(fs.rename(p, old), s"rename $p -> $old failed")
-    require(fs.rename(tmp, p), s"rename $tmp -> $p failed " +
-      s"(old postings preserved at $old — rename back to recover)")
-    require(fs.delete(old, true), s"could not delete $old")
+    val n = graft.core.Stores.rebucket(spark, s"$path/postings", "bucket",
+      bucketCol(nBuckets), nBuckets)
     import spark.implicits._
     Seq(nBuckets).toDF("n_buckets")
       .write.mode("overwrite").parquet(s"$path/meta")
     n
   }
 
-  /** Growth-gated geometry maintenance (the IndexSupervisor discipline
-    * for postings): rebalance only when the mean bucket has grown past
-    * `growFactor` × `targetRowsPerBucket`, to ceil(rows / target)
-    * buckets — so steady appends pay nothing and a store that has
-    * grown 100× pays one staged rewrite, amortized. Returns the
-    * geometry in force after the call. The CHECK itself costs a full
-    * postings/ count (an O(store) scan plus the all-buckets listing) —
-    * wired into a per-batch maintenance hook it reinstates the
-    * O(store) term the probe pruning removed, so gate its cadence by
-    * the hook's batch id (e.g. `if (id % 16 == 0)`), not per batch. */
+  /** Growth-gated geometry maintenance of postings/ (the
+    * IndexSupervisor discipline): `Stores.maintain` with
+    * `lexRebalance` — the growth rule, its O(store) check and the
+    * cadence to run it at are documented there. Returns the geometry
+    * in force after the call. */
   def lexMaintain(spark: SparkSession, path: String,
                   targetRowsPerBucket: Long = 1000000L,
-                  growFactor: Int = 4): Int = {
-    require(targetRowsPerBucket > 0 && growFactor >= 1, "positive sizing")
-    val nBuckets = postGeom(spark, path)
-    val rows = spark.read.parquet(s"$path/postings").count()
-    if (rows / nBuckets <= growFactor * targetRowsPerBucket) nBuckets
-    else {
-      val wantL = (rows + targetRowsPerBucket - 1) / targetRowsPerBucket
-      // Long→Int truncation guard: a pathological rows/target ratio
-      // must fail loudly, not hand lexRebalance a wrapped bucket count
-      require(wantL <= Int.MaxValue,
-        s"ceil($rows / $targetRowsPerBucket) = $wantL buckets overflows " +
-          "Int — raise targetRowsPerBucket")
-      val want = wantL.toInt
-      lexRebalance(spark, path, want)
-      want
-    }
-  }
+                  growFactor: Int = 4): Int =
+    graft.core.Stores.maintain(spark, s"$path/postings", postGeom(spark, path),
+      targetRowsPerBucket, growFactor)(lexRebalance(spark, path, _))
 
   /** Offline compaction: drop the duplicate rows an at-least-once
     * replay appends in all three frames (searches already dedupe on

@@ -838,12 +838,6 @@ object Similarity {
     rebuilt
   }
 
-  /** Skew-gated rebalance: the form an ingest loop calls after each
-    * append burst. Below the threshold the index is returned untouched
-    * (cost: one nList-row agg); above it, a full retrain. */
-  def ivfRebalanceIfSkewed(index: IvfIndex, maxSkew: Double): IvfIndex =
-    if (ivfSkew(index) > maxSkew) ivfRebalance(index) else index
-
   /** Offline on-disk rebalance: load an `ivfSave`d store, retrain,
     * write the rebalanced generation to `dstPath` (a NEW path — the
     * offline-compaction swap convention; readers move atomically by

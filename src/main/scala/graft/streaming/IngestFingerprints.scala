@@ -196,6 +196,9 @@ object IngestFingerprints {
     * between the clear and the promote leaves bands/ absent and
     * `fpProbe` falls back to the hashes/-derived scan — bit-equal
     * results, never a wrong answer; rerun to restore the fast path.
+    * Delete-then-promote is deliberate, not the `Stores` rename-aside
+    * swap: `appendRows` skips an absent bands/, so a healed-back
+    * `.old` would silently miss those appends (a stale serving index).
     * Run offline, never concurrently with ingest. */
   def bandsSave(spark: SparkSession, storePath: String,
                 targetRowsPerBucket: Long = 1000000L): Long = {

@@ -51,7 +51,7 @@ import graft.operators.Dedup
   * tuples, nBuckets) — a statistics-sized driver list), prunes the segs/ read
   * to those partitions, and the verify reads `s` off the seg row —
   * per-batch store cost is the pruned scan, and with nBuckets grown
-  * ∝ store (`fuzzyMaintain`, the lexMaintain discipline) the rows
+  * ∝ store (`fuzzyMaintain`, the shared `Stores.maintain` rule) the rows
   * read per probe bucket stay flat at the target. On a
   * narrow-vocabulary corpus whose probes cover every bucket the
   * pruned read degrades gracefully to the full scan — never worse
@@ -101,17 +101,6 @@ object IngestFuzzy {
     graft.core.Stores.stampGeometry(spark, s"$path/segs", nBuckets)
     Seq((maxDist, minSeg, nBuckets)).toDF("max_dist", "min_seg", "n_buckets")
       .write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  // the geometry in force for segs/: the marker stamped inside the
-  // data dir when present (atomic with the data — a crashed rebalance
-  // can never leave data and geometry disagreeing), meta's n_buckets
-  // as the bootstrap. Heals the rename-aside window first so a probe
-  // or append landing between a crashed swap and its rerun sees the
-  // complete old store, not an absent dir.
-  private def segGeom(spark: SparkSession, path: String, metaNB: Int): Int = {
-    graft.core.Stores.healAside(spark, s"$path/segs")
-    graft.core.Stores.readGeometry(spark, s"$path/segs").getOrElse(metaNB)
   }
 
   private def writeKeys(base: DataFrame, path: String, d: Int,
@@ -172,14 +161,11 @@ object IngestFuzzy {
   def appendKeys(spark: SparkSession, storePath: String,
                  keys: DataFrame): Unit = {
     val (d, minSeg, metaNB) = meta(spark, storePath)
-    val nB = segGeom(spark, storePath, metaNB)
+    val nB = graft.core.Stores.geometry(spark, s"$storePath/segs", metaNB)
     writeKeys(keys, s"$storePath/keys", d, minSeg, "append")
     writeSegs(keys.withColumn("len", length(col("s"))),
       s"$storePath/segs", d, minSeg, nB, "append")
-    // a first append creates segs/ — stamp the geometry it was cut
-    // with so later resolution never depends on meta staying in step
-    if (graft.core.Stores.readGeometry(spark, s"$storePath/segs").isEmpty)
-      graft.core.Stores.stampGeometry(spark, s"$storePath/segs", nB)
+    graft.core.Stores.stampIfAbsent(spark, s"$storePath/segs", nB)
   }
 
   /** The gate half of `processBatch`: the batch's surviving rows (ALL
@@ -231,7 +217,7 @@ object IngestFuzzy {
     require(maxKeys >= 1, "maxKeys must be >= 1")
     val spark = batch.sparkSession
     val (d, minSeg, metaNB) = meta(spark, storePath)
-    val nB = segGeom(spark, storePath, metaNB)
+    val nB = graft.core.Stores.geometry(spark, s"$storePath/segs", metaNB)
     val base = batch.where(col(keyCol).isNotNull)
       .select(col("doc_id").cast("long").as("id"), col(keyCol).as("s"))
       .withColumn("len", length(col("s")))
@@ -372,88 +358,38 @@ object IngestFuzzy {
       .select("pid")
   }
 
-  /** Re-bucket segs/ to `nBuckets` — the lexRebalance discipline:
-    * probes are GEOMETRY-INDEPENDENT (every partition column is
-    * recomputed from meta/), so results are bit-equal across a
-    * rebalance; only the probe's read volume changes. Staged: full
-    * new segs land at `segs.rebal` WITH the new geometry stamped
-    * inside (`_GEOMETRY`), COUNT-VERIFIED, then the rename-aside swap
-    * with every boolean checked and the crashed-run self-heal (a
-    * leftover `.old` with segs/ missing IS the store — renamed back,
-    * never deleted; probes/appends heal this window too). The promote
-    * rename is the ATOMIC geometry+data cutover: probes resolve
-    * n_buckets from the marker riding inside whichever segs/ they
-    * open, so no crash point leaves data partitioned by one geometry
-    * while probes prune by another (the round-12 silent-miss window,
-    * closed — crash-injection pinned in GeometryCutoverSpec). The
-    * trailing meta write only refreshes the bootstrap copy. Run
-    * offline, never concurrently with ingest. */
+  /** Re-bucket segs/ to `nBuckets`: probes are GEOMETRY-INDEPENDENT
+    * (every partition column is recomputed from the geometry in
+    * force), so results are bit-equal across a rebalance; only the
+    * probe's read volume changes. Staged, count-verified and
+    * crash-safe: `Stores.rebucket` (its scaladoc walks the crash
+    * windows); the trailing meta write only refreshes the bootstrap
+    * copy. Run offline, never concurrently with ingest. Returns the
+    * segs/ row count. */
   def fuzzyRebalance(spark: SparkSession, path: String,
                      nBuckets: Int): Long = {
     val (d, minSeg, _) = meta(spark, path)
     require(nBuckets >= 1, "nBuckets must be >= 1")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$path/segs")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/segs.rebal")
-    val old = new org.apache.hadoop.fs.Path(s"$path/segs.old")
-    if (fs.exists(old)) {
-      if (!fs.exists(p))
-        require(fs.rename(old, p), s"self-heal rename $old -> $p failed")
-      else
-        require(fs.delete(old, true), s"could not clear stale $old")
-    }
+    val n = graft.core.Stores.rebucket(spark, s"$path/segs", "sb",
+      sbCol(nBuckets), nBuckets)
     import spark.implicits._
-    if (!hasData(spark, p.toString)) { // zero-segment store: meta only
-      Seq((d, minSeg, nBuckets)).toDF("max_dist", "min_seg", "n_buckets")
-        .write.mode("overwrite").parquet(s"$path/meta")
-      return 0L
-    }
-    val before = spark.read.parquet(p.toString).count()
-    spark.read.parquet(p.toString)
-      .select("lt", "i", "seg", "tid", "s")
-      .withColumn("sb", sbCol(nBuckets))
-      .transform(graft.core.Stores.writeLayout(_, col("sb")))
-      .write.mode("overwrite").partitionBy("sb").parquet(tmp.toString)
-    // geometry rides INSIDE the staged dir: the promote rename below
-    // swaps data and geometry in one atomic step
-    graft.core.Stores.stampGeometry(spark, tmp.toString, nBuckets)
-    val n = spark.read.parquet(tmp.toString).count()
-    require(n == before,
-      s"rebalanced segs lost rows ($before -> $n); aborting with the " +
-        s"store untouched — $tmp left for inspection")
-    require(fs.rename(p, old), s"rename $p -> $old failed")
-    require(fs.rename(tmp, p), s"rename $tmp -> $p failed " +
-      s"(old segs preserved at $old — rename back to recover)")
-    require(fs.delete(old, true), s"could not delete $old")
     Seq((d, minSeg, nBuckets)).toDF("max_dist", "min_seg", "n_buckets")
       .write.mode("overwrite").parquet(s"$path/meta")
     n
   }
 
-  /** Growth-gated geometry maintenance (the lexMaintain discipline):
-    * rebalance only when the mean bucket has grown past `growFactor` ×
-    * `targetRowsPerBucket`, to ceil(rows / target) buckets — steady
-    * appends pay nothing, a store grown 100× pays one staged rewrite.
-    * Returns the geometry in force after the call. The CHECK itself
-    * costs a full segs/ count (an O(store) scan plus the all-buckets
-    * listing) — wired into a per-batch maintenance hook it reinstates
-    * the O(store) term the probe pruning removed, so gate its cadence
-    * by the hook's batch id (e.g. `if (id % 16 == 0)`), not per batch. */
+  /** Growth-gated geometry maintenance of segs/: `Stores.maintain`
+    * with `fuzzyRebalance` — the growth rule, its O(store) check and
+    * the cadence to run it at are documented there. Returns the
+    * geometry in force after the call. */
   def fuzzyMaintain(spark: SparkSession, path: String,
                     targetRowsPerBucket: Long = 1000000L,
                     growFactor: Int = 4): Int = {
     val (_, _, metaNB) = meta(spark, path)
-    require(targetRowsPerBucket > 0 && growFactor >= 1, "positive sizing")
-    if (!hasData(spark, s"$path/segs")) return metaNB
-    val nB = segGeom(spark, path, metaNB)
-    val rows = spark.read.parquet(s"$path/segs").count()
-    if (rows / nB <= growFactor * targetRowsPerBucket) nB
-    else {
-      val want = ((rows + targetRowsPerBucket - 1) / targetRowsPerBucket).toInt
-      fuzzyRebalance(spark, path, want)
-      want
-    }
+    val segs = s"$path/segs"
+    graft.core.Stores.maintain(spark, segs,
+      graft.core.Stores.geometry(spark, segs, metaNB),
+      targetRowsPerBucket, growFactor)(fuzzyRebalance(spark, path, _))
   }
 
   /** Start the streaming gate: `docs` is an unbounded stream carrying

@@ -93,25 +93,10 @@ object IngestLinkage {
   private def ebCol(nBuckets: Int) =
     pmod(xxhash64(col("entity")), lit(nBuckets.toLong)).cast("int")
 
-  // the geometry in force for ONE bucketed store dir: the marker
-  // stamped inside it when present (atomic with the data — stamped
-  // into the staged .rebal dir before the promote rename, so no crash
-  // point of linkRebalance leaves data partitioned by one geometry
-  // while probes prune by another; members/ and entities/ each carry
-  // their own marker, so even a crash BETWEEN the two rebuckets
-  // leaves both individually consistent), meta's n_buckets as the
-  // bootstrap for a dir with no marker yet. Heals the rename-aside
-  // window first so a probe landing between a crashed swap and its
-  // rerun reads the complete old store.
-  private def dirGeom(spark: SparkSession, dir: String, cfgNB: Int): Int = {
-    graft.core.Stores.healAside(spark, dir)
-    graft.core.Stores.readGeometry(spark, dir).getOrElse(cfgNB)
-  }
-
   /** Fix the model at `path`: field rules + integer LLR weights +
     * decision threshold + survivorship rules + the store partition
     * geometry (`nBuckets`). Geometry starts SMALL and grows with the
-    * store (`linkMaintain` — the lexMaintain discipline): every
+    * store (`linkMaintain`, the shared `Stores.maintain` rule): every
     * append commits up to one file per bucket, so an oversized
     * geometry on a young store pays pure filesystem-commit overhead
     * (measured ~1 s per 16 extra files per append at sf0.1) while a
@@ -297,8 +282,8 @@ object IngestLinkage {
     // per-dir geometry (marker-first): probe bucket ids and append
     // bucket columns MUST both come from the geometry the dir's data
     // is actually partitioned by, whatever meta says
-    val mbN = dirGeom(spark, s"$storePath/members", cfg.nBuckets)
-    val ebN = dirGeom(spark, s"$storePath/entities", cfg.nBuckets)
+    val mbN = graft.core.Stores.geometry(spark, s"$storePath/members", cfg.nBuckets)
+    val ebN = graft.core.Stores.geometry(spark, s"$storePath/entities", cfg.nBuckets)
     // one action where there were two (batch count + bucket collect):
     // the per-bucket count frame carries both the batch size and the
     // batch's distinct member-bucket set (statistics-sized, ≤ mbN rows)
@@ -505,13 +490,8 @@ object IngestLinkage {
     memberRows.withColumn("mb", mbCol(mbN))
       .transform(graft.core.Stores.writeLayout(_, mbN, col("mb")))
       .write.mode("append").partitionBy("mb").parquet(s"$storePath/members")
-    // a first append creates the dirs — stamp the geometry they were
-    // cut with so later resolution never depends on meta staying in
-    // step
-    if (graft.core.Stores.readGeometry(spark, s"$storePath/entities").isEmpty)
-      graft.core.Stores.stampGeometry(spark, s"$storePath/entities", ebN)
-    if (graft.core.Stores.readGeometry(spark, s"$storePath/members").isEmpty)
-      graft.core.Stores.stampGeometry(spark, s"$storePath/members", mbN)
+    graft.core.Stores.stampIfAbsent(spark, s"$storePath/entities", ebN)
+    graft.core.Stores.stampIfAbsent(spark, s"$storePath/members", mbN)
     (holds ++ Seq(assign, batchP)).foreach(_.unpersist(blocking = false))
     n
   }
@@ -564,91 +544,40 @@ object IngestLinkage {
     graft.core.Stores.rewriteLatest(spark, s"$storePath/entities",
       Seq("entity"), "ver", partitionCols = Seq("eb"))
 
-  /** Re-bucket members/ and entities/ to `nBuckets` — the lexRebalance
-    * discipline: every partition column is recomputed on probe and
-    * append from the geometry in force, so results are bit-equal
-    * across a rebalance; only the probes' read volume changes. Staged
-    * per store (land at `.rebal` WITH the new geometry stamped inside,
-    * COUNT-VERIFY, rename-aside swap with the crashed-run self-heal),
-    * meta last. Each dir's promote rename is its own ATOMIC
-    * geometry+data cutover: probes resolve each dir's n_buckets from
-    * the marker riding inside it, so no crash point — including a
-    * crash BETWEEN the members and entities rebuckets — leaves any
-    * dir's data partitioned by one geometry while probes prune it by
-    * another (the round-12 silent-miss window, closed —
-    * crash-injection pinned in GeometryCutoverSpec); the trailing meta
-    * write only refreshes the bootstrap copy. Run offline, never
-    * concurrently with ingest. */
+  /** Re-bucket members/ and entities/ to `nBuckets`: every partition
+    * column is recomputed on probe and append from the geometry in
+    * force, so results are bit-equal across a rebalance; only the
+    * probes' read volume changes. Each dir re-buckets on its own —
+    * staged, count-verified and crash-safe: `Stores.rebucket` (its
+    * scaladoc walks the crash windows, the one between the two dirs
+    * included) — and meta last, which only refreshes the bootstrap
+    * copy. Run offline, never concurrently with ingest. Returns the
+    * rows of both dirs. */
   def linkRebalance(spark: SparkSession, path: String,
                     nBuckets: Int): Long = {
     val cfg = readCfg(spark, path)
     require(nBuckets >= 1, "nBuckets must be >= 1")
     import spark.implicits._
-    val n =
-      rebucket(spark, s"$path/members", "mb", mbCol(nBuckets), nBuckets) +
-        rebucket(spark, s"$path/entities", "eb", ebCol(nBuckets), nBuckets)
+    val n = graft.core.Stores.rebucket(spark, s"$path/members", "mb",
+        mbCol(nBuckets), nBuckets) +
+      graft.core.Stores.rebucket(spark, s"$path/entities", "eb",
+        ebCol(nBuckets), nBuckets)
     Seq((cfg.threshold, nBuckets)).toDF("threshold", "n_buckets")
       .write.mode("overwrite").parquet(s"$path/meta")
     n
   }
 
-  /** Growth-gated geometry maintenance (the lexMaintain discipline):
-    * rebalance only when the mean members/ bucket has grown past
-    * `growFactor` × `targetRowsPerBucket`, to ceil(rows / target)
-    * buckets. Returns the geometry in force after the call. The CHECK
-    * itself costs a full members/ count (an O(store) scan plus the
-    * all-buckets listing) — wired into a per-batch maintenance hook it
-    * reinstates the O(store) term the probe pruning removed, so gate
-    * its cadence by the hook's batch id (e.g. `if (id % 16 == 0)`),
-    * not per batch. */
+  /** Growth-gated geometry maintenance, sized by members/:
+    * `Stores.maintain` with `linkRebalance` — the growth rule, its
+    * O(store) check and the cadence to run it at are documented there.
+    * Returns the geometry in force after the call. */
   def linkMaintain(spark: SparkSession, path: String,
                    targetRowsPerBucket: Long = 1000000L,
                    growFactor: Int = 4): Int = {
     val cfg = readCfg(spark, path)
-    require(targetRowsPerBucket > 0 && growFactor >= 1, "positive sizing")
-    if (!hasData(spark, s"$path/members")) return cfg.nBuckets
-    val nB = dirGeom(spark, s"$path/members", cfg.nBuckets)
-    val rows = spark.read.parquet(s"$path/members").count()
-    if (rows / nB <= growFactor * targetRowsPerBucket) nB
-    else {
-      val want = ((rows + targetRowsPerBucket - 1) / targetRowsPerBucket).toInt
-      linkRebalance(spark, path, want)
-      want
-    }
-  }
-
-  // one store's staged re-bucket swap (self-healing .old, the
-  // Stores.rewriteWith rules; geometry stamped into the staged dir so
-  // the promote rename is the atomic cutover); absent/empty stores are
-  // a no-op
-  private def rebucket(spark: SparkSession, path: String, bCol: String,
-                       newB: org.apache.spark.sql.Column,
-                       nBuckets: Int): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".rebal")
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(old)) {
-      if (!fs.exists(p))
-        require(fs.rename(old, p), s"self-heal rename $old -> $p failed")
-      else
-        require(fs.delete(old, true), s"could not clear stale $old")
-    }
-    if (!hasData(spark, path)) return 0L
-    val before = spark.read.parquet(path).count()
-    spark.read.parquet(path).drop(bCol)
-      .withColumn(bCol, newB)
-      .transform(graft.core.Stores.writeLayout(_, col(bCol)))
-      .write.mode("overwrite").partitionBy(bCol).parquet(tmp.toString)
-    graft.core.Stores.stampGeometry(spark, tmp.toString, nBuckets)
-    val n = spark.read.parquet(tmp.toString).count()
-    require(n == before,
-      s"rebucketed store lost rows ($before -> $n); aborting with the " +
-        s"store untouched — $tmp left for inspection")
-    require(fs.rename(p, old), s"rename $p -> $old failed")
-    require(fs.rename(tmp, p), s"rename $tmp -> $p failed " +
-      s"(old store preserved at $old — rename back to recover)")
-    require(fs.delete(old, true), s"could not delete $old")
-    n
+    val members = s"$path/members"
+    graft.core.Stores.maintain(spark, members,
+      graft.core.Stores.geometry(spark, members, cfg.nBuckets),
+      targetRowsPerBucket, growFactor)(linkRebalance(spark, path, _))
   }
 }

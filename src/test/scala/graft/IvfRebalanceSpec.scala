@@ -66,13 +66,6 @@ class IvfRebalanceSpec extends SparkSpec {
     reb.release()
   }
 
-  test("ivfRebalanceIfSkewed: below threshold is a no-op returning the same index") {
-    val idx = Similarity.ivfBuild(initial, nList = 2)
-    val same = Similarity.ivfRebalanceIfSkewed(idx, maxSkew = 100.0)
-    assert(same eq idx)
-    idx.release()
-  }
-
   test("SQ8 index rebalance: codes survive bit-for-bit (re-encode of a reconstruction is exact)") {
     val built = Similarity.ivfBuildSq8(initial, nList = 4)
     val idx = Similarity.ivfAppend(built, drifted)

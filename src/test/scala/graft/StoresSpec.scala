@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import graft.core.Stores
 
 /** `core.Stores`: the store-presence rule, the memoized tiny-directory
-  * reader (store meta and the vector-index metadata tables) and the
-  * capped keyed write layout. */
+  * reader (store meta and the vector-index metadata tables), the
+  * capped keyed write layout, and the bucketed stores' geometry
+  * lifecycle (the growth rule and the staged re-bucket). */
 class StoresSpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,5 +87,74 @@ class StoresSpec extends SparkSpec {
       .map(_.listFiles().count(_.getName.endsWith(".parquet")))
     assert(filesPerKey.length == 10 && filesPerKey.forall(_ == 1), filesPerKey.toSeq)
     assert(spark.read.parquet(dir).count() == 400)
+  }
+
+  test("grownBuckets: grows past growFactor × target to the ceil, and never wraps Int") {
+    // 1 bucket, target 1000, growFactor 4: the threshold is 4000 rows a bucket
+    assert(Stores.grownBuckets(3999L, 1, 1000L, 4).isEmpty)
+    assert(Stores.grownBuckets(4000L, 1, 1000L, 4).isEmpty)
+    assert(Stores.grownBuckets(4001L, 1, 1000L, 4).contains(5))
+    assert(Stores.grownBuckets(8000L, 1, 1000L, 4).contains(8))
+    // the mean bucket decides, not the total
+    assert(Stores.grownBuckets(8000L, 2, 1000L, 4).isEmpty)
+    assert(Stores.grownBuckets(12001L, 2, 1000L, 4).contains(13))
+    // a bucket count past Int.MaxValue fails instead of wrapping
+    val e = intercept[IllegalArgumentException] {
+      Stores.grownBuckets(Int.MaxValue.toLong * 3, 1, 1L, 1)
+    }
+    assert(e.getMessage.contains("overflows Int"))
+    assert(Stores.grownBuckets(Int.MaxValue.toLong, 1, 1L, 1).contains(Int.MaxValue))
+  }
+
+  private def exists(p: String) = new java.io.File(p).exists()
+
+  test("rebucket: an absent or empty dir is a no-op that creates nothing") {
+    val root = tmp("rebucket_absent")
+    val bucket = pmod(xxhash64(col("k")), lit(5L)).cast("int")
+    assert(Stores.rebucket(spark, s"$root/missing", "b", bucket, 5) == 0L)
+    assert(new java.io.File(root).list().isEmpty)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "empty"))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "empty", "_SUCCESS"))
+    assert(Stores.rebucket(spark, s"$root/empty", "b", bucket, 5) == 0L)
+    assert(new java.io.File(root).list().toSeq == Seq("empty"))
+    assert(Stores.readGeometry(spark, s"$root/empty").isEmpty)
+  }
+
+  test("rebucket: heals a crashed .old, replaces a stale .rebal, stamps the new geometry, keeps every row") {
+    val dir = tmp("rebucket") + "/store"
+    val rows = (1L to 200L).map(i => (i, s"v${i % 17}"))
+    rows.toDF("k", "v").withColumn("b", pmod(xxhash64(col("k")), lit(3L)).cast("int"))
+      .write.partitionBy("b").parquet(dir)
+    Stores.stampGeometry(spark, dir, 3)
+    // a crash between the swap renames: the store sits aside at .old
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".old")))
+    // and an earlier crashed run left a partial staged copy
+    Seq((999L, "stale")).toDF("k", "v").withColumn("b", lit(0))
+      .write.partitionBy("b").parquet(dir + ".rebal")
+    val n = Stores.rebucket(spark, dir, "b",
+      pmod(xxhash64(col("k")), lit(7L)).cast("int"), 7)
+    assert(n == rows.size)
+    assert(exists(dir) && !exists(dir + ".old") && !exists(dir + ".rebal"))
+    assert(Stores.readGeometry(spark, dir).contains(7))
+    val back = spark.read.parquet(dir)
+    assert(back.select("k", "v").collect().map(r => (r.getLong(0), r.getString(1)))
+      .sorted.toSeq == rows)
+    val bs = back.select("b").distinct().collect().map(_.getInt(0))
+    assert(bs.nonEmpty && bs.forall(b => b >= 0 && b < 7), bs.toSeq)
+  }
+
+  test("only core.Stores, IncrementalStore and IngestFingerprints rename store directories") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    val allowed = Set("core/Stores.scala", "cache/IncrementalStore.scala",
+      "streaming/IngestFingerprints.scala")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val renaming = files(root).filter(_.getName.endsWith(".scala")).filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      src.contains("fs.rename(")
+    }.map(f => root.toPath.relativize(f.toPath).toString)
+    assert(renaming.nonEmpty && renaming.toSet.subsetOf(allowed),
+      s"fs.rename( outside the staged-swap homes: ${renaming.filterNot(allowed).sorted}")
   }
 }
