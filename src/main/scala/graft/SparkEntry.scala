@@ -973,7 +973,8 @@ object SparkEntry {
     // Rows-only (int8 ADC ranks the pool); recall parity vs the float
     // path pinned by SimilaritySpec
     "q140_knn_join_sq8" -> ((s, d) =>
-      Similarity.knnJoinSq8(embeddings(s, d), 5).materialize.value),
+      Similarity.knnJoin(embeddings(s, d), 5, codec = Similarity.ListCodec.Sq8)
+        .materialize.value),
     // the deepest corpus-side quantization rung: PQ-coded lists scored
     // via PqDecode reconstructions + exact float refine (rows-only —
     // seeded KMeans/codebooks; SimilaritySpec pins refined recall and
@@ -1000,7 +1001,7 @@ object SparkEntry {
     // Rows-only (seeded alternation + KMeans); recall floor and
     // determinism pinned by SimilaritySpec
     "q154_knn_join_opq" -> ((s, d) =>
-      Similarity.knnJoinOpq(embeddings(s, d), 5, m = 8).materialize.value),
+      Similarity.knnJoinPq(embeddings(s, d), 5, m = 8, opq = true).materialize.value),
     // the OPQ rung's exhaustive dial: rotation preserves dots/norms,
     // so scanFrac = 1.0 + a corpus-covering refine pool is again the
     // exact brute ranking — hash-green through rotation + codebooks
@@ -1008,14 +1009,15 @@ object SparkEntry {
     "q155_knn_opq_exhaustive" -> ((s, d) => {
       val e = embeddings(s, d)
       // sampleFit: fit-invariant at the exhaustive dial (see q153)
-      Similarity.knnJoinOpq(e, 5, m = 8,
+      Similarity.knnJoinPq(e, 5, m = 8,
         refine = (e.count() / 5L + 1L).toInt, scanFrac = Some(1.0),
-        sampleFit = true).materialize.value
+        sampleFit = true, opq = true).materialize.value
     }),
     // q138's brute-force contract through the SAMPLE-FIT coarse
     // quantizer (round-8): centroids train on a bounded driver slice
-    // (`coarseLloyd`) and assignment is the codegen augmented-dot
-    // argmin — the exhaustive dial scans every list regardless of
+    // (`coarseFitSample`, the seeded `pqFitBooksLocal` Lloyd kernel)
+    // and assignment is the codegen augmented-dot argmin — the
+    // exhaustive dial scans every list regardless of
     // where the cheap fit put them, so the green-dial invariance the
     // spec pins is proven in the gate too (hash-green, same oracle)
     "q156_knn_exhaustive_samplefit" -> ((s, d) =>
@@ -1039,7 +1041,8 @@ object SparkEntry {
     // Hamming candidate pool, float refine. Rows-only (seeded lists);
     // BinSpec pins refined recall and determinism
     "q159_knn_join_bin" -> ((s, d) =>
-      Similarity.knnJoinBin(embeddings(s, d), 5).materialize.value),
+      Similarity.knnJoin(embeddings(s, d), 5, codec = Similarity.ListCodec.Bin)
+        .materialize.value),
     // q159 at the exhaustive dial (every list + corpus-covering pool):
     // the float refine ranks all candidates — the brute ranking through
     // build → sign-encode → Hamming → refine (hash-green; the corpus-
@@ -1047,9 +1050,9 @@ object SparkEntry {
     "q160_knn_bin_exhaustive" -> ((s, d) => {
       val e = embeddings(s, d)
       // sampleFit: fit-invariant at the exhaustive dial (see q153)
-      Similarity.knnJoinBin(e, 5,
-        refine = (e.count() / 5L + 1L).toInt, scanFrac = Some(1.0),
-        sampleFit = true).materialize.value
+      Similarity.knnJoin(e, 5, scanFrac = Some(1.0), sampleFit = true,
+        codec = Similarity.ListCodec.Bin,
+        refine = (e.count() / 5L + 1L).toInt).materialize.value
     }),
     // fuzzy-key similarity join: ALL head-32 pairs within Levenshtein
     // distance 4, blocked by the rarest-first q-gram prefix filter —

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** The `nProbe` nearest IVF lists for a vector, as a native codegen
   * expression — the probe-selection step of every corpus-side IVF
-  * consumer (`knnJoin`, `knnJoinSq8`, `ivfSearch*`).
+  * consumer (`knnJoin` and `ivfSearch` over every list codec).
   *
   * Why an expression and not a plan: the ranking-window form
   * (crossJoin broadcast centroids → row_number per qid → filter)

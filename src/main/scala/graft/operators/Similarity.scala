@@ -135,87 +135,7 @@ object Similarity {
     val pts = pqSamplePoints(base, sampleCap, normalize = false)
     require(pts.length >= nList,
       s"sample (${pts.length}) smaller than nList=$nList — lower nList or raise sampleCap")
-    coarseLloyd(pts, nList, maxIter)
-  }
-
-  /** Full-width seeded Lloyd over the driver sample — bit-identical
-    * math to `pqFitBooksLocal(pts, 1, k, dim)` (same seeded init, same
-    * strict-`<` lowest-index ties, same keep-previous-center rule for
-    * empty clusters), but with the argmin ASSIGNMENT loop chunked
-    * across a thread pool: unlike the PQ case (m subspaces already
-    * train in parallel), the coarse fit is ONE subspace of full width,
-    * so without this the whole sample×k×dim hot loop runs on a single
-    * core. Determinism holds because per-point argmin is independent
-    * (no FP accumulation crosses points) and the center UPDATE
-    * accumulates sequentially in point order. */
-  private[graft] def coarseLloyd(pts: Array[Array[Double]], k: Int,
-                                 maxIter: Int = 20): Array[Array[Double]] = {
-    val dim = pts(0).length
-    val rnd = new scala.util.Random(42L)
-    val cents = Array.tabulate(k)(_ => new Array[Double](dim))
-    val seedIdx = rnd.shuffle(pts.indices.toVector).take(k)
-    for (c <- 0 until k) System.arraycopy(pts(seedIdx(c)), 0, cents(c), 0, dim)
-    val assign = new Array[Int](pts.length)
-    val nT = math.max(1, Runtime.getRuntime.availableProcessors())
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(nT)
-    try {
-      var iter = 0
-      var moved = true
-      while (iter < maxIter && moved) {
-        val it0 = iter == 0
-        val cN2 = cents.map(c => c.map(v => v * v).sum)
-        val chunk = math.max(1024, (pts.length + nT - 1) / nT)
-        val tasks = (0 until pts.length by chunk).map { lo =>
-          val hi = math.min(pts.length, lo + chunk)
-          pool.submit(new java.util.concurrent.Callable[Boolean] {
-            def call(): Boolean = {
-              var m0 = it0
-              var i = lo
-              while (i < hi) {
-                val x = pts(i)
-                var best = 0
-                var bestD = Double.PositiveInfinity
-                var c = 0
-                while (c < k) {
-                  val cc = cents(c)
-                  var dotXC = 0.0
-                  var t = 0
-                  while (t < dim) { dotXC += x(t) * cc(t); t += 1 }
-                  val d = cN2(c) - 2.0 * dotXC
-                  if (d < bestD) { bestD = d; best = c }
-                  c += 1
-                }
-                if (assign(i) != best) { assign(i) = best; m0 = true }
-                i += 1
-              }
-              m0
-            }
-          })
-        }
-        moved = tasks.map(_.get()).exists(identity)
-        if (moved) {
-          val sums = Array.tabulate(k)(_ => new Array[Double](dim))
-          val counts = new Array[Int](k)
-          var i = 0
-          while (i < pts.length) {
-            val c = assign(i); counts(c) += 1
-            var t = 0
-            while (t < dim) { sums(c)(t) += pts(i)(t); t += 1 }
-            i += 1
-          }
-          var c = 0
-          while (c < k) {
-            if (counts(c) > 0) {
-              var t = 0
-              while (t < dim) { cents(c)(t) = sums(c)(t) / counts(c); t += 1 }
-            }
-            c += 1
-          }
-        }
-        iter += 1
-      }
-    } finally pool.shutdown()
-    cents
+    pqFitBooksLocal(pts, 1, nList, pts(0).length, maxIter)(0)
   }
 
   /** Nearest-list assignment as a codegen register scan: argmin‖x−c‖² =
@@ -253,7 +173,7 @@ object Similarity {
     }
 
   /** Train the IVF coarse quantizer on `corpus` and assign every
-    * corpus vector to its nearest list.
+    * corpus vector to its nearest list, the lists held in `codec`.
     *
     * `sampleFit = false` (default): seeded MLlib KMeans over the full
     * corpus — deterministic per build, but the fit is N×nList×maxIter
@@ -267,15 +187,21 @@ object Similarity {
     * scanned either way, so results are bit-equal; probed recall
     * parity is measured in `SimilaritySpec`. Assignment is one
     * distributed pass either way; the result persists partitioned by
-    * access pattern (list-id shuffle happens once, at first search). */
-  def ivfBuild(corpus: DataFrame, nList: Int = 8,
-               sampleFit: Boolean = false): IvfIndex = {
-    val (cents, listed) = coarseLists(vecE(corpus)
-      .withColumn("nrm", sqrt(dot(col("e"), col("e")))), nList, sampleFit)
-    IvfIndex(cents, listed
-      .select(col("vec_id").as("vid"), col("e").as("ce"), col("nrm").as("cn"),
-        col("list_id"))
-      .persist(MEMORY_AND_DISK), nList)
+    * access pattern (list-id shuffle happens once, at first search).
+    *
+    * `codec` picks what the long-lived lists hold; the centroids stay
+    * float either way. `ListCodec.Sq8` is the FAISS `IVF,SQ8`
+    * composite: int8 codes, ~7× under the float lists in memory and
+    * on disk. `ListCodec.Bin` holds d/8-byte sign codes (33× under the
+    * float lists at 64 dims), ranked by integer Hamming; they are NOT
+    * reconstructible, so `ivfRebalance` rejects them — rebuild from
+    * the source corpus like the PQ tiers. `ivfSave`/`ivfLoad`,
+    * `appendSave` and `ivfSearch` serve every codec. */
+  def ivfBuild(corpus: DataFrame, nList: Int = 8, sampleFit: Boolean = false,
+               codec: ListCodec = ListCodec.Float): IvfIndex = {
+    val (cents, listed) = coarseLists(vecE(corpus), nList, sampleFit)
+    IvfIndex(cents, codec.encode(listed.select(col("vec_id").as("vid"), col("e"),
+      col("list_id")), "e").persist(MEMORY_AND_DISK), nList)
   }
 
   /** `(vec_id, e)`: the vector promoted to double — every build,
@@ -288,16 +214,16 @@ object Similarity {
     * list frame's columns. A codec knows its list columns, how to
     * encode `(vid, e, list_id)` rows into them, the query columns it
     * scores with (added to `(qid, qe, qn)`) and its candidate score:
-    * cosine, descending; Hamming, ascending, for sign codes. */
-  private[graft] sealed abstract class ListCodec(val payload: Seq[String],
-                                                 val qCols: Seq[String]) {
+    * cosine, descending; Hamming, ascending, for sign codes. Callers
+    * choose one at build time (`ivfBuild`, `knnJoin`). */
+  sealed abstract class ListCodec(val payload: Seq[String], val qCols: Seq[String]) {
     def encode(rows: DataFrame, e: String): DataFrame
     def query(q: DataFrame): DataFrame = q
     def score: Column
     def by: Column = col("score").desc
   }
 
-  private[graft] object ListCodec {
+  object ListCodec {
     case object Float extends ListCodec(Seq("vid", "ce", "cn"), Seq("qe", "qn")) {
       def encode(rows: DataFrame, e: String): DataFrame =
         rows.withColumn("cn", sqrt(dot(col(e), col(e))))
@@ -685,31 +611,15 @@ object Similarity {
   def ivfLoad(spark: SparkSession, path: String): IvfIndex =
     StoreLayout.ivf(spark, path).load(spark, path)
 
-  /** Assign NEW vectors to an existing index's lists without refitting
-    * the quantizer — the FAISS `index.add()` analog and the vector half
-    * of the incremental-ingest story (q97 / `IngestDedup` for docs):
-    * a growing corpus appends embeddings batch by batch against frozen
-    * centroids, refitting only on drift. Assignment uses the
-    * quantizer's own metric (squared Euclidean — argmin of
-    * |c|² − 2·v·c with |v|² constant), so appended vectors land in the
-    * same list `ivfBuild` would have chosen; works for every list
-    * codec (codes re-encoded per batch). Centroids broadcast;
-    * the only data motion is the new batch. */
-  def ivfAppend(index: IvfIndex, newVecs: DataFrame): IvfIndex = {
-    val merged = index.assigned.unionByName(assignToLists(
-        index.centroids, newVecs, ListCodec.of(index)))
-      .persist(MEMORY_AND_DISK)
-    merged.count()
-    index.release()
-    IvfIndex(index.centroids, merged, index.nList)
-  }
-
   /** Append new vectors to whatever store is saved at `path`, ON DISK,
-    * under its frozen quantizer (`StoreLayout.append`): IVF lists
-    * re-encoded in the store's own codec, PQ codes through the saved
-    * rotation, lists and books, sign codes as they are. A later load
-    * sees the union; per-batch cost is O(batch), independent of the
-    * store size — the `IngestDedup.processBatch` contract for vectors. */
+    * under its frozen quantizer (`StoreLayout.append`) — the FAISS
+    * `index.add()` analog and the vector half of the incremental-ingest
+    * story: IVF lists assigned by the quantizer's own metric (the list
+    * `ivfBuild` would have chosen) and re-encoded in the store's own
+    * codec, PQ codes through the saved rotation, lists and books, sign
+    * codes as they are; refits happen only on drift. A later load sees
+    * the union; per-batch cost is O(batch), independent of the store
+    * size — the `IngestDedup.processBatch` contract for vectors. */
   def appendSave(spark: SparkSession, path: String, newVecs: DataFrame): Unit =
     StoreLayout.of(spark, path).append(spark, path, newVecs)
 
@@ -815,7 +725,7 @@ object Similarity {
   }
 
   /** Retrain-on-drift — the maintenance half of the append story.
-    * `ivfAppend` keeps per-batch cost O(batch) by freezing the
+    * `appendSave` keeps per-batch cost O(batch) by freezing the
     * centroids, which is exactly what lets a drifted workload pile new
     * vectors into a few lists; once `ivfSkew` crosses the caller's
     * threshold, this refits the coarse quantizer on the index's
@@ -825,31 +735,16 @@ object Similarity {
     * Correctness is unchanged by construction — the exhaustive dial
     * (`scanFrac = 1.0` / nProbe = nList) scans every list either way —
     * rebalancing restores the even occupancy the fixed-nProbe cost and
-    * recall models assume. */
+    * recall models assume. The on-disk form, which writes a new
+    * generation and replays the append gap, is
+    * `IngestVectors.maintainIndex`. */
   def ivfRebalance(index: IvfIndex, nList: Int = 0,
                    sampleFit: Boolean = false): IvfIndex = {
     val k = if (nList > 0) nList else index.nList
-    val corpus = reconstruct(index.assigned)
-    val rebuilt =
-      if (ListCodec.of(index) == ListCodec.Sq8) ivfBuildSq8(corpus, k, sampleFit)
-      else ivfBuild(corpus, k, sampleFit)
+    val rebuilt = ivfBuild(reconstruct(index.assigned), k, sampleFit, ListCodec.of(index))
     rebuilt.assigned.count() // materialize before releasing the source
     index.release()
     rebuilt
-  }
-
-  /** Offline on-disk rebalance: load an `ivfSave`d store, retrain,
-    * write the rebalanced generation to `dstPath` (a NEW path — the
-    * offline-compaction swap convention; readers move atomically by
-    * switching paths, never observing a half-written store). */
-  def ivfRebalanceSave(spark: SparkSession,
-                       srcPath: String, dstPath: String,
-                       sampleFit: Boolean = false): Unit = {
-    require(srcPath != dstPath,
-      "rebalance writes a new generation; src and dst must differ")
-    val rebuilt = ivfRebalance(ivfLoad(spark, srcPath), sampleFit = sampleFit)
-    ivfSave(rebuilt, dstPath)
-    rebuilt.release()
   }
 
   /** New-batch list assignment shared by the append paths: nearest
@@ -1024,24 +919,51 @@ object Similarity {
     * linearly in scanFrac·N per query. scanFrac = 1.0 probes every
     * list, which IS the exact brute-force join (pinned equal in
     * `SimilaritySpec`). Unset, the fixed `nProbe` gives cost-stable
-    * scaling and recall rides the corpus's cluster structure. */
+    * scaling and recall rides the corpus's cluster structure.
+    *
+    * `codec` is the list codec `ivfBuild` holds the lists in. Float
+    * lists score exact cosine. `ListCodec.Sq8` is the memory-wall
+    * form: at 10⁹ vectors the float lists (512 B per 64-dim vector)
+    * stop the hot set fitting in executor memory, int8 lists hold
+    * 72 B. `ListCodec.Bin` is the cheapest-storage rung of the
+    * corpus-side ladder (float → SQ8 → PQ/OPQ → 1-bit). Both score
+    * candidates approximately (int8 dot, Hamming) and re-rank each
+    * query's top k·`refine` pool with exact float cosine
+    * (`knnDriver`); probe selection stays on the float centroids, so
+    * the recall dials behave the same on every codec, and at
+    * scanFrac = 1.0 with a corpus-covering refine the result IS the
+    * brute ranking (q160, hash-green). */
   def knnJoin(emb: DataFrame, k: Int, nProbe: Int = 2,
               targetClusterRows: Long = 256,
               knownCount: Option[Long] = None,
               scanFrac: Option[Double] = None,
-              sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val index = ivfBuild(emb, autoK(emb, targetClusterRows, knownCount), sampleFit)
-    Scoped(index)(index.release()).map(knnJoinIndexed(emb, _, k, nProbe, scanFrac))
+              sampleFit: Boolean = false,
+              codec: ListCodec = ListCodec.Float,
+              refine: Int = 4): Scoped[DataFrame] = {
+    val index = ivfBuild(emb, autoK(emb, targetClusterRows, knownCount), sampleFit, codec)
+    Scoped(index)(index.release()).map(knnJoinIndexed(emb, _, k, nProbe, scanFrac, refine))
   }
 
-  /** `knnJoin` against a caller-owned float index — the build-once /
+  /** `knnJoin` against a caller-owned index — the build-once /
     * join-repeatedly form (`ivfBuild` or an `ivfLoad`ed store): no
     * KMeans fit, no assignment pass; the caller releases the index.
-    * Join-after-reload equals join-after-build (`SimilaritySpec`). */
+    * The list codec comes from the index (`ListCodec.of`, as in
+    * `ivfSearch`): float lists stay exact, SQ8 and 1-bit lists re-rank
+    * a k·`refine` pool in float. The probe count resolves first, so a
+    * bad `scanFrac` fails before any work. Join-after-reload equals
+    * join-after-build (`SimilaritySpec`). */
   def knnJoinIndexed(emb: DataFrame, index: IvfIndex, k: Int,
                      nProbe: Int = 2,
-                     scanFrac: Option[Double] = None): DataFrame =
-    knnJoinLists(emb, index, ListCodec.Float, k, nProbe, scanFrac, None)
+                     scanFrac: Option[Double] = None,
+                     refine: Int = 4): DataFrame = {
+    val codec = ListCodec.of(index)
+    val n = probeRule(nProbe, scanFrac)(index.nList)
+    val q = codec.query(vecFrame(emb, "qid", "qe", "qn"))
+    val probes = probeAll(q, (Seq("qid", "qe", "qn") ++ codec.qCols).distinct, n,
+      index.centroids)
+    knnDriver(emb, probes, index.assigned, index.nList, codec.score, codec.by, k,
+      if (codec == ListCodec.Float) None else Some(refine))
+  }
 
   /** Probe lists for a corpus-sized query side. At nProbe ≥ nList every
     * list is probed regardless of rank, so the exhaustive dial skips
@@ -1085,100 +1007,6 @@ object Similarity {
     }
   }
 
-  /** `knnDriver` over an `IvfIndex`'s lists in `codec`: the probe
-    * count resolves first, so a bad `scanFrac` fails before any work. */
-  private def knnJoinLists(emb: DataFrame, index: IvfIndex, codec: ListCodec,
-                           k: Int, nProbe: Int, scanFrac: Option[Double],
-                           refine: Option[Int]): DataFrame = {
-    val n = probeRule(nProbe, scanFrac)(index.nList)
-    val q = codec.query(vecFrame(emb, "qid", "qe", "qn"))
-    val probes = probeAll(q, (Seq("qid", "qe", "qn") ++ codec.qCols).distinct, n,
-      index.centroids)
-    knnDriver(emb, probes, index.assigned, index.nList, codec.score, codec.by, k, refine)
-  }
-
-  /** `knnJoin` over an SQ8-QUANTIZED index — the memory-wall form: at
-    * 10⁹ vectors the float `assigned` lists (512 B per 64-dim vector)
-    * are what stops the hot set fitting in executor memory; here the
-    * long-lived lists hold int8 codes (72 B, ~7×), candidates are
-    * scored with the approximate int8 dot (ADC), and only the top
-    * k·`refine` pool per query is re-ranked with exact float cosine
-    * (`knnDriver`). Probe selection stays on float centroids (tiny,
-    * broadcast), so the recall dials (`nProbe`, `scanFrac`) behave
-    * exactly like `knnJoin`'s; the refine pool absorbs ADC rank noise
-    * near ties (recall parity vs the float path pinned by
-    * `SimilaritySpec`). */
-  def knnJoinSq8(emb: DataFrame, k: Int, nProbe: Int = 2,
-                 targetClusterRows: Long = 256, refine: Int = 4,
-                 scanFrac: Option[Double] = None,
-                 sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val index = ivfBuildSq8(emb, autoK(emb, targetClusterRows, None), sampleFit)
-    Scoped(index)(index.release())
-      .map(knnJoinSq8Indexed(emb, _, k, nProbe, refine, scanFrac))
-  }
-
-  /** `knnJoinSq8` against a caller-owned SQ8 index — the build-once /
-    * join-repeatedly form (`ivfBuildSq8` or an `ivfLoad`ed SQ8 store;
-    * the caller releases the index). Join-after-reload equals
-    * join-after-build (`SimilaritySpec`). */
-  def knnJoinSq8Indexed(emb: DataFrame, index: IvfIndex, k: Int,
-                        nProbe: Int = 2, refine: Int = 4,
-                        scanFrac: Option[Double] = None): DataFrame = {
-    require(ListCodec.of(index) == ListCodec.Sq8,
-      "knnJoinSq8Indexed needs an SQ8 list store (qc column) — use knnJoinIndexed for float lists")
-    knnJoinLists(emb, index, ListCodec.Sq8, k, nProbe, scanFrac, Some(refine))
-  }
-
-  /** IVF with 1-BIT lists — the binary rung lifted to the corpus
-    * side: probe selection on float centroids (tiny, exact), inverted
-    * lists of d/8-byte sign codes (33× under the float lists at 64
-    * dims — the `knn_list_bytes` ladder's bottom row), candidates
-    * ranked by integer Hamming, and the top pool repaired in float.
-    * Sign codes are NOT reconstructible (unlike SQ8), so
-    * `ivfRebalance` rejects these stores — rebuild from the source
-    * corpus like the PQ tiers. `ivfSave`/`ivfLoad` round-trip the
-    * (vid, bc, list_id) layout; `appendSave` encodes appends against
-    * the frozen centroids; `ivfSearch` ranks by Hamming. */
-  def ivfBuildBin(corpus: DataFrame, nList: Int = 8,
-                  sampleFit: Boolean = false): IvfIndex =
-    ivfBuildAs(corpus, nList, sampleFit, ListCodec.Bin)
-
-  /** Build float lists, re-encode them with `codec`, materialize the
-    * codes, then drop the float lists. */
-  private def ivfBuildAs(corpus: DataFrame, nList: Int, sampleFit: Boolean,
-                         codec: ListCodec): IvfIndex = {
-    val fl = ivfBuild(corpus, nList, sampleFit)
-    val assigned = codec.encode(fl.assigned, "ce")
-      .persist(MEMORY_AND_DISK)
-    assigned.count()
-    fl.release()
-    IvfIndex(fl.centroids, assigned, fl.nList)
-  }
-
-  /** Corpus-wide kNN join over 1-bit lists + float refine — the
-    * cheapest-storage rung of the corpus-side ladder (float → SQ8 →
-    * PQ/OPQ → binary). Same dials, same `shuffle_hash`-pinned
-    * candidate shape; the Hamming pool absorbs into the float re-rank
-    * exactly like the ADC pools, and the exhaustive dial (scanFrac =
-    * 1.0 + corpus-covering refine) IS the brute ranking (q160,
-    * hash-green). */
-  def knnJoinBin(emb: DataFrame, k: Int, nProbe: Int = 2,
-                 targetClusterRows: Long = 256, refine: Int = 4,
-                 scanFrac: Option[Double] = None,
-                 sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val index = ivfBuildBin(emb, autoK(emb, targetClusterRows, None), sampleFit)
-    Scoped(index)(index.release())
-      .map(knnJoinBinIndexed(emb, _, k, nProbe, refine, scanFrac))
-  }
-
-  def knnJoinBinIndexed(emb: DataFrame, index: IvfIndex, k: Int,
-                        nProbe: Int = 2, refine: Int = 4,
-                        scanFrac: Option[Double] = None): DataFrame = {
-    require(ListCodec.of(index) == ListCodec.Bin,
-      "knnJoinBinIndexed needs a binary list store (bc column) — use knnJoinIndexed for float lists")
-    knnJoinLists(emb, index, ListCodec.Bin, k, nProbe, scanFrac, Some(refine))
-  }
-
   /** `knnJoin` over a PQ-CODED store — the deepest rung of the
     * corpus-side quantized ladder (float → SQ8 ~7× → PQ m BYTES per
     * vector): at 10⁹ vectors even int8 lists strain executor memory;
@@ -1191,17 +1019,28 @@ object Similarity {
     * corpus never rematerializes), and
     * the top k·`refine` pool per query is re-ranked with exact float
     * cosine from the source frame, the same RefineFlat contract as
-    * `knnJoinSq8`. Probe selection shares `NearestLists` (float
-    * centroids — tiny), so the `nProbe`/`scanFrac` dials behave
-    * identically across all three rungs. Recall floors are the PQ
-    * family's (q116/q119): size `m` by measured refined recall at the
-    * target corpus, per the round-6 law. */
+    * `knnJoin`'s SQ8 and 1-bit codecs. Probe selection shares
+    * `NearestLists` (float centroids — tiny), so the `nProbe`/`scanFrac`
+    * dials behave identically across every rung. Recall floors are the
+    * PQ family's (q116/q119): size `m` by measured refined recall at
+    * the target corpus, per the round-6 law.
+    *
+    * `opq = true` puts an OPQ rotation in front — the FAISS
+    * `OPQ{m},IVF,PQ{m}` composite as a corpus-side join: an orthonormal
+    * rotation fit by the `opqFitLocal` alternation (Ge et al. 2013,
+    * `iters` rounds) decorrelates the subspaces BEFORE the codebooks
+    * are fit, which is where PQ loses recall on vectors whose variance
+    * isn't axis-aligned. Rotation preserves dot products and norms, so
+    * the coarse lists, the ADC ordering and the float refine cosines
+    * are the SAME quantities as the un-rotated path — only codebook
+    * fidelity changes. */
   def knnJoinPq(emb: DataFrame, k: Int, nProbe: Int = 2,
                 targetClusterRows: Long = 256, m: Int = 16,
                 refine: Int = 4, scanFrac: Option[Double] = None,
-                sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val index = pqBuild(emb, m, 256, autoK(emb, targetClusterRows, None),
-      sampleFit = sampleFit)
+                sampleFit: Boolean = false, opq: Boolean = false,
+                iters: Int = 8): Scoped[DataFrame] = {
+    val index = pqBuild(emb, m, 256, autoK(emb, targetClusterRows, None), opq, iters,
+      sampleFit)
     // the packed lists are materialized eagerly inside Indexed, so the
     // build's array<int> store can drop immediately (the memory story)
     try knnJoinPqIndexed(emb, index, k, nProbe, refine, scanFrac)
@@ -1255,32 +1094,6 @@ object Similarity {
     }
   }
 
-  /** `knnJoinPq` behind an OPQ rotation — the FAISS `OPQ{m},IVF,PQ{m}`
-    * composite as a corpus-side join: an orthonormal rotation fit by
-    * the `opqFitLocal` alternation (Ge et al. 2013) decorrelates the
-    * subspaces BEFORE the PQ codebooks are fit, which is where PQ
-    * loses recall on vectors whose variance isn't axis-aligned.
-    * Rotation preserves dot products and norms exactly, so the coarse
-    * KMeans lists, the ADC ordering semantics, and the float refine
-    * cosines are the SAME quantities as the un-rotated path — only
-    * codebook fidelity changes. One `MatVec` (native codegen) per row
-    * at build/query time; the long-lived state is still m codes per
-    * vector plus the dim×dim rotation (driver-held metadata). With
-    * this rung every `IngestVectors` store layout (float / SQ8 / PQ /
-    * OPQ) has a corpus-side kNN consumer. */
-  def knnJoinOpq(emb: DataFrame, k: Int, nProbe: Int = 2,
-                 targetClusterRows: Long = 256, m: Int = 16,
-                 refine: Int = 4, iters: Int = 8,
-                 scanFrac: Option[Double] = None,
-                 sampleFit: Boolean = false): Scoped[DataFrame] = {
-    val index = pqBuild(emb, m, 256, autoK(emb, targetClusterRows, None),
-      opq = true, iters = iters, sampleFit = sampleFit)
-    // like the PQ rung: the Indexed form packs eagerly, so the build's
-    // array<int> codes can drop now (the memory story)
-    try knnJoinPqIndexed(emb, index, k, nProbe, refine, scanFrac)
-    finally index.release()
-  }
-
   /** `(vec_id, embedding)` in an index's space: rotated by its
     * row-major dim×dim OPQ rotation (one codegen `MatVec` per row), as
     * is without one. */
@@ -1322,7 +1135,7 @@ object Similarity {
     * by angle (Charikar 2002 sign-LSH, applied per-coordinate). The
     * query side is the bounded broadcast side by contract (the
     * `cosineTopK` discipline); corpus-side joins should quantize the
-    * IVF lists instead (`knnJoinSq8`/`knnJoinPq`). */
+    * IVF lists instead (`knnJoin`'s codecs, `knnJoinPq`). */
   final case class BinIndex(coded: DataFrame) {
     def release(): Unit = coded.unpersist(blocking = false)
   }
@@ -1378,19 +1191,7 @@ object Similarity {
   def binLoad(spark: SparkSession, path: String): BinIndex =
     BinIndex(spark.read.parquet(s"$path/bincodes").persist(MEMORY_AND_DISK))
 
-  /** IVF with scalar-quantized inverted lists — the FAISS `IVF,SQ8`
-    * composite: the coarse quantizer trains on floats (centroid math
-    * stays exact), but the ASSIGNED LISTS — the big, long-lived side
-    * of the index — hold int8 codes. `ivfSave`/`ivfLoad` round-trip
-    * this index unchanged (binary parquet column), so the on-disk
-    * footprint drops by the same ~7× as memory. `ivfSearch` runs probe
-    * selection on the float centroids (broadcast, tiny) and candidate
-    * scoring on the int8 codes. */
-  def ivfBuildSq8(corpus: DataFrame, nList: Int = 8,
-                  sampleFit: Boolean = false): IvfIndex =
-    ivfBuildAs(corpus, nList, sampleFit, ListCodec.Sq8)
-
-  /** Two-stage refine search over an `ivfBuildSq8` index — the FAISS
+  /** Two-stage refine search over an SQ8-list index — the FAISS
     * `IVF,SQ8` + `RefineFlat` composite: stage 1 scans the int8 lists
     * for `k × refine` candidates per query (the cheap, 7×-smaller-IO
     * pass), stage 2 (`exactRerank`) re-scores ONLY those candidates
@@ -1415,7 +1216,7 @@ object Similarity {
   def sq8RefineTopK(emb: DataFrame, nQueries: Int, k: Int,
                     nList: Int = 8, nProbe: Int = 2,
                     refine: Int = 4, sampleFit: Boolean = false): DataFrame =
-    selfQuery(emb, nQueries)(ivfBuildSq8(_, nList, sampleFit))(_.release())(
+    selfQuery(emb, nQueries)(ivfBuild(_, nList, sampleFit, ListCodec.Sq8))(_.release())(
       ivfSearchSq8Refine(_, _, _, k, nProbe, refine))
 
   /** Product-quantization top-k — the FAISS `PQ{m}` flat index with
@@ -1503,10 +1304,18 @@ object Similarity {
   /** Seeded per-subspace Lloyd fit over an in-memory (already
     * normalized) point set — split from `pqFitBooks` so the OPQ
     * alternation can refit codebooks against re-rotated points without
-    * re-collecting the sample. */
+    * re-collecting the sample; `coarseFitSample` runs it as one
+    * subspace of full width. Subspaces train in parallel and each
+    * ASSIGNMENT pass runs in point chunks, both on the caller's
+    * fork-join pool (the common pool from a plain thread), so a single
+    * full-width subspace is multi-core too. Bit-reproducible
+    * whatever the parallelism: a point's argmin reads only its own
+    * row (no floating-point sum crosses points) and the center UPDATE
+    * accumulates sequentially in point order. */
   private[graft] def pqFitBooksLocal(pts: Array[Array[Double]], m: Int,
                                      kSub: Int, sub: Int,
                                      maxIter: Int = 20): Array[Array[Array[Double]]] = {
+    val chunk = 1024
     def fitSub(j: Int): Array[Array[Double]] = {
       val xs = pts.map(p => java.util.Arrays.copyOfRange(p, j * sub, (j + 1) * sub))
       val k = math.min(kSub, xs.length)
@@ -1516,13 +1325,12 @@ object Similarity {
       val idx = rnd.shuffle(xs.indices.toVector).take(k)
       for (c <- 0 until k) System.arraycopy(xs(idx(c)), 0, cents(c), 0, sub)
       val assign = new Array[Int](xs.length)
-      var iter = 0
-      var moved = true
-      while (iter < maxIter && moved) {
-        moved = false
-        val cN2 = cents.map(c => c.map(v => v * v).sum)
-        var i = 0
-        while (i < xs.length) {
+      // assign points [lo, lo + chunk) to their nearest center; 1 when one moved
+      def assignChunk(lo: Int, first: Boolean, cN2: Array[Double]): Int = {
+        var moved = 0
+        var i = lo
+        val hi = math.min(xs.length, lo + chunk)
+        while (i < hi) {
           val x = xs(i)
           var best = 0
           var bestD = Double.PositiveInfinity
@@ -1535,13 +1343,23 @@ object Similarity {
             if (d < bestD) { bestD = d; best = c }
             c += 1
           }
-          if (assign(i) != best || iter == 0) { assign(i) = best; moved = true }
+          if (assign(i) != best || first) { assign(i) = best; moved = 1 }
           i += 1
         }
+        moved
+      }
+      var iter = 0
+      var moved = true
+      while (iter < maxIter && moved) {
+        val first = iter == 0
+        val cN2 = cents.map(c => c.map(v => v * v).sum)
+        // sum, not anyMatch: every chunk must run
+        moved = java.util.stream.IntStream.range(0, (xs.length + chunk - 1) / chunk).parallel()
+          .map(ch => assignChunk(ch * chunk, first, cN2)).sum() > 0
         if (moved) {
           val sums = Array.tabulate(k)(_ => new Array[Double](sub))
           val counts = new Array[Int](k)
-          i = 0
+          var i = 0
           while (i < xs.length) {
             val c = assign(i); counts(c) += 1
             var t = 0
@@ -1561,12 +1379,9 @@ object Similarity {
       }
       cents
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence((0 until m).toVector.map(j => Future(fitSub(j)))),
-      Duration.Inf).toArray
+    val books = new Array[Array[Array[Double]]](m)
+    java.util.stream.IntStream.range(0, m).parallel().forEach(j => books(j) = fitSub(j))
+    books
   }
 
   /** One query's ADC lookup table: lut[off_j + c] =
@@ -1827,15 +1642,6 @@ object Similarity {
     rankTop(cand.select(col("qid"), col("vid"), adcScore(index.books).as("score")), k)
   }
 
-  /** `…,RefineFlat`: ADC retrieves `k × refine` candidates (`pqSearch`),
-    * the float `corpus` re-scores only those (`exactRerank`) — the
-    * `ivfSearchSq8Refine` repair economics, touching k·refine rows per
-    * query. The re-rank repairs ADC rank error, not IVF list misses. */
-  def pqSearchRefine(index: PqIndex, queries: DataFrame, corpus: DataFrame,
-                     k: Int, nProbe: Int = 2, refine: Int = 4): DataFrame =
-    exactRerank(pqSearch(index, queries, k * refine, nProbe).select("qid", "vid"),
-      corpus, queries, k)
-
   // ---------------------------------------------------------------- OPQ
 
   /** OPQ rotation fit (Ge et al., CVPR 2013, the non-parametric
@@ -1976,9 +1782,7 @@ object Similarity {
   def ivfPqListStats(spark: SparkSession, path: String): DataFrame =
     listStats(spark.read.parquet(s"$path/codes"), loadCentroids(spark, path).map(_._1).toSeq)
 
-  /** Occupancy skew of a saved IVF,PQ store (`ivfSkew`'s semantics). */
-  def ivfPqSkew(spark: SparkSession, path: String): Double =
-    occupancy(ivfPqListStats(spark, path), loadCentroids(spark, path).length)._1
+
   /** Shared RefineFlat second stage: exact float cosine over the
     * bounded (qid, vid) candidate frame — k·refine rows per query, one
     * equi-join to the float store, one broadcast of the query side. */
@@ -2144,35 +1948,6 @@ object Similarity {
       .orderBy("a", "b")
   }
 
-  /** Rank-within-cell EARLY-DROP: the drop set of the keep policy
-    * ("drop any vector with a ≥-threshold neighbor of smaller id")
-    * without materializing the pair list. The within-cell comparison
-    * runs as a LEFT SEMI join — Spark's semi hash join stops probing a
-    * cell's build rows at the FIRST neighbor satisfying
-    * `a < b && cos ≥ threshold`, so a vector with hundreds of
-    * near-duplicates costs one probe, not hundreds of output rows.
-    * On the 99%-dup sf10 corpus the pair form is output-bound (~57 M
-    * pairs, SCALE.md); the semi form's output is bounded by the cell
-    * rows themselves (nAssign per vector), independent of dup density.
-    *
-    * `shuffle_hash` hint on the build side for the same reason as the
-    * band joins: the cells frame EXPLODES a persisted input, so the
-    * static size estimate undercounts and would broadcast 10⁸ rows
-    * (the round-3 driver-kill); AQE may still pick broadcast from
-    * exact runtime sizes. */
-  private def dropsFromCells(cells: DataFrame, threshold: Double): DataFrame = {
-    val probe = cells.select(col("gid"), col("vid").as("b"),
-      col("e").as("eb"), col("nrm").as("nb"))
-    val build = cells.select(col("gid").as("gidr"), col("vid").as("a"),
-      col("e").as("ea"), col("nrm").as("na"))
-    probe.join(build.hint("shuffle_hash"),
-        col("gid") === col("gidr") && col("a") < col("b") &&
-          dot(col("ea"), col("eb")) / (col("na") * col("nb")) >= threshold,
-        "left_semi")
-      // a vector sits in nAssign cells → up to nAssign semi hits
-      .select(col("b").as("vec_id")).distinct()
-  }
-
   /** Two-level SemDeDup blocking — the path past the flat form's
     * plan-width boundary (k ≳ 10³ unrolled distance columns): the cell
     * key is the PRODUCT of two independent coarse quantizers fit on
@@ -2229,39 +2004,6 @@ object Similarity {
       .select((col("s1.cl") * kPerHalf + col("s2.cl")).as("gid"),
         col("vec_id").as("vid"), col("e"), col("nrm"))
   }
-
-  /** SemDeDup keep-list: drop every vector that has a near-duplicate
-    * with a smaller id — the deterministic "keep one representative
-    * per duplicate group" policy. The drop set comes from the
-    * early-drop semi join (`dropsFromCells`) — identical by definition
-    * to `semDedupPairs(...).select("b").distinct` but never
-    * materializes the pair list, so the keep path's cost is bounded by
-    * cell rows, not dup density. One anti-join against the drop set
-    * closes it out. */
-  def semDedupKeep(emb: DataFrame, nClusters: Int, threshold: Double): DataFrame = {
-    val index = ivfBuild(emb, nClusters)
-    try keepFromDrops(emb, dropsFromCells(flatCells(index, 2), threshold))
-    finally index.release()
-  }
-
-  /** Corpus-adaptive keep-list: same sizing ladder as
-    * `semDedupPairsAuto` (flat cells under `widthCap`, product-key
-    * cells past it), with the early-drop semi join in both regimes. */
-  def semDedupKeepAuto(emb: DataFrame, threshold: Double,
-                       targetClusterRows: Long = 200L,
-                       widthCap: Int = 512,
-                       knownCount: Option[Long] = None): DataFrame = {
-    val k = autoK(emb, targetClusterRows, knownCount)
-    if (k <= widthCap) semDedupKeep(emb, k, threshold)
-    else keepFromDrops(emb, dropsFromCells(
-      pqCells(emb, kPerHalf = math.ceil(math.sqrt(k.toDouble)).toInt, nAssign = 2),
-      threshold))
-  }
-
-  private def keepFromDrops(emb: DataFrame, drops: DataFrame): DataFrame =
-    emb.join(drops, Seq("vec_id"), "left_anti")
-      .select("vec_id")
-      .orderBy("vec_id")
 
   /** Embedding-cosine near-duplicate pairs over a bounded id range
     * (correctness slice; the scale path is `lshNearDupPairs`). The

@@ -916,12 +916,19 @@ object TrainingData {
     * a coefficient vector that broadcasts into a single scoring
     * projection. Rows-only at the driver gate (iteratively-fitted
     * float probabilities have no DuckDB analog); `TrainingDataSpec`
-    * pins held-out rule agreement and determinism. */
+    * pins held-out rule agreement and determinism.
+    *
+    * The training frame is fitted in doc_id order from ONE partition:
+    * MLlib merges per-partition gradient sums in task-completion order,
+    * so a multi-partition fit differs in the last ulp from run to run
+    * and with the shuffle width. A labeled slice is small (the
+    * catalogue's is 250 docs), so one task costs nothing. */
   def qualityClassifier(docs: DataFrame, labels: DataFrame): DataFrame = {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
     val f = qcFeatures(docs).withColumn("features", array_to_vector(col("f")))
-    val train = f.join(labels, Seq("doc_id")).select(col("features"), col("label"))
+    val train = f.join(labels, Seq("doc_id")).orderBy("doc_id").coalesce(1)
+      .select(col("features"), col("label"))
     val model = new LogisticRegression()
       .setMaxIter(100).setRegParam(0.01).setStandardization(true)
       .fit(train)

@@ -121,11 +121,14 @@ object IngestVectors {
     * `searchBatch` — the two dials are the two sides of the same
     * tradeoff. `sampleFit` routes the retrain through the bounded
     * driver coarse fit (`ivfBuild(sampleFit = true)`) so maintenance
-    * cost does not itself scale as store×nList. */
+    * cost does not itself scale as store×nList. `dstPath` must differ
+    * from `indexPath`: the rebuild reads the store it would overwrite. */
   def maintainIndex(spark: org.apache.spark.sql.SparkSession,
                     indexPath: String, maxSkew: Double,
                     dstPath: String, targetClusterRows: Long = 0L,
                     sampleFit: Boolean = false): Boolean = {
+    require(indexPath != dstPath,
+      "rebalance writes a new generation; src and dst must differ")
     val idx = Similarity.ivfLoad(spark, indexPath)
     // the growth gate's row count reads the lists the skew cached
     lazy val total = idx.assigned.count()

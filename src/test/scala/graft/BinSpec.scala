@@ -90,14 +90,16 @@ class BinSpec extends SparkSpec {
     val d = emb(rows: _*)
     // exhaustive dial: every list probed + corpus-covering pool ⇒ the
     // float refine ranks everything — bit-equal to the float brute join
-    val fullRows = Similarity.knnJoinBin(d, 5, refine = 41, scanFrac = Some(1.0))
+    val fullRows = Similarity.knnJoin(d, 5, scanFrac = Some(1.0),
+        codec = Similarity.ListCodec.Bin, refine = 41)
       .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
     val bruteRows = Similarity.knnJoin(d, 5, targetClusterRows = 25, scanFrac = Some(1.0))
       .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
     assert(fullRows == bruteRows)
     // probed mode: Hamming pool + refine holds recall on the clusters
     val gold = bruteRows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
-    val byQ = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
+    val byQ = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25,
+        codec = Similarity.ListCodec.Bin)
       .use(_.collect().map(r => (r.getLong(0), r.getLong(2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recall = gold.map { case (q, g) =>
@@ -105,9 +107,11 @@ class BinSpec extends SparkSpec {
     }.sum / gold.size
     assert(recall >= 0.85, s"binary refined recall@5 $recall < 0.85")
     // deterministic run-to-run
-    val a2 = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
+    val a2 = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25,
+        codec = Similarity.ListCodec.Bin)
       .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
-    val a1 = Similarity.knnJoinBin(d, 5, nProbe = 2, targetClusterRows = 25)
+    val a1 = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25,
+        codec = Similarity.ListCodec.Bin)
       .use(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
     assert(a1 == a2)
   }
@@ -115,7 +119,8 @@ class BinSpec extends SparkSpec {
   test("binary IVF store: save/load/append round-trip, searchBatch dispatch, rebalance rejected") {
     val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("binivf").toString
-    val idx = Similarity.ivfBuildBin(all.where($"vec_id" >= 20 && $"vec_id" < 400), 4)
+    val idx = Similarity.ivfBuild(all.where($"vec_id" >= 20 && $"vec_id" < 400), 4,
+      codec = Similarity.ListCodec.Bin)
     val qs = all.where($"vec_id" < 5)
     try {
       val before = Similarity.ivfSearch(idx, qs, 5, nProbe = 4)

@@ -120,7 +120,8 @@ class CompactionSpec extends SparkSpec {
   test("ivfCompact preserves SQ8 stores (codes survive the rewrite)") {
     val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = tmp("cmp_idx8")
-    val base = Similarity.ivfBuildSq8(all.where($"vec_id" < 100), 4)
+    val base = Similarity.ivfBuild(all.where($"vec_id" < 100), 4,
+      codec = Similarity.ListCodec.Sq8)
     Similarity.ivfSave(base, dir)
     base.release()
     val batch = all.where($"vec_id" >= 100 && $"vec_id" < 110)

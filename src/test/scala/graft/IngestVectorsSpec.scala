@@ -169,7 +169,7 @@ class IngestVectorsSpec extends SparkSpec {
     Similarity.ivfSave(base, src)
     base.release()
     // the rebuild works from a snapshot of the old path...
-    Similarity.ivfRebalanceSave(spark, src, dst)
+    assert(IngestVectors.maintainIndex(spark, src, maxSkew = 0.0, dst))
     // ...and an at-least-once batch lands on the OLD path meanwhile
     val late = all.where($"vec_id" >= 200 && $"vec_id" < 210)
       .select(($"vec_id" + 20000L).as("vec_id"), $"embedding")
@@ -191,10 +191,11 @@ class IngestVectorsSpec extends SparkSpec {
     val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = tmp("ingv_gap8")
     val src = s"$dir/g0"; val dst = s"$dir/g1"
-    val base = Similarity.ivfBuildSq8(all.where($"vec_id" >= 20 && $"vec_id" < 200), 4)
+    val base = Similarity.ivfBuild(all.where($"vec_id" >= 20 && $"vec_id" < 200), 4,
+      codec = Similarity.ListCodec.Sq8)
     Similarity.ivfSave(base, src)
     base.release()
-    Similarity.ivfRebalanceSave(spark, src, dst)
+    assert(IngestVectors.maintainIndex(spark, src, maxSkew = 0.0, dst))
     val late = all.where($"vec_id" >= 200 && $"vec_id" < 206)
       .select(($"vec_id" + 20000L).as("vec_id"), $"embedding")
     assert(IngestVectors.processBatch(late, src) == 6)
@@ -328,7 +329,8 @@ class IngestVectorsSpec extends SparkSpec {
     val bi = Similarity.binBuild(all.where($"vec_id" < 100))
     try Similarity.binSave(bi, flat) finally bi.release()
     val ivf = tmp("bin_dim_ivf")
-    val iv = Similarity.ivfBuildBin(all.where($"vec_id" < 100), 4)
+    val iv = Similarity.ivfBuild(all.where($"vec_id" < 100), 4,
+      codec = Similarity.ListCodec.Bin)
     try Similarity.ivfSave(iv, ivf) finally iv.release()
 
     val good = all.where($"vec_id" === 0).select($"vec_id", $"embedding")
@@ -357,9 +359,11 @@ class IngestVectorsSpec extends SparkSpec {
     val layouts: Seq[(String, String => Unit, String => Long)] = Seq(
       ("IVF float", saved(Similarity.ivfBuild(corpus, 4))(Similarity.ivfSave)(_.release()),
         ivfCompact),
-      ("IVF SQ8", saved(Similarity.ivfBuildSq8(corpus, 4))(Similarity.ivfSave)(_.release()),
+      ("IVF SQ8", saved(Similarity.ivfBuild(corpus, 4, codec = Similarity.ListCodec.Sq8))(
+        Similarity.ivfSave)(_.release()),
         ivfCompact),
-      ("IVF 1-bit", saved(Similarity.ivfBuildBin(corpus, 4))(Similarity.ivfSave)(_.release()),
+      ("IVF 1-bit", saved(Similarity.ivfBuild(corpus, 4, codec = Similarity.ListCodec.Bin))(
+        Similarity.ivfSave)(_.release()),
         ivfCompact),
       ("IVF,PQ", saved(Similarity.pqBuild(corpus, nList = 4))(Similarity.pqSave)(_.release()),
         codesCompact),

@@ -1,12 +1,14 @@
 package graft
 
 import graft.operators.Similarity
+import graft.streaming.IngestVectors
 
 /** Retrain-on-drift maintenance for the IVF store family: a drifted
   * append workload piles vectors into a few lists (frozen centroids —
   * the price of O(batch) appends); `ivfSkew` detects it, `ivfRebalance`
-  * refits and reassigns, and the exhaustive dial proves results are
-  * search-invariant — rebalancing changes COST SHAPE, never answers. */
+  * (on disk, `IngestVectors.maintainIndex`) refits and reassigns, and
+  * the exhaustive dial proves results are search-invariant —
+  * rebalancing changes COST SHAPE, never answers. */
 class IvfRebalanceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,13 +37,21 @@ class IvfRebalanceSpec extends SparkSpec {
   private val queries = emb(region(regA, 1000 until 1003, 4) ++
     region(regB, 1003 until 1006, 5) ++ region(regC, 1006 until 1009, 6))
 
+  /** `built` saved, `drifted` appended on disk under its frozen
+    * centroids, reloaded; `built` is released. */
+  private def appended(built: Similarity.IvfIndex, dir: String): Similarity.IvfIndex = {
+    try Similarity.ivfSave(built, dir) finally built.release()
+    Similarity.appendSave(spark, dir, drifted)
+    Similarity.ivfLoad(spark, dir)
+  }
+  private def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+
   private def searchAll(idx: Similarity.IvfIndex) =
     Similarity.ivfSearch(idx, queries, k = 5, nProbe = idx.nList)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
   test("drifted appends skew the lists; rebalance restores balance without changing exhaustive results") {
-    val built = Similarity.ivfBuild(initial, nList = 4)
-    val idx = Similarity.ivfAppend(built, drifted)
+    val idx = appended(Similarity.ivfBuild(initial, nList = 4), tmp("ivf_drift"))
     // all 120 drifted vectors land in ONE frozen list (argmin |c|² —
     // see fixture comment): max ≥ 120 of 200 total, mean 50 → skew ≥ 2.4
     val skewDrift = Similarity.ivfSkew(idx)
@@ -67,8 +77,8 @@ class IvfRebalanceSpec extends SparkSpec {
   }
 
   test("SQ8 index rebalance: codes survive bit-for-bit (re-encode of a reconstruction is exact)") {
-    val built = Similarity.ivfBuildSq8(initial, nList = 4)
-    val idx = Similarity.ivfAppend(built, drifted)
+    val idx = appended(Similarity.ivfBuild(initial, nList = 4,
+      codec = Similarity.ListCodec.Sq8), tmp("ivf_drift8"))
     val codesBefore = idx.assigned.select("vid", "qc").collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toMap
     val exhaustBefore = Similarity.ivfSearch(idx, queries, k = 5, nProbe = 4)
@@ -85,17 +95,15 @@ class IvfRebalanceSpec extends SparkSpec {
   }
 
   test("on-disk rebalance writes a new generation; reloaded store is balanced and search-equal") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_reb").toString
-    val built = Similarity.ivfBuild(initial, nList = 4)
-    val idx = Similarity.ivfAppend(built, drifted)
-    Similarity.ivfSave(idx, s"$dir/g0")
+    val dir = tmp("ivf_reb")
+    val idx = appended(Similarity.ivfBuild(initial, nList = 4), s"$dir/g0")
     val before = searchAll(idx)
     idx.release()
 
     intercept[IllegalArgumentException] {
-      Similarity.ivfRebalanceSave(spark, s"$dir/g0", s"$dir/g0")
+      IngestVectors.maintainIndex(spark, s"$dir/g0", 0.0, s"$dir/g0")
     }
-    Similarity.ivfRebalanceSave(spark, s"$dir/g0", s"$dir/g1")
+    assert(IngestVectors.maintainIndex(spark, s"$dir/g0", 0.0, s"$dir/g1"))
     val loaded = Similarity.ivfLoad(spark, s"$dir/g1")
     assert(Similarity.ivfSkew(loaded) < 2.0)
     assert(searchAll(loaded) == before)

@@ -160,8 +160,13 @@ class OpqSpec extends SparkSpec {
     val src = s"$dir/g0"; val dst = s"$dir/g1"
     val built = Similarity.pqBuild(a, m = 4, kSub = 16, nList = 4)
     try Similarity.pqSave(built, src) finally built.release()
+    // occupancy skew: max list size over mean list size
+    def skew(path: String) = {
+      val n = Similarity.ivfPqListStats(spark, path).collect().map(_.getLong(1))
+      n.max / (n.sum.toDouble / n.length)
+    }
     assert(Similarity.ivfPqListStats(spark, src).collect().length == 4)
-    val skew0 = Similarity.ivfPqSkew(spark, src)
+    val skew0 = skew(src)
     info(s"built skew = $skew0")
 
     // balanced + in-distribution: no-op under both gates
@@ -169,12 +174,12 @@ class OpqSpec extends SparkSpec {
       maxSkew = 3.0, maxRatio = 50.0, dstPath = dst))
 
     Similarity.appendSave(spark, src, burst)
-    val skewDrift = Similarity.ivfPqSkew(spark, src)
+    val skewDrift = skew(src)
     info(s"skew after burst = $skewDrift")
     assert(skewDrift >= 1.6, s"burst should skew: $skewDrift") // measured 1.78
     assert(Similarity.pqMaintainIfDrifted(spark, src, burst, a.union(burst),
       maxSkew = 1.5, maxRatio = 50.0, dstPath = dst))
-    val skewAfter = Similarity.ivfPqSkew(spark, dst)
+    val skewAfter = skew(dst)
     info(s"skew after refit = $skewAfter")
     assert(skewAfter < skewDrift, s"refit should balance: $skewDrift -> $skewAfter")
     intercept[IllegalArgumentException] {

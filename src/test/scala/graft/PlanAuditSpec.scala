@@ -125,28 +125,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(scans(p).isEmpty, "shingle pipeline leaked a second corpus scan")
   }
 
-  test("semDedup keep path: early-drop is a semi join, never a static broadcast") {
-    // Same explode-blinded-estimate trap as the band joins: the cells
-    // frame explodes the persisted assignment, so a static BROADCAST of
-    // the build side would collect nAssign×N rows through the driver.
-    // Also pin the join TYPE — LeftSemi is what makes it an early drop
-    // (the probe stops at the first satisfying neighbor); a regression
-    // to the pair-join-then-distinct shape would show up as Inner here.
-    import graft.operators.Similarity
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val df = Similarity.semDedupKeep(emb, 8, 0.4)
-    val p = df.queryExecution.sparkPlan
-    val semis = p.collectWithSubqueries {
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-        if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
-    }
-    assert(semis.nonEmpty, "early-drop LeftSemi shuffled-hash join missing from the keep plan")
-    val broadcasts = p.collectWithSubqueries {
-      case b: BroadcastHashJoinExec if b.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => b
-    }
-    assert(broadcasts.isEmpty, "early-drop semi join statically broadcasts the exploded cell side")
-  }
-
   test("exact-substr cut joins never plan as static broadcasts") {
     // Both the duplicated-gram join-back and the coverage left join
     // scale with corpus dup density, and both sit behind window/agg/
@@ -394,8 +372,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val shapes = Seq(
-      "q140_sq8" -> Similarity.knnJoinSq8(emb, 5),
-      "q154_opq" -> Similarity.knnJoinOpq(emb, 5, m = 8))
+      "q140_sq8" -> Similarity.knnJoin(emb, 5, codec = Similarity.ListCodec.Sq8),
+      "q154_opq" -> Similarity.knnJoinPq(emb, 5, m = 8, opq = true))
     for ((name, scoped) <- shapes) scoped.use { res =>
       val p = res.queryExecution.sparkPlan
       assert(p.collectWithSubqueries {

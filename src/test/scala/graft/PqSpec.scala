@@ -64,9 +64,19 @@ class PqSpec extends SparkSpec {
     assert(recall >= 0.5, s"recall $recall") // list misses stack on ADC error
     val index = Similarity.pqBuild(testEmb.where(col("vec_id") >= 20), nList = 8)
     try {
-      val re = Similarity.pqSearchRefine(index,
-        testEmb.where(col("vec_id") < 20), testEmb, 10, nProbe = 3)
-      val reRecall = (gold & pairs(re)).size.toDouble / gold.size
+      // RefineFlat: the ADC top 40 per query re-ranked by exact cosine
+      val cand = Similarity.pqSearch(index, testEmb.where(col("vec_id") < 20), 40, nProbe = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(2)))
+      val vec = testEmb.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+      def dot(a: Array[Double], b: Array[Double]) =
+        a.indices.foldLeft(0.0)((s, i) => s + a(i) * b(i))
+      def cos(q: Long, v: Long) =
+        dot(vec(q), vec(v)) / (math.sqrt(dot(vec(q), vec(q))) * math.sqrt(dot(vec(v), vec(v))))
+      val re = cand.groupBy(_._1).toSeq.flatMap { case (q, vs) =>
+        vs.map(_._2).sortBy(v => (-cos(q, v), v)).take(10).map(q -> _)
+      }.toSet
+      val reRecall = (gold & re).size.toDouble / gold.size
       info(s"ivfpq+refine recall@10 = $reRecall")
       // refine repairs ADC rank error but cannot recover list misses:
       // floor sits between the ADC floor and pq+refine's 0.9

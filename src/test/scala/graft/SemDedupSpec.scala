@@ -26,15 +26,6 @@ class SemDedupSpec extends SparkSpec {
       s"recall $recall < 0.8 (${got.size} found, ${exact.size} exact)")
   }
 
-  test("semDedupKeep: keeps exactly the ids that are no pair's larger end") {
-    val drops = Similarity.semDedupPairs(emb, 8, 0.4)
-      .collect().map(_.getLong(1)).toSet
-    val kept = Similarity.semDedupKeep(emb, 8, 0.4)
-      .collect().map(_.getLong(0)).toSet
-    val all = emb.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(kept == all.diff(drops))
-  }
-
   test("semDedupPairsPQ: product-key blocking keeps precision 1.0, recall >= 0.8") {
     val exact = Similarity.cosineNearDupPairs(emb, Long.MaxValue, 0.4)
       .use(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -47,26 +38,6 @@ class SemDedupSpec extends SparkSpec {
     val recall = got.size.toDouble / exact.size
     assert(recall >= 0.8,
       s"recall $recall < 0.8 (${got.size} found, ${exact.size} exact)")
-  }
-
-  test("semDedupKeepAuto (PQ regime): drop set identical to the pair-list form") {
-    // widthCap=1 forces the product-key path; autoK(500, 200) = 8 →
-    // kPerHalf = ⌈√8⌉ = 3, the same sizing as the PQ pair spec above,
-    // so the early-drop semi join must reproduce ITS drop set exactly
-    val drops = Similarity.semDedupPairsPQ(emb, 0.4, kPerHalf = 3)
-      .collect().map(_.getLong(1)).toSet
-    val kept = Similarity.semDedupKeepAuto(emb, 0.4, widthCap = 1)
-      .collect().map(_.getLong(0)).toSet
-    val all = emb.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(kept == all.diff(drops))
-  }
-
-  test("semDedupKeepAuto accepts a known corpus count (no sizing scan)") {
-    val a = Similarity.semDedupKeepAuto(emb, 0.4)
-      .collect().map(_.getLong(0)).toSet
-    val b = Similarity.semDedupKeepAuto(emb, 0.4, knownCount = Some(emb.count()))
-      .collect().map(_.getLong(0)).toSet
-    assert(a == b && a.nonEmpty)
   }
 
   test("semDedupPairs leaves no new persisted RDDs behind") {

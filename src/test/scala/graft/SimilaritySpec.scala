@@ -136,11 +136,14 @@ class SimilaritySpec extends SparkSpec {
   test("ivfAppend: twins land in their duplicate's list; disk append survives reload") {
     val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = all.where($"vec_id" >= 20 && $"vec_id" < 400)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_append").toString
     val idx = Similarity.ivfBuild(corpus, 4)
+    try Similarity.ivfSave(idx, dir) finally idx.release()
     // append batch = exact duplicates of corpus vectors, re-keyed
     val dup = all.where($"vec_id" >= 20 && $"vec_id" < 25)
       .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
-    val idx2 = Similarity.ivfAppend(idx, dup)
+    Similarity.appendSave(spark, dir, dup)
+    val idx2 = Similarity.ivfLoad(spark, dir)
     try {
       // quantizer-metric assignment: each twin joins its duplicate's list
       val lists = idx2.assigned.select("vid", "list_id").collect()
@@ -151,15 +154,15 @@ class SimilaritySpec extends SparkSpec {
       val hits = Similarity.ivfSearch(idx2, all.where($"vec_id" === 20), 3, 4)
         .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
       assert(hits.head == ((1, 20L)) && hits.map(_._2).contains(10020L), s"$hits")
-      // on-disk append: save, append a second batch, reload, search
-      val dir = java.nio.file.Files.createTempDirectory("ivf_append").toString
-      Similarity.ivfSave(idx2, dir)
+      // a second on-disk append: append, reload, search (counted first:
+      // the write re-caches idx2, which reads the same path)
+      val n2 = idx2.assigned.count()
       val batch2 = all.where($"vec_id" >= 25 && $"vec_id" < 30)
         .select(($"vec_id" + 20000L).as("vec_id"), $"embedding")
       Similarity.appendSave(spark, dir, batch2)
       val loaded = Similarity.ivfLoad(spark, dir)
       try {
-        assert(loaded.assigned.count() == idx2.assigned.count() + 5)
+        assert(loaded.assigned.count() == n2 + 5)
         val twin = Similarity.ivfSearch(loaded, all.where($"vec_id" === 25), 3, 4)
           .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
         assert(twin.head == ((1, 25L)) && twin.map(_._2).contains(20025L), s"$twin")
@@ -261,8 +264,8 @@ class SimilaritySpec extends SparkSpec {
     val fullRows = Similarity.knnJoin(d, 5, targetClusterRows = 25,
       scanFrac = Some(1.0))
       .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val sq8Rows = Similarity.knnJoinSq8(d, 5, targetClusterRows = 25,
-      refine = 4, scanFrac = Some(1.0))
+    val sq8Rows = Similarity.knnJoin(d, 5, targetClusterRows = 25,
+      scanFrac = Some(1.0), codec = Similarity.ListCodec.Sq8, refine = 4)
       .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     sq8Rows.foreach { case (q, _, v) => assert(q != v, s"self match $q") }
     val fullByQ = fullRows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
@@ -273,9 +276,11 @@ class SimilaritySpec extends SparkSpec {
     }.sum / fullByQ.size
     assert(recall >= 0.95, s"SQ8 refined recall@5 $recall < 0.95 vs float path")
     // probed mode stays deterministic
-    val r1 = Similarity.knnJoinSq8(d, 5, nProbe = 2, targetClusterRows = 25)
+    val r1 = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25,
+        codec = Similarity.ListCodec.Sq8)
       .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val r2 = Similarity.knnJoinSq8(d, 5, nProbe = 2, targetClusterRows = 25)
+    val r2 = Similarity.knnJoin(d, 5, nProbe = 2, targetClusterRows = 25,
+        codec = Similarity.ListCodec.Sq8)
       .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(r1.toSeq == r2.toSeq)
   }
@@ -332,8 +337,8 @@ class SimilaritySpec extends SparkSpec {
       scanFrac = Some(1.0))
       .use(_.collect()).map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val opqRows = Similarity.knnJoinOpq(d, 5, targetClusterRows = 25, m = 4,
-      refine = 8, iters = 4, scanFrac = Some(1.0))
+    val opqRows = Similarity.knnJoinPq(d, 5, targetClusterRows = 25, m = 4,
+      refine = 8, scanFrac = Some(1.0), opq = true, iters = 4)
       .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     opqRows.foreach { case (q, _, v) => assert(q != v, s"self match $q") }
     val byQ = opqRows.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
@@ -343,11 +348,11 @@ class SimilaritySpec extends SparkSpec {
     }.sum / fullByQ.size
     info(s"OPQ refined recall@5 = $recall")
     assert(recall >= 0.85, s"OPQ refined recall@5 $recall < 0.85 vs float path")
-    val r1 = Similarity.knnJoinOpq(d, 5, nProbe = 2, targetClusterRows = 25,
-      m = 4, iters = 4)
+    val r1 = Similarity.knnJoinPq(d, 5, nProbe = 2, targetClusterRows = 25,
+      m = 4, opq = true, iters = 4)
       .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val r2 = Similarity.knnJoinOpq(d, 5, nProbe = 2, targetClusterRows = 25,
-      m = 4, iters = 4)
+    val r2 = Similarity.knnJoinPq(d, 5, nProbe = 2, targetClusterRows = 25,
+      m = 4, opq = true, iters = 4)
       .use(_.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(r1.toSeq == r2.toSeq)
   }
@@ -373,20 +378,24 @@ class SimilaritySpec extends SparkSpec {
         assert(after == before)
       } finally loaded.release()
     } finally built.release()
-    // SQ8 store (same ivfSave/ivfLoad envelope, qc lists)
-    val sDir = java.nio.file.Files.createTempDirectory("knn_ivfsq8").toString
-    val sq8Built = Similarity.ivfBuildSq8(d, nList = 4)
-    try {
-      val before = Similarity.knnJoinSq8Indexed(d, sq8Built, 5, nProbe = 2)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-      Similarity.ivfSave(sq8Built, sDir)
-      val loaded = Similarity.ivfLoad(spark, sDir)
+    // SQ8 and 1-bit stores (same ivfSave/ivfLoad envelope, qc / bc
+    // lists): knnJoinIndexed reads the codec off the index
+    for (codec <- Seq(Similarity.ListCodec.Sq8, Similarity.ListCodec.Bin)) {
+      val cDir = java.nio.file.Files.createTempDirectory("knn_ivf" + codec).toString
+      val cBuilt = Similarity.ivfBuild(d, nList = 4, codec = codec)
       try {
-        val after = Similarity.knnJoinSq8Indexed(d, loaded, 5, nProbe = 2)
+        val before = Similarity.knnJoinIndexed(d, cBuilt, 5, nProbe = 2)
           .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-        assert(after == before)
-      } finally loaded.release()
-    } finally sq8Built.release()
+        Similarity.ivfSave(cBuilt, cDir)
+        val loaded = Similarity.ivfLoad(spark, cDir)
+        try {
+          assert(Similarity.ListCodec.of(loaded) == codec)
+          val after = Similarity.knnJoinIndexed(d, loaded, 5, nProbe = 2)
+            .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+          assert(after == before, s"$codec")
+        } finally loaded.release()
+      } finally cBuilt.release()
+    }
     // PQ store
     val pDir = java.nio.file.Files.createTempDirectory("knn_ivfpq").toString
     val pqBuilt = Similarity.pqBuild(d, m = 4, nList = 4)
@@ -526,6 +535,30 @@ class SimilaritySpec extends SparkSpec {
       // unit vectors total squared error staying below 1.0 means the
       // reconstruction points the right way (random would be ~2.0)
       assert(err < 1.0, s"vec ${r.getLong(0)}: reconstruction error $err")
+    }
+  }
+
+  test("Lloyd kernel: centroids are bit-equal on one thread and on the common pool") {
+    // the coarse fit (one full-width subspace) and the m-subspace PQ fit
+    // share pqFitBooksLocal; its assignment chunks and subspaces run on
+    // the caller's fork-join pool, so a one-thread pool runs everything
+    // in sequence — the result must not depend on that
+    val rng = new scala.util.Random(41)
+    val pts = Array.fill(5000)(Array.fill(16)(rng.nextGaussian()))
+    def fit(m: Int, k: Int) = Similarity.pqFitBooksLocal(pts, m, k, 16 / m)
+    def onOneThread(m: Int, k: Int) = {
+      val pool = new java.util.concurrent.ForkJoinPool(1)
+      try pool.submit(new java.util.concurrent.Callable[Array[Array[Array[Double]]]] {
+        def call() = fit(m, k)
+      }).get()
+      finally pool.shutdown()
+    }
+    def bits(books: Array[Array[Array[Double]]]) =
+      books.map(_.map(_.map(java.lang.Double.doubleToLongBits).toSeq).toSeq).toSeq
+    for ((m, k) <- Seq((1, 32), (4, 16))) {
+      val common = fit(m, k)
+      assert(common.length == m && common.forall(_.length == k))
+      assert(bits(onOneThread(m, k)) == bits(common), s"m=$m k=$k")
     }
   }
 }

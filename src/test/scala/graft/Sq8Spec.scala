@@ -71,7 +71,8 @@ class Sq8Spec extends SparkSpec {
     val all = (Seq((0L, q0)) ++ (10L to 80L).map(i => (i, rv())) :+ ((90L, q0)))
       .toDF("vec_id", "embedding")
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding")
-    val index = Similarity.ivfBuildSq8(all.where($"vec_id" >= 1), nList = 4)
+    val index = Similarity.ivfBuild(all.where($"vec_id" >= 1), nList = 4,
+      codec = Similarity.ListCodec.Sq8)
     try {
       val hits = Similarity.ivfSearch(index, all.where($"vec_id" < 1), 3, nProbe = 2)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
@@ -92,7 +93,7 @@ class Sq8Spec extends SparkSpec {
     val queries = testEmb.where($"vec_id" < 20)
     val corpus = testEmb.where($"vec_id" >= 20)
     val fl = Similarity.ivfBuild(corpus, nList = 8)
-    val sq = Similarity.ivfBuildSq8(corpus, nList = 8)
+    val sq = Similarity.ivfBuild(corpus, nList = 8, codec = Similarity.ListCodec.Sq8)
     try {
       val gold = Similarity.ivfSearch(fl, queries, 10, nProbe = 3).collect()
         .map(r => (r.getLong(0), r.getLong(2))).toSet
@@ -106,10 +107,13 @@ class Sq8Spec extends SparkSpec {
 
   test("ivfAppend on an SQ8 index re-encodes the batch to int8 codes") {
     val corpus = testEmb.where($"vec_id" >= 20 && $"vec_id" < 400)
-    val idx = Similarity.ivfBuildSq8(corpus, nList = 4)
+    val dir = java.nio.file.Files.createTempDirectory("sq8_append").toString
+    val idx = Similarity.ivfBuild(corpus, nList = 4, codec = Similarity.ListCodec.Sq8)
+    try Similarity.ivfSave(idx, dir) finally idx.release()
     val dup = testEmb.where($"vec_id" >= 20 && $"vec_id" < 23)
       .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
-    val idx2 = Similarity.ivfAppend(idx, dup)
+    Similarity.appendSave(spark, dir, dup)
+    val idx2 = Similarity.ivfLoad(spark, dir)
     try {
       assert(idx2.assigned.columns.contains("qc"), "append must keep the code column")
       // identical vector -> identical code -> cos exactly 1.0 with its twin
@@ -123,7 +127,7 @@ class Sq8Spec extends SparkSpec {
     val queries = testEmb.where($"vec_id" < 20)
     val corpus = testEmb.where($"vec_id" >= 20)
     val fl = Similarity.ivfBuild(corpus, nList = 8)
-    val sq = Similarity.ivfBuildSq8(corpus, nList = 8)
+    val sq = Similarity.ivfBuild(corpus, nList = 8, codec = Similarity.ListCodec.Sq8)
     try {
       // same probe lists (float centroids in both indexes), so refine's
       // float re-rank of the sq8 top-40 must reproduce the float IVF

@@ -374,6 +374,39 @@ class TrainingDataSpec extends SparkSpec {
     assert(again == out)
   }
 
+  test("qualityClassifier: p_good is bit-equal under any shuffle width") {
+    import org.apache.spark.sql.functions.{col, when}
+    // overlapping classes (some labels flipped), so the fit stops at
+    // finite weights; every doc labeled spreads training over partitions
+    val rng = new scala.util.Random(5)
+    def draw(vocab: Seq[String], n: Int) = Seq.fill(n)(vocab(rng.nextInt(vocab.size)))
+    val good = Seq("the", "of", "and", "quick", "brown", "fox", "river", "stone", "w1", "w2")
+    val rows = (0L until 240L).map { i =>
+      val words = if (i % 3 != 0) draw(good, 20 + rng.nextInt(40))
+        else draw(Seq("spam", "buy", "now"), 5 + rng.nextInt(20))
+      (i, words.mkString(" "))
+    }
+    val d = docs(rows: _*)
+    val labels = d.select(col("doc_id"),
+      when((col("doc_id") % 3 =!= 0) =!= (col("doc_id") % 11 === 0), 1.0).otherwise(0.0)
+        .as("label"))
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    def fit(w: Int) = {
+      spark.conf.set("spark.sql.shuffle.partitions", w.toString)
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      try TrainingData.qualityClassifier(d, labels).collect()
+        .map(r => r.getLong(0) -> java.lang.Double.doubleToLongBits(r.getDouble(1))).toMap
+      finally {
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      }
+    }
+    val (one, eight) = (fit(1), fit(8))
+    assert(one.size == 240 && eight.keySet == one.keySet)
+    val differ = one.keys.count(id => one(id) != eight(id))
+    assert(differ == 0, s"$differ of 240 p_good values differ between widths 1 and 8")
+  }
+
   test("scoreAuc: hand-computed Mann-Whitney AUC with ties, R-precision") {
     // pos: (1, 3.0), (2, 2.0); neg: (3, 2.0), (4, 1.0)
     // pairs: 3>1 =1, 3>2 =1, 2>1 =1, 2=2 =0.5 → AUC = 3.5/4 = 0.875

@@ -1,13 +1,19 @@
 #!/usr/bin/env python3
-"""List the public members of `src/main` objects that nothing else names.
+"""List the public members of `src/main` objects that no entry point reaches.
 
 A member is a top-level `def`, `val`, `var` or `lazy val` of an `object`
 (package objects and nested objects included) with no `private` or
-`protected` modifier. It is unreached when its name occurs, as a whole
-identifier and with comments stripped, in no other `src/main` file and
-in no file under `perfbench/src`. Uses of a member inside its own file
-do not count, so a public helper called only next to its definition is
-listed too.
+`protected` modifier. Reach is transitive over names. The roots are the
+`SparkEntry` catalogue (the public members of `SparkEntry.scala`), every
+`main`, each streaming module's `start` and `processBatch`, and every name
+used under `perfbench/src`. A reached definition reaches every definition,
+in any `src/main` file, whose name occurs as a whole identifier in its
+body (comments stripped). A definition is an object member of any
+visibility, or a class, trait or nested object, whose body is all of it;
+a top-level object is only the container of its members. A member is
+unreached when no chain of such names leads to it from a root, so a
+member called only from specs, or only from other unreached members, is
+listed.
 
 Prints one `<file>:<line> <name>` per unreached member, sorted by file
 and line, then a total; two runs over the same tree print the same
@@ -79,14 +85,28 @@ def strip(text):
     return "".join(code), "".join(bare)
 
 
-def members(code, bare):
-    """(line, name) of each public top-level member of an object body."""
-    out, kinds, depth, pending = [], {}, 0, None
+def definitions(code, bare):
+    """Each definition of a file as [name, line, listed, body]: `listed`
+    marks a public object member, `body` is its code text (with nested
+    definitions of a member or class folded in; an object member's own
+    members are definitions of their own)."""
+    out, kinds, depth, pending, active = [], {}, 0, None, {}
     for lineno, (cl, bl) in enumerate(zip(code.split("\n"), bare.split("\n")), 1):
         m = MEMBER.match(cl)
-        if m and kinds.get(depth) == "object" and not re.search(r"\b(?:private|protected)\b", m.group(1)):
-            out.append((lineno, m.group(2)))
         s = SCOPE.match(bl)
+        if m and kinds.get(depth) == "object":
+            public = not re.search(r"\b(?:private|protected)\b", m.group(1))
+            active[depth] = [m.group(2), lineno, public, []]
+            out.append(active[depth])
+        elif s:
+            name = re.search(rf"(?:object|class|trait)\s+({IDENT})", bl)
+            top_object = depth == 0 and "object" in s.group(1)
+            active[depth] = None if top_object or not name else [name.group(1), lineno, False, []]
+            if active[depth]:
+                out.append(active[depth])
+        owner = next((active[d] for d in range(depth, -1, -1) if active.get(d)), None)
+        if owner:
+            owner[3].append(cl)
         if s:
             pending = ("object" if "object" in s.group(1) else "class", depth)
         elif m:
@@ -97,22 +117,46 @@ def members(code, bare):
                 kinds[depth] = pending[0] if pending and pending[1] == depth - 1 else "other"
                 pending = None
             elif c == "}":
+                for d in [d for d in active if d >= depth]:
+                    del active[d]
                 depth -= 1
     return out
+
+
+def identifiers(text):
+    return set(re.findall(IDENT, text))
 
 
 def main():
     root = Path(sys.argv[1] if len(sys.argv) > 1 else Path(__file__).resolve().parent.parent)
     mains = sorted((root / "src" / "main").rglob("*.scala"))
-    others = sorted((root / "perfbench" / "src").rglob("*.scala"))
-    stripped = {p: strip(p.read_text(encoding="utf-8")) for p in mains + others}
-    words = {p: set(re.findall(r"[A-Za-z_][A-Za-z0-9_$]*", code)) for p, (code, _) in stripped.items()}
-    found = []
+    defs = []  # (file, name, line, listed, identifiers of the body)
     for p in mains:
-        for line, name in members(*stripped[p]):
-            if not any(name in words[q] for q in words if q != p):
-                found.append((str(p.relative_to(root)), line, name))
-    for f, line, name in sorted(found):
+        rel = str(p.relative_to(root))
+        for name, line, listed, body in definitions(*strip(p.read_text(encoding="utf-8"))):
+            defs.append((rel, name, line, listed, identifiers("\n".join(body))))
+    by_name = {}
+    for i, d in enumerate(defs):
+        by_name.setdefault(d[1], []).append(i)
+    names = set()
+    for p in sorted((root / "perfbench" / "src").rglob("*.scala")):
+        names |= identifiers(strip(p.read_text(encoding="utf-8"))[0])
+    frontier = [i for i, (f, name, _, listed, _) in enumerate(defs)
+                if (f.endswith("/SparkEntry.scala") and listed) or name == "main"
+                or ("/streaming/" in f and name in ("start", "processBatch"))]
+    frontier += [i for n in names for i in by_name.get(n, [])]
+    reached = set()
+    while frontier:
+        i = frontier.pop()
+        if i in reached:
+            continue
+        reached.add(i)
+        for n in defs[i][4] - names:
+            names.add(n)
+            frontier += by_name.get(n, [])
+    found = sorted((f, line, name) for i, (f, name, line, listed, _) in enumerate(defs)
+                   if listed and i not in reached)
+    for f, line, name in found:
         print(f"{f}:{line} {name}")
     print(f"== {len(found)} unreached")
 
