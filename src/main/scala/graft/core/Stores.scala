@@ -1,8 +1,8 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrameReader, SparkSession}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 
 /** Offline maintenance for the at-least-once parquet stores the
   * streaming ingest loops grow (kept docs, IVF lists, signature
@@ -209,40 +209,76 @@ object Stores {
     * dirs before pruning — driver-side listing + footer work that
     * dominates a small probe once maintenance scales the geometry with
     * the corpus (measured 3× the whole search at 7,500 buckets,
-    * SCALE.md round 12). Falls back to the full-listing read only when
-    * the probe covers every bucket (equivalent, never worse). When NO
-    * named dir exists (nothing hashed to the probed buckets) the read
-    * stays cheap too: one top-level listStatus finds any one existing
-    * partition dir and reads just it — the caller's bucket filter then
-    * yields the empty result without paying the full listing the
-    * function exists to avoid. Callers keep their `isin` bucket
-    * filter: it is the partition filter the plan pins audit, and it
-    * guards the fallback paths. */
+    * SCALE.md round 12). A probe that covers every bucket reads every
+    * partition dir, found by one listing of the root. Either way the
+    * read is ONE scan whose dirs are listed here on the driver
+    * (`listedRead`): Spark lists more paths than its
+    * `parallelPartitionDiscoveryThreshold` (32) in a distributed job,
+    * which cost a 64-task job per 64-bucket probe, more than the probe
+    * itself. When NO named dir exists (nothing hashed to the probed
+    * buckets) the read stays cheap too: the same root listing finds any
+    * one existing partition dir and reads just it — the caller's bucket
+    * filter then yields the empty result without paying the full
+    * listing the function exists to avoid. Callers keep their `isin`
+    * bucket filter: it is the partition filter the plan pins audit, and
+    * it guards the fallback paths. */
   def bucketRead(spark: SparkSession, dir: String, colName: String,
                  buckets: Seq[Int],
                  nBuckets: Int): org.apache.spark.sql.DataFrame = {
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val want = buckets.distinct
-    val reader = schemaReader(spark, dir, StructField(colName, IntegerType))
-    if (want.size >= nBuckets) return reader.parquet(dir)
-    val dirs = want.map(b => s"$dir/$colName=$b")
-      .filter(d => fs.exists(new Path(d)))
-    if (dirs.nonEmpty)
-      reader.option("basePath", dir).parquet(dirs: _*)
-    else {
-      // none of the probed buckets has a dir: one flat listing of the
-      // root (names only — no recursion, no footers) finds a stand-in
-      // partition dir whose rows the caller's isin filter drops
-      val one = fs.listStatus(new Path(dir)).collectFirst {
-        case st if st.isDirectory &&
-          st.getPath.getName.startsWith(s"$colName=") => st.getPath.toString
-      }
-      one match {
-        case Some(d) => reader.option("basePath", dir).parquet(d)
-        case None    => spark.read.parquet(dir) // no partition dirs at all
-      }
+    // every partition dir under the root (names only — no recursion,
+    // no footers)
+    lazy val listed = fs.listStatus(root).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith(s"$colName=") => st.getPath
     }
+    val dirs =
+      if (want.size >= nBuckets) listed
+      else want.map(b => fs.makeQualified(new Path(root, s"$colName=$b"))).filter(fs.exists)
+    // none of the probed buckets has a dir: a stand-in partition dir,
+    // whose rows the caller's isin filter drops
+    val read = if (dirs.nonEmpty) dirs else listed.take(1)
+    if (read.isEmpty) spark.read.parquet(dir) // no partition dirs at all
+    else footerSchema(spark, dir, StructField(colName, IntegerType)).fold(
+      spark.read.option("basePath", dir).parquet(read.map(_.toString): _*))(
+      listedRead(spark, fs, dir, read, _))
+  }
+
+  /** One parquet scan of the partition dirs `dirs` under `base`, with
+    * the store's `schema`, whose file listing is done here, one
+    * `listStatus` per dir: the file index finds each dir in its status
+    * cache and runs no listing of its own, however many dirs there
+    * are. A refresh of the index (a write landing on a cached read's
+    * path) clears the cache and lists afresh. */
+  private def listedRead(spark: SparkSession, fs: FileSystem, base: String, dirs: Seq[Path],
+                         schema: StructType): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    val cache = new FileStatusCache {
+      private val leaves = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
+      dirs.foreach(d => leaves.put(d, fs.listStatus(d).filter(st => st.isFile && visible(st.getPath))))
+      override def getLeafFiles(p: Path) = Option(leaves.get(p))
+      override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = leaves.put(p, files)
+      override def invalidateAll(): Unit = leaves.clear()
+    }
+    val options = Map("basePath" -> base)
+    val index = new InMemoryFileIndex(spark, dirs, options, Some(schema), cache)
+    val parts = index.partitionSchema
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+      nullable(StructType(schema.filterNot(f => parts.fieldNames.contains(f.name))))
+        .asInstanceOf[StructType], None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      options)(spark))
+  }
+
+  // `t` with every field, element and value nullable, as a file read
+  // presents the data schema (Spark's own `asNullable` is internal)
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** `spark.read.parquet(dir)` without its schema-inference job (one
@@ -285,12 +321,15 @@ object Stores {
   def hasData(spark: SparkSession, dir: String): Boolean =
     firstFile(spark, dir, 1).isDefined
 
+  // a data file or dir, as Spark's file listing sees it: hidden names
+  // (`_SUCCESS`, `_temporary`, `.crc`) are not
+  private def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+
   // the first visible parquet file under `dir`, `depth` levels down,
   // listing directories lazily and stopping at the first hit
   private def firstFile(spark: SparkSession, dir: String, depth: Int): Option[Path] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
     def walk(d: Path, depth: Int): Option[Path] =
       fs.listStatus(d).iterator.filter(st => visible(st.getPath)).flatMap { st =>
         if (st.isFile && st.getPath.getName.endsWith(".parquet")) Iterator(st.getPath)

@@ -702,7 +702,7 @@ object Similarity {
   /** Close the append gap between two generations of an `ivfSave`d
     * store: any vid present in `srcPath` but absent from `dstPath`
     * (an at-least-once batch that landed on the old path after the
-    * rebuild's `ivfLoad` snapshot) is reconstructed from the old
+    * rebuild read its lists) is reconstructed from the old
     * store's own truth (float rows verbatim; SQ8 dequantized — exact
     * round-trip, `IvfRebalanceSpec`) and appended to the new
     * generation via `appendSave`. Idempotent (anti-join by vid;

@@ -21,31 +21,36 @@ import graft.core.Scoped
   *      image column) with the perceptual IMAGE gate — content
   *      near-dups, retyped keys, and re-encoded images are independent
   *      duplicate channels, so a record must pass every armed gate;
-  *   2. kept-document landing (`outPath` parquet append);
-  *   3. signature-store growth (survivors' sketches only);
-  *   4. vector-index append of the KEPT docs' embeddings —
-  *      `IngestVectors.processBatch`, so every saved index layout
-  *      (IVF float/SQ8, PQ, OPQ, IVF,PQ) grows by exactly the gated
-  *      set;
-  *   5. one per-batch quality telemetry row over the KEPT docs
-  *      (`MonitorQuality.batchStats`);
-  *   5b. optionally (`lexPath`, a `Lexical.lexSave` store) a lexical
-  *      postings append of the KEPT docs — the BM25 serving index
-  *      grows by exactly the gated set too, so dense (4) and lexical
-  *      retrieval stay doc-for-doc consistent with the kept corpus;
-  *   6. optionally (`vocabPath`, feed must carry `source`) per-source
-  *      HLL vocabulary sketches of the KEPT docs (`IngestVocab`);
-  *   7. optionally (`neighborsPath`) ONLINE PAIR MINING: each kept
-  *      doc's top-`neighborK` neighbors among everything ingested
-  *      BEFORE its batch (`IngestVectors.searchBatch` against the
-  *      pre-append store, any saved layout), appended as
-  *      (qid, rnk, vid, batch_id) rows — the streaming face of the
-  *      corpus-wide `knnJoin`, O(batch) per batch. Prefer
-  *      `neighborScanFrac` over the fixed `neighborProbe` when index
-  *      maintenance may swap in a generation with more lists: the
-  *      fraction is resolved against each generation's own nList
-  *      (`IngestVectors.searchBatch`), so mining recall does not
-  *      silently decay as the store grows.
+  *   2. the SINKS of the KEPT docs, run at the same time on the
+  *      package's sink pool (`concurrently`), since none reads a store
+  *      another writes:
+  *      - vector-index append (`IngestVectors.append`), so every saved
+  *        index layout (IVF float/SQ8, PQ, OPQ, IVF,PQ) grows by
+  *        exactly the gated set; optionally (`neighborsPath`) preceded,
+  *        in the same unit, by ONLINE PAIR MINING: each kept doc's
+  *        top-`neighborK` neighbors among everything ingested BEFORE
+  *        its batch (`IngestVectors.searchBatch` against the
+  *        pre-append store, any saved layout), appended as
+  *        (qid, rnk, vid, batch_id) rows — the streaming face of the
+  *        corpus-wide `knnJoin`, O(batch) per batch. Prefer
+  *        `neighborScanFrac` over the fixed `neighborProbe` when index
+  *        maintenance may swap in a generation with more lists: the
+  *        fraction is resolved against each generation's own nList
+  *        (`IngestVectors.searchBatch`), so mining recall does not
+  *        silently decay as the store grows;
+  *      - kept-document landing (`outPath` parquet append);
+  *      - one per-batch quality telemetry row
+  *        (`MonitorQuality.batchStats`);
+  *      - optionally (`vocabPath`, feed must carry `source`) per-source
+  *        HLL vocabulary sketches (`IngestVocab`);
+  *      - optionally (`lexPath`, a `Lexical.lexSave` store) a lexical
+  *        postings append — the BM25 serving index grows by exactly the
+  *        gated set too, so dense and lexical retrieval stay
+  *        doc-for-doc consistent with the kept corpus; its three
+  *        commits keep their order;
+  *   3. once every sink has returned, the STATE STORES the gates read,
+  *      one at a time: image fingerprints, fuzzy keys, signatures
+  *      (each store records its own gate's survivors).
   *
   * The batch is persisted once; each gate collects its batch keys
   * once, decides its in-batch rule on the driver, probes its store in
@@ -65,22 +70,27 @@ import graft.core.Scoped
   * and searches tolerate the index's duplicate (vid, list) rows — the
   * same stance as each standalone loop.
   *
-  * The signature-store append running LAST also PICKS A FAILURE SIDE:
-  * a crash after the sinks but before the store append makes the
-  * replayed batch re-keep the same docs — DUPLICATES in out/index,
-  * reclaimed offline by `compactKept` / `Similarity.ivfCompact`. The
-  * reverse order (store first) would make the replay drop the batch
-  * against its own signatures and the sinks silently LOSE it.
-  * Duplicates are recoverable; loss is not.
+  * The state stores appending LAST also PICKS A FAILURE SIDE (the
+  * crash contract): the sinks may land in any order, but every state
+  * store lands after all of them, so a crash after any sink but before
+  * the state-store appends makes the replayed batch re-keep the same
+  * docs — DUPLICATES in out/index, reclaimed offline by `compactKept` /
+  * `Similarity.ivfCompact`. The reverse order (a state store first)
+  * would make the replay drop the batch against its own signatures and
+  * the sinks silently LOSE it. Duplicates are recoverable; loss is not.
+  * A failing sink fails the batch only after the other sinks have
+  * returned, and no state store is appended.
   */
 object IngestPipeline {
 
-  /** Run one micro-batch through gate → land → index → telemetry.
-    * Returns the number of KEPT rows. Factored out of the foreachBatch
-    * closure so batch specs can drive it without a streaming query.
-    * An all-dropped batch writes nothing anywhere (the telemetry store
-    * records batches with survivors; `kept == indexed == telemetry`
-    * still holds trivially). */
+  /** Run one micro-batch through the gates, the sinks and the state
+    * stores. Returns the number of KEPT rows. Factored out of the
+    * foreachBatch closure so batch specs can drive it without a
+    * streaming query. An all-dropped batch writes nothing anywhere (the
+    * telemetry store records batches with survivors;
+    * `kept == indexed == telemetry` still holds trivially).
+    * `timings` accumulates each stage's wall seconds under its key; the
+    * sink stages overlap, so their sum can exceed the batch's wall. */
   def processBatch(batch: DataFrame, batchId: Long, sigStorePath: String,
                    outPath: String, indexPath: String, telemetryPath: String,
                    threshold: Double, vocabPath: Option[String] = None,
@@ -96,13 +106,15 @@ object IngestPipeline {
                    timings: Option[scala.collection.mutable.Map[String, Double]]
                      = None): Long = {
     // optional per-stage wall-clock capture (ScaleReport's composed
-    // pipeline campaign); zero overhead when absent
+    // pipeline campaign); zero overhead when absent. Sink stages run on
+    // several threads, so every update holds the map's lock
     def t[A](name: String)(body: => A): A = timings match {
       case None => body
       case Some(mp) =>
         val t0 = System.nanoTime()
         val r = body
-        mp(name) = mp.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
+        val s = (System.nanoTime() - t0) / 1e9
+        mp.synchronized(mp(name) = mp.getOrElse(name, 0.0) + s)
         r
     }
     Scoped.cached(batch).use { b =>
@@ -130,38 +142,36 @@ object IngestPipeline {
       val kept = without(b, dropped)
       val nKept = ids.count(id => !dropped(id))
       if (nKept > 0) {
-        // optional online pair mining: each KEPT doc's top-k
-        // neighbors among everything ingested BEFORE this batch —
-        // so it runs before the index append
-        neighborsPath.foreach { np => t("mine_neighbors") {
-          IngestVectors.searchBatch(
-              kept.select(col("doc_id").as("vec_id"), col("embedding")),
-              indexPath, neighborK, neighborProbe, neighborScanFrac)
-            .use(_.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-              .write.mode("append").parquet(np))
-        }}
-        t("land_out")(kept.select(col("doc_id"), col("text"))
-          .write.mode("append").parquet(outPath))
-        t("append_index")(IngestVectors.append(
-          kept.select(col("doc_id").as("vec_id"), col("embedding")), indexPath))
-        t("append_telemetry")(
-          MonitorQuality.batchStats(kept.select(col("doc_id"), col("text")), batchId)
-            .coalesce(1).write.mode("append").parquet(telemetryPath))
-        // optional 5th store: per-source vocabulary sketches of the
-        // KEPT docs (requires a `source` column in the feed)
-        vocabPath.foreach { vp => t("append_vocab")(
-          IngestVocab.append(kept.select(col("source"), col("text")), batchId, vp))
-        }
-        // optional 6th store: lexical postings of the KEPT docs (batch
-        // token offset by 1 — lexSave's seed stats row owns batch_id 0)
-        lexPath.foreach { lp => t("append_lexical")(
-          graft.operators.Lexical.lexAppendSave(
-            b.sparkSession, lp, kept.select(col("doc_id"), col("text")),
-            batchId + 1L))
-        }
-        // state stores after every sink, image → fuzzy → signatures:
-        // a crash between two appends replays into duplicates, never
-        // loss (the crash contract)
+        val docs = kept.select(col("doc_id"), col("text"))
+        val vecs = kept.select(col("doc_id").as("vec_id"), col("embedding"))
+        // the sinks at the same time: none reads another's store
+        concurrently(b.sparkSession)(Seq(
+          // optional online pair mining: each KEPT doc's top-k neighbors
+          // among everything ingested BEFORE this batch — so it runs
+          // before the index append, in the same unit
+          () => {
+            neighborsPath.foreach { np => t("mine_neighbors") {
+              IngestVectors.searchBatch(vecs, indexPath, neighborK,
+                  neighborProbe, neighborScanFrac)
+                .use(_.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+                  .write.mode("append").parquet(np))
+            }}
+            t("append_index")(IngestVectors.append(vecs, indexPath))
+          },
+          () => t("land_out")(docs.write.mode("append").parquet(outPath)),
+          () => t("append_telemetry")(MonitorQuality.batchStats(docs, batchId)
+            .coalesce(1).write.mode("append").parquet(telemetryPath))) ++
+          // optional: per-source vocabulary sketches of the KEPT docs
+          // (requires a `source` column in the feed)
+          vocabPath.map(vp => () => t("append_vocab")(
+            IngestVocab.append(kept.select(col("source"), col("text")), batchId, vp))) ++
+          // optional: lexical postings of the KEPT docs (batch token
+          // offset by 1 — lexSave's seed stats row owns batch_id 0)
+          lexPath.map(lp => () => t("append_lexical")(
+            graft.operators.Lexical.lexAppendSave(b.sparkSession, lp, docs, batchId + 1L))))
+        // state stores only after every sink has landed, one at a time,
+        // image → fuzzy → signatures: a crash between two appends
+        // replays into duplicates, never loss (the crash contract)
         for (ip <- imageStorePath; fps <- imageFps) t("append_image")(
           IngestFingerprints.appendRows(b.sparkSession, ip, without(fps, d3, "id")))
       }

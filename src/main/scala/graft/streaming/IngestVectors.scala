@@ -95,9 +95,12 @@ object IngestVectors {
     * rebalanced generation to `dstPath` and returns true — the caller
     * (an ingest supervisor) swaps readers to the new path at its own
     * pace while the at-least-once ingest keeps appending to the OLD
-    * path until the swap. The rebuild works from the `ivfLoad`
-    * SNAPSHOT, so batches that land on the old path mid-rebuild would
-    * be absent from the new generation — before returning, this
+    * path until the swap. The index `ivfLoad` holds is NOT a
+    * snapshot: Spark re-caches it when an append lands on its path, so
+    * with an appender running the skew, the row count and the rebuild
+    * may each read a different generation of the lists, and batches
+    * that land after the rebuild read them are absent from the new
+    * generation — before returning, this
     * replays them via `Similarity.ivfReplayGap` (vid anti-join old →
     * new, reconstruct from the old store's own truth, frozen-centroid
     * append). Batches that land AFTER this returns and BEFORE the
@@ -166,7 +169,7 @@ object IngestVectors {
     * on disk for readers still draining them (delete on the caller's
     * retention schedule). `maintain()` is safe to call between any two
     * batches — or from a separate maintenance thread, because appends
-    * that land on the old path after the rebuild snapshot are replayed
+    * that land on the old path after the rebuild read its lists are replayed
     * into the new generation before the path swap, the at-least-once
     * store tolerates the (vid, list) duplicates a racing append can
     * leave (compaction reclaims them), and the one remaining

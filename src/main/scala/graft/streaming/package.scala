@@ -26,6 +26,42 @@ package object streaming {
     * loop (see the package doc for the backfill trigger). */
   private[streaming] val Continuous: Trigger = Trigger.ProcessingTime(0L)
 
+  // one daemon thread per independent sink unit of
+  // `IngestPipeline.processBatch` (index chain, out, telemetry, vocab,
+  // lexical), so no unit of a batch queues behind another
+  private lazy val sinkPool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(5, (r: Runnable) => {
+      val th = new Thread(r, s"graft-ingest-sink-${n.incrementAndGet()}")
+      th.setDaemon(true)
+      th
+    })
+  }
+
+  /** Run `units` at the same time on the sink pool and return once
+    * every one of them has returned. Each unit runs under a copy of
+    * the caller's local properties and active session
+    * (`SQLExecution.withThreadLocalCaptured`), so its jobs keep the
+    * caller's job group, SQL execution id and any op tag, and
+    * cancelling the caller's job group cancels them too. A failure is
+    * rethrown only after every other unit has returned: the first
+    * failing unit's exception, in `units` order, with the later ones
+    * attached as suppressed. Units must not read a store another unit
+    * writes. */
+  private[streaming] def concurrently(spark: SparkSession)(units: Seq[() => Unit]): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val running = units.map(u =>
+      org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(session, sinkPool)(u()))
+    val failures = running.flatMap { f =>
+      try { f.join(); None }
+      catch { case e: java.util.concurrent.CompletionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
   /** The one ingest loop (the reference's watch loop,
     * freshness/watch.py:24-34): append-mode micro-batches of `frame`,
     * checkpointed at `checkpoint`, each handed to `batch` with its

@@ -799,26 +799,97 @@ class IngestPipelineSpec extends SparkSpec {
     }
   }
 
-  test("one composed batch with every store armed stays within its job budget") {
+  // one batch of 40 new docs plus a clone of doc 301 (the content gate
+  // drops it) through every gate and sink, into stores seeded from
+  // docs 0-299; `out` is where kept docs land. Returns the run, the
+  // state stores (signatures, fuzzy, image) and the other sinks
+  // (telemetry, index, lexical, vocab, neighbours)
+  private def armedBatch(name: String, out: String) = {
     import graft.operators.Lexical
-    val (base, sigs, fz, im) = armed("budget")
+    val (base, sigs, fz, im) = armed(name)
     val seed = base.where($"doc_id" < 300)
-    val (out, tele, idx, lex, vocab, nbrs) = (tmp("budget_out"), tmp("budget_tele"),
-      tmp("budget_idx"), tmp("budget_lex"), tmp("budget_vocab"), tmp("budget_nbrs"))
+    val (tele, idx, lex, vocab, nbrs) = (tmp(s"${name}_tele"), tmp(s"${name}_idx"),
+      tmp(s"${name}_lex"), tmp(s"${name}_vocab"), tmp(s"${name}_nbrs"))
     val seedIdx = Similarity.ivfBuild(seed.select($"doc_id".as("vec_id"), $"embedding"), 8)
     Similarity.ivfSave(seedIdx, idx)
     seedIdx.release()
     Lexical.lexSave(spark, seed.select("doc_id", "text"), lex)
-    // 40 new docs plus a clone of doc 301 that the content gate drops
     val batch = base.where($"doc_id" >= 300 && $"doc_id" < 340)
       .unionByName(base.where($"doc_id" === 301L).withColumn("doc_id", lit(9301L)))
-    var kept = 0L
-    val jobs = jobsOf {
-      kept = IngestPipeline.processBatch(batch, 0L, sigs, out, idx, tele, 0.5,
-        vocabPath = Some(vocab), neighborsPath = Some(nbrs), lexPath = Some(lex),
-        fuzzyStorePath = Some(fz), imageStorePath = Some(im))
+    val run = () => IngestPipeline.processBatch(batch, 0L, sigs, out, idx, tele, 0.5,
+      vocabPath = Some(vocab), neighborsPath = Some(nbrs), lexPath = Some(lex),
+      fuzzyStorePath = Some(fz), imageStorePath = Some(im))
+    (run, Seq(sigs, fz, im), (tele, idx, lex, vocab, nbrs))
+  }
+
+  test("a failing sink fails the batch after every other sink, appends no state store, and replays like a clean run") {
+    import scala.jdk.CollectionConverters._
+    def ids(path: String, c: String) =
+      spark.read.parquet(path).select(col(c).cast("long")).collect().map(_.getLong(0)).toSet
+    // what each sink other than `out` holds after the batch
+    def sinks(p: (String, String, String, String, String)) = {
+      val (tele, idx, lex, vocab, nbrs) = p
+      (spark.read.parquet(tele).select("batch_id", "n_docs").collect().toSet,
+       ids(s"$idx/assigned", "vid"), ids(s"$lex/docstats", "doc_id"),
+       spark.read.parquet(vocab).select("source", "n_tokens").collect().toSet,
+       ids(nbrs, "qid"))
     }
+    def stateIds(st: Seq[String]) =
+      (Dedup.signatureLoad(spark, st(0)).select("doc_id").collect().map(_.getLong(0)).toSet,
+       ids(s"${st(1)}/keys", "id"), ids(s"${st(2)}/hashes", "id"))
+    // every file under a store, with its size
+    def files(dir: String) = {
+      val root = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> java.nio.file.Files.size(f)).toSet
+    }
+
+    val cleanOut = tmp("sinkclean_out")
+    val (clean, cleanState, cleanSinks) = armedBatch("sinkclean", cleanOut)
+    val kept = clean()
+    assert(kept > 0)
+
+    // the kept-docs sink is a regular file: its append throws while the
+    // other sinks are still writing
+    val notADir = java.io.File.createTempFile("sinkfail_out", ".file")
+    val (failing, state, sinkPaths) = armedBatch("sinkfail", notADir.getPath)
+    val stateBefore = state.map(files)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    intercept[Exception](failing())
+    // every other sink had landed the whole batch when the failure surfaced
+    assert(sinks(sinkPaths) == sinks(cleanSinks))
+    assert(state.map(files) == stateBefore, "a state store was appended after a failed sink")
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(persisted)
+    assert(left.isEmpty, s"persisted RDDs left behind by the failed batch: $left")
+
+    // the replay without the fault keeps what a clean run keeps
+    assert(notADir.delete())
+    assert(failing() == kept)
+    assert(ids(notADir.getPath, "doc_id") == ids(cleanOut, "doc_id"))
+    assert(stateIds(state) == stateIds(cleanState))
+  }
+
+  test("one composed batch with every store armed stays within its job budget") {
+    // the sink pool's threads outlive a batch: a first batch makes them
+    // outside any job group, as in a long-lived session, so a unit that
+    // ran under the pool thread's own local properties shows below
+    armedBatch("budget_warm", tmp("budget_warm_out"))._1()
+    val (run, _, _) = armedBatch("budget", tmp("budget_out"))
+    var kept = 0L
+    // every job that starts, whatever its job group: the sinks run on
+    // pool threads, and a job that lost the caller's local properties
+    // would fall out of jobsOf's group count and hide under the budget
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val all = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(all)
+    val jobs = try jobsOf { kept = run() }
+      finally spark.sparkContext.removeSparkListener(all)
     assert(kept > 0 && kept <= 40)
+    assert(started.get == jobs, s"${started.get} jobs started, $jobs in the caller's job group")
     // the count measured once every gate collected its batch keys once
     // and probed its store in one broadcast job, and the index layout
     // was read from a footer; a persist + count, or a schema-inference

@@ -5,8 +5,9 @@ import graft.core.Stores
 
 /** `core.Stores`: the store-presence rule, the memoized tiny-directory
   * reader (store meta and the vector-index metadata tables), the
-  * capped keyed write layout, and the bucketed stores' geometry
-  * lifecycle (the growth rule and the staged re-bucket). */
+  * capped keyed write layout, the bucketed stores' geometry lifecycle
+  * (the growth rule and the staged re-bucket) and their bucket-dir
+  * read, plus the source guards on directory renames and thread pools. */
 class StoresSpec extends SparkSpec {
   import spark.implicits._
 
@@ -156,5 +157,37 @@ class StoresSpec extends SparkSpec {
     }.map(f => root.toPath.relativize(f.toPath).toString)
     assert(renaming.nonEmpty && renaming.toSet.subsetOf(allowed),
       s"fs.rename( outside the staged-swap homes: ${renaming.filterNot(allowed).sorted}")
+  }
+
+  test("bucketRead over more than the discovery threshold of dirs runs no listing job") {
+    // Spark lists more paths than parallelPartitionDiscoveryThreshold
+    // (32) in a distributed job; the grouped reads list on the driver
+    val dir = tmp("bread_wide")
+    spark.range(640).selectExpr("id", "CAST(id % 64 AS INT) AS b")
+      .repartition($"b").write.mode("overwrite").partitionBy("b").parquet(dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "b").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    for (bs <- Seq(0 until 40, 0 until 64)) {
+      var read: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { read = Stores.bucketRead(spark, dir, "b", bs, 64) } == 0,
+        s"building a read of ${bs.size} of 64 buckets ran a job")
+      assert(rows(read.where($"b".isin(bs: _*))) ==
+        rows(spark.read.parquet(dir).where($"b".isin(bs: _*))))
+    }
+  }
+
+  test("only the ingest sink helper and ZipCsv build thread pools") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    val allowed = Set("streaming/package.scala", "sources/ZipCsv.scala")
+    val builders = Seq("newFixedThreadPool", "ForkJoinPool", "ExecutionContext.from")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val pooling = files(root).filter(_.getName.endsWith(".scala")).filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      builders.exists(src.contains)
+    }.map(f => root.toPath.relativize(f.toPath).toString)
+    assert(pooling.nonEmpty && pooling.toSet.subsetOf(allowed),
+      s"thread pool built outside the two homes: ${pooling.filterNot(allowed).sorted}")
   }
 }
